@@ -2,13 +2,20 @@ package graft.io
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.avro.Schema
+import org.apache.avro.{AvroTypeException, Schema}
 import org.apache.avro.file.{CodecFactory, DataFileReader, DataFileWriter}
-import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
+import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
+import org.apache.avro.io.{DatumWriter, Encoder, EncoderFactory}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.SpecializedGetters
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
 /** Distributed Avro container-file sink — the rebuild of the reference's
@@ -17,6 +24,14 @@ import org.apache.spark.util.SerializableConfiguration
   * single-threaded driver loop. Schema derivation (and therefore field order,
   * union-null-first, defaults) comes from [[AvroSchemas]], mirroring the
   * reference's derivation, not an opaque library default.
+  *
+  * Rows stay in Catalyst form: each task compiles one [[RowDatumWriter]]
+  * from the frame's `StructType` and its Avro schema, and every
+  * `InternalRow` is encoded straight to Avro binary — no `Row`, no
+  * `GenericRecord`, no per-value union or enum lookups. The write runs a
+  * fresh execution of the frame's logical plan, so a persisted frame is read
+  * from its cache even when its own physical plan was built before
+  * `persist()`.
   *
   * At 100 TB this is embarrassingly parallel: no shuffle, each task streams
   * its partition through one snappy-compressed container file on the
@@ -35,59 +50,189 @@ object AvroSink {
     if (fs.exists(dir)) fs.delete(dir, true)
     fs.mkdirs(dir)
 
-    df.rdd.foreachPartition { rows =>
-      // partition id from the task context — stable file naming
-      val pid    = org.apache.spark.TaskContext.getPartitionId()
-      val avro   = new Schema.Parser().parse(avroJson)
-      val out    = FileSystem.get(new java.net.URI(path), hadoopConf.value)
-        .create(new HPath(f"$path/part-$pid%05d.avro"), true)
-      val writer = new DataFileWriter(new GenericDatumWriter[GenericRecord](avro))
-        .setCodec(CodecFactory.snappyCodec())
-        .create(avro, out)
-      try rows.foreach(r => writer.append(toRecord(r, schema, avro)))
-      finally writer.close()
+    // planned now, so a cache persisted after df's own physical plan was
+    // built still replaces the cached subtree (as `Dataset.rdd` does)
+    val qe = df.sparkSession.sessionState.executePlan(df.queryExecution.logical)
+    SQLExecution.withNewExecutionId(qe, Some("avro")) {
+      qe.toRdd.foreachPartition { rows =>
+        // partition id from the task context — stable file naming
+        val pid    = org.apache.spark.TaskContext.getPartitionId()
+        val avro   = new Schema.Parser().parse(avroJson)
+        val out    = FileSystem.get(new java.net.URI(path), hadoopConf.value)
+          .create(new HPath(f"$path/part-$pid%05d.avro"), true)
+        // a buffered encoder: the default direct one makes a synchronized
+        // stream call per byte; block boundaries and bytes are the same
+        val writer = new DataFileWriter(new RowDatumWriter(schema, avro))
+          .setEncoder(s => EncoderFactory.get().binaryEncoder(s, null))
+          .setCodec(CodecFactory.snappyCodec())
+          .create(avro, out)
+        try rows.foreach(writer.append)
+        finally writer.close()
+      }
     }
   }
 
-  /** Row → GenericRecord, recursively, matching [[AvroSchemas]] unions. */
-  private[io] def toRecord(row: Row, st: StructType, avro: Schema): GenericRecord = {
-    val rec = new GenericData.Record(avro)
-    st.fields.zipWithIndex.foreach { case (f, i) =>
-      val fieldSchema = unwrapUnion(avro.getFields.get(i).schema())
-      rec.put(f.name, toAvroValue(if (row.isNullAt(i)) null else row.get(i), f.dataType, fieldSchema))
+  /** Writes a value of one Catalyst type as one Avro schema; compiled once
+    * per task, before the first row.
+    */
+  private abstract class ValueWriter {
+    /** Writes ordinal `i` of `g` (a row, or an array's elements). */
+    def write(g: SpecializedGetters, i: Int, out: Encoder): Unit
+  }
+
+  /** `InternalRow` → Avro binary, compiled from the row's `StructType` and
+    * the Avro record schema [[AvroSchemas]] derived from it: the union branch
+    * of every nullable value, each enum's symbol → ordinal map and the
+    * per-field writers are fixed here, so encoding a row does no schema
+    * lookups. The bytes are those `GenericDatumWriter` writes for the same
+    * record.
+    */
+  private[io] final class RowDatumWriter(st: StructType, avro: Schema)
+      extends DatumWriter[InternalRow] {
+    private val fields = recordFields(st, avro, avro.getName)
+    override def setSchema(schema: Schema): Unit = ()
+    override def write(row: InternalRow, out: Encoder): Unit = writeFields(fields, row, out)
+  }
+
+  private def writeFields(fields: Array[ValueWriter], row: InternalRow, out: Encoder): Unit = {
+    var i = 0
+    while (i < fields.length) { fields(i).write(row, i, out); i += 1 }
+  }
+
+  private def recordFields(st: StructType, avro: Schema, path: String): Array[ValueWriter] =
+    st.fields.zipWithIndex.map { case (f, i) =>
+      valueWriter(f.dataType, avro.getFields.get(i).schema(), s"$path.${f.name}")
     }
-    rec
+
+  private def valueWriter(dt: DataType, avro: Schema, path: String): ValueWriter =
+    if (avro.getType == Schema.Type.UNION) {
+      // AvroSchemas writes every nullable value as [null, T]
+      val branches = avro.getTypes.asScala.toIndexedSeq
+      val nullIndex = branches.indexWhere(_.getType == Schema.Type.NULL)
+      val valueIndex = branches.indexWhere(_.getType != Schema.Type.NULL)
+      if (branches.size != 2 || nullIndex < 0)
+        throw new IllegalStateException(s"$path: unsupported Avro union $avro")
+      val value = baseWriter(dt, branches(valueIndex), path)
+      new ValueWriter {
+        def write(g: SpecializedGetters, i: Int, out: Encoder): Unit =
+          if (g.isNullAt(i)) { out.writeIndex(nullIndex); out.writeNull() }
+          else { out.writeIndex(valueIndex); value.write(g, i, out) }
+      }
+    } else {
+      val value = baseWriter(dt, avro, path)
+      new ValueWriter {
+        def write(g: SpecializedGetters, i: Int, out: Encoder): Unit =
+          if (g.isNullAt(i)) throw new NullPointerException(
+            s"null value for non-nullable ${avro.getType.getName} field $path")
+          else value.write(g, i, out)
+      }
+    }
+
+  private def writeUtf8(s: UTF8String, out: Encoder): Unit = s.getBaseObject match {
+    case b: Array[Byte] =>
+      out.writeBytes(b, (s.getBaseOffset - Platform.BYTE_ARRAY_OFFSET).toInt, s.numBytes)
+    case _ => out.writeBytes(s.getBytes)
   }
 
-  private def unwrapUnion(s: Schema): Schema =
-    if (s.getType == Schema.Type.UNION)
-      s.getTypes.asScala.find(_.getType != Schema.Type.NULL).get
-    else s
-
-  private def toAvroValue(v: Any, dt: DataType, avro: Schema): AnyRef = v match {
-    case null => null
-    case s: String if avro.getType == Schema.Type.ENUM =>
-      new GenericData.EnumSymbol(avro, s) // named-enum columns (AvroSchemas)
-    case r: Row => toRecord(r, dt.asInstanceOf[StructType], avro)
-    case s: scala.collection.Seq[_] => // rows hold mutable.ArraySeq in 2.13
-      val el = unwrapUnion(avro.getElementType)
-      val edt = dt.asInstanceOf[ArrayType].elementType
-      s.map(x => toAvroValue(x, edt, el)).asJava
-    case m: Map[_, _] =>
-      val vs  = unwrapUnion(avro.getValueType)
-      val vdt = dt.asInstanceOf[MapType].valueType
-      m.map { case (k, x) => k.toString -> toAvroValue(x, vdt, vs) }.asJava
-    case b: Array[Byte]           => java.nio.ByteBuffer.wrap(b)
-    case d: java.math.BigDecimal  => d.toPlainString
-    case d: BigDecimal            => d.bigDecimal.toPlainString
-    case d: java.sql.Date         => d.toString
-    case t: java.sql.Timestamp    => t.toInstant.toString
-    case i: java.time.LocalDate   => i.toString
-    case i: java.time.Instant     => i.toString
-    case b: Byte                  => java.lang.Integer.valueOf(b.toInt)
-    case sh: Short                => java.lang.Integer.valueOf(sh.toInt)
-    case other                    => other.asInstanceOf[AnyRef]
-  }
+  private def baseWriter(dt: DataType, avro: Schema, path: String): ValueWriter =
+    (dt, avro.getType) match {
+      case (BooleanType, Schema.Type.BOOLEAN) => new ValueWriter {
+        def write(g: SpecializedGetters, i: Int, out: Encoder): Unit = out.writeBoolean(g.getBoolean(i))
+      }
+      case (ByteType, Schema.Type.INT) => new ValueWriter {
+        def write(g: SpecializedGetters, i: Int, out: Encoder): Unit = out.writeInt(g.getByte(i))
+      }
+      case (ShortType, Schema.Type.INT) => new ValueWriter {
+        def write(g: SpecializedGetters, i: Int, out: Encoder): Unit = out.writeInt(g.getShort(i))
+      }
+      case (IntegerType, Schema.Type.INT) => new ValueWriter {
+        def write(g: SpecializedGetters, i: Int, out: Encoder): Unit = out.writeInt(g.getInt(i))
+      }
+      case (LongType, Schema.Type.LONG) => new ValueWriter {
+        def write(g: SpecializedGetters, i: Int, out: Encoder): Unit = out.writeLong(g.getLong(i))
+      }
+      case (FloatType, Schema.Type.FLOAT) => new ValueWriter {
+        def write(g: SpecializedGetters, i: Int, out: Encoder): Unit = out.writeFloat(g.getFloat(i))
+      }
+      case (DoubleType, Schema.Type.DOUBLE) => new ValueWriter {
+        def write(g: SpecializedGetters, i: Int, out: Encoder): Unit = out.writeDouble(g.getDouble(i))
+      }
+      case (StringType, Schema.Type.STRING) => new ValueWriter {
+        def write(g: SpecializedGetters, i: Int, out: Encoder): Unit = writeUtf8(g.getUTF8String(i), out)
+      }
+      case (StringType, Schema.Type.ENUM) =>
+        val ordinals = new java.util.HashMap[UTF8String, Integer]()
+        avro.getEnumSymbols.asScala.zipWithIndex.foreach { case (s, o) =>
+          ordinals.put(UTF8String.fromString(s), o)
+        }
+        new ValueWriter {
+          def write(g: SpecializedGetters, i: Int, out: Encoder): Unit = {
+            val s = g.getUTF8String(i)
+            val o = ordinals.get(s)
+            if (o == null) throw new AvroTypeException(
+              s"enum value '$s' of field $path is not in the enum symbol set " +
+                s"${avro.getEnumSymbols} of ${avro.getFullName}")
+            out.writeEnum(o)
+          }
+        }
+      case (BinaryType, Schema.Type.BYTES) => new ValueWriter {
+        def write(g: SpecializedGetters, i: Int, out: Encoder): Unit = out.writeBytes(g.getBinary(i))
+      }
+      // dates, timestamps and decimals as ISO / plain strings (AvroSchemas)
+      case (DateType, Schema.Type.STRING) => new ValueWriter {
+        def write(g: SpecializedGetters, i: Int, out: Encoder): Unit =
+          out.writeString(java.time.LocalDate.ofEpochDay(g.getInt(i)).toString)
+      }
+      case (TimestampType, Schema.Type.STRING) => new ValueWriter {
+        def write(g: SpecializedGetters, i: Int, out: Encoder): Unit =
+          out.writeString(DateTimeUtils.microsToInstant(g.getLong(i)).toString)
+      }
+      case (d: DecimalType, Schema.Type.STRING) => new ValueWriter {
+        def write(g: SpecializedGetters, i: Int, out: Encoder): Unit =
+          out.writeString(g.getDecimal(i, d.precision, d.scale).toJavaBigDecimal.toPlainString)
+      }
+      case (s: StructType, Schema.Type.RECORD) =>
+        val fields = recordFields(s, avro, path)
+        new ValueWriter {
+          def write(g: SpecializedGetters, i: Int, out: Encoder): Unit =
+            writeFields(fields, g.getStruct(i, fields.length), out)
+        }
+      case (ArrayType(e, _), Schema.Type.ARRAY) =>
+        val element = valueWriter(e, avro.getElementType, s"$path[]")
+        new ValueWriter {
+          def write(g: SpecializedGetters, i: Int, out: Encoder): Unit = {
+            val a = g.getArray(i)
+            val n = a.numElements()
+            out.writeArrayStart()
+            out.setItemCount(n)
+            var k = 0
+            while (k < n) { out.startItem(); element.write(a, k, out); k += 1 }
+            out.writeArrayEnd()
+          }
+        }
+      case (MapType(StringType, v, _), Schema.Type.MAP) =>
+        val value = valueWriter(v, avro.getValueType, s"$path{}")
+        new ValueWriter {
+          def write(g: SpecializedGetters, i: Int, out: Encoder): Unit = {
+            val m = g.getMap(i)
+            val keys = m.keyArray()
+            val values = m.valueArray()
+            val n = m.numElements()
+            out.writeMapStart()
+            out.setItemCount(n)
+            var k = 0
+            while (k < n) {
+              out.startItem()
+              writeUtf8(keys.getUTF8String(k), out)
+              value.write(values, k, out)
+              k += 1
+            }
+            out.writeMapEnd()
+          }
+        }
+      case _ => throw new IllegalStateException(
+        s"$path: no Avro encoding of $dt as ${avro.getType}")
+    }
 
   /** Read back a directory of container files (for tests / differential
     * checks — production reads stay parquet).

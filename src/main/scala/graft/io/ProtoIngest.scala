@@ -1,8 +1,14 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import java.nio.charset.StandardCharsets
+
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData, MapData}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Protobuf binary ingest without external jars — the reference's actual
   * input surface (S1: a stream of serialized `GoogleAdsRow` protos) rebuilt
@@ -23,10 +29,16 @@ import org.apache.spark.sql.types._
   *  - unset scalar → proto3 zero default; unset/empty string → null
   *  - unknown field numbers are skipped by wire type (forward compat)
   *
-  * Execution shape: decode runs in `mapPartitions` (per-row imperative byte
-  * work — exactly the case SURVEY §7 reserves mapPartitions for), emitting
-  * rows of the plan-time-derived schema, so everything downstream (the
-  * Translator projection, filters, sinks) is ordinary codegen'd Catalyst.
+  * Execution shape: each task plans the decode once per message descriptor
+  * ([[DecodePlan]]: field number → slot, slot kinds, pre-encoded enum
+  * symbols, nested plans) and then decodes every message straight into a
+  * Catalyst `InternalRow` — no `Row` and no per-value type conversion in
+  * between. `ProtoSource`'s readers and [[decode]]'s partitions run it as
+  * per-row imperative byte work (the case SURVEY §7 reserves
+  * mapPartitions for); everything downstream (the Translator projection,
+  * filters, sinks) is ordinary codegen'd Catalyst. Every length the decoder
+  * reads is checked against the end of its message, so a truncated message
+  * throws [[MalformedProtoException]] instead of decoding as defaults.
   */
 object ProtoIngest {
 
@@ -144,177 +156,353 @@ object ProtoIngest {
   })
 
   // ---------------------------------------------------------------- decode
-  private final class Reader(val buf: Array[Byte], var pos: Int, val end: Int) {
-    def hasMore: Boolean = pos < end
+  /** A message the decoder cannot read: a length, varint or fixed-width
+    * value that runs past the end of its enclosing message, or a wire type
+    * proto3 does not define. Readers of cache files re-throw it with the
+    * file and line it came from.
+    */
+  final class MalformedProtoException(message: String, cause: Throwable = null)
+      extends IllegalArgumentException(message, cause)
+
+  /** Cursor over one serialized message. `limit` is the end of the message
+    * being read (narrowed while a nested message, map entry or packed run is
+    * read); every read checks it, so a truncated message fails instead of
+    * reading past its end.
+    */
+  private final class Reader(val buf: Array[Byte]) {
+    var pos = 0
+    var limit: Int = buf.length
+
+    private def overrun(what: String, need: Long): Nothing =
+      throw new MalformedProtoException(s"truncated message: $what at offset $pos " +
+        s"needs $need byte(s) but only ${limit - pos} remain before the message end")
+
     def varint(): Long = {
+      val at = pos
       var shift = 0
       var out = 0L
       while (shift < 64) {
+        if (pos >= limit) throw new MalformedProtoException(
+          s"truncated message: varint at offset $at runs past the message end at $limit")
         val b = buf(pos); pos += 1
         out |= (b & 0x7fL) << shift
         if ((b & 0x80) == 0) return out
         shift += 7
       }
-      throw new IllegalArgumentException("varint longer than 64 bits")
+      throw new MalformedProtoException(s"varint at offset $at is longer than 64 bits")
     }
+    private def need(n: Int, what: String): Unit =
+      if (limit - pos < n) overrun(what, n)
     def fixed32(): Int = {
+      need(4, "fixed32")
       val v = (buf(pos) & 0xff) | ((buf(pos + 1) & 0xff) << 8) |
         ((buf(pos + 2) & 0xff) << 16) | ((buf(pos + 3) & 0xff) << 24)
       pos += 4; v
     }
     def fixed64(): Long = {
+      need(8, "fixed64")
       var v = 0L
       var i = 0
       while (i < 8) { v |= (buf(pos + i) & 0xffL) << (8 * i); i += 1 }
       pos += 8; v
     }
-    def bytes(n: Int): Array[Byte] = {
+    /** A length prefix, checked against the bytes left in the message. */
+    def length(): Int = {
+      val n = varint()
+      if (n < 0 || n > limit - pos) overrun("length-delimited field", n)
+      n.toInt
+    }
+    def bytes(): Array[Byte] = {
+      val n = length()
       val out = java.util.Arrays.copyOfRange(buf, pos, pos + n); pos += n; out
+    }
+    /** The string's bytes in place; malformed UTF-8 is decoded the way
+      * `new String(_, UTF_8)` does, replacing bad sequences with U+FFFD. */
+    def string(): UTF8String = {
+      val n = length()
+      val start = pos
+      pos += n
+      val s = UTF8String.fromBytes(buf, start, n)
+      var k = start
+      while (k < pos && buf(k) >= 0) k += 1 // all ASCII: valid, no full check
+      if (k == pos || s.isValid) s
+      else UTF8String.fromString(new String(buf, start, n, StandardCharsets.UTF_8))
     }
     def skip(wireType: Int): Unit = wireType match {
       case 0 => varint()
-      case 1 => pos += 8
-      case 2 => val n = varint().toInt; pos += n // read len BEFORE adding
-      case 5 => pos += 4
-      case w => throw new IllegalArgumentException(s"unsupported wire type $w")
+      case 1 => need(8, "fixed64"); pos += 8
+      case 2 => val n = length(); pos += n
+      case 5 => need(4, "fixed32"); pos += 4
+      case w => throw new MalformedProtoException(s"unsupported wire type $w before offset $pos")
     }
+    /** Narrows reading to the next `n` bytes; returns the limit to restore. */
+    def enter(n: Int): Int = { val outer = limit; limit = pos + n; outer }
   }
 
   private def zigzag(n: Long): Long = (n >>> 1) ^ -(n & 1)
 
-  private def scalarOf(t: PType, r: Reader): Any = t match {
-    case PInt32     => r.varint().toInt
-    case PInt64     => r.varint()
-    case PSInt32    => zigzag(r.varint()).toInt
-    case PSInt64    => zigzag(r.varint())
-    case PFixed32   => r.fixed32()
-    case PFixed64   => r.fixed64()
-    case PFloat     => java.lang.Float.intBitsToFloat(r.fixed32())
-    case PDouble    => java.lang.Double.longBitsToDouble(r.fixed64())
-    case PBool      => r.varint() != 0L
-    case PString    => new String(r.bytes(r.varint().toInt), "UTF-8")
-    case PBytes     => r.bytes(r.varint().toInt)
-    case PEnum(sym, _) => val v = r.varint().toInt; sym.getOrElse(v, s"UNKNOWN_$v")
-    case PNested(m) =>
-      val n = r.varint().toInt
-      val sub = new Reader(r.buf, r.pos, r.pos + n)
-      r.pos += n
-      decodeMessage(sub, m)
-    case PMap(kt, vt) =>
-      // one wire occurrence = one entry message: field 1 key, field 2 value;
-      // missing key/value take their proto3 zero defaults (string → "")
-      val n = r.varint().toInt
-      val stop = r.pos + n
-      var k: Any = mapEntryDefault(kt)
-      var v: Any = mapEntryDefault(vt)
-      while (r.pos < stop) {
-        val tag = r.varint()
-        val num = (tag >>> 3).toInt
-        if (num == 1) k = scalarOf(kt, r)
-        else if (num == 2) v = scalarOf(vt, r)
-        else r.skip((tag & 7).toInt)
-      }
-      (k, v)
-    case _: PNestedRec => throw new IllegalArgumentException(
-      "recursive reference: apply ProtoIngest.unroll(msg, maxDepth) first")
-  }
-
-  /** Proto3 zero default INSIDE a map entry — unlike top-level fields, a
-    * missing string key/value is the empty string (map keys cannot be null
-    * in Spark's MapType), and a missing nested value is null.
+  /** Int-keyed lookup for field and enum numbers: a dense array for small
+    * non-negative keys, which is what descriptors almost always declare, and
+    * a map for the rest.
     */
-  private def mapEntryDefault(t: PType): Any = t match {
-    case PString        => ""
-    case PBytes         => Array.emptyByteArray
-    case PNested(_)     => null
-    case other          => defaultOf(other)
+  private final class IntTable[T >: Null <: AnyRef: scala.reflect.ClassTag](
+      entries: Seq[(Int, T)]) {
+    private val (small, large) = entries.partition { case (k, _) => k >= 0 && k < 4096 }
+    private val dense: Array[T] = {
+      val a = new Array[T](if (small.isEmpty) 0 else small.map(_._1).max + 1)
+      small.foreach { case (k, v) => a(k) = v }
+      a
+    }
+    private val sparse: Map[Int, T] = large.toMap
+    def apply(k: Int): T =
+      if (k >= 0 && k < dense.length) dense(k)
+      else if (sparse.isEmpty) null
+      else sparse.getOrElse(k, null)
   }
 
-  // per-message plan-time artifacts, built once and reused across rows
-  private val metaCache =
-    new java.util.concurrent.ConcurrentHashMap[PMessage, (Map[Int, Int], StructType)]()
-  private def metaOf(msg: PMessage): (Map[Int, Int], StructType) =
-    metaCache.computeIfAbsent(msg, m =>
-      (m.fields.iterator.zipWithIndex.map { case (f, i) => f.number -> i }.toMap,
-        structTypeOf(m)))
+  // wire value kinds of a [[ValueSpec]]
+  private final val KInt32 = 0
+  private final val KInt64 = 1
+  private final val KSInt32 = 2
+  private final val KSInt64 = 3
+  private final val KFixed32 = 4
+  private final val KFixed64 = 5
+  private final val KFloat = 6
+  private final val KDouble = 7
+  private final val KBool = 8
+  private final val KString = 9
+  private final val KBytes = 10
+  private final val KEnum = 11
+  private final val KMessage = 12
+  private final val KMap = 13
 
-  private def decodeMessage(r: Reader, msg: PMessage): Row = {
-    val (index, schema) = metaOf(msg)
-    val values = new Array[Any](msg.fields.length)
-    val repeats = new Array[scala.collection.mutable.ArrayBuffer[Any]](msg.fields.length)
-
-    while (r.hasMore) {
-      val tag = r.varint()
-      val number = (tag >>> 3).toInt
-      val wireType = (tag & 7).toInt
-      index.get(number) match {
-        case None => r.skip(wireType)
-        case Some(i) =>
-          val f = msg.fields(i)
-          val lenDelimited = f.ptype match {
-            case PString | PBytes | _: PNested | _: PMap => true
-            case _ => false
-          }
-          if (f.repeated || f.ptype.isInstanceOf[PMap]) {
-            // maps ride the repeated machinery: each occurrence is one entry
-            if (repeats(i) == null)
-              repeats(i) = scala.collection.mutable.ArrayBuffer.empty[Any]
-            if (wireType == 2 && !lenDelimited) {
-              // packed numeric repeat: elements until the length runs out
-              val len = r.varint().toInt
-              val stop = r.pos + len
-              while (r.pos < stop) repeats(i) += scalarOf(f.ptype, r)
-            } else repeats(i) += scalarOf(f.ptype, r)
-          } else values(i) = scalarOf(f.ptype, r) // last one wins (proto3)
-      }
+  /** How one wire value of type `t` decodes to its Catalyst value. */
+  private final class ValueSpec(t: PType, owner: String) {
+    val kind: Int = t match {
+      case PInt32 => KInt32
+      case PInt64 => KInt64
+      case PSInt32 => KSInt32
+      case PSInt64 => KSInt64
+      case PFixed32 => KFixed32
+      case PFixed64 => KFixed64
+      case PFloat => KFloat
+      case PDouble => KDouble
+      case PBool => KBool
+      case PString => KString
+      case PBytes => KBytes
+      case _: PEnum => KEnum
+      case _: PNested => KMessage
+      case _: PMap => KMap
+      case _: PNestedRec => throw new IllegalArgumentException(
+        s"recursive reference in $owner: apply ProtoIngest.unroll(msg, maxDepth) first")
+    }
+    /** Length-delimited on the wire, so a repeat of it is never packed. */
+    val lenDelimited: Boolean =
+      kind == KString || kind == KBytes || kind == KMessage || kind == KMap
+    /** Symbols pre-encoded, by enum number. */
+    val symbols: IntTable[UTF8String] = t match {
+      case PEnum(sym, _) => new IntTable(sym.toSeq.map { case (k, v) => k -> UTF8String.fromString(v) })
+      case _ => null
+    }
+    val nested: DecodePlan = t match {
+      case PNested(m) => new DecodePlan(m)
+      case _ => null
+    }
+    val (key, value): (ValueSpec, ValueSpec) = t match {
+      case PMap(k, v) => (new ValueSpec(k, owner), new ValueSpec(v, owner))
+      case _ => (null, null)
     }
 
-    new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
-      msg.fields.zipWithIndex.map { case (f, i) =>
-        if (f.ptype.isInstanceOf[PMap]) {
-          // last entry wins on duplicate keys (proto3); absent map → {}
-          if (repeats(i) == null) Map.empty
-          else repeats(i).iterator.map(_.asInstanceOf[(Any, Any)]).toMap
-        }
-        else if (f.repeated) { if (repeats(i) == null) Seq.empty else repeats(i).toSeq }
-        else values(i) match {
-          case null => defaultOf(f.ptype) // unset
-          case ""   => null               // set-but-empty string → null (:210)
-          case v    => v
-        }
-      }.toArray[Any], schema)
+    def enumSymbol(number: Int): UTF8String = {
+      val s = symbols(number)
+      if (s != null) s else UTF8String.fromString(s"UNKNOWN_$number")
+    }
+
+    /** Proto3 zero default of an unset field (ProtoMessageToAvroMappings.scala
+      * :70-83): a missing submessage is null (:314-318), an unset string or
+      * bytes field null, an unset enum its number-0 symbol.
+      */
+    def fieldDefault: Any = kind match {
+      case KInt32 | KSInt32 | KFixed32 => 0
+      case KInt64 | KSInt64 | KFixed64 => 0L
+      case KFloat => 0f
+      case KDouble => 0d
+      case KBool => false
+      case KEnum => symbols(0)
+      case _ => null
+    }
+
+    /** Proto3 zero default INSIDE a map entry — unlike top-level fields, a
+      * missing string key/value is the empty string (map keys cannot be null
+      * in Spark's MapType), and a missing nested value is null.
+      */
+    def entryDefault: Any = kind match {
+      case KString => UTF8String.EMPTY_UTF8
+      case KBytes => Array.emptyByteArray
+      case _ => fieldDefault
+    }
+
+    def read(r: Reader): Any = (kind: @scala.annotation.switch) match {
+      case KInt32 => r.varint().toInt
+      case KInt64 => r.varint()
+      case KSInt32 => zigzag(r.varint()).toInt
+      case KSInt64 => zigzag(r.varint())
+      case KFixed32 => r.fixed32()
+      case KFixed64 => r.fixed64()
+      case KFloat => java.lang.Float.intBitsToFloat(r.fixed32())
+      case KDouble => java.lang.Double.longBitsToDouble(r.fixed64())
+      case KBool => r.varint() != 0L
+      case KString => r.string()
+      case KBytes => r.bytes()
+      case KEnum => enumSymbol(r.varint().toInt)
+      case KMessage =>
+        val outer = r.enter(r.length())
+        val row = nested.read(r)
+        r.limit = outer
+        row
+    }
   }
 
-  /** Proto3 zero defaults per ProtoMessageToAvroMappings.scala:70-83. */
-  private def defaultOf(t: PType): Any = t match {
-    case PInt32 | PSInt32 | PFixed32 => 0
-    case PInt64 | PSInt64 | PFixed64 => 0L
-    case PFloat                      => 0f
-    case PDouble                     => 0d
-    case PBool                       => false
-    case PString | PBytes            => null
-    case PEnum(sym, _)               => sym.getOrElse(0, null)
-    case _: PMap                     => Map.empty // absent map → {}
-    case PNested(_)                  => null // missing submessage → null (:314-318)
-    case _: PNestedRec => throw new IllegalArgumentException(
-      "recursive reference: apply ProtoIngest.unroll(msg, maxDepth) first")
+  private final class Slot(val ordinal: Int, f: PField, owner: String) {
+    val number: Int = f.number
+    val spec = new ValueSpec(f.ptype, s"$owner.${f.name}")
+    val isMap: Boolean = spec.kind == KMap
+    if (isMap && f.repeated) throw new IllegalArgumentException(
+      s"map field $owner.${f.name} cannot also be repeated")
+    val repeated: Boolean = f.repeated
+    /** A set-but-empty string is null (:210); enums render as strings too. */
+    val emptyIsNull: Boolean = !repeated && (spec.kind == KString || spec.kind == KEnum)
+    val default: Any = spec.fieldDefault
+  }
+
+  private def copyOf(a: Array[Any], n: Int): Array[Any] =
+    java.util.Arrays.copyOf(a.asInstanceOf[Array[AnyRef]], n).asInstanceOf[Array[Any]]
+
+  private val EmptyArray = new GenericArrayData(Array.empty[Any])
+  private val EmptyMap = new ArrayBasedMapData(EmptyArray, EmptyArray)
+
+  /** The decoder for one message descriptor, planned once and reused for
+    * every message a reader decodes: field number → slot, each slot's value
+    * kind, enum symbols pre-encoded as `UTF8String`, one nested plan per
+    * sub-message field. It writes Catalyst values straight into a
+    * `GenericInternalRow`: strings are `UTF8String`s over the message
+    * buffer (which must not be modified afterwards), repeated fields
+    * `GenericArrayData`, maps `ArrayBasedMapData`. Not thread-safe: it keeps
+    * scratch buffers for repeated fields, so use one plan per task.
+    */
+  private[io] final class DecodePlan(msg: PMessage) {
+    private val slots = msg.fields.zipWithIndex.map { case (f, i) => new Slot(i, f, msg.name) }.toArray
+    private val byNumber = new IntTable(slots.toSeq.map(s => s.number -> s))
+    // per slot: repeated elements, or a map's keys and values interleaved
+    private val items = new Array[Array[Any]](slots.length)
+    private val counts = new Array[Int](slots.length)
+    private lazy val dedup = new java.util.HashMap[Any, Integer]()
+
+    def decode(bytes: Array[Byte]): InternalRow = read(new Reader(bytes))
+
+    private def add(i: Int, v: Any): Unit = {
+      var a = items(i)
+      val c = counts(i)
+      if (a == null) { a = new Array[Any](8); items(i) = a }
+      else if (c == a.length) { a = copyOf(a, c * 2); items(i) = a }
+      a(c) = v
+      counts(i) = c + 1
+    }
+
+    /** One wire occurrence of a map field = one entry message: field 1 key,
+      * field 2 value, missing ones at their proto3 zero defaults.
+      */
+    private def addEntry(i: Int, spec: ValueSpec, r: Reader): Unit = {
+      val outer = r.enter(r.length())
+      var k = spec.key.entryDefault
+      var v = spec.value.entryDefault
+      while (r.pos < r.limit) {
+        val tag = r.varint()
+        val num = (tag >>> 3).toInt
+        if (num == 1) k = spec.key.read(r)
+        else if (num == 2) v = spec.value.read(r)
+        else r.skip((tag & 7).toInt)
+      }
+      r.limit = outer
+      add(i, k)
+      add(i, v)
+    }
+
+    private[ProtoIngest] def read(r: Reader): InternalRow = {
+      val values = new Array[Any](slots.length)
+      java.util.Arrays.fill(counts, 0)
+      while (r.pos < r.limit) {
+        val tag = r.varint()
+        val wireType = (tag & 7).toInt
+        val s = byNumber((tag >>> 3).toInt)
+        if (s == null) r.skip(wireType)
+        else if (s.isMap) addEntry(s.ordinal, s.spec, r)
+        else if (!s.repeated) values(s.ordinal) = s.spec.read(r) // last one wins (proto3)
+        else if (wireType == 2 && !s.spec.lenDelimited) {
+          // packed numeric repeat: elements until the length runs out
+          val outer = r.enter(r.length())
+          while (r.pos < r.limit) add(s.ordinal, s.spec.read(r))
+          r.limit = outer
+        } else add(s.ordinal, s.spec.read(r))
+      }
+      var i = 0
+      while (i < slots.length) {
+        val s = slots(i)
+        if (s.isMap) values(i) = mapOf(i)
+        else if (s.repeated)
+          values(i) =
+            if (counts(i) == 0) EmptyArray else new GenericArrayData(copyOf(items(i), counts(i)))
+        else if (values(i) == null) values(i) = s.default
+        else if (s.emptyIsNull && values(i).asInstanceOf[UTF8String].numBytes == 0) values(i) = null
+        i += 1
+      }
+      new GenericInternalRow(values)
+    }
+
+    /** The map of slot `i`'s entries; on a duplicate key the LAST value wins
+      * (proto3), at the key's first position.
+      */
+    private def mapOf(i: Int): MapData = {
+      val n = counts(i) / 2
+      if (n == 0) return EmptyMap
+      val kv = items(i)
+      val keys = new Array[Any](n)
+      val vals = new Array[Any](n)
+      var m = 0
+      if (n == 1) { keys(0) = kv(0); vals(0) = kv(1); m = 1 }
+      else {
+        dedup.clear()
+        var e = 0
+        while (e < n) {
+          val at = dedup.putIfAbsent(kv(2 * e), m)
+          if (at == null) { keys(m) = kv(2 * e); vals(m) = kv(2 * e + 1); m += 1 }
+          else vals(at) = kv(2 * e + 1)
+          e += 1
+        }
+      }
+      if (m == n) new ArrayBasedMapData(new GenericArrayData(keys), new GenericArrayData(vals))
+      else new ArrayBasedMapData(
+        new GenericArrayData(copyOf(keys, m)), new GenericArrayData(copyOf(vals, m)))
+    }
   }
 
   /** Decode one serialized message. */
-  def decodeBytes(bytes: Array[Byte], msg: PMessage): Row =
-    decodeMessage(new Reader(bytes, 0, bytes.length), msg)
+  def decodeBytes(bytes: Array[Byte], msg: PMessage): Row = {
+    val toRow = CatalystTypeConverters.createToScalaConverter(structTypeOf(msg))
+    toRow(new DecodePlan(msg).decode(bytes)).asInstanceOf[Row]
+  }
 
   /** Decode `binCol` of `df` into the message's full column set —
-    * `spark.read` + this = the reference's S1 scan for proto payloads.
-    * The trailing `.to(schema)` re-applies the descriptor schema's field
-    * METADATA (the row Encoder normalizes it away): enum columns keep their
-    * `graft.enum.*` tags all the way to the Avro sink.
+    * `spark.read` + this = the reference's S1 scan for proto payloads. The
+    * schema keeps the descriptor's field METADATA, so enum columns carry
+    * their `graft.enum.*` tags all the way to the Avro sink.
     */
   def decode(df: DataFrame, binCol: String, msg: PMessage): DataFrame = {
-    val schema = structTypeOf(msg)
-    df.select(col(binCol)).mapPartitions { it =>
-      it.map(r => decodeBytes(r.getAs[Array[Byte]](0), msg))
-    }(Encoders.row(schema)).to(schema)
+    val rows = df.select(col(binCol)).queryExecution.toRdd.mapPartitions { it =>
+      val plan = new DecodePlan(msg)
+      it.map(r => plan.decode(r.getBinary(0)))
+    }
+    org.apache.spark.sql.graft.Bridge.ofInternalRows(df.sparkSession, rows, structTypeOf(msg))
   }
 
   /** The reference's S2 replay-cache format, byte-exact (Main.scala:67-120):

@@ -5,7 +5,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.metric
@@ -14,6 +14,7 @@ import org.apache.spark.sql.connector.read.streaming
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.io.ProtoIngest.PMessage
 
@@ -377,8 +378,7 @@ object ProtoSource {
       fullMsg: PMessage, filters: Array[sources.Filter],
       expectedQuery: Option[String], conf: Configuration, limit: Int)
       extends PartitionReader[InternalRow] {
-    private val schema = ProtoIngest.structTypeOf(msg)
-    private val toCatalyst = CatalystTypeConverters.createToCatalystConverter(schema)
+    private val plan = new ProtoIngest.DecodePlan(msg)
     private val stream = FileSystem.get(new java.net.URI(file), conf)
       .open(new HPath(file))
     private val lines = new java.io.BufferedReader(
@@ -399,19 +399,24 @@ object ProtoSource {
     // two-phase decode (lazy materialization): when filters are pushed,
     // decode ONLY their fields first and skip the full decode for rows that
     // fail — the selective-scan shape where most bytes are never parsed
-    private val gate: Option[(Array[Byte]) => Boolean] =
-      if (filters.isEmpty) None
+    private val gate: Array[Byte] => Boolean =
+      if (filters.isEmpty) null
       else {
         val gateFields = filters.flatMap(RowGate.references).distinct
         val gateMsg = PMessage(fullMsg.name,
           gateFields.flatMap(n => fullMsg.fields.find(_.name == n)).toSeq)
-        Some((bytes: Array[Byte]) => {
-          val r = ProtoIngest.decodeBytes(bytes, gateMsg)
-          filters.forall(f => RowGate.eval(f, r))
-        })
+        val gatePlan = new ProtoIngest.DecodePlan(gateMsg)
+        val tests = filters.map(RowGate.compile(_, ProtoIngest.structTypeOf(gateMsg)))
+        (bytes: Array[Byte]) => {
+          val r = gatePlan.decode(bytes)
+          var i = 0
+          while (i < tests.length && tests(i)(r)) i += 1
+          i == tests.length
+        }
       }
 
     private var current: InternalRow = _
+    private var lineNo = 1 // the header
     private var gated = 0L
     private var emitted = 0L
     private val prunedFields = (fullMsg.fields.size - msg.fields.size).toLong
@@ -420,10 +425,16 @@ object ProtoSource {
       if (limit >= 0 && emitted >= limit) return false // pushed (partial) limit
       var line = lines.readLine()
       while (line != null && line.nonEmpty) {
-        val bytes = b64.decode(line)
-        if (gate.forall(_(bytes))) {
-          current = toCatalyst(ProtoIngest.decodeBytes(bytes, msg))
-            .asInstanceOf[InternalRow]
+        lineNo += 1
+        val row = try {
+          val bytes = b64.decode(line)
+          if (gate == null || gate(bytes)) plan.decode(bytes) else null
+        } catch {
+          case e: IllegalArgumentException => throw new ProtoIngest.MalformedProtoException(
+            s"$file line $lineNo: ${e.getMessage}", e)
+        }
+        if (row != null) {
+          current = row
           emitted += 1
           return true
         }
@@ -490,11 +501,13 @@ object ProtoSource {
     // scan that the residual Spark filter never sees again (silent wrong
     // results, not just wasted work). Mixed integral/fractional pairs
     // compare exactly through BigDecimal (both conversions are exact);
-    // NaN sorts greater than everything, matching Spark's ordering.
-    private def cmp(x: Any, v: Any): Option[Int] = (x, v) match {
-      case (null, _) => None
+    // NaN sorts greater than everything, matching Spark's ordering. Strings
+    // compare as UTF-8 bytes, Spark's own string order. NoOrder: the pair
+    // does not compare, so no comparison filter accepts it.
+    private final val NoOrder = Int.MinValue
+    private def cmp(x: Any, v: Any): Int = (x, v) match {
       case (a: Number, b: Number) if integral(a) && integral(b) =>
-        Some(java.lang.Long.compare(a.longValue(), b.longValue()))
+        java.lang.Long.compare(a.longValue(), b.longValue())
       case (a: Number, b: Number) =>
         // NaN sorts greatest (Spark ordering); ±Infinity would blow up
         // BigDecimal's double constructor, so it compares directly — both
@@ -503,35 +516,55 @@ object ProtoSource {
           java.lang.Double.isNaN(d) || java.lang.Double.isInfinite(d)
         (integral(a), integral(b)) match {
           case (false, false) =>
-            Some(java.lang.Double.compare(a.doubleValue(), b.doubleValue()))
+            java.lang.Double.compare(a.doubleValue(), b.doubleValue())
           case (true, false) =>
             val d = b.doubleValue()
-            if (nonFinite(d)) Some(if (d == Double.NegativeInfinity) 1 else -1)
-            else Some(java.math.BigDecimal.valueOf(a.longValue())
-              .compareTo(new java.math.BigDecimal(d)))
+            if (nonFinite(d)) { if (d == Double.NegativeInfinity) 1 else -1 }
+            else java.math.BigDecimal.valueOf(a.longValue())
+              .compareTo(new java.math.BigDecimal(d))
           case (false, true) =>
             val d = a.doubleValue()
-            if (nonFinite(d)) Some(if (d == Double.NegativeInfinity) -1 else 1)
-            else Some(new java.math.BigDecimal(d)
-              .compareTo(java.math.BigDecimal.valueOf(b.longValue())))
-          case _ => None // unreachable
+            if (nonFinite(d)) { if (d == Double.NegativeInfinity) -1 else 1 }
+            else new java.math.BigDecimal(d)
+              .compareTo(java.math.BigDecimal.valueOf(b.longValue()))
+          case _ => NoOrder // unreachable
         }
-      case (a: String, b: String) => Some(a.compareTo(b))
-      case (a: Boolean, b: Boolean) => Some(java.lang.Boolean.compare(a, b))
-      case _ => None
+      case (a: UTF8String, b: UTF8String) => a.binaryCompare(b)
+      case (a: Boolean, b: Boolean) => java.lang.Boolean.compare(a, b)
+      case _ => NoOrder
     }
 
-    def eval(f: Filter, r: org.apache.spark.sql.Row): Boolean = f match {
-      case EqualTo(a, v)            => cmp(r.getAs[Any](a), v).contains(0)
-      case GreaterThan(a, v)        => cmp(r.getAs[Any](a), v).exists(_ > 0)
-      case GreaterThanOrEqual(a, v) => cmp(r.getAs[Any](a), v).exists(_ >= 0)
-      case LessThan(a, v)           => cmp(r.getAs[Any](a), v).exists(_ < 0)
-      case LessThanOrEqual(a, v)    => cmp(r.getAs[Any](a), v).exists(_ <= 0)
-      case In(a, vs)                => vs.exists(v => cmp(r.getAs[Any](a), v).contains(0))
-      case IsNull(a)                => r.getAs[Any](a) == null
-      case IsNotNull(a)             => r.getAs[Any](a) != null
-      case And(l, rr)               => eval(l, r) && eval(rr, r)
-      case _                        => true // never pushed; defensive
+    /** Compiles a pushed filter into a test of a gate row decoded with
+      * `schema`: each referenced field is read by its ordinal, and string
+      * literals are encoded once. SQL null semantics: a comparison with a
+      * null field is false.
+      */
+    def compile(f: Filter, schema: StructType): InternalRow => Boolean = {
+      def compare(a: String, v: Any)(accept: Int => Boolean): InternalRow => Boolean = {
+        val i = schema.fieldIndex(a)
+        val dt = schema(i).dataType
+        val lit = v match {
+          case s: String => UTF8String.fromString(s)
+          case other => other
+        }
+        r => !r.isNullAt(i) && { val c = cmp(r.get(i, dt), lit); c != NoOrder && accept(c) }
+      }
+      f match {
+        case EqualTo(a, v)            => compare(a, v)(_ == 0)
+        case GreaterThan(a, v)        => compare(a, v)(_ > 0)
+        case GreaterThanOrEqual(a, v) => compare(a, v)(_ >= 0)
+        case LessThan(a, v)           => compare(a, v)(_ < 0)
+        case LessThanOrEqual(a, v)    => compare(a, v)(_ <= 0)
+        case In(a, vs) =>
+          val tests = vs.map(v => compare(a, v)(_ == 0))
+          r => tests.exists(_(r))
+        case IsNull(a)    => val i = schema.fieldIndex(a); r => r.isNullAt(i)
+        case IsNotNull(a) => val i = schema.fieldIndex(a); r => !r.isNullAt(i)
+        case And(l, rr) =>
+          val (lt, rt) = (compile(l, schema), compile(rr, schema))
+          r => lt(r) && rt(r)
+        case _ => _ => true // never pushed; defensive
+      }
     }
   }
 }

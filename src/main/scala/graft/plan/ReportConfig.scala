@@ -60,15 +60,13 @@ object ReportConfig {
     def applyTo(df: DataFrame): DataFrame =
       translator(where.fold(df)(df.filter))
 
-    /** [[run]] then fan the result out to every declared sink — the
-      * reference runner writes the same rows to Avro AND JSON
-      * (Main.scala:205-217); here each sink writes the same computed rows
-      * (persisted across the fan-out, so the plan executes once, not once
-      * per sink). Formats were validated at parse time — no sink can fail
-      * on format after another already wrote.
+    /** Fan `df` out to every declared sink — the reference runner writes the
+      * same rows to Avro AND JSON (Main.scala:205-217); here each sink writes
+      * the same computed rows (persisted across the fan-out, so the plan
+      * executes once, not once per sink). Formats were validated at parse
+      * time — no sink can fail on format after another already wrote.
       */
-    def runAndWrite(spark: SparkSession, dir: String): DataFrame = {
-      val df = run(spark, dir)
+    def writeSinks(df: DataFrame): Unit =
       if (sinks.nonEmpty) {
         df.persist()
         try sinks.foreach { s =>
@@ -79,6 +77,11 @@ object ReportConfig {
           }
         } finally df.unpersist(blocking = false)
       }
+
+    /** [[run]] then [[writeSinks]]. */
+    def runAndWrite(spark: SparkSession, dir: String): DataFrame = {
+      val df = run(spark, dir)
+      writeSinks(df)
       df
     }
   }

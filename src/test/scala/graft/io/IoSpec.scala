@@ -143,6 +143,123 @@ class IoSpec extends GraftSpec {
     }
   }
 
+  describe("AvroSink's compiled InternalRow writer") {
+    import org.apache.avro.file.{DataFileReader, DataFileWriter}
+    import org.apache.avro.generic.{GenericDatumReader, GenericDatumWriter, GenericRecord}
+    import org.apache.spark.sql.Row
+    import scala.jdk.CollectionConverters._
+
+    val inner = StructType(Seq(
+      StructField("x", IntegerType, nullable = false),
+      StructField("s", StringType, nullable = true)))
+    val st = StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField("b", ByteType, nullable = false),
+      StructField("bn", ByteType, nullable = true),
+      StructField("sh", ShortType, nullable = false),
+      StructField("shn", ShortType, nullable = true),
+      StructField("i", IntegerType, nullable = false),
+      StructField("in", IntegerType, nullable = true),
+      StructField("ln", LongType, nullable = true),
+      StructField("f", FloatType, nullable = false),
+      StructField("fn", FloatType, nullable = true),
+      StructField("d", DoubleType, nullable = false),
+      StructField("dn", DoubleType, nullable = true),
+      StructField("z", BooleanType, nullable = false),
+      StructField("zn", BooleanType, nullable = true),
+      StructField("s", StringType, nullable = false),
+      StructField("status", StringType, nullable = true,
+        AvroSchemas.enumMetadata("Status", Seq("UNKNOWN", "ON", "OFF"))),
+      StructField("statuses", ArrayType(StringType, containsNull = false), nullable = false,
+        AvroSchemas.enumMetadata("Statuses", Seq("UNKNOWN", "ON", "OFF"))),
+      StructField("inner", inner, nullable = true, AvroSchemas.recordMetadata("Inner")),
+      StructField("inners", ArrayType(inner, containsNull = false), nullable = true),
+      StructField("tags", ArrayType(StringType, containsNull = true), nullable = false),
+      StructField("attrs", MapType(StringType, LongType, valueContainsNull = true), nullable = true),
+      StructField("bin", BinaryType, nullable = true),
+      StructField("day", DateType, nullable = true),
+      StructField("ts", TimestampType, nullable = true),
+      StructField("amount", DecimalType(12, 3), nullable = true)))
+    val rows = Seq(
+      Row(1L, 1.toByte, 2.toByte, 3.toShort, 4.toShort, 5, 6, 7L, 1.5f, 2.5f, 3.25, 4.5,
+        true, false, "alpha", "ON", Seq("OFF", "UNKNOWN"), Row(8, "nested"),
+        Seq(Row(9, null), Row(10, "")), Seq("a", null, ""), Map("k" -> 1L, "nil" -> null, "" -> -2L),
+        Array[Byte](0, 1, -1), java.sql.Date.valueOf("2021-02-03"),
+        java.sql.Timestamp.valueOf("2021-02-03 04:05:06.789"), new java.math.BigDecimal("-12.340")),
+      Row(2L, -128.toByte, null, -32768.toShort, null, Int.MinValue, null, null, -0.5f, null,
+        -1e300, null, false, null, "", null, Seq.empty, null, null, Seq.empty, null, null,
+        null, null, null),
+      Row(Long.MaxValue, 127.toByte, 0.toByte, 32767.toShort, 0.toShort, Int.MaxValue, 0, Long.MinValue,
+        Float.MaxValue, 0f, Double.MinPositiveValue, 0d, true, true, "üñï ✓", "UNKNOWN",
+        Seq("ON"), Row(0, null), Seq.empty, Seq(null), Map.empty[String, Long], Array.emptyByteArray,
+        java.sql.Date.valueOf("1970-01-01"), java.sql.Timestamp.valueOf("1999-12-31 23:59:59"),
+        new java.math.BigDecimal("123456789.000")))
+    val df = spark.createDataFrame(rows.asJava, st)
+    val avro = AvroSchemas.toAvro(st, "Rec")
+
+    def readBack(files: Seq[java.io.File]): Seq[GenericRecord] = files.flatMap { f =>
+      val reader = new DataFileReader(f, new GenericDatumReader[GenericRecord]())
+      try reader.iterator().asScala.toList finally reader.close()
+    }.sortBy(_.get("id").asInstanceOf[Long])
+
+    it("writes the records the Row → GenericRecord oracle writes, byte for byte") {
+      val dir = tmp("avro-parity") + "/out"
+      AvroSink.write(df.repartition(2), dir, "Rec")
+      val written = readBack(new java.io.File(dir).listFiles().toSeq
+        .filter(_.getName.endsWith(".avro")))
+
+      val oracleFile = new java.io.File(tmp("avro-oracle"), "oracle.avro")
+      val w = new DataFileWriter(new GenericDatumWriter[GenericRecord](avro)).create(avro, oracleFile)
+      try df.collect().foreach(r => w.append(AvroRecordOracle.toRecord(r, st, avro)))
+      finally w.close()
+      val expected = readBack(Seq(oracleFile))
+
+      written should have size 3
+      written shouldBe expected
+      // and the encoded bytes of every record, straight from the rows
+      def encode(write: org.apache.avro.io.Encoder => Unit): Seq[Byte] = {
+        val out = new java.io.ByteArrayOutputStream()
+        val enc = org.apache.avro.io.EncoderFactory.get().binaryEncoder(out, null)
+        write(enc); enc.flush(); out.toByteArray.toSeq
+      }
+      val internal = df.queryExecution.toRdd.map(_.copy()).collect()
+      val writer = new AvroSink.RowDatumWriter(st, avro)
+      val oracleWriter = new GenericDatumWriter[GenericRecord](avro)
+      internal.zip(df.collect()).foreach { case (ir, r) =>
+        encode(writer.write(ir, _)) shouldBe
+          encode(oracleWriter.write(AvroRecordOracle.toRecord(r, st, avro), _))
+      }
+    }
+
+    it("fails on a null in a non-nullable column, naming the field") {
+      // Spark's own projections keep nulls out of non-nullable columns, so
+      // the writer is handed a row that breaks its schema directly
+      val schema = StructType(Seq(
+        StructField("id", LongType, nullable = false),
+        StructField("inner", inner, nullable = false)))
+      val writer = new AvroSink.RowDatumWriter(schema, AvroSchemas.toAvro(schema, "Rec"))
+      val enc = org.apache.avro.io.EncoderFactory.get()
+        .binaryEncoder(new java.io.ByteArrayOutputStream(), null)
+      import org.apache.spark.sql.catalyst.InternalRow
+      val utf8 = org.apache.spark.unsafe.types.UTF8String.fromString("s")
+      writer.write(InternalRow(1L, InternalRow(2, utf8)), enc)
+      intercept[NullPointerException](writer.write(InternalRow(1L, null), enc))
+        .getMessage should include("non-nullable record field Rec.inner")
+      intercept[NullPointerException](writer.write(InternalRow(1L, InternalRow(null, utf8)), enc))
+        .getMessage should include("non-nullable int field Rec.inner.x")
+    }
+
+    it("throws AvroTypeException for an enum value outside the symbols") {
+      val bad = AvroSchemas.markEnum(Seq((1L, "ON"), (2L, "SIDEWAYS")).toDF("id", "status"),
+        "status", "Status", Seq("UNKNOWN", "ON", "OFF"))
+      val ex = intercept[Exception](AvroSink.write(bad.coalesce(1), tmp("avro-enum-bad") + "/out", "Rec"))
+      val typeError = Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case t: org.apache.avro.AvroTypeException => t }
+      typeError.map(_.getMessage).getOrElse(fail(s"no AvroTypeException in $ex")) should
+        include("SIDEWAYS")
+    }
+  }
+
   describe("ResultCache (Main.scala:67-121)") {
     it("same plan → cache hit; different plan → recompute") {
       val dir = tmp("cache") + "/c"

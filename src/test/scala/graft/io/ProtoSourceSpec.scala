@@ -259,4 +259,77 @@ class ProtoSourceSpec extends GraftSpec {
     }
     ex.getMessage should include("refetch")
   }
+
+  it("fails loudly, naming the file and line, on a truncated message — " +
+     "with a pushed gate and without one") {
+    val d = java.nio.file.Files.createTempDirectory("graft-proto-truncated")
+    val b64 = java.util.Base64.getEncoder
+    // id and impressions intact, then a name announcing 50 bytes of which 3
+    // are present: the full decode reads past the end, the gate and the
+    // pruned decode skip past it
+    val truncated = {
+      val out = new java.io.ByteArrayOutputStream()
+      varint(out, 8); varint(out, 3)
+      varint(out, 24); varint(out, 900)
+      varint(out, 18); varint(out, 50); out.write("row".getBytes("UTF-8"))
+      out.toByteArray
+    }
+    val lines = b64.encodeToString(query.getBytes("UTF-8")) +:
+      Seq(enc(1), enc(2), truncated, enc(4)).map(b64.encodeToString)
+    java.nio.file.Files.write(d.resolve("cut.txt"), lines.mkString("\n").getBytes("UTF-8"))
+    val scans = Seq(
+      "full decode" -> read.load(d.toString),
+      "pruned decode" -> read.load(d.toString).select("id"),
+      "pushed gate" -> read.load(d.toString).filter(col("impressions") > 150).select("id"))
+    scans.foreach { case (what, df) =>
+      withClue(what) {
+        val ex = intercept[Exception](df.collect())
+        ex.getMessage should include("MalformedProtoException")
+        ex.getMessage should include("cut.txt line 4")
+        ex.getMessage should include("truncated message")
+      }
+    }
+    scans.last._2.queryExecution.executedPlan.toString should include("PushedRowGate: [")
+  }
+
+  it("a persisted scan fanned out to the Avro and JSON sinks decodes the " +
+     "cache once, even when its plan was built before persist()") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    val out = java.nio.file.Files.createTempDirectory("graft-proto-fanout")
+    val df = read.load(dir).filter(col("impressions") > 500).select("id", "name", "status")
+    df.queryExecution.executedPlan // planned before persist(), as a traced report op is
+    val report = graft.plan.ReportConfig.parse(
+      s"""{"table": "ads_row", "fields": ["id", "name", "status"], "sinks": [{"format": "avro", "path": "$out/avro"},
+         |{"format": "json", "path": "$out/json"}]}""".stripMargin)
+    val plans = scala.collection.mutable.ArrayBuffer.empty[SparkPlan]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          d: Long): Unit = plans.synchronized { plans += qe.executedPlan }
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try report.writeSinks(df)
+    finally {
+      org.apache.spark.sql.graft.Bridge.waitListeners(spark.sparkContext)
+      spark.listenerManager.unregister(listener)
+    }
+    AvroSink.readToJsonStrings(spark, s"$out/avro") should have size 4
+    spark.read.json(s"$out/json").count() shouldBe 4
+
+    def scansOf(p: SparkPlan) = graft.plans.PlanWalk.collectAll(p) {
+      case b if b.getClass.getSimpleName == "BatchScanExec" => b
+    }
+    plans should have size 2 // the Avro write, then the JSON write
+    val cached = plans.toSeq.map { p =>
+      scansOf(p) shouldBe empty
+      graft.plans.PlanWalk.collectAll(p) { case m: InMemoryTableScanExec => m }.head
+    }
+    // ids 1..5 fail the gate: rejected once by the cache's own scan, never
+    // by the plan built before persist()
+    val cacheScan = scansOf(cached.head.relation.cacheBuilder.cachedPlan).head
+    cacheScan.metrics("rowsGated").value shouldBe 5
+    scansOf(df.queryExecution.executedPlan).head.metrics("rowsGated").value shouldBe 0
+  }
 }
