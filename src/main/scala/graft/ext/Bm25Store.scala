@@ -17,11 +17,11 @@ final case class Bm25StoreStats(docs: Long, dlSum: Long, buckets: Int)
   * / [[append]] time, into the exploded posting relation
   * `(term, __id, __dl, __tf)`, and every later query reads postings for
   * ITS OWN terms only. Document text is never re-read; corpus length
-  * statistics (N, Σdl) accumulate as exact Long PARTIALS in
-  * `statsparts/` — every batch document counts (zero-token docs
-  * included, matching the session scorer's corpus count), and the
-  * partial is written before the marker commit, so the summed stats can
-  * never disagree with the committed postings.
+  * statistics (N, Σdl) accumulate as exact Long PARTIALS carried by each
+  * data commit — every batch document counts (zero-token docs included,
+  * matching the session scorer's corpus count), and a partial publishes
+  * in the same marker as its postings, so the summed stats can never
+  * disagree with the committed postings.
   *
   * == Layout ==
   *
@@ -33,10 +33,10 @@ final case class Bm25StoreStats(docs: Long, dlSum: Long, buckets: Int)
   *    the dq59/dq118 treatment applied to text retrieval; files are
   *    term-sorted within each bucket, so the `term IN (...)` predicate
   *    additionally prunes at parquet row-group min/max;
-  *  - `_commits/m<seq>` marker manifests (crashed appends invisible);
-  *  - `statsparts/append=<id>/` one (docs, dl_sum) partial per append
-  *    (compaction folds them alongside the postings);
-  *  - `stats/` the static `buckets` row.
+  *  - `_commits/m<seq>` marker manifests ([[StoreLog]]; crashed appends
+  *    invisible): each data commit carries the pinned `buckets` and its
+  *    batch's (docs, dlSum) partial, and a compaction commit the folded
+  *    sum of the partials it supersedes.
   *
   * == Query shape ==
   *
@@ -55,53 +55,46 @@ final case class Bm25StoreStats(docs: Long, dlSum: Long, buckets: Int)
   * per document ever.
   */
 final class Bm25Store private (
-    private val spark: SparkSession, val path: String) {
+    private val spark: SparkSession, val path: String) extends LoggedStore {
 
-  /** Current stored statistics: `buckets` from the static `stats/` row,
-    * docs/Σdl SUMMED from the committed per-append partials — stats can
-    * never disagree with the committed postings (there is no separate
+  private[ext] val log = new StoreLog(spark, path, Seq(StoreRel("postings",
+    // row-identical union rewrite: bounds the per-search file listing and
+    // merges the per-bucket small files
+    fold = Some((from, to) => postings(from)
+      .select("term", "__id", "__dl", "__tf", "tb")
+      .repartition(col("tb"))
+      .sortWithinPartitions("tb", "term")
+      .write.partitionBy("tb").mode("errorifexists").parquet(to)))),
+    // the folded commits' partials fold into the compaction's commit
+    foldStats = ms => StoreLog.kvOf(Bm25Store.summed(ms)))
+
+  /** Current stored statistics: docs/Σdl SUMMED on the driver from the
+    * active commits' partials — a manifest read, no Spark job, and never
+    * out of step with the committed postings (there is no separate
     * mutable total to fall behind). */
-  def stats: Bm25StoreStats =
-    StoreStats.cached(log, path)(statsOf(excludeToken = None))
+  def stats: Bm25StoreStats = statsOf(excludeToken = None)
 
   /** [[stats]] under the micro-batch replay view ([[search]] passes its
     * `excludeToken` so a replayed gate scores with pre-append N/avgdl,
     * matching the pruned posting relation it reads). */
-  def statsOf(excludeToken: Option[String]): Bm25StoreStats = {
-    val buckets = StatsSidecar.read(spark, path)("buckets").toInt
-    val ids = activeIds(visible(excludeToken))
-    require(ids.nonEmpty, s"no committed statsparts under $path")
-    val agg = RelRead.read(spark, s"$path#statsparts",
-      ids.map(id => s"$path/statsparts/append=$id"),
-      basePath = Some(s"$path/statsparts"))
-      .agg(coalesce(sum(col("docs")), lit(0L)),
-        coalesce(sum(col("dl_sum")), lit(0L))).head()
-    Bm25StoreStats(agg.getLong(0), agg.getLong(1), buckets)
+  def statsOf(excludeToken: Option[String]): Bm25StoreStats =
+    statsIn(log.visible(excludeToken))
+
+  private def statsIn(ms: Seq[Manifest]): Bm25StoreStats = {
+    val active = log.activeIds(ms, "postings").toSet
+    require(active.nonEmpty, s"no committed postings dirs under $path")
+    Bm25Store.summed(ms.filter(_.rel("postings").exists(active)))
   }
 
-  private val log = new ManifestLog(spark, path)
-
-  private def visible(excludeToken: Option[String]): Seq[Manifest] =
-    log.read().filterNot(m => excludeToken.exists(m.token.contains))
-
-  private def activeIds(ms: Seq[Manifest]): Seq[String] = {
-    val sup = ms.flatMap(_.supersedesDigests).toSet
-    ms.flatMap(_.digests).filterNot(sup)
-  }
-
-  private def postingsRelOf(ms: Seq[Manifest]): DataFrame = {
-    val ids = activeIds(ms)
-    require(ids.nonEmpty, s"no committed posting dirs under $path")
-    RelRead.read(spark, s"$path#postings",
-      ids.map(id => s"$path/postings/append=$id"),
+  private def postings(dirs: Seq[String]): DataFrame =
+    RelRead.read(spark, s"$path#postings", dirs,
       basePath = Some(s"$path/postings"))
-  }
 
   // ---------------- writes ----------------
 
   /** Index a document batch: tokenize, explode to postings, write one
-    * bucket-partitioned `append=<id>` dir, one marker commit, stats
-    * accumulated as exact Longs.
+    * bucket-partitioned `append=<id>` dir, one marker commit carrying the
+    * batch's exact (docs, Σdl) partial.
     *
     * Document ids must be UNIQUE ACROSS APPENDS — the scope of the
     * stored-vs-session parity claim: the same id appended in two batches
@@ -114,131 +107,66 @@ final class Bm25Store private (
     * pipeline gets uniqueness for free from upstream exact dedup, and a
     * replayed micro-batch from [[appendOnce]]'s token. */
   def append(df: DataFrame, idCol: String, textCol: String): Bm25StoreStats =
-    log.withWriteLock {
-      writeBatch(df, idCol, textCol, stats, first = false, token = None)
-    }
+    log.locked(writeBatch(df, idCol, textCol, None, token = None))
 
   /** [[append]] with an idempotence token — exactly-once: a committed
     * manifest carrying `token` makes the call a no-op. */
   def appendOnce(df: DataFrame, idCol: String, textCol: String,
-      token: String): Bm25StoreStats = {
-    require(token.nonEmpty && !token.contains("\n"), "token: non-empty, one line")
-    log.withWriteLock {
-      if (log.read().exists(_.token.contains(token))) stats
-      else writeBatch(df, idCol, textCol, stats, first = false,
-        token = Some(token))
-    }
-  }
+      token: String): Bm25StoreStats =
+    log.once(token)(stats)(writeBatch(df, idCol, textCol, None, Some(token)))
 
+  /** `buckets` is the build's pin (a fresh path); appends reuse the
+    * snapshot's. */
   private def writeBatch(df: DataFrame, idCol: String, textCol: String,
-      prev: Bm25StoreStats, first: Boolean,
-      token: Option[String]): Bm25StoreStats = {
-    val before = log.read()
-    require(!first || before.isEmpty,
-      s"$path already holds a committed index (build() wants a fresh path)")
-    val seq = before.size + 1
-    val id = f"a$seq%06d"
-    val dir = s"$path/postings/append=$id"
-    val sDir = s"$path/statsparts/append=$id"
-    log.clearOrphan(dir)
-    log.clearOrphan(sDir)
-    // tokenize the batch text ONCE into the marker-carrying posting
-    // frame: the cached layer is the compact POST-aggregation relation
-    // (caching the per-document token arrays instead measurably doubled
-    // the large-corpus build — columnar array caching is the wrong
-    // shape), and it feeds both the posting write and the statistics
-    // partial with no second pass over document text.
-    val postsAll = Bm25.postingsWithRowMarkers(
-      Bm25.tokenized(df, idCol, textCol))
-    postsAll.persist()
-    try {
-      // a FIRST append with zero postings would leave the index
-      // unreadable (every later read infers schema over only-empty
-      // dirs): refuse the degenerate build BEFORE writing anything,
-      // off the cached frame — a limit-1 cache scan, NOT a footer walk
-      // of the written dir (serial footer opens over the
-      // tasks×buckets file fan-out measured ~14s, dwarfing the write)
-      if (first)
-        require(postsAll.where(col("term").isNotNull).head(1).nonEmpty,
-          s"cannot build a stored index at $path from a corpus with no postings")
-      // cluster the write BY BUCKET before partitionBy: without it every
-      // write task fans out one file per bucket it touches — tasks ×
-      // buckets files per append (51k files for a 200-task, 256-bucket
-      // production append); the batch-sized shuffle caps it at ≤ buckets
-      // files per append, each term-sorted for row-group pruning
-      postsAll.filter(col("term").isNotNull)
-        .withColumn("tb", pmod(hash(col("term")), lit(prev.buckets)))
-        .repartition(col("tb"))
-        .sortWithinPartitions("tb", "term")
-        .write.partitionBy("tb").mode("errorifexists").parquet(dir)
-      // batch statistics off the cached frame's null-term MARKER rows:
-      // their __tf is the exact row multiplicity, so EVERY batch row
-      // counts toward N and Σdl — zero-token docs, null-text docs, and
-      // a document sent twice in one batch all included, exactly as the
-      // session scorer ([[Bm25.scores]]) counts corpus rows (a
-      // distinct-id count would undercount duplicate rows and break
-      // stored-vs-session N/avgdl parity). Written as a durable
-      // per-append PARTIAL before the marker commit (visibility is the
-      // manifest's — a crash between the two leaves both dirs
-      // invisible), so [[stats]] can never disagree with the committed
-      // postings.
-      val agg = postsAll.filter(col("term").isNull)
-        .agg(coalesce(sum(col("__tf")), lit(0L)).as("n"),
-          coalesce(sum(col("__dl") * col("__tf")), lit(0L)).as("s"))
-        .head()
-      Bm25Store.writeStatsPart(spark, sDir, agg.getLong(0), agg.getLong(1))
-      log.commit(Manifest(Seq(id), Nil, Nil, Nil, token), seq)
-      maybeCompact()
-      stats
-    } finally { postsAll.unpersist(blocking = false); () }
-  }
-
-  /** Fold the posting dirs into one bucket-partitioned relation once the
-    * active dir count passes `spark.graft.bm25store.compactThreshold`
-    * (default 16) — bounds the per-search file listing and merges the
-    * per-bucket small files. Newest dir never folded (token-replay
-    * window); superseded dirs stay for in-flight readers until
-    * [[vacuum]]. Row-identical union rewrite. */
-  private def maybeCompact(): Unit = {
-    val threshold = IndexConf.strictInt(spark,
-      "spark.graft.bm25store.compactThreshold", default = 16, min = 1)
-    val ms = log.read()
-    val foldable = activeIds(ms).dropRight(1)
-    if (foldable.size > threshold) {
-      val seq = ms.size + 1
-      val cid = f"c$seq%06d"
-      val dir = s"$path/postings/append=$cid"
-      val sDir = s"$path/statsparts/append=$cid"
-      log.clearOrphan(dir)
-      log.clearOrphan(sDir)
-      spark.read.option("basePath", s"$path/postings")
-        .parquet(foldable.map(id => s"$path/postings/append=$id"): _*)
-        .select("term", "__id", "__dl", "__tf", "tb")
-        .repartition(col("tb"))
-        .sortWithinPartitions("tb", "term")
-        .write.partitionBy("tb").mode("errorifexists").parquet(dir)
-      // the folded dirs' stats partials fold into the same commit —
-      // activeIds excludes superseded ids from BOTH relations
-      val sAgg = RelRead.read(spark, s"$path#statsparts",
-        foldable.map(id => s"$path/statsparts/append=$id"),
-        basePath = Some(s"$path/statsparts"))
-        .agg(coalesce(sum(col("docs")), lit(0L)),
-          coalesce(sum(col("dl_sum")), lit(0L))).head()
-      Bm25Store.writeStatsPart(spark, sDir, sAgg.getLong(0), sAgg.getLong(1))
-      log.commit(Manifest(Seq(cid), Nil, Nil, Nil, None, foldable), seq)
+      buckets: Option[Int], token: Option[String]): Bm25StoreStats = {
+    log.append(token, fresh = buckets.nonEmpty) { (id, before) =>
+      val tb = buckets.getOrElse(log.statsIn(before)("buckets").toInt)
+      // tokenize the batch text ONCE into the marker-carrying posting
+      // frame: the cached layer is the compact POST-aggregation relation
+      // (caching the per-document token arrays instead measurably doubled
+      // the large-corpus build — columnar array caching is the wrong
+      // shape), and it feeds both the posting write and the statistics
+      // partial with no second pass over document text.
+      val postsAll = Bm25.postingsWithRowMarkers(
+        Bm25.tokenized(df, idCol, textCol))
+      postsAll.persist()
+      try {
+        // a FIRST append with zero postings would leave the index
+        // unreadable (every later read infers schema over only-empty
+        // dirs): refuse the degenerate build BEFORE writing anything,
+        // off the cached frame — a limit-1 cache scan, NOT a footer walk
+        // of the written dir (serial footer opens over the
+        // tasks×buckets file fan-out measured ~14s, dwarfing the write)
+        if (buckets.nonEmpty)
+          require(postsAll.where(col("term").isNotNull).head(1).nonEmpty,
+            s"cannot build a stored index at $path from a corpus with no postings")
+        // cluster the write BY BUCKET before partitionBy: without it every
+        // write task fans out one file per bucket it touches — tasks ×
+        // buckets files per append (51k files for a 200-task, 256-bucket
+        // production append); the batch-sized shuffle caps it at ≤ buckets
+        // files per append, each term-sorted for row-group pruning
+        postsAll.filter(col("term").isNotNull)
+          .withColumn("tb", pmod(hash(col("term")), lit(tb)))
+          .repartition(col("tb"))
+          .sortWithinPartitions("tb", "term")
+          .write.partitionBy("tb").mode("errorifexists")
+          .parquet(log.dir("postings", id))
+        // batch statistics off the cached frame's null-term MARKER rows:
+        // their __tf is the exact row multiplicity, so EVERY batch row
+        // counts toward N and Σdl — zero-token docs, null-text docs, and
+        // a document sent twice in one batch all included, exactly as the
+        // session scorer ([[Bm25.scores]]) counts corpus rows (a
+        // distinct-id count would undercount duplicate rows and break
+        // stored-vs-session N/avgdl parity). The partial rides the
+        // marker commit that publishes the postings.
+        val agg = postsAll.filter(col("term").isNull)
+          .agg(coalesce(sum(col("__tf")), lit(0L)).as("n"),
+            coalesce(sum(col("__dl") * col("__tf")), lit(0L)).as("s"))
+          .head()
+        StoreLog.kvOf(Bm25StoreStats(agg.getLong(0), agg.getLong(1), tb))
+      } finally { postsAll.unpersist(blocking = false); () }
     }
-  }
-
-  /** Unlink posting + statspart dirs a compaction superseded, under the
-    * retention guard ([[ManifestLog.vacuumEligible]]). Locked writer.
-    * Returns the number of posting dirs removed. */
-  def vacuum(): Int = log.withWriteLock {
-    val f = log.fileSystem
-    log.vacuumEligible(_.supersedesDigests).count { id =>
-      f.delete(new org.apache.hadoop.fs.Path(
-        s"$path/statsparts/append=$id"), true)
-      f.delete(new org.apache.hadoop.fs.Path(s"$path/postings/append=$id"), true)
-    }
+    stats
   }
 
   // ---------------- queries ----------------
@@ -252,7 +180,8 @@ final class Bm25Store private (
     * (qid, vid, score_micro, rnk), top-k per qid. */
   def search(queries: DataFrame, k: Int, k1: Double = 1.2,
       b: Double = 0.75, excludeToken: Option[String] = None): DataFrame = {
-    val st = statsOf(excludeToken)
+    val ms = log.visible(excludeToken)
+    val st = statsIn(ms)
     // query vocabulary with its buckets: a query-sized executor job (the
     // bucket function is the executor's hash — never reimplemented on the
     // driver), collected to literals for static pruning
@@ -273,7 +202,7 @@ final class Bm25Store private (
             org.apache.spark.sql.types.IntegerType))))
     val terms = vocab.map(_.getString(0)).toSeq
     val tbs = vocab.map(_.getInt(1)).distinct.toSeq
-    val posts = postingsRelOf(visible(excludeToken))
+    val posts = postings(log.dirs(ms, "postings"))
       .where(col("tb").isin(tbs: _*) && col("term").isin(terms: _*))
       .select("__id", "__dl", "term", "__tf")
     val statsDf = {
@@ -292,18 +221,19 @@ final class Bm25Store private (
     * file scan is partition-pruned to the query terms' buckets with the
     * term predicate pushed. */
   private[graft] def prunedPostingsFor(queries: DataFrame): DataFrame = {
-    val st = stats
+    val ms = log.visible(None)
     val vocab = queries.select(col("term")).distinct()
-      .select(col("term"), pmod(hash(col("term")), lit(st.buckets)).as("tb"))
+      .select(col("term"),
+        pmod(hash(col("term")), lit(statsIn(ms).buckets)).as("tb"))
       .collect()
-    postingsRelOf(visible(None))
+    postings(log.dirs(ms, "postings"))
       .where(col("tb").isin(vocab.map(_.getInt(1)).distinct.toSeq: _*) &&
         col("term").isin(vocab.map(_.getString(0)).toSeq: _*))
       .select("__id", "__dl", "term", "__tf")
   }
 }
 
-object Bm25Store {
+object Bm25Store extends StoreProbe {
 
   /** Build a new index at `path` (must not already hold one) from the
     * corpus — the one time document text is read. `buckets` pins the
@@ -313,37 +243,19 @@ object Bm25Store {
       buckets: Int = 16): Bm25Store = {
     require(buckets >= 1, "need buckets >= 1")
     val idx = new Bm25Store(corpus.sparkSession, path)
-    // the static buckets row first: writeBatch's closing stats read (and
-    // every later open) needs it; docs/Σdl live in per-append partials
-    idx.log.withWriteLock {
-      writeBuckets(corpus.sparkSession, path, buckets)
-      idx.writeBatch(corpus, idCol, textCol, Bm25StoreStats(0L, 0L, buckets),
-        first = true, token = None)
-    }
+    idx.log.locked(idx.writeBatch(corpus, idCol, textCol, Some(buckets), None))
     idx
   }
 
-  /** Whether `path` holds at least one committed index manifest — the
-    * build-if-absent probe (the family-wide [[SubstrIndex.exists]]
-    * contract). */
-  def exists(spark: SparkSession, path: String): Boolean =
-    new ManifestLog(spark, path).read().nonEmpty
+  /** Open a stored index (fails fast on a missing or older layout);
+    * `buckets` comes from its commits' stats. */
+  def open(spark: SparkSession, path: String): Bm25Store =
+    StoreLog.open(new Bm25Store(spark, path))
 
-  /** Open a stored index; `buckets` comes from its `stats/` row. */
-  def open(spark: SparkSession, path: String): Bm25Store = {
-    val idx = new Bm25Store(spark, path)
-    idx.stats // fail fast on a missing/foreign layout
-    idx
-  }
-
-  private def writeBuckets(spark: SparkSession, path: String,
-      buckets: Int): Unit =
-    StatsSidecar.write(spark, path, Seq("buckets" -> buckets.toString))
-
-  private[ext] def writeStatsPart(spark: SparkSession, dir: String,
-      docs: Long, dlSum: Long): Unit = {
-    import spark.implicits._
-    Seq((docs, dlSum)).toDF("docs", "dl_sum")
-      .coalesce(1).write.mode("errorifexists").parquet(dir)
-  }
+  /** The summed (docs, Σdl) partials of `parts` (data or compaction
+    * commits), with their pinned `buckets`. */
+  private def summed(parts: Seq[Manifest]): Bm25StoreStats =
+    Bm25StoreStats(parts.map(_.stats("docs").toLong).sum,
+      parts.map(_.stats("dlSum").toLong).sum,
+      parts.last.stats("buckets").toInt)
 }

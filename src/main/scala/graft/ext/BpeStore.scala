@@ -33,10 +33,11 @@ final case class BpeStoreStats(wordRows: Long, numMerges: Int,
   *  - `model/append=<id>/` (step, left, right, pair_count) +
   *    `alphabet/` (sym, with the same dir id) — the trained merge
   *    table; a [[retrain]] commits a NEW model dir superseding the old
-  *    (manifest `counts`/`supersedes_counts`, the compaction pattern),
+  *    (manifest `rel.model`/`supersedes.model`, the compaction pattern),
   *    so the current model is always the last committed one;
-  *  - `_commits/m<seq>` marker manifests; `appendOnce` tokens make
-  *    ingest-loop count updates exactly-once.
+  *  - `_commits/m<seq>` marker manifests ([[StoreLog]]), each carrying
+  *    the [[BpeStoreStats]]; `appendOnce` tokens make ingest-loop count
+  *    updates exactly-once.
   *
   * Scale shape: appends are one distributed word count over the batch
   * (map-side combined); [[retrain]] runs over the summed DISTINCT-WORD
@@ -48,36 +49,31 @@ final case class BpeStoreStats(wordRows: Long, numMerges: Int,
   * operators; the store itself is new Spark-side machinery.
   */
 final class BpeStore private (
-    private val spark: SparkSession, val path: String) {
+    private val spark: SparkSession, val path: String) extends LoggedStore {
 
-  private val log = new ManifestLog(spark, path)
+  private[ext] val log = new StoreLog(spark, path, Seq(
+    // sum-identical by associativity (the [[NgramLmStore]] rule)
+    StoreRel("words", fold = Some((from, to) => words(from)
+      .groupBy("word").agg(sum(col("cnt")).as("cnt"))
+      .coalesce(1).write.mode("errorifexists").parquet(to))),
+    StoreRel("model", companions = Seq("alphabet"), appended = false)))
 
-  /** Current stored statistics (appends move it; a driver-side
-    * [[StatsSidecar]] parse — zero Spark jobs per read). */
-  def stats: BpeStoreStats = {
-    val kv = StatsSidecar.read(spark, path)
-    BpeStoreStats(kv("word_rows").toLong, kv("num_merges").toInt,
-      kv("merge_budget").toInt)
-  }
+  private def statsOf(kv: Map[String, String]): BpeStoreStats =
+    BpeStoreStats(kv("wordRows").toLong, kv("numMerges").toInt,
+      kv("mergeBudget").toInt)
 
-  private def visible(excludeToken: Option[String]): Seq[Manifest] =
-    log.read().filterNot(m => excludeToken.exists(m.token.contains))
+  /** Current stored statistics (appends and retrains move it; read off
+    * the newest commit — zero Spark jobs per read). */
+  def stats: BpeStoreStats = statsOf(log.stats)
 
-  private def activeWordIds(ms: Seq[Manifest]): Seq[String] = {
-    val sup = ms.flatMap(_.supersedesDigests).toSet
-    ms.flatMap(_.digests).filterNot(sup)
-  }
+  private def words(dirs: Seq[String]): DataFrame =
+    RelRead.read(spark, s"$path#words", dirs, basePath = Some(s"$path/words"))
 
   /** The SUMMED word-count table over every committed append —
     * [[BpeTrain.wordCounts]]'s contract over the stored partials. */
-  def wordCounts(excludeToken: Option[String] = None): DataFrame = {
-    val ids = activeWordIds(visible(excludeToken))
-    require(ids.nonEmpty, s"no committed word-count dirs under $path")
-    RelRead.read(spark, s"$path#words",
-      ids.map(id => s"$path/words/append=$id"),
-      basePath = Some(s"$path/words"))
+  def wordCounts(excludeToken: Option[String] = None): DataFrame =
+    words(log.dirs(log.visible(excludeToken), "words"))
       .groupBy("word").agg(sum(col("cnt")).cast("long").as("cnt"))
-  }
 
   // ---------------- writes ----------------
 
@@ -86,95 +82,34 @@ final class BpeStore private (
     * Serialized with every other writer on the layout
     * ([[ManifestLog.withWriteLock]]). */
   def append(df: DataFrame, textCol: String): BpeStoreStats =
-    log.withWriteLock { writeBatch(df, textCol, first = false, token = None) }
+    log.locked(writeBatch(df, textCol, first = false, token = None))
 
   /** [[append]] with an idempotence token — exactly-once count updates
     * (check-then-commit atomic under the writer lock). */
   def appendOnce(df: DataFrame, textCol: String,
-      token: String): BpeStoreStats = {
-    require(token.nonEmpty && !token.contains("\n"), "token: non-empty, one line")
-    log.withWriteLock {
-      if (log.read().exists(_.token.contains(token))) stats
-      else writeBatch(df, textCol, first = false, token = Some(token))
-    }
-  }
+      token: String): BpeStoreStats =
+    log.once(token)(stats)(writeBatch(df, textCol, first = false, Some(token)))
 
   private def writeBatch(df: DataFrame, textCol: String, first: Boolean,
-      token: Option[String]): BpeStoreStats = {
-    val before = log.read()
-    require(!first || before.isEmpty,
-      s"$path already holds a committed store (create() wants a fresh path)")
-    val seq = before.size + 1
-    val id = f"a$seq%06d"
-    val dir = s"$path/words/append=$id"
-    log.clearOrphan(dir)
-    BpeTrain.wordCounts(df, textCol)
-      .coalesce(1).write.mode("errorifexists").parquet(dir)
-    val added = graft.io.ParquetMeta.rowCount(spark, dir)
-    // a FIRST append with zero words would leave the counts unreadable
-    // (schema inference over only-empty dirs): refuse the degenerate
-    // build with a clear error instead of wedging later
-    require(!first || added > 0,
-      s"cannot build a stored BPE state at $path from a corpus with no words")
-    val prev = if (first) BpeStoreStats(0L, 0, 0) else stats
-    val st = BpeStoreStats(prev.wordRows + added, prev.numMerges,
-      prev.mergeBudget)
-    // FIRST build: stats before the marker commit, so a crash in between
-    // leaves exists()=false (reseedable) instead of a committed layout
-    // open() cannot read; later appends write after the commit so the
-    // advisory `wordRows` can go STALE on a crash (self-heals next
-    // append) but never inflated (the NgramLmStore rule).
-    if (first) BpeStore.writeStats(spark, path, st)
-    log.commit(Manifest(Seq(id), Nil, Nil, Nil, token), seq)
-    if (!first) BpeStore.writeStats(spark, path, st)
-    maybeCompact()
-    st
-  }
-
-  /** Fold word-partial dirs past
-    * `spark.graft.bpestore.compactThreshold` (default 16) — the
-    * [[NgramLmStore]] compaction contract: newest dir never folded,
-    * superseded dirs stay for in-flight readers until [[vacuum]],
-    * sum-identical by associativity. */
-  private def maybeCompact(): Unit = {
-    val threshold = IndexConf.strictInt(spark,
-      "spark.graft.bpestore.compactThreshold", default = 16, min = 1)
-    val ms = log.read()
-    val foldable = activeWordIds(ms).dropRight(1)
-    if (foldable.size > threshold) {
-      val seq = ms.size + 1
-      val cid = f"c$seq%06d"
-      val dir = s"$path/words/append=$cid"
-      log.clearOrphan(dir)
-      RelRead.read(spark, s"$path#words",
-        foldable.map(id => s"$path/words/append=$id"),
-        basePath = Some(s"$path/words"))
-        .groupBy("word").agg(sum(col("cnt")).as("cnt"))
+      token: Option[String]): BpeStoreStats = statsOf(
+    log.append(token, fresh = first) { (id, before) =>
+      val dir = log.dir("words", id)
+      BpeTrain.wordCounts(df, textCol)
         .coalesce(1).write.mode("errorifexists").parquet(dir)
-      log.commit(Manifest(Seq(cid), Nil, Nil, Nil, None, foldable), seq)
-    }
-  }
-
-  /** Unlink word dirs a compaction superseded and model dirs a retrain
-    * superseded, under the retention guard and the writer lock. */
-  def vacuum(): Int = log.withWriteLock {
-    val f = log.fileSystem
-    val words = log.vacuumEligible(_.supersedesDigests).count { id =>
-      f.delete(new org.apache.hadoop.fs.Path(s"$path/words/append=$id"), true)
-    }
-    val models = log.vacuumEligible(_.supersedesCounts).count { id =>
-      f.delete(new org.apache.hadoop.fs.Path(s"$path/model/append=$id"), true) |
-      f.delete(new org.apache.hadoop.fs.Path(s"$path/alphabet/append=$id"), true)
-    }
-    words + models
-  }
+      val added = graft.io.ParquetMeta.rowCount(spark, dir)
+      // a FIRST append with zero words would leave the counts unreadable
+      // (schema inference over only-empty dirs): refuse the degenerate
+      // build with a clear error instead of wedging later
+      require(!first || added > 0,
+        s"cannot build a stored BPE state at $path from a corpus with no words")
+      val prev = if (first) BpeStoreStats(0L, 0, 0) else statsOf(log.statsIn(before))
+      StoreLog.kvOf(prev.copy(wordRows = prev.wordRows + added))
+    }.stats)
 
   // ---------------- the model ----------------
 
   private def currentModelId: String = {
-    val ms = log.read()
-    val sup = ms.flatMap(_.supersedesCounts).toSet
-    val ids = ms.flatMap(_.counts).filterNot(sup)
+    val ids = log.activeIds(log.visible(None), "model")
     require(ids.nonEmpty, s"no committed model under $path")
     ids.last
   }
@@ -185,11 +120,7 @@ final class BpeStore private (
     * ([[BpeStore.create]] itself on rerun, the config `bpe_tokenize`
     * stage) recover by retraining from the committed counts instead of
     * failing on a wedged layout. */
-  def hasModel: Boolean = {
-    val ms = log.read()
-    val sup = ms.flatMap(_.supersedesCounts).toSet
-    ms.flatMap(_.counts).filterNot(sup).nonEmpty
-  }
+  def hasModel: Boolean = log.activeIds(log.visible(None), "model").nonEmpty
 
   /** The stored CURRENT model — merge table + alphabet, no training. */
   def model: BpeTrain.Model = {
@@ -210,7 +141,7 @@ final class BpeStore private (
     * model (superseding the old one, which [[vacuum]] may later
     * unlink). */
   def retrain(numMerges: Int): BpeTrain.Model =
-    log.withWriteLock { retrainLocked(numMerges) }
+    log.locked(retrainLocked(numMerges))
 
   /** [[retrain]]'s body with the writer lock already held (NOT
     * reentrant — [[BpeStore.create]] runs seed + retrain in one lock). */
@@ -222,22 +153,16 @@ final class BpeStore private (
 
   private def writeModel(m: BpeTrain.Model, numMerges: Int): Unit = {
     import spark.implicits._
-    val ms = log.read()
-    val seq = ms.size + 1
-    val id = f"a$seq%06d"
-    val mdir = s"$path/model/append=$id"
-    val adir = s"$path/alphabet/append=$id"
-    log.clearOrphan(mdir); log.clearOrphan(adir)
+    val (ms, seq, id) = log.begin('a', Seq("model"))
     m.merges.map(g => (g.step, g.left, g.right, g.pairCount))
       .toDF("step", "left", "right", "pair_count")
-      .coalesce(1).write.mode("errorifexists").parquet(mdir)
+      .coalesce(1).write.mode("errorifexists").parquet(log.dir("model", id))
     m.alphabet.toDF("sym")
-      .coalesce(1).write.mode("errorifexists").parquet(adir)
-    val sup = ms.flatMap(_.supersedesCounts).toSet
-    val prevModels = ms.flatMap(_.counts).filterNot(sup)
-    log.commit(Manifest(Nil, Nil, Seq(id), prevModels, None), seq)
-    BpeStore.writeStats(spark, path,
-      BpeStoreStats(stats.wordRows, m.merges.size, numMerges))
+      .coalesce(1).write.mode("errorifexists").parquet(log.dir("alphabet", id))
+    log.manifests.commit(Manifest(rels = Map("model" -> Seq(id)),
+      supersedes = Map("model" -> log.activeIds(ms, "model")),
+      stats = StoreLog.kvOf(statsOf(log.statsIn(ms))
+        .copy(numMerges = m.merges.size, mergeBudget = numMerges))), seq)
   }
 
   // ---------------- inference ----------------
@@ -256,7 +181,7 @@ final class BpeStore private (
     df.select(col(idCol), tokenizeColumn(textCol).as("subtokens"))
 }
 
-object BpeStore {
+object BpeStore extends StoreProbe {
 
   /** Build a new store at `path` (must be fresh): one word count over
     * the history corpus — the one time history text is read — then an
@@ -271,7 +196,7 @@ object BpeStore {
   def create(history: DataFrame, textCol: String, path: String,
       numMerges: Int): BpeStore = {
     val store = new BpeStore(history.sparkSession, path)
-    store.log.withWriteLock {
+    store.log.locked {
       if (BpeStore.exists(history.sparkSession, path) && !store.hasModel)
         store.retrainLocked(numMerges)
       else {
@@ -282,23 +207,8 @@ object BpeStore {
     store
   }
 
-  /** Whether `path` holds at least one committed manifest — the
-    * build-if-absent probe of config-driven stages
-    * ([[graft.plan.CurationConfig]]). */
-  def exists(spark: SparkSession, path: String): Boolean =
-    new ManifestLog(spark, path).read().nonEmpty
-
-  /** Open a stored vocabulary (+ counts). */
-  def open(spark: SparkSession, path: String): BpeStore = {
-    val store = new BpeStore(spark, path)
-    store.stats // fail fast on a missing/foreign layout
-    store
-  }
-
-  private def writeStats(spark: SparkSession, path: String,
-      st: BpeStoreStats): Unit =
-    StatsSidecar.write(spark, path, Seq(
-      "word_rows" -> st.wordRows.toString,
-      "num_merges" -> st.numMerges.toString,
-      "merge_budget" -> st.mergeBudget.toString))
+  /** Open a stored vocabulary (+ counts); fails fast on a missing or
+    * older layout. */
+  def open(spark: SparkSession, path: String): BpeStore =
+    StoreLog.open(new BpeStore(spark, path))
 }

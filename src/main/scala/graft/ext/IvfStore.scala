@@ -78,8 +78,9 @@ final case class PermuteAdvisory(generation: Int, subspaces: Int,
   *  - `drift/append=<id>/`   (cell, n) — each write's cell histogram
   *    (≤ k tiny rows): [[refitAdvised]]'s input, the cheap statistic that
   *    flags distribution drift away from the frozen centroids;
-  *  - `_commits/m<seq>`      marker manifests (crashed appends invisible);
-  *  - `stats/`               one [[IvfStoreStats]] row (advisory).
+  *  - `_commits/m<seq>`      marker manifests ([[StoreLog]]; crashed
+  *    appends invisible), each data commit carrying the
+  *    [[IvfStoreStats]].
   *
   * == Query shape ==
   * [[search]] takes caller-supplied query vectors (the production API —
@@ -104,27 +105,30 @@ final case class PermuteAdvisory(generation: Int, subspaces: Int,
   * exactly as it serves the two text modalities.
   */
 final class IvfStore private (private val spark: SparkSession,
-    val path: String) extends IngestIndex {
+    val path: String) extends IngestIndex with LoggedStore {
 
-  /** Current stored statistics (refits move it; a driver-side
-    * [[StatsSidecar]] parse — zero Spark jobs per read). */
-  def stats: IvfStoreStats = {
-    val kv = StatsSidecar.read(spark, path)
+  /** `assigned/` with its per-id tiers; superseded GENERATIONS' centroid
+    * dirs are kept forever (k tiny rows each, and a reader inside the
+    * retention window may still resolve them through its old manifest
+    * snapshot), so vacuum never touches them. */
+  private[ext] val log = new StoreLog(spark, path, Seq(StoreRel("assigned",
+    companions = Seq("vidmap", "packed", "drift", "pqcodes"),
+    fold = Some((from, to) => compactInto(from, to)))))
+
+  private def statsOf(kv: Map[String, String]): IvfStoreStats =
     IvfStoreStats(kv("cells").toInt, kv("dims").toInt,
-      kv("vectors").toLong, kv("gate_tau").toDouble,
-      kv("gate_nprobe").toInt, kv("packed_scale").toInt)
-  }
+      kv("vectors").toLong, kv("gateTau").toDouble,
+      kv("gateNprobe").toInt, kv("packedScale").toInt)
 
-  private val log = new ManifestLog(spark, path)
+  /** Current stored statistics (appends and refits move it; read off the
+    * newest commit — zero Spark jobs per read). */
+  def stats: IvfStoreStats = statsOf(log.stats)
 
   /** Which exact-refine fetch the LAST PQ-tier gate used — `(distinct
     * shortlist ids, "inline" | "semi-join")`: the driver-size guard's
     * observable (evidence/specs read it; advisory-style, never input
     * to a decision). */
   @volatile var lastShortlistFetchPath: Option[(Long, String)] = None
-
-  private def visible(excludeToken: Option[String]): Seq[Manifest] =
-    log.read().filterNot(m => excludeToken.exists(m.token.contains))
 
   // ---------------- centroid generations ----------------
 
@@ -153,7 +157,7 @@ final class IvfStore private (private val spark: SparkSession,
     })
 
   /** The CURRENT generation's centroids (k driver-sized rows). */
-  def centroids: Seq[(Int, Array[Double])] = centroidsFor(genOf(log.read()))
+  def centroids: Seq[(Int, Array[Double])] = centroidsFor(genOf(log.visible(None)))
 
   // ---------------- PQ codebook generations (optional tier) ----------------
 
@@ -173,7 +177,7 @@ final class IvfStore private (private val spark: SparkSession,
   private[ext] def pqBookFor(g: Int): Option[PqAnn.Codebook] =
     pqBookCache.getOrElseUpdate(g, {
       val dir = pqBookDir(g)
-      if (!log.fileSystem.exists(new org.apache.hadoop.fs.Path(dir))) None
+      if (!log.manifests.fileSystem.exists(new org.apache.hadoop.fs.Path(dir))) None
       else {
         val rows = spark.read.parquet(dir).collect()
           .map(r => (r.getAs[Int]("j"), r.getAs[Int]("cell"),
@@ -224,7 +228,7 @@ final class IvfStore private (private val spark: SparkSession,
   /** Whether the CURRENT generation carries the PQ tier — the
     * config-surface probe ([[graft.plan.CurationConfig.SemanticGate]]
     * validates a declared `tier: "pq"` at open, not at first query). */
-  def hasPqTier: Boolean = pqBookFor(genOf(log.read())).nonEmpty
+  def hasPqTier: Boolean = pqBookFor(genOf(log.visible(None))).nonEmpty
 
   private[ext] def varspecDir(g: Int): String =
     if (g == 1) s"$path/varspec" else s"$path/varspec_g$g"
@@ -247,12 +251,12 @@ final class IvfStore private (private val spark: SparkSession,
       thresholdMicro: Long = 2000000L): PermuteAdvisory = {
     require(thresholdMicro >= 1000000L,
       s"thresholdMicro must be >= 1000000 (1.0x), got $thresholdMicro")
-    val g = genOf(log.read())
+    val g = genOf(log.visible(None))
     val book = pqBookFor(g).getOrElse(throw new IllegalArgumentException(
       s"no PQ tier under $path (layout created with pqM = 0) — " +
         "permute advice is about the tier's subspace allocation"))
     val dir = varspecDir(g)
-    require(log.fileSystem.exists(new org.apache.hadoop.fs.Path(dir)),
+    require(log.manifests.fileSystem.exists(new org.apache.hadoop.fs.Path(dir)),
       s"no stored variance spectrum for generation $g under $path " +
         "(layout predates varspec) — refit() records one")
     val rows = spark.read.parquet(dir).collect()
@@ -316,27 +320,30 @@ final class IvfStore private (private val spark: SparkSession,
     })
 
   /** Active assigned dir ids: all published, minus any a later compaction
-    * superseded. */
-  private def activeIds(ms: Seq[Manifest]): Seq[String] = {
-    val sup = ms.flatMap(_.supersedesDigests).toSet
-    ms.flatMap(_.digests).filterNot(sup)
+    * or refit superseded — the ids of every per-id tier too. */
+  private def activeIds(ms: Seq[Manifest]): Seq[String] =
+    log.activeIds(ms, "assigned")
+
+  /** A cell-partitioned relation (`assigned/` or its `packed/`/`pqcodes/`
+    * tier) over the active dir ids. basePath anchors partition discovery
+    * when several append roots are listed (each holding cell=<c> subdirs);
+    * only the manifest-listed dirs are read, so the replay view is
+    * unaffected. */
+  private def cellRelOf(ms: Seq[Manifest], rel: String): DataFrame = {
+    val ids = activeIds(ms)
+    require(ids.nonEmpty, s"no committed $rel dirs under $path")
+    spark.read.option("basePath", s"$path/$rel")
+      .parquet(ids.map(log.dir(rel, _)): _*)
   }
 
-  private def assignedRelOf(ms: Seq[Manifest]): DataFrame = {
-    val ids = activeIds(ms)
-    require(ids.nonEmpty, s"no committed assigned dirs under $path")
-    // basePath anchors partition discovery when several append roots are
-    // listed (each holding cell=<c> subdirs); only the manifest-listed
-    // dirs are read, so the replay view is unaffected
-    spark.read.option("basePath", s"$path/assigned")
-      .parquet(ids.map(id => s"$path/assigned/append=$id"): _*)
-  }
+  private def assignedRelOf(ms: Seq[Manifest]): DataFrame =
+    cellRelOf(ms, "assigned")
 
   /** The vid→cell sidecar over the same active dir ids. */
   private def vidmapRelOf(ms: Seq[Manifest]): DataFrame = {
     val ids = activeIds(ms)
     require(ids.nonEmpty, s"no committed vidmap dirs under $path")
-    spark.read.parquet(ids.map(id => s"$path/vidmap/append=$id"): _*)
+    spark.read.parquet(ids.map(log.dir("vidmap", _)): _*)
   }
 
   /** Nearest STORED cell for an embedding column — the frozen-centroid
@@ -352,77 +359,52 @@ final class IvfStore private (private val spark: SparkSession,
     * marker commit. Serialized with every other writer on the layout
     * ([[ManifestLog.withWriteLock]]). */
   def append(df: DataFrame, idCol: String, embCol: String): IvfStoreStats =
-    log.withWriteLock { writeBatch(df, idCol, embCol, token = None) }
+    log.locked(writeBatch(df, idCol, embCol, token = None))
 
   /** [[append]] with an idempotence token: a committed manifest carrying
     * `token` makes the call a no-op (micro-batch replay safe;
     * check-then-commit atomic under the writer lock). */
   def appendOnce(df: DataFrame, idCol: String, embCol: String,
-      token: String): IvfStoreStats = {
-    require(token.nonEmpty && !token.contains("\n"), "token: non-empty, one line")
-    log.withWriteLock {
-      if (log.read().exists(_.token.contains(token))) stats
-      else writeBatch(df, idCol, embCol, token = Some(token))
-    }
-  }
+      token: String): IvfStoreStats =
+    log.once(token)(stats)(writeBatch(df, idCol, embCol, Some(token)))
 
   private[ext] def writeBatch(df: DataFrame, idCol: String, embCol: String,
-      token: Option[String]): IvfStoreStats = {
-    val before = log.read()
-    val seq = before.size + 1
-    val id = f"a$seq%06d"
-    // a store instance only exists for a committed layout (create commits
-    // the first append before returning), so prev stats always exist
-    val prev = stats
-    val g = genOf(before)
-    val cs = centroidsFor(g) // the CURRENT generation's frozen matrix
-    val added = writeAssigned(
-      df.select(col(idCol).as("vid"), col(embCol).as("emb"),
-        VectorFunctions.l2Norm(col(embCol)).as("nrm"),
-        cellOf(col(embCol), cs).as("cell")), id, prev.packedScale,
-      // frozen codebooks — append never retrains (FAISS add); a residual
-      // tier subtracts the SAME frozen generation's centroids, a
-      // permuted tier encodes under the SAME frozen permutation
-      pqBookFor(g),
-      if (pqBookFor(g).nonEmpty && pqResidualFor(g)) Some(cs) else None,
-      if (pqBookFor(g).nonEmpty) pqPermFor(g) else None)
-    log.commit(Manifest(Seq(id), Nil, Nil, Nil, token), seq)
-    // INVARIANT: stats/ is ADVISORY — `prev` was read before the commit
-    // and the refreshed row lands after it, so a crash in this window
-    // leaves `vectors` one batch stale until the next [[refit]] (which
-    // recounts from parquet footers). Correctness never depends on it:
-    // queries/gates plan from the manifest + the relation dirs, never
-    // this row. Do not make the count load-bearing without moving this
-    // write under the commit.
-    val st = IvfStoreStats(prev.cells, prev.dims, prev.vectors + added,
-      prev.gateTau, prev.gateNprobe, prev.packedScale)
-    IvfStore.writeStats(spark, path, st)
-    maybeCompact()
-    st
-  }
+      token: Option[String]): IvfStoreStats = statsOf(
+    log.append(token) { (id, before) =>
+      // a store instance only exists for a committed layout (create
+      // commits the first append before returning), so prev stats exist
+      val prev = statsOf(log.statsIn(before))
+      val g = genOf(before)
+      val cs = centroidsFor(g) // the CURRENT generation's frozen matrix
+      val added = writeAssigned(
+        df.select(col(idCol).as("vid"), col(embCol).as("emb"),
+          VectorFunctions.l2Norm(col(embCol)).as("nrm"),
+          cellOf(col(embCol), cs).as("cell")), id, prev.packedScale,
+        // frozen codebooks — append never retrains (FAISS add); a residual
+        // tier subtracts the SAME frozen generation's centroids, a
+        // permuted tier encodes under the SAME frozen permutation
+        pqBookFor(g),
+        if (pqBookFor(g).nonEmpty && pqResidualFor(g)) Some(cs) else None,
+        if (pqBookFor(g).nonEmpty) pqPermFor(g) else None)
+      StoreLog.kvOf(prev.copy(vectors = prev.vectors + added))
+    }.stats)
 
   /** Write one (vid, emb, nrm, cell) relation dir `append=<id>`:
     * cell-partitioned vid-sorted vector files plus the vidmap sidecar and
     * the SQ8 packed tier (both derived from a column-pruned read-back of
     * the written files — the assignment kernel runs once, not thrice).
-    * Any same-named UNCOMMITTED dir a crashed predecessor left is cleared
-    * first (invisible by construction), so a replayed micro-batch can't
-    * wedge on `errorifexists`. Returns the row count, summed from parquet
-    * footers (no count job). */
+    * The caller's commit start ([[StoreLog.begin]]) has cleared any
+    * same-named UNCOMMITTED dir a crashed predecessor left. Returns the
+    * row count, summed from parquet footers (no count job). */
   private def writeAssigned(rows: DataFrame, id: String, scale: Int,
       book: Option[PqAnn.Codebook],
       resCents: Option[Seq[(Int, Array[Double])]] = None,
       perm: Option[Array[Int]] = None): Long = {
-    val aDir = s"$path/assigned/append=$id"
-    val vDir = s"$path/vidmap/append=$id"
-    val pDir = s"$path/packed/append=$id"
-    val dDir = s"$path/drift/append=$id"
-    val qDir = s"$path/pqcodes/append=$id"
-    log.clearOrphan(aDir)
-    log.clearOrphan(vDir)
-    log.clearOrphan(pDir)
-    log.clearOrphan(dDir)
-    book.foreach(_ => log.clearOrphan(qDir))
+    val aDir = log.dir("assigned", id)
+    val vDir = log.dir("vidmap", id)
+    val pDir = log.dir("packed", id)
+    val dDir = log.dir("drift", id)
+    val qDir = log.dir("pqcodes", id)
     rows.sortWithinPartitions("cell", "vid")
       .write.partitionBy("cell").mode("errorifexists").parquet(aDir)
     val added = graft.io.ParquetMeta.rowCount(spark, aDir)
@@ -496,64 +478,30 @@ final class IvfStore private (private val spark: SparkSession,
     added
   }
 
-  /** Rewrite the assigned dirs (and their vidmap sidecars) into one
-    * cell-partitioned relation once the active dir count passes
-    * `spark.graft.ivfstore.compactThreshold` (default 16) — bounds the
-    * per-search file listing AND merges the per-cell small files that
-    * per-append partitioning accumulates. The newest dir is never folded
-    * (the token-replay window, as everywhere); superseded dirs stay on
-    * disk for in-flight readers until [[vacuum]]. Row-identical: a
-    * straight union rewrite, no re-assignment.
-    */
-  private def maybeCompact(): Unit = {
-    val threshold = IndexConf.strictInt(spark,
-      "spark.graft.ivfstore.compactThreshold", default = 16, min = 1)
-    val ms = log.read()
-    val foldable = activeIds(ms).dropRight(1)
-    if (foldable.size > threshold) {
-      val seq = ms.size + 1
-      val cid = f"c$seq%06d"
-      // cluster the fold by cell: appends stay map-only (latency), but
-      // the compaction's whole purpose is merging the per-cell small
-      // files they accumulate — an unclustered rewrite would re-emit
-      // one file per cell per read task (the dq127 fan-out finding);
-      // clustered, the fold leaves ONE file per cell
-      val g = genOf(ms)
-      writeAssigned(
-        spark.read.option("basePath", s"$path/assigned")
-          .parquet(foldable.map(id => s"$path/assigned/append=$id"): _*)
-          .select("vid", "emb", "nrm", "cell")
-          .repartition(col("cell")), cid, stats.packedScale,
-        // re-encode: frozen book (+ frozen centroids when residual,
-        // frozen permutation when permuted), bit-identical codes
-        pqBookFor(g),
-        if (pqBookFor(g).nonEmpty && pqResidualFor(g))
-          Some(centroidsFor(g)) else None,
-        if (pqBookFor(g).nonEmpty) pqPermFor(g) else None)
-      log.commit(Manifest(Seq(cid), Nil, Nil, Nil, None, foldable), seq)
-    }
-  }
-
-  /** Unlink assigned+vidmap dirs a compaction superseded, under the
-    * retention guard ([[ManifestLog.vacuumEligible]]): only dirs whose
-    * superseding commit is at least `spark.graft.index.vacuumRetentionMs`
-    * old (default 1h) are touched, so a reader that planned its scan just
-    * before the compaction can't race an eager vacuum. Runs under the
-    * writer lock. Returns the number of dirs removed. */
-  def vacuum(): Int = log.withWriteLock {
-    val f = log.fileSystem
-    log.vacuumEligible(_.supersedesDigests).count { id =>
-      val a = f.delete(
-        new org.apache.hadoop.fs.Path(s"$path/assigned/append=$id"), true)
-      f.delete(new org.apache.hadoop.fs.Path(s"$path/vidmap/append=$id"), true)
-      f.delete(new org.apache.hadoop.fs.Path(s"$path/packed/append=$id"), true)
-      f.delete(new org.apache.hadoop.fs.Path(s"$path/drift/append=$id"), true)
-      f.delete(new org.apache.hadoop.fs.Path(s"$path/pqcodes/append=$id"), true)
-      a
-      // superseded GENERATIONS' centroid dirs are kept forever: k tiny
-      // rows each, and a reader inside the retention window may still
-      // resolve them through its old manifest snapshot
-    }
+  /** The compaction fold: rewrite the assigned dirs `from` (and their
+    * per-id tiers) into one cell-partitioned relation at `to` — merges the
+    * per-cell small files that per-append partitioning accumulates.
+    * Row-identical: a straight union rewrite, no re-assignment. */
+  private def compactInto(from: Seq[String], to: String): Unit = {
+    val g = genOf(log.visible(None))
+    // cluster the fold by cell: appends stay map-only (latency), but
+    // the compaction's whole purpose is merging the per-cell small
+    // files they accumulate — an unclustered rewrite would re-emit
+    // one file per cell per read task (the dq127 fan-out finding);
+    // clustered, the fold leaves ONE file per cell
+    writeAssigned(
+      spark.read.option("basePath", s"$path/assigned").parquet(from: _*)
+        .select("vid", "emb", "nrm", "cell")
+        .repartition(col("cell")),
+      to.substring(to.lastIndexOf("append=") + "append=".length),
+      stats.packedScale,
+      // re-encode: frozen book (+ frozen centroids when residual,
+      // frozen permutation when permuted), bit-identical codes
+      pqBookFor(g),
+      if (pqBookFor(g).nonEmpty && pqResidualFor(g))
+        Some(centroidsFor(g)) else None,
+      if (pqBookFor(g).nonEmpty) pqPermFor(g) else None)
+    ()
   }
 
   // ---------------- drift + refit ----------------
@@ -594,17 +542,17 @@ final class IvfStore private (private val spark: SparkSession,
     * create would, so the refit-equals-scratch contract extends to the
     * flip. Refused by name on a layout without the PQ tier. */
   def refit(k: Int, iters: Int = 2,
-      enablePermute: Boolean = false): IvfStoreStats = log.withWriteLock {
-    val ms = log.read()
+      enablePermute: Boolean = false): IvfStoreStats = log.locked {
+    val (ms, seq, id) = log.begin('r')
     require(!enablePermute || pqBookFor(genOf(ms)).nonEmpty,
       s"refit(enablePermute): no PQ tier under $path (pqM = 0) — the " +
         "permutation is a property of the tier's subspace allocation")
     val ids = activeIds(ms)
     require(ids.nonEmpty, s"no committed assigned dirs under $path")
     val active = ids.toSet
-    val carried = ms.filter(_.digests.exists(active)).flatMap(_.token)
+    val carried = ms.filter(_.rel("assigned").exists(active)).flatMap(_.token)
       .lastOption
-    val prev = stats
+    val prev = statsOf(log.statsIn(ms))
     val g = genOf(ms) + 1
     val rel = spark.read.option("basePath", s"$path/assigned")
       .parquet(ids.map(id => s"$path/assigned/append=$id"): _*)
@@ -614,7 +562,7 @@ final class IvfStore private (private val spark: SparkSession,
       import spark.implicits._
       // a crashed refit's uncommitted generation dir must not wedge the
       // retry (same g — computed from COMMITTED generations only)
-      log.clearOrphan(centroidDir(g))
+      log.manifests.clearOrphan(centroidDir(g))
       idx.centroids.map { case (cell, c) => (cell, c.toSeq) }
         .toDF("cell", "c")
         .coalesce(1).write.mode("errorifexists").parquet(centroidDir(g))
@@ -645,7 +593,7 @@ final class IvfStore private (private val spark: SparkSession,
         // refreshed variance spectrum is persisted for every PQ refit
         // (permuteAdvisory reads the current generation's)
         val sums = PqAnn.varianceMicroSums(trainRel, "emb")
-        log.clearOrphan(varspecDir(g))
+        log.manifests.clearOrphan(varspecDir(g))
         IvfStore.varspecDf(spark, sums._1, sums._2, sums._3)
           .write.mode("errorifexists").parquet(varspecDir(g))
         newPerm =
@@ -656,7 +604,7 @@ final class IvfStore private (private val spark: SparkSession,
         val fitRel = newPerm.fold(trainRel)(p => trainRel.select(
           col("vid"), PqAnn.applyPerm(col("emb"), p).as("emb")))
         val b = PqAnn.fit(fitRel, "vid", "emb", ob.dims, ob.m, k0, iters)
-        log.clearOrphan(pqBookDir(g))
+        log.manifests.clearOrphan(pqBookDir(g))
         IvfStore.bookDf(spark, b, k0, wasResidual, newPerm)
           .write.mode("errorifexists").parquet(pqBookDir(g))
         pqBookCache.put(g, Some(b))
@@ -664,18 +612,16 @@ final class IvfStore private (private val spark: SparkSession,
         pqPermCache.put(g, newPerm)
         b
       }
-      val seq = ms.size + 1
-      val id = f"r$seq%06d"
       val n = writeAssigned(
         idx.assigned.select("vid", "emb", "nrm", "cell")
           .repartition(col("cell")), id, prev.packedScale, newBook,
         if (wasResidual) Some(idx.centroids) else None, newPerm)
-      log.commit(Manifest(Seq(id), Nil, Nil, Nil, carried,
-        supersedesDigests = ids, generation = Some(g)), seq)
       val st = IvfStoreStats(idx.centroids.size,
         idx.centroids.head._2.length, n, prev.gateTau, prev.gateNprobe,
         prev.packedScale)
-      IvfStore.writeStats(spark, path, st)
+      log.manifests.commit(Manifest(rels = Map("assigned" -> Seq(id)),
+        supersedes = Map("assigned" -> ids), stats = StoreLog.kvOf(st),
+        token = carried, generation = Some(g)), seq)
       centroidCache.put(g, idx.centroids)
       st
     } finally idx.release()
@@ -683,7 +629,7 @@ final class IvfStore private (private val spark: SparkSession,
 
   /** The active dir ids whose drift sidecar EXISTS on disk, in DATA-AGE
     * order: folds first (a compaction `c…` or refit `r…` always holds
-    * strictly older data than every surviving append — [[maybeCompact]]
+    * strictly older data than every surviving append — compaction
     * excludes the then-newest append and [[refit]] supersedes everything,
     * so at most one fold is ever active), then appends by sequence. Plain
     * id sort is wrong once folds enter the mix (`c…`/`r…` sort after all
@@ -694,8 +640,8 @@ final class IvfStore private (private val spark: SparkSession,
     * degrades to whatever statistics exist instead of throwing a
     * path-not-found from the read. */
   private def driftIds(): Seq[String] = {
-    val f = log.fileSystem
-    activeIds(log.read())
+    val f = log.manifests.fileSystem
+    activeIds(log.visible(None))
       .filter(id =>
         f.exists(new org.apache.hadoop.fs.Path(s"$path/drift/append=$id")))
       .sortBy(id => (if (id.startsWith("a")) 1 else 0, id))
@@ -781,7 +727,7 @@ final class IvfStore private (private val spark: SparkSession,
     * absent. Refuses (naming the gap) when some active dir predates
     * drift sidecars: a partial sum would silently understate occupancy. */
   def cellOccupancy(): Seq[(Int, Long)] = {
-    val active = activeIds(log.read())
+    val active = activeIds(log.visible(None))
     val withDrift = driftIds()
     val missing = active.toSet -- withDrift.toSet
     require(missing.isEmpty, s"cell occupancy unavailable under $path: " +
@@ -828,7 +774,7 @@ final class IvfStore private (private val spark: SparkSession,
     val rec = (1 to k).find(n =>
       micro(expectedMass(n)) >= targetMassMicro).getOrElse(k)
     OccupancyAdvisory(
-      generation = genOf(log.read()),
+      generation = genOf(log.visible(None)),
       cells = k,
       vectors = total,
       maxCellShareMicro = micro(shares.maxOption.getOrElse(0.0)),
@@ -904,7 +850,7 @@ final class IvfStore private (private val spark: SparkSession,
     * shares the candidate scan's scale class instead of a full pass. */
   private[graft] def lookupPlan(queryIds: Seq[Long],
       excludeToken: Option[String]): DataFrame = {
-    val ms = visible(excludeToken)
+    val ms = log.visible(excludeToken)
     val homeCells = vidmapRelOf(ms)
       .filter(col("vid").isin(queryIds: _*))
       .select("cell").distinct()
@@ -929,7 +875,7 @@ final class IvfStore private (private val spark: SparkSession,
     import spark.implicits._
     // ONE manifest snapshot pins both the generation's centroids and the
     // relation dirs — consistent across a concurrent refit cut-over
-    val ms = visible(excludeToken)
+    val ms = log.visible(excludeToken)
     val cs = centroidsFor(genOf(ms))
     val probes = qRows.flatMap { case (qid, emb, nrm) =>
       nearestCellsDriver(emb, nprobe, cs).map(c => (qid, emb, nrm, c))
@@ -946,14 +892,6 @@ final class IvfStore private (private val spark: SparkSession,
         (VectorFunctions.dot(col("emb"), col("qemb")) /
           (col("nrm") * col("qnrm"))).as("sim"))
     CandidateTopK.topPerQuery(scored, "sim", topK).select("qid", "vid", "sim")
-  }
-
-  /** The stored SQ8 relation over the active dir ids. */
-  private def packedRelOf(ms: Seq[Manifest]): DataFrame = {
-    val ids = activeIds(ms)
-    require(ids.nonEmpty, s"no committed packed dirs under $path")
-    spark.read.option("basePath", s"$path/packed")
-      .parquet(ids.map(id => s"$path/packed/append=$id"): _*)
   }
 
   /** [[search]] on the STORED SQ8 tier: candidates come exclusively from
@@ -985,7 +923,7 @@ final class IvfStore private (private val spark: SparkSession,
       topK: Int, nprobe: Int, excludeToken: Option[String]): DataFrame = {
     import spark.implicits._
     val scale = stats.packedScale
-    val ms = visible(excludeToken)
+    val ms = log.visible(excludeToken)
     val cs = centroidsFor(genOf(ms))
     val probes = qRows.flatMap { case (qid, emb, nrm) =>
       nearestCellsDriver(emb, nprobe, cs).map(c => (qid, emb, nrm, c))
@@ -1000,7 +938,7 @@ final class IvfStore private (private val spark: SparkSession,
         QuantizedAnn.quantizePacked(
           IvfIndex.unit(col("qemb"), col("qnrm")), scale).as("qpemb"),
         col("probe"))
-    val scored = packedRelOf(ms)
+    val scored = cellRelOf(ms, "packed")
       .where(col("cell").isin(probes.map(_._4).distinct: _*))
       .join(broadcast(probeDf),
         col("cell") === col("probe") && col("vid") =!= col("qid"))
@@ -1008,14 +946,6 @@ final class IvfStore private (private val spark: SparkSession,
         graft.functions.ByteDot(col("qpemb"), col("pemb")).as("score"))
     CandidateTopK.topPerQuery(scored, "score", topK)
       .select("qid", "vid", "score")
-  }
-
-  /** The stored PQ code relation over the active dir ids. */
-  private def pqcodesRelOf(ms: Seq[Manifest]): DataFrame = {
-    val ids = activeIds(ms)
-    require(ids.nonEmpty, s"no committed pqcodes dirs under $path")
-    spark.read.option("basePath", s"$path/pqcodes")
-      .parquet(ids.map(id => s"$path/pqcodes/append=$id"): _*)
   }
 
   /** [[search]] on the STORED PQ tier — IVF-PQ from disk: probe cells
@@ -1030,7 +960,7 @@ final class IvfStore private (private val spark: SparkSession,
     * qid. Refuses a layout created without the tier (pqM = 0). */
   def searchPq(queries: Seq[(Long, Array[Float])], topK: Int,
       nprobe: Int, excludeToken: Option[String] = None): DataFrame =
-    searchPqMs(visible(excludeToken), queries, topK, nprobe)
+    searchPqMs(log.visible(excludeToken), queries, topK, nprobe)
 
   /** [[searchPq]] against an ALREADY-RESOLVED manifest snapshot — the
     * shared body, so [[searchPqRerank]]'s two stages read ONE snapshot
@@ -1051,7 +981,7 @@ final class IvfStore private (private val spark: SparkSession,
     val probes = queries.map { case (qid, emb) =>
       qid -> nearestCellsDriver(emb.toSeq, nprobe, cs)
     }.toMap
-    val rel = pqcodesRelOf(ms)
+    val rel = cellRelOf(ms, "pqcodes")
       .where(col("cell").isin(probes.values.flatten.toSeq.distinct: _*))
     // a residual-tier generation scores q·centroid(cell) + the residual
     // table fold (the codes ARE residual codes — the add-back term is
@@ -1095,7 +1025,7 @@ final class IvfStore private (private val spark: SparkSession,
     import spark.implicits._
     require(shortlist >= topK,
       s"searchPqRerank: shortlist ($shortlist) must be >= topK ($topK)")
-    val ms = visible(excludeToken)
+    val ms = log.visible(excludeToken)
     val cs = centroidsFor(genOf(ms))
     val short = searchPqMs(ms, queries, shortlist, nprobe)
       .select("qid", "vid").as[(Long, Long)].collect()
@@ -1200,7 +1130,7 @@ final class IvfStore private (private val spark: SparkSession,
   def semanticPairs(batch: DataFrame, idCol: String, embCol: String,
       tau: Double, nprobe: Int,
       excludeToken: Option[String] = None): DataFrame = {
-    val ms = visible(excludeToken)
+    val ms = log.visible(excludeToken)
     val probes = probeProjection(batch, idCol, embCol, nprobe,
       centroidsFor(genOf(ms)))
     CacheScope.withCached(probes)(
@@ -1213,7 +1143,7 @@ final class IvfStore private (private val spark: SparkSession,
     * could walk it for the probed-cells-only scan property. */
   private[graft] def gatePlanFor(batch: DataFrame, idCol: String,
       embCol: String, tau: Double, nprobe: Int): DataFrame = {
-    val ms = visible(None)
+    val ms = log.visible(None)
     pairsPlan(probeProjection(batch, idCol, embCol, nprobe,
       centroidsFor(genOf(ms))), tau, ms)
   }
@@ -1279,7 +1209,7 @@ final class IvfStore private (private val spark: SparkSession,
   def gateCandidateCounts(batch: DataFrame, idCol: String, embCol: String,
       nprobe: Int, excludeToken: Option[String] = None): DataFrame = {
     import spark.implicits._
-    val ms = visible(excludeToken)
+    val ms = log.visible(excludeToken)
     val probes = probeProjection(batch, idCol, embCol, nprobe,
       centroidsFor(genOf(ms)))
     val cells = probes.select("__probe").distinct()
@@ -1320,7 +1250,7 @@ final class IvfStore private (private val spark: SparkSession,
       tau: Double, nprobe: Int, shortlist: Int,
       excludeToken: Option[String] = None): DataFrame = {
     require(shortlist >= 1, "shortlist must be >= 1")
-    val ms = visible(excludeToken)
+    val ms = log.visible(excludeToken)
     val g = genOf(ms)
     val book = pqBookFor(g).getOrElse(throw new IllegalArgumentException(
       s"no PQ tier under $path (layout created with pqM = 0; " +
@@ -1347,7 +1277,7 @@ final class IvfStore private (private val spark: SparkSession,
       val s = IndexConf.strictInt(spark,
         "spark.graft.ivfstore.cellSalt", default = 8, min = 1)
       // stage 1: the m-byte wide net over probed code partitions
-      val codes = pqcodesRelOf(ms)
+      val codes = cellRelOf(ms, "pqcodes")
         .where(col("cell").isin(cells: _*))
         .withColumn("__vsalt", pmod(hash(col("vid")), lit(s)))
       val qp = pqPermFor(g).fold(col("__qemb"))(p =>
@@ -1450,18 +1380,15 @@ final class IvfStore private (private val spark: SparkSession,
 
   def appendToken(df: DataFrame, idCol: String, textCol: String,
       token: String): Unit = { appendOnce(df, idCol, textCol, token); () }
-
-  def seededBy(token: String): Boolean =
-    log.read().headOption.exists(_.token.contains(token))
 }
 
-object IvfStore {
+object IvfStore extends StoreProbe {
 
   /** Train on `df` ([[IvfIndex.fit]] — oracle-exact Lloyd's), then write
     * the layout at `path` (must be fresh): centroids, the first assigned
-    * append (+ vidmap sidecar), stats, one commit. `gateTau`/`gateNprobe`
-    * parameterize the [[IngestIndex]] semantic gate and are pinned in
-    * `stats/`. */
+    * append (+ vidmap sidecar), one commit carrying the stats.
+    * `gateTau`/`gateNprobe` parameterize the [[IngestIndex]] semantic gate
+    * and are pinned in the commits' stats. */
   def create(df: DataFrame, idCol: String, embCol: String, path: String,
       k: Int, iters: Int = 2, gateTau: Double = 0.5,
       gateNprobe: Int = 2, packedScale: Int = 127,
@@ -1520,17 +1447,15 @@ object IvfStore {
           "vid", "emb", dims, pqM, pqK, iters))
       val store = new IvfStore(spark, path)
       store.centroidCache.put(1, idx.centroids)
-      store.log.withWriteLock {
-        require(store.log.read().isEmpty,
-          s"$path already holds a committed index (create() wants a fresh path)")
+      store.log.locked(store.log.append(seedToken, fresh = true) { (id, _) =>
         // nothing is committed, so any centroids dir here is a crashed
         // predecessor's orphan — clear it so the rerun can't wedge
-        store.log.clearOrphan(s"$path/centroids")
+        store.log.manifests.clearOrphan(s"$path/centroids")
         idx.centroids.map { case (cell, c) => (cell, c.toSeq) }
           .toDF("cell", "c")
           .coalesce(1).write.mode("errorifexists").parquet(s"$path/centroids")
         book.foreach { b =>
-          store.log.clearOrphan(s"$path/pqbook")
+          store.log.manifests.clearOrphan(s"$path/pqbook")
           bookDf(spark, b, pqK, pqResidual, perm)
             .write.mode("errorifexists").parquet(s"$path/pqbook")
           store.pqBookCache.put(1, Some(b))
@@ -1538,36 +1463,27 @@ object IvfStore {
           store.pqPermCache.put(1, perm)
         }
         varSums.foreach { case (sx, sxx, n) =>
-          store.log.clearOrphan(s"$path/varspec")
+          store.log.manifests.clearOrphan(s"$path/varspec")
           varspecDf(spark, sx, sxx, n)
             .write.mode("errorifexists").parquet(s"$path/varspec")
         }
         // the fit already computed the assignment; persist ITS rows rather
         // than re-assigning (bit-identical either way — same centroids)
         val n = store.writeAssigned(
-          idx.assigned.select("vid", "emb", "nrm", "cell"), "a000001",
+          idx.assigned.select("vid", "emb", "nrm", "cell"), id,
           packedScale, book,
           if (pqResidual) Some(idx.centroids) else None, perm)
-        // stats BEFORE the first commit (the NgramLmStore first-build
-        // rule: a crash in between leaves exists()=false, reseedable)
-        writeStats(spark, path, IvfStoreStats(idx.centroids.size,
+        StoreLog.kvOf(IvfStoreStats(idx.centroids.size,
           idx.centroids.head._2.length, n, gateTau, gateNprobe, packedScale))
-        store.log.commit(Manifest(Seq("a000001"), Nil, Nil, Nil, seedToken), 1)
-      }
+      })
       store
     } finally idx.release()
   }
 
-  /** Whether `path` holds at least one committed index manifest — the
-    * build-if-absent probe of config-driven gate stages
-    * ([[graft.plan.CurationConfig]]). */
-  def exists(spark: SparkSession, path: String): Boolean =
-    new ManifestLog(spark, path).read().nonEmpty
-
   /** Open a stored index: the current generation's centroids are re-read
     * driver-side (k rows) to fail fast on a missing/foreign layout. */
   def open(spark: SparkSession, path: String): IvfStore = {
-    val store = new IvfStore(spark, path)
+    val store = StoreLog.open(new IvfStore(spark, path))
     store.centroids
     store
   }
@@ -1610,14 +1526,4 @@ object IvfStore {
     sx.indices.map(d => (d, sx(d), sxx(d), n))
       .toDF("d", "sx", "sxx", "n").coalesce(1)
   }
-
-  private def writeStats(spark: SparkSession, path: String,
-      st: IvfStoreStats): Unit =
-    StatsSidecar.write(spark, path, Seq(
-      "cells" -> st.cells.toString, "dims" -> st.dims.toString,
-      "vectors" -> st.vectors.toString,
-      // Double.toString/ toDouble round-trip exactly for every double
-      "gate_tau" -> st.gateTau.toString,
-      "gate_nprobe" -> st.gateNprobe.toString,
-      "packed_scale" -> st.packedScale.toString))
 }

@@ -3,28 +3,46 @@ package graft.ext
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.SparkSession
 
-/** One commit's manifest: the relation dirs it publishes, plus (for
-  * compactions) the counts dirs it supersedes, plus an optional caller
-  * idempotence `token` (the exactly-once append contract). Line-oriented
-  * `key=id[,id...]` text — no JSON dependency, human-greppable. Shared by
-  * every persisted index layout ([[NearDupIndex]], [[SubstrIndex]]); an
-  * index that doesn't use a relation leaves its list empty.
+/** One commit's manifest: self-describing `key=value` lines, no JSON
+  * dependency, human-greppable:
+  *  - `format=2` — the layout version; a commit without it predates the
+  *    current layout and [[ManifestLog.read]] refuses it by name;
+  *  - `rel.<name>=id,…` — the relation dirs (`<name>/append=<id>/`) the
+  *    commit publishes;
+  *  - `supersedes.<name>=id,…` — the dirs a compaction or refit folds
+  *    away (they stay on disk for in-flight readers until a vacuum);
+  *  - `stat.<key>=v` — the store's statistics as of this commit, so data
+  *    and stats publish in one atomic marker rename;
+  *  - `generation=` — [[IvfStore]]'s centroid generation;
+  *  - `token=` — the caller's idempotence token (the exactly-once append
+  *    contract).
   */
-private[ext] final case class Manifest(digests: Seq[String],
-    bands: Seq[String], counts: Seq[String], supersedesCounts: Seq[String],
-    token: Option[String] = None, supersedesDigests: Seq[String] = Nil,
-    generation: Option[Int] = None) {
-  def render: String = (Seq(
-    "digests" -> digests, "bands" -> bands, "counts" -> counts,
-    "supersedes_counts" -> supersedesCounts,
-    "supersedes_digests" -> supersedesDigests)
-    .collect { case (k, v) if v.nonEmpty => s"$k=${v.mkString(",")}" } ++
-    generation.map(g => s"generation=$g") ++
-    token.map(t => s"token=$t"))
-    .mkString("\n")
+private[ext] final case class Manifest(
+    rels: Map[String, Seq[String]] = Map.empty,
+    supersedes: Map[String, Seq[String]] = Map.empty,
+    stats: Map[String, String] = Map.empty,
+    token: Option[String] = None,
+    generation: Option[Int] = None,
+    format: Option[Int] = Some(Manifest.Format)) {
+  def rel(name: String): Seq[String] = rels.getOrElse(name, Nil)
+  def superseded(name: String): Seq[String] = supersedes.getOrElse(name, Nil)
+
+  def render: String = {
+    def keyed(prefix: String, kv: Map[String, String]) =
+      kv.toSeq.sorted.collect { case (k, v) if v.nonEmpty => s"$prefix$k=$v" }
+    (format.map(f => s"format=$f") ++
+      keyed("rel.", rels.map { case (k, v) => k -> v.mkString(",") }) ++
+      keyed("supersedes.", supersedes.map { case (k, v) => k -> v.mkString(",") }) ++
+      keyed("stat.", stats) ++
+      generation.map(g => s"generation=$g") ++
+      token.map(t => s"token=$t"))
+      .mkString("\n")
+  }
 }
 
 private[ext] object Manifest {
+  val Format = 2
+
   def parse(s: String): Manifest = {
     // values stay RAW here: only the id-list keys split on ',' — the
     // token is caller-chosen text (commas legal per the appendOnce
@@ -32,12 +50,14 @@ private[ext] object Manifest {
     // misses the committed-token check and double-indexes its survivors
     val kv = s.linesIterator.filter(_.contains("="))
       .map { l => val Array(k, v) = l.split("=", 2); (k, v) }
-      .toMap
-    def ids(k: String): Seq[String] =
-      kv.get(k).map(_.split(",").toSeq).getOrElse(Nil)
-    Manifest(ids("digests"), ids("bands"), ids("counts"),
-      ids("supersedes_counts"), kv.get("token"), ids("supersedes_digests"),
-      kv.get("generation").map(_.toInt))
+      .toSeq
+    def under(prefix: String): Map[String, String] = kv.collect {
+      case (k, v) if k.startsWith(prefix) => k.stripPrefix(prefix) -> v
+    }.toMap
+    def ids(prefix: String) = under(prefix).map { case (k, v) => k -> v.split(",").toSeq }
+    val top = kv.toMap
+    Manifest(ids("rel."), ids("supersedes."), under("stat."), top.get("token"),
+      top.get("generation").map(_.toInt), top.get("format").map(_.toInt))
   }
 }
 
@@ -77,6 +97,13 @@ private[ext] object Manifest {
   * ([[withWriteLock]]), so only a holder that has STOPPED beating for a
   * whole `lockStaleMs` window is presumed dead and broken — a corpus-sized
   * [[IvfStore.refit]] holds its lock for hours without any conf tuning.
+  *
+  * == Stats ride in the commit ==
+  *
+  * A data commit's manifest carries the store's statistics (`stat.*`
+  * keys), so one marker publish makes the relation dirs AND the stats that
+  * describe them visible together, and a reader resolves its dirs and its
+  * stats from one [[read]] snapshot ([[StoreLog]]).
   */
 private[ext] final class ManifestLog(spark: SparkSession, path: String) {
 
@@ -86,42 +113,36 @@ private[ext] final class ManifestLog(spark: SparkSession, path: String) {
 
   private def commitsDir = new HPath(s"$path/_commits")
 
-  def read(): Seq[Manifest] = readWithMtimes().map(_._1)
+  def read(): Seq[Manifest] = markers().map(parse)
 
-  /** The NEWEST committed marker's file name (None before any commit) —
-    * one FS listing, no file reads, no Spark job. The cache key of
-    * [[StoreStats]]: the cached value is a pure aggregate of the
-    * committed relation set, so an unchanged newest-commit name means a
-    * re-read would compute the same value. Newest is judged on the
-    * NUMERIC sequence (not lexicographically): at seq 1,000,000 the
-    * `m%06d` name widens to 7 digits and "m999999" > "m1000000" as
-    * strings, which would freeze a lexicographic key forever. */
-  def latestCommitName(): Option[String] = {
-    val f = fs
-    if (!f.exists(commitsDir)) None
-    else f.listStatus(commitsDir).toSeq
-      .filter(s => s.isFile && !s.getPath.getName.startsWith("."))
-      .map(_.getPath.getName).maxByOption(ManifestLog.commitSeqOf)
-  }
-
-  /** Manifests with their commit files' modification times — the vacuum
-    * retention guard's input: a superseded dir may only be unlinked once
-    * its SUPERSEDING commit is older than the retention window (an
-    * in-flight reader that resolved paths before that commit has had the
-    * window to finish). */
-  def readWithMtimes(): Seq[(Manifest, Long)] = {
+  /** The committed marker files, oldest first. Order is the NUMERIC
+    * sequence, not lexicographic: at seq 1,000,000 the `m%06d` name
+    * widens to 7 digits and "m999999" > "m1000000" as strings. */
+  private def markers(): Seq[org.apache.hadoop.fs.FileStatus] = {
     val f = fs
     if (!f.exists(commitsDir)) Nil
     else f.listStatus(commitsDir).toSeq
       .filter(s => s.isFile && !s.getPath.getName.startsWith("."))
       .sortBy(s => ManifestLog.commitSeqOf(s.getPath.getName))
-      .map { s =>
-        val in = f.open(s.getPath)
-        val bytes = new Array[Byte](s.getLen.toInt)
-        try in.readFully(bytes) finally in.close()
-        (Manifest.parse(new String(bytes, "UTF-8")), s.getModificationTime)
-      }
   }
+
+  /** Parse one marker; a commit without `format=2` predates the current
+    * layout and is refused by name — no retry, no fallback. */
+  private def parse(st: org.apache.hadoop.fs.FileStatus): Manifest = {
+    val in = fs.open(st.getPath)
+    val bytes = new Array[Byte](st.getLen.toInt)
+    try in.readFully(bytes) finally in.close()
+    val m = Manifest.parse(new String(bytes, "UTF-8"))
+    if (!m.format.contains(Manifest.Format)) throw ManifestLog.predates(path,
+      s"commit ${st.getPath.getName} has no format=${Manifest.Format}")
+    m
+  }
+
+  /** The NEWEST committed manifest satisfying `p`, reading markers
+    * newest-first and stopping at the first match — one listing plus
+    * (usually) one small file read, no Spark job. */
+  def newest(p: Manifest => Boolean): Option[Manifest] =
+    markers().reverseIterator.map(parse).find(p)
 
   /** Run `body` holding this layout's writer lock — an atomic
     * create-no-overwrite `.lock` file under `_commits/` (atomic on HDFS
@@ -388,25 +409,29 @@ private[ext] final class ManifestLog(spark: SparkSession, path: String) {
     ()
   }
 
-  /** The dir ids [[vacuum]]-ELIGIBLE under the retention guard: ids some
-    * manifest supersedes, restricted to those whose SUPERSEDING commit is
-    * at least `spark.graft.index.vacuumRetentionMs` old (default 1h). A
-    * reader that planned its scan before the superseding compaction holds
-    * the old paths; the age guard gives it the retention window to finish
-    * before a (locked) vacuum may unlink them. Set the conf to 0 to
-    * vacuum eagerly (tests; a quiesced pipeline). */
-  def vacuumEligible(supersededOf: Manifest => Seq[String]): Seq[String] = {
+  /** The manifests whose superseded dirs are vacuum-ELIGIBLE under the
+    * retention guard: those whose commit file is at least
+    * `spark.graft.index.vacuumRetentionMs` old (default 1h). A reader that planned its scan before a
+    * superseding compaction holds the old paths; the age guard gives it
+    * the retention window to finish before a (locked) vacuum may unlink
+    * them. Set the conf to 0 to vacuum eagerly (tests; a quiesced
+    * pipeline). */
+  def vacuumEligible(): Seq[Manifest] = {
     val retention = IndexConf.strictLong(spark,
       "spark.graft.index.vacuumRetentionMs", default = 3600000L, min = 0L)
     val now = System.currentTimeMillis()
-    readWithMtimes()
-      .filter { case (_, mtime) => now - mtime >= retention }
-      .flatMap { case (m, _) => supersededOf(m) }
-      .distinct
+    markers().filter(now - _.getModificationTime >= retention).map(parse)
   }
 }
 
 private[ext] object ManifestLog {
+  /** The refusal of a layout written before the current manifest format
+    * (positional manifests, a `stats/` sidecar or parquet stats dir):
+    * named, immediate, and final — such a store must be rebuilt. */
+  private[ext] def predates(path: String, why: String) =
+    new IllegalArgumentException(s"store layout at $path predates the " +
+      s"current format ($why); it must be rebuilt")
+
   /** Numeric sequence of a commit-marker name (`m%06d`, widening past a
     * million): the sort/max key of the marker listing. Non-numeric names
     * (never written by [[ManifestLog.commit]]) sort first. */
@@ -430,115 +455,6 @@ private[ext] object ManifestLog {
   @volatile private[ext] var disableSetTimes: Boolean = false
 }
 
-/** Driver-side stats SIDECAR: one small `key=value` text file under
-  * `<path>/stats/`, written and parsed on the driver — ZERO Spark jobs
-  * per access. The predecessor layout (a 1-row parquet dir) cost two
-  * driver round-trip jobs to read (parquet schema inference + head) and
-  * one to write (`coalesce(1).write`), and a gate/append cycle touches
-  * stats several times; at production cadence every one of those jobs
-  * is a driver round-trip serialized inside the ingest loop (guide §5:
-  * the driver should do almost no data work — and a 1-row parquet job
-  * per cycle is exactly that).
-  *
-  * Freshness: there is no cache — every read parses the current file
-  * (tens of bytes), so a reader can never observe a value staler than
-  * the file itself; the old commit-keyed cache's stale window (caching
-  * a predecessor's sidecar under the successor's commit key during the
-  * commit→rewrite gap) is gone by construction. Writers run under the
-  * store's writer lock ([[ManifestLog.withWriteLock]]) and publish via
-  * stage-then-rename, so a reader never sees a torn file; the
-  * delete→rename swap window surfaces as a (briefly retried) missing
-  * file. */
-private[ext] object StatsSidecar {
-  private def dest(path: String) = new HPath(s"$path/stats/stats.kv")
-
-  private def fsOf(spark: SparkSession, path: String): FileSystem =
-    new HPath(path).getFileSystem(spark.sessionState.newHadoopConf())
-
-  /** Publish `kv` as the store's stats sidecar (stage + swap; callers
-    * hold the store's writer lock). */
-  def write(spark: SparkSession, path: String,
-      kv: Seq[(String, String)]): Unit = {
-    val f = fsOf(spark, path)
-    val d = dest(path)
-    f.mkdirs(d.getParent)
-    val tmp = new HPath(d.getParent, ".stats.kv.tmp")
-    val out = f.create(tmp, true)
-    try out.write(kv.map { case (k, v) => s"$k=$v" }
-      .mkString("", "\n", "\n").getBytes("UTF-8"))
-    finally out.close()
-    f.delete(d, false)
-    if (!f.rename(tmp, d))
-      throw new IllegalStateException(s"could not publish stats sidecar $d")
-  }
-
-  /** Parse the store's stats sidecar. A missing file fails fast naming
-    * the path (the open()-on-a-foreign-layout contract); a miss inside
-    * another writer's delete→rename swap window is retried briefly. */
-  def read(spark: SparkSession, path: String): Map[String, String] = {
-    val f = fsOf(spark, path)
-    val d = dest(path)
-    def once(): Map[String, String] = {
-      val st = f.getFileStatus(d)
-      val in = f.open(d)
-      val bytes = new Array[Byte](st.getLen.toInt)
-      try in.readFully(bytes) finally in.close()
-      new String(bytes, "UTF-8").linesIterator.filter(_.contains("="))
-        .map { l => val Array(k, v) = l.split("=", 2); (k, v) }
-        .toMap
-    }
-    var attempt = 0
-    var out: Map[String, String] = null
-    while (out == null) {
-      try out = once()
-      catch {
-        case e: java.io.FileNotFoundException =>
-          attempt += 1
-          // a missing stats DIR is a foreign/uncommitted layout — fail
-          // fast (the open() contract); a missing file under an existing
-          // dir is (briefly) retried as a writer's swap window
-          if (!f.exists(d.getParent) || attempt > 20)
-            throw new IllegalArgumentException(
-              s"no stats sidecar under $path — not a committed store layout?",
-              e)
-          Thread.sleep(25L)
-      }
-    }
-    out
-  }
-}
-
-/** Driver-side cache of DERIVED store statistics that cost a real Spark
-  * aggregation to compute ([[Bm25Store]]'s summed statsparts), keyed by
-  * the layout's newest commit marker. The cached value must be a pure
-  * function of the COMMITTED relation set — never of a mutable sidecar —
-  * so an unchanged newest-commit name always implies an identical
-  * recompute (no stale-sidecar window by construction). Size-bounded:
-  * store paths are unique per creation ([[graft.io.TempReaper]]), so a
-  * long-lived ingest driver creating many short-lived stores would
-  * otherwise accumulate dead entries forever. */
-private[ext] object StoreStats {
-  private val MaxEntries = 1024
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Any)]()
-
-  def cached[T](log: ManifestLog, path: String)(load: => T): T =
-    log.latestCommitName() match {
-      case None => load // pre-commit layouts are never cached
-      case Some(key) =>
-        Option(cache.get(path)) match {
-          case Some((k, v)) if k == key => v.asInstanceOf[T]
-          case _ =>
-            val v = load
-            if (cache.size >= MaxEntries) cache.clear() // dead temp stores
-            cache.put(path, (key, v))
-            v
-        }
-    }
-
-  def invalidate(path: String): Unit = { cache.remove(path); () }
-}
-
 /** Schema-declared parquet reads of store RELATION dirs. Spark's parquet
   * schema inference over a multi-file read runs as a one-task Spark job —
   * one driver round-trip per gate/append relation read, several per
@@ -553,11 +469,20 @@ private[ext] object StoreStats {
   * longer silently drift from it (the schema is code, not a cached
   * first impression — closes the stale-cached-schema hazard of the
   * earlier infer-once design). Callers without a declared schema fall
-  * back to infer-once-per-`key` ("<store path>#<relation>"), bounded. */
+  * back to infer-once-per-`key` ("<store path>#<relation>"), bounded by
+  * least-recent use: store paths are unique per creation
+  * ([[graft.io.TempReaper]]), so a long-lived driver creating many
+  * short-lived stores evicts the dead ones while a live store's keys,
+  * touched every cycle, stay served. */
 private[ext] object RelRead {
   private val MaxEntries = 1024
-  private val schemas = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]()
+  private val schemas = java.util.Collections.synchronizedMap(
+    new java.util.LinkedHashMap[String, org.apache.spark.sql.types.StructType](
+        16, 0.75f, /* accessOrder = */ true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[String,
+          org.apache.spark.sql.types.StructType]): Boolean =
+        size() > MaxEntries
+    })
 
   /** Read `paths` as parquet under the declared `schema` (no inference
     * job, ever), or — when absent — inferring only on the first read of
@@ -577,7 +502,6 @@ private[ext] object RelRead {
       case Some(s) => reader.schema(s).parquet(paths: _*)
       case None =>
         val df = reader.parquet(paths: _*)
-        if (schemas.size >= MaxEntries) schemas.clear() // dead temp stores
         schemas.put(key, df.schema)
         df
     }
@@ -592,7 +516,6 @@ private[ext] object RelRead {
     * foreign store still fall back to infer-once. */
   def seed(key: String,
       schema: org.apache.spark.sql.types.StructType): Unit = {
-    if (schemas.size >= MaxEntries) schemas.clear()
     schemas.put(key, allNullable(schema))
     ()
   }

@@ -31,8 +31,9 @@ final case class MediaCdcIndexStats(chunkRows: Long, window: Int,
   * relation:
   *  - `chunks/append=<id>/` (vid, ch) — per-append DISTINCT
   *    (payload, chunk-hash) rows (~nb/(16+window) per payload);
-  *  - `_commits/m<seq>` marker manifests; `stats/` one
-  *    [[MediaCdcIndexStats]] row (Bloom sizing + parameter pins).
+  *  - `_commits/m<seq>` marker manifests ([[StoreLog]]); each data
+  *    commit carries the [[MediaCdcIndexStats]] (Bloom sizing +
+  *    parameter pins).
   *
   * == Gate shape ([[keepFarPayloads]]) ==
   *
@@ -54,115 +55,59 @@ final case class MediaCdcIndexStats(chunkRows: Long, window: Int,
   * the EIGHTH gated modality of the one generic ingest loop.
   */
 final class MediaCdcIndex private (
-    private val spark: SparkSession, val path: String) extends IngestIndex {
+    private val spark: SparkSession, val path: String)
+    extends IngestIndex with LoggedStore {
 
-  /** Current stored statistics (appends move it; a driver-side
-    * [[StatsSidecar]] parse — zero Spark jobs per read). */
-  def stats: MediaCdcIndexStats = {
-    val kv = StatsSidecar.read(spark, path)
-    MediaCdcIndexStats(kv("chunk_rows").toLong, kv("window").toInt,
-      kv("min_shared").toInt, kv("max_bucket").toInt, kv("zeros").toInt)
-  }
+  private[ext] val log = new StoreLog(spark, path, Seq(StoreRel("chunks",
+    // straight union rewrite — duplicates across replayed appends are
+    // harmless under the countDistinct match rule
+    fold = Some((from, to) =>
+      chunks(from).coalesce(4).write.mode("errorifexists").parquet(to)))))
 
-  private val log = new ManifestLog(spark, path)
+  private def statsOf(kv: Map[String, String]): MediaCdcIndexStats =
+    MediaCdcIndexStats(kv("chunkRows").toLong, kv("window").toInt,
+      kv("minShared").toInt, kv("maxBucket").toInt, kv("zeros").toInt)
 
-  private def visible(excludeToken: Option[String]): Seq[Manifest] =
-    log.read().filterNot(m => excludeToken.exists(m.token.contains))
+  /** Current stored statistics (appends move it; read off the newest
+    * commit — zero Spark jobs per read). */
+  def stats: MediaCdcIndexStats = statsOf(log.stats)
 
-  private def activeIds(ms: Seq[Manifest]): Seq[String] = {
-    val sup = ms.flatMap(_.supersedesDigests).toSet
-    ms.flatMap(_.digests).filterNot(sup)
-  }
-
-  private def chunksRelOf(ms: Seq[Manifest]): DataFrame = {
-    val ids = activeIds(ms)
-    require(ids.nonEmpty, s"no committed chunk dirs under $path")
-    RelRead.read(spark, s"$path#chunks",
-      ids.map(id => s"$path/chunks/append=$id"))
-  }
+  private def chunks(dirs: Seq[String]): DataFrame =
+    RelRead.read(spark, s"$path#chunks", dirs)
 
   // ---------------- writes ----------------
 
   /** Index a batch's chunk rows: one fresh `append=<id>` dir, one
-    * marker commit, stats refreshed. Call with the rows a gate
-    * accepted, MATERIALIZED first. */
+    * marker commit carrying the refreshed stats. Call with the rows a
+    * gate accepted, MATERIALIZED first. */
   def append(df: DataFrame, idCol: String,
       payloadCol: String): MediaCdcIndexStats =
-    log.withWriteLock {
-      writeBatch(df, idCol, payloadCol, stats, first = false, token = None)
-    }
+    log.locked(writeBatch(df, idCol, payloadCol, None, token = None))
 
   /** [[append]] with an idempotence token — exactly-once. */
   def appendOnce(df: DataFrame, idCol: String, payloadCol: String,
-      token: String): MediaCdcIndexStats = {
-    require(token.nonEmpty && !token.contains("\n"),
-      "token: non-empty, one line")
-    log.withWriteLock {
-      if (log.read().exists(_.token.contains(token))) stats
-      else writeBatch(df, idCol, payloadCol, stats, first = false,
-        token = Some(token))
-    }
-  }
+      token: String): MediaCdcIndexStats =
+    log.once(token)(stats)(
+      writeBatch(df, idCol, payloadCol, None, Some(token)))
 
   private def writeBatch(df: DataFrame, idCol: String, payloadCol: String,
-      prev: MediaCdcIndexStats, first: Boolean,
-      token: Option[String]): MediaCdcIndexStats = {
-    val before = log.read()
-    require(!first || before.isEmpty,
-      s"$path already holds a committed index (build() wants a fresh path)")
-    val seq = before.size + 1
-    val id = f"a$seq%06d"
-    val chunks = MediaDedup.cdcChunkRows(df, idCol, payloadCol,
-        prev.window, prev.zeros)
-      .withColumnRenamed("doc_id", "vid")
-      .distinct() // repeated content inside ONE payload is one fact
-    log.clearOrphan(s"$path/chunks/append=$id")
-    chunks.write.mode("errorifexists").parquet(s"$path/chunks/append=$id")
-    RelRead.seed(s"$path#chunks", chunks.schema) // same-JVM gate skips inference
-    val added = graft.io.ParquetMeta.rowCount(spark,
-      s"$path/chunks/append=$id")
-    require(!first || added > 0,
-      s"cannot build a stored index at $path from a corpus with no " +
-        "non-null payloads")
-    log.commit(Manifest(Seq(id), Nil, Nil, Nil, token), seq)
-    val st = MediaCdcIndexStats(prev.chunkRows + added, prev.window,
-      prev.minShared, prev.maxBucket, prev.zeros)
-    MediaCdcIndex.writeStats(spark, path, st)
-    maybeCompact()
-    st
-  }
-
-  /** Fold chunk dirs past `spark.graft.mediacdc.compactThreshold`
-    * (default 16) active dirs; the NEWEST dir is never folded (the
-    * token-replay window). Straight union rewrite — duplicates across
-    * replayed appends are harmless under the countDistinct match
-    * rule. */
-  private def maybeCompact(): Unit = {
-    val threshold = IndexConf.strictInt(spark,
-      "spark.graft.mediacdc.compactThreshold", default = 16, min = 1)
-    val ms = log.read()
-    val foldable = activeIds(ms).dropRight(1)
-    if (foldable.size > threshold) {
-      val seq = ms.size + 1
-      val cid = f"c$seq%06d"
-      log.clearOrphan(s"$path/chunks/append=$cid")
-      RelRead.read(spark, s"$path#chunks",
-        foldable.map(id => s"$path/chunks/append=$id"))
-        .coalesce(4)
-        .write.mode("errorifexists").parquet(s"$path/chunks/append=$cid")
-      log.commit(Manifest(Seq(cid), Nil, Nil, Nil, None, foldable), seq)
-    }
-  }
-
-  /** Unlink chunk dirs a compaction superseded, under the family
-    * retention guard. Locked writer; returns dirs removed. */
-  def vacuum(): Int = log.withWriteLock {
-    val f = log.fileSystem
-    log.vacuumEligible(_.supersedesDigests).count { id =>
-      f.delete(
-        new org.apache.hadoop.fs.Path(s"$path/chunks/append=$id"), true)
-    }
-  }
+      init: Option[MediaCdcIndexStats],
+      token: Option[String]): MediaCdcIndexStats = statsOf(
+    log.append(token, fresh = init.nonEmpty) { (id, before) =>
+      val prev = init.getOrElse(statsOf(log.statsIn(before)))
+      val dir = log.dir("chunks", id)
+      val rows = MediaDedup.cdcChunkRows(df, idCol, payloadCol,
+          prev.window, prev.zeros)
+        .withColumnRenamed("doc_id", "vid")
+        .distinct() // repeated content inside ONE payload is one fact
+      rows.write.mode("errorifexists").parquet(dir)
+      RelRead.seed(s"$path#chunks", rows.schema) // same-JVM gate skips inference
+      val added = graft.io.ParquetMeta.rowCount(spark, dir)
+      require(init.isEmpty || added > 0,
+        s"cannot build a stored index at $path from a corpus with no " +
+          "non-null payloads")
+      StoreLog.kvOf(prev.copy(chunkRows = prev.chunkRows + added))
+    }.stats)
 
   // ---------------- queries ----------------
 
@@ -175,8 +120,9 @@ final class MediaCdcIndex private (
   def keepFarPayloads(batch: DataFrame, idCol: String,
       payloadCol: String, fpp: Double = 0.01,
       excludeToken: Option[String] = None): DataFrame = {
-    val st = stats
-    val hw = chunksRelOf(visible(excludeToken))
+    val ms = log.visible(excludeToken)
+    val st = statsOf(log.statsIn(ms))
+    val hw = chunks(log.dirs(ms, "chunks"))
       // the LSH cap, applied at read over the ACTIVE relation (an
       // append can grow a bucket past the cap later)
       .withColumn("__c", count(lit(1)).over(Window.partitionBy("ch")))
@@ -224,16 +170,13 @@ final class MediaCdcIndex private (
 
   def appendToken(df: DataFrame, idCol: String, textCol: String,
       token: String): Unit = { appendOnce(df, idCol, textCol, token); () }
-
-  def seededBy(token: String): Boolean =
-    log.read().headOption.exists(_.token.contains(token))
 }
 
-object MediaCdcIndex {
+object MediaCdcIndex extends StoreProbe {
 
   /** Build a new index at `path` from the history corpus — the one time
     * history payloads are read. The chunking parameters are pinned in
-    * `stats/` and every later gate/append uses them. */
+    * the commits' stats and every later gate/append uses them. */
   def build(history: DataFrame, idCol: String, payloadCol: String,
       path: String, window: Int = 4, minShared: Int = 3,
       maxBucket: Int = 100, zeros: Int = 1,
@@ -243,31 +186,13 @@ object MediaCdcIndex {
     require(maxBucket >= 2, "maxBucket must be >= 2")
     require(zeros >= 1 && zeros <= 8, s"zeros in [1, 8], got $zeros")
     val idx = new MediaCdcIndex(history.sparkSession, path)
-    idx.log.withWriteLock {
-      idx.writeBatch(history, idCol, payloadCol,
-        MediaCdcIndexStats(0L, window, minShared, maxBucket, zeros),
-        first = true, token = seedToken)
-    }
+    idx.log.locked(idx.writeBatch(history, idCol, payloadCol,
+      Some(MediaCdcIndexStats(0L, window, minShared, maxBucket, zeros)),
+      seedToken))
     idx
   }
 
-  /** Whether `path` holds at least one committed index manifest. */
-  def exists(spark: SparkSession, path: String): Boolean =
-    new ManifestLog(spark, path).read().nonEmpty
-
-  /** Open a stored index (fails fast on a missing/foreign layout). */
-  def open(spark: SparkSession, path: String): MediaCdcIndex = {
-    val idx = new MediaCdcIndex(spark, path)
-    idx.stats
-    idx
-  }
-
-  private def writeStats(spark: SparkSession, path: String,
-      st: MediaCdcIndexStats): Unit =
-    StatsSidecar.write(spark, path, Seq(
-      "chunk_rows" -> st.chunkRows.toString,
-      "window" -> st.window.toString,
-      "min_shared" -> st.minShared.toString,
-      "max_bucket" -> st.maxBucket.toString,
-      "zeros" -> st.zeros.toString))
+  /** Open a stored index (fails fast on a missing or older layout). */
+  def open(spark: SparkSession, path: String): MediaCdcIndex =
+    StoreLog.open(new MediaCdcIndex(spark, path))
 }

@@ -27,10 +27,10 @@ final case class MediaDigestIndexStats(digests: Long)
   *  - `digests/append=<id>/` (dg) — per-append DISTINCT payload digests
   *    (cross-append duplicates are fine: the gate is a membership
   *    anti-join);
-  *  - `_commits/m<seq>` marker manifests — un-committed dirs from a
-  *    crashed writer stay invisible;
-  *  - `stats/` — one [[MediaDigestIndexStats]] row, refreshed after
-  *    each commit (statistics-fed Bloom sizing, no count job per gate).
+  *  - `_commits/m<seq>` marker manifests ([[StoreLog]]) — un-committed
+  *    dirs from a crashed writer stay invisible; each data commit carries
+  *    the [[MediaDigestIndexStats]] (statistics-fed Bloom sizing, no
+  *    count job per gate).
   *
   * == Gate shape ([[keepUnseenPayloads]]) ==
   *
@@ -48,118 +48,60 @@ final case class MediaDigestIndexStats(digests: Long)
   * re-append is a no-op.
   */
 final class MediaDigestIndex private (
-    private val spark: SparkSession, val path: String) extends IngestIndex {
+    private val spark: SparkSession, val path: String)
+    extends IngestIndex with LoggedStore {
 
-  /** Current stored statistics (appends move it; a driver-side
-    * [[StatsSidecar]] parse — zero Spark jobs per read). */
-  def stats: MediaDigestIndexStats =
-    MediaDigestIndexStats(StatsSidecar.read(spark, path)("digests").toLong)
+  private[ext] val log = new StoreLog(spark, path, Seq(StoreRel("digests",
+    fold = Some((from, to) => digests(from).distinct().coalesce(4)
+      .write.mode("errorifexists").parquet(to)))))
 
-  private val log = new ManifestLog(spark, path)
+  private def statsOf(kv: Map[String, String]): MediaDigestIndexStats =
+    MediaDigestIndexStats(kv("digests").toLong)
 
-  private def visible(excludeToken: Option[String]): Seq[Manifest] =
-    log.read().filterNot(m => excludeToken.exists(m.token.contains))
+  /** Current stored statistics (appends move it; read off the newest
+    * commit — zero Spark jobs per read). */
+  def stats: MediaDigestIndexStats = statsOf(log.stats)
 
-  private def activeIds(ms: Seq[Manifest]): Seq[String] = {
-    val sup = ms.flatMap(_.supersedesDigests).toSet
-    ms.flatMap(_.digests).filterNot(sup)
-  }
-
-  private def digestsRelOf(ms: Seq[Manifest]): DataFrame = {
-    val ids = activeIds(ms)
-    require(ids.nonEmpty, s"no committed digest dirs under $path")
-    RelRead.read(spark, s"$path#digests",
-      ids.map(id => s"$path/digests/append=$id"))
-  }
+  private def digests(dirs: Seq[String]): DataFrame =
+    RelRead.read(spark, s"$path#digests", dirs)
 
   // ---------------- writes ----------------
 
   /** Index a batch's payload digests: one fresh `append=<id>` dir, one
-    * marker commit, stats refreshed. Call with the rows a gate
-    * accepted, MATERIALIZED first (`localCheckpoint(true)`) — the gate
-    * result's plan reads this index. */
+    * marker commit carrying the refreshed stats. Call with the rows a
+    * gate accepted, MATERIALIZED first (`localCheckpoint(true)`) — the
+    * gate result's plan reads this index. */
   def append(df: DataFrame, idCol: String,
       payloadCol: String): MediaDigestIndexStats =
-    log.withWriteLock {
-      writeBatch(df, payloadCol, stats, first = false, token = None)
-    }
+    log.locked(writeBatch(df, payloadCol, first = false, token = None))
 
   /** [[append]] with an idempotence token — the exactly-once append: a
     * committed manifest carrying `token` makes the call a no-op. */
   def appendOnce(df: DataFrame, idCol: String, payloadCol: String,
-      token: String): MediaDigestIndexStats = {
-    require(token.nonEmpty && !token.contains("\n"),
-      "token: non-empty, one line")
-    log.withWriteLock {
-      if (log.read().exists(_.token.contains(token))) stats
-      else writeBatch(df, payloadCol, stats, first = false,
-        token = Some(token))
-    }
-  }
+      token: String): MediaDigestIndexStats =
+    log.once(token)(stats)(
+      writeBatch(df, payloadCol, first = false, token = Some(token)))
 
-  private def writeBatch(df: DataFrame, payloadCol: String,
-      prev: MediaDigestIndexStats, first: Boolean,
-      token: Option[String]): MediaDigestIndexStats = {
-    val before = log.read()
-    require(!first || before.isEmpty,
-      s"$path already holds a committed index (build() wants a fresh path)")
-    val seq = before.size + 1
-    val id = f"a$seq%06d"
-    val dgs = df
-      .select(MediaDedup.payloadDigest(col(payloadCol)).as("dg"))
-      .filter(col("dg").isNotNull) // null payloads carry no identity
-      .distinct()
-    log.clearOrphan(s"$path/digests/append=$id")
-    dgs.write.mode("errorifexists").parquet(s"$path/digests/append=$id")
-    RelRead.seed(s"$path#digests", dgs.schema) // same-JVM gate skips inference
-    val added = graft.io.ParquetMeta.rowCount(spark,
-      s"$path/digests/append=$id")
-    // a FIRST append with zero digests would leave the index unreadable
-    // (every later read infers schema over only-empty dirs)
-    require(!first || added > 0,
-      s"cannot build a stored index at $path from a corpus with no " +
-        "non-null payloads")
-    log.commit(Manifest(Seq(id), Nil, Nil, Nil, token), seq)
-    val st = MediaDigestIndexStats(prev.digests + added)
-    MediaDigestIndex.writeStats(spark, path, st)
-    maybeCompact()
-    st
-  }
-
-  /** Fold digest dirs into one DISTINCT relation past
-    * `spark.graft.mediadigest.compactThreshold` active dirs (default
-    * 16) — bounds the gate's file listing across unbounded append
-    * loops. The NEWEST dir is never folded (the token-replay window).
-    * Published as a superseding commit; superseded dirs stay for
-    * in-flight readers until [[vacuum]]. */
-  private def maybeCompact(): Unit = {
-    val threshold = IndexConf.strictInt(spark,
-      "spark.graft.mediadigest.compactThreshold", default = 16, min = 1)
-    val ms = log.read()
-    val foldable = activeIds(ms).dropRight(1)
-    if (foldable.size > threshold) {
-      val seq = ms.size + 1
-      val cid = f"c$seq%06d"
-      log.clearOrphan(s"$path/digests/append=$cid")
-      RelRead.read(spark, s"$path#digests",
-        foldable.map(id => s"$path/digests/append=$id"))
+  private def writeBatch(df: DataFrame, payloadCol: String, first: Boolean,
+      token: Option[String]): MediaDigestIndexStats = statsOf(
+    log.append(token, fresh = first) { (id, before) =>
+      val prev =
+        if (first) MediaDigestIndexStats(0L) else statsOf(log.statsIn(before))
+      val dir = log.dir("digests", id)
+      val dgs = df
+        .select(MediaDedup.payloadDigest(col(payloadCol)).as("dg"))
+        .filter(col("dg").isNotNull) // null payloads carry no identity
         .distinct()
-        .coalesce(4)
-        .write.mode("errorifexists").parquet(s"$path/digests/append=$cid")
-      log.commit(Manifest(Seq(cid), Nil, Nil, Nil, None, foldable), seq)
-    }
-  }
-
-  /** Unlink digest dirs a compaction superseded, under the family
-    * retention guard ([[ManifestLog.vacuumEligible]]). Locked writer;
-    * returns the number of dirs removed. */
-  def vacuum(): Int = log.withWriteLock {
-    val f = log.fileSystem
-    log.vacuumEligible(_.supersedesDigests).count { id =>
-      f.delete(
-        new org.apache.hadoop.fs.Path(s"$path/digests/append=$id"), true)
-    }
-  }
+      dgs.write.mode("errorifexists").parquet(dir)
+      RelRead.seed(s"$path#digests", dgs.schema) // same-JVM gate skips inference
+      val added = graft.io.ParquetMeta.rowCount(spark, dir)
+      // a FIRST append with zero digests would leave the index unreadable
+      // (every later read infers schema over only-empty dirs)
+      require(!first || added > 0,
+        s"cannot build a stored index at $path from a corpus with no " +
+          "non-null payloads")
+      StoreLog.kvOf(MediaDigestIndexStats(prev.digests + added))
+    }.stats)
 
   // ---------------- queries ----------------
 
@@ -172,8 +114,9 @@ final class MediaDigestIndex private (
   def keepUnseenPayloads(batch: DataFrame, idCol: String,
       payloadCol: String, fpp: Double = 0.01,
       excludeToken: Option[String] = None): DataFrame = {
-    val st = stats
-    val hw = digestsRelOf(visible(excludeToken))
+    val ms = log.visible(excludeToken)
+    val st = statsOf(log.statsIn(ms))
+    val hw = digests(log.dirs(ms, "digests"))
     val bloom = BloomPrune.buildFilter(hw, "dg",
       math.max(1L, st.digests), fpp)
     val inc = batch.withColumn("__dg",
@@ -198,12 +141,9 @@ final class MediaDigestIndex private (
 
   def appendToken(df: DataFrame, idCol: String, textCol: String,
       token: String): Unit = { appendOnce(df, idCol, textCol, token); () }
-
-  def seededBy(token: String): Boolean =
-    log.read().headOption.exists(_.token.contains(token))
 }
 
-object MediaDigestIndex {
+object MediaDigestIndex extends StoreProbe {
 
   /** Build a new index at `path` (must not already hold one) from the
     * history corpus — the one time history payloads are read.
@@ -212,27 +152,12 @@ object MediaDigestIndex {
   def build(history: DataFrame, idCol: String, payloadCol: String,
       path: String, seedToken: Option[String] = None): MediaDigestIndex = {
     val idx = new MediaDigestIndex(history.sparkSession, path)
-    idx.log.withWriteLock {
-      idx.writeBatch(history, payloadCol, MediaDigestIndexStats(0L),
-        first = true, token = seedToken)
-    }
+    idx.log.locked(idx.writeBatch(history, payloadCol, first = true,
+      token = seedToken))
     idx
   }
 
-  /** Whether `path` holds at least one committed index manifest — the
-    * build-if-absent probe of config-driven gate stages. */
-  def exists(spark: SparkSession, path: String): Boolean =
-    new ManifestLog(spark, path).read().nonEmpty
-
-  /** Open a stored index (fails fast on a missing/foreign layout). */
-  def open(spark: SparkSession, path: String): MediaDigestIndex = {
-    val idx = new MediaDigestIndex(spark, path)
-    idx.stats
-    idx
-  }
-
-  private def writeStats(spark: SparkSession, path: String,
-      st: MediaDigestIndexStats): Unit =
-    StatsSidecar.write(spark, path,
-      Seq("digests" -> st.digests.toString))
+  /** Open a stored index (fails fast on a missing or older layout). */
+  def open(spark: SparkSession, path: String): MediaDigestIndex =
+    StoreLog.open(new MediaDigestIndex(spark, path))
 }

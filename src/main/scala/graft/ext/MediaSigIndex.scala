@@ -27,8 +27,9 @@ final case class MediaSigIndexStats(sigRows: Long, blocks: Int,
   * relation:
   *  - `sigs/append=<id>/` (vid, nb, i, bh) — per-append signature rows
   *    (`blocks` rows per payload);
-  *  - `_commits/m<seq>` marker manifests; `stats/` one
-  *    [[MediaSigIndexStats]] row (Bloom sizing + parameter pins).
+  *  - `_commits/m<seq>` marker manifests ([[StoreLog]]); each data
+  *    commit carries the [[MediaSigIndexStats]] (Bloom sizing +
+  *    parameter pins).
   *
   * == Gate shape ([[keepFarPayloads]]) ==
   *
@@ -47,114 +48,58 @@ final case class MediaSigIndexStats(sigRows: Long, blocks: Int,
   * `excludeToken` (the [[IngestIndex]] contract).
   */
 final class MediaSigIndex private (
-    private val spark: SparkSession, val path: String) extends IngestIndex {
+    private val spark: SparkSession, val path: String)
+    extends IngestIndex with LoggedStore {
 
-  /** Current stored statistics (appends move it; a driver-side
-    * [[StatsSidecar]] parse — zero Spark jobs per read). */
-  def stats: MediaSigIndexStats = {
-    val kv = StatsSidecar.read(spark, path)
-    MediaSigIndexStats(kv("sig_rows").toLong, kv("blocks").toInt,
-      kv("min_match").toInt, kv("max_bucket").toInt)
-  }
+  private[ext] val log = new StoreLog(spark, path, Seq(StoreRel("sigs",
+    // straight union rewrite — signature rows are already per-payload facts
+    fold = Some((from, to) =>
+      sigs(from).coalesce(4).write.mode("errorifexists").parquet(to)))))
 
-  private val log = new ManifestLog(spark, path)
+  private def statsOf(kv: Map[String, String]): MediaSigIndexStats =
+    MediaSigIndexStats(kv("sigRows").toLong, kv("blocks").toInt,
+      kv("minMatch").toInt, kv("maxBucket").toInt)
 
-  private def visible(excludeToken: Option[String]): Seq[Manifest] =
-    log.read().filterNot(m => excludeToken.exists(m.token.contains))
+  /** Current stored statistics (appends move it; read off the newest
+    * commit — zero Spark jobs per read). */
+  def stats: MediaSigIndexStats = statsOf(log.stats)
 
-  private def activeIds(ms: Seq[Manifest]): Seq[String] = {
-    val sup = ms.flatMap(_.supersedesDigests).toSet
-    ms.flatMap(_.digests).filterNot(sup)
-  }
-
-  private def sigsRelOf(ms: Seq[Manifest]): DataFrame = {
-    val ids = activeIds(ms)
-    require(ids.nonEmpty, s"no committed signature dirs under $path")
-    RelRead.read(spark, s"$path#sigs",
-      ids.map(id => s"$path/sigs/append=$id"))
-  }
+  private def sigs(dirs: Seq[String]): DataFrame =
+    RelRead.read(spark, s"$path#sigs", dirs)
 
   // ---------------- writes ----------------
 
   /** Index a batch's signature rows: one fresh `append=<id>` dir, one
-    * marker commit, stats refreshed. Call with the rows a gate
-    * accepted, MATERIALIZED first. */
+    * marker commit carrying the refreshed stats. Call with the rows a
+    * gate accepted, MATERIALIZED first. */
   def append(df: DataFrame, idCol: String,
       payloadCol: String): MediaSigIndexStats =
-    log.withWriteLock {
-      writeBatch(df, idCol, payloadCol, stats, first = false, token = None)
-    }
+    log.locked(writeBatch(df, idCol, payloadCol, None, token = None))
 
   /** [[append]] with an idempotence token — exactly-once. */
   def appendOnce(df: DataFrame, idCol: String, payloadCol: String,
-      token: String): MediaSigIndexStats = {
-    require(token.nonEmpty && !token.contains("\n"),
-      "token: non-empty, one line")
-    log.withWriteLock {
-      if (log.read().exists(_.token.contains(token))) stats
-      else writeBatch(df, idCol, payloadCol, stats, first = false,
-        token = Some(token))
-    }
-  }
+      token: String): MediaSigIndexStats =
+    log.once(token)(stats)(
+      writeBatch(df, idCol, payloadCol, None, Some(token)))
 
   private def writeBatch(df: DataFrame, idCol: String, payloadCol: String,
-      prev: MediaSigIndexStats, first: Boolean,
-      token: Option[String]): MediaSigIndexStats = {
-    val before = log.read()
-    require(!first || before.isEmpty,
-      s"$path already holds a committed index (build() wants a fresh path)")
-    val seq = before.size + 1
-    val id = f"a$seq%06d"
-    val sigs = MediaDedup.signatureRows(
-        df.filter(col(payloadCol).isNotNull), idCol, payloadCol,
-        prev.blocks)
-      .withColumnRenamed("doc_id", "vid")
-    log.clearOrphan(s"$path/sigs/append=$id")
-    sigs.write.mode("errorifexists").parquet(s"$path/sigs/append=$id")
-    RelRead.seed(s"$path#sigs", sigs.schema) // same-JVM gate skips inference
-    val added = graft.io.ParquetMeta.rowCount(spark,
-      s"$path/sigs/append=$id")
-    require(!first || added > 0,
-      s"cannot build a stored index at $path from a corpus with no " +
-        "non-null payloads")
-    log.commit(Manifest(Seq(id), Nil, Nil, Nil, token), seq)
-    val st = MediaSigIndexStats(prev.sigRows + added, prev.blocks,
-      prev.minMatch, prev.maxBucket)
-    MediaSigIndex.writeStats(spark, path, st)
-    maybeCompact()
-    st
-  }
-
-  /** Fold signature dirs past
-    * `spark.graft.mediasig.compactThreshold` (default 16) active dirs;
-    * the NEWEST dir is never folded (the token-replay window). Straight
-    * union rewrite — signature rows are already per-payload facts. */
-  private def maybeCompact(): Unit = {
-    val threshold = IndexConf.strictInt(spark,
-      "spark.graft.mediasig.compactThreshold", default = 16, min = 1)
-    val ms = log.read()
-    val foldable = activeIds(ms).dropRight(1)
-    if (foldable.size > threshold) {
-      val seq = ms.size + 1
-      val cid = f"c$seq%06d"
-      log.clearOrphan(s"$path/sigs/append=$cid")
-      RelRead.read(spark, s"$path#sigs",
-        foldable.map(id => s"$path/sigs/append=$id"))
-        .coalesce(4)
-        .write.mode("errorifexists").parquet(s"$path/sigs/append=$cid")
-      log.commit(Manifest(Seq(cid), Nil, Nil, Nil, None, foldable), seq)
-    }
-  }
-
-  /** Unlink signature dirs a compaction superseded, under the family
-    * retention guard. Locked writer; returns dirs removed. */
-  def vacuum(): Int = log.withWriteLock {
-    val f = log.fileSystem
-    log.vacuumEligible(_.supersedesDigests).count { id =>
-      f.delete(
-        new org.apache.hadoop.fs.Path(s"$path/sigs/append=$id"), true)
-    }
-  }
+      init: Option[MediaSigIndexStats],
+      token: Option[String]): MediaSigIndexStats = statsOf(
+    log.append(token, fresh = init.nonEmpty) { (id, before) =>
+      val prev = init.getOrElse(statsOf(log.statsIn(before)))
+      val dir = log.dir("sigs", id)
+      val rows = MediaDedup.signatureRows(
+          df.filter(col(payloadCol).isNotNull), idCol, payloadCol,
+          prev.blocks)
+        .withColumnRenamed("doc_id", "vid")
+      rows.write.mode("errorifexists").parquet(dir)
+      RelRead.seed(s"$path#sigs", rows.schema) // same-JVM gate skips inference
+      val added = graft.io.ParquetMeta.rowCount(spark, dir)
+      require(init.isEmpty || added > 0,
+        s"cannot build a stored index at $path from a corpus with no " +
+          "non-null payloads")
+      StoreLog.kvOf(prev.copy(sigRows = prev.sigRows + added))
+    }.stats)
 
   // ---------------- queries ----------------
 
@@ -167,8 +112,9 @@ final class MediaSigIndex private (
   def keepFarPayloads(batch: DataFrame, idCol: String,
       payloadCol: String, fpp: Double = 0.01,
       excludeToken: Option[String] = None): DataFrame = {
-    val st = stats
-    val hw = sigsRelOf(visible(excludeToken))
+    val ms = log.visible(excludeToken)
+    val st = statsOf(log.statsIn(ms))
+    val hw = sigs(log.dirs(ms, "sigs"))
       // the LSH cap, applied at read over the ACTIVE relation (an
       // append can grow a bucket past the cap later; the decision must
       // reflect the store as gated against, not write-time snapshots)
@@ -227,16 +173,13 @@ final class MediaSigIndex private (
 
   def appendToken(df: DataFrame, idCol: String, textCol: String,
       token: String): Unit = { appendOnce(df, idCol, textCol, token); () }
-
-  def seededBy(token: String): Boolean =
-    log.read().headOption.exists(_.token.contains(token))
 }
 
-object MediaSigIndex {
+object MediaSigIndex extends StoreProbe {
 
   /** Build a new index at `path` from the history corpus — the one time
     * history payloads are read. The signature parameters are pinned in
-    * `stats/` and every later gate/append uses them. */
+    * the commits' stats and every later gate/append uses them. */
   def build(history: DataFrame, idCol: String, payloadCol: String,
       path: String, blocks: Int = 8, minMatch: Int = 6,
       maxBucket: Int = 100,
@@ -246,29 +189,12 @@ object MediaSigIndex {
       s"minMatch must be in [1, blocks=$blocks], got $minMatch")
     require(maxBucket >= 2, "maxBucket must be >= 2")
     val idx = new MediaSigIndex(history.sparkSession, path)
-    idx.log.withWriteLock {
-      idx.writeBatch(history, idCol, payloadCol,
-        MediaSigIndexStats(0L, blocks, minMatch, maxBucket),
-        first = true, token = seedToken)
-    }
+    idx.log.locked(idx.writeBatch(history, idCol, payloadCol,
+      Some(MediaSigIndexStats(0L, blocks, minMatch, maxBucket)), seedToken))
     idx
   }
 
-  /** Whether `path` holds at least one committed index manifest. */
-  def exists(spark: SparkSession, path: String): Boolean =
-    new ManifestLog(spark, path).read().nonEmpty
-
-  /** Open a stored index (fails fast on a missing/foreign layout). */
-  def open(spark: SparkSession, path: String): MediaSigIndex = {
-    val idx = new MediaSigIndex(spark, path)
-    idx.stats
-    idx
-  }
-
-  private def writeStats(spark: SparkSession, path: String,
-      st: MediaSigIndexStats): Unit =
-    StatsSidecar.write(spark, path, Seq(
-      "sig_rows" -> st.sigRows.toString, "blocks" -> st.blocks.toString,
-      "min_match" -> st.minMatch.toString,
-      "max_bucket" -> st.maxBucket.toString))
+  /** Open a stored index (fails fast on a missing or older layout). */
+  def open(spark: SparkSession, path: String): MediaSigIndex =
+    StoreLog.open(new MediaSigIndex(spark, path))
 }

@@ -38,24 +38,20 @@ final case class NearDupIndexStats(docs: Long, bandKeys: Long,
   *    relation, never a window over `bands/`
   *  - `_commits/m<seq>`       one line-oriented manifest per commit naming
   *    the relation dirs it publishes (and, for compactions, the counts
-  *    dirs it supersedes). Readers resolve every relation through the
-  *    manifest list — data dirs without a marker (a crashed append) are
-  *    INVISIBLE, so a multi-relation append is all-or-nothing without a
-  *    table format.
-  *  - `stats/`                single row ([[NearDupIndexStats]]),
-  *    overwritten after each commit: `band_keys` sizes the Bloom filter so
-  *    no query runs a count job over the index (the statistics-fed
-  *    [[Dedup.keepUnseen]] treatment). Advisory only: a crash between
-  *    marker and stats leaves it one append stale, which costs Bloom bits
-  *    (fpp), never correctness — the filter's CONTENT is always built from
-  *    the committed key relation itself.
+  *    dirs it supersedes) — the shared [[StoreLog]] core. Readers resolve
+  *    every relation through the manifest list — data dirs without a
+  *    marker (a crashed append) are INVISIBLE, so a multi-relation append
+  *    is all-or-nothing without a table format. Each data commit carries
+  *    the [[NearDupIndexStats]]: `bandKeys` sizes the Bloom filter so no
+  *    query runs a count job over the index (the statistics-fed
+  *    [[Dedup.keepUnseen]] treatment); the filter's CONTENT is always
+  *    built from the committed key relation itself.
   *
   * `counts/` partials accumulate one dir per append; past
-  * `spark.graft.neardupindex.compactThreshold` (default 16) active dirs,
-  * the next append folds them into one summed dir published by a
-  * superseding commit. Superseded dirs stay on disk (a running query may
-  * still hold their paths) until [[vacuum]] unlinks them once no such
-  * reader exists.
+  * `spark.graft.index.compactThreshold` (default 16) active dirs, the
+  * next append folds them into one summed dir published by a superseding
+  * commit. Superseded dirs stay on disk (a running query may still hold
+  * their paths) until [[vacuum]] unlinks them once no such reader exists.
   *
   * Writers SERIALIZE on the layout's writer lock
   * ([[ManifestLog.withWriteLock]] — every mutating entry point takes it),
@@ -80,68 +76,46 @@ final case class NearDupIndexStats(docs: Long, bandKeys: Long,
   * digest rows — the bytes-read evidence the Bench block records.
   */
 final class NearDupIndex private (
-    private val spark: SparkSession, val path: String) extends IngestIndex {
+    private val spark: SparkSession, val path: String)
+    extends IngestIndex with LoggedStore {
 
-  /** Current stored statistics (appends move it; a driver-side
-    * [[StatsSidecar]] parse — zero Spark jobs per read). */
-  def stats: NearDupIndexStats = {
-    val kv = StatsSidecar.read(spark, path)
-    NearDupIndexStats(kv("docs").toLong, kv("band_keys").toLong,
-      kv("num_hashes").toInt, kv("bands").toInt, kv("max_bucket").toInt)
-  }
+  private[ext] val log = new StoreLog(spark, path, Seq(
+    StoreRel("digests"), StoreRel("bands"),
+    // counts partials fold into one summed dir — bounds the per-query
+    // file listing of the hottest relation (every gate aggregates
+    // `counts/` first)
+    StoreRel("counts", fold = Some((from, to) =>
+      rel("counts", from)
+        .groupBy("b", "bkey").agg(sum(col("c")).cast("long").as("c"))
+        .coalesce(4)
+        .write.mode("errorifexists").parquet(to)))))
 
-  // ---------------- manifest plumbing ([[ManifestLog]]) ----------------
+  private def statsOf(kv: Map[String, String]): NearDupIndexStats =
+    NearDupIndexStats(kv("docs").toLong, kv("bandKeys").toLong,
+      kv("numHashes").toInt, kv("bands").toInt, kv("maxBucket").toInt)
 
-  private val log = new ManifestLog(spark, path)
-  private def readManifests(): Seq[Manifest] = log.read()
-  private def commit(m: Manifest, seq: Int): Unit = log.commit(m, seq)
+  /** Current stored statistics (appends move it; read off the newest
+    * commit — zero Spark jobs per read). */
+  def stats: NearDupIndexStats = statsOf(log.stats)
 
-  /** Active dir ids per relation: all published, minus (for counts) any a
-    * later compaction superseded. */
-  private def activeIds(ms: Seq[Manifest]): (Seq[String], Seq[String], Seq[String]) = {
-    val sup = ms.flatMap(_.supersedesCounts).toSet
-    (ms.flatMap(_.digests), ms.flatMap(_.bands),
-      ms.flatMap(_.counts).filterNot(sup))
-  }
+  private def rel(name: String, dirs: Seq[String]): DataFrame =
+    RelRead.read(spark, s"$path#$name", dirs)
 
-  private def rel(name: String, ids: Seq[String]): DataFrame = {
-    require(ids.nonEmpty, s"no committed $name dirs under $path")
-    RelRead.read(spark, s"$path#$name",
-      ids.map(id => s"$path/$name/append=$id"))
-  }
-
-  /** Manifests visible to a gate, with the dirs of `excludeToken`'s
-    * commit (if any) dropped — the micro-batch REPLAY view: a rerun of
-    * batch N gates against the index as it stood before its own append.
-    * Guaranteed only while that commit is the newest data append
-    * (compaction never folds the newest counts dir), which is exactly the
-    * window in which a streaming engine can replay the batch. */
-  private def visible(excludeToken: Option[String]): Seq[Manifest] =
-    readManifests().filterNot(m => excludeToken.exists(m.token.contains))
-
-  private def digestsRel: DataFrame = digestsRelOf(visible(None))
-  private def bandsRel: DataFrame = bandsRelOf(visible(None))
-  private def countsRel: DataFrame = countsRelOf(visible(None))
-
-  private def digestsRelOf(ms: Seq[Manifest]): DataFrame = rel("digests", activeIds(ms)._1)
-  private def bandsRelOf(ms: Seq[Manifest]): DataFrame = rel("bands", activeIds(ms)._2)
-  private def countsRelOf(ms: Seq[Manifest]): DataFrame = rel("counts", activeIds(ms)._3)
+  private def relOf(ms: Seq[Manifest], name: String): DataFrame =
+    rel(name, log.dirs(ms, name))
 
   // ---------------- writes ----------------
 
   /** Index an accepted batch: its digests, band keys, and bucket-count
     * partials land in fresh `append=<id>` dirs, then ONE marker commit
-    * makes all three visible atomically; `stats/` is refreshed after the
-    * commit. Call with the rows a [[keepUnseen]] gate accepted —
-    * materialize that result first (e.g. `localCheckpoint(true)`): its
-    * plan reads this index, and appending underneath an unmaterialized
-    * gate result would let a later re-evaluation see the batch's own rows
-    * as history.
+    * makes all three — and the refreshed stats — visible atomically.
+    * Call with the rows a [[keepUnseen]] gate accepted — materialize that
+    * result first (e.g. `localCheckpoint(true)`): its plan reads this
+    * index, and appending underneath an unmaterialized gate result would
+    * let a later re-evaluation see the batch's own rows as history.
     */
   def append(df: DataFrame, idCol: String, textCol: String): NearDupIndexStats =
-    log.withWriteLock {
-      writeBatch(df, idCol, textCol, stats, first = false, token = None)
-    }
+    log.locked(writeBatch(df, idCol, textCol, None, token = None))
 
   /** [[append]] with an idempotence token — the EXACTLY-ONCE append for
     * streaming loops ([[graft.streaming.EventStream.runIndexedIngest]]): if
@@ -151,118 +125,57 @@ final class NearDupIndex private (
     * `keepUnseen(..., excludeToken = Some(token))` so the replayed GATE
     * also reproduces its original answer. */
   def appendOnce(df: DataFrame, idCol: String, textCol: String,
-      token: String): NearDupIndexStats = {
-    require(token.nonEmpty && !token.contains("\n"), "token: non-empty, one line")
-    log.withWriteLock {
-      if (readManifests().exists(_.token.contains(token))) stats
-      else writeBatch(df, idCol, textCol, stats, first = false,
-        token = Some(token))
-    }
-  }
+      token: String): NearDupIndexStats =
+    log.once(token)(stats)(writeBatch(df, idCol, textCol, None, Some(token)))
 
   private def writeBatch(df: DataFrame, idCol: String, textCol: String,
-      prev: NearDupIndexStats, first: Boolean,
-      token: Option[String]): NearDupIndexStats = {
-    val before = readManifests()
-    require(!first || before.isEmpty,
-      s"$path already holds a committed index (build() wants a fresh path)")
-    val seq = before.size + 1
-    val id = f"a$seq%06d"
-    // the shingleFrame rule (MinHashLSH): cache the UNFILTERED projection,
-    // filter above the boundary, so the empty-digest predicate can't be
-    // pushed below the fan-out exchange and recompute digests single-core
-    val proj = df.select(col(idCol).as("doc_id"), col(textCol).as("__text"))
-      .repartition(df.sparkSession.sparkContext.defaultParallelism)
-      .select(col("doc_id"), MinHashLSH.shingleDigests(col("__text")).as("ds"))
-    proj.persist()
-    try {
-      // a crashed predecessor's uncommitted dirs (invisible by
-      // construction) must not wedge the replay on errorifexists
-      Seq("digests", "bands", "counts")
-        .foreach(r => log.clearOrphan(s"$path/$r/append=$id"))
-      val nonEmpty = proj.filter(size(col("ds")) > 0)
-      nonEmpty.write.mode("errorifexists").parquet(s"$path/digests/append=$id")
-      val bk = MinHashLSH.bandedKeysFromDigests(nonEmpty, prev.numHashes,
-        prev.bands)
-      bk.write.mode("errorifexists").parquet(s"$path/bands/append=$id")
-      val ct = bk.groupBy("b", "bkey").agg(count(lit(1)).as("c"))
-      ct.write.mode("errorifexists").parquet(s"$path/counts/append=$id")
-      // writer-side schema registration: the gate/append reads of these
-      // relations (same JVM, the ingest-loop shape) skip the first-read
-      // schema-inference job
-      RelRead.seed(s"$path#digests", nonEmpty.schema)
-      RelRead.seed(s"$path#bands", bk.schema)
-      RelRead.seed(s"$path#counts", ct.schema)
-      // stats inputs BEFORE the marker: the new partials are read off their
-      // (not yet visible) dir directly; everything else off committed dirs.
-      // A fully-dropped batch leaves a zero-file dir — skip its read-back
-      // (nothing to count) instead of failing schema inference.
-      val batchDocs = nonEmpty.count()
-      // a FIRST build with zero shingled docs would leave every relation
-      // unreadable (schema inference over only-empty dirs): refuse with a
-      // clear error, like the other text-keyed stores
-      require(!first || batchDocs > 0,
-        s"cannot build a stored index at $path from a corpus with no shingles")
-      def newCounts = RelRead.read(spark, s"$path#counts",
-        Seq(s"$path/counts/append=$id"))
-      val allKeys =
-        if (first) newCounts.select("b", "bkey")
-        else if (batchDocs == 0) countsRel.select("b", "bkey")
-        else countsRel.select("b", "bkey")
-          .union(newCounts.select("b", "bkey"))
-      val bandKeys = allKeys.distinct().count()
-      val docs = prev.docs + batchDocs
-      commit(Manifest(Seq(id), Seq(id), Seq(id), Nil, token), seq) // now visible
-      val st = NearDupIndexStats(docs, bandKeys, prev.numHashes, prev.bands,
-        prev.maxBucket)
-      NearDupIndex.writeStats(spark, path, st)
-      maybeCompactCounts()
-      st
-    } finally { proj.unpersist(blocking = false); () }
-  }
-
-  /** Fold the counts partials into one summed dir once the active dir
-    * count passes the threshold — bounds the per-query file listing of the
-    * hottest relation (every gate aggregates `counts/` first) across
-    * unbounded append loops. Published as a superseding commit; the old
-    * dirs become invisible but stay on disk (see class doc).
-    */
-  private def maybeCompactCounts(): Unit = {
-    val threshold = IndexConf.strictInt(spark,
-      "spark.graft.neardupindex.compactThreshold", default = 16, min = 1)
-    val ms = readManifests()
-    val ids = activeIds(ms)._3
-    // never fold the NEWEST counts dir: it may belong to a token append a
-    // streaming engine could still replay (see [[visible]]'s contract)
-    val foldable = ids.dropRight(1)
-    if (foldable.size > threshold) {
-      val seq = ms.size + 1
-      val cid = f"c$seq%06d"
-      log.clearOrphan(s"$path/counts/append=$cid")
-      rel("counts", foldable)
-        .groupBy("b", "bkey").agg(sum(col("c")).cast("long").as("c"))
-        .coalesce(4)
-        .write.mode("errorifexists").parquet(s"$path/counts/append=$cid")
-      commit(Manifest(Nil, Nil, Seq(cid), foldable), seq)
-    }
-  }
-
-  /** Maintenance VACUUM (the class doc's deferred deletion): unlink
-    * `counts/` dirs a compaction SUPERSEDED, under the retention guard
-    * ([[ManifestLog.vacuumEligible]]): only dirs whose superseding commit
-    * is at least `spark.graft.index.vacuumRetentionMs` old (default 1h)
-    * are touched — a reader that resolved its paths just before the
-    * compaction gets the window to finish. The manifest history is
-    * untouched (readers resolve through manifests, so the superseded ids
-    * simply keep pointing at nothing); data relations (`digests/`,
-    * `bands/`) are never superseded and never touched. Locked writer.
-    * Returns the number of dirs actually removed. */
-  def vacuum(): Int = log.withWriteLock {
-    val f = log.fileSystem
-    log.vacuumEligible(_.supersedesCounts).count { id =>
-      f.delete(new org.apache.hadoop.fs.Path(s"$path/counts/append=$id"), true)
-    }
-  }
+      init: Option[NearDupIndexStats],
+      token: Option[String]): NearDupIndexStats = statsOf(
+    log.append(token, fresh = init.nonEmpty) { (id, before) =>
+      val prev = init.getOrElse(statsOf(log.statsIn(before)))
+      // the shingleFrame rule (MinHashLSH): cache the UNFILTERED
+      // projection, filter above the boundary, so the empty-digest
+      // predicate can't be pushed below the fan-out exchange and
+      // recompute digests single-core
+      val proj = df.select(col(idCol).as("doc_id"), col(textCol).as("__text"))
+        .repartition(df.sparkSession.sparkContext.defaultParallelism)
+        .select(col("doc_id"), MinHashLSH.shingleDigests(col("__text")).as("ds"))
+      proj.persist()
+      try {
+        val nonEmpty = proj.filter(size(col("ds")) > 0)
+        nonEmpty.write.mode("errorifexists").parquet(log.dir("digests", id))
+        val bk = MinHashLSH.bandedKeysFromDigests(nonEmpty, prev.numHashes,
+          prev.bands)
+        bk.write.mode("errorifexists").parquet(log.dir("bands", id))
+        val ct = bk.groupBy("b", "bkey").agg(count(lit(1)).as("c"))
+        ct.write.mode("errorifexists").parquet(log.dir("counts", id))
+        // writer-side schema registration: the gate/append reads of these
+        // relations (same JVM, the ingest-loop shape) skip the first-read
+        // schema-inference job
+        RelRead.seed(s"$path#digests", nonEmpty.schema)
+        RelRead.seed(s"$path#bands", bk.schema)
+        RelRead.seed(s"$path#counts", ct.schema)
+        // stats inputs BEFORE the marker: the new partials are read off
+        // their (not yet visible) dir directly; everything else off the
+        // committed dirs of the same snapshot. A fully-dropped batch
+        // leaves a zero-file dir — skip its read-back (nothing to count)
+        // instead of failing schema inference.
+        val batchDocs = nonEmpty.count()
+        // a FIRST build with zero shingled docs would leave every relation
+        // unreadable (schema inference over only-empty dirs): refuse with
+        // a clear error, like the other text-keyed stores
+        require(init.isEmpty || batchDocs > 0,
+          s"cannot build a stored index at $path from a corpus with no shingles")
+        def newCounts = rel("counts", Seq(log.dir("counts", id)))
+        val allKeys =
+          if (init.nonEmpty) newCounts.select("b", "bkey")
+          else if (batchDocs == 0) relOf(before, "counts").select("b", "bkey")
+          else relOf(before, "counts").select("b", "bkey")
+            .union(newCounts.select("b", "bkey"))
+        StoreLog.kvOf(prev.copy(docs = prev.docs + batchDocs,
+          bandKeys = allKeys.distinct().count()))
+      } finally { proj.unpersist(blocking = false); () }
+    }.stats)
 
   // ---------------- queries ----------------
 
@@ -300,16 +213,16 @@ final class NearDupIndex private (
 
   private def pairsPlan(incProj: DataFrame, threshold: Double,
       fpp: Double, excludeToken: Option[String]): DataFrame = {
-    val st = stats
-    val ms = visible(excludeToken)
+    val ms = log.visible(excludeToken)
+    val st = statsOf(log.statsIn(ms))
     locally {
       val incDs = incProj.filter(size(col("ds")) > 0)
       val keyStr = concat_ws("|", col("b"), col("bkey"))
       // degenerate buckets across all appends: aggregate the counts
       // partials (tiny) and anti-join the stored band relation
-      val totals = countsRelOf(ms).groupBy("b", "bkey").agg(sum(col("c")).as("__c"))
+      val totals = relOf(ms, "counts").groupBy("b", "bkey").agg(sum(col("c")).as("__c"))
       val okKeys = totals.filter(col("__c") <= st.maxBucket).select("b", "bkey")
-      val histIdx = bandsRelOf(ms).join(okKeys, Seq("b", "bkey"), "left_semi")
+      val histIdx = relOf(ms, "bands").join(okKeys, Seq("b", "bkey"), "left_semi")
       // Bloom over the surviving stored keys, sized from stored statistics
       // (band_keys counts pre-cap keys — a slight overestimate, which costs
       // filter bits, never correctness)
@@ -324,7 +237,7 @@ final class NearDupIndex private (
         .select(col("doc_id").as("doc_inc"), col("__hist_id").as("doc_hist"))
         .distinct()
       val x = incDs.select(col("doc_id").as("doc_inc"), col("ds").as("ds_a"))
-      val y = digestsRelOf(ms)
+      val y = relOf(ms, "digests")
         .select(col("doc_id").as("doc_hist"), col("ds").as("ds_b"))
       cand.join(x, "doc_inc").join(y, "doc_hist")
         .select(col("doc_inc"), col("doc_hist"),
@@ -354,12 +267,9 @@ final class NearDupIndex private (
 
   def appendToken(df: DataFrame, idCol: String, textCol: String,
       token: String): Unit = { appendOnce(df, idCol, textCol, token); () }
-
-  def seededBy(token: String): Boolean =
-    readManifests().headOption.exists(_.token.contains(token))
 }
 
-object NearDupIndex {
+object NearDupIndex extends StoreProbe {
 
   /** Build a new index at `path` (must not already hold one) from the
     * history corpus — the one time history text is read. `seedToken` (if
@@ -371,31 +281,13 @@ object NearDupIndex {
       seedToken: Option[String] = None): NearDupIndex = {
     require(numHashes % bands == 0, "numHashes must be divisible by bands")
     val idx = new NearDupIndex(history.sparkSession, path)
-    idx.log.withWriteLock {
-      idx.writeBatch(history, idCol, textCol,
-        NearDupIndexStats(0L, 0L, numHashes, bands, maxBucket), first = true,
-        token = seedToken)
-    }
+    idx.log.locked(idx.writeBatch(history, idCol, textCol,
+      Some(NearDupIndexStats(0L, 0L, numHashes, bands, maxBucket)), seedToken))
     idx
   }
 
-  /** Whether `path` holds at least one committed index manifest — the
-    * build-if-absent probe of config-driven gate stages
-    * ([[graft.plan.CurationConfig]]). */
-  def exists(spark: SparkSession, path: String): Boolean =
-    new ManifestLog(spark, path).read().nonEmpty
-
-  /** Open a stored index; parameters come from its `stats/` row. */
-  def open(spark: SparkSession, path: String): NearDupIndex = {
-    val idx = new NearDupIndex(spark, path)
-    idx.stats // fail fast on a missing/foreign layout
-    idx
-  }
-
-  private def writeStats(spark: SparkSession, path: String,
-      st: NearDupIndexStats): Unit =
-    StatsSidecar.write(spark, path, Seq(
-      "docs" -> st.docs.toString, "band_keys" -> st.bandKeys.toString,
-      "num_hashes" -> st.numHashes.toString, "bands" -> st.bands.toString,
-      "max_bucket" -> st.maxBucket.toString))
+  /** Open a stored index (fails fast on a missing or older layout);
+    * parameters come from its commits' stats. */
+  def open(spark: SparkSession, path: String): NearDupIndex =
+    StoreLog.open(new NearDupIndex(spark, path))
 }

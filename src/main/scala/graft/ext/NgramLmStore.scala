@@ -29,8 +29,8 @@ final case class NgramLmStoreStats(bigramRows: Long, buckets: Int,
   *    (`wb = pmod(hash(__w1), buckets)`) and prefix-sorted within files.
   *    Cross-append duplicates are fine: every reader SUMS partials (the
   *    [[NearDupIndex]] counts/ pattern), and compaction folds them;
-  *  - `_commits/m<seq>` marker manifests (crashed appends invisible);
-  *  - `stats/` one [[NgramLmStoreStats]] row.
+  *  - `_commits/m<seq>` marker manifests ([[StoreLog]]; crashed appends
+  *    invisible), each data commit carrying the [[NgramLmStoreStats]].
   *
   * == Scoring shape ([[scoreBatch]]) ==
   *
@@ -53,147 +53,80 @@ final case class NgramLmStoreStats(bigramRows: Long, buckets: Int,
   * score → gate → model-update cycle per micro-batch.
   */
 final class NgramLmStore private (
-    private val spark: SparkSession, val path: String) extends IngestIndex {
+    private val spark: SparkSession, val path: String)
+    extends IngestIndex with LoggedStore {
 
-  /** Current stored statistics (appends move it; a driver-side
-    * [[StatsSidecar]] parse — zero Spark jobs per read). */
-  def stats: NgramLmStoreStats = {
-    val kv = StatsSidecar.read(spark, path)
-    NgramLmStoreStats(kv("bigram_rows").toLong, kv("buckets").toInt,
-      kv("lo_micro").toLong, kv("hi_micro").toLong)
-  }
+  private[ext] val log = new StoreLog(spark, path, Seq(StoreRel("counts",
+    // one SUMMED relation: bounds the per-score file listing AND
+    // deduplicates cross-append bigram rows (shrinking every later model
+    // aggregation); sum-identical by associativity
+    fold = Some((from, to) => counts(from)
+      .groupBy("__w1", "__bg", "wb")
+      .agg(sum(col("__c12")).as("__c12"))
+      .select("__w1", "__bg", "__c12", "wb")
+      .repartition(col("wb"))
+      .sortWithinPartitions("wb", "__w1", "__bg")
+      .write.partitionBy("wb").mode("errorifexists").parquet(to)))))
 
-  private val log = new ManifestLog(spark, path)
+  private def statsOf(kv: Map[String, String]): NgramLmStoreStats =
+    NgramLmStoreStats(kv("bigramRows").toLong, kv("buckets").toInt,
+      kv("loMicro").toLong, kv("hiMicro").toLong)
 
-  private def visible(excludeToken: Option[String]): Seq[Manifest] =
-    log.read().filterNot(m => excludeToken.exists(m.token.contains))
+  /** Current stored statistics (appends move it; read off the newest
+    * commit — zero Spark jobs per read). */
+  def stats: NgramLmStoreStats = statsOf(log.stats)
 
-  private def activeIds(ms: Seq[Manifest]): Seq[String] = {
-    val sup = ms.flatMap(_.supersedesDigests).toSet
-    ms.flatMap(_.digests).filterNot(sup)
-  }
-
-  private def countsRelOf(ms: Seq[Manifest]): DataFrame = {
-    val ids = activeIds(ms)
-    require(ids.nonEmpty, s"no committed count dirs under $path")
-    RelRead.read(spark, s"$path#counts",
-      ids.map(id => s"$path/counts/append=$id"),
+  private def counts(dirs: Seq[String]): DataFrame =
+    RelRead.read(spark, s"$path#counts", dirs,
       basePath = Some(s"$path/counts"),
       schema = Some(NgramLmStore.countsSchema))
-  }
 
   // ---------------- writes ----------------
 
   /** Fold a batch's bigram counts into the model: one bucket-partitioned
-    * partials dir, one marker commit. Serialized with every other writer
-    * on the layout ([[ManifestLog.withWriteLock]]). */
+    * partials dir, one marker commit carrying the refreshed stats.
+    * Serialized with every other writer on the layout
+    * ([[ManifestLog.withWriteLock]]). */
   def append(df: DataFrame, idCol: String, textCol: String): NgramLmStoreStats =
-    log.withWriteLock {
-      writeBatch(df, idCol, textCol, stats, first = false, token = None)
-    }
+    log.locked(writeBatch(df, idCol, textCol, None, token = None))
 
   /** [[append]] with an idempotence token — exactly-once model updates
     * (the token check and the commit are atomic under the writer lock:
     * two racers with the same token fold the batch once). */
   def appendOnce(df: DataFrame, idCol: String, textCol: String,
-      token: String): NgramLmStoreStats = {
-    require(token.nonEmpty && !token.contains("\n"), "token: non-empty, one line")
-    log.withWriteLock {
-      if (log.read().exists(_.token.contains(token))) stats
-      else writeBatch(df, idCol, textCol, stats, first = false,
-        token = Some(token))
-    }
-  }
+      token: String): NgramLmStoreStats =
+    log.once(token)(stats)(writeBatch(df, idCol, textCol, None, Some(token)))
 
   private def writeBatch(df: DataFrame, idCol: String, textCol: String,
-      prev: NgramLmStoreStats, first: Boolean,
-      token: Option[String],
-      bgOverride: Option[DataFrame] = None): NgramLmStoreStats = {
-    val before = log.read()
-    require(!first || before.isEmpty,
-      s"$path already holds a committed model (build() wants a fresh path)")
-    val seq = before.size + 1
-    val id = f"a$seq%06d"
-    val dir = s"$path/counts/append=$id"
-    log.clearOrphan(dir)
-    // bgOverride: a CALLER-computed (persisted) bigram-occurrence frame
-    // of the same df — the create-path fusion hook
-    // ([[QualityProbeStore.create]] tokenizes the history corpus once
-    // and feeds both this build and its seed scoring; the grouped
-    // counts are identical by construction)
-    bgOverride.getOrElse(NgramLm.bigramsOf(df, textCol))
-      .select(col("__bg"))
-      .groupBy("__bg").agg(count(lit(1)).as("__c12"))
-      .select(split(col("__bg"), " ").getItem(0).as("__w1"),
-        col("__bg"), col("__c12"))
-      .withColumn("wb", pmod(hash(col("__w1")), lit(prev.buckets)))
-      // cluster by bucket before partitionBy: caps the append at
-      // ≤ buckets files instead of tasks × buckets (the dq127 finding)
-      .repartition(col("wb"))
-      .sortWithinPartitions("wb", "__w1", "__bg")
-      .write.partitionBy("wb").mode("errorifexists").parquet(dir)
-    val added = graft.io.ParquetMeta.rowCount(spark, dir)
-    // a FIRST append with zero rows would leave the model unreadable
-    // (every later read infers schema over only-empty dirs): refuse the
-    // degenerate build with a clear error instead of wedging later
-    require(!first || added > 0,
-      s"cannot build a stored model at $path from a corpus with no bigrams")
-    val st = NgramLmStoreStats(prev.bigramRows + added, prev.buckets,
-      prev.loMicro, prev.hiMicro)
-    // FIRST build: stats (the pinned buckets/band parameters) must be on
-    // disk BEFORE the marker commit — a crash between a first commit and
-    // a post-commit stats write would leave exists()=true with open()
-    // unable to read the layout (build-if-absent then never reseeds); a
-    // crash in the pre-commit order instead leaves exists()=false and the
-    // reseed overwrites the stats row. Later appends keep the
-    // write-after-commit order: `bigramRows` is advisory, and a
-    // post-commit crash leaves it STALE (self-heals on the next append)
-    // rather than inflated (which would not).
-    if (first) NgramLmStore.writeStats(spark, path, st)
-    log.commit(Manifest(Seq(id), Nil, Nil, Nil, token), seq)
-    if (!first) NgramLmStore.writeStats(spark, path, st)
-    maybeCompact()
-    st
-  }
-
-  /** Fold the count-partial dirs into one SUMMED relation once the active
-    * dir count passes `spark.graft.ngramstore.compactThreshold` (default
-    * 16) — bounds the per-score file listing AND deduplicates cross-append
-    * bigram rows (shrinking every later model aggregation). Newest dir
-    * never folded (token-replay window); superseded dirs stay for
-    * in-flight readers until [[vacuum]]. Sum-identical by associativity. */
-  private def maybeCompact(): Unit = {
-    val threshold = IndexConf.strictInt(spark,
-      "spark.graft.ngramstore.compactThreshold", default = 16, min = 1)
-    val ms = log.read()
-    val foldable = activeIds(ms).dropRight(1)
-    if (foldable.size > threshold) {
-      val seq = ms.size + 1
-      val cid = f"c$seq%06d"
-      val dir = s"$path/counts/append=$cid"
-      log.clearOrphan(dir)
-      RelRead.read(spark, s"$path#counts",
-        foldable.map(id => s"$path/counts/append=$id"),
-        basePath = Some(s"$path/counts"),
-        schema = Some(NgramLmStore.countsSchema))
-        .groupBy("__w1", "__bg", "wb")
-        .agg(sum(col("__c12")).as("__c12"))
-        .select("__w1", "__bg", "__c12", "wb")
+      init: Option[NgramLmStoreStats], token: Option[String],
+      bgOverride: Option[DataFrame] = None): NgramLmStoreStats = statsOf(
+    log.append(token, fresh = init.nonEmpty) { (id, before) =>
+      val prev = init.getOrElse(statsOf(log.statsIn(before)))
+      val dir = log.dir("counts", id)
+      // bgOverride: a CALLER-computed (persisted) bigram-occurrence frame
+      // of the same df — the create-path fusion hook
+      // ([[QualityProbeStore.create]] tokenizes the history corpus once
+      // and feeds both this build and its seed scoring; the grouped
+      // counts are identical by construction)
+      bgOverride.getOrElse(NgramLm.bigramsOf(df, textCol))
+        .select(col("__bg"))
+        .groupBy("__bg").agg(count(lit(1)).as("__c12"))
+        .select(split(col("__bg"), " ").getItem(0).as("__w1"),
+          col("__bg"), col("__c12"))
+        .withColumn("wb", pmod(hash(col("__w1")), lit(prev.buckets)))
+        // cluster by bucket before partitionBy: caps the append at
+        // ≤ buckets files instead of tasks × buckets (the dq127 finding)
         .repartition(col("wb"))
         .sortWithinPartitions("wb", "__w1", "__bg")
         .write.partitionBy("wb").mode("errorifexists").parquet(dir)
-      log.commit(Manifest(Seq(cid), Nil, Nil, Nil, None, foldable), seq)
-    }
-  }
-
-  /** Unlink count dirs a compaction superseded, under the retention guard
-    * ([[ManifestLog.vacuumEligible]]) and the writer lock. */
-  def vacuum(): Int = log.withWriteLock {
-    val f = log.fileSystem
-    log.vacuumEligible(_.supersedesDigests).count { id =>
-      f.delete(new org.apache.hadoop.fs.Path(s"$path/counts/append=$id"), true)
-    }
-  }
+      val added = graft.io.ParquetMeta.rowCount(spark, dir)
+      // a FIRST append with zero rows would leave the model unreadable
+      // (every later read infers schema over only-empty dirs): refuse the
+      // degenerate build with a clear error instead of wedging later
+      require(init.isEmpty || added > 0,
+        s"cannot build a stored model at $path from a corpus with no bigrams")
+      StoreLog.kvOf(prev.copy(bigramRows = prev.bigramRows + added))
+    }.stats)
 
   // ---------------- queries ----------------
 
@@ -234,7 +167,7 @@ final class NgramLmStore private (
     // unneeded vocabulary never aggregates
     val prefixes = bg
       .select(split(col("__bg"), " ").getItem(0).as("__w1")).distinct()
-    val pruned = countsRelOf(visible(excludeToken))
+    val pruned = counts(log.dirs(log.visible(excludeToken), "counts"))
       .join(prefixes, Seq("__w1"), "left_semi")
     val model = pruned.groupBy("__w1", "__bg")
       .agg(sum(col("__c12")).as("__c12"))
@@ -274,12 +207,9 @@ final class NgramLmStore private (
 
   def appendToken(df: DataFrame, idCol: String, textCol: String,
       token: String): Unit = { appendOnce(df, idCol, textCol, token); () }
-
-  def seededBy(token: String): Boolean =
-    log.read().headOption.exists(_.token.contains(token))
 }
 
-object NgramLmStore {
+object NgramLmStore extends StoreProbe {
 
   /** The `counts/` relation's schema as written (data columns in write
     * order, then the discovered partition columns `append`, `wb` exactly
@@ -309,11 +239,8 @@ object NgramLmStore {
     require(loMicro >= 0L && loMicro <= hiMicro,
       "need 0 <= loMicro <= hiMicro")
     val idx = new NgramLmStore(history.sparkSession, path)
-    idx.log.withWriteLock {
-      idx.writeBatch(history, idCol, textCol,
-        NgramLmStoreStats(0L, buckets, loMicro, hiMicro), first = true,
-        token = seedToken)
-    }
+    idx.log.locked(idx.writeBatch(history, idCol, textCol,
+      Some(NgramLmStoreStats(0L, buckets, loMicro, hiMicro)), seedToken))
     idx
   }
 
@@ -325,32 +252,14 @@ object NgramLmStore {
       hiMicro: Long = Long.MaxValue,
       seedToken: Option[String] = None): NgramLmStore = {
     val idx = new NgramLmStore(history.sparkSession, path)
-    idx.log.withWriteLock {
-      idx.writeBatch(history, "", "", // id/text unused under bgOverride
-        NgramLmStoreStats(0L, buckets, loMicro, hiMicro), first = true,
-        token = seedToken, bgOverride = Some(bg))
-    }
+    idx.log.locked(idx.writeBatch(history, "", "", // id/text unused under bgOverride
+      Some(NgramLmStoreStats(0L, buckets, loMicro, hiMicro)), seedToken,
+      bgOverride = Some(bg)))
     idx
   }
 
-  /** Whether `path` holds at least one committed model manifest — the
-    * build-if-absent probe of config-driven gate stages
-    * ([[graft.plan.CurationConfig]]). */
-  def exists(spark: SparkSession, path: String): Boolean =
-    new ManifestLog(spark, path).read().nonEmpty
-
-  /** Open a stored model; parameters come from its `stats/` row. */
-  def open(spark: SparkSession, path: String): NgramLmStore = {
-    val idx = new NgramLmStore(spark, path)
-    idx.stats // fail fast on a missing/foreign layout
-    idx
-  }
-
-  private def writeStats(spark: SparkSession, path: String,
-      st: NgramLmStoreStats): Unit =
-    StatsSidecar.write(spark, path, Seq(
-      "bigram_rows" -> st.bigramRows.toString,
-      "buckets" -> st.buckets.toString,
-      "lo_micro" -> st.loMicro.toString,
-      "hi_micro" -> st.hiMicro.toString))
+  /** Open a stored model (fails fast on a missing or older layout);
+    * parameters come from its commits' stats. */
+  def open(spark: SparkSession, path: String): NgramLmStore =
+    StoreLog.open(new NgramLmStore(spark, path))
 }

@@ -26,15 +26,15 @@ import org.apache.spark.sql.functions._
   *  - `lm/` — the frozen reference [[NgramLmStore]] (one commit, frozen);
   *  - `moments/append=<id>/` (term, value) — 14 partial-sum rows per
   *    append (the d·(d+1)/2 + d moment terms);
-  *  - `_commits/m<seq>` marker manifests; `appendOnce` tokens make
-  *    ingest-loop statistics updates exactly-once.
+  *  - `_commits/m<seq>` marker manifests ([[StoreLog]]); `appendOnce`
+  *    tokens make ingest-loop statistics updates exactly-once.
   *
   * Reading the model is a 14·appends-row aggregation — tiny rows, but
   * each append is a new DIRECTORY, and at production cadence (one
   * append per ingest batch, forever) the per-read file LISTING would
   * come to dominate the 14-row sum. So the store compacts like its
-  * siblings: past `spark.graft.probestore.compactThreshold` active dirs
-  * the partials fold into ONE summed dir under a superseding commit
+  * siblings: past `spark.graft.index.compactThreshold` active dirs the
+  * partials fold into ONE summed dir under a superseding commit
   * (sum-identical by associativity — the moments are plain Long sums),
   * the newest dir is never folded (the token-replay window), and
   * [[vacuum]] unlinks superseded dirs under the family retention guard.
@@ -55,26 +55,22 @@ import org.apache.spark.sql.functions._
   * document (there are none; the index IS the statistics).
   */
 final class QualityProbeStore private (
-    private val spark: SparkSession, val path: String) extends IngestIndex {
+    private val spark: SparkSession, val path: String)
+    extends IngestIndex with LoggedStore {
 
-  private val log = new ManifestLog(spark, path)
+  private[ext] val log = new StoreLog(spark, path, Seq(StoreRel("moments",
+    // sum-identical by associativity (the [[NgramLmStore]] compaction
+    // rule on a 14-term vocabulary)
+    fold = Some((from, to) => partials(from)
+      .groupBy("term").agg(sum(col("value")).cast("long").as("value"))
+      .coalesce(1).write.mode("errorifexists").parquet(to)))))
 
   /** The frozen reference LM (built at create, never appended). */
   lazy val referenceLm: NgramLmStore = NgramLmStore.open(spark, s"$path/lm")
 
-  private def visible(excludeToken: Option[String]): Seq[Manifest] =
-    log.read().filterNot(m => excludeToken.exists(m.token.contains))
-
-  private def activeIds(ms: Seq[Manifest]): Seq[String] = {
-    val sup = ms.flatMap(_.supersedesDigests).toSet
-    ms.flatMap(_.digests).filterNot(sup)
-  }
-
-  private def momentDirs(ms: Seq[Manifest]): Seq[String] = {
-    val ids = activeIds(ms)
-    require(ids.nonEmpty, s"no committed moment dirs under $path")
-    ids.map(id => s"$path/moments/append=$id")
-  }
+  private def partials(dirs: Seq[String]): DataFrame =
+    RelRead.read(spark, s"$path#moments", dirs,
+      schema = Some(QualityProbeStore.momentsSchema))
 
   // ---------------- writes ----------------
 
@@ -83,75 +79,31 @@ final class QualityProbeStore private (
     * 14-row partials dir, one marker commit. Serialized with every
     * other writer on the layout ([[ManifestLog.withWriteLock]]). */
   def append(df: DataFrame, idCol: String, textCol: String): Unit =
-    log.withWriteLock { writeBatch(df, idCol, textCol, token = None) }
+    log.locked(writeBatch(df, idCol, textCol, token = None))
 
   /** [[append]] with an idempotence token — exactly-once statistics
     * (check-then-commit atomic under the writer lock). */
   def appendOnce(df: DataFrame, idCol: String, textCol: String,
-      token: String): Unit = {
-    require(token.nonEmpty && !token.contains("\n"), "token: non-empty, one line")
-    log.withWriteLock {
-      if (!log.read().exists(_.token.contains(token)))
-        writeBatch(df, idCol, textCol, token = Some(token))
-    }
-  }
+      token: String): Unit =
+    log.once(token)(())(writeBatch(df, idCol, textCol, Some(token)))
 
   private def writeBatch(df: DataFrame, idCol: String, textCol: String,
       token: Option[String],
       bgOverride: Option[DataFrame] = None): Unit = {
-    val before = log.read()
-    val seq = before.size + 1
-    val id = f"a$seq%06d"
-    val dir = s"$path/moments/append=$id"
-    log.clearOrphan(dir)
-    // bgOverride: the create-path fusion hook — the seed scoring reuses
-    // the bigram frame the frozen-LM build already computed (one
-    // tokenize+explode pass over the history corpus instead of two)
-    val y = bgOverride
-      .fold(referenceLm.scoreBatch(df, idCol, textCol))(bg =>
-        referenceLm.scoreBatchWith(df, bg, idCol))
-      .select(col(idCol), col("mean_micro"))
-    val xy = QualityProbe.features(df, idCol, textCol).join(y, idCol)
-    QualityProbe.moments(xy, "mean_micro")
-      .coalesce(1).write.mode("errorifexists").parquet(dir)
-    log.commit(Manifest(Seq(id), Nil, Nil, Nil, token), seq)
-    maybeCompact()
-  }
-
-  /** Fold the moment-partial dirs into ONE summed dir once the active
-    * dir count passes `spark.graft.probestore.compactThreshold` (default
-    * 16) — bounds the per-read file listing (the one cost that grows
-    * with append count; the rows are 14 per dir). Newest dir never
-    * folded (token-replay window); superseded dirs stay for in-flight
-    * readers until [[vacuum]]. Sum-identical by associativity (the
-    * [[NgramLmStore]] compaction rule on a 14-term vocabulary). */
-  private def maybeCompact(): Unit = {
-    val threshold = IndexConf.strictInt(spark,
-      "spark.graft.probestore.compactThreshold", default = 16, min = 1)
-    val ms = log.read()
-    val foldable = activeIds(ms).dropRight(1)
-    if (foldable.size > threshold) {
-      val seq = ms.size + 1
-      val cid = f"c$seq%06d"
-      val dir = s"$path/moments/append=$cid"
-      log.clearOrphan(dir)
-      RelRead.read(spark, s"$path#moments",
-        foldable.map(id => s"$path/moments/append=$id"),
-        schema = Some(QualityProbeStore.momentsSchema))
-        .groupBy("term").agg(sum(col("value")).cast("long").as("value"))
-        .coalesce(1).write.mode("errorifexists").parquet(dir)
-      log.commit(Manifest(Seq(cid), Nil, Nil, Nil, None, foldable), seq)
+    log.append(token) { (id, _) =>
+      // bgOverride: the create-path fusion hook — the seed scoring reuses
+      // the bigram frame the frozen-LM build already computed (one
+      // tokenize+explode pass over the history corpus instead of two)
+      val y = bgOverride
+        .fold(referenceLm.scoreBatch(df, idCol, textCol))(bg =>
+          referenceLm.scoreBatchWith(df, bg, idCol))
+        .select(col(idCol), col("mean_micro"))
+      val xy = QualityProbe.features(df, idCol, textCol).join(y, idCol)
+      QualityProbe.moments(xy, "mean_micro")
+        .coalesce(1).write.mode("errorifexists").parquet(log.dir("moments", id))
+      Map.empty
     }
-  }
-
-  /** Unlink moment dirs a compaction superseded, under the retention
-    * guard ([[ManifestLog.vacuumEligible]]) and the writer lock. */
-  def vacuum(): Int = log.withWriteLock {
-    val f = log.fileSystem
-    log.vacuumEligible(_.supersedesDigests).count { id =>
-      f.delete(new org.apache.hadoop.fs.Path(s"$path/moments/append=$id"),
-        true)
-    }
+    ()
   }
 
   // ---------------- reads ----------------
@@ -159,9 +111,7 @@ final class QualityProbeStore private (
   /** The SUMMED moment table (term, value) over every committed append —
     * [[QualityProbe.moments]]'s contract over the stored partials. */
   def moments(excludeToken: Option[String] = None): DataFrame =
-    RelRead.read(spark, s"$path#moments",
-      momentDirs(visible(excludeToken)),
-      schema = Some(QualityProbeStore.momentsSchema))
+    partials(log.dirs(log.visible(excludeToken), "moments"))
       .groupBy("term").agg(sum(col("value")).cast("long").as("value"))
 
   /** The probe's EXACT milli-weights from the stored statistics
@@ -206,12 +156,9 @@ final class QualityProbeStore private (
 
   def appendToken(df: DataFrame, idCol: String, textCol: String,
       token: String): Unit = appendOnce(df, idCol, textCol, token)
-
-  def seededBy(token: String): Boolean =
-    log.read().headOption.exists(_.token.contains(token))
 }
 
-object QualityProbeStore {
+object QualityProbeStore extends StoreProbe {
 
   /** The `moments/` relation's schema as written ([[QualityProbe
     * .moments]]'s stack projection) — declared so no read of the
@@ -233,8 +180,8 @@ object QualityProbeStore {
       path: String, seedToken: Option[String] = None): QualityProbeStore = {
     val spark = history.sparkSession
     val store = new QualityProbeStore(spark, path)
-    store.log.withWriteLock {
-      require(store.log.read().isEmpty,
+    store.log.locked {
+      require(!exists(spark, path),
         s"$path already holds a committed store (create() wants a fresh path)")
       // ONE tokenize+explode pass over the history corpus feeds BOTH the
       // frozen-LM build (its grouped counts) and the seed scoring (its
@@ -259,16 +206,11 @@ object QualityProbeStore {
     store
   }
 
-  /** Whether `path` holds at least one committed statistics manifest —
-    * the build-if-absent probe of config-driven gate stages
-    * ([[graft.plan.CurationConfig]]). */
-  def exists(spark: SparkSession, path: String): Boolean =
-    new ManifestLog(spark, path).read().nonEmpty
-
-  /** Open a stored statistics table (+ its frozen reference LM). */
+  /** Open a stored statistics table (+ its frozen reference LM); fails
+    * fast on a missing or older layout. */
   def open(spark: SparkSession, path: String): QualityProbeStore = {
-    val store = new QualityProbeStore(spark, path)
-    store.referenceLm.stats // fail fast on a missing/foreign layout
+    val store = StoreLog.open(new QualityProbeStore(spark, path))
+    store.referenceLm
     store
   }
 }

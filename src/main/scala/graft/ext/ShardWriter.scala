@@ -54,7 +54,7 @@ import org.apache.spark.sql.functions._
   * flipped caption character; [[verify]] must be called with the same
   * declaration.
   */
-object ShardWriter {
+object ShardWriter extends StoreProbe {
 
   /** Columns this writer synthesizes into the shard files. Inputs must
     * not already use them — refused by name rather than silently
@@ -139,20 +139,10 @@ object ShardWriter {
       capacity: Long, units: String = "chars", epoch: Int = 1,
       streams: Int = 16, token: Option[String] = None,
       binaryCol: Option[String] = None): Long = {
-    token.foreach(t => require(t.nonEmpty && !t.contains("\n"),
-      "token: non-empty, one line"))
-    val spark = df.sparkSession
-    val log = new ManifestLog(spark, path)
-    log.withWriteLock {
-      val before = log.read()
-      if (token.exists(t => before.exists(_.token.contains(t)))) 0L
-      else {
-        val seq = before.size + 1
-        val id = f"a$seq%06d"
-        val dataDir = s"$path/data/append=$id"
-        val reportDir = s"$path/report/append=$id"
-        log.clearOrphan(dataDir)
-        log.clearOrphan(reportDir)
+    val log = storeLog(df.sparkSession, path)
+    def writeShards(): Long = {
+      val m = log.append(token) { (id, _) =>
+        val dataDir = log.dir("data", id)
         // assign's output is already stream-clustered in
         // (stream, bin, skey) order (packGreedyCarry) — the partitioned
         // write lands it directly, no second payload exchange
@@ -163,13 +153,15 @@ object ShardWriter {
         // the report describes the BYTES ON DISK: read the shards back
         // and aggregate — a write that lost rows would be caught here,
         // not at training time
-        reportOf(spark.read.option("basePath", dataDir).parquet(dataDir),
-            idCol, textCol, binaryCol)
-          .coalesce(1).write.mode("errorifexists").parquet(reportDir)
-        log.commit(Manifest(Seq(id), Nil, Nil, Nil, token), seq)
-        graft.io.ParquetMeta.rowCount(spark, reportDir) // tiny: shards
+        reportOf(df.sparkSession.read.option("basePath", dataDir)
+            .parquet(dataDir), idCol, textCol, binaryCol)
+          .coalesce(1).write.mode("errorifexists").parquet(log.dir("report", id))
+        Map.empty
       }
+      graft.io.ParquetMeta.rowCount(df.sparkSession,
+        log.dir("report", m.rel("report").head)) // tiny: shards
     }
+    token.fold(log.locked(writeShards()))(t => log.once(t)(0L)(writeShards()))
   }
 
   /** Per-shard integrity report of a shard frame: `(stream, bin, n_docs,
@@ -315,9 +307,12 @@ object ShardWriter {
         col("d.content_md5").as("disk_md5"))
   }
 
-  def exists(spark: SparkSession, path: String): Boolean =
-    new ManifestLog(spark, path).read().nonEmpty
+  private def storeLog(spark: SparkSession, path: String) =
+    new StoreLog(spark, path, Seq(StoreRel("data"), StoreRel("report")))
 
-  private def appendIds(spark: SparkSession, path: String): Seq[String] =
-    new ManifestLog(spark, path).read().flatMap(_.digests)
+  /** The committed shard-set ids, oldest first. */
+  private def appendIds(spark: SparkSession, path: String): Seq[String] = {
+    val log = storeLog(spark, path)
+    log.activeIds(log.visible(None), "data")
+  }
 }

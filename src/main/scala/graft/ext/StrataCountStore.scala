@@ -11,113 +11,65 @@ import org.apache.spark.sql.functions._
   * associative Longs, so this is the family's smallest store — one
   * `(stratum, n)` partial per append (strata-sized rows), summed at
   * read, exactly-once tokens, compaction past
-  * `spark.graft.stratastore.compactThreshold`, retention-guarded vacuum:
-  * the [[NgramLmStore]] skeleton on a two-column relation.
+  * `spark.graft.index.compactThreshold`, retention-guarded vacuum: the
+  * [[NgramLmStore]] skeleton on a two-column relation, all of it but the
+  * relation itself from the shared [[StoreLog]] core.
   */
 final class StrataCountStore private (
-    private val spark: SparkSession, val path: String) {
+    private val spark: SparkSession, val path: String) extends LoggedStore {
 
-  private val log = new ManifestLog(spark, path)
+  private[ext] val log = new StoreLog(spark, path, Seq(StoreRel("counts",
+    fold = Some((from, to) => summed(from)
+      .coalesce(1).write.mode("errorifexists").parquet(to)))))
 
-  private def visible(excludeToken: Option[String]): Seq[Manifest] =
-    log.read().filterNot(m => excludeToken.exists(m.token.contains))
-
-  private def activeIds(ms: Seq[Manifest]): Seq[String] = {
-    val sup = ms.flatMap(_.supersedesDigests).toSet
-    ms.flatMap(_.digests).filterNot(sup)
-  }
+  private def summed(dirs: Seq[String]): DataFrame =
+    spark.read.parquet(dirs: _*)
+      .groupBy("stratum").agg(sum(col("n")).cast("long").as("n"))
 
   /** Summed per-stratum counts over the visible commits — driver-sized
     * (one row per stratum ever seen). */
   def counts(excludeToken: Option[String] = None): Seq[(String, Long)] = {
-    val ids = activeIds(visible(excludeToken))
-    if (ids.isEmpty) Nil
-    else spark.read
-      .parquet(ids.map(id => s"$path/counts/append=$id"): _*)
-      .groupBy("stratum").agg(sum(col("n")).cast("long").as("n"))
+    val ms = log.visible(excludeToken)
+    if (log.activeIds(ms, "counts").isEmpty) Nil
+    else summed(log.dirs(ms, "counts"))
       .collect().map(r => (r.getString(0), r.getLong(1))).sortBy(_._1).toSeq
   }
 
   def append(counts: Seq[(String, Long)]): Unit =
-    log.withWriteLock { writeBatch(counts, token = None) }
+    log.locked(writeBatch(counts, token = None))
 
   /** [[append]] with an idempotence token — exactly-once composition
     * updates (check-then-commit atomic under the writer lock). */
-  def appendOnce(counts: Seq[(String, Long)], token: String): Unit = {
-    require(token.nonEmpty && !token.contains("\n"),
-      "token: non-empty, one line")
-    log.withWriteLock {
-      if (!log.read().exists(_.token.contains(token)))
-        writeBatch(counts, token = Some(token))
-    }
-  }
+  def appendOnce(counts: Seq[(String, Long)], token: String): Unit =
+    log.once(token)(())(writeBatch(counts, Some(token)))
 
-  private def writeBatch(counts: Seq[(String, Long)],
-      token: Option[String]): Unit = {
+  private def writeBatch(counts: Seq[(String, Long)], token: Option[String],
+      fresh: Boolean = false): Unit = {
     require(counts.forall(_._1 != null), "NULL stratum")
-    val before = log.read()
-    val seq = before.size + 1
-    val id = f"a$seq%06d"
-    val dir = s"$path/counts/append=$id"
-    log.clearOrphan(dir)
-    import spark.implicits._
-    // an EMPTY batch still needs a schema-carrying parquet file (a
-    // zero-partition empty write leaves only _SUCCESS and later reads
-    // fail schema inference — the IvfStore.writeAssigned rule), so stage
-    // an explicit one-partition empty frame for that case
-    val frame =
-      if (counts.nonEmpty) counts.toDF("stratum", "n").coalesce(1)
-      else spark.createDataFrame(
-        spark.sparkContext.parallelize(
-          Seq.empty[org.apache.spark.sql.Row], 1),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("stratum",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("n",
-            org.apache.spark.sql.types.LongType))))
-    frame.write.mode("errorifexists").parquet(dir)
-    log.commit(Manifest(Seq(id), Nil, Nil, Nil, token), seq)
-    maybeCompact()
-  }
-
-  /** Fold count partials into one summed dir past the threshold —
-    * newest dir never folded (token-replay window), superseded dirs
-    * stay for in-flight readers until [[vacuum]]. */
-  private def maybeCompact(): Unit = {
-    val threshold = IndexConf.strictInt(spark,
-      "spark.graft.stratastore.compactThreshold", default = 16, min = 1)
-    val ms = log.read()
-    val foldable = activeIds(ms).dropRight(1)
-    if (foldable.size > threshold) {
-      val seq = ms.size + 1
-      val cid = f"c$seq%06d"
-      val dir = s"$path/counts/append=$cid"
-      log.clearOrphan(dir)
-      spark.read
-        .parquet(foldable.map(id => s"$path/counts/append=$id"): _*)
-        .groupBy("stratum").agg(sum(col("n")).cast("long").as("n"))
-        .coalesce(1).write.mode("errorifexists").parquet(dir)
-      log.commit(Manifest(Seq(cid), Nil, Nil, Nil, None, foldable), seq)
+    log.append(token, fresh) { (id, _) =>
+      import spark.implicits._
+      // an EMPTY batch still needs a schema-carrying parquet file (a
+      // zero-partition empty write leaves only _SUCCESS and later reads
+      // fail schema inference — the IvfStore.writeAssigned rule), so
+      // stage an explicit one-partition empty frame for that case
+      val frame =
+        if (counts.nonEmpty) counts.toDF("stratum", "n").coalesce(1)
+        else spark.createDataFrame(
+          spark.sparkContext.parallelize(
+            Seq.empty[org.apache.spark.sql.Row], 1),
+          org.apache.spark.sql.types.StructType(Seq(
+            org.apache.spark.sql.types.StructField("stratum",
+              org.apache.spark.sql.types.StringType),
+            org.apache.spark.sql.types.StructField("n",
+              org.apache.spark.sql.types.LongType))))
+      frame.write.mode("errorifexists").parquet(log.dir("counts", id))
+      Map.empty
     }
+    ()
   }
-
-  /** Unlink superseded count dirs under the retention guard. */
-  def vacuum(): Int = log.withWriteLock {
-    val f = log.fileSystem
-    log.vacuumEligible(_.supersedesDigests).count { id =>
-      f.delete(new org.apache.hadoop.fs.Path(s"$path/counts/append=$id"),
-        true)
-    }
-  }
-
-  /** Whether the FIRST commit carries `token` — seed recognition for
-    * crash-replayed bootstrap rounds (the [[IngestIndex.seededBy]]
-    * contract). */
-  def seededBy(token: String): Boolean =
-    log.read().headOption.exists(_.token.contains(token))
 }
 
-object StrataCountStore {
+object StrataCountStore extends StoreProbe {
 
   /** Build a new count store at `path` (must be fresh) from the seed
     * batch's counts. */
@@ -125,21 +77,10 @@ object StrataCountStore {
       counts: Seq[(String, Long)],
       seedToken: Option[String] = None): StrataCountStore = {
     val store = new StrataCountStore(spark, path)
-    store.log.withWriteLock {
-      require(store.log.read().isEmpty,
-        s"$path already holds a committed store (create() wants a fresh path)")
-      store.writeBatch(counts, token = seedToken)
-    }
+    store.log.locked(store.writeBatch(counts, seedToken, fresh = true))
     store
   }
 
-  def exists(spark: SparkSession, path: String): Boolean =
-    new ManifestLog(spark, path).read().nonEmpty
-
-  def open(spark: SparkSession, path: String): StrataCountStore = {
-    val store = new StrataCountStore(spark, path)
-    require(store.log.read().nonEmpty,
-      s"no committed strata-count store under $path")
-    store
-  }
+  def open(spark: SparkSession, path: String): StrataCountStore =
+    StoreLog.open(new StrataCountStore(spark, path))
 }

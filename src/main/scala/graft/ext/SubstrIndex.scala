@@ -24,12 +24,12 @@ final case class SubstrIndexStats(digests: Long, k: Int)
   *  - `digests/append=<id>/` (dg) — the per-append DISTINCT window
   *    digests (cross-append duplicates are fine: the gate is a
   *    membership semi-join);
-  *  - `_commits/m<seq>` — marker manifests; un-committed data dirs from
-  *    a crashed writer stay invisible;
-  *  - `stats/` — one [[SubstrIndexStats]] row, refreshed after each
-  *    commit: `digests` sizes the gate's Bloom filter so no query runs a
-  *    count job over the index (statistics-fed, advisory: staleness
-  *    costs filter bits, never correctness), `k` pins the window width.
+  *  - `_commits/m<seq>` — marker manifests ([[StoreLog]]); un-committed
+  *    data dirs from a crashed writer stay invisible. Each data commit
+  *    carries the [[SubstrIndexStats]]: `digests` sizes the gate's Bloom
+  *    filter so no query runs a count job over the index
+  *    (statistics-fed, advisory: an over-count costs filter bits, never
+  *    correctness), `k` pins the window width.
   *
   * == Gate shape ([[dupWindowReport]]/[[keepFresh]]) ==
   *
@@ -43,130 +43,65 @@ final case class SubstrIndexStats(digests: Long, k: Int)
   * own committed append and the re-append is a no-op.
   */
 final class SubstrIndex private (
-    private val spark: SparkSession, val path: String) extends IngestIndex {
+    private val spark: SparkSession, val path: String)
+    extends IngestIndex with LoggedStore {
 
-  private val log = new ManifestLog(spark, path)
+  private[ext] val log = new StoreLog(spark, path, Seq(StoreRel("digests",
+    // one DISTINCT relation: de-duplicates cross-append digests,
+    // shrinking both the scan and the Bloom over-count
+    fold = Some((from, to) => digests(from).distinct().coalesce(4)
+      .write.mode("errorifexists").parquet(to)))))
 
-  /** Current stored statistics (appends move it; a driver-side
-    * [[StatsSidecar]] parse — zero Spark jobs per read). */
-  def stats: SubstrIndexStats = {
-    val kv = StatsSidecar.read(spark, path)
+  private def statsOf(kv: Map[String, String]): SubstrIndexStats =
     SubstrIndexStats(kv("digests").toLong, kv("k").toInt)
-  }
 
-  private def visible(excludeToken: Option[String]): Seq[Manifest] =
-    log.read().filterNot(m => excludeToken.exists(m.token.contains))
+  /** Current stored statistics (appends move it; read off the newest
+    * commit — zero Spark jobs per read). */
+  def stats: SubstrIndexStats = statsOf(log.stats)
 
-  /** Active digest dir ids: all published, minus any a later compaction
-    * superseded. */
-  private def activeIds(ms: Seq[Manifest]): Seq[String] = {
-    val sup = ms.flatMap(_.supersedesDigests).toSet
-    ms.flatMap(_.digests).filterNot(sup)
-  }
-
-  private def digestsRelOf(ms: Seq[Manifest]): DataFrame = {
-    val ids = activeIds(ms)
-    require(ids.nonEmpty, s"no committed digest dirs under $path")
-    RelRead.read(spark, s"$path#digests",
-      ids.map(id => s"$path/digests/append=$id"),
+  private def digests(dirs: Seq[String]): DataFrame =
+    RelRead.read(spark, s"$path#digests", dirs,
       schema = Some(SubstrIndex.digestsSchema))
-  }
 
   // ---------------- writes ----------------
 
   /** Index a batch's window digests: one fresh `append=<id>` dir, one
-    * marker commit, stats refreshed. Call with the rows a [[keepFresh]]
-    * gate accepted, MATERIALIZED first (`localCheckpoint(true)`) — the
-    * gate result's plan reads this index. */
+    * marker commit carrying the refreshed stats. Call with the rows a
+    * [[keepFresh]] gate accepted, MATERIALIZED first
+    * (`localCheckpoint(true)`) — the gate result's plan reads this
+    * index. */
   def append(df: DataFrame, idCol: String, textCol: String): SubstrIndexStats =
-    log.withWriteLock {
-      writeBatch(df, idCol, textCol, stats, first = false, token = None)
-    }
+    log.locked(writeBatch(df, idCol, textCol, None, token = None))
 
   /** [[append]] with an idempotence token — the exactly-once append: a
     * committed manifest carrying `token` makes the call a no-op. */
   def appendOnce(df: DataFrame, idCol: String, textCol: String,
-      token: String): SubstrIndexStats = {
-    require(token.nonEmpty && !token.contains("\n"), "token: non-empty, one line")
-    log.withWriteLock {
-      if (log.read().exists(_.token.contains(token))) stats
-      else writeBatch(df, idCol, textCol, stats, first = false,
-        token = Some(token))
-    }
-  }
+      token: String): SubstrIndexStats =
+    log.once(token)(stats)(writeBatch(df, idCol, textCol, None, Some(token)))
 
+  /** `init` is the build's parameters (a fresh path); appends continue
+    * from the snapshot's stats. */
   private def writeBatch(df: DataFrame, idCol: String, textCol: String,
-      prev: SubstrIndexStats, first: Boolean,
-      token: Option[String]): SubstrIndexStats = {
-    val before = log.read()
-    require(!first || before.isEmpty,
-      s"$path already holds a committed index (build() wants a fresh path)")
-    val seq = before.size + 1
-    val id = f"a$seq%06d"
-    val dgs = ExactSubstring
-      .windowDigestsOf(ExactSubstring.tokenize(df, idCol, textCol),
-        idCol, prev.k)
-      .select("dg").distinct()
-    // a crashed predecessor's uncommitted dir (invisible by construction)
-    // must not wedge the replay on errorifexists
-    log.clearOrphan(s"$path/digests/append=$id")
-    dgs.write.mode("errorifexists").parquet(s"$path/digests/append=$id")
-    // footer-summed row count: no re-scan job over the dir just written
-    val added = graft.io.ParquetMeta.rowCount(spark, s"$path/digests/append=$id")
-    // a FIRST append with zero digests would leave the index unreadable
-    // (every later read infers schema over only-empty dirs): refuse the
-    // degenerate build with a clear error instead of wedging later
-    require(!first || added > 0,
-      s"cannot build a stored index at $path from a corpus with no " +
-        s"${prev.k}-token windows")
-    log.commit(Manifest(Seq(id), Nil, Nil, Nil, token), seq) // now visible
-    val st = SubstrIndexStats(prev.digests + added, prev.k)
-    SubstrIndex.writeStats(spark, path, st)
-    maybeCompact()
-    st
-  }
-
-  /** Fold the digest dirs into one DISTINCT relation once the active dir
-    * count passes `spark.graft.substrindex.compactThreshold` (default 16)
-    * — bounds the gate's file listing across unbounded append loops, and
-    * de-duplicates cross-append digests (shrinking both the scan and the
-    * Bloom over-count). The NEWEST dir is never folded: it may belong to
-    * a token append a streaming engine could still replay (the
-    * `excludeToken` view must be able to drop it). Published as a
-    * superseding commit; superseded dirs stay on disk for in-flight
-    * readers until [[vacuum]].
-    */
-  private def maybeCompact(): Unit = {
-    val threshold = IndexConf.strictInt(spark,
-      "spark.graft.substrindex.compactThreshold", default = 16, min = 1)
-    val ms = log.read()
-    val foldable = activeIds(ms).dropRight(1)
-    if (foldable.size > threshold) {
-      val seq = ms.size + 1
-      val cid = f"c$seq%06d"
-      log.clearOrphan(s"$path/digests/append=$cid")
-      RelRead.read(spark, s"$path#digests",
-        foldable.map(id => s"$path/digests/append=$id"),
-        schema = Some(SubstrIndex.digestsSchema))
-        .distinct()
-        .coalesce(4)
-        .write.mode("errorifexists").parquet(s"$path/digests/append=$cid")
-      log.commit(Manifest(Seq(cid), Nil, Nil, Nil, None, foldable), seq)
-    }
-  }
-
-  /** Unlink digest dirs a compaction superseded, under the retention
-    * guard ([[ManifestLog.vacuumEligible]]): only dirs whose superseding
-    * commit is at least `spark.graft.index.vacuumRetentionMs` old
-    * (default 1h) are touched — an in-flight reader that planned its scan
-    * before the compaction gets the window to finish. Locked writer.
-    * Returns the number of dirs removed. */
-  def vacuum(): Int = log.withWriteLock {
-    val f = log.fileSystem
-    log.vacuumEligible(_.supersedesDigests).count { id =>
-      f.delete(new org.apache.hadoop.fs.Path(s"$path/digests/append=$id"), true)
-    }
-  }
+      init: Option[SubstrIndexStats],
+      token: Option[String]): SubstrIndexStats = statsOf(
+    log.append(token, fresh = init.nonEmpty) { (id, before) =>
+      val prev = init.getOrElse(statsOf(log.statsIn(before)))
+      val dir = log.dir("digests", id)
+      ExactSubstring
+        .windowDigestsOf(ExactSubstring.tokenize(df, idCol, textCol),
+          idCol, prev.k)
+        .select("dg").distinct()
+        .write.mode("errorifexists").parquet(dir)
+      // footer-summed row count: no re-scan job over the dir just written
+      val added = graft.io.ParquetMeta.rowCount(spark, dir)
+      // a FIRST append with zero digests would leave the index unreadable
+      // (every later read infers schema over only-empty dirs): refuse the
+      // degenerate build with a clear error instead of wedging later
+      require(init.isEmpty || added > 0,
+        s"cannot build a stored index at $path from a corpus with no " +
+          s"${prev.k}-token windows")
+      StoreLog.kvOf(SubstrIndexStats(prev.digests + added, prev.k))
+    }.stats)
 
   // ---------------- queries ----------------
 
@@ -178,10 +113,11 @@ final class SubstrIndex private (
     */
   def dupWindowReport(batch: DataFrame, idCol: String, textCol: String,
       fpp: Double = 0.01, excludeToken: Option[String] = None): DataFrame = {
+    val ms = log.visible(excludeToken)
+    val st = statsOf(log.statsIn(ms))
     val bw = ExactSubstring.windowDigestsOf(
-      ExactSubstring.tokenize(batch, idCol, textCol), idCol, stats.k)
-    CacheScope.withCached(bw)(
-      reportPlan(batch, bw, idCol, fpp, excludeToken))
+      ExactSubstring.tokenize(batch, idCol, textCol), idCol, st.k)
+    CacheScope.withCached(bw)(reportPlan(batch, bw, idCol, fpp, ms, st))
   }
 
   /** The gate's UN-materialized plan — plan-audit hook (the
@@ -189,15 +125,19 @@ final class SubstrIndex private (
     * collapses its result with a call-scoped checkpoint before a spec
     * could walk it for the no-history-scan property. */
   private[graft] def reportPlanFor(batch: DataFrame, idCol: String,
-      textCol: String): DataFrame =
+      textCol: String): DataFrame = {
+    val ms = log.visible(None)
+    val st = statsOf(log.statsIn(ms))
     reportPlan(batch, ExactSubstring.windowDigestsOf(
-      ExactSubstring.tokenize(batch, idCol, textCol), idCol, stats.k),
-      idCol, 0.01, None)
+      ExactSubstring.tokenize(batch, idCol, textCol), idCol, st.k),
+      idCol, 0.01, ms, st)
+  }
 
+  /** The gate over one snapshot `ms`: its digest dirs, and the stats `st`
+    * it carries. */
   private def reportPlan(batch: DataFrame, bw: DataFrame, idCol: String,
-      fpp: Double, excludeToken: Option[String]): DataFrame = {
-    val st = stats
-    val hw = digestsRelOf(visible(excludeToken))
+      fpp: Double, ms: Seq[Manifest], st: SubstrIndexStats): DataFrame = {
+    val hw = digests(log.dirs(ms, "digests"))
     val bloom = BloomPrune.buildFilter(hw, "dg",
       math.max(1L, st.digests), fpp)
     val (maybeSeen, _) = BloomPrune.split(bw, "dg", bloom)
@@ -231,12 +171,9 @@ final class SubstrIndex private (
 
   def appendToken(df: DataFrame, idCol: String, textCol: String,
       token: String): Unit = { appendOnce(df, idCol, textCol, token); () }
-
-  def seededBy(token: String): Boolean =
-    log.read().headOption.exists(_.token.contains(token))
 }
 
-object SubstrIndex {
+object SubstrIndex extends StoreProbe {
 
   /** The `digests/` relation's schema as written ([[ExactSubstring
     * .windowDigestsOf]]'s `dg` projection) — declared so no read of the
@@ -255,29 +192,13 @@ object SubstrIndex {
       k: Int = 8, seedToken: Option[String] = None): SubstrIndex = {
     require(k >= 2, "need k >= 2")
     val idx = new SubstrIndex(history.sparkSession, path)
-    idx.log.withWriteLock {
-      idx.writeBatch(history, idCol, textCol, SubstrIndexStats(0L, k),
-        first = true, token = seedToken)
-    }
+    idx.log.locked(idx.writeBatch(history, idCol, textCol,
+      Some(SubstrIndexStats(0L, k)), seedToken))
     idx
   }
 
-  /** Whether `path` holds at least one committed index manifest — the
-    * build-if-absent probe of config-driven gate stages
-    * ([[graft.plan.CurationConfig]]). Uncommitted orphan dirs do not
-    * count (they are invisible to every reader). */
-  def exists(spark: SparkSession, path: String): Boolean =
-    new ManifestLog(spark, path).read().nonEmpty
-
-  /** Open a stored index; `k` comes from its `stats/` row. */
-  def open(spark: SparkSession, path: String): SubstrIndex = {
-    val idx = new SubstrIndex(spark, path)
-    idx.stats // fail fast on a missing/foreign layout
-    idx
-  }
-
-  private def writeStats(spark: SparkSession, path: String,
-      st: SubstrIndexStats): Unit =
-    StatsSidecar.write(spark, path, Seq(
-      "digests" -> st.digests.toString, "k" -> st.k.toString))
+  /** Open a stored index (fails fast on a missing or older layout); `k`
+    * comes from its commits' stats. */
+  def open(spark: SparkSession, path: String): SubstrIndex =
+    StoreLog.open(new SubstrIndex(spark, path))
 }

@@ -9,10 +9,11 @@ import org.apache.spark.sql.SparkSession
   *
   * The persisted-index layouts ([[graft.ext.SubstrIndex]],
   * [[graft.ext.IvfStore]]) need the row count of an append dir they just
-  * wrote to refresh their advisory `stats/`; re-scanning the dir with
-  * `spark.read.parquet(...).count()` plans one extra job per append (round-10
-  * "What's wrong #3"). Parquet footers already carry the exact count, and
-  * reading them is a driver-side metadata walk — zero jobs, zero data pages.
+  * wrote to refresh the advisory stats their commit carries; re-scanning
+  * the dir with `spark.read.parquet(...).count()` plans one extra job per
+  * append (round-10 "What's wrong #3"). Parquet footers already carry the
+  * exact count, and reading them is a driver-side metadata walk — zero
+  * jobs, zero data pages.
   */
 object ParquetMeta {
 

@@ -69,7 +69,7 @@ class BpeStoreSpec extends GraftSpec {
   it("word partials compact past the threshold (counts unchanged) and " +
      "vacuum unlinks superseded dirs; retrain supersedes the old model") {
     val path = tmp()
-    spark.conf.set("spark.graft.bpestore.compactThreshold", "2")
+    spark.conf.set("spark.graft.index.compactThreshold", "2")
     spark.conf.set("spark.graft.index.vacuumRetentionMs", "0")
     try {
       val store = BpeStore.create(docs.filter($"doc_id" % 7 === 0), "text",
@@ -89,7 +89,7 @@ class BpeStoreSpec extends GraftSpec {
       store.wordCounts().as[(String, Long)].collect().sorted shouldBe summed
       store.model.merges should have size 3
     } finally {
-      spark.conf.unset("spark.graft.bpestore.compactThreshold")
+      spark.conf.unset("spark.graft.index.compactThreshold")
       spark.conf.unset("spark.graft.index.vacuumRetentionMs")
     }
   }
@@ -123,10 +123,10 @@ class BpeStoreSpec extends GraftSpec {
     }
     rmr(s"$path/model"); rmr(s"$path/alphabet")
     java.nio.file.Files.delete(java.nio.file.Paths.get(s"$path/_commits/m000002"))
-    StatsSidecar.write(spark, path, Seq("word_rows" -> wordRows.toString,
-      "num_merges" -> "0", "merge_budget" -> "0"))
     BpeStore.exists(spark, path) shouldBe true
     BpeStore.open(spark, path).hasModel shouldBe false
+    // the seed commit carries its own pre-retrain stats
+    BpeStore.open(spark, path).stats shouldBe BpeStoreStats(wordRows, 0, 0)
     // rerun of create(): recovers via retrain from the committed counts
     val recovered = BpeStore.create(docs, "text", path, numMerges = 4)
     recovered.hasModel shouldBe true
@@ -137,8 +137,6 @@ class BpeStoreSpec extends GraftSpec {
     // (the recovery retrain above committed m000002 — remove it again)
     rmr(s"$path/model"); rmr(s"$path/alphabet")
     java.nio.file.Files.delete(java.nio.file.Paths.get(s"$path/_commits/m000002"))
-    StatsSidecar.write(spark, path, Seq("word_rows" -> wordRows.toString,
-      "num_merges" -> "0", "merge_budget" -> "0"))
     val viaStage = graft.plan.CurationConfig
       .parse(s"""{"table":"documents","id":"doc_id","text":"text",
         | "stages":[{"stage":"bpe_tokenize","path":"$path",

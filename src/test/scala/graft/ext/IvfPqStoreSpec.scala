@@ -114,7 +114,7 @@ class IvfPqStoreSpec extends GraftSpec {
      "re-encode — post-fold PQ search equals an uncompacted twin's), " +
      "and vacuum unlinks superseded pqcodes dirs") {
     val path = tmp()
-    val key = "spark.graft.ivfstore.compactThreshold"
+    val key = "spark.graft.index.compactThreshold"
     spark.conf.set(key, "1")
     val store =
       try {

@@ -90,7 +90,7 @@ class IvfStoreSpec extends GraftSpec {
   it("assigned dirs compact past the threshold: search results unchanged, " +
      "vacuum unlinks superseded dirs") {
     val path = tmp()
-    val key = "spark.graft.ivfstore.compactThreshold"
+    val key = "spark.graft.index.compactThreshold"
     spark.conf.set(key, "2")
     try {
       val store = IvfStore.create(emb.filter($"vec_id" % 4 === 0),
@@ -477,7 +477,7 @@ class IvfStoreSpec extends GraftSpec {
     val base = (docs(0 until 30, 0) ++ docs(30 until 60, 1))
       .toDF("vec_id", "embedding").localCheckpoint(true)
     val path = tmp()
-    spark.conf.set("spark.graft.ivfstore.compactThreshold", "1")
+    spark.conf.set("spark.graft.index.compactThreshold", "1")
     try {
       val store = IvfStore.create(base, "vec_id", "embedding", path, k = 2)
       // three same-mix appends: enough to trigger folds at threshold 1;
@@ -497,7 +497,7 @@ class IvfStoreSpec extends GraftSpec {
       val adv = store.driftAdvisory().get
       adv.newestL1Ppm should be > 500000L
       store.refitAdvised() shouldBe true
-    } finally spark.conf.unset("spark.graft.ivfstore.compactThreshold")
+    } finally spark.conf.unset("spark.graft.index.compactThreshold")
   }
 
   it("driftAdvisory degrades gracefully when active dirs predate the " +

@@ -77,7 +77,7 @@ class MediaCdcIndexSpec extends GraftSpec {
      "vacuum honors the retention guard, and a drifted parameter is " +
      "refused at the declared stage by name") {
     val path = tmp()
-    spark.conf.set("spark.graft.mediacdc.compactThreshold", "2")
+    spark.conf.set("spark.graft.index.compactThreshold", "2")
     try {
       val idx = MediaCdcIndex.build(frame((1L, entropic(1))), "doc_id",
         "payload", path)
@@ -96,7 +96,7 @@ class MediaCdcIndexSpec extends GraftSpec {
           (12L, entropic(50))),
         "doc_id", "payload")) shouldBe Seq(12L)
     } finally {
-      spark.conf.unset("spark.graft.mediacdc.compactThreshold")
+      spark.conf.unset("spark.graft.index.compactThreshold")
       spark.conf.unset("spark.graft.index.vacuumRetentionMs")
     }
   }

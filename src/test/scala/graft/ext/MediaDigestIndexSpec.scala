@@ -86,7 +86,7 @@ class MediaDigestIndexSpec extends GraftSpec {
      "folded — the token-replay window) and vacuum unlinks superseded " +
      "dirs under the retention guard") {
     val path = tmp()
-    spark.conf.set("spark.graft.mediadigest.compactThreshold", "2")
+    spark.conf.set("spark.graft.index.compactThreshold", "2")
     try {
       val idx = MediaDigestIndex.build(
         frame(1L -> "a"), "doc_id", "payload", path)
@@ -110,7 +110,7 @@ class MediaDigestIndexSpec extends GraftSpec {
         frame(10L -> "a", 11L -> "k5", 12L -> "new"),
         "doc_id", "payload")) shouldBe Seq(12L)
     } finally {
-      spark.conf.unset("spark.graft.mediadigest.compactThreshold")
+      spark.conf.unset("spark.graft.index.compactThreshold")
       spark.conf.unset("spark.graft.index.vacuumRetentionMs")
     }
   }

@@ -76,7 +76,7 @@ class MediaSigIndexSpec extends GraftSpec {
   it("compaction folds past the threshold (newest never folded) and " +
      "vacuum honors the retention guard") {
     val path = tmp()
-    spark.conf.set("spark.graft.mediasig.compactThreshold", "2")
+    spark.conf.set("spark.graft.index.compactThreshold", "2")
     try {
       val idx = MediaSigIndex.build(frame((1L, "a", Set())), "doc_id",
         "payload", path)
@@ -93,7 +93,7 @@ class MediaSigIndexSpec extends GraftSpec {
         frame((10L, "a", Set(0)), (11L, "k5", Set()), (12L, "new", Set())),
         "doc_id", "payload")) shouldBe Seq(12L)
     } finally {
-      spark.conf.unset("spark.graft.mediasig.compactThreshold")
+      spark.conf.unset("spark.graft.index.compactThreshold")
       spark.conf.unset("spark.graft.index.vacuumRetentionMs")
     }
   }

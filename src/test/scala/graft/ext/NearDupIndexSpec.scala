@@ -106,7 +106,7 @@ class NearDupIndexSpec extends GraftSpec {
   it("counts/ partials compact past the threshold: the gate result is " +
      "unchanged and the active dir count stays bounded across appends") {
     val path = tmp()
-    val key = "spark.graft.neardupindex.compactThreshold"
+    val key = "spark.graft.index.compactThreshold"
     spark.conf.set(key, "2")
     try {
       val idx = NearDupIndex.build(docs, "doc_id", "text", path)
@@ -221,8 +221,9 @@ class NearDupIndexSpec extends GraftSpec {
 
   it("a manifest token round-trips byte-exact — including commas, which " +
      "the id-list fields split on (exactly-once depends on this)") {
-    val m = Manifest(Seq("a000001"), Seq("a000001"), Seq("a000001"), Nil,
-      Some("stream,epoch=3,attempt=2"))
+    val m = Manifest(
+      rels = Seq("digests", "bands", "counts").map(_ -> Seq("a000001")).toMap,
+      token = Some("stream,epoch=3,attempt=2"))
     Manifest.parse(m.render) shouldBe m
     // and end-to-end: appendOnce under a comma token is still a no-op on replay
     val idx = NearDupIndex.build(docs, "doc_id", "text", tmp())

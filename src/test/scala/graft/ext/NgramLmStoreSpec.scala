@@ -66,7 +66,7 @@ class NgramLmStoreSpec extends GraftSpec {
 
   it("count partials compact past the threshold by SUMMING — scores " +
      "unchanged, active listing bounded") {
-    val key = "spark.graft.ngramstore.compactThreshold"
+    val key = "spark.graft.index.compactThreshold"
     spark.conf.set(key, "2")
     try {
       val path = tmp()
@@ -86,7 +86,7 @@ class NgramLmStoreSpec extends GraftSpec {
      "after a default-retention vacuum (superseded dirs survive the " +
      "window); only a zero-retention vacuum unlinks them — the documented " +
      "failure mode for readers older than the window") {
-    val key = "spark.graft.ngramstore.compactThreshold"
+    val key = "spark.graft.index.compactThreshold"
     spark.conf.set(key, "2")
     try {
       val path = tmp()

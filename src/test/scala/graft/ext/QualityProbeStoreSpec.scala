@@ -132,7 +132,7 @@ class QualityProbeStoreSpec extends GraftSpec {
      "the superseded dirs without changing the model") {
     val path = tmp()
     def slice(r: Int) = docs.filter($"doc_id" % 7 === r)
-    spark.conf.set("spark.graft.probestore.compactThreshold", "3")
+    spark.conf.set("spark.graft.index.compactThreshold", "3")
     spark.conf.set("spark.graft.index.vacuumRetentionMs", "0")
     try {
       val store = QualityProbeStore.create(slice(1), "doc_id", "text", path)
@@ -140,7 +140,7 @@ class QualityProbeStoreSpec extends GraftSpec {
         store.appendOnce(slice(r), "doc_id", "text", s"b#$r"))
       // an identical store with compaction effectively off is the oracle
       val twinPath = tmp()
-      spark.conf.set("spark.graft.probestore.compactThreshold", "1000")
+      spark.conf.set("spark.graft.index.compactThreshold", "1000")
       val twin = QualityProbeStore.create(slice(1), "doc_id", "text", twinPath)
       (2 to 6).foreach(r =>
         twin.appendOnce(slice(r), "doc_id", "text", s"b#$r"))
@@ -162,7 +162,7 @@ class QualityProbeStoreSpec extends GraftSpec {
       // vacuum is idempotent
       store.vacuum() shouldBe 0
     } finally {
-      spark.conf.unset("spark.graft.probestore.compactThreshold")
+      spark.conf.unset("spark.graft.index.compactThreshold")
       spark.conf.unset("spark.graft.index.vacuumRetentionMs")
     }
   }

@@ -312,14 +312,16 @@ class StoreConcurrencySpec extends GraftSpec {
      "instead of replacing the committed manifest") {
     val path = tmp()
     val log = new ManifestLog(spark, path)
-    log.withWriteLock { log.commit(Manifest(Seq("a000001"), Nil, Nil, Nil), 1) }
+    log.withWriteLock {
+      log.commit(Manifest(rels = Map("digests" -> Seq("a000001"))), 1)
+    }
     // a rogue commit at the SAME sequence number must fail, byte-for-byte
     // preserving the first manifest
     val e = intercept[IllegalStateException] {
-      log.commit(Manifest(Seq("rogue"), Nil, Nil, Nil), 1)
+      log.commit(Manifest(rels = Map("digests" -> Seq("rogue"))), 1)
     }
     e.getMessage should include("commit collision")
-    log.read().flatMap(_.digests) shouldBe Seq("a000001")
+    log.read().flatMap(_.rel("digests")) shouldBe Seq("a000001")
     // and the stage file did not linger
     new java.io.File(s"$path/_commits").listFiles()
       .map(_.getName).filter(_.endsWith(".tmp")) shouldBe empty

@@ -153,10 +153,7 @@ class StoreCrashPropertySpec extends GraftSpec {
   }
 
   private def manifestState(path: String): Seq[String] =
-    new ManifestLog(spark, path).read().map { m =>
-      (m.digests ++ m.bands ++ m.counts ++ m.supersedesCounts ++
-        m.supersedesDigests ++ m.token.toSeq).mkString("|")
-    }
+    new ManifestLog(spark, path).read().map(_.render)
 
   private val harnesses = Seq(
     H("neardup", textBatches,

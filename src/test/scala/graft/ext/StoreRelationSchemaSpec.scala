@@ -12,9 +12,11 @@ import graft.GraftSpec
   * written layout. A writer change that drifts a relation's shape fails
   * here instead of silently misreading the store.
   *
-  * Also covers the [[StatsSidecar]] replacement of the 1-row parquet
-  * `stats/` dir (2 jobs to read + 1 to write, per access/append → zero):
-  * round-trip, swap overwrite, and the foreign-layout fail-fast.
+  * Also covers the stats that ride in the commit manifest ([[StoreLog]]:
+  * zero Spark jobs per read or write): round-trip, the newest commit
+  * wins, and the fail-fast on a missing or foreign layout; the named
+  * refusal of layouts written before the current format; and the
+  * least-recently-used bound of [[RelRead]]'s schema cache.
   */
 class StoreRelationSchemaSpec extends GraftSpec {
   import spark.implicits._
@@ -88,18 +90,91 @@ class StoreRelationSchemaSpec extends GraftSpec {
     }
   }
 
-  it("StatsSidecar round-trips, overwrites, and fails fast on a " +
-     "foreign layout") {
+  it("commit stats round-trip and overwrite (newest commit wins) and fail " +
+     "fast on a missing or foreign layout") {
     val path = tmp("kv")
-    StatsSidecar.write(spark, path, Seq("a" -> "1", "b" -> "x=y"))
-    StatsSidecar.read(spark, path) shouldBe Map("a" -> "1", "b" -> "x=y")
-    StatsSidecar.write(spark, path, Seq("a" -> "2"))
-    StatsSidecar.read(spark, path) shouldBe Map("a" -> "2")
+    val log = new StoreLog(spark, path, Seq(StoreRel("r")))
+    log.locked(log.append(None) { (_, _) => Map("a" -> "1", "b" -> "x=y") })
+    // read back off the marker file by a fresh reader
+    new StoreLog(spark, path, Nil).stats shouldBe Map("a" -> "1", "b" -> "x=y")
+    log.locked(log.append(None) { (_, _) => Map("a" -> "2") })
+    log.stats shouldBe Map("a" -> "2")
+    // a commit without stats (a compaction's) does not hide them
+    log.locked {
+      val (_, seq, id) = log.begin('c')
+      log.manifests.commit(Manifest(rels = Map("r" -> Seq(id))), seq)
+    }
+    log.stats shouldBe Map("a" -> "2")
+    log.statsIn(log.visible(None)) shouldBe Map("a" -> "2")
     an[IllegalArgumentException] should be thrownBy
-      StatsSidecar.read(spark, tmp("kv-missing"))
+      new StoreLog(spark, tmp("kv-missing"), Nil).stats
+    // a foreign layout: parquet data but no commit log
+    val foreign = tmp("kv-foreign")
+    docs.write.parquet(s"$foreign/digests/append=a000001")
+    an[IllegalArgumentException] should be thrownBy
+      SubstrIndex.open(spark, foreign)
   }
 
-  it("stats survive store reopen (sidecar is the stats of record)") {
+  /** A pre-change layout: a positional manifest (no `format=2`) over a
+    * relation dir, as the sidecar-era writers left it. */
+  private def legacyLayout(tag: String, manifest: String): String = {
+    val path = tmp(tag)
+    docs.write.parquet(s"$path/digests/append=a000001")
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$path/_commits"))
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$path/_commits/m000001"),
+      manifest.getBytes("UTF-8"))
+    path
+  }
+
+  private def refusal(path: String)(open: => Any): Unit = {
+    val e = intercept[IllegalArgumentException](open)
+    e.getMessage should (include(path) and include("predates") and
+      include("rebuilt"))
+  }
+
+  it("open refuses a positional manifest + stats/stats.kv layout by name") {
+    val path = legacyLayout("legacy-kv", "digests=a000001")
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$path/stats"))
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$path/stats/stats.kv"),
+      "digests=3\nk=4\n".getBytes("UTF-8"))
+    refusal(path)(SubstrIndex.open(spark, path))
+  }
+
+  it("open refuses a positional manifest + 1-row parquet stats/ layout by " +
+     "name, and a stale stats/ dir beside current manifests") {
+    val path = legacyLayout("legacy-parquet",
+      "digests=a000001\nbands=a000001\ncounts=a000001")
+    Seq((3L, 7L, 16, 4, 100)).toDF("docs", "band_keys", "num_hashes",
+      "bands", "max_bucket").coalesce(1).write.parquet(s"$path/stats")
+    refusal(path)(NearDupIndex.open(spark, path))
+    // the manifest check alone: every read of the log refuses it
+    refusal(path)(new ManifestLog(spark, path).read())
+    // the stats/ check alone: current manifests, a leftover stats/ dir
+    val current = tmp("stale-stats")
+    NearDupIndex.build(docs, "doc_id", "text", current)
+    docs.write.parquet(s"$current/stats")
+    refusal(current)(NearDupIndex.open(spark, current))
+  }
+
+  it("RelRead's schema cache evicts least-recently-used entries: a key " +
+     "touched between 1,100 other inserts is still served without an " +
+     "inference job") {
+    val path = tmp("lru")
+    SubstrIndex.build(docs, "doc_id", "text", path, k = 4)
+    val dirs = Seq(s"$path/digests/append=a000001")
+    val key = s"$path#lru-probe"
+    RelRead.seed(key, SubstrIndex.digestsSchema)
+    JobCount.of(spark, "lru") {
+      for (i <- 1 to 1100) {
+        RelRead.seed(s"$path#lru-filler-$i", SubstrIndex.digestsSchema)
+        if (i % 100 == 0) RelRead.read(spark, key, dirs)
+      }
+      RelRead.read(spark, key, dirs)
+      ()
+    } shouldBe 0
+  }
+
+  it("stats survive store reopen (the commit is the stats of record)") {
     val path = tmp("reopen")
     val st = SubstrIndex.build(docs, "doc_id", "text", path, k = 4).stats
     SubstrIndex.open(spark, path).stats shouldBe st

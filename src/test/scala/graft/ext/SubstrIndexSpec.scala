@@ -122,7 +122,7 @@ class SubstrIndexSpec extends GraftSpec {
   it("digest dirs compact past the threshold: gate answers unchanged, " +
      "active listing bounded, vacuum unlinks the superseded dirs") {
     val path = tmp()
-    val key = "spark.graft.substrindex.compactThreshold"
+    val key = "spark.graft.index.compactThreshold"
     spark.conf.set(key, "2")
     try {
       val idx = SubstrIndex.build(history, "doc_id", "text", path, k)
@@ -221,7 +221,7 @@ class SubstrIndexSpec extends GraftSpec {
 
   it("a junk compactThreshold conf fails NAMING the conf, not with an " +
      "anonymous NumberFormatException mid-append") {
-    val key = "spark.graft.substrindex.compactThreshold"
+    val key = "spark.graft.index.compactThreshold"
     val idx = SubstrIndex.build(history, "doc_id", "text", tmp(), k)
     spark.conf.set(key, "lots")
     try {

@@ -897,7 +897,7 @@ class CurationConfigSpec extends GraftSpec {
     val path = java.nio.file.Files
       .createTempDirectory("graft-curation-vac").toString + "/idx"
     // force folds: threshold 1 means the third append compacts history
-    spark.conf.set("spark.graft.ngramstore.compactThreshold", "1")
+    spark.conf.set("spark.graft.index.compactThreshold", "1")
     spark.conf.set("spark.graft.index.vacuumRetentionMs", "0")
     try {
       val docs = spark.read.parquet(s"$d/documents.parquet")
@@ -924,7 +924,7 @@ class CurationConfigSpec extends GraftSpec {
       store.scoreBatch(docs.filter($"doc_id" === 1L), "doc_id", "text")
         .count() shouldBe 1L
     } finally {
-      spark.conf.unset("spark.graft.ngramstore.compactThreshold")
+      spark.conf.unset("spark.graft.index.compactThreshold")
       spark.conf.unset("spark.graft.index.vacuumRetentionMs")
     }
     // the probe store is part of the compacting family now: force a
@@ -932,7 +932,7 @@ class CurationConfigSpec extends GraftSpec {
     // 14-row summed table still answers
     val ppath = java.nio.file.Files
       .createTempDirectory("graft-curation-vacp").toString + "/qp"
-    spark.conf.set("spark.graft.probestore.compactThreshold", "1")
+    spark.conf.set("spark.graft.index.compactThreshold", "1")
     spark.conf.set("spark.graft.index.vacuumRetentionMs", "0")
     try {
       val docs = spark.read.parquet(s"$d/documents.parquet")
@@ -951,7 +951,7 @@ class CurationConfigSpec extends GraftSpec {
       pDirs() should be < pBefore
       qp.moments().count() shouldBe 14L
     } finally {
-      spark.conf.unset("spark.graft.probestore.compactThreshold")
+      spark.conf.unset("spark.graft.index.compactThreshold")
       spark.conf.unset("spark.graft.index.vacuumRetentionMs")
     }
     // the strata-count store completes the family (r14 verdict #3 —
@@ -960,7 +960,7 @@ class CurationConfigSpec extends GraftSpec {
     // count dirs unlink and the summed counts still answer
     val spath = java.nio.file.Files
       .createTempDirectory("graft-curation-vacs").toString + "/sc"
-    spark.conf.set("spark.graft.stratastore.compactThreshold", "1")
+    spark.conf.set("spark.graft.index.compactThreshold", "1")
     spark.conf.set("spark.graft.index.vacuumRetentionMs", "0")
     try {
       val sc = graft.ext.StrataCountStore.create(spark, spath,
@@ -978,7 +978,7 @@ class CurationConfigSpec extends GraftSpec {
       sDirs() should be < sBefore
       sc.counts() shouldBe Seq(("de", 1L), ("en", 5L), ("fr", 5L))
     } finally {
-      spark.conf.unset("spark.graft.stratastore.compactThreshold")
+      spark.conf.unset("spark.graft.index.compactThreshold")
       spark.conf.unset("spark.graft.index.vacuumRetentionMs")
     }
     // a vacuum pointed at nothing fails naming the kind and path

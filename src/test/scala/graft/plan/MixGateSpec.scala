@@ -92,7 +92,7 @@ class MixGateSpec extends GraftSpec {
   it("StrataCountStore: appendOnce idempotent, compaction sum-identical, " +
      "vacuum retention-guarded, empty appends round-trip") {
     val path = tmp()
-    spark.conf.set("spark.graft.stratastore.compactThreshold", "2")
+    spark.conf.set("spark.graft.index.compactThreshold", "2")
     spark.conf.set("spark.graft.index.vacuumRetentionMs", "0")
     try {
       val st = StrataCountStore.create(spark, path,
@@ -111,7 +111,7 @@ class MixGateSpec extends GraftSpec {
       st.vacuum() should be > 0
       st.counts() shouldBe Seq(("a", 5L), ("b", 5L), ("c", 5L))
     } finally {
-      spark.conf.unset("spark.graft.stratastore.compactThreshold")
+      spark.conf.unset("spark.graft.index.compactThreshold")
       spark.conf.unset("spark.graft.index.vacuumRetentionMs")
     }
   }
