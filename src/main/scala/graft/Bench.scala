@@ -1220,7 +1220,7 @@ object Bench {
         else "unknown"
       } else head.take(12)
     } catch { case _: Throwable => "unknown" }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.cpus
     val provenance =
       s""""provenance":{"git_sha":"$gitSha","ts_ms":${System.currentTimeMillis()},""" +
         f""""loadavg_start":$load0%.2f,"loadavg_end":$load4%.2f,""" +

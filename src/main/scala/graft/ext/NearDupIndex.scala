@@ -4,9 +4,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Index-wide statistics, stored with the layout and re-read by [[NearDupIndex.open]]:
-  * `docs` indexed documents, `bandKeys` distinct (b, bkey) pairs — the Bloom
-  * sizing feed — plus the construction parameters, so a reader can't probe a
-  * stored index with mismatched banding.
+  * `docs` indexed documents, `bandKeys` an (advisory) upper bound on the
+  * distinct (b, bkey) pairs — each append adds its own distinct keys, so
+  * keys shared across appends count once per append; it only sizes the
+  * Bloom filter — plus the construction parameters, so a reader can't probe
+  * a stored index with mismatched banding.
   */
 final case class NearDupIndexStats(docs: Long, bandKeys: Long,
     numHashes: Int, bands: Int, maxBucket: Int)
@@ -155,25 +157,19 @@ final class NearDupIndex private (
         RelRead.seed(s"$path#digests", nonEmpty.schema)
         RelRead.seed(s"$path#bands", bk.schema)
         RelRead.seed(s"$path#counts", ct.schema)
-        // stats inputs BEFORE the marker: the new partials are read off
-        // their (not yet visible) dir directly; everything else off the
-        // committed dirs of the same snapshot. A fully-dropped batch
-        // leaves a zero-file dir — skip its read-back (nothing to count)
-        // instead of failing schema inference.
-        val batchDocs = nonEmpty.count()
+        // stats off the new dirs' parquet footers (no Spark job): `docs`
+        // is exact; `bandKeys` adds this append's distinct keys to the
+        // previous bound, so a key already in history counts again — an
+        // upper bound, which only sizes the gate's Bloom filter
+        val batchDocs = graft.io.ParquetMeta.rowCount(spark, log.dir("digests", id))
         // a FIRST build with zero shingled docs would leave every relation
         // unreadable (schema inference over only-empty dirs): refuse with
         // a clear error, like the other text-keyed stores
         require(init.isEmpty || batchDocs > 0,
           s"cannot build a stored index at $path from a corpus with no shingles")
-        def newCounts = rel("counts", Seq(log.dir("counts", id)))
-        val allKeys =
-          if (init.nonEmpty) newCounts.select("b", "bkey")
-          else if (batchDocs == 0) relOf(before, "counts").select("b", "bkey")
-          else relOf(before, "counts").select("b", "bkey")
-            .union(newCounts.select("b", "bkey"))
+        val batchKeys = graft.io.ParquetMeta.rowCount(spark, log.dir("counts", id))
         StoreLog.kvOf(prev.copy(docs = prev.docs + batchDocs,
-          bandKeys = allKeys.distinct().count()))
+          bandKeys = prev.bandKeys + batchKeys))
       } finally { proj.unpersist(blocking = false); () }
     }.stats)
 
@@ -224,8 +220,9 @@ final class NearDupIndex private (
       val okKeys = totals.filter(col("__c") <= st.maxBucket).select("b", "bkey")
       val histIdx = relOf(ms, "bands").join(okKeys, Seq("b", "bkey"), "left_semi")
       // Bloom over the surviving stored keys, sized from stored statistics
-      // (band_keys counts pre-cap keys — a slight overestimate, which costs
-      // filter bits, never correctness)
+      // (bandKeys is an upper bound: pre-cap keys, cross-append repeats
+      // counted per append — an overestimate costs filter bits, never
+      // correctness)
       val filter = BloomPrune.buildFilter(okKeys.select(keyStr.as("__k")),
         "__k", math.max(1L, st.bandKeys), fpp)
       val (maybeSeen, _) = BloomPrune.split(

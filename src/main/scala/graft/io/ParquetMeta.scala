@@ -1,6 +1,6 @@
 package graft.io
 
-import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
@@ -30,24 +30,26 @@ object ParquetMeta {
     val conf = spark.sessionState.newHadoopConf()
     val root = new HPath(dir)
     val fs = root.getFileSystem(conf)
-    val it = fs.listFiles(root, true)
-    val files = scala.collection.mutable.ArrayBuffer.empty[HPath]
-    while (it.hasNext) {
-      val s = it.next()
+    // a listStatus walk, not `listFiles`: the latter wraps each file in a
+    // LocatedFileStatus, which on the local FS loads its permissions by
+    // forking `ls -ld` once per file
+    val files = scala.collection.mutable.ArrayBuffer.empty[FileStatus]
+    def walk(d: HPath): Unit = fs.listStatus(d).foreach { s =>
       val name = s.getPath.getName
-      if (s.isFile && !name.startsWith("_") && !name.startsWith("."))
-        files += s.getPath
+      if (s.isDirectory) walk(s.getPath)
+      else if (!name.startsWith("_") && !name.startsWith(".")) files += s
     }
+    walk(root)
     if (files.isEmpty) return 0L
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.min(16, files.size))
     try {
       import scala.jdk.CollectionConverters._
       val tasks: java.util.List[java.util.concurrent.Callable[Long]] =
-        files.map { p =>
+        files.map { st =>
           new java.util.concurrent.Callable[Long] {
             def call(): Long = {
-              val r = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
+              val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
               try r.getRecordCount finally r.close()
             }
           }: java.util.concurrent.Callable[Long]
