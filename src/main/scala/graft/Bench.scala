@@ -743,7 +743,7 @@ object Bench {
         val buildSec = (System.nanoTime() - tb0) / 1e9
         val probe = docs.limit(200).select(col("doc_id"), col("text"))
           .localCheckpoint(true)
-        val kept = store.gateKeep(probe, "doc_id", "text", None)
+        val kept = store.keepAboveMean(probe, "doc_id", "text")
         kept.collect()
         val scans = graft.plans.PlanWalk
           .collectAll(kept.queryExecution.executedPlan) {

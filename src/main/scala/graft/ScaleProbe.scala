@@ -1029,7 +1029,7 @@ object ScaleProbe {
         val store = graft.ext.QualityProbeStore.create(corpus, "doc_id",
           "text", path)
         val tb1 = System.nanoTime()
-        val storedKept = store.gateKeep(batch, "doc_id", "text", None).count()
+        val storedKept = store.keepAboveMean(batch, "doc_id", "text").count()
         val tb2 = System.nanoTime()
         // session path: per-call retrain — frozen-LM self-target + moments
         val y = graft.ext.NgramLm

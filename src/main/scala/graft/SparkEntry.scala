@@ -2289,9 +2289,11 @@ object SparkEntry {
     val path = graft.io.TempReaper.tempDir("graft-dq128-idx").toString + "/idx"
     val store = graft.ext.NgramLmStore.build(docs, "doc_id", "text", path,
       loMicro = 20000L)
-    val kept1 = store.gateKeep(b1, "doc_id", "text", None).localCheckpoint(true)
+    val st = store.stats
+    val kept1 = store.keepBand(b1, "doc_id", "text", st.loMicro, st.hiMicro)
+      .localCheckpoint(true)
     store.append(kept1, "doc_id", "text")
-    val kept2 = store.gateKeep(b2, "doc_id", "text", None)
+    val kept2 = store.keepBand(b2, "doc_id", "text", st.loMicro, st.hiMicro)
     kept1.select(lit(1L).as("batch"), col("doc_id"))
       .union(kept2.select(lit(2L).as("batch"), col("doc_id")))
       .orderBy("batch", "doc_id")
@@ -2370,7 +2372,7 @@ object SparkEntry {
   }
 
   /** DQ132 (EXT): the stored statistics as the FIFTH gated modality —
-    * [[graft.ext.QualityProbeStore.gateKeep]] keeps batch documents
+    * [[graft.ext.QualityProbeStore.keepAboveMean]] keeps batch documents
     * scoring at or above the stored corpus's mean quality under the
     * CURRENT Cramer weights (threshold ⌊Σ w_j·m_0_j / m_0_0⌋ — both
     * model and threshold off the 14-row table, no history rescan), and
@@ -2382,9 +2384,9 @@ object SparkEntry {
     val (b1, b2) = nearDupBatches(docs)
     val path = graft.io.TempReaper.tempDir("graft-dq132-idx").toString + "/idx"
     val store = graft.ext.QualityProbeStore.create(docs, "doc_id", "text", path)
-    val kept1 = store.gateKeep(b1, "doc_id", "text", None).localCheckpoint(true)
+    val kept1 = store.keepAboveMean(b1, "doc_id", "text").localCheckpoint(true)
     store.append(kept1, "doc_id", "text")
-    val kept2 = store.gateKeep(b2, "doc_id", "text", None)
+    val kept2 = store.keepAboveMean(b2, "doc_id", "text")
     kept1.select(lit(1L).as("batch"), col("doc_id"))
       .union(kept2.select(lit(2L).as("batch"), col("doc_id")))
       .orderBy("batch", "doc_id")

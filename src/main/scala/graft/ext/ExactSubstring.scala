@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -52,21 +52,40 @@ object ExactSubstring {
     */
   private[ext] def tokenize(df: DataFrame, idCol: String,
       textCol: String): DataFrame =
-    df.select(col(idCol), col(textCol))
-      .repartition(df.sparkSession.sparkContext.defaultParallelism)
-      .select(col(idCol),
-        filter(split(col(textCol), "\\s+"), t => length(t) > 0).as("__toks"))
+    fanOut(df.select(col(idCol), col(textCol)))
+      .select(col(idCol), tokensOf(col(textCol)).as("__toks"))
+
+  /** `df`'s rows, fanned out like [[tokenize]], with each document's
+    * k-window digests in window order as `__dgs` — the row-carrying form
+    * a store gate caches, so its survivors keep their digests. */
+  private[ext] def withWindowDigests(df: DataFrame, textCol: String,
+      k: Int): DataFrame =
+    fanOut(df).withColumn("__toks", tokensOf(col(textCol)))
+      .withColumn("__dgs", windowDigests(col("__toks"), k))
+      .drop("__toks")
+
+  private def fanOut(df: DataFrame): DataFrame =
+    df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+
+  private def tokensOf(text: Column): Column =
+    filter(split(text, "\\s+"), t => length(t) > 0)
+
+  /** Every k-token window's content digest, in window order (md5 of the
+    * space-joined window) — the one window derivation. Pass a projected
+    * token column: the window lambda reads it once per window. */
+  private def windowDigests(toks: Column, k: Int): Column =
+    when(size(toks) >= k,
+      transform(sequence(lit(1), size(toks) - (k - 1)),
+        p => md5(concat_ws(" ", slice(toks, p, lit(k))))))
+      .otherwise(array().cast("array<string>"))
 
   /** (idCol, pos, dg): every k-token window's position and content digest
     * — the only corpus-wide-shuffled shape of this family. */
   private[ext] def windowDigestsOf(toks: DataFrame, idCol: String,
       k: Int): DataFrame =
-    toks.where(size(col("__toks")) >= k)
-      .select(col(idCol),
-        explode(sequence(lit(1), size(col("__toks")) - (k - 1))).as("pos"),
-        col("__toks"))
-      .select(col(idCol), col("pos").cast("long").as("pos"),
-        md5(concat_ws(" ", slice(col("__toks"), col("pos"), lit(k)))).as("dg"))
+    toks.select(col(idCol),
+        posexplode(windowDigests(col("__toks"), k)).as(Seq("__p", "dg")))
+      .select(col(idCol), (col("__p") + 1).cast("long").as("pos"), col("dg"))
 
   /** Duplicated-digest occurrence threshold above which a digest is
     * routed through the BROADCAST side of the starts join (strict-parsed

@@ -100,7 +100,7 @@ final case class PermuteAdvisory(generation: Int, subspaces: Int,
   * map-only (the frozen-centroid kernel); the batch's distinct probed
   * cells (≤ k, driver-sized) become a LITERAL partition filter, so the
   * gate reads only probed cell partitions at file listing. With
-  * [[appendToken]], the unchanged generic ingest loop
+  * [[gate]] and `append(gated, token)`, the unchanged generic ingest loop
   * ([[graft.streaming.EventStream.runIndexedIngest]]) serves embeddings
   * exactly as it serves the two text modalities.
   */
@@ -1371,15 +1371,26 @@ final class IvfStore private (private val spark: SparkSession,
 
   // ---------------- IngestIndex ----------------
 
-  def gateKeep(batch: DataFrame, idCol: String, textCol: String,
-      excludeToken: Option[String]): DataFrame = {
+  def gate(batch: DataFrame, idCol: String, textCol: String,
+      excludeToken: Option[String]): IngestIndex.Gated = {
     val st = stats
-    semanticKeepUnseen(batch, idCol, textCol, st.gateTau, st.gateNprobe,
-      excludeToken)
+    IngestIndex.ofRows(path, semanticKeepUnseen(batch, idCol, textCol,
+      st.gateTau, st.gateNprobe, excludeToken), idCol, textCol)
   }
 
-  def appendToken(df: DataFrame, idCol: String, textCol: String,
-      token: String): Unit = { appendOnce(df, idCol, textCol, token); () }
+  /** [[gate]] on the PQ tier ([[semanticKeepUnseenPq]]). */
+  def gatePq(batch: DataFrame, idCol: String, embCol: String, tau: Double,
+      nprobe: Int, shortlist: Int,
+      excludeToken: Option[String]): IngestIndex.Gated =
+    IngestIndex.ofRows(path, semanticKeepUnseenPq(batch, idCol, embCol, tau,
+      nprobe, shortlist, excludeToken = excludeToken), idCol, embCol)
+
+  def append(gated: IngestIndex.Gated, token: Option[String]): Unit = {
+    gated.requireFrom(path)
+    log.write(token)(stats)(
+      writeBatch(gated.features, gated.idCol, gated.textCol, token))
+    ()
+  }
 }
 
 object IvfStore extends StoreProbe {

@@ -50,8 +50,9 @@ final case class MediaCdcIndexStats(chunkRows: Long, window: Int,
   * might-seen minority rides the chunk equi-join; a batch row drops
   * when any single stored vid accumulates ≥ `minShared` distinct
   * shared hashes. NO self-id exclusion (the gate contract: replays
-  * drop through their own append). Exactly-once loops use
-  * [[appendToken]] + `excludeToken` (the [[IngestIndex]] contract) —
+  * drop through their own append). Exactly-once loops use [[gate]]
+  * with `excludeToken`, then `append(gated, token)` (the [[IngestIndex]]
+  * contract) —
   * the EIGHTH gated modality of the one generic ingest loop.
   */
 final class MediaCdcIndex private (
@@ -78,8 +79,9 @@ final class MediaCdcIndex private (
   // ---------------- writes ----------------
 
   /** Index a batch's chunk rows: one fresh `append=<id>` dir, one
-    * marker commit carrying the refreshed stats. Call with the rows a
-    * gate accepted, MATERIALIZED first. */
+    * marker commit carrying the refreshed stats. Call with rows that do
+    * not read this index (a [[keepFarPayloads]] answer materialized, or
+    * use [[gate]], whose answer already is). */
   def append(df: DataFrame, idCol: String,
       payloadCol: String): MediaCdcIndexStats =
     log.locked(writeBatch(df, idCol, payloadCol, None, token = None))
@@ -164,12 +166,18 @@ final class MediaCdcIndex private (
   // ---------------- IngestIndex ----------------
 
   /** The generic-loop gate: `textCol` IS the binary payload column. */
-  def gateKeep(batch: DataFrame, idCol: String, textCol: String,
-      excludeToken: Option[String]): DataFrame =
-    keepFarPayloads(batch, idCol, textCol, excludeToken = excludeToken)
+  def gate(batch: DataFrame, idCol: String, textCol: String,
+      excludeToken: Option[String]): IngestIndex.Gated =
+    IngestIndex.ofRows(path,
+      keepFarPayloads(batch, idCol, textCol, excludeToken = excludeToken),
+      idCol, textCol)
 
-  def appendToken(df: DataFrame, idCol: String, textCol: String,
-      token: String): Unit = { appendOnce(df, idCol, textCol, token); () }
+  def append(gated: IngestIndex.Gated, token: Option[String]): Unit = {
+    gated.requireFrom(path)
+    log.write(token)(stats)(
+      writeBatch(gated.features, gated.idCol, gated.textCol, None, token))
+    ()
+  }
 }
 
 object MediaCdcIndex extends StoreProbe {

@@ -42,8 +42,9 @@ final case class MediaDigestIndexStats(digests: Long)
   * (and one distinct digest is stored) — compose a within-frame
   * `media_dedup` stage before the gate when batch-internal copies must
   * also collapse, exactly like `exact_dedup` before `substr_gate`.
-  * Exactly-once streaming loops use [[appendToken]] + `excludeToken`
-  * (the [[IngestIndex]] contract): a replayed micro-batch gates against
+  * Exactly-once streaming loops use [[gate]] with `excludeToken`, then
+  * `append(gated, token)` (the [[IngestIndex]] contract): a replayed
+  * micro-batch gates against
   * the index as it stood before its own committed append, and the
   * re-append is a no-op.
   */
@@ -68,9 +69,10 @@ final class MediaDigestIndex private (
   // ---------------- writes ----------------
 
   /** Index a batch's payload digests: one fresh `append=<id>` dir, one
-    * marker commit carrying the refreshed stats. Call with the rows a
-    * gate accepted, MATERIALIZED first (`localCheckpoint(true)`) — the
-    * gate result's plan reads this index. */
+    * marker commit carrying the refreshed stats. Call with rows that do
+    * not read this index: a [[keepUnseenPayloads]] result's plan does, so
+    * materialize it first — or use [[gate]], whose answer is already
+    * materialized. */
   def append(df: DataFrame, idCol: String,
       payloadCol: String): MediaDigestIndexStats =
     log.locked(writeBatch(df, payloadCol, first = false, token = None))
@@ -135,12 +137,18 @@ final class MediaDigestIndex private (
   /** The generic-loop gate: `textCol` IS the binary payload column for
     * this modality (the [[IngestIndex]] contract names it text because
     * four of six stores gate on text). */
-  def gateKeep(batch: DataFrame, idCol: String, textCol: String,
-      excludeToken: Option[String]): DataFrame =
-    keepUnseenPayloads(batch, idCol, textCol, excludeToken = excludeToken)
+  def gate(batch: DataFrame, idCol: String, textCol: String,
+      excludeToken: Option[String]): IngestIndex.Gated =
+    IngestIndex.ofRows(path,
+      keepUnseenPayloads(batch, idCol, textCol, excludeToken = excludeToken),
+      idCol, textCol)
 
-  def appendToken(df: DataFrame, idCol: String, textCol: String,
-      token: String): Unit = { appendOnce(df, idCol, textCol, token); () }
+  def append(gated: IngestIndex.Gated, token: Option[String]): Unit = {
+    gated.requireFrom(path)
+    log.write(token)(stats)(
+      writeBatch(gated.features, gated.textCol, first = false, token))
+    ()
+  }
 }
 
 object MediaDigestIndex extends StoreProbe {

@@ -44,8 +44,9 @@ final case class MediaSigIndexStats(sigRows: Long, blocks: Int,
   * bearing the batch row's own id is duplicate evidence — replays drop
   * through their own append). Byte-identical payloads share all
   * `blocks` hashes, so the near gate subsumes the exact gate at the
-  * same parameters. Exactly-once loops use [[appendToken]] +
-  * `excludeToken` (the [[IngestIndex]] contract).
+  * same parameters. Exactly-once loops use [[gate]] with
+  * `excludeToken`, then `append(gated, token)` (the [[IngestIndex]]
+  * contract).
   */
 final class MediaSigIndex private (
     private val spark: SparkSession, val path: String)
@@ -70,8 +71,9 @@ final class MediaSigIndex private (
   // ---------------- writes ----------------
 
   /** Index a batch's signature rows: one fresh `append=<id>` dir, one
-    * marker commit carrying the refreshed stats. Call with the rows a
-    * gate accepted, MATERIALIZED first. */
+    * marker commit carrying the refreshed stats. Call with rows that do
+    * not read this index (a [[keepFarPayloads]] answer materialized, or
+    * use [[gate]], whose answer already is). */
   def append(df: DataFrame, idCol: String,
       payloadCol: String): MediaSigIndexStats =
     log.locked(writeBatch(df, idCol, payloadCol, None, token = None))
@@ -167,12 +169,18 @@ final class MediaSigIndex private (
   // ---------------- IngestIndex ----------------
 
   /** The generic-loop gate: `textCol` IS the binary payload column. */
-  def gateKeep(batch: DataFrame, idCol: String, textCol: String,
-      excludeToken: Option[String]): DataFrame =
-    keepFarPayloads(batch, idCol, textCol, excludeToken = excludeToken)
+  def gate(batch: DataFrame, idCol: String, textCol: String,
+      excludeToken: Option[String]): IngestIndex.Gated =
+    IngestIndex.ofRows(path,
+      keepFarPayloads(batch, idCol, textCol, excludeToken = excludeToken),
+      idCol, textCol)
 
-  def appendToken(df: DataFrame, idCol: String, textCol: String,
-      token: String): Unit = { appendOnce(df, idCol, textCol, token); () }
+  def append(gated: IngestIndex.Gated, token: Option[String]): Unit = {
+    gated.requireFrom(path)
+    log.write(token)(stats)(
+      writeBatch(gated.features, gated.idCol, gated.textCol, None, token))
+    ()
+  }
 }
 
 object MediaSigIndex extends StoreProbe {

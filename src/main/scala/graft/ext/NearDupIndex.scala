@@ -111,16 +111,13 @@ final class NearDupIndex private (
   /** Index an accepted batch: its digests, band keys, and bucket-count
     * partials land in fresh `append=<id>` dirs, then ONE marker commit
     * makes all three — and the refreshed stats — visible atomically.
-    * Call with the rows a [[keepUnseen]] gate accepted — materialize that
-    * result first (e.g. `localCheckpoint(true)`): its plan reads this
-    * index, and appending underneath an unmaterialized gate result would
-    * let a later re-evaluation see the batch's own rows as history.
+    * Shingles `df`'s text; the ingest loop's [[gate]] hands its
+    * survivors' digests to `append(gated, token)` instead.
     */
   def append(df: DataFrame, idCol: String, textCol: String): NearDupIndexStats =
-    log.locked(writeBatch(df, idCol, textCol, None, token = None))
+    log.locked(writeText(df, idCol, textCol, None, token = None))
 
-  /** [[append]] with an idempotence token — the EXACTLY-ONCE append for
-    * streaming loops ([[graft.streaming.EventStream.runIndexedIngest]]): if
+  /** [[append]] with an idempotence token — the EXACTLY-ONCE append: if
     * a committed manifest already carries `token`, the call is a no-op (the
     * batch was fully indexed before a crash/replay), so a replayed
     * micro-batch can never double-index its survivors. Pair with
@@ -128,50 +125,57 @@ final class NearDupIndex private (
     * also reproduces its original answer. */
   def appendOnce(df: DataFrame, idCol: String, textCol: String,
       token: String): NearDupIndexStats =
-    log.once(token)(stats)(writeBatch(df, idCol, textCol, None, Some(token)))
+    log.once(token)(stats)(writeText(df, idCol, textCol, None, Some(token)))
 
-  private def writeBatch(df: DataFrame, idCol: String, textCol: String,
+  /** Shingle `df` once and write it. The shingleFrame rule
+    * ([[MinHashLSH]]): cache the UNFILTERED projection and filter above
+    * the boundary, so the empty-digest predicate can't be pushed below the
+    * fan-out exchange and recompute digests single-core. */
+  private def writeText(df: DataFrame, idCol: String, textCol: String,
       init: Option[NearDupIndexStats],
+      token: Option[String]): NearDupIndexStats = {
+    val feats = incomingProjection(df, idCol, textCol).persist()
+    try writeBatch(feats, init, token)
+    finally { feats.unpersist(blocking = false); () }
+  }
+
+  /** The one relation writer: a `(doc_id, ds)` digest frame becomes the
+    * commit's three relation dirs and its stats. */
+  private def writeBatch(feats: DataFrame, init: Option[NearDupIndexStats],
       token: Option[String]): NearDupIndexStats = statsOf(
     log.append(token, fresh = init.nonEmpty) { (id, before) =>
       val prev = init.getOrElse(statsOf(log.statsIn(before)))
-      // the shingleFrame rule (MinHashLSH): cache the UNFILTERED
-      // projection, filter above the boundary, so the empty-digest
-      // predicate can't be pushed below the fan-out exchange and
-      // recompute digests single-core
-      val proj = df.select(col(idCol).as("doc_id"), col(textCol).as("__text"))
-        .repartition(df.sparkSession.sparkContext.defaultParallelism)
-        .select(col("doc_id"), MinHashLSH.shingleDigests(col("__text")).as("ds"))
-      proj.persist()
-      try {
-        val nonEmpty = proj.filter(size(col("ds")) > 0)
-        nonEmpty.write.mode("errorifexists").parquet(log.dir("digests", id))
-        val bk = MinHashLSH.bandedKeysFromDigests(nonEmpty, prev.numHashes,
-          prev.bands)
-        bk.write.mode("errorifexists").parquet(log.dir("bands", id))
-        val ct = bk.groupBy("b", "bkey").agg(count(lit(1)).as("c"))
-        ct.write.mode("errorifexists").parquet(log.dir("counts", id))
+      relations(feats, prev).foreach { case (name, rows) =>
+        rows.write.mode("errorifexists").parquet(log.dir(name, id))
         // writer-side schema registration: the gate/append reads of these
         // relations (same JVM, the ingest-loop shape) skip the first-read
         // schema-inference job
-        RelRead.seed(s"$path#digests", nonEmpty.schema)
-        RelRead.seed(s"$path#bands", bk.schema)
-        RelRead.seed(s"$path#counts", ct.schema)
-        // stats off the new dirs' parquet footers (no Spark job): `docs`
-        // is exact; `bandKeys` adds this append's distinct keys to the
-        // previous bound, so a key already in history counts again — an
-        // upper bound, which only sizes the gate's Bloom filter
-        val batchDocs = graft.io.ParquetMeta.rowCount(spark, log.dir("digests", id))
-        // a FIRST build with zero shingled docs would leave every relation
-        // unreadable (schema inference over only-empty dirs): refuse with
-        // a clear error, like the other text-keyed stores
-        require(init.isEmpty || batchDocs > 0,
-          s"cannot build a stored index at $path from a corpus with no shingles")
-        val batchKeys = graft.io.ParquetMeta.rowCount(spark, log.dir("counts", id))
-        StoreLog.kvOf(prev.copy(docs = prev.docs + batchDocs,
-          bandKeys = prev.bandKeys + batchKeys))
-      } finally { proj.unpersist(blocking = false); () }
+        RelRead.seed(s"$path#$name", rows.schema)
+      }
+      // stats off the new dirs' parquet footers (no Spark job): `docs`
+      // is exact; `bandKeys` adds this append's distinct keys to the
+      // previous bound, so a key already in history counts again — an
+      // upper bound, which only sizes the gate's Bloom filter
+      val batchDocs = graft.io.ParquetMeta.rowCount(spark, log.dir("digests", id))
+      // a FIRST build with zero shingled docs would leave every relation
+      // unreadable (schema inference over only-empty dirs): refuse with
+      // a clear error, like the other text-keyed stores
+      require(init.isEmpty || batchDocs > 0,
+        s"cannot build a stored index at $path from a corpus with no shingles")
+      val batchKeys = graft.io.ParquetMeta.rowCount(spark, log.dir("counts", id))
+      StoreLog.kvOf(prev.copy(docs = prev.docs + batchDocs,
+        bandKeys = prev.bandKeys + batchKeys))
     }.stats)
+
+  /** The rows each relation of one append holds, from the appended
+    * documents' digests: nothing here reads text. */
+  private def relations(feats: DataFrame,
+      st: NearDupIndexStats): Seq[(String, DataFrame)] = {
+    val nonEmpty = feats.filter(size(col("ds")) > 0)
+    val bk = MinHashLSH.bandedKeysFromDigests(nonEmpty, st.numHashes, st.bands)
+    Seq("digests" -> nonEmpty, "bands" -> bk,
+      "counts" -> bk.groupBy("b", "bkey").agg(count(lit(1)).as("c")))
+  }
 
   // ---------------- queries ----------------
 
@@ -202,13 +206,27 @@ final class NearDupIndex private (
 
   private def incomingProjection(incoming: DataFrame, idCol: String,
       textCol: String): DataFrame =
-    incoming
-      .select(col(idCol).as("doc_id"), col(textCol).as("__text"))
-      .repartition(incoming.sparkSession.sparkContext.defaultParallelism)
-      .select(col("doc_id"), MinHashLSH.shingleDigests(col("__text")).as("ds"))
+    digestsOf(digested(
+      incoming.select(col(idCol).as("doc_id"), col(textCol).as("__text")),
+      "__text"), "doc_id")
 
+  /** `df` with its documents' shingle digests as `__ds` — the one place a
+    * batch is shingled. Repartitioned first, so the projection fans out
+    * past single-row-group inputs (the [[MinHashLSH]] shingle-frame
+    * rule); callers cache the result and filter above it. */
+  private def digested(df: DataFrame, textCol: String): DataFrame =
+    df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+      .withColumn("__ds", MinHashLSH.shingleDigests(col(textCol)))
+
+  private def digestsOf(digestedRows: DataFrame, idCol: String): DataFrame =
+    digestedRows.select(col(idCol).as("doc_id"), col("__ds").as("ds"))
+
+  /** `uniquePairs = false` skips the candidate `distinct` (one shuffle):
+    * a pair found through several bands then repeats, which only the
+    * gate, asking which documents have any match, may accept. */
   private def pairsPlan(incProj: DataFrame, threshold: Double,
-      fpp: Double, excludeToken: Option[String]): DataFrame = {
+      fpp: Double, excludeToken: Option[String],
+      uniquePairs: Boolean = true): DataFrame = {
     val ms = log.visible(excludeToken)
     val st = statsOf(log.statsIn(ms))
     locally {
@@ -228,11 +246,11 @@ final class NearDupIndex private (
       val (maybeSeen, _) = BloomPrune.split(
         MinHashLSH.bandedKeysFromDigests(incDs, st.numHashes, st.bands)
           .withColumn("__k", keyStr), "__k", filter)
-      val cand = maybeSeen
+      val pairs = maybeSeen
         .join(histIdx.select(col("doc_id").as("__hist_id"), col("b"), col("bkey")),
           Seq("b", "bkey"))
         .select(col("doc_id").as("doc_inc"), col("__hist_id").as("doc_hist"))
-        .distinct()
+      val cand = if (uniquePairs) pairs.distinct() else pairs
       val x = incDs.select(col("doc_id").as("doc_inc"), col("ds").as("ds_a"))
       val y = relOf(ms, "digests")
         .select(col("doc_id").as("doc_hist"), col("ds").as("ds_b"))
@@ -245,8 +263,9 @@ final class NearDupIndex private (
 
   /** Keep only incoming rows that near-duplicate NO indexed document — the
     * stored-index ingest gate ([[MinHashLSH.keepUnseenNear]]'s production
-    * form). Typical loop: `val kept = idx.keepUnseen(batch, ...)
-    * .localCheckpoint(true); idx.append(kept, ...)`.
+    * form) as a lazy plan over the call's materialized pairs. The ingest
+    * loop uses [[gate]], which also hands the survivors' digests to
+    * `append(gated, token)`.
     */
   def keepUnseen(incoming: DataFrame, idCol: String, textCol: String,
       threshold: Double = 0.8, fpp: Double = 0.01,
@@ -258,12 +277,35 @@ final class NearDupIndex private (
 
   // ---------------- IngestIndex ----------------
 
-  def gateKeep(batch: DataFrame, idCol: String, textCol: String,
-      excludeToken: Option[String]): DataFrame =
-    keepUnseen(batch, idCol, textCol, excludeToken = excludeToken)
+  def gate(batch: DataFrame, idCol: String, textCol: String,
+      excludeToken: Option[String]): IngestIndex.Gated =
+    gate(batch, idCol, textCol, excludeToken, threshold = 0.8)
 
-  def appendToken(df: DataFrame, idCol: String, textCol: String,
-      token: String): Unit = { appendOnce(df, idCol, textCol, token); () }
+  /** [[keepUnseen]]'s answer at `threshold`, materialized with the
+    * survivors' digests ([[IngestIndex]]'s gate phase). The batch is
+    * shingled once and its rows ride the cached digest frame, so the
+    * batch's own plan, the pairs plan and the final anti-join each run
+    * once per call. */
+  def gate(batch: DataFrame, idCol: String, textCol: String,
+      excludeToken: Option[String], threshold: Double): IngestIndex.Gated = {
+    val feats = digested(batch, textCol)
+    val kept = CacheScope.withCached(feats) {
+      // the duplicate ids are a subset of the batch's: broadcast them, so
+      // the cached rows never shuffle for the anti-join
+      val dup = pairsPlan(digestsOf(feats, idCol), threshold, fpp = 0.01,
+        excludeToken, uniquePairs = false).select(col("doc_inc"))
+      feats.join(broadcast(dup), col(idCol) === col("doc_inc"), "left_anti")
+    }
+    new IngestIndex.Gated(kept.drop("__ds"), digestsOf(kept, idCol), idCol,
+      textCol, path)
+  }
+
+  /** Index a [[gate]] answer of this store from its digests. */
+  def append(gated: IngestIndex.Gated, token: Option[String]): Unit = {
+    gated.requireFrom(path)
+    log.write(token)(stats)(writeBatch(gated.features, None, token))
+    ()
+  }
 }
 
 object NearDupIndex extends StoreProbe {
@@ -278,7 +320,7 @@ object NearDupIndex extends StoreProbe {
       seedToken: Option[String] = None): NearDupIndex = {
     require(numHashes % bands == 0, "numHashes must be divisible by bands")
     val idx = new NearDupIndex(history.sparkSession, path)
-    idx.log.locked(idx.writeBatch(history, idCol, textCol,
+    idx.log.locked(idx.writeText(history, idCol, textCol,
       Some(NearDupIndexStats(0L, 0L, numHashes, bands, maxBucket)), seedToken))
     idx
   }

@@ -53,14 +53,22 @@ object NgramLm {
     * `(cols..., __bg)` — the shared derivation of the per-call paths and
     * the persisted model ([[NgramLmStore]]), so counts can never drift. */
   private[ext] def bigramsOf(df: DataFrame, textCol: String,
-      cols: Column*): DataFrame = {
+      cols: Column*): DataFrame =
+    withBigrams(df.select(cols :+ col(textCol): _*), textCol)
+      .select(cols :+ explode(col("__bgs")).as("__bg"): _*)
+
+  /** `df` plus `__bgs`: each document's bigrams ("w1 w2") in text order
+    * — the one bigram derivation ([[bigramsOf]] explodes it; a store gate
+    * caches it on the batch rows, so its survivors keep their bigrams). */
+  private[ext] def withBigrams(df: DataFrame, textCol: String): DataFrame = {
     val grams = when(size(col("__toks")) >= 2,
       transform(sequence(lit(0), size(col("__toks")) - 2),
         i => concat_ws(" ", element_at(col("__toks"), i + 1),
           element_at(col("__toks"), i + 2))))
       .otherwise(array())
-    df.select(cols :+ TextAnalysis.tokens(col(textCol)).as("__toks"): _*)
-      .select(cols :+ explode(grams).as("__bg"): _*)
+    df.withColumn("__toks", TextAnalysis.tokens(col(textCol)))
+      .withColumn("__bgs", grams)
+      .drop("__toks")
   }
 
   def scoreAgainst(docs: DataFrame, modelDocs: DataFrame, idCol: String,

@@ -47,8 +47,10 @@ final case class NgramLmStoreStats(bigramRows: Long, buckets: Int,
   *
   * [[keepBand]] keeps batch documents whose stored-model `mean_micro`
   * lies in `[loMicro, hiMicro]` — the fluency-band quality gate scored
-  * against the PERSISTED model; with [[appendToken]] (survivors' counts
-  * join the model exactly-once) the unchanged generic loop
+  * against the PERSISTED model; through [[gate]] and
+  * `append(gated, token)` (survivors' counts join the model
+  * exactly-once, from the bigrams the gate already derived) the
+  * unchanged generic loop
   * ([[graft.streaming.EventStream.runIndexedIngest]]) runs the
   * score → gate → model-update cycle per micro-batch.
   */
@@ -86,30 +88,30 @@ final class NgramLmStore private (
   /** Fold a batch's bigram counts into the model: one bucket-partitioned
     * partials dir, one marker commit carrying the refreshed stats.
     * Serialized with every other writer on the layout
-    * ([[ManifestLog.withWriteLock]]). */
+    * ([[ManifestLog.withWriteLock]]). Tokenizes `df`'s text; the ingest
+    * loop's [[gate]] hands its survivors' bigrams to
+    * `append(gated, token)` instead. */
   def append(df: DataFrame, idCol: String, textCol: String): NgramLmStoreStats =
-    log.locked(writeBatch(df, idCol, textCol, None, token = None))
+    log.locked(writeBatch(NgramLm.bigramsOf(df, textCol), None, token = None))
 
   /** [[append]] with an idempotence token — exactly-once model updates
     * (the token check and the commit are atomic under the writer lock:
     * two racers with the same token fold the batch once). */
   def appendOnce(df: DataFrame, idCol: String, textCol: String,
       token: String): NgramLmStoreStats =
-    log.once(token)(stats)(writeBatch(df, idCol, textCol, None, Some(token)))
+    log.once(token)(stats)(
+      writeBatch(NgramLm.bigramsOf(df, textCol), None, Some(token)))
 
-  private def writeBatch(df: DataFrame, idCol: String, textCol: String,
-      init: Option[NgramLmStoreStats], token: Option[String],
-      bgOverride: Option[DataFrame] = None): NgramLmStoreStats = statsOf(
+  /** The one relation writer: a bigram-occurrence frame (`__bg`, one row
+    * per occurrence) becomes the commit's counts partials — the caller
+    * derives it once (the text paths above, [[gate]]'s survivors,
+    * [[QualityProbeStore.create]]'s shared history bigrams). */
+  private def writeBatch(bigrams: DataFrame, init: Option[NgramLmStoreStats],
+      token: Option[String]): NgramLmStoreStats = statsOf(
     log.append(token, fresh = init.nonEmpty) { (id, before) =>
       val prev = init.getOrElse(statsOf(log.statsIn(before)))
       val dir = log.dir("counts", id)
-      // bgOverride: a CALLER-computed (persisted) bigram-occurrence frame
-      // of the same df — the create-path fusion hook
-      // ([[QualityProbeStore.create]] tokenizes the history corpus once
-      // and feeds both this build and its seed scoring; the grouped
-      // counts are identical by construction)
-      bgOverride.getOrElse(NgramLm.bigramsOf(df, textCol))
-        .select(col("__bg"))
+      bigrams.select(col("__bg"))
         .groupBy("__bg").agg(count(lit(1)).as("__c12"))
         .select(split(col("__bg"), " ").getItem(0).as("__w1"),
           col("__bg"), col("__c12"))
@@ -140,7 +142,7 @@ final class NgramLmStore private (
       excludeToken: Option[String] = None): DataFrame = {
     val bg = NgramLm.bigramsOf(batch, textCol, col(idCol))
     CacheScope.withCached(bg)(
-      scorePlan(batch, bg, idCol, excludeToken))
+      scorePlan(batch.select(col(idCol)), bg, idCol, excludeToken))
   }
 
   /** [[scoreBatch]] over a CALLER-computed (and caller-persisted)
@@ -150,17 +152,22 @@ final class NgramLmStore private (
     * materialized exactly like [[scoreBatch]]'s. */
   private[ext] def scoreBatchWith(batch: DataFrame, bg: DataFrame,
       idCol: String, excludeToken: Option[String] = None): DataFrame =
-    scorePlan(batch, bg, idCol, excludeToken).localCheckpoint(true)
+    scorePlan(batch.select(col(idCol)), bg, idCol, excludeToken)
+      .localCheckpoint(true)
 
   /** The score's UN-materialized plan — plan-audit hook (the family's
     * `pairsPlanFor` precedent): every file scan must live under the model
     * path; batch text is tokenized from the (checkpointed) batch itself. */
   private[graft] def scorePlanFor(batch: DataFrame, idCol: String,
       textCol: String): DataFrame =
-    scorePlan(batch, NgramLm.bigramsOf(batch, textCol, col(idCol)), idCol,
+    scorePlan(batch.select(col(idCol)),
+      NgramLm.bigramsOf(batch, textCol, col(idCol)), idCol,
       None)
 
-  private def scorePlan(batch: DataFrame, bg: DataFrame, idCol: String,
+  /** `rows` (which carry `idCol`) with their documents' `n_bigrams`,
+    * `sum_micro` and `mean_micro` appended, from the per-doc bigrams
+    * `bg`. */
+  private def scorePlan(rows: DataFrame, bg: DataFrame, idCol: String,
       excludeToken: Option[String]): DataFrame = {
     // prune the stored partials to the batch's prefixes BEFORE the model
     // aggregation: a kept prefix keeps ALL its rows, so its c1 is exact;
@@ -178,11 +185,13 @@ final class NgramLmStore private (
       .groupBy(idCol)
       .agg(count(lit(1)).as("n_bigrams"),
         sum(coalesce(col("__micro"), lit(0L))).as("sum_micro"))
-    batch.select(col(idCol)).join(perDoc, Seq(idCol), "left_outer")
-      .select(col(idCol),
-        coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
-        coalesce(col("sum_micro"), lit(0L)).as("sum_micro"),
-        coalesce(expr("sum_micro div n_bigrams"), lit(0L)).as("mean_micro"))
+    // the mean from the raw columns first: a doc with no bigram rows has
+    // null, not 0, counts here (0 div 0 fails under ANSI)
+    rows.join(perDoc, Seq(idCol), "left_outer")
+      .withColumn("mean_micro",
+        coalesce(expr("sum_micro div n_bigrams"), lit(0L)))
+      .withColumn("n_bigrams", coalesce(col("n_bigrams"), lit(0L)))
+      .withColumn("sum_micro", coalesce(col("sum_micro"), lit(0L)))
   }
 
   /** Keep batch documents whose stored-model `mean_micro` lies in
@@ -199,14 +208,32 @@ final class NgramLmStore private (
 
   // ---------------- IngestIndex ----------------
 
-  def gateKeep(batch: DataFrame, idCol: String, textCol: String,
-      excludeToken: Option[String]): DataFrame = {
+  /** [[keepBand]] at the stored band, materialized with the survivors'
+    * bigrams ([[IngestIndex]]'s gate phase). The batch is tokenized once
+    * and its rows ride the cached bigram frame into the score join, so
+    * the batch's own plan runs once and no second join picks the kept
+    * rows. */
+  def gate(batch: DataFrame, idCol: String, textCol: String,
+      excludeToken: Option[String]): IngestIndex.Gated = {
     val st = stats
-    keepBand(batch, idCol, textCol, st.loMicro, st.hiMicro, excludeToken)
+    val feats = NgramLm.withBigrams(batch, textCol)
+    val kept = CacheScope.withCached(feats) {
+      val bg = feats.select(col(idCol), explode(col("__bgs")).as("__bg"))
+      scorePlan(feats, bg, idCol, excludeToken)
+        .where(col("mean_micro").between(st.loMicro, st.hiMicro))
+        .drop("n_bigrams", "sum_micro", "mean_micro")
+    }
+    new IngestIndex.Gated(kept.drop("__bgs"),
+      kept.select(explode(col("__bgs")).as("__bg")), idCol, textCol, path)
   }
 
-  def appendToken(df: DataFrame, idCol: String, textCol: String,
-      token: String): Unit = { appendOnce(df, idCol, textCol, token); () }
+  /** Fold a [[gate]] answer of this store into the model from its
+    * bigrams. */
+  def append(gated: IngestIndex.Gated, token: Option[String]): Unit = {
+    gated.requireFrom(path)
+    log.write(token)(stats)(writeBatch(gated.features, None, token))
+    ()
+  }
 }
 
 object NgramLmStore extends StoreProbe {
@@ -239,22 +266,22 @@ object NgramLmStore extends StoreProbe {
     require(loMicro >= 0L && loMicro <= hiMicro,
       "need 0 <= loMicro <= hiMicro")
     val idx = new NgramLmStore(history.sparkSession, path)
-    idx.log.locked(idx.writeBatch(history, idCol, textCol,
+    idx.log.locked(idx.writeBatch(NgramLm.bigramsOf(history, textCol),
       Some(NgramLmStoreStats(0L, buckets, loMicro, hiMicro)), seedToken))
     idx
   }
 
   /** [[build]] over a CALLER-computed bigram-occurrence frame of the
     * same history (must carry `__bg`; caller persists it) — the
-    * create-path fusion hook, see `bgOverride` in `writeBatch`. */
+    * create-path fusion hook ([[QualityProbeStore.create]] tokenizes the
+    * history once for this build and its seed scoring). */
   private[ext] def buildFromBigrams(history: DataFrame, bg: DataFrame,
       path: String, buckets: Int = 16, loMicro: Long = 0L,
       hiMicro: Long = Long.MaxValue,
       seedToken: Option[String] = None): NgramLmStore = {
     val idx = new NgramLmStore(history.sparkSession, path)
-    idx.log.locked(idx.writeBatch(history, "", "", // id/text unused under bgOverride
-      Some(NgramLmStoreStats(0L, buckets, loMicro, hiMicro)), seedToken,
-      bgOverride = Some(bg)))
+    idx.log.locked(idx.writeBatch(bg,
+      Some(NgramLmStoreStats(0L, buckets, loMicro, hiMicro)), seedToken))
     idx
   }
 

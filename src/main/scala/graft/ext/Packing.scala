@@ -41,7 +41,16 @@ object Packing {
     * assignment join's key exchange — AQE only sometimes broadcast the
     * assignment side, and a corpus-sized assignment can never broadcast
     * — and the placement repartition; caught by the SCALE_MEDIA runtime
-    * bytes audit). `sizeCol` must already be an integral column. */
+    * bytes audit). `sizeCol` must already be an integral column.
+    *
+    * `duplicateIdError`, when set, refuses two rows with the same
+    * (group, id): equal ids sort adjacent, and ids compare by value
+    * (binary ids by content). The check runs AS THE ROWS ARE PACKED, so
+    * it covers exactly the rows a consumer reads: a full write or count
+    * sees every row, while a limited consumer (`limit`, `take`) can stop
+    * before a duplicate and pass. Callers that rely on the refusal must
+    * consume the whole result ([[ShardWriter.assign]]'s terminal write
+    * does). */
   def packGreedyCarry(df: DataFrame, groupCol: String, idCol: String,
       sizeCol: String, capacity: Long,
       duplicateIdError: Option[String] = None): DataFrame = {
@@ -75,7 +84,7 @@ object Packing {
           // longer pays a separate keys-only aggregation job per write
           duplicateIdError.foreach { msg =>
             val i = r.get(iIdx)
-            if (started && g == cur && i == curId)
+            if (started && g == cur && sameId(i, curId))
               throw new IllegalArgumentException(msg)
             curId = i
           }
@@ -85,6 +94,13 @@ object Packing {
           Row.fromSeq(r.toSeq :+ bin)
         }
       }(Encoders.row(outSchema))
+  }
+
+  /** Id equality by value: `==` on an `Array[Byte]` (a binary id) is
+    * reference equality, which two rows never share. */
+  private def sameId(a: Any, b: Any): Boolean = (a, b) match {
+    case (x: Array[Byte], y: Array[Byte]) => java.util.Arrays.equals(x, y)
+    case _ => a == b
   }
 
   def packGreedy(df: DataFrame, groupCol: String, idCol: String,

@@ -43,11 +43,11 @@ import org.apache.spark.sql.functions._
   *
   * == Ingest gate ([[IngestIndex]]) ==
   *
-  * The store is also the fifth gated modality: [[gateKeep]] keeps batch
+  * The store is also the fifth gated modality: [[keepAboveMean]] keeps batch
   * documents scoring at or above the STORED corpus's mean quality under
   * the CURRENT stored weights (dq115's train→score→mean-gate with the
   * per-call retrain replaced by incremental statistics), and
-  * [[appendToken]] folds survivors' moments back in, so accepted
+  * `append(gated, token)` folds survivors' moments back in, so accepted
   * documents move the model for the next round. Both the weights and
   * the threshold come off the 14-row summed table alone: since x0 = 1,
   * Σ_docs score = Σ_j w_j·m_0_j and the document count is m_0_0, so
@@ -145,8 +145,8 @@ final class QualityProbeStore private (
     * weights is ≥ the stored-corpus mean threshold ([[model]]) — a
     * map-only codegen'd dot product over the batch; the only store read
     * is the 14·appends-row moment aggregation. */
-  def gateKeep(batch: DataFrame, idCol: String, textCol: String,
-      excludeToken: Option[String]): DataFrame = {
+  def keepAboveMean(batch: DataFrame, idCol: String, textCol: String,
+      excludeToken: Option[String] = None): DataFrame = {
     val (w, thr) = model(excludeToken)
     val keep = QualityProbe.features(batch, idCol, textCol)
       .where(QualityProbe.score(w) >= thr)
@@ -154,8 +154,16 @@ final class QualityProbeStore private (
     batch.join(keep, Seq(idCol), "left_semi")
   }
 
-  def appendToken(df: DataFrame, idCol: String, textCol: String,
-      token: String): Unit = appendOnce(df, idCol, textCol, token)
+  def gate(batch: DataFrame, idCol: String, textCol: String,
+      excludeToken: Option[String]): IngestIndex.Gated =
+    IngestIndex.ofRows(path, keepAboveMean(batch, idCol, textCol,
+      excludeToken), idCol, textCol)
+
+  def append(gated: IngestIndex.Gated, token: Option[String]): Unit = {
+    gated.requireFrom(path)
+    log.write(token)(())(
+      writeBatch(gated.features, gated.idCol, gated.textCol, token))
+  }
 }
 
 object QualityProbeStore extends StoreProbe {

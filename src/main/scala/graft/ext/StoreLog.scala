@@ -99,6 +99,11 @@ private[ext] final class StoreLog(spark: SparkSession, val path: String,
     }
   }
 
+  /** A locked write: exactly once under `token` ([[once]]), or
+    * unconditionally without one. */
+  def write[T](token: Option[String])(committed: => T)(body: => T): T =
+    token.fold(locked(body))(t => once(t)(committed)(body))
+
   /** Start a commit (writer lock held): the snapshot, the next sequence
     * number and a fresh dir id `<prefix><seq>` ([[next]]). */
   def begin(prefix: Char, names: Seq[String] = rels.map(_.name))

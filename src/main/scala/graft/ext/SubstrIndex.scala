@@ -37,10 +37,11 @@ final case class SubstrIndexStats(digests: Long, k: Int)
   * stage — Bloom split (sized from stored stats) so provably-fresh batch
   * windows never enter the digest join; only the might-seen minority
   * shuffles against `digests/` — with the history derivation replaced by
-  * the stored relation. Exactly-once streaming loops use
-  * [[appendToken]] + `excludeToken` (the [[IngestIndex]] contract): a
-  * replayed micro-batch gates against the index as it stood before its
-  * own committed append and the re-append is a no-op.
+  * the stored relation. Exactly-once streaming loops use [[gate]] with
+  * `excludeToken`, then `append(gated, token)` (the [[IngestIndex]]
+  * contract): a replayed micro-batch gates against the index as it
+  * stood before its own committed append and the re-append is a no-op;
+  * the append writes the window digests the gate already derived.
   */
 final class SubstrIndex private (
     private val spark: SparkSession, val path: String)
@@ -66,32 +67,35 @@ final class SubstrIndex private (
   // ---------------- writes ----------------
 
   /** Index a batch's window digests: one fresh `append=<id>` dir, one
-    * marker commit carrying the refreshed stats. Call with the rows a
-    * [[keepFresh]] gate accepted, MATERIALIZED first
-    * (`localCheckpoint(true)`) — the gate result's plan reads this
-    * index. */
+    * marker commit carrying the refreshed stats. Windows `df`'s text; the
+    * ingest loop's [[gate]] hands its survivors' digests to
+    * `append(gated, token)` instead. */
   def append(df: DataFrame, idCol: String, textCol: String): SubstrIndexStats =
-    log.locked(writeBatch(df, idCol, textCol, None, token = None))
+    log.locked(writeBatch(windowsOf(df, idCol, textCol, stats.k), None,
+      token = None))
 
   /** [[append]] with an idempotence token — the exactly-once append: a
     * committed manifest carrying `token` makes the call a no-op. */
   def appendOnce(df: DataFrame, idCol: String, textCol: String,
       token: String): SubstrIndexStats =
-    log.once(token)(stats)(writeBatch(df, idCol, textCol, None, Some(token)))
+    log.once(token)(stats)(writeBatch(windowsOf(df, idCol, textCol,
+      stats.k), None, Some(token)))
 
-  /** `init` is the build's parameters (a fresh path); appends continue
-    * from the snapshot's stats. */
-  private def writeBatch(df: DataFrame, idCol: String, textCol: String,
-      init: Option[SubstrIndexStats],
+  private def windowsOf(df: DataFrame, idCol: String, textCol: String,
+      k: Int): DataFrame =
+    ExactSubstring.windowDigestsOf(ExactSubstring.tokenize(df, idCol, textCol),
+      idCol, k)
+
+  /** The one relation writer: the window digests (`dg`) of the appended
+    * documents become the commit's distinct `digests/` dir. `init` is the
+    * build's parameters (a fresh path); appends continue from the
+    * snapshot's stats. */
+  private def writeBatch(windows: DataFrame, init: Option[SubstrIndexStats],
       token: Option[String]): SubstrIndexStats = statsOf(
     log.append(token, fresh = init.nonEmpty) { (id, before) =>
       val prev = init.getOrElse(statsOf(log.statsIn(before)))
       val dir = log.dir("digests", id)
-      ExactSubstring
-        .windowDigestsOf(ExactSubstring.tokenize(df, idCol, textCol),
-          idCol, prev.k)
-        .select("dg").distinct()
-        .write.mode("errorifexists").parquet(dir)
+      windows.select("dg").distinct().write.mode("errorifexists").parquet(dir)
       // footer-summed row count: no re-scan job over the dir just written
       val added = graft.io.ParquetMeta.rowCount(spark, dir)
       // a FIRST append with zero digests would leave the index unreadable
@@ -137,12 +141,7 @@ final class SubstrIndex private (
     * it carries. */
   private def reportPlan(batch: DataFrame, bw: DataFrame, idCol: String,
       fpp: Double, ms: Seq[Manifest], st: SubstrIndexStats): DataFrame = {
-    val hw = digests(log.dirs(ms, "digests"))
-    val bloom = BloomPrune.buildFilter(hw, "dg",
-      math.max(1L, st.digests), fpp)
-    val (maybeSeen, _) = BloomPrune.split(bw, "dg", bloom)
-    val dup = maybeSeen.join(hw, Seq("dg"), "left_semi")
-      .groupBy(idCol).agg(count(lit(1)).as("n_dup_windows"))
+    val dup = dupWindows(bw, idCol, fpp, ms, st)
     val totals = bw.groupBy(idCol).agg(count(lit(1)).as("n_windows"))
     batch.select(col(idCol))
       .join(totals, Seq(idCol), "left_outer")
@@ -150,6 +149,18 @@ final class SubstrIndex private (
       .select(col(idCol),
         coalesce(col("n_windows"), lit(0L)).as("n_windows"),
         coalesce(col("n_dup_windows"), lit(0L)).as("n_dup_windows"))
+  }
+
+  /** (idCol, n_dup_windows) for each batch document with at least one
+    * window already in the snapshot's history. */
+  private def dupWindows(bw: DataFrame, idCol: String, fpp: Double,
+      ms: Seq[Manifest], st: SubstrIndexStats): DataFrame = {
+    val hw = digests(log.dirs(ms, "digests"))
+    val bloom = BloomPrune.buildFilter(hw, "dg",
+      math.max(1L, st.digests), fpp)
+    val (maybeSeen, _) = BloomPrune.split(bw, "dg", bloom)
+    maybeSeen.join(hw, Seq("dg"), "left_semi")
+      .groupBy(idCol).agg(count(lit(1)).as("n_dup_windows"))
   }
 
   /** Keep batch documents with at most `maxDupWindows` windows already in
@@ -165,12 +176,39 @@ final class SubstrIndex private (
 
   // ---------------- IngestIndex ----------------
 
-  def gateKeep(batch: DataFrame, idCol: String, textCol: String,
-      excludeToken: Option[String]): DataFrame =
-    keepFresh(batch, idCol, textCol, excludeToken = excludeToken)
+  def gate(batch: DataFrame, idCol: String, textCol: String,
+      excludeToken: Option[String]): IngestIndex.Gated =
+    gate(batch, idCol, textCol, excludeToken, maxDupWindows = 0L)
 
-  def appendToken(df: DataFrame, idCol: String, textCol: String,
-      token: String): Unit = { appendOnce(df, idCol, textCol, token); () }
+  /** [[keepFresh]]'s answer at `maxDupWindows`, materialized with the
+    * survivors' window digests ([[IngestIndex]]'s gate phase). The batch
+    * is tokenized and windowed once and its rows ride the cached frame;
+    * one anti-join against the over-limit documents picks the kept rows
+    * (a document absent from the duplicate counts has none). */
+  def gate(batch: DataFrame, idCol: String, textCol: String,
+      excludeToken: Option[String], maxDupWindows: Long): IngestIndex.Gated = {
+    require(maxDupWindows >= 0, s"maxDupWindows must be >= 0, got $maxDupWindows")
+    val ms = log.visible(excludeToken)
+    val st = statsOf(log.statsIn(ms))
+    val feats = ExactSubstring.withWindowDigests(batch, textCol, st.k)
+    val kept = CacheScope.withCached(feats) {
+      val bw = feats.select(col(idCol), explode(col("__dgs")).as("dg"))
+      // a subset of the batch's ids: broadcast, so the cached rows never
+      // shuffle for the anti-join
+      val over = dupWindows(bw, idCol, fpp = 0.01, ms, st)
+        .where(col("n_dup_windows") > maxDupWindows)
+      feats.join(broadcast(over), Seq(idCol), "left_anti")
+    }
+    new IngestIndex.Gated(kept.drop("__dgs"),
+      kept.select(explode(col("__dgs")).as("dg")), idCol, textCol, path)
+  }
+
+  /** Index a [[gate]] answer of this store from its window digests. */
+  def append(gated: IngestIndex.Gated, token: Option[String]): Unit = {
+    gated.requireFrom(path)
+    log.write(token)(stats)(writeBatch(gated.features, None, token))
+    ()
+  }
 }
 
 object SubstrIndex extends StoreProbe {
@@ -192,7 +230,7 @@ object SubstrIndex extends StoreProbe {
       k: Int = 8, seedToken: Option[String] = None): SubstrIndex = {
     require(k >= 2, "need k >= 2")
     val idx = new SubstrIndex(history.sparkSession, path)
-    idx.log.locked(idx.writeBatch(history, idCol, textCol,
+    idx.log.locked(idx.writeBatch(idx.windowsOf(history, idCol, textCol, k),
       Some(SubstrIndexStats(0L, k)), seedToken))
     idx
   }

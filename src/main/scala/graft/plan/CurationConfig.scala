@@ -391,10 +391,11 @@ object CurationConfig {
     * one ingest round; the index carries state across runs.
     *
     * Unlike the pure stages, a gate stage is a MATERIALIZATION BOUNDARY:
-    * its input and its result are checkpointed (the established
-    * gate-then-append contract — appending underneath an unmaterialized
-    * gate plan would let a re-evaluation see the batch's own rows), so
-    * Catalyst composes the stages before and after it, not across it.
+    * its result is materialized before the append (the gate's own answer,
+    * [[graft.ext.IngestIndex]] — appending underneath an unmaterialized
+    * gate plan would let a re-evaluation see the batch's own rows), and
+    * a seed round checkpoints its input, so Catalyst composes the stages
+    * before and after it, not across it.
     *
     * When the caller names the run ([[PipelineDef.run]]'s `runId`), every
     * gate round is CRASH-REPLAYABLE under the same token contract the
@@ -404,7 +405,7 @@ object CurationConfig {
     * `excludeToken` so a rerun of a crashed run sees the store WITHOUT
     * its own already-committed append (a plain re-gate would emit an
     * EMPTY result from a dedup gate and double-fold a statistics gate),
-    * and the append rides `appendOnce` so the fold lands exactly once. A
+    * and the append runs under the token so the fold lands exactly once. A
     * rerun whose seed build already committed is recognized through
     * [[graft.ext.IngestIndex.seededBy]] and keeps the whole batch, the
     * seed round's answer. Reruns must reuse the crashed run's `runId`
@@ -431,13 +432,7 @@ object CurationConfig {
         (seeded, tok) =>
           SubstrIndex.build(seeded, idCol, textCol, path, k, seedToken = tok))(
         (idx, input, tok) =>
-          idx.keepFresh(input, idCol, textCol, maxDupWindows,
-            excludeToken = tok)) { (idx, kept, tok) =>
-        tok match {
-          case Some(t) => idx.appendOnce(kept, idCol, textCol, t); ()
-          case None => idx.append(kept, idCol, textCol); ()
-        }
-      }
+          idx.gate(input, idCol, textCol, tok, maxDupWindows))
     }
   }
 
@@ -465,14 +460,7 @@ object CurationConfig {
         (seeded, tok) =>
           MediaDigestIndex.build(seeded, idCol, binaryCol, path,
             seedToken = tok))(
-        (idx, input, tok) =>
-          idx.keepUnseenPayloads(input, idCol, binaryCol,
-            excludeToken = tok)) { (idx, kept, tok) =>
-        tok match {
-          case Some(t) => idx.appendOnce(kept, idCol, binaryCol, t); ()
-          case None => idx.append(kept, idCol, binaryCol); ()
-        }
-      }
+        (idx, input, tok) => idx.gate(input, idCol, binaryCol, tok))
     }
   }
 
@@ -511,14 +499,7 @@ object CurationConfig {
         (seeded, tok) =>
           graft.ext.MediaSigIndex.build(seeded, idCol, binaryCol, path,
             blocks, minMatch, maxBucket, seedToken = tok))(
-        (idx, input, tok) =>
-          idx.keepFarPayloads(input, idCol, binaryCol,
-            excludeToken = tok)) { (idx, kept, tok) =>
-        tok match {
-          case Some(t) => idx.appendOnce(kept, idCol, binaryCol, t); ()
-          case None => idx.append(kept, idCol, binaryCol); ()
-        }
-      }
+        (idx, input, tok) => idx.gate(input, idCol, binaryCol, tok))
     }
   }
 
@@ -558,14 +539,7 @@ object CurationConfig {
         (seeded, tok) =>
           graft.ext.MediaCdcIndex.build(seeded, idCol, binaryCol, path,
             window, minShared, maxBucket, zeros, seedToken = tok))(
-        (idx, input, tok) =>
-          idx.keepFarPayloads(input, idCol, binaryCol,
-            excludeToken = tok)) { (idx, kept, tok) =>
-        tok match {
-          case Some(t) => idx.appendOnce(kept, idCol, binaryCol, t); ()
-          case None => idx.append(kept, idCol, binaryCol); ()
-        }
-      }
+        (idx, input, tok) => idx.gate(input, idCol, binaryCol, tok))
     }
   }
 
@@ -721,15 +695,9 @@ object CurationConfig {
           // tier 'pq': the m-byte wide net + exact refine
           // (IvfStore.semanticKeepUnseenPq — dq178); tier 'float':
           // the direct probed-cosine gate
-          if (pq) store.semanticKeepUnseenPq(input, idCol, embCol,
-            tau, nprobe, shortlist, excludeToken = tok)
-          else store.gateKeep(input, idCol, embCol, excludeToken = tok)) {
-        (store, kept, tok) =>
-          tok match {
-            case Some(t) => store.appendOnce(kept, idCol, embCol, t); ()
-            case None => store.append(kept, idCol, embCol); ()
-          }
-      }
+          if (pq) store.gatePq(input, idCol, embCol, tau, nprobe, shortlist,
+            tok)
+          else store.gate(input, idCol, embCol, tok))
     }
   }
 
@@ -758,14 +726,7 @@ object CurationConfig {
         (seeded, tok) =>
           NgramLmStore.build(seeded, idCol, textCol, path,
             loMicro = loMicro, hiMicro = hiMicro, seedToken = tok))(
-        (store, input, tok) =>
-          store.gateKeep(input, idCol, textCol, excludeToken = tok)) {
-        (store, kept, tok) =>
-          tok match {
-            case Some(t) => store.appendOnce(kept, idCol, textCol, t); ()
-            case None => store.append(kept, idCol, textCol); ()
-          }
-      }
+        (store, input, tok) => store.gate(input, idCol, textCol, tok))
     }
   }
 
@@ -790,14 +751,7 @@ object CurationConfig {
         (seeded, tok) =>
           QualityProbeStore.create(seeded, idCol, textCol, path,
             seedToken = tok))(
-        (store, input, tok) =>
-          store.gateKeep(input, idCol, textCol, excludeToken = tok)) {
-        (store, kept, tok) =>
-          tok match {
-            case Some(t) => store.appendOnce(kept, idCol, textCol, t)
-            case None => store.append(kept, idCol, textCol)
-          }
-      }
+        (store, input, tok) => store.gate(input, idCol, textCol, tok))
     }
   }
 
@@ -1045,48 +999,56 @@ object CurationConfig {
           NearDupIndex.build(seeded, idCol, textCol, path, numHashes, bands,
             maxBucket, seedToken = tok))(
         (idx, input, tok) =>
-          idx.keepUnseen(input, idCol, textCol, threshold,
-            excludeToken = tok)) { (idx, kept, tok) =>
-        tok match {
-          case Some(t) => idx.appendOnce(kept, idCol, textCol, t); ()
-          case None => idx.append(kept, idCol, textCol); ()
-        }
-      }
+          idx.gate(input, idCol, textCol, tok, threshold))
     }
   }
 
-  /** Materialize `df` unless it already IS a materialized checkpoint
-    * (its analyzed plan is a bare LogicalRDD — the exact shape
-    * `localCheckpoint(eager = true)` returns). Gate stages and the audit
-    * runner meet at stage boundaries where the previous step has already
-    * checkpointed; re-checkpointing copies the cached rows into a second
-    * block-manager cache for no semantic gain — the requirement is only
-    * that the frame cannot re-read a store a later append mutates, and a
-    * LogicalRDD (an opaque RDD, no file scan) satisfies it. One job per
-    * avoided re-checkpoint, several per audited pipeline run. */
-  private def materialized(df: DataFrame): DataFrame =
-    df.queryExecution.analyzed match {
-      case _: org.apache.spark.sql.execution.LogicalRDD => df
-      case _ => df.localCheckpoint(true)
+  /** Materialize `df` unless it already IS a materialized checkpoint: its
+    * analyzed plan is a LogicalRDD whose RDD is checkpointed (what
+    * `localCheckpoint(eager = true)` returns), possibly under column
+    * selections (a store gate's kept rows drop their feature column).
+    * Gate stages and the audit runner meet at stage boundaries where the
+    * previous step has already checkpointed; re-checkpointing copies the
+    * rows into a second block-manager cache for no semantic gain — the
+    * requirement is only that the frame cannot re-read a store a later
+    * append mutates. A LogicalRDD alone does not guarantee that:
+    * `createDataFrame(rdd)` and a lazy `localCheckpoint(eager = false)`
+    * give one whose RDD still recomputes its lineage. A cached frame is
+    * not taken as materialized either: evicted blocks recompute. */
+  private def materialized(df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+    @scala.annotation.tailrec
+    def checkpointed(p: LogicalPlan): Boolean = p match {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.isCheckpointed
+      case Project(cols, child) if cols.forall(_.isInstanceOf[Attribute]) =>
+        checkpointed(child)
+      case _ => false
     }
+    if (checkpointed(df.queryExecution.analyzed)) df
+    else df.localCheckpoint(true)
+  }
 
   /** The crash-replay skeleton every persisted-index gate stage shares
     * (class doc of [[SubstrGate]]): seed / recognize-own-seed /
-    * gate+append exactly once under the run's stage token. With
-    * `runToken = None` every branch degenerates to the plain
-    * non-replayable round (gate over the full store, unconditional
-    * append) — the semantics of a run nobody named. */
+    * gate+append exactly once under the run's stage token. The gate
+    * answer carries its materialized survivors and their features
+    * ([[graft.ext.IngestIndex]]), so the append derives nothing again and
+    * the round adds no checkpoint of its own. With `runToken = None`
+    * every branch degenerates to the plain non-replayable round (gate
+    * over the full store, unconditional append) — the semantics of a run
+    * nobody named. */
   private def replayableRound[I <: graft.ext.IngestIndex](df: DataFrame,
       runToken: Option[String], existing: Option[I], reopen: () => I)(
       seed: (DataFrame, Option[String]) => Unit)(
-      gate: (I, DataFrame, Option[String]) => DataFrame)(
-      append: (I, DataFrame, Option[String]) => Unit): DataFrame = {
+      gate: (I, DataFrame, Option[String]) => graft.ext.IngestIndex.Gated)
+      : DataFrame = {
     def gateRound(idx: I, input: DataFrame): DataFrame =
       if (runToken.exists(idx.seededBy)) input
       else {
-        val kept = gate(idx, input, runToken).localCheckpoint(true)
-        append(idx, kept, runToken)
-        kept
+        val gated = gate(idx, input, runToken)
+        idx.append(gated, runToken)
+        gated.kept
       }
     existing match {
       case None =>

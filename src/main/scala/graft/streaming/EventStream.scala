@@ -111,9 +111,11 @@ object EventStream {
     * spec can invoke it twice with the same batch id and prove the replay
     * contract directly: gate against the index EXCLUDING this batch's own
     * (possibly already committed) append, idempotent output overwrite,
-    * then [[graft.ext.NearDupIndex.appendOnce]] under the batch token. Any
-    * crash point replays to the identical gate answer, output, and index
-    * state — exactly-once without a transactional sink.
+    * then append the gate's answer under the batch token
+    * ([[graft.ext.IngestIndex]]: the answer is already materialized and
+    * carries its features). Any crash point replays to the identical gate
+    * answer, output, and index state — exactly-once without a
+    * transactional sink.
     */
   def indexedIngestBatch(idx: graft.ext.IngestIndex, idCol: String,
       textCol: String, out: String, name: String,
@@ -125,16 +127,13 @@ object EventStream {
       // replay hazard and no token machinery: a re-processed batch
       // re-gates against the unchanged store and overwrites its own
       // batch dir with identical rows.
-      idx.gateKeep(batch, idCol, textCol, excludeToken = None)
+      idx.gate(batch, idCol, textCol, excludeToken = None).kept
         .write.mode("overwrite").parquet(s"$out/batch=$id")
     } else {
       val token = s"$name#$id"
-      val kept = idx
-        .gateKeep(batch, idCol, textCol, excludeToken = Some(token))
-        .localCheckpoint(true) // materialize BEFORE appending underneath it
-      kept.write.mode("overwrite").parquet(s"$out/batch=$id")
-      idx.appendToken(kept, idCol, textCol, token)
-      ()
+      val gated = idx.gate(batch, idCol, textCol, excludeToken = Some(token))
+      gated.kept.write.mode("overwrite").parquet(s"$out/batch=$id")
+      idx.append(gated, Some(token))
     }
 
   /** [[runIngestGate]] upgraded to the STORED-index loop (dq104's batch

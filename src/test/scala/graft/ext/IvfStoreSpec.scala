@@ -177,25 +177,26 @@ class IvfStoreSpec extends GraftSpec {
     val fresh = emb.filter($"vec_id" % 6 === 0)
       .select("vec_id", "embedding")
     val b1 = copies.union(fresh)
-    val kept1 = store.gateKeep(b1, "vec_id", "embedding", None)
-      .localCheckpoint(true)
+    val gated1 = store.gate(b1, "vec_id", "embedding", None)
+    val kept1 = gated1.kept
     val keptIds = kept1.select("vec_id").as[Long].collect().toSet
     // every exact copy probes its original's cell first: cosine 1.0 > tau
     val copyIds = copies.select("vec_id").as[Long].collect().toSet
     keptIds.intersect(copyIds) shouldBe empty
     keptIds should not be empty // random held-out vectors survive tau 0.5
-    store.appendToken(kept1, "vec_id", "embedding", "g#1")
+    store.append(gated1, Some("g#1"))
     // copies of the appended survivors: only the append knows them
     val replays = kept1.select(($"vec_id" + 5000).as("vec_id"), $"embedding")
       .localCheckpoint(true)
-    store.gateKeep(replays, "vec_id", "embedding", None).count() shouldBe 0L
+    store.gate(replays, "vec_id", "embedding", None).kept
+      .count() shouldBe 0L
     // replay view: with its own append excluded, the gate reproduces the
     // pre-append answer (survivor vectors were all fresh vs history)
-    store.gateKeep(replays, "vec_id", "embedding", Some("g#1"))
+    store.gate(replays, "vec_id", "embedding", Some("g#1")).kept
       .count() shouldBe keptIds.size.toLong
     // and the token re-append is a no-op
     val st = store.stats
-    store.appendToken(kept1, "vec_id", "embedding", "g#1")
+    store.append(gated1, Some("g#1"))
     store.stats shouldBe st
   }
 
@@ -314,9 +315,9 @@ class IvfStoreSpec extends GraftSpec {
     // the layout stays fully queryable across the empty append
     store.searchAll(Seq(1L), topK = 3, nprobe = 2).count() shouldBe 3
     // and a following NON-empty gate/append round still works
-    store.gateKeep(emb.filter($"vec_id" === 1L)
+    store.gate(emb.filter($"vec_id" === 1L)
       .select(($"vec_id" + 7777).as("vec_id"), $"embedding"),
-      "vec_id", "embedding", None).count() shouldBe 0L // dup of stored 1
+      "vec_id", "embedding", None).kept.count() shouldBe 0L // dup of stored 1
     // the PACKED tier must survive the empty append too: its sidecar is
     // cell-partitioned, so the empty dir must keep the same leaf depth
     // (a flat file with cell as data column breaks partition discovery)
@@ -532,9 +533,10 @@ class IvfStoreSpec extends GraftSpec {
         .select(($"vec_id" + 8000).as("vec_id"), $"embedding"))
       .localCheckpoint(true)
     val tok = "rt#1"
-    val kept = store.gateKeep(batch, "vec_id", "embedding",
-      excludeToken = Some(tok)).localCheckpoint(true)
-    store.appendToken(kept, "vec_id", "embedding", tok)
+    val gated = store.gate(batch, "vec_id", "embedding",
+      excludeToken = Some(tok))
+    val kept = gated.kept
+    store.append(gated, Some(tok))
     val keptIds = kept.select("vec_id").as[Long].collect().sorted
     keptIds should not contain 8002L // the stored copy dropped
     // the refit folds EVERYTHING, including the token's append
@@ -542,17 +544,17 @@ class IvfStoreSpec extends GraftSpec {
     // ... and the replay still gets its original answer: without the
     // token carry the visible refit relation would contain the batch's
     // own rows and the dedup gate would return EMPTY
-    store.gateKeep(batch, "vec_id", "embedding", excludeToken = Some(tok))
+    store.gate(batch, "vec_id", "embedding", excludeToken = Some(tok)).kept
       .select("vec_id").as[Long].collect().sorted shouldBe keptIds
     // and the replayed append is a committed no-op
     val commits = new java.io.File(s"${store.path}/_commits").listFiles()
       .count(f => f.isFile && !f.getName.startsWith("."))
-    store.appendToken(kept, "vec_id", "embedding", tok)
+    store.append(gated, Some(tok))
     new java.io.File(s"${store.path}/_commits").listFiles()
       .count(f => f.isFile && !f.getName.startsWith(".")) shouldBe commits
     // a SECOND refit self-propagates the carry
     store.refit(k = 8)
-    store.gateKeep(batch, "vec_id", "embedding", excludeToken = Some(tok))
+    store.gate(batch, "vec_id", "embedding", excludeToken = Some(tok)).kept
       .select("vec_id").as[Long].collect().sorted shouldBe keptIds
   }
 

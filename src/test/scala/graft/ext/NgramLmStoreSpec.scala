@@ -51,16 +51,15 @@ class NgramLmStoreSpec extends GraftSpec {
      "pre-append gate (the IngestIndex contract)") {
     val store = NgramLmStore.build(docs, "doc_id", "text", tmp(),
       loMicro = 20000L)
-    val before = store.gateKeep(batch, "doc_id", "text", Some("t#1"))
+    val before = store.gate(batch, "doc_id", "text", Some("t#1")).kept
       .select("doc_id").as[Long].collect().sorted
-    val kept = store.gateKeep(batch, "doc_id", "text", Some("t#1"))
-      .localCheckpoint(true)
-    store.appendToken(kept, "doc_id", "text", "t#1")
+    val kept = store.gate(batch, "doc_id", "text", Some("t#1"))
+    store.append(kept, Some("t#1"))
     val st = store.stats
-    store.appendToken(kept, "doc_id", "text", "t#1") // replay: no-op
+    store.append(kept, Some("t#1")) // replay: no-op
     store.stats shouldBe st
     // replay view: the gate reproduces its pre-append answer
-    store.gateKeep(batch, "doc_id", "text", Some("t#1"))
+    store.gate(batch, "doc_id", "text", Some("t#1")).kept
       .select("doc_id").as[Long].collect().sorted shouldBe before
   }
 

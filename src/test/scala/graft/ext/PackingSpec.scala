@@ -105,5 +105,22 @@ class PackingSpec extends GraftSpec {
       carry.select("src", "id", "bin").as[(String, Long, Long)]
         .collect().sortBy(r => (r._1, r._2)).toSeq shouldBe proj
     }
+
+    it("refuses duplicate BINARY ids by content (two equal byte arrays " +
+       "are distinct objects) and passes distinct ones") {
+      val dup = Seq(("g1", Array[Byte](1, 2), 3L), ("g1", Array[Byte](1, 2), 4L),
+        ("g1", Array[Byte](9), 5L)).toDF("src", "id", "n")
+      val err = intercept[Exception] {
+        Packing.packGreedyCarry(dup, "src", "id", "n", 100L,
+          duplicateIdError = Some("duplicate binary id")).count()
+      }
+      Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+        .map(e => String.valueOf(e.getMessage))
+        .exists(_.contains("duplicate binary id")) shouldBe true
+      val distinct = Seq(("g1", Array[Byte](1, 2), 3L),
+        ("g1", Array[Byte](1, 3), 4L)).toDF("src", "id", "n")
+      Packing.packGreedyCarry(distinct, "src", "id", "n", 100L,
+        duplicateIdError = Some("duplicate binary id")).count() shouldBe 2L
+    }
   }
 }

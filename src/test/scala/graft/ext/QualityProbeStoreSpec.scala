@@ -61,7 +61,7 @@ class QualityProbeStoreSpec extends GraftSpec {
     tableOf(store.moments(excludeToken = Some("b#1"))) shouldBe seed
   }
 
-  it("gateKeep equals the hand-derived mean gate: stored Cramer weights, " +
+  it("gate equals the hand-derived mean gate: stored Cramer weights, " +
      "threshold from the moments alone (no corpus rescan)") {
     val store = QualityProbeStore.create(docs, "doc_id", "text", tmp())
     val batch = docs.select($"doc_id" + 900000 as "doc_id", $"text")
@@ -76,7 +76,7 @@ class QualityProbeStoreSpec extends GraftSpec {
       .withColumn("s", QualityProbe.score(w))
       .where($"s" >= thr).select("doc_id")
       .as[Long].collect().sorted
-    store.gateKeep(batch, "doc_id", "text", None)
+    store.gate(batch, "doc_id", "text", None).kept
       .select("doc_id").as[Long].collect().sorted shouldBe expect
     // and the threshold equals the directly-computed stored-corpus mean
     val scores = QualityProbe.features(docs, "doc_id", "text")
@@ -86,19 +86,18 @@ class QualityProbeStoreSpec extends GraftSpec {
     store.model()._2 shouldBe thr
   }
 
-  it("the ingest-loop contract: appendToken is exactly-once and the " +
+  it("the ingest-loop contract: append is exactly-once and the " +
      "excludeToken gate replays the pre-append model") {
     val hist = docs.filter($"doc_id" % 5 =!= 0)
     val store = QualityProbeStore.create(hist, "doc_id", "text", tmp())
     val batch = docs.filter($"doc_id" % 5 === 0)
-    val keptBefore = store.gateKeep(batch, "doc_id", "text", Some("t#1"))
-      .select("doc_id").as[Long].collect().sorted
-    store.appendToken(
-      batch.join(keptBefore.toSeq.toDF("doc_id"), Seq("doc_id"), "left_semi"),
-      "doc_id", "text", "t#1")
-    store.appendToken(batch, "doc_id", "text", "t#1") // replay: no-op
+    val gated = store.gate(batch, "doc_id", "text", Some("t#1"))
+    val keptBefore = gated.kept.select("doc_id").as[Long].collect().sorted
+    store.append(gated, Some("t#1"))
+    store.append(store.gate(batch, "doc_id", "text", None),
+      Some("t#1")) // replay: no-op
     // the replay view (excluding the committed token) gates identically
-    store.gateKeep(batch, "doc_id", "text", Some("t#1"))
+    store.gate(batch, "doc_id", "text", Some("t#1")).kept
       .select("doc_id").as[Long].collect().sorted shouldBe keptBefore
   }
 
@@ -108,7 +107,7 @@ class QualityProbeStoreSpec extends GraftSpec {
     val store = QualityProbeStore.create(docs, "doc_id", "text", tmp())
     val batch = docs.select($"doc_id" + 70000 as "doc_id", $"text")
       .localCheckpoint(true)
-    val kept = store.gateKeep(batch, "doc_id", "text", None)
+    val kept = store.keepAboveMean(batch, "doc_id", "text")
     kept.collect()
     val scans = graft.plans.PlanWalk
       .collectAll(kept.queryExecution.executedPlan) {

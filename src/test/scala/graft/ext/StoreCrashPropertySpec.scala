@@ -141,15 +141,13 @@ class StoreCrashPropertySpec extends GraftSpec {
     df.select("doc_id").as[Long].collect().sorted.toSeq
 
   /** The streaming loop's batch body ([[graft.streaming.EventStream
-    * .indexedIngestBatch]]): gate under the batch token, materialize,
-    * append once. */
+    * .indexedIngestBatch]]): gate under the batch token, append once. */
   private def gatedStep(open: String => IngestIndex)(
       path: String, batch: DataFrame, token: String): Seq[Long] = {
     val idx = open(path)
-    val kept = idx.gateKeep(batch, "doc_id", "text", Some(token))
-      .localCheckpoint(true)
-    idx.appendToken(kept, "doc_id", "text", token)
-    ids(kept)
+    val gated = idx.gate(batch, "doc_id", "text", Some(token))
+    idx.append(gated, Some(token))
+    ids(gated.kept)
   }
 
   private def manifestState(path: String): Seq[String] =

@@ -84,13 +84,13 @@ class SubstrIndexSpec extends GraftSpec {
      "replays the pre-append answer (the IngestIndex contract)") {
     val idx = SubstrIndex.build(history, "doc_id", "text", tmp(), k)
     val token = "ss,stream#0" // commas legal (Manifest round-trip)
-    val original = idx.gateKeep(batch, "doc_id", "text", Some(token))
-      .localCheckpoint(true)
-    idx.appendToken(original, "doc_id", "text", token)
+    val gated = idx.gate(batch, "doc_id", "text", Some(token))
+    val original = gated.kept
+    idx.append(gated, Some(token))
     val st1 = idx.stats
-    idx.appendToken(original, "doc_id", "text", token) // replay: no-op
+    idx.append(gated, Some(token)) // replay: no-op
     idx.stats shouldBe st1
-    val replay = idx.gateKeep(batch, "doc_id", "text", Some(token))
+    val replay = idx.gate(batch, "doc_id", "text", Some(token)).kept
     replay.select("doc_id").as[Long].collect().sorted shouldBe
       original.select("doc_id").as[Long].collect().sorted
     // a NON-excluded gate sees the appended windows and drops the

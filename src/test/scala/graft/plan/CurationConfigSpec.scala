@@ -419,12 +419,12 @@ class CurationConfigSpec extends GraftSpec {
       .filter($"doc_id" % 2 === 1).select("doc_id").as[Long].collect().sorted
     CurationConfig.parse(cfg("doc_id % 2 = 1")).run(spark, d)
       .select("doc_id").as[Long].collect().sorted shouldBe seedIds
-    // round 2: the gate must equal the store's own gateKeep over the
+    // round 2: the gate must equal the store's own gate over the
     // seeded statistics (the stage is the loop, declared)
     val store = graft.ext.QualityProbeStore.open(spark, path)
     val all = spark.read.parquet(s"$d/documents.parquet")
     val expect = store
-      .gateKeep(all, "doc_id", "text", None)
+      .gate(all, "doc_id", "text", None).kept
       .select("doc_id").as[Long].collect().sorted
     CurationConfig.parse(cfg("TRUE")).run(spark, d)
       .select("doc_id").as[Long].collect().sorted shouldBe expect
@@ -1266,5 +1266,27 @@ class CurationConfigSpec extends GraftSpec {
       org.apache.spark.sql.types.StringType
     res.schema("doc_key").dataType shouldBe
       org.apache.spark.sql.types.StringType
+  }
+
+  it("a gate stage checkpoints a createDataFrame(rdd) input before it " +
+     "seeds: the input's RDD runs once, so the seeded store and the " +
+     "stage's output are one evaluation of it (a LogicalRDD alone is not " +
+     "a materialized checkpoint)") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val evals = spark.sparkContext.longAccumulator("gate-input-evals")
+    val rows = spark.sparkContext.parallelize(Seq(
+      Row(1L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
+      Row(2L, "one two three four five six seven eight nine ten")), 1)
+      .mapPartitions { it => evals.add(1L); it }
+    val input = spark.createDataFrame(rows, StructType(Seq(
+      StructField("doc_id", LongType), StructField("text", StringType))))
+    val path = java.nio.file.Files.createTempDirectory("graft-cc-rdd")
+      .toString + "/idx"
+    val out = CurationConfig.NearDupGate(path, 16, 4, 100, 0.8)
+      .apply(input, "doc_id", "text", None)
+    out.collect().length shouldBe 2
+    out.collect().length shouldBe 2
+    evals.value shouldBe 1L
   }
 }
