@@ -359,14 +359,20 @@ final class IvfStore private (private val spark: SparkSession,
     * marker commit. Serialized with every other writer on the layout
     * ([[ManifestLog.withWriteLock]]). */
   def append(df: DataFrame, idCol: String, embCol: String): IvfStoreStats =
-    log.locked(writeBatch(df, idCol, embCol, token = None))
+    write(df, idCol, embCol, None)
 
   /** [[append]] with an idempotence token: a committed manifest carrying
     * `token` makes the call a no-op (micro-batch replay safe;
     * check-then-commit atomic under the writer lock). */
   def appendOnce(df: DataFrame, idCol: String, embCol: String,
       token: String): IvfStoreStats =
-    log.once(token)(stats)(writeBatch(df, idCol, embCol, Some(token)))
+    write(df, idCol, embCol, Some(token))
+
+  /** Every append's one locked write: exactly once under `token`,
+    * unconditionally without one. */
+  private def write(df: DataFrame, idCol: String, embCol: String,
+      token: Option[String]): IvfStoreStats =
+    log.write(token)(stats)(writeBatch(df, idCol, embCol, token))
 
   private[ext] def writeBatch(df: DataFrame, idCol: String, embCol: String,
       token: Option[String]): IvfStoreStats = statsOf(
@@ -1387,8 +1393,7 @@ final class IvfStore private (private val spark: SparkSession,
 
   def append(gated: IngestIndex.Gated, token: Option[String]): Unit = {
     gated.requireFrom(path)
-    log.write(token)(stats)(
-      writeBatch(gated.features, gated.idCol, gated.textCol, token))
+    write(gated.features, gated.idCol, gated.textCol, token)
     ()
   }
 }

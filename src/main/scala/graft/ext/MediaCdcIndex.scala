@@ -84,13 +84,18 @@ final class MediaCdcIndex private (
     * use [[gate]], whose answer already is). */
   def append(df: DataFrame, idCol: String,
       payloadCol: String): MediaCdcIndexStats =
-    log.locked(writeBatch(df, idCol, payloadCol, None, token = None))
+    write(df, idCol, payloadCol, None)
 
   /** [[append]] with an idempotence token — exactly-once. */
   def appendOnce(df: DataFrame, idCol: String, payloadCol: String,
       token: String): MediaCdcIndexStats =
-    log.once(token)(stats)(
-      writeBatch(df, idCol, payloadCol, None, Some(token)))
+    write(df, idCol, payloadCol, Some(token))
+
+  /** Every append's one locked write: exactly once under `token`,
+    * unconditionally without one. */
+  private def write(df: DataFrame, idCol: String, payloadCol: String,
+      token: Option[String]): MediaCdcIndexStats =
+    log.write(token)(stats)(writeBatch(df, idCol, payloadCol, None, token))
 
   private def writeBatch(df: DataFrame, idCol: String, payloadCol: String,
       init: Option[MediaCdcIndexStats],
@@ -174,8 +179,7 @@ final class MediaCdcIndex private (
 
   def append(gated: IngestIndex.Gated, token: Option[String]): Unit = {
     gated.requireFrom(path)
-    log.write(token)(stats)(
-      writeBatch(gated.features, gated.idCol, gated.textCol, None, token))
+    write(gated.features, gated.idCol, gated.textCol, token)
     ()
   }
 }

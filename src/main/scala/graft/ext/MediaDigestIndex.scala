@@ -75,14 +75,19 @@ final class MediaDigestIndex private (
     * materialized. */
   def append(df: DataFrame, idCol: String,
       payloadCol: String): MediaDigestIndexStats =
-    log.locked(writeBatch(df, payloadCol, first = false, token = None))
+    write(df, payloadCol, None)
 
   /** [[append]] with an idempotence token — the exactly-once append: a
     * committed manifest carrying `token` makes the call a no-op. */
   def appendOnce(df: DataFrame, idCol: String, payloadCol: String,
       token: String): MediaDigestIndexStats =
-    log.once(token)(stats)(
-      writeBatch(df, payloadCol, first = false, token = Some(token)))
+    write(df, payloadCol, Some(token))
+
+  /** Every append's one locked write: exactly once under `token`,
+    * unconditionally without one. */
+  private def write(df: DataFrame, payloadCol: String,
+      token: Option[String]): MediaDigestIndexStats =
+    log.write(token)(stats)(writeBatch(df, payloadCol, first = false, token))
 
   private def writeBatch(df: DataFrame, payloadCol: String, first: Boolean,
       token: Option[String]): MediaDigestIndexStats = statsOf(
@@ -145,8 +150,7 @@ final class MediaDigestIndex private (
 
   def append(gated: IngestIndex.Gated, token: Option[String]): Unit = {
     gated.requireFrom(path)
-    log.write(token)(stats)(
-      writeBatch(gated.features, gated.textCol, first = false, token))
+    write(gated.features, gated.textCol, token)
     ()
   }
 }

@@ -115,7 +115,7 @@ final class NearDupIndex private (
     * survivors' digests to `append(gated, token)` instead.
     */
   def append(df: DataFrame, idCol: String, textCol: String): NearDupIndexStats =
-    log.locked(writeText(df, idCol, textCol, None, token = None))
+    withShingled(df, idCol, textCol)(write(_, None))
 
   /** [[append]] with an idempotence token — the EXACTLY-ONCE append: if
     * a committed manifest already carries `token`, the call is a no-op (the
@@ -125,19 +125,24 @@ final class NearDupIndex private (
     * also reproduces its original answer. */
   def appendOnce(df: DataFrame, idCol: String, textCol: String,
       token: String): NearDupIndexStats =
-    log.once(token)(stats)(writeText(df, idCol, textCol, None, Some(token)))
+    withShingled(df, idCol, textCol)(write(_, Some(token)))
 
-  /** Shingle `df` once and write it. The shingleFrame rule
+  /** `body` over `df`'s digests, shingled once. The shingleFrame rule
     * ([[MinHashLSH]]): cache the UNFILTERED projection and filter above
     * the boundary, so the empty-digest predicate can't be pushed below the
     * fan-out exchange and recompute digests single-core. */
-  private def writeText(df: DataFrame, idCol: String, textCol: String,
-      init: Option[NearDupIndexStats],
-      token: Option[String]): NearDupIndexStats = {
+  private def withShingled[T](df: DataFrame, idCol: String, textCol: String)(
+      body: DataFrame => T): T = {
     val feats = incomingProjection(df, idCol, textCol).persist()
-    try writeBatch(feats, init, token)
+    try body(feats)
     finally { feats.unpersist(blocking = false); () }
   }
+
+  /** Every append's one locked write: exactly once under `token`,
+    * unconditionally without one. */
+  private def write(feats: DataFrame,
+      token: Option[String]): NearDupIndexStats =
+    log.write(token)(stats)(writeBatch(feats, None, token))
 
   /** The one relation writer: a `(doc_id, ds)` digest frame becomes the
     * commit's three relation dirs and its stats. */
@@ -221,12 +226,8 @@ final class NearDupIndex private (
   private def digestsOf(digestedRows: DataFrame, idCol: String): DataFrame =
     digestedRows.select(col(idCol).as("doc_id"), col("__ds").as("ds"))
 
-  /** `uniquePairs = false` skips the candidate `distinct` (one shuffle):
-    * a pair found through several bands then repeats, which only the
-    * gate, asking which documents have any match, may accept. */
   private def pairsPlan(incProj: DataFrame, threshold: Double,
-      fpp: Double, excludeToken: Option[String],
-      uniquePairs: Boolean = true): DataFrame = {
+      fpp: Double, excludeToken: Option[String]): DataFrame = {
     val ms = log.visible(excludeToken)
     val st = statsOf(log.statsIn(ms))
     locally {
@@ -246,11 +247,11 @@ final class NearDupIndex private (
       val (maybeSeen, _) = BloomPrune.split(
         MinHashLSH.bandedKeysFromDigests(incDs, st.numHashes, st.bands)
           .withColumn("__k", keyStr), "__k", filter)
-      val pairs = maybeSeen
+      val cand = maybeSeen
         .join(histIdx.select(col("doc_id").as("__hist_id"), col("b"), col("bkey")),
           Seq("b", "bkey"))
         .select(col("doc_id").as("doc_inc"), col("__hist_id").as("doc_hist"))
-      val cand = if (uniquePairs) pairs.distinct() else pairs
+        .distinct()
       val x = incDs.select(col("doc_id").as("doc_inc"), col("ds").as("ds_a"))
       val y = relOf(ms, "digests")
         .select(col("doc_id").as("doc_hist"), col("ds").as("ds_b"))
@@ -263,17 +264,12 @@ final class NearDupIndex private (
 
   /** Keep only incoming rows that near-duplicate NO indexed document — the
     * stored-index ingest gate ([[MinHashLSH.keepUnseenNear]]'s production
-    * form) as a lazy plan over the call's materialized pairs. The ingest
-    * loop uses [[gate]], which also hands the survivors' digests to
-    * `append(gated, token)`.
+    * form): [[gate]]'s kept rows, materialized.
     */
   def keepUnseen(incoming: DataFrame, idCol: String, textCol: String,
       threshold: Double = 0.8, fpp: Double = 0.01,
-      excludeToken: Option[String] = None): DataFrame = {
-    val dup = pairsVs(incoming, idCol, textCol, threshold, fpp, excludeToken)
-      .select(col("doc_inc")).distinct()
-    incoming.join(dup, incoming(idCol) === col("doc_inc"), "left_anti")
-  }
+      excludeToken: Option[String] = None): DataFrame =
+    gate(incoming, idCol, textCol, excludeToken, threshold, fpp).kept
 
   // ---------------- IngestIndex ----------------
 
@@ -281,19 +277,20 @@ final class NearDupIndex private (
       excludeToken: Option[String]): IngestIndex.Gated =
     gate(batch, idCol, textCol, excludeToken, threshold = 0.8)
 
-  /** [[keepUnseen]]'s answer at `threshold`, materialized with the
-    * survivors' digests ([[IngestIndex]]'s gate phase). The batch is
-    * shingled once and its rows ride the cached digest frame, so the
-    * batch's own plan, the pairs plan and the final anti-join each run
+  /** The rows of `batch` with no indexed near-duplicate above `threshold`,
+    * materialized with their digests ([[IngestIndex]]'s gate phase). The
+    * batch is shingled once and its rows ride the cached digest frame, so
+    * the batch's own plan, the pairs plan and the final anti-join each run
     * once per call. */
   def gate(batch: DataFrame, idCol: String, textCol: String,
-      excludeToken: Option[String], threshold: Double): IngestIndex.Gated = {
+      excludeToken: Option[String], threshold: Double,
+      fpp: Double = 0.01): IngestIndex.Gated = {
     val feats = digested(batch, textCol)
     val kept = CacheScope.withCached(feats) {
-      // the duplicate ids are a subset of the batch's: broadcast them, so
+      // the distinct duplicate ids, at most the batch's: broadcast, so
       // the cached rows never shuffle for the anti-join
-      val dup = pairsPlan(digestsOf(feats, idCol), threshold, fpp = 0.01,
-        excludeToken, uniquePairs = false).select(col("doc_inc"))
+      val dup = pairsPlan(digestsOf(feats, idCol), threshold, fpp,
+        excludeToken).select(col("doc_inc")).distinct()
       feats.join(broadcast(dup), col(idCol) === col("doc_inc"), "left_anti")
     }
     new IngestIndex.Gated(kept.drop("__ds"), digestsOf(kept, idCol), idCol,
@@ -303,7 +300,7 @@ final class NearDupIndex private (
   /** Index a [[gate]] answer of this store from its digests. */
   def append(gated: IngestIndex.Gated, token: Option[String]): Unit = {
     gated.requireFrom(path)
-    log.write(token)(stats)(writeBatch(gated.features, None, token))
+    write(gated.features, token)
     ()
   }
 }
@@ -320,8 +317,9 @@ object NearDupIndex extends StoreProbe {
       seedToken: Option[String] = None): NearDupIndex = {
     require(numHashes % bands == 0, "numHashes must be divisible by bands")
     val idx = new NearDupIndex(history.sparkSession, path)
-    idx.log.locked(idx.writeText(history, idCol, textCol,
-      Some(NearDupIndexStats(0L, 0L, numHashes, bands, maxBucket)), seedToken))
+    idx.withShingled(history, idCol, textCol)(feats => idx.log.locked(
+      idx.writeBatch(feats,
+        Some(NearDupIndexStats(0L, 0L, numHashes, bands, maxBucket)), seedToken)))
     idx
   }
 

@@ -92,15 +92,20 @@ final class NgramLmStore private (
     * loop's [[gate]] hands its survivors' bigrams to
     * `append(gated, token)` instead. */
   def append(df: DataFrame, idCol: String, textCol: String): NgramLmStoreStats =
-    log.locked(writeBatch(NgramLm.bigramsOf(df, textCol), None, token = None))
+    write(NgramLm.bigramsOf(df, textCol), None)
 
   /** [[append]] with an idempotence token — exactly-once model updates
     * (the token check and the commit are atomic under the writer lock:
     * two racers with the same token fold the batch once). */
   def appendOnce(df: DataFrame, idCol: String, textCol: String,
       token: String): NgramLmStoreStats =
-    log.once(token)(stats)(
-      writeBatch(NgramLm.bigramsOf(df, textCol), None, Some(token)))
+    write(NgramLm.bigramsOf(df, textCol), Some(token))
+
+  /** Every append's one locked write: exactly once under `token`,
+    * unconditionally without one. */
+  private def write(bigrams: DataFrame,
+      token: Option[String]): NgramLmStoreStats =
+    log.write(token)(stats)(writeBatch(bigrams, None, token))
 
   /** The one relation writer: a bigram-occurrence frame (`__bg`, one row
     * per occurrence) becomes the commit's counts partials — the caller
@@ -196,31 +201,35 @@ final class NgramLmStore private (
 
   /** Keep batch documents whose stored-model `mean_micro` lies in
     * `[loMicro, hiMicro]` — the fluency-band gate against the persisted
-    * model. */
+    * model: [[gate]]'s kept rows at that band, materialized. */
   def keepBand(batch: DataFrame, idCol: String, textCol: String,
       loMicro: Long, hiMicro: Long,
-      excludeToken: Option[String] = None): DataFrame = {
-    val keep = scoreBatch(batch, idCol, textCol, excludeToken)
-      .where(col("mean_micro").between(loMicro, hiMicro))
-      .select(col(idCol))
-    batch.join(keep, Seq(idCol), "left_semi")
-  }
+      excludeToken: Option[String] = None): DataFrame =
+    gate(batch, idCol, textCol, excludeToken, loMicro, hiMicro).kept
 
   // ---------------- IngestIndex ----------------
 
-  /** [[keepBand]] at the stored band, materialized with the survivors'
-    * bigrams ([[IngestIndex]]'s gate phase). The batch is tokenized once
-    * and its rows ride the cached bigram frame into the score join, so
-    * the batch's own plan runs once and no second join picks the kept
-    * rows. */
+  /** [[keepBand]]'s gate at the stored band. */
   def gate(batch: DataFrame, idCol: String, textCol: String,
       excludeToken: Option[String]): IngestIndex.Gated = {
     val st = stats
+    gate(batch, idCol, textCol, excludeToken, st.loMicro, st.hiMicro)
+  }
+
+  /** The batch documents scoring in `[loMicro, hiMicro]`, materialized
+    * with their bigrams ([[IngestIndex]]'s gate phase). The batch is
+    * tokenized once and its rows ride the cached bigram frame into the
+    * score join, so the batch's own plan runs once and no second join
+    * picks the kept rows. A row with a null id is dropped, as
+    * [[scoreBatch]]'s per-id answer cannot name it. */
+  def gate(batch: DataFrame, idCol: String, textCol: String,
+      excludeToken: Option[String], loMicro: Long,
+      hiMicro: Long): IngestIndex.Gated = {
     val feats = NgramLm.withBigrams(batch, textCol)
     val kept = CacheScope.withCached(feats) {
       val bg = feats.select(col(idCol), explode(col("__bgs")).as("__bg"))
-      scorePlan(feats, bg, idCol, excludeToken)
-        .where(col("mean_micro").between(st.loMicro, st.hiMicro))
+      scorePlan(feats.where(col(idCol).isNotNull), bg, idCol, excludeToken)
+        .where(col("mean_micro").between(loMicro, hiMicro))
         .drop("n_bigrams", "sum_micro", "mean_micro")
     }
     new IngestIndex.Gated(kept.drop("__bgs"),
@@ -231,7 +240,7 @@ final class NgramLmStore private (
     * bigrams. */
   def append(gated: IngestIndex.Gated, token: Option[String]): Unit = {
     gated.requireFrom(path)
-    log.write(token)(stats)(writeBatch(gated.features, None, token))
+    write(gated.features, token)
     ()
   }
 }

@@ -79,13 +79,19 @@ final class QualityProbeStore private (
     * 14-row partials dir, one marker commit. Serialized with every
     * other writer on the layout ([[ManifestLog.withWriteLock]]). */
   def append(df: DataFrame, idCol: String, textCol: String): Unit =
-    log.locked(writeBatch(df, idCol, textCol, token = None))
+    write(df, idCol, textCol, None)
 
   /** [[append]] with an idempotence token — exactly-once statistics
     * (check-then-commit atomic under the writer lock). */
   def appendOnce(df: DataFrame, idCol: String, textCol: String,
       token: String): Unit =
-    log.once(token)(())(writeBatch(df, idCol, textCol, Some(token)))
+    write(df, idCol, textCol, Some(token))
+
+  /** Every append's one locked write: exactly once under `token`,
+    * unconditionally without one. */
+  private def write(df: DataFrame, idCol: String, textCol: String,
+      token: Option[String]): Unit =
+    log.write(token)(())(writeBatch(df, idCol, textCol, token))
 
   private def writeBatch(df: DataFrame, idCol: String, textCol: String,
       token: Option[String],
@@ -161,8 +167,7 @@ final class QualityProbeStore private (
 
   def append(gated: IngestIndex.Gated, token: Option[String]): Unit = {
     gated.requireFrom(path)
-    log.write(token)(())(
-      writeBatch(gated.features, gated.idCol, gated.textCol, token))
+    write(gated.features, gated.idCol, gated.textCol, token)
   }
 }
 

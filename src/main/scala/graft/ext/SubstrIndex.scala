@@ -71,15 +71,19 @@ final class SubstrIndex private (
     * ingest loop's [[gate]] hands its survivors' digests to
     * `append(gated, token)` instead. */
   def append(df: DataFrame, idCol: String, textCol: String): SubstrIndexStats =
-    log.locked(writeBatch(windowsOf(df, idCol, textCol, stats.k), None,
-      token = None))
+    write(windowsOf(df, idCol, textCol, stats.k), None)
 
   /** [[append]] with an idempotence token — the exactly-once append: a
     * committed manifest carrying `token` makes the call a no-op. */
   def appendOnce(df: DataFrame, idCol: String, textCol: String,
       token: String): SubstrIndexStats =
-    log.once(token)(stats)(writeBatch(windowsOf(df, idCol, textCol,
-      stats.k), None, Some(token)))
+    write(windowsOf(df, idCol, textCol, stats.k), Some(token))
+
+  /** Every append's one locked write: exactly once under `token`,
+    * unconditionally without one. */
+  private def write(windows: DataFrame,
+      token: Option[String]): SubstrIndexStats =
+    log.write(token)(stats)(writeBatch(windows, None, token))
 
   private def windowsOf(df: DataFrame, idCol: String, textCol: String,
       k: Int): DataFrame =
@@ -164,15 +168,12 @@ final class SubstrIndex private (
   }
 
   /** Keep batch documents with at most `maxDupWindows` windows already in
-    * history (default 0: no verbatim overlap at all) — the ingest gate. */
+    * history (default 0: no verbatim overlap at all) — the ingest gate:
+    * [[gate]]'s kept rows, materialized. */
   def keepFresh(batch: DataFrame, idCol: String, textCol: String,
       maxDupWindows: Long = 0L, fpp: Double = 0.01,
-      excludeToken: Option[String] = None): DataFrame = {
-    val keep = dupWindowReport(batch, idCol, textCol, fpp, excludeToken)
-      .where(col("n_dup_windows") <= maxDupWindows)
-      .select(col(idCol))
-    batch.join(keep, Seq(idCol), "left_semi")
-  }
+      excludeToken: Option[String] = None): DataFrame =
+    gate(batch, idCol, textCol, excludeToken, maxDupWindows, fpp).kept
 
   // ---------------- IngestIndex ----------------
 
@@ -180,24 +181,28 @@ final class SubstrIndex private (
       excludeToken: Option[String]): IngestIndex.Gated =
     gate(batch, idCol, textCol, excludeToken, maxDupWindows = 0L)
 
-  /** [[keepFresh]]'s answer at `maxDupWindows`, materialized with the
-    * survivors' window digests ([[IngestIndex]]'s gate phase). The batch
-    * is tokenized and windowed once and its rows ride the cached frame;
-    * one anti-join against the over-limit documents picks the kept rows
-    * (a document absent from the duplicate counts has none). */
+  /** The batch documents with at most `maxDupWindows` windows in history,
+    * materialized with their window digests ([[IngestIndex]]'s gate
+    * phase). The batch is tokenized and windowed once and its rows ride
+    * the cached frame; one anti-join against the over-limit documents
+    * picks the kept rows (a document absent from the duplicate counts has
+    * none). A row with a null id is dropped, as [[dupWindowReport]]'s
+    * per-id answer cannot name it. */
   def gate(batch: DataFrame, idCol: String, textCol: String,
-      excludeToken: Option[String], maxDupWindows: Long): IngestIndex.Gated = {
+      excludeToken: Option[String], maxDupWindows: Long,
+      fpp: Double = 0.01): IngestIndex.Gated = {
     require(maxDupWindows >= 0, s"maxDupWindows must be >= 0, got $maxDupWindows")
     val ms = log.visible(excludeToken)
     val st = statsOf(log.statsIn(ms))
     val feats = ExactSubstring.withWindowDigests(batch, textCol, st.k)
     val kept = CacheScope.withCached(feats) {
       val bw = feats.select(col(idCol), explode(col("__dgs")).as("dg"))
-      // a subset of the batch's ids: broadcast, so the cached rows never
-      // shuffle for the anti-join
-      val over = dupWindows(bw, idCol, fpp = 0.01, ms, st)
+      // grouped by id, so at most the batch's ids: broadcast, so the
+      // cached rows never shuffle for the anti-join
+      val over = dupWindows(bw, idCol, fpp, ms, st)
         .where(col("n_dup_windows") > maxDupWindows)
-      feats.join(broadcast(over), Seq(idCol), "left_anti")
+      feats.where(col(idCol).isNotNull)
+        .join(broadcast(over), Seq(idCol), "left_anti")
     }
     new IngestIndex.Gated(kept.drop("__dgs"),
       kept.select(explode(col("__dgs")).as("dg")), idCol, textCol, path)
@@ -206,7 +211,7 @@ final class SubstrIndex private (
   /** Index a [[gate]] answer of this store from its window digests. */
   def append(gated: IngestIndex.Gated, token: Option[String]): Unit = {
     gated.requireFrom(path)
-    log.write(token)(stats)(writeBatch(gated.features, None, token))
+    write(gated.features, token)
     ()
   }
 }

@@ -84,8 +84,10 @@ object StoreJobPinSpec {
   // gate hands its materialized survivors and their features to the
   // append, so the caller's checkpoint and the append's re-derivation
   // are gone (23, 16 and 20 jobs before; NearDup's 23 was already below
-  // its first 28 because its append stats come from footers).
-  val NearDupCycle = 18
+  // its first 28 because its append stats come from footers). NearDup's
+  // gate takes the distinct candidate pairs and the distinct duplicate
+  // ids it broadcasts, one job each.
+  val NearDupCycle = 20
   val SubstrCycle = 11
   val NgramLmCycle = 19
   val Bm25AppendStats = 9

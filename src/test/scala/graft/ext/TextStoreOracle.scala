@@ -3,14 +3,45 @@ package graft.ext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** The text stores' appends as they were before the gate handed its
-  * features over: each one re-derives its features from the kept rows'
-  * TEXT (shingle digests, whitespace tokens + k-window md5s, word tokens
-  * + bigrams) and writes the relations and the commit stats from them.
-  * Kept in test scope as the parity oracle for `append(gated, token)`
-  * (`TextStoreParitySpec`); the derivations are copies, so a change to
-  * the library's own derivation cannot move both sides at once. */
-object TextAppendOracle {
+/** The text stores' gates and appends as they were before the gate
+  * handed its rows and features over, kept in test scope as the parity
+  * oracle for `gate` + `append(gated, token)` (`TextStoreParitySpec`):
+  *  - each keep step picks the kept rows from the store's public per-id
+  *    answer (`pairsVs`, `dupWindowReport`, `scoreBatch`) with its own
+  *    anti- or semi-join on the raw batch;
+  *  - each append re-derives its features from the kept rows' TEXT
+  *    (shingle digests, whitespace tokens + k-window md5s, word tokens
+  *    + bigrams) and writes the relations and the commit stats from
+  *    them. The derivations are copies, so a change to the library's
+  *    own derivation cannot move both sides at once. */
+object TextStoreOracle {
+
+  /** NearDupIndex: the batch rows with no verified near-duplicate pair. */
+  def keepUnseen(idx: NearDupIndex, batch: DataFrame, idCol: String,
+      textCol: String, token: String): DataFrame = {
+    val dup = idx.pairsVs(batch, idCol, textCol, excludeToken = Some(token))
+      .select(col("doc_inc")).distinct()
+    batch.join(dup, batch(idCol) === col("doc_inc"), "left_anti")
+  }
+
+  /** SubstrIndex: the batch rows whose id has no window in history. */
+  def keepFresh(idx: SubstrIndex, batch: DataFrame, idCol: String,
+      textCol: String, token: String): DataFrame = {
+    val keep = idx.dupWindowReport(batch, idCol, textCol,
+        excludeToken = Some(token))
+      .where(col("n_dup_windows") <= 0L).select(col(idCol))
+    batch.join(keep, Seq(idCol), "left_semi")
+  }
+
+  /** NgramLmStore: the batch rows whose id scores in the stored band. */
+  def keepBand(store: NgramLmStore, batch: DataFrame, idCol: String,
+      textCol: String, token: String): DataFrame = {
+    val st = store.stats
+    val keep = store.scoreBatch(batch, idCol, textCol, Some(token))
+      .where(col("mean_micro").between(st.loMicro, st.hiMicro))
+      .select(col(idCol))
+    batch.join(keep, Seq(idCol), "left_semi")
+  }
 
   private def fanOut(df: DataFrame): DataFrame =
     df.repartition(df.sparkSession.sparkContext.defaultParallelism)
