@@ -995,7 +995,7 @@ object ScaleProbe {
           .toString + "/idx"
         val tb0 = System.nanoTime()
         val store = graft.ext.NgramLmStore.build(corpus, "doc_id", "text",
-          path, buckets = 32)
+          path)
         val tb1 = System.nanoTime()
         val storedRows = store.scoreBatch(batch, "doc_id", "text").count()
         val tb2 = System.nanoTime()

@@ -1,15 +1,16 @@
 package graft.ext
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Stored statistics for [[NgramLmStore]]: advisory `bigramRows` (count
-  * partials on disk, not distinct bigrams), the `buckets` count the model
-  * relation is partitioned by, and the fluency-band gate parameters
-  * (`loMicro`, `hiMicro`) pinned at build so a reader can't gate a stored
-  * model with mismatched thresholds (the [[IvfStoreStats]] rule). */
-final case class NgramLmStoreStats(bigramRows: Long, buckets: Int,
-    loMicro: Long, hiMicro: Long)
+  * partials on disk, not distinct bigrams) and the fluency-band gate
+  * parameters (`loMicro`, `hiMicro`) pinned at build so a reader can't
+  * gate a stored model with mismatched thresholds (the [[IvfStoreStats]]
+  * rule). */
+final case class NgramLmStoreStats(bigramRows: Long, loMicro: Long,
+    hiMicro: Long)
 
 /** PERSISTED bigram language model — [[NgramLm]]'s per-call training made
   * an INCREMENTAL stored model, the fifth member of the index family
@@ -24,10 +25,13 @@ final case class NgramLmStoreStats(bigramRows: Long, buckets: Int,
   * == Layout ==
   *
   * The [[ManifestLog]] marker-commit scheme shared by the family:
-  *  - `counts/append=<id>/wb=<b>/` (__w1, __bg, __c12) — per-append
-  *    bigram-count partials, PARTITIONED BY PREFIX-HASH BUCKET
-  *    (`wb = pmod(hash(__w1), buckets)`) and prefix-sorted within files.
-  *    Cross-append duplicates are fine: every reader SUMS partials (the
+  *  - `counts/append=<id>/` (__w1, __bg, __c12) — per-append
+  *    bigram-count partials as plain parquet, sorted by `(__w1, __bg)`
+  *    within files; the file count is whatever the aggregation's
+  *    (AQE-coalesced) partitions give, one file for a micro-batch. No
+  *    reader prunes by directory (the gate prunes rows by a semi-join on
+  *    `__w1`), so the relation has no partition columns. Cross-append
+  *    duplicates are fine: every reader SUMS partials (the
   *    [[NearDupIndex]] counts/ pattern), and compaction folds them;
   *  - `_commits/m<seq>` marker manifests ([[StoreLog]]; crashed appends
   *    invisible), each data commit carrying the [[NgramLmStoreStats]].
@@ -36,12 +40,15 @@ final case class NgramLmStoreStats(bigramRows: Long, buckets: Int,
   *
   * The batch's bigram prefixes prune the stored relation FIRST (a
   * semi-join on `__w1` — all rows of a surviving prefix are kept, so its
-  * `c1` total is exact), then partials sum into the model, prefix totals
-  * aggregate FROM the model, and each bigram's probability is floored
-  * into integer micro-units `(1e6·c12) div c1` — the same all-integer
-  * arithmetic as [[NgramLm.fluencyReport]], so scores are bit-portable
-  * and the DuckDB oracle re-derives the whole incremental chain. Per-call
-  * work is model-sized (vocabulary-bounded), never corpus-sized.
+  * `c1` total is exact). The pruned partials are then read ONCE: one
+  * exchange on `__w1` feeds both the `(__w1, __bg)` sum into the model
+  * and, over that same partitioning, each prefix's total `c1` (a window
+  * sum, so no second scan and no model self-join). Each bigram's
+  * probability is floored into integer micro-units `(1e6·c12) div c1` —
+  * the same all-integer arithmetic as [[NgramLm.fluencyReport]], so
+  * scores are bit-portable and the DuckDB oracle re-derives the whole
+  * incremental chain. Per-call work is model-sized (vocabulary-bounded),
+  * never corpus-sized.
   *
   * == Ingest gate ([[IngestIndex]]) ==
   *
@@ -63,16 +70,15 @@ final class NgramLmStore private (
     // deduplicates cross-append bigram rows (shrinking every later model
     // aggregation); sum-identical by associativity
     fold = Some((from, to) => counts(from)
-      .groupBy("__w1", "__bg", "wb")
+      .groupBy("__w1", "__bg")
       .agg(sum(col("__c12")).as("__c12"))
-      .select("__w1", "__bg", "__c12", "wb")
-      .repartition(col("wb"))
-      .sortWithinPartitions("wb", "__w1", "__bg")
-      .write.partitionBy("wb").mode("errorifexists").parquet(to)))))
+      .select("__w1", "__bg", "__c12")
+      .sortWithinPartitions("__w1", "__bg")
+      .write.mode("errorifexists").parquet(to)))))
 
   private def statsOf(kv: Map[String, String]): NgramLmStoreStats =
-    NgramLmStoreStats(kv("bigramRows").toLong, kv("buckets").toInt,
-      kv("loMicro").toLong, kv("hiMicro").toLong)
+    NgramLmStoreStats(kv("bigramRows").toLong, kv("loMicro").toLong,
+      kv("hiMicro").toLong)
 
   /** Current stored statistics (appends move it; read off the newest
     * commit — zero Spark jobs per read). */
@@ -80,14 +86,12 @@ final class NgramLmStore private (
 
   private def counts(dirs: Seq[String]): DataFrame =
     RelRead.read(spark, s"$path#counts", dirs,
-      basePath = Some(s"$path/counts"),
       schema = Some(NgramLmStore.countsSchema))
 
   // ---------------- writes ----------------
 
-  /** Fold a batch's bigram counts into the model: one bucket-partitioned
-    * partials dir, one marker commit carrying the refreshed stats.
-    * Serialized with every other writer on the layout
+  /** Fold a batch's bigram counts into the model: one partials dir, one
+    * marker commit carrying the refreshed stats. Serialized with every other writer on the layout
     * ([[ManifestLog.withWriteLock]]). Tokenizes `df`'s text; the ingest
     * loop's [[gate]] hands its survivors' bigrams to
     * `append(gated, token)` instead. */
@@ -120,12 +124,8 @@ final class NgramLmStore private (
         .groupBy("__bg").agg(count(lit(1)).as("__c12"))
         .select(split(col("__bg"), " ").getItem(0).as("__w1"),
           col("__bg"), col("__c12"))
-        .withColumn("wb", pmod(hash(col("__w1")), lit(prev.buckets)))
-        // cluster by bucket before partitionBy: caps the append at
-        // ≤ buckets files instead of tasks × buckets (the dq127 finding)
-        .repartition(col("wb"))
-        .sortWithinPartitions("wb", "__w1", "__bg")
-        .write.partitionBy("wb").mode("errorifexists").parquet(dir)
+        .sortWithinPartitions("__w1", "__bg")
+        .write.mode("errorifexists").parquet(dir)
       val added = graft.io.ParquetMeta.rowCount(spark, dir)
       // a FIRST append with zero rows would leave the model unreadable
       // (every later read infers schema over only-empty dirs): refuse the
@@ -181,10 +181,11 @@ final class NgramLmStore private (
       .select(split(col("__bg"), " ").getItem(0).as("__w1")).distinct()
     val pruned = counts(log.dirs(log.visible(excludeToken), "counts"))
       .join(prefixes, Seq("__w1"), "left_semi")
-    val model = pruned.groupBy("__w1", "__bg")
-      .agg(sum(col("__c12")).as("__c12"))
-    val prefix = model.groupBy("__w1").agg(sum(col("__c12")).as("__c1"))
-    val scoredModel = model.join(prefix, "__w1")
+    // one exchange on the prefix serves both the bigram sum and the
+    // prefix total: the partials are scanned once, with no self-join
+    val scoredModel = pruned.repartition(col("__w1"))
+      .groupBy("__w1", "__bg").agg(sum(col("__c12")).as("__c12"))
+      .withColumn("__c1", sum(col("__c12")).over(Window.partitionBy("__w1")))
       .select(col("__bg"), expr("(1000000 * __c12) div __c1").as("__micro"))
     val perDoc = bg.join(scoredModel, Seq("__bg"), "left_outer")
       .groupBy(idCol)
@@ -247,19 +248,16 @@ final class NgramLmStore private (
 
 object NgramLmStore extends StoreProbe {
 
-  /** The `counts/` relation's schema as written (data columns in write
-    * order, then the discovered partition columns `append`, `wb` exactly
-    * as inference would place them) — declared so no read of the
-    * relation ever runs a schema-inference job; pinned against the real
-    * layout by `StoreRelationSchemaSpec`. */
+  /** The `counts/` relation's schema as written (the data columns in
+    * write order; the relation has no partition columns) — declared so no
+    * read of the relation ever runs a schema-inference job; pinned
+    * against the real layout by `StoreRelationSchemaSpec`. */
   private[ext] val countsSchema: org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types._
     StructType(Seq(
       StructField("__w1", StringType),
       StructField("__bg", StringType),
-      StructField("__c12", LongType),
-      StructField("append", StringType),
-      StructField("wb", IntegerType)))
+      StructField("__c12", LongType)))
   }
 
   /** Build a new stored model at `path` (must not already hold one) from
@@ -268,15 +266,13 @@ object NgramLmStore extends StoreProbe {
     * rides the first commit so a build-if-absent caller can recognize
     * its own seed on crash-replay ([[IngestIndex.seededBy]]). */
   def build(history: DataFrame, idCol: String, textCol: String, path: String,
-      buckets: Int = 16, loMicro: Long = 0L,
-      hiMicro: Long = Long.MaxValue,
+      loMicro: Long = 0L, hiMicro: Long = Long.MaxValue,
       seedToken: Option[String] = None): NgramLmStore = {
-    require(buckets >= 1, "need buckets >= 1")
     require(loMicro >= 0L && loMicro <= hiMicro,
       "need 0 <= loMicro <= hiMicro")
     val idx = new NgramLmStore(history.sparkSession, path)
     idx.log.locked(idx.writeBatch(NgramLm.bigramsOf(history, textCol),
-      Some(NgramLmStoreStats(0L, buckets, loMicro, hiMicro)), seedToken))
+      Some(NgramLmStoreStats(0L, loMicro, hiMicro)), seedToken))
     idx
   }
 
@@ -285,17 +281,23 @@ object NgramLmStore extends StoreProbe {
     * create-path fusion hook ([[QualityProbeStore.create]] tokenizes the
     * history once for this build and its seed scoring). */
   private[ext] def buildFromBigrams(history: DataFrame, bg: DataFrame,
-      path: String, buckets: Int = 16, loMicro: Long = 0L,
-      hiMicro: Long = Long.MaxValue,
+      path: String, loMicro: Long = 0L, hiMicro: Long = Long.MaxValue,
       seedToken: Option[String] = None): NgramLmStore = {
     val idx = new NgramLmStore(history.sparkSession, path)
     idx.log.locked(idx.writeBatch(bg,
-      Some(NgramLmStoreStats(0L, buckets, loMicro, hiMicro)), seedToken))
+      Some(NgramLmStoreStats(0L, loMicro, hiMicro)), seedToken))
     idx
   }
 
   /** Open a stored model (fails fast on a missing or older layout);
-    * parameters come from its commits' stats. */
-  def open(spark: SparkSession, path: String): NgramLmStore =
-    StoreLog.open(new NgramLmStore(spark, path))
+    * parameters come from its commits' stats. A model whose stats carry
+    * `buckets` has the older prefix-hash-bucketed `counts/` layout
+    * (`wb=<b>/` dirs) and is refused by name. Every data commit carries
+    * stats, so the open probe's own manifest read answers this. */
+  def open(spark: SparkSession, path: String): NgramLmStore = {
+    val store = new NgramLmStore(spark, path)
+    if (store.log.requireCurrent(_.stats.nonEmpty).stats.contains("buckets"))
+      throw ManifestLog.predates(path, "bucketed counts/ (wb=…)")
+    store
+  }
 }

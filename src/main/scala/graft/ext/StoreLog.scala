@@ -191,11 +191,13 @@ private[ext] final class StoreLog(spark: SparkSession, val path: String,
   /** The `open` probe: fail fast, by name, on a path with no committed
     * store, and on a layout written before the current format (a `stats/`
     * dir from the sidecar era, or a commit without `format=2`, which every
-    * manifest read refuses). No sleep, no retry. */
-  def requireCurrent(): Unit = {
+    * manifest read refuses). No sleep, no retry. Returns the newest commit
+    * satisfying `p`, for a store's own layout checks; `p` must hold for
+    * the first commit, so that none means no store. */
+  def requireCurrent(p: Manifest => Boolean = _ => true): Manifest = {
     if (manifests.fileSystem.exists(new HPath(s"$path/stats")))
       throw ManifestLog.predates(path, "a stats/ dir; stats now ride in the commit")
-    if (manifests.newest(_ => true).isEmpty) throw StoreLog.missing(path)
+    manifests.newest(p).getOrElse(throw StoreLog.missing(path))
   }
 }
 

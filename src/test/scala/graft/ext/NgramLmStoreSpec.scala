@@ -118,6 +118,46 @@ class NgramLmStoreSpec extends GraftSpec {
     } finally spark.conf.unset(key)
   }
 
+  it("a small append and a compaction fold each write one parquet file " +
+     "directly under their append=<id>/ dir (no wb= bucket dirs)") {
+    val key = "spark.graft.index.compactThreshold"
+    spark.conf.set(key, "2")
+    try {
+      val path = tmp()
+      val store = NgramLmStore.build(docs.filter($"doc_id" % 4 === 0),
+        "doc_id", "text", path)
+      (1 to 3).foreach { i =>
+        store.append(docs.filter($"doc_id" % 4 === i), "doc_id", "text")
+      }
+      val dirs = new java.io.File(s"$path/counts").listFiles()
+        .filter(_.getName.startsWith("append=")).sortBy(_.getName)
+      dirs.map(_.getName.take(8)).toSet shouldBe Set("append=a", "append=c")
+      for (d <- dirs) withClue(s"${d.getName}: ") {
+        val entries = d.listFiles().map(_.getName)
+        entries.count(n => n.startsWith("part-") && n.endsWith(".parquet")) shouldBe 1
+        d.listFiles().filter(_.isDirectory) shouldBe empty
+      }
+    } finally spark.conf.unset(key)
+  }
+
+  it("the score plan reads the stored counts ONCE: one file scan over " +
+     "every active dir, and no reused exchange (no model self-join)") {
+    val path = tmp()
+    val store = NgramLmStore.build(docs, "doc_id", "text", path)
+    store.append(docs.filter($"doc_id" % 3 === 0)
+      .select(($"doc_id" + 300000).as("doc_id"), $"text"), "doc_id", "text")
+    val plan = store.scorePlanFor(batch, "doc_id", "text")
+    plan.collect()
+    val exec = plan.queryExecution.executedPlan
+    val scans = graft.plans.PlanWalk.collectAll(exec) {
+      case f: FileSourceScanExec => f.relation.location.rootPaths.size
+    }
+    scans shouldBe Seq(2)
+    graft.plans.PlanWalk.collectAll(exec) {
+      case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec => r
+    } shouldBe empty
+  }
+
   it("a degenerate FIRST build (no bigrams/postings/windows) is refused " +
      "with a clear error instead of wedging every later read") {
     val shorts = Seq((1L, "single"), (2L, "word")).toDF("doc_id", "text")

@@ -86,9 +86,12 @@ object StoreJobPinSpec {
   // are gone (23, 16 and 20 jobs before; NearDup's 23 was already below
   // its first 28 because its append stats come from footers). NearDup's
   // gate takes the distinct candidate pairs and the distinct duplicate
-  // ids it broadcasts, one job each.
+  // ids it broadcasts, one job each. NgramLm's cycle fell 19 → 12 when
+  // its counts/ stopped partitioning by prefix bucket (one file per
+  // append) and its score read the stored partials once instead of
+  // joining the model to its own prefix totals.
   val NearDupCycle = 20
   val SubstrCycle = 11
-  val NgramLmCycle = 19
+  val NgramLmCycle = 12
   val Bm25AppendStats = 9
 }

@@ -46,11 +46,11 @@ class StoreRelationSchemaSpec extends GraftSpec {
   }
 
   it("NgramLmStore.countsSchema matches the written layout " +
-     "(incl. discovered partition columns, in inference order)") {
+     "(three data columns, no partition columns)") {
     val path = tmp("lm")
     NgramLmStore.build(docs, "doc_id", "text", path)
-    inferred(Seq(s"$path/counts/append=a000001"),
-      basePath = Some(s"$path/counts")) shouldBe NgramLmStore.countsSchema
+    inferred(Seq(s"$path/counts/append=a000001")) shouldBe
+      NgramLmStore.countsSchema
   }
 
   it("QualityProbeStore.momentsSchema matches the written layout") {
@@ -154,6 +154,23 @@ class StoreRelationSchemaSpec extends GraftSpec {
     NearDupIndex.build(docs, "doc_id", "text", current)
     docs.write.parquet(s"$current/stats")
     refusal(current)(NearDupIndex.open(spark, current))
+  }
+
+  it("NgramLmStore.open refuses the prefix-hash-bucketed counts/ layout " +
+     "(wb= dirs, stat.buckets in the commit) by name") {
+    val path = tmp("lm-bucketed")
+    Seq(("alpha", "alpha beta", 2L)).toDF("__w1", "__bg", "__c12")
+      .write.parquet(s"$path/counts/append=a000001/wb=3")
+    // the marker as the bucketed writer rendered it
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$path/_commits"))
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$path/_commits/m000001"),
+      Seq("format=2", "rel.counts=a000001", "stat.bigramRows=1",
+        "stat.buckets=16", s"stat.hiMicro=${Long.MaxValue}", "stat.loMicro=0")
+        .mkString("\n").getBytes("UTF-8"))
+    NgramLmStore.exists(spark, path) shouldBe true
+    refusal(path)(NgramLmStore.open(spark, path))
+    intercept[IllegalArgumentException](NgramLmStore.open(spark, path))
+      .getMessage should include("bucketed counts/")
   }
 
   it("RelRead's schema cache evicts least-recently-used entries: a key " +

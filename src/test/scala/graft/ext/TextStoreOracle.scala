@@ -105,7 +105,7 @@ object TextStoreOracle {
     }
   }
 
-  /** NgramLmStore: bucketed bigram-count partials of the kept text. */
+  /** NgramLmStore: bigram-count partials of the kept text. */
   def ngramLm(store: NgramLmStore, kept: DataFrame, textCol: String,
       token: String): Unit = {
     val log = store.log
@@ -122,10 +122,8 @@ object TextStoreOracle {
           .groupBy("__bg").agg(count(lit(1)).as("__c12"))
           .select(split(col("__bg"), " ").getItem(0).as("__w1"),
             col("__bg"), col("__c12"))
-          .withColumn("wb", pmod(hash(col("__w1")), lit(prev("buckets").toInt)))
-          .repartition(col("wb"))
-          .sortWithinPartitions("wb", "__w1", "__bg")
-          .write.partitionBy("wb").parquet(log.dir("counts", id))
+          .sortWithinPartitions("__w1", "__bg")
+          .write.parquet(log.dir("counts", id))
         prev + ("bigramRows" -> (prev("bigramRows").toLong +
           footerRows(kept, log.dir("counts", id))).toString)
       }

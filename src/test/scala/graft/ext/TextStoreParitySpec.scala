@@ -62,13 +62,7 @@ class TextStoreParitySpec extends GraftSpec {
   private def rowsOf(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
 
-  /** A relation dir's rows; an append that kept no features writes no
-    * data file under a partitioned relation, which reads as no rows. */
-  private def rowsAt(dir: String): Seq[String] =
-    if (java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-        .anyMatch(_.toString.endsWith(".parquet")))
-      rowsOf(spark.read.parquet(dir))
-    else Seq.empty
+  private def rowsAt(dir: String): Seq[String] = rowsOf(spark.read.parquet(dir))
 
   /** Every commit and every relation dir of two layouts, side by side. */
   private def sameLayout(a: StoreLog, b: StoreLog): Unit = {
@@ -125,10 +119,8 @@ class TextStoreParitySpec extends GraftSpec {
     val (p, q) = (tmp("lm-new"), tmp("lm-old"))
     // a band from 0 keeps the null-id rows only if the gate forgets to
     // drop them (an unnamed row scores 0); fluent copies score above it
-    NgramLmStore.build(history, "doc_id", "text", p, buckets = 4,
-      hiMicro = 10000L)
-    NgramLmStore.build(history, "doc_id", "text", q, buckets = 4,
-      hiMicro = 10000L)
+    NgramLmStore.build(history, "doc_id", "text", p, hiMicro = 10000L)
+    NgramLmStore.build(history, "doc_id", "text", q, hiMicro = 10000L)
     val (store, oracle) = (NgramLmStore.open(spark, p), NgramLmStore.open(spark, q))
     drive(store, oracle)((o, b, t) =>
       TextStoreOracle.keepBand(o, b, "doc_id", "text", t))(
