@@ -607,7 +607,6 @@ object ScaleProbe {
               lit(0.0d), (a, v) => a + v).as("score"))
             .filter(col("vid") =!= qid)
         }.reduce(_ unionByName _)
-        graft.plans.GraftPlans.ensureInstalled(spark)
         val exact = graft.plans.GraftPlans.topKPerKey(exactScored,
           Seq(col("qid")), Seq(col("score").desc, col("vid").asc), 10)
           .collect()
@@ -940,9 +939,25 @@ object ScaleProbe {
         ()
       }
     }
-    // corpus-sized pass); the stored search reads only the query terms'
-    // bucket partitions — per-query cost bounded by query vocabulary × df,
-    // independent of corpus size. Build is the once-per-document cost.
+    // The stored-store probes' m-fold corpus: every document m times, every
+    // third word tagged with its copy. The sf0.1 documents scan is one
+    // partition (one file, one row group), so the corpus is spread over
+    // defaultParallelism before the checkpoint — otherwise every build and
+    // session pass over it runs in one task.
+    def repCorpus(docs: org.apache.spark.sql.DataFrame,
+        m: Int): org.apache.spark.sql.DataFrame =
+      docs.crossJoin(spark.range(m.toLong).toDF("rep"))
+        .select((col("doc_id") * m + col("rep")).as("doc_id"),
+          array_join(transform(split(col("text"), " "),
+            (t, i) => when(i % 3 === 0, concat(t, lit("u"), col("rep")))
+              .otherwise(t)), " ").as("text"))
+        .repartition(spark.sparkContext.defaultParallelism)
+        .localCheckpoint(true)
+    // Stored BM25 scaling: the session Bm25.topK re-tokenizes and re-counts
+    // the whole corpus per call (a corpus-sized pass); the stored search
+    // reads only the query terms' bucket partitions — per-query cost
+    // bounded by query vocabulary × df, independent of corpus size. Build
+    // is the once-per-document cost.
     if (sys.env.get("SCALE_BM25STORE").contains("1")) {
       import spark.implicits._
       val docs = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
@@ -952,12 +967,7 @@ object ScaleProbe {
             graft.ext.TextAnalysis.tokens(col("text")), 1, 4))).as("term"))
         .localCheckpoint(true)
       for (m <- Seq(4, 16)) {
-        val corpus = docs.crossJoin(spark.range(m.toLong).toDF("rep"))
-          .select((col("doc_id") * m + col("rep")).as("doc_id"),
-            array_join(transform(split(col("text"), " "),
-              (t, i) => when(i % 3 === 0, concat(t, lit("u"), col("rep")))
-                .otherwise(t)), " ").as("text"))
-          .localCheckpoint(true)
+        val corpus = repCorpus(docs, m)
         val n = corpus.count()
         val path = graft.io.TempReaper.tempDir("graft-scale-bm25store")
           .toString + "/idx"
@@ -984,12 +994,7 @@ object ScaleProbe {
         .select((col("doc_id") + 10000000L).as("doc_id"), col("text"))
         .localCheckpoint(true)
       for (m <- Seq(4, 16)) {
-        val corpus = docs.crossJoin(spark.range(m.toLong).toDF("rep"))
-          .select((col("doc_id") * m + col("rep")).as("doc_id"),
-            array_join(transform(split(col("text"), " "),
-              (t, i) => when(i % 3 === 0, concat(t, lit("u"), col("rep")))
-                .otherwise(t)), " ").as("text"))
-          .localCheckpoint(true)
+        val corpus = repCorpus(docs, m)
         val n = corpus.count()
         val path = graft.io.TempReaper.tempDir("graft-scale-lmstore")
           .toString + "/idx"
@@ -1016,12 +1021,7 @@ object ScaleProbe {
         .select((col("doc_id") + 10000000L).as("doc_id"), col("text"))
         .localCheckpoint(true)
       for (m <- Seq(4, 16)) {
-        val corpus = docs.crossJoin(spark.range(m.toLong).toDF("rep"))
-          .select((col("doc_id") * m + col("rep")).as("doc_id"),
-            array_join(transform(split(col("text"), " "),
-              (t, i) => when(i % 3 === 0, concat(t, lit("u"), col("rep")))
-                .otherwise(t)), " ").as("text"))
-          .localCheckpoint(true)
+        val corpus = repCorpus(docs, m)
         val n = corpus.count()
         val path = graft.io.TempReaper.tempDir("graft-scale-qpstore")
           .toString + "/idx"
@@ -1058,12 +1058,7 @@ object ScaleProbe {
     if (sys.env.get("SCALE_BPESTORE").contains("1")) {
       val docs = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
       for (m <- Seq(4, 16)) {
-        val corpus = docs.crossJoin(spark.range(m.toLong).toDF("rep"))
-          .select((col("doc_id") * m + col("rep")).as("doc_id"),
-            array_join(transform(split(col("text"), " "),
-              (t, i) => when(i % 3 === 0, concat(t, lit("u"), col("rep")))
-                .otherwise(t)), " ").as("text"))
-          .localCheckpoint(true)
+        val corpus = repCorpus(docs, m)
         val n = corpus.count()
         val path = graft.io.TempReaper.tempDir("graft-scale-bpestore")
           .toString + "/idx"
@@ -1399,8 +1394,9 @@ object ScaleProbe {
         println(f"""{"probe":"sq8","vecs":$n,"queries":${qids.size},"packed_bytes":${dirBytes(bDir)},"float_bytes":${dirBytes(fDir)},"packed_rows":$pRows,"packed_sec":${(t1 - t0) / 1e9}%.1f,"float_rows":$fRows,"float_sec":${(t2 - t1) / 1e9}%.1f}""")
       }
     }
-    // Top-k-per-key probe: the bounded-heap physical operator vs the
-    // rank-window lowering on the same logical node. The claim under test:
+    // Top-k-per-key probe: the bounded-heap physical operator vs an inline
+    // rank window (row_number over partitionBy(key).orderBy(v desc),
+    // rn <= k) over the same input. The claim under test:
     // the heap pair's exchange moves O(keys·k) rows while the window sorts
     // and shuffles EVERYTHING — shuffle records/bytes are read from the
     // exchange node's runtime metrics.
@@ -1418,61 +1414,21 @@ object ScaleProbe {
         val base = spark.range(n).repartition(32)
           .select((col("id") % 1000).as("key"), col("id").as("v"),
             concat(lit("pad_pad_pad_pad_pad_pad_"), col("id")).as("pad"))
-        graft.plans.GraftPlans.installPhysical(spark)
         val t0 = System.nanoTime()
         val heap = graft.plans.GraftPlans.topKPerKey(base,
           Seq(col("key")), Seq(col("v").desc), k = 5)
         val hRows = heap.collect().length
         val t1 = System.nanoTime()
         val (hRecs, hBytes) = shuffleMetrics(heap)
-        graft.plans.GraftPlans.install(spark) // rank-window lowering back on
         val t2 = System.nanoTime()
-        val win = graft.plans.GraftPlans.topKPerKey(base,
-          Seq(col("key")), Seq(col("v").desc), k = 5)
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy(col("key")).orderBy(col("v").desc)
+        val win = base.withColumn("__rn", row_number().over(w))
+          .filter(col("__rn") <= 5).drop("__rn")
         val wRows = win.collect().length
         val t3 = System.nanoTime()
         val (wRecs, wBytes) = shuffleMetrics(win)
         println(f"""{"probe":"topk","rows":$n,"keys":1000,"k":5,"heap_out":$hRows,"heap_sec":${(t1 - t0) / 1e9}%.1f,"heap_shuffle_recs":$hRecs,"heap_shuffle_bytes":$hBytes,"win_out":$wRows,"win_sec":${(t3 - t2) / 1e9}%.1f,"win_shuffle_recs":$wRecs,"win_shuffle_bytes":$wBytes}""")
-      }
-    }
-    // ANN ranking-tail probe (round 5): the SAME IvfIndex.queryAll under the
-    // two TopKPerKey modes — bounded-heap physical vs rank-window lowering.
-    // The claim under test: ANN candidate ranking is the largest
-    // intermediate of a query batch, and the heap keeps it out of the
-    // exchange (O(qids·k) forwarded) while the window shuffles and sorts
-    // every scored candidate.
-    if (sys.env.get("SCALE_ANNTOPK").contains("1")) {
-      import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-      def shuffleRecs(df: org.apache.spark.sql.DataFrame): Long =
-        graft.plans.PlanWalk.collectAll(df.queryExecution.executedPlan) {
-          case e: ShuffleExchangeExec => e
-        }.flatMap(_.metrics.get("shuffleRecordsWritten").map(_.value)).sum
-      val emb = spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet")
-      val m = 10
-      val df = emb.crossJoin(spark.range(m.toLong).toDF("rep"))
-        .select((col("vec_id") * m + col("rep")).as("vec_id"),
-          transform(col("embedding"),
-            x => x + (col("rep") % 10).cast("float") * lit(0.01f)).as("embedding"))
-        .cache()
-      df.count()
-      val index = graft.ext.IvfIndex.fit(df, "vec_id", "embedding", k = 32)
-      val qids = (1L to 200L).map(_ * m)
-      try {
-        graft.plans.GraftPlans.installPhysical(spark)
-        val t0 = System.nanoTime()
-        val heap = index.queryAll(qids, topK = 10, nprobe = 8)
-        val hRows = heap.collect().length
-        val t1 = System.nanoTime()
-        graft.plans.GraftPlans.install(spark) // rank-window lowering
-        val t2 = System.nanoTime()
-        val win = index.queryAll(qids, topK = 10, nprobe = 8)
-        val wRows = win.collect().length
-        val t3 = System.nanoTime()
-        println(f"""{"probe":"ann_topk","vecs":${index.assigned.count()},"queries":${qids.size},"nprobe":8,"topk":10,"heap_rows":$hRows,"heap_sec":${(t1 - t0) / 1e9}%.1f,"heap_shuffle_recs":${shuffleRecs(heap)},"win_rows":$wRows,"win_sec":${(t3 - t2) / 1e9}%.1f,"win_shuffle_recs":${shuffleRecs(win)}}""")
-      } finally {
-        graft.plans.GraftPlans.installPhysical(spark)
-        index.release()
-        df.unpersist()
       }
     }
     // DPP probe: the same selective dim-join against the month-partitioned

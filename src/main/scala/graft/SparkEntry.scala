@@ -749,13 +749,12 @@ object SparkEntry {
       .orderBy("user_id", "event_type")
 
   /** DQ57 (EXT, §2.10 ladder (c), full depth): the custom `TopKPerKey`
-    * LogicalPlan node planned by the PHYSICAL bounded-heap strategy
+    * LogicalPlan node planned by its bounded-heap strategy
     * (`plans.TopKPerKeyExec`: partial per-partition heaps → one hash
-    * exchange moving O(keys·k) rows → final heaps; no full sort, unlike
-    * the rank-window alternative lowering) — top-2 orders by price per
-    * customer must match the rank-window SQL oracle. */
+    * exchange moving O(keys·k) rows → final heaps; no full sort) — top-2
+    * orders by price per customer must match the rank-window SQL
+    * oracle. */
   private def q57(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftPlans.installPhysical(s)
     graft.plans.GraftPlans.topKPerKey(
         t(s, dir, "orders"),
         Seq(col("o_custkey")), Seq(col("o_totalprice").desc, col("o_orderkey")), k = 2)

@@ -27,7 +27,6 @@ private[ext] object CandidateTopK {
 
   /** Scored candidates → top-k rows per qid (no rank column). */
   def topPerQuery(scored: DataFrame, scoreCol: String, k: Int): DataFrame = {
-    GraftPlans.ensureInstalled(scored.sparkSession)
     GraftPlans.topKPerKey(scored, Seq(col("qid")),
       Seq(col(scoreCol).desc, col("vid")), k)
   }

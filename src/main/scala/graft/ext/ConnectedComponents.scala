@@ -28,14 +28,12 @@ import org.apache.spark.sql.functions._
 object ConnectedComponents {
 
   /** Telemetry from the most recent [[run]] on this driver: per-round wall
-    * seconds, and (when `spark.graft.cc.instrument` is true) the symmetric
-    * edge and vertex counts — the numbers that attribute a CC-composed
-    * query's wall to rounds-times-job-overhead vs data volume. Harness
-    * evidence only (Bench reads it after an untimed rerun); `@volatile` for
-    * visibility, last-writer-wins like the rest of the bench's
-    * single-driver assumptions.
+    * seconds — the number that attributes a CC-composed query's wall to
+    * rounds-times-job-overhead. Harness evidence only (Bench reads it after
+    * an untimed rerun); `@volatile` for visibility, last-writer-wins like
+    * the rest of the bench's single-driver assumptions.
     */
-  final case class RunStats(edges: Long, vertices: Long, roundSecs: Seq[Double])
+  final case class RunStats(roundSecs: Seq[Double])
   @volatile var lastStats: Option[RunStats] = None
 
   /** Assign each vertex the minimum vertex id of its component.
@@ -54,8 +52,6 @@ object ConnectedComponents {
 
     val symC = sym.persist()
     try {
-      val instrument = edges.sparkSession.conf
-        .get("spark.graft.cc.instrument", "false").toBoolean
       val roundSecs = Seq.newBuilder[Double]
       var labels = symC.select(col("src").as("id")).distinct()
         .withColumn("component", col("id"))
@@ -97,10 +93,7 @@ object ConnectedComponents {
         iter += 1
         roundSecs += (System.nanoTime() - roundT0) / 1e9
       }
-      lastStats = Some(RunStats(
-        if (instrument) symC.count() else -1L,
-        if (instrument) labels.count() else -1L,
-        roundSecs.result()))
+      lastStats = Some(RunStats(roundSecs.result()))
       labels
     } finally symC.unpersist(blocking = false)
   }

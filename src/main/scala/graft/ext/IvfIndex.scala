@@ -324,7 +324,6 @@ object IvfIndex {
     val joined = df.crossJoin(broadcast(cdf))
       .withColumn("__dist", SquaredDistance(col(embCol), col("__cvec")))
       .drop("__cvec")
-    graft.plans.GraftPlans.ensureInstalled(spark)
     graft.plans.GraftPlans.topKPerKey(joined, Seq(col(keyCol)),
         Seq(col("__dist").asc, col("__cell").asc), 1)
       .withColumnRenamed("__cell", "cell")

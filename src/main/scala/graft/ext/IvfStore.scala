@@ -169,9 +169,8 @@ final class IvfStore private (private val spark: SparkSession,
 
   /** The generation's PQ codebooks ([[PqAnn.Codebook]]), None when the
     * layout was created without the tier (`pqM = 0`): appends then skip
-    * the code sidecar and [[searchPq]] refuses with a named error —
-    * pre-tier layouts stay valid forever (the drift-sidecar upgrade
-    * rule). Like centroids, the books of superseded generations are kept
+    * the code sidecar and [[searchPq]] refuses with a named error. Like
+    * centroids, the books of superseded generations are kept
     * on disk: an in-flight reader inside the retention window resolves
     * its own snapshot's book. */
   private[ext] def pqBookFor(g: Int): Option[PqAnn.Codebook] =
@@ -212,18 +211,12 @@ final class IvfStore private (private val spark: SparkSession,
   /** Whether the generation's books were trained on RESIDUALS
     * `x − centroid(cell)` against the generation's coarse centroids
     * (the FAISS IndexIVFPQ form, `create(..., pqResidual = true)`).
-    * Pinned in the book dir like `k0`; a book written before the
-    * residual tier shipped lacks the column and reads as raw — the
-    * drift-sidecar upgrade rule, so pre-residual layouts stay valid
-    * byte for byte. Memoized per generation like the book itself (a
-    * generation's flag is immutable), so searches don't pay a
-    * driver-side parquet read per call. */
+    * Pinned in the book dir like `k0`. Memoized per generation like the
+    * book itself (a generation's flag is immutable), so searches don't
+    * pay a driver-side parquet read per call. */
   private def pqResidualFor(g: Int): Boolean =
-    pqResidualCache.getOrElseUpdate(g, {
-      val df = spark.read.parquet(pqBookDir(g))
-      df.columns.contains("residual") &&
-        df.select("residual").head().getBoolean(0)
-    })
+    pqResidualCache.getOrElseUpdate(g,
+      spark.read.parquet(pqBookDir(g)).select("residual").head().getBoolean(0))
 
   /** Whether the CURRENT generation carries the PQ tier — the
     * config-surface probe ([[graft.plan.CurationConfig.SemanticGate]]
@@ -256,9 +249,6 @@ final class IvfStore private (private val spark: SparkSession,
       s"no PQ tier under $path (layout created with pqM = 0) — " +
         "permute advice is about the tier's subspace allocation"))
     val dir = varspecDir(g)
-    require(log.manifests.fileSystem.exists(new org.apache.hadoop.fs.Path(dir)),
-      s"no stored variance spectrum for generation $g under $path " +
-        "(layout predates varspec) — refit() records one")
     val rows = spark.read.parquet(dir).collect()
       .map(r => (r.getAs[Int]("d"), r.getAs[Long]("sx"),
         r.getAs[Long]("sxx"), r.getAs[Long]("n")))
@@ -305,18 +295,12 @@ final class IvfStore private (private val spark: SparkSession,
     * the books were trained on PERMUTED vectors (or permuted residuals),
     * so encode and the query-side ADC tables must see the same
     * permutation. Generation-keyed like `residual` (a refit recomputes
-    * it from the new training relation); a book written before the
-    * permute tier shipped lacks the column and reads as identity — the
-    * drift-sidecar upgrade rule, pre-permute layouts stay valid byte
-    * for byte. */
+    * it from the new training relation); a null `perm` is the identity
+    * (a book trained without `pqPermute`). */
   private def pqPermFor(g: Int): Option[Array[Int]] =
     pqPermCache.getOrElseUpdate(g, {
-      val df = spark.read.parquet(pqBookDir(g))
-      if (!df.columns.contains("perm")) None
-      else {
-        val r = df.select("perm").head()
-        if (r.isNullAt(0)) None else Some(r.getSeq[Int](0).toArray)
-      }
+      val r = spark.read.parquet(pqBookDir(g)).select("perm").head()
+      if (r.isNullAt(0)) None else Some(r.getSeq[Int](0).toArray)
     })
 
   /** Active assigned dir ids: all published, minus any a later compaction
@@ -633,39 +617,26 @@ final class IvfStore private (private val spark: SparkSession,
     } finally idx.release()
   }
 
-  /** The active dir ids whose drift sidecar EXISTS on disk, in DATA-AGE
-    * order: folds first (a compaction `c…` or refit `r…` always holds
-    * strictly older data than every surviving append — compaction
+  /** The active dir ids — every write leaves `drift/append=<id>` — in
+    * DATA-AGE order: folds first (a compaction `c…` or refit `r…` always
+    * holds strictly older data than every surviving append — compaction
     * excludes the then-newest append and [[refit]] supersedes everything,
     * so at most one fold is ever active), then appends by sequence. Plain
     * id sort is wrong once folds enter the mix (`c…`/`r…` sort after all
     * `a…`), and manifest COMMIT order is wrong by one slot (a compaction
     * commits after the append that survives it) — data age is the order
-    * the drift trend is defined over. A layout created before drift
-    * sidecars shipped (or one where only post-upgrade appends carry them)
-    * degrades to whatever statistics exist instead of throwing a
-    * path-not-found from the read. */
-  private def driftIds(): Seq[String] = {
-    val f = log.manifests.fileSystem
+    * the drift trend is defined over. */
+  private def driftIds(): Seq[String] =
     activeIds(log.visible(None))
-      .filter(id =>
-        f.exists(new org.apache.hadoop.fs.Path(s"$path/drift/append=$id")))
       .sortBy(id => (if (id.startsWith("a")) 1 else 0, id))
-  }
 
   /** Per-active-write cell histograms `(cell, n, append)` — ≤ k tiny
     * rows per committed write, the input of [[refitAdvised]]. After a
     * refit only the refit's own (whole-corpus, new-generation) histogram
-    * is active — the drift trend restarts against the fresh baseline.
-    * Pre-sidecar active dirs are skipped; a layout with NO drift data at
-    * all fails with a clear message rather than a parquet listing error. */
-  def driftReport(): DataFrame = {
-    val ids = driftIds()
-    require(ids.nonEmpty, s"drift statistics unavailable under $path " +
-      "(layout predates drift sidecars; the next append records one)")
+    * is active — the drift trend restarts against the fresh baseline. */
+  def driftReport(): DataFrame =
     spark.read.option("basePath", s"$path/drift")
-      .parquet(ids.map(id => s"$path/drift/append=$id"): _*)
-  }
+      .parquet(driftIds().map(id => s"$path/drift/append=$id"): _*)
 
   /** The two driver-side drift statistics behind [[refitAdvised]], both
     * L1 distances between cell-SHARE distributions in parts-per-million
@@ -681,8 +652,7 @@ final class IvfStore private (private val spark: SparkSession,
     *    or the create), summed, vs that baseline — the slow trigger N
     *    small same-direction drifts trip even when each stays under the
     *    per-append threshold.
-    * None until at least one write follows the baseline (or when the
-    * layout has fewer than two drift sidecars to compare). */
+    * None until at least one write follows the baseline. */
   def driftAdvisory(): Option[DriftAdvisory] = {
     val ids = driftIds()
     if (ids.size < 2) None
@@ -719,8 +689,7 @@ final class IvfStore private (private val spark: SparkSession,
     * cumulative arm catches slow drift: N small appends each under the
     * threshold in the same direction still advise once their SUM against
     * the generation baseline crosses it. False until at least one write
-    * follows the baseline, and false (not an error) on a layout without
-    * drift sidecars. */
+    * follows the baseline. */
   def refitAdvised(l1ThresholdPpm: Long = 500000L): Boolean = {
     require(l1ThresholdPpm >= 0, "l1ThresholdPpm >= 0")
     driftAdvisory().exists(a =>
@@ -730,18 +699,10 @@ final class IvfStore private (private val spark: SparkSession,
   /** Per-cell occupancy of the CURRENT generation `(cell, count)`,
     * summed from the drift sidecars — ≤ k·appends tiny driver rows; the
     * assigned relation is never scanned. Cells with no vectors are
-    * absent. Refuses (naming the gap) when some active dir predates
-    * drift sidecars: a partial sum would silently understate occupancy. */
-  def cellOccupancy(): Seq[(Int, Long)] = {
-    val active = activeIds(log.visible(None))
-    val withDrift = driftIds()
-    val missing = active.toSet -- withDrift.toSet
-    require(missing.isEmpty, s"cell occupancy unavailable under $path: " +
-      s"active dir(s) ${missing.toSeq.sorted.mkString(", ")} predate " +
-      "drift sidecars (a refit rebuilds full statistics)")
+    * absent. */
+  def cellOccupancy(): Seq[(Int, Long)] =
     driftReport().groupBy("cell").agg(sum(col("n")).as("n"))
       .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1).toSeq
-  }
 
   /** The OPERATIONAL answer to "what nprobe do I need now?" — derived
     * from the stored occupancy curve, so the post-refit recall cliff
@@ -1308,7 +1269,6 @@ final class IvfStore private (private val spark: SparkSession,
         .join(probed,
           col("cell") === col("__probe") && col("__vsalt") === col("__qsalt"))
         .select(col("__qid").as("qid"), col("vid"), est.as("est"))
-      graft.plans.GraftPlans.ensureInstalled(spark)
       val short = graft.plans.GraftPlans.topKPerKey(scored,
         Seq(col("qid")), Seq(col("est").desc, col("vid").asc), shortlist)
         .select("qid", "vid").localCheckpoint(true)

@@ -540,11 +540,12 @@ private[ext] object RelRead {
   }
 }
 
-/** Strict parsing for the persisted-index session confs — a junk value
+/** Strict parsing for graft's session confs — a junk value
   * fails NAMING the conf and its constraint at the call site, instead of
   * an anonymous NumberFormatException from inside a committed append
-  * (the `hotDigestCap` rule, shared by every index layout). */
-private[ext] object IndexConf {
+  * (the `hotDigestCap` rule, shared by every index layout and
+  * `TopKPerKeyExec`). */
+private[graft] object IndexConf {
 
   def strictInt(spark: SparkSession, key: String, default: Int,
       min: Int): Int = {

@@ -532,7 +532,6 @@ object PqAnn {
 
   private def rankScored(scored: DataFrame, topK: Int): DataFrame = {
     require(topK >= 1, "topK must be >= 1")
-    graft.plans.GraftPlans.ensureInstalled(scored.sparkSession)
     graft.plans.GraftPlans.topKPerKey(scored, Seq(col("qid")),
       Seq(col("score").desc, col("vid").asc), topK)
   }

@@ -199,7 +199,6 @@ object Sampling {
   def clusterBalanced(df: DataFrame, idCol: String, embCol: String,
       index: IvfIndex, perCell: Int): DataFrame = {
     require(perCell > 0, "perCell must be positive")
-    graft.plans.GraftPlans.ensureInstalled(df.sparkSession)
     val assigned = index.withCell(
       df.select(col(idCol), col(embCol).as("__emb")), "__emb")
     graft.plans.GraftPlans.topKPerKey(assigned, Seq(col("cell")),

@@ -121,13 +121,9 @@ object GraftFunctions {
 
   private[functions] def inject(ext: SparkSessionExtensions): Unit = {
     fns.foreach(ext.injectFunction)
-    // custom logical operators (SURVEY §2.10 ladder (c)): BOTH takes on the
-    // TopKPerKey node, selected by the spark.graft.topk.physical conf —
-    // gate false: the rule lowers to the rank window before planning and
-    // the strategy never sees the node; gate true: the rule steps aside
-    // and the strategy plans the bounded-heap pair. A deployment that only
-    // sets spark.sql.extensions gets the full ladder, no runtime install.
-    ext.injectOptimizerRule(_ => graft.plans.LowerTopKPerKey)
+    // custom logical operator (SURVEY §2.10 ladder (c)): the strategy that
+    // plans the TopKPerKey node as the bounded-heap pair, so a deployment
+    // that only sets spark.sql.extensions gets the full ladder.
     ext.injectPlannerStrategy(_ => graft.plans.TopKPerKeyStrategy)
   }
 }

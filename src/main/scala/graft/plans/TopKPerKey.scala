@@ -1,26 +1,24 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, UnaryNode, Window}
-import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.graft.Bridge
 
 /** The whole-operator extension rung (SURVEY §2.10 U1 ladder, option (c)):
-  * a custom `LogicalPlan` node + a `Rule[LogicalPlan]` that lowers it,
+  * a custom `LogicalPlan` node planned by a custom physical strategy,
   * registered through `SparkSessionExtensions` (config-driven deployments)
-  * or `spark.experimental.extraOptimizations` (live sessions).
+  * or `spark.experimental.extraStrategies` (live sessions).
   *
   * The operator: top-k rows per key group under an ordering — the "best k
   * variants per document / nearest k per query" shape every training-data
   * pipeline runs. Users call [[GraftPlans.topKPerKey]]; the plan carries an
-  * explicit [[TopKPerKey]] node through analysis (it is fully resolved at
-  * construction, so the analyzer passes it untouched), and the injected
-  * rule rewrites it to the rank-window formulation before physical
-  * planning. Centralizing the lowering in one rule means the efficient
-  * implementation can later change (e.g. to a bounded-heap physical
-  * operator) without touching ANY call site — which is the point of owning
-  * the logical node instead of inlining the window everywhere.
+  * explicit [[TopKPerKey]] node through analysis and optimization (it is
+  * fully resolved at construction, so the analyzer passes it untouched),
+  * and [[TopKPerKeyStrategy]] plans it as the bounded-heap
+  * [[TopKPerKeyExec]] pair. Owning the logical node keeps the
+  * implementation in one place instead of an inlined window at every
+  * call site.
   */
 final case class TopKPerKey(
     keys: Seq[Expression],
@@ -32,122 +30,23 @@ final case class TopKPerKey(
     copy(child = newChild)
 }
 
-/** Lowers [[TopKPerKey]] to row_number-over-window + filter.
-  *
-  * Gated on `spark.graft.topk.physical`: when a deployment installs this
-  * rule through `spark.sql.extensions` (`GraftExtensions`) it cannot be
-  * removed at runtime, so [[GraftPlans.installPhysical]] flips the conf
-  * instead and the rule steps aside — otherwise the extension-injected
-  * rule would rewrite the node before planning and the physical strategy
-  * would silently never fire.
-  */
-object LowerTopKPerKey extends Rule[LogicalPlan] {
-  /** Strict conf parse: only "true"/"false" steer the lowering; anything
-    * else fails HERE with the conf name instead of surfacing as a bare
-    * IllegalArgumentException from deep inside the optimizer. */
-  private def physicalMode: Boolean =
-    conf.getConfString("spark.graft.topk.physical", "false") match {
-      case s if s.equalsIgnoreCase("true")  => true
-      case s if s.equalsIgnoreCase("false") => false
-      case other => throw new IllegalArgumentException(
-        s"spark.graft.topk.physical must be true or false, got '$other'")
-    }
-
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    if (physicalMode) plan
-    else plan.transformUp {
-      case TopKPerKey(keys, order, k, child) =>
-        val frame = SpecifiedWindowFrame(RowFrame, UnboundedPreceding, CurrentRow)
-        val rn = Alias(
-          WindowExpression(RowNumber(), WindowSpecDefinition(keys, order, frame)),
-          "__graft_rn")()
-        Project(child.output,
-          Filter(LessThanOrEqual(rn.toAttribute, Literal(k)),
-            Window(Seq(rn), keys, order, child)))
-    }
-}
-
 object GraftPlans {
 
-  /** Install the rank-window lowering mode (idempotent, symmetric with
-    * [[installPhysical]]: removes the strategy and un-gates the rule).
-    */
-  def install(spark: SparkSession): Unit = {
-    spark.experimental.extraStrategies =
-      spark.experimental.extraStrategies.filterNot(_ == TopKPerKeyStrategy)
-    spark.conf.set("spark.graft.topk.physical", "false")
-    if (!spark.experimental.extraOptimizations.contains(LowerTopKPerKey))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ LowerTopKPerKey
-  }
-
-  /** Install the PHYSICAL bounded-heap mode ([[TopKPerKeyExec]]) instead —
-    * the two are mutually exclusive takes on the same logical node
-    * (idempotent). The rule is gated OFF by conf rather than removed, so
-    * this also works when `GraftExtensions` injected it through
-    * `spark.sql.extensions`, where runtime removal is impossible.
-    */
-  def installPhysical(spark: SparkSession): Unit = {
-    spark.conf.set("spark.graft.topk.physical", "true")
-    if (!spark.experimental.extraStrategies.contains(TopKPerKeyStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKPerKeyStrategy
-  }
-
-  /** Install the PHYSICAL mode iff no [[TopKPerKey]] handling is present on
-    * the session at all — library entry points (the ANN query paths) call
-    * this so their plans work on a fresh session without overriding a mode
-    * the caller chose deliberately (results are identical either way).
-    *
-    * "Handling present" covers all three installation channels: a runtime
-    * [[install]]/[[installPhysical]] (visible in the experimental lists),
-    * a `GraftExtensions` deployment (rule+strategy injected through
-    * `SparkSessionExtensions`, detected via the planner's strategy list),
-    * and — decisive on its own — an explicitly-set
-    * `spark.graft.topk.physical` conf: both installers pin it, and a
-    * deployment that deliberately left it `false` for window mode must not
-    * have a library call silently flip it. When the conf is set but the
-    * matching machinery is absent (a caller who set the conf alone, no
-    * extension), the chosen mode's handling is supplemented so the node
-    * still plans — the MODE choice is never overridden.
-    */
-  def ensureInstalled(spark: SparkSession): Unit = {
-    val hasRule = spark.experimental.extraOptimizations.contains(LowerTopKPerKey)
-    val hasStrategy = spark.experimental.extraStrategies.contains(TopKPerKeyStrategy)
-    spark.conf.getOption("spark.graft.topk.physical") match {
-      case Some(mode) =>
-        // strict parse with a message naming the conf: a malformed value
-        // ("1", "yes") must not surface as a bare IllegalArgumentException
-        // from library entry points that otherwise never throw
-        val physical =
-          if (mode.equalsIgnoreCase("true")) true
-          else if (mode.equalsIgnoreCase("false")) false
-          else throw new IllegalArgumentException(
-            s"spark.graft.topk.physical must be 'true' or 'false', got '$mode'")
-        val viaExtension = Bridge.hasPlannerStrategy(spark, TopKPerKeyStrategy)
-        if (physical) {
-          if (!hasStrategy && !viaExtension)
-            spark.experimental.extraStrategies =
-              spark.experimental.extraStrategies :+ TopKPerKeyStrategy
-        } else {
-          // extension deployments inject the rule alongside the strategy,
-          // so its presence in the planner implies the rule is there too
-          if (!hasRule && !viaExtension)
-            spark.experimental.extraOptimizations =
-              spark.experimental.extraOptimizations :+ LowerTopKPerKey
-        }
-      case None =>
-        if (!hasRule && !hasStrategy) installPhysical(spark)
-    }
-  }
-
-  /** Top-k rows per key group under `order` (ties broken by window order).
-    * Requires [[install]] (or the `GraftExtensions` SQL extension) on the
-    * session — otherwise planning fails on the unlowered node.
+  /** Top-k rows per key group under `order`; output order within a group
+    * is unspecified. Registers [[TopKPerKeyStrategy]] on the session's
+    * experimental strategies unless its planner already carries it (a
+    * previous call, or a `GraftExtensions` deployment), so the node plans
+    * on any session.
     */
   def topKPerKey(df: DataFrame, keyCols: Seq[Column], orderCols: Seq[Column],
       k: Int): DataFrame = {
     require(k > 0, "k must be positive")
+    val spark = df.sparkSession
+    spark.experimental.synchronized {
+      if (!Bridge.plannerStrategies(spark).contains(TopKPerKeyStrategy))
+        spark.experimental.extraStrategies =
+          spark.experimental.extraStrategies :+ TopKPerKeyStrategy
+    }
     val child = Bridge.analyzed(df)
     // bind column references against the child NOW — a hand-built node is
     // outside the Dataset API's own resolution path
@@ -163,6 +62,6 @@ object GraftPlans {
       case s: SortOrder => s
       case e            => SortOrder(e, Ascending)
     }
-    Bridge.ofRows(df.sparkSession, TopKPerKey(keys, order, k, child))
+    Bridge.ofRows(spark, TopKPerKey(keys, order, k, child))
   }
 }

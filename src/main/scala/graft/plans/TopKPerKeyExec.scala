@@ -9,11 +9,11 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, ClusteredDistribution, Distribution, Partitioning, UnspecifiedDistribution}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 
-/** The deepest rung of the §2.10 extension ladder: a PHYSICAL operator for
-  * [[TopKPerKey]], planned by [[TopKPerKeyStrategy]] instead of the
-  * rank-window lowering rule.
+/** The deepest rung of the §2.10 extension ladder: the PHYSICAL operator
+  * for [[TopKPerKey]], planned by [[TopKPerKeyStrategy]] — the node's only
+  * implementation.
   *
-  * Why a bounded heap beats the window at scale: the window formulation
+  * Why a bounded heap beats a rank window at scale: the window formulation
   * sorts every group entirely (full `Exchange` + `Sort` of ALL rows, then
   * discards everything past rank k), while this operator keeps only k rows
   * per key at every stage. The `partial = true` instance runs before the
@@ -51,11 +51,12 @@ case class TopKPerKeyExec(
     // reduces exactly — so correctness is unaffected (the same
     // safety-valve shape as Spark's hash-aggregate fallback). The final
     // phase is key-clustered, so its per-partition key count is already
-    // 1/numPartitions of the total and is not flushed. Read from
-    // spark.graft.topk.maxKeysInMemory on the driver at execution time.
+    // 1/numPartitions of the total and is not flushed. Read (strictly, ≥ 1)
+    // from spark.graft.topk.maxKeysInMemory on the driver at execution time.
     val maxKeys =
       if (!partial) Int.MaxValue
-      else session.conf.get("spark.graft.topk.maxKeysInMemory", "100000").toInt
+      else graft.ext.IndexConf.strictInt(session,
+        "spark.graft.topk.maxKeysInMemory", default = 100000, min = 1)
     child.execute().mapPartitions { iter =>
       val keyProj = UnsafeProjection.create(keys, child.output)
       val ord = RowOrdering.create(order, child.output)
@@ -94,9 +95,9 @@ case class TopKPerKeyExec(
 }
 
 /** Plans [[TopKPerKey]] as partial-heap → (exchange, inserted by
-  * EnsureRequirements) → final-heap. Mutually exclusive with
-  * [[LowerTopKPerKey]]: if the lowering rule is installed it rewrites the
-  * node before planning and this strategy never sees it.
+  * EnsureRequirements) → final-heap. [[GraftPlans.topKPerKey]] registers
+  * it on the session; `GraftExtensions` injects it for config-driven
+  * deployments.
   */
 object TopKPerKeyStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {

@@ -37,16 +37,15 @@ object Bridge {
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.queryExecution.analyzed
 
-  /** Whether the session's planner already carries `strategy` — including
-    * strategies injected through `SparkSessionExtensions`
-    * (`spark.sql.extensions`), which are invisible to
-    * `spark.experimental.extraStrategies` (the planner is `private[sql]`,
-    * hence this lives in the bridge).
+  /** The session planner's strategies — including those injected through
+    * `SparkSessionExtensions` (`spark.sql.extensions`), which are
+    * invisible to `spark.experimental.extraStrategies` (the planner is
+    * `private[sql]`, hence this lives in the bridge).
     */
-  def hasPlannerStrategy(spark: org.apache.spark.sql.SparkSession,
-      strategy: org.apache.spark.sql.execution.SparkStrategy): Boolean =
+  def plannerStrategies(spark: org.apache.spark.sql.SparkSession)
+      : Seq[org.apache.spark.sql.execution.SparkStrategy] =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.planner.strategies.contains(strategy)
+      .sessionState.planner.strategies
 
   /** Drain the listener bus (`listenerBus` is `private[spark]`) — a
     * probe reading metrics accumulated by a SparkListener must flush

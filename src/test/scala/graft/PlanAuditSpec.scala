@@ -1,6 +1,10 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.plan.Translator
 
@@ -145,16 +149,42 @@ class PlanAuditSpec extends GraftSpec {
     p should not include "row_number"
   }
 
-  it("TopKPerKey's ALTERNATE rule lowering compiles to the rank window — " +
-     "no custom node survives to the physical plan") {
-    graft.plans.GraftPlans.install(spark)
-    val orders = spark.read.parquet(s"$dir/orders.parquet")
-    val df = graft.plans.GraftPlans.topKPerKey(orders,
-      Seq(col("o_custkey")), Seq(col("o_totalprice").desc, col("o_orderkey")), k = 2)
-    val p = physical(df)
-    p should not include "TopKPerKey"
-    p should include("__graft_rn")
-    "Exchange hashpartitioning\\(o_custkey".r.findAllIn(p).size shouldBe 1
+  it("every declared query that reaches topKPerKey plans the bounded-heap " +
+     "pair — no rank-window lowering") {
+    // the declared queries whose bodies call a topKPerKey caller: dq57
+    // directly, Sampling.clusterBalanced (cell), and the qid-keyed ANN /
+    // IVF / PQ / BM25 ranking tails (CandidateTopK, PqAnn.rankScored)
+    val reaching = Seq("dq23_ann_ivf", "dq30_ann_multiprobe",
+      "dq51_ann_trained_ivf", "dq57_topk_per_key", "dq60_quantized_ann",
+      "dq84_ann_ivf_kernel", "dq86_bm25_topk", "dq90_hard_negatives",
+      "dq93_chunk_retrieval", "dq99_knn_classify", "dq111_cluster_balanced",
+      "dq118_ivf_store", "dq126_ivf_store_packed", "dq127_bm25_store",
+      "dq140_stream_bm25_fold", "dq142_ivf_refit", "dq162_pq_adc_topk",
+      "dq163_ivfpq_topk", "dq164_ivfpq_store", "dq169_residual_ivfpq",
+      "dq170_residual_pq_store", "dq173_pq_rerank", "dq177_pq_permuted")
+    // queries that materialize their ranking (localCheckpoint before an
+    // index release) hide it from the returned plan, so the audit reads
+    // every plan the query runs as well as the one it returns
+    val ran = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
+        ran.add(qe.executedPlan); ()
+      }
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try for (name <- reaching) withClue(s"$name: ") {
+      ran.clear()
+      val returned = SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan
+      org.apache.spark.sql.graft.Bridge.waitListeners(spark.sparkContext)
+      val plans = returned +: ran.asScala.toSeq
+      val heaps = plans.flatMap(graft.plans.PlanWalk.collectAll(_) {
+        case t: graft.plans.TopKPerKeyExec => t.partial
+      })
+      heaps should not be empty
+      heaps.count(identity) shouldBe heaps.count(!_) // partial + final per node
+      plans.map(_.toString).filter(_.contains("__graft_rn")) shouldBe empty
+    } finally spark.listenerManager.unregister(listener)
   }
 
   it("MinHash candidate generation is JOIN-FREE: per-bucket grouping + " +
@@ -172,7 +202,6 @@ class PlanAuditSpec extends GraftSpec {
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     val idx = graft.ext.IvfIndex.fit(emb, "vec_id", "embedding", k = 4)
     try {
-      graft.plans.GraftPlans.installPhysical(spark) // shared session: pin mode
       val p = physical(idx.queryAll(Seq(1L, 2L, 3L), topK = 5, nprobe = 2))
       p should include("BroadcastHashJoin") // probe rows broadcast onto cells
       p should include("squareddistance")   // probe ranking inside the plan
@@ -195,7 +224,6 @@ class PlanAuditSpec extends GraftSpec {
   it("quantized ANN (dq60) broadcasts the query rows and keeps integer " +
      "scoring inside the plan") {
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-    graft.plans.GraftPlans.installPhysical(spark) // shared session: pin mode
     val df = graft.ext.QuantizedAnn.topK(emb, "vec_id", "embedding", Seq(1L), k = 5)
     val p = physical(df)
     p should include("BroadcastNestedLoopJoin") // 1-3 query rows, broadcast side

@@ -103,7 +103,6 @@ class IvfIndexSpec extends GraftSpec {
 
   it("all three batched query paths plan through the bounded-heap " +
      "TopKPerKeyExec — no rank window over the candidate set") {
-    graft.plans.GraftPlans.installPhysical(spark) // shared session: pin mode
     def audit(df: org.apache.spark.sql.DataFrame): Unit = {
       val p = df.queryExecution.executedPlan.toString
       "TopKPerKey".r.findAllIn(p).size shouldBe 2 // partial + final heap
@@ -122,7 +121,6 @@ class IvfIndexSpec extends GraftSpec {
 
   it("ranked surfaces (annTopK / annTopKMultiProbe / quantized topK) rank " +
      "AFTER the heap: the window's input is the O(qids·k) survivor set") {
-    graft.plans.GraftPlans.installPhysical(spark)
     def audit(df: org.apache.spark.sql.DataFrame): Unit = {
       val p = df.queryExecution.executedPlan.toString
       "TopKPerKey".r.findAllIn(p).size shouldBe 2

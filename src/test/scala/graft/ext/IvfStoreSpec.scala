@@ -501,25 +501,6 @@ class IvfStoreSpec extends GraftSpec {
     } finally spark.conf.unset("spark.graft.index.compactThreshold")
   }
 
-  it("driftAdvisory degrades gracefully when active dirs predate the " +
-     "drift sidecar: missing dirs are skipped, none at all is a clear " +
-     "error for driftReport and a false from refitAdvised") {
-    val path = tmp()
-    val store = IvfStore.create(emb, "vec_id", "embedding", path, k = 8)
-    // simulate a pre-upgrade layout: unlink the create's drift sidecar
-    val fsys = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    fsys.delete(new org.apache.hadoop.fs.Path(s"$path/drift"), true)
-    store.driftAdvisory() shouldBe None
-    store.refitAdvised() shouldBe false
-    val err = intercept[IllegalArgumentException] { store.driftReport() }
-    err.getMessage should include("drift statistics unavailable")
-    // one post-upgrade append: report works again over just that dir
-    store.append(emb.limit(3), "vec_id", "embedding")
-    store.driftReport().select("append").distinct().count() shouldBe 1L
-    store.driftAdvisory() shouldBe None // a lone histogram: nothing to compare
-  }
-
   it("a token replay SURVIVES a refit: the refit manifest carries the " +
      "newest append's token forward, so the excludeToken view resolves " +
      "the pre-append generation and dirs and the replayed gate+append " +
@@ -623,13 +604,6 @@ class IvfStoreSpec extends GraftSpec {
     val after = hot.occupancyAdvisory()
     after.generation shouldBe 2
     after.vectors shouldBe 160L
-    // a layout with NO drift sidecars refuses occupancy by name
-    val bare = IvfStore.create(emb, "vec_id", "embedding", tmp(), k = 8)
-    val fsys = new org.apache.hadoop.fs.Path(bare.path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    fsys.delete(new org.apache.hadoop.fs.Path(s"${bare.path}/drift"), true)
-    intercept[IllegalArgumentException] { bare.cellOccupancy() }
-      .getMessage should include("cell occupancy unavailable")
   }
 
   it("the semantic gate tolerates a batch that itself carries a 'qid' " +

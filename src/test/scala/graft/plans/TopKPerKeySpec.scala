@@ -3,8 +3,8 @@ package graft.plans
 import graft.GraftSpec
 import org.apache.spark.sql.functions._
 
-/** Custom logical node + lowering rule: correctness vs the inline window
-  * formulation, plan carries the node until the rule fires.
+/** Custom logical node + bounded-heap physical strategy: correctness vs the
+  * inline window formulation, the heap pair planned on any session.
   */
 class TopKPerKeySpec extends GraftSpec {
   import spark.implicits._
@@ -12,8 +12,12 @@ class TopKPerKeySpec extends GraftSpec {
   private lazy val orders =
     spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
 
+  private def heapNodes(df: org.apache.spark.sql.DataFrame): Seq[TopKPerKeyExec] =
+    PlanWalk.collectAll(df.queryExecution.executedPlan) {
+      case t: TopKPerKeyExec => t
+    }
+
   it("returns exactly the top-k rows per key") {
-    GraftPlans.install(spark)
     val got = GraftPlans.topKPerKey(orders,
         Seq($"o_custkey"), Seq($"o_totalprice".desc, $"o_orderkey"), k = 2)
       .select("o_custkey", "o_orderkey")
@@ -28,58 +32,66 @@ class TopKPerKeySpec extends GraftSpec {
     expected.exceptAll(got).count() shouldBe 0
   }
 
-  it("the analyzed plan carries the custom node; the rule lowers it away") {
-    GraftPlans.install(spark)
-    val df = GraftPlans.topKPerKey(orders, Seq($"o_custkey"),
-      Seq($"o_totalprice".desc), k = 1)
-    df.queryExecution.analyzed.collect { case t: TopKPerKey => t } should have size 1
-    df.queryExecution.optimizedPlan.collect { case t: TopKPerKey => t } shouldBe empty
-    df.queryExecution.executedPlan.toString should include("row_number")
+  it("a session with no TopKPerKey handling plans a bare topKPerKey call " +
+     "as exactly the two TopKPerKeyExec nodes") {
+    val (rules, strategies) =
+      (spark.experimental.extraOptimizations, spark.experimental.extraStrategies)
+    try {
+      spark.experimental.extraOptimizations = Seq.empty
+      spark.experimental.extraStrategies = Seq.empty
+      val df = GraftPlans.topKPerKey(orders, Seq($"o_custkey"),
+        Seq($"o_totalprice".desc, $"o_orderkey"), k = 1)
+      heapNodes(df).map(_.partial).sorted shouldBe Seq(false, true)
+      df.count() shouldBe orders.select("o_custkey").distinct().count()
+    } finally {
+      spark.experimental.extraOptimizations = rules
+      spark.experimental.extraStrategies = strategies
+    }
+  }
+
+  it("repeated calls register the strategy on the planner exactly once") {
+    GraftPlans.topKPerKey(orders, Seq($"o_custkey"), Seq($"o_totalprice"), k = 1)
+    GraftPlans.topKPerKey(orders, Seq($"o_custkey"), Seq($"o_totalprice"), k = 2)
+    org.apache.spark.sql.graft.Bridge.plannerStrategies(spark)
+      .count(_ == TopKPerKeyStrategy) shouldBe 1
   }
 
   it("physical strategy: bounded-heap TopKPerKeyExec pair around ONE " +
      "exchange, result equals the window formulation") {
-    try {
-      GraftPlans.installPhysical(spark)
-      val got = GraftPlans.topKPerKey(orders,
-          Seq($"o_custkey"), Seq($"o_totalprice".desc, $"o_orderkey"), k = 2)
-        .select("o_custkey", "o_orderkey")
-      val p = got.queryExecution.executedPlan.toString
-      // partial heap (map-side, O(keys·k) forwarded) → exchange → final
-      // heap (SparkPlan.nodeName strips the Exec suffix in plan strings)
-      "TopKPerKey".r.findAllIn(p).size shouldBe 2
-      "Exchange hashpartitioning\\(o_custkey".r.findAllIn(p).size shouldBe 1
-      p should not include "Window"    // the rule did NOT fire
-      p should not include "row_number"
+    val got = GraftPlans.topKPerKey(orders,
+        Seq($"o_custkey"), Seq($"o_totalprice".desc, $"o_orderkey"), k = 2)
+      .select("o_custkey", "o_orderkey")
+    val p = got.queryExecution.executedPlan.toString
+    // partial heap (map-side, O(keys·k) forwarded) → exchange → final
+    // heap (SparkPlan.nodeName strips the Exec suffix in plan strings)
+    "TopKPerKey".r.findAllIn(p).size shouldBe 2
+    "Exchange hashpartitioning\\(o_custkey".r.findAllIn(p).size shouldBe 1
+    p should not include "Window"
+    p should not include "row_number"
 
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("o_custkey").orderBy($"o_totalprice".desc, $"o_orderkey")
-      val expected = orders
-        .withColumn("rn", row_number().over(w)).filter($"rn" <= 2)
-        .select("o_custkey", "o_orderkey")
-      got.exceptAll(expected).count() shouldBe 0
-      expected.exceptAll(got).count() shouldBe 0
-    } finally GraftPlans.install(spark) // symmetric: restores rule mode
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("o_custkey").orderBy($"o_totalprice".desc, $"o_orderkey")
+    val expected = orders
+      .withColumn("rn", row_number().over(w)).filter($"rn" <= 2)
+      .select("o_custkey", "o_orderkey")
+    got.exceptAll(expected).count() shouldBe 0
+    expected.exceptAll(got).count() shouldBe 0
   }
 
   it("physical strategy bounds partial output: the map side forwards at " +
      "most k rows per key per partition") {
-    try {
-      GraftPlans.installPhysical(spark)
-      // 1000 rows, ONE key, k=3, several input partitions: the exchange
-      // must move ≤ 3 rows per input partition, and the final result is 3
-      val df = spark.range(1000).repartition(4)
-        .select(lit(1L).as("key"), $"id".as("v"))
-      val top = GraftPlans.topKPerKey(df, Seq($"key"), Seq($"v".desc), k = 3)
-      top.select("v").as[Long].collect().sorted shouldBe Array(997L, 998L, 999L)
-    } finally GraftPlans.install(spark)
+    // 1000 rows, ONE key, k=3, several input partitions: the exchange
+    // must move ≤ 3 rows per input partition, and the final result is 3
+    val df = spark.range(1000).repartition(4)
+      .select(lit(1L).as("key"), $"id".as("v"))
+    val top = GraftPlans.topKPerKey(df, Seq($"key"), Seq($"v".desc), k = 3)
+    top.select("v").as[Long].collect().sorted shouldBe Array(997L, 998L, 999L)
   }
 
   it("partial-phase flush valve: a tiny maxKeysInMemory bound still yields " +
      "exact results (flushes forward supersets, the final phase reduces)") {
     val key = "spark.graft.topk.maxKeysInMemory"
     try {
-      GraftPlans.installPhysical(spark)
       spark.conf.set(key, "3") // force many flushes across 50 keys
       val df = spark.range(10000).repartition(4)
         .select(($"id" % 50).as("key"), $"id".as("v"))
@@ -91,102 +103,25 @@ class TopKPerKeySpec extends GraftSpec {
         .filter($"rn" <= 2).select("key", "v")
       top.exceptAll(expected).count() shouldBe 0
       expected.exceptAll(top).count() shouldBe 0
-    } finally {
-      spark.conf.unset(key)
-      GraftPlans.install(spark)
-    }
+    } finally spark.conf.unset(key)
   }
 
-  it("the conf gate lets the physical strategy win even when the lowering " +
-     "rule stays registered (the spark.sql.extensions deployment shape)") {
+  it("a malformed or non-positive maxKeysInMemory fails naming the key") {
+    val key = "spark.graft.topk.maxKeysInMemory"
     try {
-      // emulate GraftExtensions injection: rule AND strategy both present,
-      // with no way to remove the rule — only the conf flips the mode
-      GraftPlans.install(spark)
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKPerKeyStrategy
-      spark.conf.set("spark.graft.topk.physical", "true")
-      val df = GraftPlans.topKPerKey(orders, Seq($"o_custkey"),
-        Seq($"o_totalprice".desc), k = 1)
-      val p = df.queryExecution.executedPlan.toString
-      "TopKPerKey".r.findAllIn(p).size shouldBe 2 // heap pair, not window
-      p should not include "row_number"
-    } finally GraftPlans.install(spark)
-  }
-
-  it("ensureInstalled respects an explicitly-set mode conf instead of " +
-     "silently flipping a deployment's deliberate window-mode choice") {
-    try {
-      // conf pinned false with the rule present (the install()/extension
-      // shape): a library ANN call must leave the mode alone
-      GraftPlans.install(spark) // sets conf=false, registers the rule
-      GraftPlans.ensureInstalled(spark)
-      spark.conf.get("spark.graft.topk.physical") shouldBe "false"
-      spark.experimental.extraStrategies should not contain TopKPerKeyStrategy
-      val df = GraftPlans.topKPerKey(orders, Seq($"o_custkey"),
-        Seq($"o_totalprice".desc), k = 1)
-      df.queryExecution.executedPlan.toString should include("row_number")
-
-      // conf set alone with NO handling anywhere: the chosen mode's
-      // machinery is supplemented (so the node plans), the mode is kept
-      spark.experimental.extraOptimizations = Seq.empty
-      spark.experimental.extraStrategies = Seq.empty
-      GraftPlans.ensureInstalled(spark)
-      spark.conf.get("spark.graft.topk.physical") shouldBe "false"
-      spark.experimental.extraOptimizations should contain(LowerTopKPerKey)
-      spark.experimental.extraStrategies should not contain TopKPerKeyStrategy
-
-      // no conf, no handling: the library default (physical) installs
-      spark.conf.unset("spark.graft.topk.physical")
-      spark.experimental.extraOptimizations = Seq.empty
-      GraftPlans.ensureInstalled(spark)
-      spark.conf.get("spark.graft.topk.physical") shouldBe "true"
-      spark.experimental.extraStrategies should contain(TopKPerKeyStrategy)
-    } finally GraftPlans.install(spark)
-  }
-
-  it("ensureInstalled rejects a malformed mode conf with a message naming " +
-     "the key, not a bare toBoolean IllegalArgumentException") {
-    try {
-      spark.conf.set("spark.graft.topk.physical", "yes")
-      val e = intercept[IllegalArgumentException] {
-        GraftPlans.ensureInstalled(spark)
+      for (bad <- Seq("lots", "0")) {
+        spark.conf.set(key, bad)
+        val e = intercept[IllegalArgumentException] {
+          GraftPlans.topKPerKey(orders, Seq($"o_custkey"),
+            Seq($"o_totalprice".desc), k = 1).collect()
+        }
+        e.getMessage should include(key)
+        e.getMessage should include(bad)
       }
-      e.getMessage should include("spark.graft.topk.physical")
-      e.getMessage should include("'yes'")
-    } finally {
-      spark.conf.unset("spark.graft.topk.physical")
-      GraftPlans.install(spark)
-    }
-  }
-
-  it("the lowering RULE itself rejects a malformed mode conf with the " +
-     "key named (strict parse inside the optimizer too)") {
-    try {
-      GraftPlans.install(spark) // rule registered, window mode
-      spark.conf.set("spark.graft.topk.physical", "1")
-      val e = intercept[Exception] {
-        GraftPlans.topKPerKey(orders, Seq($"o_custkey"),
-          Seq($"o_totalprice".desc), k = 1).collect()
-      }
-      // Spark may wrap optimizer failures; the cause chain keeps the name
-      Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
-        .exists(_.getMessage.contains("spark.graft.topk.physical")) shouldBe true
-    } finally {
-      spark.conf.unset("spark.graft.topk.physical")
-      GraftPlans.install(spark)
-    }
-  }
-
-  it("install is idempotent") {
-    GraftPlans.install(spark)
-    GraftPlans.install(spark)
-    spark.experimental.extraOptimizations
-      .count(_ == LowerTopKPerKey) shouldBe 1
+    } finally spark.conf.unset(key)
   }
 
   it("keeps the child's full column set and schema") {
-    GraftPlans.install(spark)
     val df = GraftPlans.topKPerKey(orders, Seq($"o_orderstatus"),
       Seq($"o_orderdate"), k = 3)
     df.schema shouldBe orders.schema
