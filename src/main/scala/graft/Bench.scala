@@ -10,6 +10,17 @@ package graft
   * a long-running cluster actually executes (hot code, cold data).
   */
 object Bench {
+
+  /** Whether a run of checkout `sha` on `cpus` cores may replace the
+    * record `held` (a `bench_out.json` line): always, unless `held` is
+    * the same sha's record from more cores. */
+  private[graft] def replacesRecord(held: Option[String], sha: String,
+      cpus: Int): Boolean = {
+    val stamp = """"provenance":\{"git_sha":"([^"]*)"[^}]*"cpus":(\d+)""".r
+    held.flatMap(stamp.findFirstMatchIn).forall(m =>
+      m.group(1) != sha || m.group(2).toInt <= cpus)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.get("graft-bench")
@@ -1227,8 +1238,15 @@ object Bench {
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,""" +
         f""""passes":$passes,"disagreement":$disagreement,""" +
         f""""loadavg":$loads,"sf":"$sfDir","cpus":$cpus,$provenance$evidence}"""
-    // sbt-forked stdout gets an "[info] " prefix; leave an undecorated copy
-    java.nio.file.Files.writeString(java.nio.file.Paths.get("bench_out.json"), line + "\n")
+    // sbt-forked stdout gets an "[info] " prefix; leave an undecorated
+    // copy — unless it holds this checkout's record from more cores (a
+    // low-core scaling run must not replace the wider run's record)
+    val out = java.nio.file.Paths.get("bench_out.json")
+    val held =
+      if (java.nio.file.Files.exists(out)) Some(java.nio.file.Files.readString(out))
+      else None
+    if (replacesRecord(held, gitSha, cpus))
+      java.nio.file.Files.writeString(out, line + "\n")
     // ROUND-DURABLE copy (r17 verdict #2): bench_out.json is overwritten
     // by every run — the driver's low-core scaling run used to clobber
     // the 32-core per-query record, leaving PERF_r*.json with

@@ -26,10 +26,14 @@ import org.apache.spark.util.sketch.BloomFilter
   * or the filter is applied far from any join — [[split]]'s
   * definitely-absent half skipping an anti-join entirely
   * ([[Dedup.keepUnseen]], [[MinHashLSH.nearDupPairsVsHistory]]) has no
-  * join-time equivalent. The probe membership stays a scalar `udf` (not
-  * codegen) because Spark's `might_contain` is non-public API; at one
-  * virtual call per row it has never surfaced in a profile next to the
-  * shuffle it saves.
+  * join-time equivalent. The stored gates ([[NearDupIndex]],
+  * [[SubstrIndex]]) build one only on their distributed path: a batch
+  * that fits the broadcast bound is answered from its exact key sets,
+  * collected to the driver, which leave a filter nothing to prune and
+  * would cost it a job over history. The probe membership stays a
+  * scalar `udf` (not codegen) because Spark's `might_contain` is
+  * non-public API; at one virtual call per row it has never surfaced in
+  * a profile next to the shuffle it saves.
   */
 object BloomPrune {
 

@@ -1,6 +1,7 @@
 package graft.ext
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graft.Bridge
 
 /** Call-scoped caching for operators whose pipeline consumes an expensive
   * intermediate more than once (both sides of a self-join, signature branch +
@@ -23,5 +24,15 @@ private[graft] object CacheScope {
     frames.foreach(_.persist())
     try body.localCheckpoint(eager = true)
     finally frames.foreach(_.unpersist(blocking = false))
+  }
+
+  /** Whether `frame`, persisted by an enclosing [[withCached]], fits
+    * Spark's own broadcast rule once materialized: its cache entry's
+    * measured size is at most `spark.sql.autoBroadcastJoinThreshold`
+    * (a negative threshold never fits). Loads the cache first: one job,
+    * which the frame's first query would otherwise run. */
+  def fitsBroadcast(frame: DataFrame): Boolean = {
+    val limit = Bridge.broadcastThreshold(frame.sparkSession)
+    limit >= 0 && Bridge.loadCache(frame).exists(_ <= limit)
   }
 }

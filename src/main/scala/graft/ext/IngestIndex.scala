@@ -68,6 +68,14 @@ object IngestIndex {
         s"a gate answer of the store at $store cannot be appended to $path")
   }
 
+  /** An id collected to the driver as a key that compares by value: a
+    * binary id (an array, equal only to itself) becomes a buffer over
+    * its bytes. */
+  private[ext] def idKey(id: Any): Any = id match {
+    case b: Array[Byte] => java.nio.ByteBuffer.wrap(b)
+    case other => other
+  }
+
   /** The answer of a store whose append writes the kept rows themselves:
     * the rows, checkpointed, are also the features. */
   private[ext] def ofRows(store: String, kept: DataFrame, idCol: String,

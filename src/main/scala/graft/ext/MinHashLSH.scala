@@ -118,6 +118,26 @@ object MinHashLSH {
     i / (size(a) + size(b) - i)
   }
 
+  /** [[jaccardSorted]] on the driver, over two collected ASC-sorted
+    * arrays: the same two-pointer count (nulls skipped, strings in UTF-8
+    * byte order) and the same `i / (|a| + |b| - i)` in doubles. */
+  private[ext] def jaccardSortedOf(
+      a: IndexedSeq[org.apache.spark.unsafe.types.UTF8String],
+      b: IndexedSeq[org.apache.spark.unsafe.types.UTF8String]): Double = {
+    var (i, j, c) = (0, 0, 0)
+    while (i < a.length && j < b.length) {
+      if (a(i) == null) i += 1
+      else if (b(j) == null) j += 1
+      else {
+        val cmp = a(i).compareTo(b(j))
+        if (cmp < 0) i += 1
+        else if (cmp > 0) j += 1
+        else { c += 1; i += 1; j += 1 }
+      }
+    }
+    c.toDouble / ((a.length + b.length) - c.toDouble)
+  }
+
   /** LSH candidate pairs only (no Jaccard verification) — exposed for
     * tuning/diagnostics: candidate volume ≈ Σ_buckets C(size, 2) over
     * buckets of size ≤ maxBucket, the knob that controls cost on
@@ -358,16 +378,32 @@ object MinHashLSH {
         .select(col("doc_id"), signatureFrom(col("__hp"), numHashes).as("mh")),
       numHashes, bands)
 
-  private def bandExplode(sig: DataFrame, numHashes: Int, bands: Int): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must be divisible by bands")
-    val rows = numHashes / bands
+  /** `(doc_id, ds, bands)`: each document's digests with its band keys
+    * as one array of `(b, bkey)` structs — [[bandedKeysFromDigests]]'s
+    * rows before the explode, the shape a gate collects. */
+  private[ext] def bandArraysFromDigests(ds: DataFrame, numHashes: Int,
+      bands: Int): DataFrame =
+    ds.select(col("doc_id"), col("ds"),
+        hashPairsFromDigests(col("ds")).as("__hp"))
+      .select(col("doc_id"), col("ds"),
+        signatureFrom(col("__hp"), numHashes).as("mh"))
+      .select(col("doc_id"), col("ds"),
+        bandStructs(col("mh"), numHashes, bands).as("bands"))
+
+  private def bandExplode(sig: DataFrame, numHashes: Int, bands: Int): DataFrame =
     sig.select(
       col("doc_id"),
-      explode(transform(sequence(lit(0), lit(bands - 1)), b =>
-        struct(b.as("b"),
-          concat_ws("|", transform(slice(col("mh"), b * rows + 1, lit(rows)),
-            v => v.cast("string"))).as("bkey")))).as("band"))
+      explode(bandStructs(col("mh"), numHashes, bands)).as("band"))
       .select(col("doc_id"), col("band.b"), col("band.bkey"))
+
+  /** The `(b, bkey)` struct of every band of signature `mh`. */
+  private def bandStructs(mh: Column, numHashes: Int, bands: Int): Column = {
+    require(numHashes % bands == 0, "numHashes must be divisible by bands")
+    val rows = numHashes / bands
+    transform(sequence(lit(0), lit(bands - 1)), b =>
+      struct(b.as("b"),
+        concat_ws("|", transform(slice(mh, b * rows + 1, lit(rows)),
+          v => v.cast("string"))).as("bkey")))
   }
 
   /** Candidate pairs from per-bucket id lists: one shuffle (the groupBy on

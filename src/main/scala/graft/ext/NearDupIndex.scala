@@ -1,7 +1,9 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Index-wide statistics, stored with the layout and re-read by [[NearDupIndex.open]]:
   * `docs` indexed documents, `bandKeys` an (advisory) upper bound on the
@@ -63,8 +65,9 @@ final case class NearDupIndexStats(docs: Long, bandKeys: Long,
   * dirs, rather than corrupting the index). Readers take no lock (they
   * see the last committed set).
   *
-  * Query shape ([[pairsVs]]/[[keepUnseen]]), mirroring
-  * [[MinHashLSH.nearDupPairsVsHistory]] stage for stage:
+  * Query shape ([[pairsVs]], and [[gate]]/[[keepUnseen]] above the
+  * broadcast bound), mirroring [[MinHashLSH.nearDupPairsVsHistory]]
+  * stage for stage — the distributed plan, the 100 TB path:
   *  1. over-cap buckets (> maxBucket members across ALL appends — the
   *     stopword-profile degenerate buckets) come from aggregating
   *     `counts/` and are anti-joined out of the stored band relation;
@@ -76,6 +79,17 @@ final case class NearDupIndexStats(docs: Long, bandKeys: Long,
   * The incoming batch is shingled exactly once (call-scoped cache), and the
   * history side is touched as keys (`counts/`, `bands/`) plus candidate
   * digest rows — the bytes-read evidence the Bench block records.
+  *
+  * Small-batch gate: when the gate's cached digest frame, loaded,
+  * measures at most `spark.sql.autoBroadcastJoinThreshold`, [[gate]]
+  * answers the same stages on the driver instead, with no join and no
+  * Bloom filter — the query side ships to the data (REPOSE, ICDE 2021):
+  * one collect of the batch's ids, digests and band keys, then one
+  * map-only scan per relation, each filtered by an `InSet` of what the
+  * previous step found (`counts/` by the batch keys, summed per key
+  * against `maxBucket`; `bands/` by the surviving keys; `digests/` by the
+  * candidate ids, verified with [[MinHashLSH.jaccardSortedOf]]). A step
+  * with nothing to look up runs no job.
   */
 final class NearDupIndex private (
     private val spark: SparkSession, val path: String)
@@ -280,22 +294,84 @@ final class NearDupIndex private (
   /** The rows of `batch` with no indexed near-duplicate above `threshold`,
     * materialized with their digests ([[IngestIndex]]'s gate phase). The
     * batch is shingled once and its rows ride the cached digest frame, so
-    * the batch's own plan, the pairs plan and the final anti-join each run
-    * once per call. */
+    * the batch's own plan runs once per call; the duplicate ids come from
+    * the driver-side lookups when that frame fits the broadcast bound
+    * (class doc), from the pairs plan and one anti-join above it. */
   def gate(batch: DataFrame, idCol: String, textCol: String,
       excludeToken: Option[String], threshold: Double,
       fpp: Double = 0.01): IngestIndex.Gated = {
     val feats = digested(batch, textCol)
     val kept = CacheScope.withCached(feats) {
-      // the distinct duplicate ids, at most the batch's: broadcast, so
-      // the cached rows never shuffle for the anti-join
-      val dup = pairsPlan(digestsOf(feats, idCol), threshold, fpp,
-        excludeToken).select(col("doc_inc")).distinct()
-      feats.join(broadcast(dup), col(idCol) === col("doc_inc"), "left_anti")
+      if (CacheScope.fitsBroadcast(feats)) {
+        // a null id names no answer: kept, as the anti-join keeps it
+        val dup = dupIds(feats, idCol, threshold, excludeToken)
+        feats.where(col(idCol).isNull || !Bridge.inSet(col(idCol), dup))
+      } else {
+        // the distinct duplicate ids, at most the batch's: broadcast, so
+        // the cached rows never shuffle for the anti-join
+        val dup = pairsPlan(digestsOf(feats, idCol), threshold, fpp,
+          excludeToken).select(col("doc_inc")).distinct()
+        feats.join(broadcast(dup), col(idCol) === col("doc_inc"), "left_anti")
+      }
     }
     new IngestIndex.Gated(kept.drop("__ds"), digestsOf(kept, idCol), idCol,
       textCol, path)
   }
+
+  /** The ids of the cached batch `feats` with an indexed near-duplicate
+    * above `threshold` — [[pairsPlan]]'s answer for a batch small enough
+    * to broadcast, from driver-side sets: one collect of the batch's
+    * digests and band keys, then one map-only scan per history relation,
+    * filtered by the keys or candidates found so far. Exact key sets
+    * leave nothing for a Bloom filter to prune. A step with nothing to
+    * look up runs no job. */
+  private def dupIds(feats: DataFrame, idCol: String, threshold: Double,
+      excludeToken: Option[String]): Iterable[Any] = {
+    val ms = log.visible(excludeToken)
+    val st = statsOf(log.statsIn(ms))
+    val docs = MinHashLSH.bandArraysFromDigests(
+        digestsOf(feats.where(col(idCol).isNotNull), idCol)
+          .filter(size(col("ds")) > 0), st.numHashes, st.bands)
+      .collect().map(r => NearDupIndex.BatchDoc(r.get(0),
+        utf8(r.getSeq[String](1)),
+        r.getSeq[Row](2).map(k => (k.getInt(0), k.getString(1)))))
+    val keys = docs.flatMap(_.keys).toSet
+    // over-cap buckets: the batch keys' populations across all appends
+    val population = lookup(ms, "counts", "bkey", keys.map(_._2), "b", "c")
+      .groupMapReduce(r => (r.getInt(1), r.getString(0)))(_.getLong(2))(_ + _)
+    val ok = keys.filter(population.get(_).exists(_ <= st.maxBucket))
+    // the stored members of every surviving bucket
+    val members = lookup(ms, "bands", "bkey", ok.map(_._2), "b", "doc_id")
+      .map(r => ((r.getInt(1), r.getString(0)), r.get(2)))
+      .filter(m => ok(m._1)).groupMap(_._1)(_._2)
+      .withDefaultValue(Array.empty[Any])
+    // answers are per id: a repeated batch id pools its rows' candidates
+    // and digests, as the verification join on the id does
+    val byId = docs.groupBy(d => IngestIndex.idKey(d.id))
+    val cand = byId.map { case (id, rows) => id -> rows.flatMap(_.keys)
+      .flatMap(members).distinctBy(IngestIndex.idKey(_)) }
+    val stored = lookup(ms, "digests", "doc_id",
+        cand.values.flatten.toSeq.distinctBy(IngestIndex.idKey(_)), "ds")
+      .groupMap(r => IngestIndex.idKey(r.get(0)))(r =>
+        utf8(r.getSeq[String](1)))
+      .withDefaultValue(Array.empty[IndexedSeq[UTF8String]])
+    byId.collect { case (id, rows) if rows.exists(d => cand(id).exists(h =>
+        stored(IngestIndex.idKey(h))
+          .exists(MinHashLSH.jaccardSortedOf(d.ds, _) > threshold))) =>
+      rows.head.id }
+  }
+
+  /** `(keyCol, cols...)` of the rows of relation `name` in snapshot `ms`
+    * whose `keyCol` is one of `values`: one map-only, pushed-down scan,
+    * collected; no scan for no values. */
+  private def lookup(ms: Seq[Manifest], name: String, keyCol: String,
+      values: Iterable[Any], cols: String*): Array[Row] =
+    if (values.isEmpty) Array.empty
+    else relOf(ms, name).where(Bridge.inSet(col(keyCol), values))
+      .select(keyCol, cols: _*).collect()
+
+  private def utf8(ds: Seq[String]): IndexedSeq[UTF8String] =
+    ds.map(UTF8String.fromString).toIndexedSeq
 
   /** Index a [[gate]] answer of this store from its digests. */
   def append(gated: IngestIndex.Gated, token: Option[String]): Unit = {
@@ -306,6 +382,11 @@ final class NearDupIndex private (
 }
 
 object NearDupIndex extends StoreProbe {
+
+  /** One batch row as the small-batch gate collects it: its id, sorted
+    * digests and `(b, bkey)` band keys. */
+  private final case class BatchDoc(id: Any, ds: IndexedSeq[UTF8String],
+      keys: Seq[(Int, String)])
 
   /** Build a new index at `path` (must not already hold one) from the
     * history corpus — the one time history text is read. `seedToken` (if

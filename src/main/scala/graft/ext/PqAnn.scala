@@ -225,8 +225,14 @@ object PqAnn {
     * m=16/iters=2 dominated the dq162–164 bench wall). Grouping by
     * `(j, cell)` partitions the sums exactly as the per-subspace
     * formulation did, so the arithmetic (and the oracle) is unchanged.
-    * Per-iteration kernel broadcasts are call-scoped and destroyed
-    * after the update collect ([[IvfIndex.fit]]'s iterBc rule). */
+    * Every argmin runs through the [[graft.functions.NearestCells]]
+    * kernel, whatever `m·k`: the update explodes all m argmins in one
+    * projection, and as plan-literal folds even a bundle within the
+    * literal budget (16×8) grows that stage past whole-stage codegen's
+    * 64 KB method limit into interpreted evaluation. The kernel is
+    * bit-identical to the fold, so the books are too. Per-iteration
+    * kernel broadcasts are call-scoped and destroyed after the update
+    * collect ([[IvfIndex.fit]]'s iterBc rule). */
   def fit(df: DataFrame, idCol: String, embCol: String, dims: Int,
       m: Int, k: Int, iters: Int = 2): Codebook = {
     require(k >= 1 && k <= 128,
@@ -254,12 +260,10 @@ object PqAnn {
       }.toSeq
     }.toVector
     for (_ <- 1 to iters) {
-      val bcs =
-        if (books.map(_.size).sum <= literalBudget(spark)) None
-        else Some(books.map(cs => IvfIndex.bcMatrix(spark, cs)))
+      val bcs = books.map(cs => IvfIndex.bcMatrix(spark, cs))
       val structs = (0 until m).map { j =>
         struct(lit(j).as("j"),
-          subCodeCol(col("emb"), j, subDim, books(j), bcs.map(_(j)))
+          subCodeCol(col("emb"), j, subDim, books(j), Some(bcs(j)))
             .as("cell"),
           sliceCol(col("emb"), j, subDim).as("semb"))
       }
@@ -272,7 +276,7 @@ object PqAnn {
         .agg(graft.functions.VectorSumMicros.of(col("semb")).as("ms"),
           count(lit(1)).as("n"))
         .collect()
-      bcs.foreach(_.foreach(_.destroy()))
+      bcs.foreach(_.destroy())
       books = (0 until m).map { j =>
         upd.filter(_.getInt(0) == j).map { r =>
           val n = r.getLong(3)

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 
 /** Stored statistics for [[SubstrIndex]]: `digests` the (advisory) stored
   * digest count — the Bloom sizing feed, an over-count across appends is
@@ -37,11 +38,17 @@ final case class SubstrIndexStats(digests: Long, k: Int)
   * stage — Bloom split (sized from stored stats) so provably-fresh batch
   * windows never enter the digest join; only the might-seen minority
   * shuffles against `digests/` — with the history derivation replaced by
-  * the stored relation. Exactly-once streaming loops use [[gate]] with
-  * `excludeToken`, then `append(gated, token)` (the [[IngestIndex]]
-  * contract): a replayed micro-batch gates against the index as it
-  * stood before its own committed append and the re-append is a no-op;
-  * the append writes the window digests the gate already derived.
+  * the stored relation. That is the distributed plan, the 100 TB path;
+  * [[gate]] takes it only when its cached window frame measures above
+  * `spark.sql.autoBroadcastJoinThreshold`. At or below it, the gate
+  * collects the batch's window digests, reads `digests/` once filtered
+  * by them (a map-only scan, no join, no Bloom filter) and counts each
+  * id's matching windows on the driver. Exactly-once streaming loops
+  * use [[gate]] with `excludeToken`, then `append(gated, token)` (the
+  * [[IngestIndex]] contract): a replayed micro-batch gates against the
+  * index as it stood before its own committed append and the re-append
+  * is a no-op; the append writes the window digests the gate already
+  * derived.
   */
 final class SubstrIndex private (
     private val spark: SparkSession, val path: String)
@@ -184,8 +191,10 @@ final class SubstrIndex private (
   /** The batch documents with at most `maxDupWindows` windows in history,
     * materialized with their window digests ([[IngestIndex]]'s gate
     * phase). The batch is tokenized and windowed once and its rows ride
-    * the cached frame; one anti-join against the over-limit documents
-    * picks the kept rows (a document absent from the duplicate counts has
+    * the cached frame. The over-limit ids come from [[overLimitIds]]'
+    * driver-side count when that frame fits the broadcast bound, from
+    * [[dupWindows]] above it; either way the kept rows are the cached
+    * rows without them (a document absent from the duplicate counts has
     * none). A row with a null id is dropped, as [[dupWindowReport]]'s
     * per-id answer cannot name it. */
   def gate(batch: DataFrame, idCol: String, textCol: String,
@@ -196,16 +205,45 @@ final class SubstrIndex private (
     val st = statsOf(log.statsIn(ms))
     val feats = ExactSubstring.withWindowDigests(batch, textCol, st.k)
     val kept = CacheScope.withCached(feats) {
-      val bw = feats.select(col(idCol), explode(col("__dgs")).as("dg"))
-      // grouped by id, so at most the batch's ids: broadcast, so the
-      // cached rows never shuffle for the anti-join
-      val over = dupWindows(bw, idCol, fpp, ms, st)
-        .where(col("n_dup_windows") > maxDupWindows)
-      feats.where(col(idCol).isNotNull)
-        .join(broadcast(over), Seq(idCol), "left_anti")
+      if (CacheScope.fitsBroadcast(feats)) {
+        val over = overLimitIds(feats, idCol, maxDupWindows, ms)
+        feats.where(col(idCol).isNotNull && !Bridge.inSet(col(idCol), over))
+      } else {
+        val bw = feats.select(col(idCol), explode(col("__dgs")).as("dg"))
+        // grouped by id, so at most the batch's ids: broadcast, so the
+        // cached rows never shuffle for the anti-join
+        val over = dupWindows(bw, idCol, fpp, ms, st)
+          .where(col("n_dup_windows") > maxDupWindows)
+        feats.where(col(idCol).isNotNull)
+          .join(broadcast(over), Seq(idCol), "left_anti")
+      }
     }
     new IngestIndex.Gated(kept.drop("__dgs"),
       kept.select(explode(col("__dgs")).as("dg")), idCol, textCol, path)
+  }
+
+  /** The ids of the cached batch `feats` with more than `maxDupWindows`
+    * windows in snapshot `ms` — [[dupWindows]]' answer for a batch small
+    * enough to broadcast: one collect of the batch's window digests, one
+    * map-only scan of `digests/` filtered by them (none for a batch with
+    * no window), and the per-id count on the driver. A window counts once
+    * per occurrence in its document, and a repeated id sums its rows, as
+    * the explode and the group by id do. */
+  private def overLimitIds(feats: DataFrame, idCol: String,
+      maxDupWindows: Long, ms: Seq[Manifest]): Iterable[Any] = {
+    val docs = feats.where(col(idCol).isNotNull)
+      .select(col(idCol), col("__dgs")).collect()
+      .map(r => (r.get(0), r.getSeq[String](1)))
+    val windows = docs.flatMap(_._2).distinct
+    val seen: Set[String] =
+      if (windows.isEmpty) Set.empty
+      else digests(log.dirs(ms, "digests"))
+        .where(Bridge.inSet(col("dg"), windows)).collect().map(_.getString(0))
+        .toSet
+    docs.groupBy(d => IngestIndex.idKey(d._1)).values.collect {
+      case rows if rows.map(_._2.count(seen).toLong).sum > maxDupWindows =>
+        rows.head._1
+    }
   }
 
   /** Index a [[gate]] answer of this store from its window digests. */

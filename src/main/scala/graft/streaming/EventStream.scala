@@ -313,12 +313,6 @@ object EventStream {
             org.apache.spark.sql.types.StringType))))))
   }
 
-  /** The APPEND-ONLY sibling of [[runIndexedIngest]] for stores whose
-    * state is associative and ungated ([[graft.ext.BpeStore]] word
-    * counts): every micro-batch is folded in whole via `fold(batch,
-    * token)` — the callee's `appendOnce` under the batch token makes a
-    * replayed micro-batch a no-op, so the summed state after the stream
-    * equals one batch pass over the union of all micro-batches. */
   /** Stage `b1`/`b2` as two single-file parquet batches under a fresh
     * temp dir (`b2` stamped with a future mtime so the file source's
     * modified-time ordering delivers it second) and return a stream
@@ -341,6 +335,12 @@ object EventStream {
       .parquet(s"$in/*")
   }
 
+  /** The APPEND-ONLY sibling of [[runIndexedIngest]] for stores whose
+    * state is associative and ungated ([[graft.ext.BpeStore]] word
+    * counts): every micro-batch is folded in whole via `fold(batch,
+    * token)` — the callee's `appendOnce` under the batch token makes a
+    * replayed micro-batch a no-op, so the summed state after the stream
+    * equals one batch pass over the union of all micro-batches. */
   def runFoldIngest(incoming: DataFrame, name: String)
       (fold: (DataFrame, String) => Unit): Unit = {
     val basePath = java.nio.file.Files.createTempDirectory(s"graft-foldingest-$name")

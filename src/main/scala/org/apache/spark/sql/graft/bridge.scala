@@ -53,6 +53,47 @@ object Bridge {
   def waitListeners(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
 
+  /** Load the cache entry `df` is persisted under — one job over its
+    * cached batches, where a query's own scan would first run the same
+    * job as a separate table-cache stage — and return its measured
+    * in-memory size; None when `df` is not cached. */
+  def loadCache(df: org.apache.spark.sql.DataFrame): Option[BigInt] = {
+    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+    ds.sparkSession.sharedState.cacheManager.lookupCachedData(ds).map { c =>
+      val rel = c.cachedRepresentation
+      if (!rel.cacheBuilder.isCachedColumnBuffersLoaded)
+        rel.cacheBuilder.cachedColumnBuffers.count()
+      rel.computeStats().sizeInBytes
+    }
+  }
+
+  /** The session's parsed `spark.sql.autoBroadcastJoinThreshold` (bytes;
+    * negative disables broadcasting). */
+  def broadcastThreshold(spark: org.apache.spark.sql.SparkSession): Long =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.conf.autoBroadcastJoinThreshold
+
+  /** `c IN values` as an `InSet` whatever the set's size: the set is one
+    * reference in generated code (an `In` over few primitive literals
+    * would inline them, compiling a new class for every new set), and a
+    * scan still pushes it down. Values are external (`Long`, `String`,
+    * ...), of `c`'s type; a null matches nothing. An `InSet` over int,
+    * short or byte values compiles to a `switch` that inlines them, so
+    * those compare as decimal strings (an injective cast; no pushdown). */
+  def inSet(c: Column, values: Iterable[Any]): Column = {
+    val vs = values.filter(_ != null)
+    val switched = vs.headOption.exists {
+      case _: java.lang.Integer | _: java.lang.Short | _: java.lang.Byte => true
+      case _ => false
+    }
+    val (child, set) =
+      if (switched) (c.cast("string"), vs.map(_.toString)) else (c, vs)
+    column(org.apache.spark.sql.catalyst.expressions.InSet(expression(child),
+      set.iterator.map(
+        org.apache.spark.sql.catalyst.CatalystTypeConverters.convertToCatalyst)
+        .toSet))
+  }
+
   /** Eagerly convert a Column to a catalyst Expression (the plain
     * [[expression]] returns a LAZY ColumnNode wrapper that only the
     * Dataset-API operators convert during their own construction — inside a

@@ -50,6 +50,23 @@ class IvfPqStoreSpec extends GraftSpec {
     } finally ivf.release()
   }
 
+  it("PQ training within the plan-literal budget (16 books of 8) runs " +
+     "compiled: no stage falls back to interpreted evaluation") {
+    val fallback = "spark.sql.codegen.fallback"
+    val prev = spark.conf.getOption(fallback)
+    spark.conf.set(fallback, "false")
+    try {
+      val store = IvfStore.create(emb, "vec_id", "embedding", tmp(),
+        k = 4, pqM = 16, pqK = 8)
+      store.refit(k = 4)
+      val cb = PqAnn.fit(emb, "vec_id", "embedding", 64, 16, 8)
+      cb.sub.map(_.size).sum should be <= 128
+    } finally prev match {
+      case Some(v) => spark.conf.set(fallback, v)
+      case None => spark.conf.unset(fallback)
+    }
+  }
+
   it("append encodes against the FROZEN codebooks (the book relation is " +
      "byte-identical before and after) and appended vectors rank") {
     val path = tmp()

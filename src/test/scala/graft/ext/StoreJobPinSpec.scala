@@ -89,9 +89,15 @@ object StoreJobPinSpec {
   // ids it broadcasts, one job each. NgramLm's cycle fell 19 → 12 when
   // its counts/ stopped partitioning by prefix bucket (one file per
   // append) and its score read the stored partials once instead of
-  // joining the model to its own prefix totals.
-  val NearDupCycle = 20
-  val SubstrCycle = 11
+  // joining the model to its own prefix totals. NearDup's cycle fell
+  // 20 → 11 and Substr's 11 → 7 when a batch small enough to broadcast
+  // (this one) began to gate on driver-side key sets: the fan-out, the
+  // cache load, one collect of the batch side, one map-only scan per
+  // history relation (NearDup: counts/, bands/, digests/; Substr:
+  // digests/) and the checkpoint of the kept rows — no joins, no Bloom
+  // filter job.
+  val NearDupCycle = 11
+  val SubstrCycle = 7
   val NgramLmCycle = 12
   val Bm25AppendStats = 9
 }
