@@ -13,11 +13,14 @@ object Bench {
 
   /** Whether a run of checkout `sha` on `cpus` cores may replace the
     * record `held` (a `bench_out.json` line): always, unless `held` is
-    * the same sha's record from more cores. */
+    * the same sha's record from more cores. The sha is the commit's, so
+    * runs of uncommitted edits share their commit's record; a run with no
+    * known sha (`unknown`: no `.git`) always replaces, as nothing ties
+    * the held record to its code. */
   private[graft] def replacesRecord(held: Option[String], sha: String,
       cpus: Int): Boolean = {
     val stamp = """"provenance":\{"git_sha":"([^"]*)"[^}]*"cpus":(\d+)""".r
-    held.flatMap(stamp.findFirstMatchIn).forall(m =>
+    sha == "unknown" || held.flatMap(stamp.findFirstMatchIn).forall(m =>
       m.group(1) != sha || m.group(2).toInt <= cpus)
   }
 
@@ -1247,9 +1250,9 @@ object Bench {
       else None
     if (replacesRecord(held, gitSha, cpus))
       java.nio.file.Files.writeString(out, line + "\n")
-    // ROUND-DURABLE copy (r17 verdict #2): bench_out.json is overwritten
-    // by every run — the driver's low-core scaling run used to clobber
-    // the 32-core per-query record, leaving PERF_r*.json with
+    // ROUND-DURABLE copy (r17 verdict #2): bench_out.json keeps one record
+    // per commit (the widest run's), and a low-core scaling run used to
+    // clobber the 32-core per-query record, leaving PERF_r*.json with
     // per_query:{} and no geomean. A (sha, cpus)-stamped copy keeps every
     // run's full per-query record available after the fact.
     try {

@@ -28,7 +28,8 @@ import org.apache.spark.util.sketch.BloomFilter
   * ([[Dedup.keepUnseen]], [[MinHashLSH.nearDupPairsVsHistory]]) has no
   * join-time equivalent. The stored gates ([[NearDupIndex]],
   * [[SubstrIndex]]) build one only on their distributed path: a batch
-  * that fits the broadcast bound is answered from its exact key sets,
+  * within a gate's small-batch bound ([[CacheScope.fitsDriver]]) is
+  * answered from its exact key sets,
   * collected to the driver, which leave a filter nothing to prune and
   * would cost it a job over history. The probe membership stays a
   * scalar `udf` (not codegen) because Spark's `might_contain` is

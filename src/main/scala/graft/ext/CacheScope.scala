@@ -26,13 +26,16 @@ private[graft] object CacheScope {
     finally frames.foreach(_.unpersist(blocking = false))
   }
 
-  /** Whether `frame`, persisted by an enclosing [[withCached]], fits
-    * Spark's own broadcast rule once materialized: its cache entry's
-    * measured size is at most `spark.sql.autoBroadcastJoinThreshold`
-    * (a negative threshold never fits). Loads the cache first: one job,
-    * which the frame's first query would otherwise run. */
-  def fitsBroadcast(frame: DataFrame): Boolean = {
-    val limit = Bridge.broadcastThreshold(frame.sparkSession)
+  /** Whether `frame`, persisted by an enclosing [[withCached]], is small
+    * enough for a gate's driver-side path once materialized: its cache
+    * entry's measured size is at most `maxBytes`, the gate's own measured
+    * bound, and at most `spark.sql.autoBroadcastJoinThreshold` (a negative
+    * threshold never fits: disabling broadcasts forces the distributed
+    * plan, and raising the threshold for joins never grows what a gate
+    * collects past `maxBytes`). Loads the cache first: one job, which the
+    * frame's first query would otherwise run. */
+  def fitsDriver(frame: DataFrame, maxBytes: Long): Boolean = {
+    val limit = math.min(Bridge.broadcastThreshold(frame.sparkSession), maxBytes)
     limit >= 0 && Bridge.loadCache(frame).exists(_ <= limit)
   }
 }

@@ -2,7 +2,9 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.catalyst.expressions.BoundReference
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
 
 /** Stage-separated wall times from [[MinHashLSH.stageTimings]]. */
 final case class MinHashStageTimings(
@@ -85,12 +87,15 @@ object MinHashLSH {
         conv(substring(d, 9, 8), 16, 10).cast(LongType).as("h2")))
 
   /** MinHash signature over a [[hashPairs]] column: element i is
-    * min over shingles of (h1 + i·h2) mod Prime.
+    * min over shingles of (h1 + i·h2) mod Prime. One element expression
+    * per i, so `hp` is referenced `numHashes` times and CollapseProject
+    * keeps its projection in place: inlined into a lambda over i, the
+    * digest parsing behind `hp` would run once per hash function.
     */
   def signatureFrom(hp: Column, numHashes: Int): Column =
-    transform(sequence(lit(0), lit(numHashes - 1)), i =>
+    array((0 until numHashes).map(i =>
       array_min(transform(hp, h =>
-        (h.getField("h1") + i * h.getField("h2")) % Prime)))
+        (h.getField("h1") + lit(i) * h.getField("h2")) % Prime))): _*)
 
   /** Convenience single-expression signature (recomputes the digest per
     * minhash function — use [[hashPairs]] + [[signatureFrom]] with a
@@ -119,23 +124,16 @@ object MinHashLSH {
   }
 
   /** [[jaccardSorted]] on the driver, over two collected ASC-sorted
-    * arrays: the same two-pointer count (nulls skipped, strings in UTF-8
-    * byte order) and the same `i / (|a| + |b| - i)` in doubles. */
-  private[ext] def jaccardSortedOf(
-      a: IndexedSeq[org.apache.spark.unsafe.types.UTF8String],
-      b: IndexedSeq[org.apache.spark.unsafe.types.UTF8String]): Double = {
-    var (i, j, c) = (0, 0, 0)
-    while (i < a.length && j < b.length) {
-      if (a(i) == null) i += 1
-      else if (b(j) == null) j += 1
-      else {
-        val cmp = a(i).compareTo(b(j))
-        if (cmp < 0) i += 1
-        else if (cmp > 0) j += 1
-        else { c += 1; i += 1; j += 1 }
-      }
-    }
-    c.toDouble / ((a.length + b.length) - c.toDouble)
+    * string arrays: the same [[graft.functions.SortedIntersectSize]]
+    * count and the same `i / (|a| + |b| - i)` in doubles. */
+  private[ext] def jaccardSortedOf(a: ArrayData, b: ArrayData): Double = {
+    val i = sortedIntersect.nullSafeEval(a, b).asInstanceOf[Int].toDouble
+    i / (a.numElements() + b.numElements() - i)
+  }
+
+  private lazy val sortedIntersect = {
+    val strings = BoundReference(0, ArrayType(StringType), nullable = true)
+    graft.functions.SortedIntersectSize(strings, strings)
   }
 
   /** LSH candidate pairs only (no Jaccard verification) — exposed for
@@ -373,37 +371,39 @@ object MinHashLSH {
     */
   private[ext] def bandedKeysFromDigests(ds: DataFrame, numHashes: Int,
       bands: Int): DataFrame =
-    bandExplode(
-      ds.select(col("doc_id"), hashPairsFromDigests(col("ds")).as("__hp"))
-        .select(col("doc_id"), signatureFrom(col("__hp"), numHashes).as("mh")),
-      numHashes, bands)
+    bandRows(withBandArrays(ds, "ds", numHashes, bands, "bands"))
 
-  /** `(doc_id, ds, bands)`: each document's digests with its band keys
+  /** `df` with column `out`: the band keys of its digest column `dsCol`
     * as one array of `(b, bkey)` structs — [[bandedKeysFromDigests]]'s
-    * rows before the explode, the shape a gate collects. */
-  private[ext] def bandArraysFromDigests(ds: DataFrame, numHashes: Int,
-      bands: Int): DataFrame =
-    ds.select(col("doc_id"), col("ds"),
-        hashPairsFromDigests(col("ds")).as("__hp"))
-      .select(col("doc_id"), col("ds"),
-        signatureFrom(col("__hp"), numHashes).as("mh"))
-      .select(col("doc_id"), col("ds"),
-        bandStructs(col("mh"), numHashes, bands).as("bands"))
+    * rows before the explode ([[bandRows]]), the shape a gate caches and
+    * collects. */
+  private[ext] def withBandArrays(df: DataFrame, dsCol: String,
+      numHashes: Int, bands: Int, out: String): DataFrame =
+    df.withColumn("__hp", hashPairsFromDigests(col(dsCol)))
+      .withColumn("__mh", signatureFrom(col("__hp"), numHashes))
+      .withColumn(out, bandStructs(col("__mh"), numHashes, bands))
+      .drop("__hp", "__mh")
 
-  private def bandExplode(sig: DataFrame, numHashes: Int, bands: Int): DataFrame =
-    sig.select(
-      col("doc_id"),
-      explode(bandStructs(col("mh"), numHashes, bands)).as("band"))
+  /** `(doc_id, b, bkey)`, one row per band of a `(doc_id, bands)` frame
+    * ([[withBandArrays]]). */
+  private[ext] def bandRows(df: DataFrame): DataFrame =
+    df.select(col("doc_id"), explode(col("bands")).as("band"))
       .select(col("doc_id"), col("band.b"), col("band.bkey"))
 
-  /** The `(b, bkey)` struct of every band of signature `mh`. */
+  private def bandExplode(sig: DataFrame, numHashes: Int, bands: Int): DataFrame =
+    bandRows(sig.select(col("doc_id"),
+      bandStructs(col("mh"), numHashes, bands).as("bands")))
+
+  /** The `(b, bkey)` struct of every band of signature `mh`: one struct
+    * expression per band, so the signature projection is not inlined and
+    * recomputed per band (see [[signatureFrom]]). */
   private def bandStructs(mh: Column, numHashes: Int, bands: Int): Column = {
     require(numHashes % bands == 0, "numHashes must be divisible by bands")
     val rows = numHashes / bands
-    transform(sequence(lit(0), lit(bands - 1)), b =>
-      struct(b.as("b"),
-        concat_ws("|", transform(slice(mh, b * rows + 1, lit(rows)),
-          v => v.cast("string"))).as("bkey")))
+    array((0 until bands).map(b =>
+      struct(lit(b).as("b"),
+        concat_ws("|", transform(slice(mh, b * rows + 1, rows),
+          v => v.cast("string"))).as("bkey"))): _*)
   }
 
   /** Candidate pairs from per-bucket id lists: one shuffle (the groupBy on

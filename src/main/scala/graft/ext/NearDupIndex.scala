@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -66,7 +67,7 @@ final case class NearDupIndexStats(docs: Long, bandKeys: Long,
   * see the last committed set).
   *
   * Query shape ([[pairsVs]], and [[gate]]/[[keepUnseen]] above the
-  * broadcast bound), mirroring [[MinHashLSH.nearDupPairsVsHistory]]
+  * small-batch bound), mirroring [[MinHashLSH.nearDupPairsVsHistory]]
   * stage for stage — the distributed plan, the 100 TB path:
   *  1. over-cap buckets (> maxBucket members across ALL appends — the
   *     stopword-profile degenerate buckets) come from aggregating
@@ -80,16 +81,18 @@ final case class NearDupIndexStats(docs: Long, bandKeys: Long,
   * history side is touched as keys (`counts/`, `bands/`) plus candidate
   * digest rows — the bytes-read evidence the Bench block records.
   *
-  * Small-batch gate: when the gate's cached digest frame, loaded,
-  * measures at most `spark.sql.autoBroadcastJoinThreshold`, [[gate]]
-  * answers the same stages on the driver instead, with no join and no
+  * Small-batch gate: when the gate's cached frame (the batch's rows, digests
+  * and band keys), loaded, measures at most [[NearDupIndex.SmallBatchBytes]]
+  * and at most `spark.sql.autoBroadcastJoinThreshold` ([[CacheScope.fitsDriver]]),
+  * [[gate]] answers the same stages on the driver instead, with no join and no
   * Bloom filter — the query side ships to the data (REPOSE, ICDE 2021):
   * one collect of the batch's ids, digests and band keys, then one
   * map-only scan per relation, each filtered by an `InSet` of what the
   * previous step found (`counts/` by the batch keys, summed per key
   * against `maxBucket`; `bands/` by the surviving keys; `digests/` by the
   * candidate ids, verified with [[MinHashLSH.jaccardSortedOf]]). A step
-  * with nothing to look up runs no job.
+  * with nothing to look up runs no job. Either way the cached frame's band
+  * keys are computed once and ride the gate's answer to [[append]].
   */
 final class NearDupIndex private (
     private val spark: SparkSession, val path: String)
@@ -191,8 +194,12 @@ final class NearDupIndex private (
   private def relations(feats: DataFrame,
       st: NearDupIndexStats): Seq[(String, DataFrame)] = {
     val nonEmpty = feats.filter(size(col("ds")) > 0)
-    val bk = MinHashLSH.bandedKeysFromDigests(nonEmpty, st.numHashes, st.bands)
-    Seq("digests" -> nonEmpty, "bands" -> bk,
+    // a gate answer carries its documents' band arrays: explode them
+    // rather than recompute every signature
+    val bk =
+      if (feats.columns.contains("bands")) MinHashLSH.bandRows(nonEmpty)
+      else MinHashLSH.bandedKeysFromDigests(nonEmpty, st.numHashes, st.bands)
+    Seq("digests" -> nonEmpty.select("doc_id", "ds"), "bands" -> bk,
       "counts" -> bk.groupBy("b", "bkey").agg(count(lit(1)).as("c")))
   }
 
@@ -295,17 +302,21 @@ final class NearDupIndex private (
     * materialized with their digests ([[IngestIndex]]'s gate phase). The
     * batch is shingled once and its rows ride the cached digest frame, so
     * the batch's own plan runs once per call; the duplicate ids come from
-    * the driver-side lookups when that frame fits the broadcast bound
+    * the driver-side lookups when that frame fits the small-batch bound
     * (class doc), from the pairs plan and one anti-join above it. */
   def gate(batch: DataFrame, idCol: String, textCol: String,
       excludeToken: Option[String], threshold: Double,
       fpp: Double = 0.01): IngestIndex.Gated = {
-    val feats = digested(batch, textCol)
+    // band geometry is fixed at build: the cached frame carries every
+    // document's band keys, which both the lookups and the append read
+    val st = stats
+    val feats = MinHashLSH.withBandArrays(digested(batch, textCol), "__ds",
+      st.numHashes, st.bands, "__bands")
     val kept = CacheScope.withCached(feats) {
-      if (CacheScope.fitsBroadcast(feats)) {
+      if (CacheScope.fitsDriver(feats, NearDupIndex.SmallBatchBytes)) {
         // a null id names no answer: kept, as the anti-join keeps it
         val dup = dupIds(feats, idCol, threshold, excludeToken)
-        feats.where(col(idCol).isNull || !Bridge.inSet(col(idCol), dup))
+        feats.where(col(idCol).isNull || !Bridge.inSet(feats, col(idCol), dup))
       } else {
         // the distinct duplicate ids, at most the batch's: broadcast, so
         // the cached rows never shuffle for the anti-join
@@ -314,8 +325,9 @@ final class NearDupIndex private (
         feats.join(broadcast(dup), col(idCol) === col("doc_inc"), "left_anti")
       }
     }
-    new IngestIndex.Gated(kept.drop("__ds"), digestsOf(kept, idCol), idCol,
-      textCol, path)
+    new IngestIndex.Gated(kept.drop("__ds", "__bands"),
+      kept.select(col(idCol).as("doc_id"), col("__ds").as("ds"),
+        col("__bands").as("bands")), idCol, textCol, path)
   }
 
   /** The ids of the cached batch `feats` with an indexed near-duplicate
@@ -329,11 +341,9 @@ final class NearDupIndex private (
       excludeToken: Option[String]): Iterable[Any] = {
     val ms = log.visible(excludeToken)
     val st = statsOf(log.statsIn(ms))
-    val docs = MinHashLSH.bandArraysFromDigests(
-        digestsOf(feats.where(col(idCol).isNotNull), idCol)
-          .filter(size(col("ds")) > 0), st.numHashes, st.bands)
-      .collect().map(r => NearDupIndex.BatchDoc(r.get(0),
-        utf8(r.getSeq[String](1)),
+    val docs = feats.where(col(idCol).isNotNull && size(col("__ds")) > 0)
+      .select(col(idCol), col("__ds"), col("__bands")).collect()
+      .map(r => NearDupIndex.BatchDoc(r.get(0), utf8(r.getSeq[String](1)),
         r.getSeq[Row](2).map(k => (k.getInt(0), k.getString(1)))))
     val keys = docs.flatMap(_.keys).toSet
     // over-cap buckets: the batch keys' populations across all appends
@@ -354,7 +364,7 @@ final class NearDupIndex private (
         cand.values.flatten.toSeq.distinctBy(IngestIndex.idKey(_)), "ds")
       .groupMap(r => IngestIndex.idKey(r.get(0)))(r =>
         utf8(r.getSeq[String](1)))
-      .withDefaultValue(Array.empty[IndexedSeq[UTF8String]])
+      .withDefaultValue(Array.empty[ArrayData])
     byId.collect { case (id, rows) if rows.exists(d => cand(id).exists(h =>
         stored(IngestIndex.idKey(h))
           .exists(MinHashLSH.jaccardSortedOf(d.ds, _) > threshold))) =>
@@ -367,11 +377,14 @@ final class NearDupIndex private (
   private def lookup(ms: Seq[Manifest], name: String, keyCol: String,
       values: Iterable[Any], cols: String*): Array[Row] =
     if (values.isEmpty) Array.empty
-    else relOf(ms, name).where(Bridge.inSet(col(keyCol), values))
-      .select(keyCol, cols: _*).collect()
+    else {
+      val rel = relOf(ms, name)
+      rel.where(Bridge.inSet(rel, col(keyCol), values))
+        .select(keyCol, cols: _*).collect()
+    }
 
-  private def utf8(ds: Seq[String]): IndexedSeq[UTF8String] =
-    ds.map(UTF8String.fromString).toIndexedSeq
+  private def utf8(ds: Seq[String]): ArrayData =
+    new GenericArrayData(ds.map(UTF8String.fromString).toArray[Any])
 
   /** Index a [[gate]] answer of this store from its digests. */
   def append(gated: IngestIndex.Gated, token: Option[String]): Unit = {
@@ -383,9 +396,18 @@ final class NearDupIndex private (
 
 object NearDupIndex extends StoreProbe {
 
+  /** The largest cached gate frame [[NearDupIndex.gate]] answers on the
+    * driver: 10 MB, Spark's default broadcast threshold. The driver-side
+    * path measured faster than the distributed plan at every batch size
+    * tried, up to 20,000 documents (38 MB cached: 27 s against 58 s on 4
+    * cores, [[GateSweep]]); the bound caps what the driver collects, about
+    * 5,000 documents' digests and band keys, however high the join
+    * threshold is set. */
+  private[ext] val SmallBatchBytes: Long = 10L << 20
+
   /** One batch row as the small-batch gate collects it: its id, sorted
     * digests and `(b, bkey)` band keys. */
-  private final case class BatchDoc(id: Any, ds: IndexedSeq[UTF8String],
+  private final case class BatchDoc(id: Any, ds: ArrayData,
       keys: Seq[(Int, String)])
 
   /** Build a new index at `path` (must not already hold one) from the

@@ -40,7 +40,9 @@ final case class SubstrIndexStats(digests: Long, k: Int)
   * shuffles against `digests/` — with the history derivation replaced by
   * the stored relation. That is the distributed plan, the 100 TB path;
   * [[gate]] takes it only when its cached window frame measures above
-  * `spark.sql.autoBroadcastJoinThreshold`. At or below it, the gate
+  * [[SubstrIndex.SmallBatchBytes]] or above
+  * `spark.sql.autoBroadcastJoinThreshold` ([[CacheScope.fitsDriver]]).
+  * At or below both, the gate
   * collects the batch's window digests, reads `digests/` once filtered
   * by them (a map-only scan, no join, no Bloom filter) and counts each
   * id's matching windows on the driver. Exactly-once streaming loops
@@ -192,7 +194,7 @@ final class SubstrIndex private (
     * materialized with their window digests ([[IngestIndex]]'s gate
     * phase). The batch is tokenized and windowed once and its rows ride
     * the cached frame. The over-limit ids come from [[overLimitIds]]'
-    * driver-side count when that frame fits the broadcast bound, from
+    * driver-side count when that frame fits the small-batch bound, from
     * [[dupWindows]] above it; either way the kept rows are the cached
     * rows without them (a document absent from the duplicate counts has
     * none). A row with a null id is dropped, as [[dupWindowReport]]'s
@@ -205,9 +207,9 @@ final class SubstrIndex private (
     val st = statsOf(log.statsIn(ms))
     val feats = ExactSubstring.withWindowDigests(batch, textCol, st.k)
     val kept = CacheScope.withCached(feats) {
-      if (CacheScope.fitsBroadcast(feats)) {
+      if (CacheScope.fitsDriver(feats, SubstrIndex.SmallBatchBytes)) {
         val over = overLimitIds(feats, idCol, maxDupWindows, ms)
-        feats.where(col(idCol).isNotNull && !Bridge.inSet(col(idCol), over))
+        feats.where(col(idCol).isNotNull && !Bridge.inSet(feats, col(idCol), over))
       } else {
         val bw = feats.select(col(idCol), explode(col("__dgs")).as("dg"))
         // grouped by id, so at most the batch's ids: broadcast, so the
@@ -237,9 +239,11 @@ final class SubstrIndex private (
     val windows = docs.flatMap(_._2).distinct
     val seen: Set[String] =
       if (windows.isEmpty) Set.empty
-      else digests(log.dirs(ms, "digests"))
-        .where(Bridge.inSet(col("dg"), windows)).collect().map(_.getString(0))
-        .toSet
+      else {
+        val stored = digests(log.dirs(ms, "digests"))
+        stored.where(Bridge.inSet(stored, col("dg"), windows)).collect()
+          .map(_.getString(0)).toSet
+      }
     docs.groupBy(d => IngestIndex.idKey(d._1)).values.collect {
       case rows if rows.map(_._2.count(seen).toLong).sum > maxDupWindows =>
         rows.head._1
@@ -255,6 +259,14 @@ final class SubstrIndex private (
 }
 
 object SubstrIndex extends StoreProbe {
+
+  /** The largest cached gate frame [[SubstrIndex.gate]] answers on the
+    * driver: 1 MB, where the two paths measured even (about 450
+    * documents: 1.1 s each on 4 cores, [[GateSweep]]). Below it the
+    * driver-side count wins (0.46 s against 0.74 s at 200 documents);
+    * above it the distributed plan does (0.59 s against 1.25 s at 1,000),
+    * as the filter set the scan ships grows with the batch's windows. */
+  private[ext] val SmallBatchBytes: Long = 1L << 20
 
   /** The `digests/` relation's schema as written ([[ExactSubstring
     * .windowDigestsOf]]'s `dg` projection) — declared so no read of the

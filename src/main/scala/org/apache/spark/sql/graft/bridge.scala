@@ -73,25 +73,32 @@ object Bridge {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.conf.autoBroadcastJoinThreshold
 
-  /** `c IN values` as an `InSet` whatever the set's size: the set is one
-    * reference in generated code (an `In` over few primitive literals
-    * would inline them, compiling a new class for every new set), and a
-    * scan still pushes it down. Values are external (`Long`, `String`,
-    * ...), of `c`'s type; a null matches nothing. An `InSet` over int,
-    * short or byte values compiles to a `switch` that inlines them, so
-    * those compare as decimal strings (an injective cast; no pushdown). */
-  def inSet(c: Column, values: Iterable[Any]): Column = {
-    val vs = values.filter(_ != null)
-    val switched = vs.headOption.exists {
-      case _: java.lang.Integer | _: java.lang.Short | _: java.lang.Byte => true
-      case _ => false
+  /** `c IN values` over `df`'s rows as an `InSet` whatever the set's
+    * size: the set is one reference in generated code (an `In` over few
+    * primitive literals would inline them, compiling a new class for
+    * every new set), and a scan still pushes it down. Values are external
+    * (`Long`, `String`, ...), of `c`'s type; a null matches nothing. An
+    * `InSet` over an int, short, byte or date column compiles to a
+    * `switch` that inlines its values, so those compare as decimal
+    * strings (of the day number for a date): an injective cast the
+    * optimizer cannot unwrap, as it does a widening to long; no
+    * pushdown. */
+  def inSet(df: org.apache.spark.sql.DataFrame, c: Column,
+      values: Iterable[Any]): Column = {
+    import org.apache.spark.sql.types._
+    import org.apache.spark.unsafe.types.UTF8String
+    val vs = values.filter(_ != null).map(
+      org.apache.spark.sql.catalyst.CatalystTypeConverters.convertToCatalyst)
+    val (child, set) = df.select(c).schema.head.dataType match {
+      case IntegerType | ShortType | ByteType =>
+        (c.cast(StringType), vs.map(v => UTF8String.fromString(v.toString)))
+      case DateType =>
+        (org.apache.spark.sql.functions.unix_date(c).cast(StringType),
+          vs.map(v => UTF8String.fromString(v.toString)))
+      case _ => (c, vs)
     }
-    val (child, set) =
-      if (switched) (c.cast("string"), vs.map(_.toString)) else (c, vs)
     column(org.apache.spark.sql.catalyst.expressions.InSet(expression(child),
-      set.iterator.map(
-        org.apache.spark.sql.catalyst.CatalystTypeConverters.convertToCatalyst)
-        .toSet))
+      set.toSet))
   }
 
   /** Eagerly convert a Column to a catalyst Expression (the plain

@@ -18,4 +18,8 @@ class BenchRecordSpec extends org.scalatest.funspec.AnyFunSpec
     Bench.replacesRecord(Some(record("abc", 32)), "abc", 8) shouldBe false
     Bench.replacesRecord(Some("not a record"), "abc", 8) shouldBe true
   }
+
+  it("a run with no known sha always replaces the held record") {
+    Bench.replacesRecord(Some(record("unknown", 32)), "unknown", 8) shouldBe true
+  }
 }

@@ -318,14 +318,18 @@ class TextStoreParitySpec extends GraftSpec {
      "whatever their size or type") {
     import org.apache.spark.sql.execution.debug._
     val dir = tmp("inset")
-    Seq((7, 70L, "q")).toDF("i", "l", "s").write.parquet(dir)
+    val day = java.time.LocalDate.ofEpochDay(_)
+    Seq((7, 70L, "q", day(7))).toDF("i", "l", "s", "d").write.parquet(dir)
     val rows = spark.read.parquet(dir)
     // few values (an `In` would inline them) of each id type, a null, and
-    // the negated form the NearDup gate keeps null ids with
+    // the negated form the NearDup gate keeps null ids with; an int or a
+    // date set would compile to an inlining switch
     for ((c, values) <- Seq("i" -> Seq(987651, 7, null), "l" -> Seq(987652L, 70L),
-        "s" -> Seq("zq987653", "q"))) withClue(s"$c: ") {
-      val in = rows.where(Bridge.inSet(col(c), values))
-      val out = rows.where(col(c).isNull || !Bridge.inSet(col(c), values.take(1)))
+        "s" -> Seq("zq987653", "q"), "d" -> Seq(day(98765), day(7))))
+        withClue(s"$c: ") {
+      val in = rows.where(Bridge.inSet(rows, col(c), values))
+      val out = rows.where(col(c).isNull ||
+        !Bridge.inSet(rows, col(c), values.take(1)))
       in.count() shouldBe 1L
       out.count() shouldBe 1L
       for (q <- Seq(in, out)) {
