@@ -47,14 +47,23 @@ object MinHashLSH {
 
   /** Distinct token 3-gram shingles of a text column.
     * (Spark's `sequence(1, 0)` counts DOWN — guard short docs explicitly.)
+    * The tokens are bound once ([[evalOnce]]): written out, the tokenizer
+    * would run again at each of its uses, three per shingle.
     */
-  def shingles(text: Column): Column = {
-    val toks = TextAnalysis.tokens(text)
-    when(size(toks) < 3, array().cast("array<string>")).otherwise(
-      array_distinct(transform(
-        sequence(lit(1), size(toks) - 2),
-        i => concat_ws(" ", element_at(toks, i), element_at(toks, i + 1), element_at(toks, i + 2)))))
-  }
+  def shingles(text: Column): Column =
+    evalOnce(TextAnalysis.tokens(text)) { toks =>
+      when(size(toks) < 3, array().cast("array<string>")).otherwise(
+        array_distinct(transform(
+          sequence(lit(1), size(toks) - 2),
+          i => concat_ws(" ", element_at(toks, i), element_at(toks, i + 1), element_at(toks, i + 2)))))
+    }
+
+  /** `f(c)` with `c` evaluated once per row: `f` sees a lambda variable
+    * bound to `c`'s value. An expression used more than once within one
+    * column is evaluated at every use (inside a lambda, at every use in
+    * every iteration); separate projections cannot help there. */
+  private def evalOnce(c: Column)(f: Column => Column): Column =
+    element_at(transform(array(c), f), 1)
 
   /** Sorted distinct shingle digests — the persistable per-document
     * verification payload ([[NearDupIndex]]): Jaccard over digest sets
