@@ -244,17 +244,43 @@ object Bench {
       //    watermark lag from the progress events — the numbers behind
       //    "the cost is intrinsic micro-batch machinery" for the two
       //    heaviest streaming queries (dq49 buffers BOTH interval-join
-      //    sides; dq78 holds RocksDB typed state + timers).
+      //    sides; dq78 holds RocksDB typed state + timers). State totals
+      //    come from the LAST progress carrying stateful-operator metrics
+      //    (earlier batches understate the final store), the lag from the
+      //    latest max-event-time and watermark stamps seen anywhere in the
+      //    run (the final no-data batch reports a watermark but no max).
       {
+        import org.apache.spark.sql.streaming.{StreamingQueryProgress,
+          StreamingQueryListener => L}
         def streamStats(dq: String): Option[String] =
           if (!names.exists(_.startsWith(dq))) None
           else try {
             val qn = SparkEntry.queries.keys.find(_.startsWith(dq)).get
-            // runToTable executes the stream during query construction
-            SparkEntry.queries(qn)(spark, sfDir)
-            graft.streaming.EventStream.lastRunStats.map { st =>
-              s""""${dq}_batches":${st.batches},"${dq}_state_rows":${st.stateRowsTotal},""" +
-                s""""${dq}_state_bytes":${st.stateBytes},"${dq}_wm_lag_ms":${st.watermarkLagMs}"""
+            val progress =
+              new java.util.concurrent.ConcurrentLinkedQueue[StreamingQueryProgress]()
+            val listener = new L {
+              def onQueryStarted(e: L.QueryStartedEvent): Unit = ()
+              def onQueryProgress(e: L.QueryProgressEvent): Unit =
+                progress.add(e.progress): Unit
+              def onQueryTerminated(e: L.QueryTerminatedEvent): Unit = ()
+            }
+            spark.streams.addListener(listener)
+            try {
+              // runToTable executes the stream during query construction
+              SparkEntry.queries(qn)(spark, sfDir)
+              org.apache.spark.sql.graft.Bridge.waitListeners(spark.sparkContext)
+            } finally spark.streams.removeListener(listener)
+            val ps = progress.toArray(Array.empty[StreamingQueryProgress]).toSeq
+            if (ps.isEmpty) None else {
+              val ops = ps.reverse.find(_.stateOperators.nonEmpty).toSeq
+                .flatMap(_.stateOperators)
+              def stamps(k: String) = ps.flatMap(p => Option(p.eventTime.get(k)))
+                .map(java.time.Instant.parse(_).toEpochMilli)
+              val lag = stamps("max").maxOption
+                .zip(stamps("watermark").filter(_ > 0).maxOption)
+                .fold(-1L) { case (m, w) => m - w }
+              Some(s""""${dq}_batches":${ps.size},"${dq}_state_rows":${ops.map(_.numRowsTotal).sum},""" +
+                s""""${dq}_state_bytes":${ops.map(_.memoryUsedBytes).sum},"${dq}_wm_lag_ms":$lag""")
             }
           } catch { case e: Throwable =>
             System.err.println(s"[bench] $dq stream evidence failed: ${e.getMessage}"); None

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, ListState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, ExpiredTimerInfo, GroupState, GroupStateTimeout, ListState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, Trigger}
 import org.apache.spark.sql.types._
 
 /** Structured Streaming over the `events` table (SURVEY §2.9 — the reference
@@ -22,18 +22,6 @@ import org.apache.spark.sql.types._
   * unit-agnostic and works off `event_time` / `unix_micros(event_time)`.
   */
 object EventStream {
-
-  /** State-store telemetry from the most recent [[runToTable]] on this
-    * driver, read off the terminated query's progress events: total state
-    * rows and state memory across stateful operators at the final stateful
-    * batch, watermark lag (max observed event time − final watermark), and
-    * the batch count. Turns "streaming cost is intrinsic machinery" into
-    * numbers in the Bench evidence block (round-5 directive #6). Harness
-    * surface, last-writer-wins like [[graft.ext.ConnectedComponents.lastStats]].
-    */
-  final case class StreamRunStats(batches: Int, stateRowsTotal: Long,
-      stateBytes: Long, watermarkLagMs: Long)
-  @volatile var lastRunStats: Option[StreamRunStats] = None
 
   /** Events schema with the raw-Long `ts` shape (what the suite's own
     * synthetic event files use; also the legacy nanos-as-Long form of the
@@ -80,31 +68,14 @@ object EventStream {
     */
   def runIngestGate(incoming: DataFrame, name: String)
       (gate: DataFrame => DataFrame): DataFrame = {
-    val spark = incoming.sparkSession
-    val basePath = java.nio.file.Files.createTempDirectory(s"graft-ingest-$name")
-    deleteOnExit(basePath) // result parquet is read lazily, so the tree
-    val base = basePath.toString // must outlive this call; reap at JVM exit
-    val out = s"$base/out"
-    // foreachBatch only creates batch dirs when a batch fires; pre-create
-    // the parent so a zero-input stream doesn't leave a missing path.
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
-    val q = incoming.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        gate(batch).write.mode("overwrite").parquet(s"$out/batch=$id")
-      }
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    lastRunStats = extractStats(q.recentProgress)
-    val batchDirs = Option(new java.io.File(out).listFiles())
-      .getOrElse(Array.empty).filter(_.getName.startsWith("batch="))
-    if (batchDirs.isEmpty) {
-      // Zero input files → no batch ever fired. The gate's output schema on
-      // an empty static frame of the incoming schema IS the contract shape.
-      gate(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], incoming.schema))
-    } else spark.read.parquet(out).drop("batch") // batch=<id> partition dirs
+    val base = runEachBatch(incoming, s"graft-ingest-$name") { (base, batch, id) =>
+      gate(batch).write.mode("overwrite").parquet(s"$base/out/batch=$id")
+    }
+    // Zero input files → no batch ever fired. The gate's output schema on
+    // an empty static frame of the incoming schema IS the contract shape.
+    readBatches(incoming.sparkSession, s"$base/out",
+      gate(emptyFrame(incoming.sparkSession, incoming.schema)).schema)
+      .drop("batch")
   }
 
   /** One micro-batch of the INDEXED ingest loop — exposed separately so a
@@ -118,23 +89,13 @@ object EventStream {
     * transactional sink.
     */
   def indexedIngestBatch(idx: graft.ext.IngestIndex, idCol: String,
-      textCol: String, out: String, name: String,
-      appendSurvivors: Boolean = true)
-      (batch: DataFrame, id: Long): Unit =
-    if (!appendSurvivors) {
-      // FROZEN-reference gate (benchmark decontamination): the store is
-      // a fixed corpus, survivors are never appended — so there is no
-      // replay hazard and no token machinery: a re-processed batch
-      // re-gates against the unchanged store and overwrites its own
-      // batch dir with identical rows.
-      idx.gate(batch, idCol, textCol, excludeToken = None).kept
-        .write.mode("overwrite").parquet(s"$out/batch=$id")
-    } else {
-      val token = s"$name#$id"
-      val gated = idx.gate(batch, idCol, textCol, excludeToken = Some(token))
-      gated.kept.write.mode("overwrite").parquet(s"$out/batch=$id")
-      idx.append(gated, Some(token))
-    }
+      textCol: String, out: String, name: String)
+      (batch: DataFrame, id: Long): Unit = {
+    val token = s"$name#$id"
+    val gated = idx.gate(batch, idCol, textCol, excludeToken = Some(token))
+    gated.kept.write.mode("overwrite").parquet(s"$out/batch=$id")
+    idx.append(gated, Some(token))
+  }
 
   /** [[runIngestGate]] upgraded to the STORED-index loop (dq104's batch
     * shape made streaming): every micro-batch gates against the persisted
@@ -146,29 +107,11 @@ object EventStream {
     * surviving rows with their 1-based batch number.
     */
   def runIndexedIngest(incoming: DataFrame, idx: graft.ext.IngestIndex,
-      idCol: String, textCol: String, name: String,
-      appendSurvivors: Boolean = true): DataFrame = {
-    val spark = incoming.sparkSession
-    val basePath = java.nio.file.Files.createTempDirectory(s"graft-ndingest-$name")
-    deleteOnExit(basePath)
-    val out = s"${basePath.toString}/out"
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
-    val q = incoming.writeStream
-      .foreachBatch(
-        indexedIngestBatch(idx, idCol, textCol, out, name, appendSurvivors) _)
-      .option("checkpointLocation", s"${basePath.toString}/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    lastRunStats = extractStats(q.recentProgress)
-    val batchDirs = Option(new java.io.File(out).listFiles())
-      .getOrElse(Array.empty).filter(_.getName.startsWith("batch="))
-    if (batchDirs.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        incoming.schema.add("batch", LongType))
-    else spark.read.parquet(out)
-      .withColumn("batch", col("batch").cast(LongType) + 1L)
+      idCol: String, textCol: String, name: String): DataFrame = {
+    val base = runEachBatch(incoming, s"graft-ndingest-$name") { (base, batch, id) =>
+      indexedIngestBatch(idx, idCol, textCol, s"$base/out", name)(batch, id)
+    }
+    readBatches(incoming.sparkSession, s"$base/out", incoming.schema)
   }
 
   /** The gate-ONLY twin of [[runIndexedIngest]]: every micro-batch is
@@ -178,9 +121,13 @@ object EventStream {
     * stream). Naturally idempotent (no tokens: replays re-gate against
     * an unchanged store), and the store provably does not grow. */
   def runFrozenGate(incoming: DataFrame, idx: graft.ext.IngestIndex,
-      idCol: String, textCol: String, name: String): DataFrame =
-    runIndexedIngest(incoming, idx, idCol, textCol, name,
-      appendSurvivors = false)
+      idCol: String, textCol: String, name: String): DataFrame = {
+    val base = runEachBatch(incoming, s"graft-frzgate-$name") { (base, batch, id) =>
+      idx.gate(batch, idCol, textCol, excludeToken = None).kept
+        .write.mode("overwrite").parquet(s"$base/out/batch=$id")
+    }
+    readBatches(incoming.sparkSession, s"$base/out", incoming.schema)
+  }
 
   /** The DECLARED curation pipeline STREAMED — the capstone composition:
     * a [[graft.plan.CurationConfig.PipelineDef]] (dedup → stored gates →
@@ -210,34 +157,16 @@ object EventStream {
       pipeline: graft.plan.CurationConfig.PipelineDef, dir: String,
       name: String): DataFrame = {
     requireStreamable(pipeline)
-    val spark = incoming.sparkSession
-    val basePath =
-      java.nio.file.Files.createTempDirectory(s"graft-cfgstream-$name")
-    deleteOnExit(basePath)
-    val out = s"${basePath.toString}/out"
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
-    val q = incoming.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        pipeline.applyStages(batch, dir, Some(s"$name:b$id"))
-          .write.mode("overwrite").parquet(s"$out/batch=$id")
-      }
-      .option("checkpointLocation", s"${basePath.toString}/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    lastRunStats = extractStats(q.recentProgress)
-    val batchDirs = Option(new java.io.File(out).listFiles())
-      .getOrElse(Array.empty).filter(_.getName.startsWith("batch="))
-    if (batchDirs.isEmpty)
-      // zero input files → no batch ever fired; the empty result's shape
-      // is the PIPELINE's output schema (stages can add columns —
-      // bpe_tokenize, repeat_epochs), derived statically so no store
-      // side effect runs ([[graft.plan.CurationConfig.Stage.outputSchema]])
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        pipeline.outputSchema(incoming.schema).add("batch", LongType))
-    else spark.read.parquet(out)
-      .withColumn("batch", col("batch").cast(LongType) + 1L)
+    val base = runEachBatch(incoming, s"graft-cfgstream-$name") { (base, batch, id) =>
+      pipeline.applyStages(batch, dir, Some(s"$name:b$id"))
+        .write.mode("overwrite").parquet(s"$base/out/batch=$id")
+    }
+    // zero input files → no batch ever fired; the empty result's shape
+    // is the PIPELINE's output schema (stages can add columns —
+    // bpe_tokenize, repeat_epochs), derived statically so no store
+    // side effect runs ([[graft.plan.CurationConfig.Stage.outputSchema]])
+    readBatches(incoming.sparkSession, s"$base/out",
+      pipeline.outputSchema(incoming.schema))
   }
 
   /** Refuse a pipeline the streamed runners cannot run faithfully —
@@ -268,49 +197,22 @@ object EventStream {
       pipeline: graft.plan.CurationConfig.PipelineDef, dir: String,
       name: String): (DataFrame, DataFrame) = {
     requireStreamable(pipeline)
-    val spark = incoming.sparkSession
-    val basePath =
-      java.nio.file.Files.createTempDirectory(s"graft-cfgaudit-$name")
-    deleteOnExit(basePath)
-    val out = s"${basePath.toString}/out"
-    val auditOut = s"${basePath.toString}/audit"
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(auditOut))
-    val q = incoming.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val (res, audit) =
-          pipeline.applyStagesAudited(batch, dir, Some(s"$name:b$id"))
-        res.write.mode("overwrite").parquet(s"$out/batch=$id")
-        audit.write.mode("overwrite").parquet(s"$auditOut/batch=$id")
-      }
-      .option("checkpointLocation", s"${basePath.toString}/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    lastRunStats = extractStats(q.recentProgress)
-    def readBatched(root: String, empty: => DataFrame): DataFrame = {
-      val dirs = Option(new java.io.File(root).listFiles())
-        .getOrElse(Array.empty).filter(_.getName.startsWith("batch="))
-      if (dirs.isEmpty) empty
-      else spark.read.parquet(root)
-        .withColumn("batch", col("batch").cast(LongType) + 1L)
+    val base = runEachBatch(incoming, s"graft-cfgaudit-$name") { (base, batch, id) =>
+      val (res, audit) =
+        pipeline.applyStagesAudited(batch, dir, Some(s"$name:b$id"))
+      res.write.mode("overwrite").parquet(s"$base/out/batch=$id")
+      audit.write.mode("overwrite").parquet(s"$base/audit/batch=$id")
     }
-    def emptyOf(schema: org.apache.spark.sql.types.StructType): DataFrame =
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        schema.add("batch", LongType))
     // zero-batch shapes: the result carries the PIPELINE's output schema
     // (stages add columns) and the audit's id column carries the
     // pipeline's ACTUAL id type — both derived from incoming.schema, so
     // an empty stream yields the same schema as a non-empty one
-    (readBatched(out, emptyOf(pipeline.outputSchema(incoming.schema))),
-      readBatched(auditOut, emptyOf(org.apache.spark.sql.types.StructType(
-        Seq(org.apache.spark.sql.types.StructField(pipeline.idCol,
-          incoming.schema(pipeline.idCol).dataType),
-          org.apache.spark.sql.types.StructField("stage_idx",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("stage",
-            org.apache.spark.sql.types.StringType))))))
+    val spark = incoming.sparkSession
+    (readBatches(spark, s"$base/out", pipeline.outputSchema(incoming.schema)),
+      readBatches(spark, s"$base/audit", StructType(Seq(
+        StructField(pipeline.idCol, incoming.schema(pipeline.idCol).dataType),
+        StructField("stage_idx", LongType),
+        StructField("stage", StringType)))))
   }
 
   /** Stage `b1`/`b2` as two single-file parquet batches under a fresh
@@ -342,28 +244,47 @@ object EventStream {
     * replayed micro-batch a no-op, so the summed state after the stream
     * equals one batch pass over the union of all micro-batches. */
   def runFoldIngest(incoming: DataFrame, name: String)
-      (fold: (DataFrame, String) => Unit): Unit = {
-    val basePath = java.nio.file.Files.createTempDirectory(s"graft-foldingest-$name")
-    deleteOnExit(basePath)
-    val q = incoming.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        fold(batch, s"$name#$id")
-      }
-      .option("checkpointLocation", s"${basePath.toString}/ckpt")
+      (fold: (DataFrame, String) => Unit): Unit =
+    runEachBatch(incoming, s"graft-foldingest-$name") { (_, batch, id) =>
+      fold(batch, s"$name#$id")
+    }: Unit
+
+  /** The one stream run behind every runner here: a temp dir reaped at JVM
+    * exit ([[graft.io.TempReaper]] — the runners' results read their
+    * parquet lazily, so the tree must outlive the call), the checkpoint
+    * under it, the availableNow trigger, start, and await. `sink`
+    * configures the writer given that dir, which is returned. */
+  private def runStream(df: DataFrame, prefix: String)
+      (sink: String => DataStreamWriter[Row] => DataStreamWriter[Row]): String = {
+    val base = graft.io.TempReaper.tempDir(prefix).toString
+    sink(base)(df.writeStream)
+      .option("checkpointLocation", s"$base/ckpt")
       .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination()
-    lastRunStats = extractStats(q.recentProgress)
+      .awaitTermination()
+    base
   }
 
-  /** Register a JVM-exit sweep of a temp tree. The result DataFrames these
-    * runners return read their parquet lazily, so an eager delete after the
-    * runner returns would race the caller's first action — exit-time reaping
-    * is the correct scope for a driver-lifetime harness dir. ONE shared
-    * hook for the whole driver ([[graft.io.TempReaper]]) — per-call hooks
-    * accumulate in the JVM shutdown registry over a long Bench run. */
-  private def deleteOnExit(root: java.nio.file.Path): Unit =
-    graft.io.TempReaper.register(root)
+  /** [[runStream]] with a `foreachBatch` body `(base, batch, batchId)`,
+    * `base` being the run's dir. */
+  private def runEachBatch(incoming: DataFrame, prefix: String)
+      (body: (String, DataFrame, Long) => Unit): String =
+    runStream(incoming, prefix)(base =>
+      _.foreachBatch((batch: DataFrame, id: Long) => body(base, batch, id)))
+
+  /** The per-batch output a runner wrote under `root` (one `batch=<id>`
+    * dir per micro-batch, with overwrite, so a replayed batch lands
+    * idempotently), `batch` re-numbered 1-based. When no batch fired,
+    * an empty frame of `schema` plus `batch`. */
+  private def readBatches(spark: SparkSession, root: String,
+      schema: => StructType): DataFrame =
+    if (Option(new java.io.File(root).listFiles())
+        .exists(_.exists(_.getName.startsWith("batch="))))
+      spark.read.parquet(root).withColumn("batch", col("batch").cast(LongType) + 1L)
+    else emptyFrame(spark, schema.add("batch", LongType))
+
+  private def emptyFrame(spark: SparkSession, schema: StructType): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
 
   /** File-source stream of the events table with a proper event-time column.
     * (The file source wants a directory; select the one table via glob.)
@@ -478,11 +399,6 @@ object EventStream {
       unix_micros(col("event_time")).as("epochUs"),
       col("value")).as[Event]
 
-    def fmt(us: Long): String =
-      java.time.Instant.ofEpochSecond(us / 1000000L).atZone(java.time.ZoneOffset.UTC)
-        .toLocalDateTime.format(java.time.format.DateTimeFormatter
-          .ofPattern("yyyy-MM-dd HH:mm:ss"))
-
     typed.groupByKey(_.user_id)
       .flatMapGroupsWithState[List[Long], Session](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
@@ -491,18 +407,7 @@ object EventStream {
           // one group; split on inactivity gaps
           val ts = (state.getOption.getOrElse(Nil) ++ events.map(_.epochUs)).sorted
           state.remove()
-          if (ts.isEmpty) Iterator.empty
-          else {
-            val sessions = ts.tail.foldLeft(List(List(ts.head))) { (acc, t) =>
-              if (t - acc.head.head <= gapUs) (t :: acc.head) :: acc.tail
-              else List(t) :: acc
-            }
-            sessions.reverse.iterator.map { s =>
-              val sorted = s.reverse
-              Session(user, fmt(sorted.head), sorted.size.toLong,
-                (sorted.last - sorted.head) / 1000000.0)
-            }
-          }
+          mkSessions(user, splitByGap(ts, gapUs))
       }
   }
 
@@ -660,7 +565,7 @@ object EventStream {
     }
   }
 
-  // ------------- shared greedy-session machinery (Continuous / Tws) -------
+  // ------------- shared greedy-session machinery -------------------------
 
   private def typedWithWatermark(events: DataFrame,
       watermarkDelay: String): Dataset[TimedEvent] = {
@@ -740,55 +645,12 @@ object EventStream {
     * that runs at 100 TB.
     */
   def runToTable(df: DataFrame, name: String, mode: OutputMode): DataFrame = {
-    val spark = df.sparkSession
-    val basePath = java.nio.file.Files.createTempDirectory(s"graft-stream-$name")
-    deleteOnExit(basePath)
-    val base = basePath.toString
-    val out = s"$base/out"
-    val q = (if (mode == OutputMode.Append()) {
-      df.writeStream
-        .format("parquet")
-        .option("path", out)
-    } else {
-      df.writeStream
-        .outputMode(mode)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode("overwrite").parquet(out)
-        }
-    })
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    lastRunStats = extractStats(q.recentProgress)
-    spark.read.parquet(out)
-  }
-
-  /** Fold a run's progress events into [[StreamRunStats]]: state totals
-    * from the LAST progress carrying stateful-operator metrics (earlier
-    * batches understate the final store), watermark lag from the latest
-    * max-event-time and watermark stamps seen anywhere in the run (the
-    * final no-data batch reports a watermark but no max).
-    */
-  private def extractStats(
-      progress: Array[org.apache.spark.sql.streaming.StreamingQueryProgress])
-      : Option[StreamRunStats] = try {
-    if (progress.isEmpty) None else {
-      def instant(s: String): Long = java.time.Instant.parse(s).toEpochMilli
-      val lastStateful = progress.reverse.find(_.stateOperators.nonEmpty)
-      val (rows, bytes) = lastStateful.fold((0L, 0L)) { p =>
-        (p.stateOperators.map(_.numRowsTotal).sum,
-          p.stateOperators.map(_.memoryUsedBytes).sum)
+    val base = runStream(df, s"graft-stream-$name") { base => w =>
+      if (mode == OutputMode.Append()) w.format("parquet").option("path", s"$base/out")
+      else w.outputMode(mode).foreachBatch { (batch: DataFrame, _: Long) =>
+        batch.write.mode("overwrite").parquet(s"$base/out")
       }
-      val maxEvent = progress.flatMap(p => Option(p.eventTime.get("max")))
-        .map(instant).maxOption
-      val watermark = progress.flatMap(p => Option(p.eventTime.get("watermark")))
-        .map(instant).filter(_ > 0).maxOption
-      val lag = (maxEvent, watermark) match {
-        case (Some(m), Some(w)) => m - w
-        case _                  => -1L
-      }
-      Some(StreamRunStats(progress.length, rows, bytes, lag))
     }
-  } catch { case _: Exception => None }
+    df.sparkSession.read.parquet(s"$base/out")
+  }
 }
