@@ -11,17 +11,60 @@ package graft
   */
 object Bench {
 
-  /** Whether a run of checkout `sha` on `cpus` cores may replace the
-    * record `held` (a `bench_out.json` line): always, unless `held` is
-    * the same sha's record from more cores. The sha is the commit's, so
-    * runs of uncommitted edits share their commit's record; a run with no
-    * known sha (`unknown`: no `.git`) always replaces, as nothing ties
-    * the held record to its code. */
+  /** Whether a run of checkout `sha` on `cpus` cores over `queries`
+    * queries may replace the record `held` (a `bench_out.json` line):
+    * always, unless `held` is the same sha's record from more cores, or
+    * from as many cores over more queries (a `SPARK_GRAFT_ONLY` run must
+    * not replace the full run's record; `queries` defaults to a full
+    * run). The sha is the commit's, so runs
+    * of uncommitted edits share their commit's record; a run with no
+    * known sha (`unknown`: no `.git`) always replaces, as nothing ties the
+    * held record to its code. */
   private[graft] def replacesRecord(held: Option[String], sha: String,
-      cpus: Int): Boolean = {
+      cpus: Int, queries: Int = Int.MaxValue): Boolean = {
     val stamp = """"provenance":\{"git_sha":"([^"]*)"[^}]*"cpus":(\d+)""".r
-    sha == "unknown" || held.flatMap(stamp.findFirstMatchIn).forall(m =>
-      m.group(1) != sha || m.group(2).toInt <= cpus)
+    def heldQueries(rec: String): Int =
+      """"queries":\{([^}]*)\}""".r.findFirstMatchIn(rec)
+        .fold(0)(_.group(1).count(_ == ':'))
+    sha == "unknown" || held.forall(rec =>
+      stamp.findFirstMatchIn(rec).forall(m => m.group(1) != sha ||
+        m.group(2).toInt < cpus ||
+        m.group(2).toInt == cpus && heldQueries(rec) <= queries))
+  }
+
+  /** Write a finished run's records into `dir`: the full record `line` to
+    * `bench_out.json` where [[replacesRecord]] allows, and, for a full run
+    * only, the (sha, cpus)-stamped copy under `bench_records/` and the
+    * `compact` summary to `bench_summary.json`. A `filtered` run
+    * (`SPARK_GRAFT_ONLY`) is a local iteration and leaves both as they
+    * are. */
+  private[graft] def writeRecords(dir: java.nio.file.Path, line: String,
+      compact: String, sha: String, cpus: Int, queries: Int,
+      filtered: Boolean): Unit = {
+    import java.nio.file.Files
+    // sbt-forked stdout gets an "[info] " prefix; leave an undecorated
+    // copy — unless it holds this checkout's record from more cores (a
+    // low-core scaling run must not replace the wider run's record)
+    val out = dir.resolve("bench_out.json")
+    val held = if (Files.exists(out)) Some(Files.readString(out)) else None
+    if (replacesRecord(held, sha, cpus, queries))
+      Files.writeString(out, line + "\n")
+    if (!filtered) {
+      // ROUND-DURABLE copy (r17 verdict #2): bench_out.json keeps one
+      // record per commit (the widest run's), and a low-core scaling run
+      // used to clobber the 32-core per-query record, leaving
+      // PERF_r*.json with per_query:{} and no geomean. A (sha,
+      // cpus)-stamped copy keeps every run's full per-query record
+      // available after the fact.
+      try {
+        Files.createDirectories(dir.resolve("bench_records"))
+        Files.writeString(
+          dir.resolve(s"bench_records/bench_${sha}_c$cpus.json"), line + "\n")
+      } catch { case e: Exception =>
+        System.err.println(s"[bench] stamped record write failed: ${e.getMessage}")
+      }
+      Files.writeString(dir.resolve("bench_summary.json"), compact + "\n")
+    }
   }
 
   def main(args: Array[String]): Unit = {
@@ -1267,28 +1310,6 @@ object Bench {
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,""" +
         f""""passes":$passes,"disagreement":$disagreement,""" +
         f""""loadavg":$loads,"sf":"$sfDir","cpus":$cpus,$provenance$evidence}"""
-    // sbt-forked stdout gets an "[info] " prefix; leave an undecorated
-    // copy — unless it holds this checkout's record from more cores (a
-    // low-core scaling run must not replace the wider run's record)
-    val out = java.nio.file.Paths.get("bench_out.json")
-    val held =
-      if (java.nio.file.Files.exists(out)) Some(java.nio.file.Files.readString(out))
-      else None
-    if (replacesRecord(held, gitSha, cpus))
-      java.nio.file.Files.writeString(out, line + "\n")
-    // ROUND-DURABLE copy (r17 verdict #2): bench_out.json keeps one record
-    // per commit (the widest run's), and a low-core scaling run used to
-    // clobber the 32-core per-query record, leaving PERF_r*.json with
-    // per_query:{} and no geomean. A (sha, cpus)-stamped copy keeps every
-    // run's full per-query record available after the fact.
-    try {
-      java.nio.file.Files.createDirectories(
-        java.nio.file.Paths.get("bench_records"))
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(
-        s"bench_records/bench_${gitSha}_c$cpus.json"), line + "\n")
-    } catch { case e: Exception =>
-      System.err.println(s"[bench] stamped record write failed: ${e.getMessage}")
-    }
     // The driver captures only a ~2 KB TAIL of stdout (round-14 verdict
     // #1: the 14.7 KB full record arrived head-truncated and unparseable
     // three rounds running). So the LAST stdout write is a COMPACT
@@ -1301,8 +1322,8 @@ object Bench {
         f""""n":${results.size},"queries_ok":$ok,"git_sha":"$gitSha",""" +
         f""""cpus":$cpus,"loadavg_end":$load4%.2f,""" +
         f""""full_record":"bench_records/bench_${gitSha}_c$cpus.json"}"""
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("bench_summary.json"), compact + "\n")
+    writeRecords(java.nio.file.Paths.get(""), line, compact, gitSha, cpus,
+      results.size, filtered = only.nonEmpty)
     // the summary line must be the LAST stdout write (the driver parses
     // it): stop Spark first — its state-store maintenance threads WARN
     // asynchronously and have landed after the JSON in past rounds — and

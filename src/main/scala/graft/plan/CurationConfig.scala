@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructField, StructType}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
+import scala.collection.immutable.ListMap
 
-import graft.ext.{BpeStore, Dedup, IvfStore, MediaDigestIndex, NearDupIndex, NgramLm, NgramLmStore, QualityProbeStore, Sampling, StrataCountStore, SubstrIndex, TextAnalysis}
+import graft.ext.{BpeStore, Dedup, IngestIndex, IvfStore, LoggedStore, MediaCdcIndex, MediaDigestIndex, MediaSigIndex, NearDupIndex, NgramLm, NgramLmStore, QualityProbeStore, Sampling, StoreProbe, StrataCountStore, SubstrIndex, TextAnalysis}
 
 /** Config-driven CURATION pipeline — the EXT analogue of [[ReportConfig]]'s
   * declare-a-report-then-run workflow (the reference runner loads a typed
@@ -47,7 +48,10 @@ import graft.ext.{BpeStore, Dedup, IvfStore, MediaDigestIndex, NearDupIndex, Ngr
   */
 object CurationConfig {
 
-  sealed trait Stage {
+  /** A declared stage; `name` is the config name [[parse]] accepted for
+    * it (stable across refactors: it is the pipeline's own vocabulary, so
+    * audit rows and error messages speak the language of the config). */
+  sealed abstract class Stage(val name: String) {
     /** Run the stage. `runToken` is this pipeline RUN's identity for this
       * stage position (minted by [[PipelineDef.run]] from the caller's
       * `runId`) — the persisted-index gate stages ride it for their
@@ -84,16 +88,22 @@ object CurationConfig {
       * row-preserving majority; the column-adding stages override. */
     def outputSchema(in: StructType, idCol: String,
         textCol: String): StructType = in
+
+    /** Refuse, naming the stage, an input without the declared payload
+      * column. */
+    protected def requireBinary(df: DataFrame, binaryCol: String): Unit =
+      require(df.columns.contains(binaryCol),
+        s"$name: no '$binaryCol' binary column in the input")
   }
 
-  case object ExactDedup extends Stage {
+  case object ExactDedup extends Stage("exact_dedup") {
     def apply(df: DataFrame, idCol: String, textCol: String,
         runToken: Option[String]): DataFrame =
       Dedup.exactByContent(df, textCol, idCol)
   }
 
   final case class QualityGate(minTokens: Long,
-      maxTokens: Option[Long]) extends Stage {
+      maxTokens: Option[Long]) extends Stage("quality_gate") {
     def apply(df: DataFrame, idCol: String, textCol: String,
         runToken: Option[String]): DataFrame = {
       val n = size(TextAnalysis.tokens(col(textCol))).cast("long")
@@ -102,7 +112,8 @@ object CurationConfig {
     }
   }
 
-  final case class FluencyBand(loMicro: Long, hiMicro: Long) extends Stage {
+  final case class FluencyBand(loMicro: Long,
+      hiMicro: Long) extends Stage("fluency_band") {
     def apply(df: DataFrame, idCol: String, textCol: String,
         runToken: Option[String]): DataFrame = {
       val keep = NgramLm.fluencyReport(df, idCol, textCol)
@@ -117,7 +128,7 @@ object CurationConfig {
   }
 
   final case class TokenBudget(strataCol: String,
-      budgets: Map[String, Long]) extends Stage {
+      budgets: Map[String, Long]) extends Stage("token_budget") {
     def apply(df: DataFrame, idCol: String, textCol: String,
         runToken: Option[String]): DataFrame =
       Sampling.tokenBudgetPortable(df, strataCol, idCol, textCol, budgets)
@@ -130,7 +141,7 @@ object CurationConfig {
     * the first filter of most real curation pipelines. Pure (per-row
     * stopword-ratio argmax, one scan, nothing shuffles); 'und' rows are
     * kept only if 'und' is declared. */
-  final case class LangGate(keep: Set[String]) extends Stage {
+  final case class LangGate(keep: Set[String]) extends Stage("lang_gate") {
     def apply(df: DataFrame, idCol: String, textCol: String,
         runToken: Option[String]): DataFrame =
       df.filter(graft.ext.TextAnalysis.languageId(col(textCol))
@@ -156,7 +167,7 @@ object CurationConfig {
     * stages and the oracle see what the gate saw. Pure per-row byte
     * arithmetic — one scan, nothing shuffles, stream-safe. */
   final case class MediaGate(kind: String, binaryCol: String,
-      loA: Long, hiA: Long, loB: Long, hiB: Long) extends Stage {
+      loA: Long, hiA: Long, loB: Long, hiB: Long) extends Stage("media_gate") {
     private def appended: Seq[String] = kind match {
       case "image" => Seq("media_format", "media_w", "media_h")
       case "audio" => Seq("media_channels", "media_rate")
@@ -164,8 +175,7 @@ object CurationConfig {
     }
     def apply(df: DataFrame, idCol: String, textCol: String,
         runToken: Option[String]): DataFrame = {
-      require(df.columns.contains(binaryCol),
-        s"media_gate: no '$binaryCol' binary column in the input")
+      requireBinary(df, binaryCol)
       // the appended parse columns and the scratch struct are reserved
       // (the ShardWriter rule: refuse by name, never silently replace)
       (appended :+ "__m").filter(df.columns.contains).headOption
@@ -255,11 +265,10 @@ object CurationConfig {
     * cross-batch payload gating is the store-mediated form. */
   final case class MediaDedupStage(mode: String, binaryCol: String,
       blocks: Int, minMatch: Int, maxBucket: Int, window: Int = 4,
-      minShared: Int = 3, zeros: Int = 1) extends Stage {
+      minShared: Int = 3, zeros: Int = 1) extends Stage("media_dedup") {
     def apply(df: DataFrame, idCol: String, textCol: String,
         runToken: Option[String]): DataFrame = {
-      require(df.columns.contains(binaryCol),
-        s"media_dedup: no '$binaryCol' binary column in the input")
+      requireBinary(df, binaryCol)
       mode match {
         case "exact" =>
           graft.ext.MediaDedup.exactByPayload(df, binaryCol, idCol)
@@ -280,7 +289,7 @@ object CurationConfig {
     * rare strata (n^0.5 weights) at a declared total-document target —
     * the GPT-3/Pile mixing rule as a declared stage. */
   final case class TemperatureMix(strataCol: String,
-      targetDocs: Long) extends Stage {
+      targetDocs: Long) extends Stage("temperature_mix") {
     def apply(df: DataFrame, idCol: String, textCol: String,
         runToken: Option[String]): DataFrame =
       Sampling.temperatureMixPortable(df, strataCol, idCol, targetDocs)
@@ -307,7 +316,7 @@ object CurationConfig {
     * [[graft.streaming.EventStream.runConfigPipeline]] — its statistics
     * live in the store. */
   final case class MixGate(path: String, strataCol: String,
-      targetDocs: Long) extends Stage {
+      targetDocs: Long) extends Stage("mix_gate") {
     def apply(df: DataFrame, idCol: String, textCol: String,
         runToken: Option[String]): DataFrame = {
       val spark = df.sparkSession
@@ -351,7 +360,7 @@ object CurationConfig {
 
   /** Multiplies rows (adds `epoch`): declare it LAST — a dedup or gate
     * downstream of the repeat would see every copy. */
-  final case class RepeatEpochs(factor: Double) extends Stage {
+  final case class RepeatEpochs(factor: Double) extends Stage("repeat_epochs") {
     def apply(df: DataFrame, idCol: String, textCol: String,
         runToken: Option[String]): DataFrame =
       Sampling.repeatEpochsPortable(df, idCol, factor)
@@ -364,7 +373,7 @@ object CurationConfig {
     * ([[Sampling.repeatEpochsByStrata]]) — the LLaMA "epochs per
     * dataset" recipe as a declared stage; same declare-it-LAST rule. */
   final case class RepeatEpochsByStrata(strataCol: String,
-      factors: Map[String, Double]) extends Stage {
+      factors: Map[String, Double]) extends Stage("repeat_epochs") {
     def apply(df: DataFrame, idCol: String, textCol: String,
         runToken: Option[String]): DataFrame =
       Sampling.repeatEpochsByStrata(df, strataCol, idCol, factors)
@@ -376,7 +385,7 @@ object CurationConfig {
   /** Row filter on a SQL boolean expression over the table's columns —
     * the reference runner's WHERE as a pipeline stage (and the batch
     * selector in front of the persisted-index gates below). */
-  final case class WhereExpr(exprStr: String) extends Stage {
+  final case class WhereExpr(exprStr: String) extends Stage("where") {
     def apply(df: DataFrame, idCol: String, textCol: String,
         runToken: Option[String]): DataFrame =
       df.filter(expr(exprStr))
@@ -414,26 +423,15 @@ object CurationConfig {
     * semantics and is not safely rerunnable after a crash between a
     * gate's append and the pipeline output's consumption. */
   final case class SubstrGate(path: String, k: Int,
-      maxDupWindows: Long) extends Stage {
-    private def openValidated(spark: SparkSession): SubstrIndex = {
-      val idx = SubstrIndex.open(spark, path)
-      require(idx.stats.k == k,
-        s"substr_gate at $path was built with k=${idx.stats.k}; " +
-          s"the config declares k=$k")
-      idx
-    }
+      maxDupWindows: Long) extends Stage("substr_gate") {
     def apply(df: DataFrame, idCol: String, textCol: String,
-        runToken: Option[String]): DataFrame = {
-      val spark = df.sparkSession
-      val existing =
-        if (SubstrIndex.exists(spark, path)) Some(openValidated(spark))
-        else None
-      replayableRound(df, runToken, existing, () => openValidated(spark))(
+        runToken: Option[String]): DataFrame =
+      replayableRound(df, runToken, SubstrIndex.exists(_, path),
+        openSubstr(name, path, k))(
         (seeded, tok) =>
           SubstrIndex.build(seeded, idCol, textCol, path, k, seedToken = tok))(
         (idx, input, tok) =>
           idx.gate(input, idCol, textCol, tok, maxDupWindows))
-    }
   }
 
   /** The BINARY-payload history gate ([[MediaDigestIndex]]): round 1
@@ -445,18 +443,12 @@ object CurationConfig {
     * compose `media_dedup` before this gate to collapse them. Same
     * exactly-once replayable-round machinery as every stored gate. */
   final case class MediaDigestGate(path: String,
-      binaryCol: String) extends Stage {
+      binaryCol: String) extends Stage("media_digest_gate") {
     def apply(df: DataFrame, idCol: String, textCol: String,
         runToken: Option[String]): DataFrame = {
-      require(df.columns.contains(binaryCol),
-        s"media_digest_gate: no '$binaryCol' binary column in the input")
-      val spark = df.sparkSession
-      val existing =
-        if (MediaDigestIndex.exists(spark, path))
-          Some(MediaDigestIndex.open(spark, path))
-        else None
-      replayableRound(df, runToken, existing,
-        () => MediaDigestIndex.open(spark, path))(
+      requireBinary(df, binaryCol)
+      replayableRound(df, runToken, MediaDigestIndex.exists(_, path),
+        MediaDigestIndex.open(_, path))(
         (seeded, tok) =>
           MediaDigestIndex.build(seeded, idCol, binaryCol, path,
             seedToken = tok))(
@@ -473,31 +465,15 @@ object CurationConfig {
     * and append the survivors' signatures. The parameters are the
     * stored identity — a drifted config is refused at open. */
   final case class MediaSigGate(path: String, binaryCol: String,
-      blocks: Int, minMatch: Int, maxBucket: Int) extends Stage {
-    private def openValidated(spark: SparkSession): graft.ext.MediaSigIndex = {
-      val idx = graft.ext.MediaSigIndex.open(spark, path)
-      val st = idx.stats
-      require(st.blocks == blocks && st.minMatch == minMatch &&
-        st.maxBucket == maxBucket,
-        s"media_sig_gate at $path was built with (blocks=${st.blocks}, " +
-          s"minMatch=${st.minMatch}, maxBucket=${st.maxBucket}); the " +
-          s"config declares (blocks=$blocks, minMatch=$minMatch, " +
-          s"maxBucket=$maxBucket)")
-      idx
-    }
+      blocks: Int, minMatch: Int,
+      maxBucket: Int) extends Stage("media_sig_gate") {
     def apply(df: DataFrame, idCol: String, textCol: String,
         runToken: Option[String]): DataFrame = {
-      require(df.columns.contains(binaryCol),
-        s"media_sig_gate: no '$binaryCol' binary column in the input")
-      val spark = df.sparkSession
-      val existing =
-        if (graft.ext.MediaSigIndex.exists(spark, path))
-          Some(openValidated(spark))
-        else None
-      replayableRound(df, runToken, existing,
-        () => openValidated(spark))(
+      requireBinary(df, binaryCol)
+      replayableRound(df, runToken, MediaSigIndex.exists(_, path),
+        openSig(name, path, blocks, minMatch, maxBucket))(
         (seeded, tok) =>
-          graft.ext.MediaSigIndex.build(seeded, idCol, binaryCol, path,
+          MediaSigIndex.build(seeded, idCol, binaryCol, path,
             blocks, minMatch, maxBucket, seedToken = tok))(
         (idx, input, tok) => idx.gate(input, idCol, binaryCol, tok))
     }
@@ -513,31 +489,14 @@ object CurationConfig {
     * drifted config is refused at open. */
   final case class MediaCdcGate(path: String, binaryCol: String,
       window: Int, minShared: Int, maxBucket: Int,
-      zeros: Int = 1) extends Stage {
-    private def openValidated(spark: SparkSession): graft.ext.MediaCdcIndex = {
-      val idx = graft.ext.MediaCdcIndex.open(spark, path)
-      val st = idx.stats
-      require(st.window == window && st.minShared == minShared &&
-        st.maxBucket == maxBucket && st.zeros == zeros,
-        s"media_cdc_gate at $path was built with (window=${st.window}, " +
-          s"minShared=${st.minShared}, maxBucket=${st.maxBucket}, " +
-          s"zeros=${st.zeros}); the config declares (window=$window, " +
-          s"minShared=$minShared, maxBucket=$maxBucket, zeros=$zeros)")
-      idx
-    }
+      zeros: Int = 1) extends Stage("media_cdc_gate") {
     def apply(df: DataFrame, idCol: String, textCol: String,
         runToken: Option[String]): DataFrame = {
-      require(df.columns.contains(binaryCol),
-        s"media_cdc_gate: no '$binaryCol' binary column in the input")
-      val spark = df.sparkSession
-      val existing =
-        if (graft.ext.MediaCdcIndex.exists(spark, path))
-          Some(openValidated(spark))
-        else None
-      replayableRound(df, runToken, existing,
-        () => openValidated(spark))(
+      requireBinary(df, binaryCol)
+      replayableRound(df, runToken, MediaCdcIndex.exists(_, path),
+        openCdc(name, path, window, minShared, maxBucket, zeros))(
         (seeded, tok) =>
-          graft.ext.MediaCdcIndex.build(seeded, idCol, binaryCol, path,
+          MediaCdcIndex.build(seeded, idCol, binaryCol, path,
             window, minShared, maxBucket, zeros, seedToken = tok))(
         (idx, input, tok) => idx.gate(input, idCol, binaryCol, tok))
     }
@@ -564,11 +523,17 @@ object CurationConfig {
   final case class MediaDecontamGate(path: String, mode: String,
       binaryCol: String, benchmarkTable: String, benchmarkWhere: String,
       blocks: Int, minMatch: Int, maxBucket: Int, window: Int = 4,
-      minShared: Int = 3, zeros: Int = 1) extends Stage {
+      minShared: Int = 3, zeros: Int = 1) extends Stage("media_decontam_gate") {
+
+    /** The frozen store's probe: digests, chunks or signatures by mode. */
+    private def store: StoreProbe = mode match {
+      case "exact" => MediaDigestIndex
+      case "cdc" => MediaCdcIndex
+      case _ => MediaSigIndex
+    }
 
     private def gate(df: DataFrame, idCol: String): DataFrame = {
-      require(df.columns.contains(binaryCol),
-        s"media_decontam_gate: no '$binaryCol' binary column in the input")
+      requireBinary(df, binaryCol)
       val spark = df.sparkSession
       mode match {
         case "exact" =>
@@ -578,38 +543,17 @@ object CurationConfig {
           // LENGTH-ROBUST benchmark decontamination: a re-encoded /
           // trimmed copy of a benchmark payload still collides on its
           // content-defined chunks
-          val idx = graft.ext.MediaCdcIndex.open(spark, path)
-          val st = idx.stats
-          require(st.window == window && st.minShared == minShared &&
-            st.maxBucket == maxBucket && st.zeros == zeros,
-            s"media_decontam_gate at $path was built with (window=" +
-              s"${st.window}, minShared=${st.minShared}, maxBucket=" +
-              s"${st.maxBucket}, zeros=${st.zeros}); the config declares " +
-              s"(window=$window, minShared=$minShared, " +
-              s"maxBucket=$maxBucket, zeros=$zeros)")
-          idx.keepFarPayloads(df, idCol, binaryCol)
+          openCdc(name, path, window, minShared, maxBucket, zeros)(spark)
+            .keepFarPayloads(df, idCol, binaryCol)
         case _ =>
-          val idx = graft.ext.MediaSigIndex.open(spark, path)
-          val st = idx.stats
-          require(st.blocks == blocks && st.minMatch == minMatch &&
-            st.maxBucket == maxBucket,
-            s"media_decontam_gate at $path was built with (blocks=" +
-              s"${st.blocks}, minMatch=${st.minMatch}, maxBucket=" +
-              s"${st.maxBucket}); the config declares (blocks=$blocks, " +
-              s"minMatch=$minMatch, maxBucket=$maxBucket)")
-          idx.keepFarPayloads(df, idCol, binaryCol)
+          openSig(name, path, blocks, minMatch, maxBucket)(spark)
+            .keepFarPayloads(df, idCol, binaryCol)
       }
-    }
-
-    private def storeExists(spark: SparkSession): Boolean = mode match {
-      case "exact" => MediaDigestIndex.exists(spark, path)
-      case "cdc" => graft.ext.MediaCdcIndex.exists(spark, path)
-      case _ => graft.ext.MediaSigIndex.exists(spark, path)
     }
 
     def apply(df: DataFrame, idCol: String, textCol: String,
         runToken: Option[String]): DataFrame = {
-      require(storeExists(df.sparkSession),
+      require(store.exists(df.sparkSession, path),
         s"media_decontam_gate at $path: no committed benchmark store — " +
           "run the stage through PipelineDef.run so it can build one " +
           s"from '$benchmarkTable'")
@@ -618,30 +562,17 @@ object CurationConfig {
 
     override def applyIn(dir: String)(df: DataFrame, idCol: String,
         textCol: String, runToken: Option[String]): DataFrame = {
-      val spark = df.sparkSession
-      if (!storeExists(spark)) {
-        val bench = spark.read.parquet(s"$dir/$benchmarkTable.parquet")
-          .filter(expr(benchmarkWhere))
+      buildFrozenIfAbsent(df.sparkSession, dir, benchmarkTable,
+        benchmarkWhere, store.exists(_, path)) { bench =>
         require(bench.columns.contains(binaryCol),
           s"media_decontam_gate: benchmark table '$benchmarkTable' has " +
             s"no '$binaryCol' binary column")
-        try {
-          mode match {
-            case "exact" =>
-              MediaDigestIndex.build(bench, idCol, binaryCol, path); ()
-            case "cdc" =>
-              graft.ext.MediaCdcIndex.build(bench, idCol, binaryCol,
-                path, window, minShared, maxBucket, zeros); ()
-            case _ =>
-              graft.ext.MediaSigIndex.build(bench, idCol, binaryCol,
-                path, blocks, minMatch, maxBucket); ()
-          }
-        } catch {
-          case scala.util.control.NonFatal(e) =>
-            // a concurrent run won the first-use build race: the store
-            // is a deterministic function of the declared benchmark
-            // slice, so the winner's commit IS this run's store
-            if (!storeExists(spark)) throw e
+        mode match {
+          case "exact" => MediaDigestIndex.build(bench, idCol, binaryCol, path)
+          case "cdc" => MediaCdcIndex.build(bench, idCol, binaryCol, path,
+            window, minShared, maxBucket, zeros)
+          case _ => MediaSigIndex.build(bench, idCol, binaryCol, path,
+            blocks, minMatch, maxBucket)
         }
       }
       gate(df, idCol)
@@ -658,7 +589,7 @@ object CurationConfig {
   final case class SemanticGate(path: String, k: Int, tau: Double,
       nprobe: Int, tier: String = "float", pqM: Int = 16, pqK: Int = 16,
       pqResidual: Boolean = true, pqPermute: Boolean = false,
-      shortlist: Int = 64) extends Stage {
+      shortlist: Int = 64) extends Stage("semantic_gate") {
     private def pq: Boolean = tier == "pq"
     private def openValidated(spark: SparkSession): IvfStore = {
       val store = IvfStore.open(spark, path)
@@ -666,10 +597,8 @@ object CurationConfig {
       // `k` only parameterizes the CREATE-time training (stats.cells is
       // the LIVE cell count — Lloyd's may collapse empty cells below
       // the declared k); the gate's stored identity is (tau, nprobe)
-      require(st.gateTau == tau && st.gateNprobe == nprobe,
-        s"semantic_gate at $path was built with (tau=${st.gateTau}, " +
-          s"nprobe=${st.gateNprobe}); the config declares " +
-          s"(tau=$tau, nprobe=$nprobe)")
+      requireBuiltWith(name, path,
+        ("tau", st.gateTau, tau), ("nprobe", st.gateNprobe, nprobe))
       // a pq-tier gate against a store created without the code
       // relation must fail at OPEN with the config's vocabulary, not
       // at query time with the engine's
@@ -679,12 +608,8 @@ object CurationConfig {
       store
     }
     def apply(df: DataFrame, idCol: String, embCol: String,
-        runToken: Option[String]): DataFrame = {
-      val spark = df.sparkSession
-      val existing =
-        if (IvfStore.exists(spark, path)) Some(openValidated(spark))
-        else None
-      replayableRound(df, runToken, existing, () => openValidated(spark))(
+        runToken: Option[String]): DataFrame =
+      replayableRound(df, runToken, IvfStore.exists(_, path), openValidated)(
         (seeded, tok) =>
           IvfStore.create(seeded, idCol, embCol, path, k, iters = 2,
             gateTau = tau, gateNprobe = nprobe, seedToken = tok,
@@ -698,7 +623,6 @@ object CurationConfig {
           if (pq) store.gatePq(input, idCol, embCol, tau, nprobe, shortlist,
             tok)
           else store.gate(input, idCol, embCol, tok))
-    }
   }
 
   /** The stored-model fluency gate ([[NgramLmStore]]): round 1 seeds the
@@ -707,27 +631,22 @@ object CurationConfig {
     * counts back in — [[FluencyBand]]'s semantics with the per-call
     * retrain replaced by incremental model maintenance. */
   final case class LmGate(path: String, loMicro: Long,
-      hiMicro: Long) extends Stage {
+      hiMicro: Long) extends Stage("lm_gate") {
     private def openValidated(spark: SparkSession): NgramLmStore = {
       val store = NgramLmStore.open(spark, path)
       val st = store.stats
-      require(st.loMicro == loMicro && st.hiMicro == hiMicro,
-        s"lm_gate at $path was built with band [${st.loMicro}, " +
-          s"${st.hiMicro}]; the config declares [$loMicro, $hiMicro]")
+      requireBuiltWith(name, path,
+        ("loMicro", st.loMicro, loMicro), ("hiMicro", st.hiMicro, hiMicro))
       store
     }
     def apply(df: DataFrame, idCol: String, textCol: String,
-        runToken: Option[String]): DataFrame = {
-      val spark = df.sparkSession
-      val existing =
-        if (NgramLmStore.exists(spark, path)) Some(openValidated(spark))
-        else None
-      replayableRound(df, runToken, existing, () => openValidated(spark))(
+        runToken: Option[String]): DataFrame =
+      replayableRound(df, runToken, NgramLmStore.exists(_, path),
+        openValidated)(
         (seeded, tok) =>
           NgramLmStore.build(seeded, idCol, textCol, path,
             loMicro = loMicro, hiMicro = hiMicro, seedToken = tok))(
         (store, input, tok) => store.gate(input, idCol, textCol, tok))
-    }
   }
 
   /** The stored-statistics quality gate ([[graft.ext.QualityProbeStore]]):
@@ -738,21 +657,15 @@ object CurationConfig {
     * train→score→mean-gate with the per-call retrain replaced by
     * incremental statistics maintenance. No tunables: the threshold IS
     * the stored mean, derived from the moment table alone. */
-  final case class ProbeGate(path: String) extends Stage {
+  final case class ProbeGate(path: String) extends Stage("probe_gate") {
     def apply(df: DataFrame, idCol: String, textCol: String,
-        runToken: Option[String]): DataFrame = {
-      val spark = df.sparkSession
-      val existing =
-        if (QualityProbeStore.exists(spark, path))
-          Some(QualityProbeStore.open(spark, path))
-        else None
-      replayableRound(df, runToken, existing,
-        () => QualityProbeStore.open(spark, path))(
+        runToken: Option[String]): DataFrame =
+      replayableRound(df, runToken, QualityProbeStore.exists(_, path),
+        QualityProbeStore.open(_, path))(
         (seeded, tok) =>
           QualityProbeStore.create(seeded, idCol, textCol, path,
             seedToken = tok))(
         (store, input, tok) => store.gate(input, idCol, textCol, tok))
-    }
   }
 
   /** The curate-then-TOKENIZE terminal stage ([[graft.ext.BpeStore]]):
@@ -761,17 +674,17 @@ object CurationConfig {
     * runs tokenize against the COMMITTED vocabulary with no training at
     * all (vocabulary stability — the property a training pipeline
     * needs). Adds a `subtokens` column; id/text pass through. */
-  final case class BpeTokenize(path: String, numMerges: Int) extends Stage {
-    private def openValidated(spark: SparkSession): graft.ext.BpeStore = {
+  final case class BpeTokenize(path: String,
+      numMerges: Int) extends Stage("bpe_tokenize") {
+    private def openValidated(spark: SparkSession): BpeStore = {
       val st = BpeStore.open(spark, path)
       // a crashed create committed its seed word counts but died
       // before the initial retrain: run the missing retrain (same
       // model — training consumes only the committed counts) instead
       // of failing the budget check on a wedged layout
       if (!st.hasModel) st.retrain(numMerges)
-      require(st.stats.mergeBudget == numMerges,
-        s"bpe_tokenize at $path was trained with numMerges=" +
-          s"${st.stats.mergeBudget}; the config declares $numMerges")
+      requireBuiltWith(name, path,
+        ("numMerges", st.stats.mergeBudget, numMerges))
       st
     }
     def apply(df: DataFrame, idCol: String, textCol: String,
@@ -825,7 +738,7 @@ object CurationConfig {
     * row set. */
   final case class ShardWrite(path: String, capacity: Long, units: String,
       epoch: Int, streams: Int,
-      binaryCol: Option[String] = None) extends Stage {
+      binaryCol: Option[String] = None) extends Stage("shard_write") {
     def apply(df: DataFrame, idCol: String, textCol: String,
         runToken: Option[String]): DataFrame = {
       val staged = df.localCheckpoint(true)
@@ -854,7 +767,7 @@ object CurationConfig {
     * replayed run re-checks the advisory, and a refit RESETS the drift
     * baseline, so the rerun no-ops instead of retraining twice. */
   final case class IvfMaintain(path: String, k: Int, l1ThresholdPpm: Long,
-      vacuum: Boolean, permute: String = "keep") extends Stage {
+      vacuum: Boolean, permute: String = "keep") extends Stage("ivf_maintain") {
     def apply(df: DataFrame, idCol: String, textCol: String,
         runToken: Option[String]): DataFrame = {
       val spark = df.sparkSession
@@ -889,36 +802,16 @@ object CurationConfig {
     * eight compacting stores, the quality-probe and strata-count stores
     * included. Rows pass through untouched; naturally idempotent (an
     * already-vacuumed layout has nothing eligible). */
-  final case class StoreVacuum(kind: String, path: String) extends Stage {
+  final case class StoreVacuum(kind: String,
+      path: String) extends Stage("store_vacuum") {
     def apply(df: DataFrame, idCol: String, textCol: String,
         runToken: Option[String]): DataFrame = {
       val spark = df.sparkSession
-      def need(ok: Boolean): Unit = require(ok,
+      val store = storeKinds.getOrElse(kind, throw new IllegalArgumentException(
+        s"store_vacuum: unknown kind '$kind'"))
+      require(store.probe.exists(spark, path),
         s"store_vacuum at $path: no committed '$kind' store")
-      kind match {
-        case "substr" => need(SubstrIndex.exists(spark, path))
-          SubstrIndex.open(spark, path).vacuum()
-        case "neardup" => need(NearDupIndex.exists(spark, path))
-          NearDupIndex.open(spark, path).vacuum()
-        case "lm" => need(NgramLmStore.exists(spark, path))
-          NgramLmStore.open(spark, path).vacuum()
-        case "bm25" => need(graft.ext.Bm25Store.exists(spark, path))
-          graft.ext.Bm25Store.open(spark, path).vacuum()
-        case "bpe" => need(BpeStore.exists(spark, path))
-          BpeStore.open(spark, path).vacuum()
-        case "ivf" => need(IvfStore.exists(spark, path))
-          IvfStore.open(spark, path).vacuum()
-        case "probe" => need(QualityProbeStore.exists(spark, path))
-          QualityProbeStore.open(spark, path).vacuum()
-        case "strata" => need(StrataCountStore.exists(spark, path))
-          StrataCountStore.open(spark, path).vacuum()
-        case "mediadigest" => need(MediaDigestIndex.exists(spark, path))
-          MediaDigestIndex.open(spark, path).vacuum()
-        case "mediasig" => need(graft.ext.MediaSigIndex.exists(spark, path))
-          graft.ext.MediaSigIndex.open(spark, path).vacuum()
-        case "mediacdc" => need(graft.ext.MediaCdcIndex.exists(spark, path))
-          graft.ext.MediaCdcIndex.open(spark, path).vacuum()
-      }
+      store.open(spark, path).vacuum()
       df
     }
   }
@@ -937,15 +830,11 @@ object CurationConfig {
     * reruns of the same batch always return the same survivors. */
   final case class DecontamGate(path: String, k: Int,
       benchmarkTable: String, benchmarkWhere: String,
-      maxDupWindows: Long) extends Stage {
+      maxDupWindows: Long) extends Stage("decontam_gate") {
     private def gate(df: DataFrame, idCol: String,
-        textCol: String): DataFrame = {
-      val idx = SubstrIndex.open(df.sparkSession, path)
-      require(idx.stats.k == k,
-        s"decontam_gate at $path was built with k=${idx.stats.k}; " +
-          s"the config declares k=$k")
-      idx.keepFresh(df, idCol, textCol, maxDupWindows, excludeToken = None)
-    }
+        textCol: String): DataFrame =
+      openSubstr(name, path, k)(df.sparkSession)
+        .keepFresh(df, idCol, textCol, maxDupWindows, excludeToken = None)
 
     def apply(df: DataFrame, idCol: String, textCol: String,
         runToken: Option[String]): DataFrame = {
@@ -958,49 +847,31 @@ object CurationConfig {
 
     override def applyIn(dir: String)(df: DataFrame, idCol: String,
         textCol: String, runToken: Option[String]): DataFrame = {
-      val spark = df.sparkSession
-      if (!SubstrIndex.exists(spark, path)) {
-        val bench = spark.read.parquet(s"$dir/$benchmarkTable.parquet")
-          .filter(expr(benchmarkWhere))
-        try SubstrIndex.build(bench, idCol, textCol, path, k)
-        catch {
-          case scala.util.control.NonFatal(e) =>
-            // a concurrent run won the first-use build race: the index is
-            // a deterministic function of the declared benchmark slice,
-            // so the winner's commit IS this run's index — gate against
-            // it; a failure with no committed index underneath propagates
-            if (!SubstrIndex.exists(spark, path)) throw e
-        }
-      }
+      buildFrozenIfAbsent(df.sparkSession, dir, benchmarkTable,
+        benchmarkWhere, SubstrIndex.exists(_, path))(
+        SubstrIndex.build(_, idCol, textCol, path, k))
       gate(df, idCol, textCol)
     }
   }
 
   final case class NearDupGate(path: String, numHashes: Int, bands: Int,
-      maxBucket: Int, threshold: Double) extends Stage {
+      maxBucket: Int, threshold: Double) extends Stage("neardup_gate") {
     private def openValidated(spark: SparkSession): NearDupIndex = {
       val idx = NearDupIndex.open(spark, path)
       val st = idx.stats
-      require(st.numHashes == numHashes && st.bands == bands &&
-        st.maxBucket == maxBucket,
-        s"neardup_gate at $path was built with (numHashes=${st.numHashes}, " +
-          s"bands=${st.bands}, maxBucket=${st.maxBucket}); the config " +
-          s"declares ($numHashes, $bands, $maxBucket)")
+      requireBuiltWith(name, path, ("numHashes", st.numHashes, numHashes),
+        ("bands", st.bands, bands), ("maxBucket", st.maxBucket, maxBucket))
       idx
     }
     def apply(df: DataFrame, idCol: String, textCol: String,
-        runToken: Option[String]): DataFrame = {
-      val spark = df.sparkSession
-      val existing =
-        if (NearDupIndex.exists(spark, path)) Some(openValidated(spark))
-        else None
-      replayableRound(df, runToken, existing, () => openValidated(spark))(
+        runToken: Option[String]): DataFrame =
+      replayableRound(df, runToken, NearDupIndex.exists(_, path),
+        openValidated)(
         (seeded, tok) =>
           NearDupIndex.build(seeded, idCol, textCol, path, numHashes, bands,
             maxBucket, seedToken = tok))(
         (idx, input, tok) =>
           idx.gate(input, idCol, textCol, tok, threshold))
-    }
   }
 
   /** Materialize `df` unless it already IS a materialized checkpoint: its
@@ -1034,15 +905,18 @@ object CurationConfig {
     * gate+append exactly once under the run's stage token. The gate
     * answer carries its materialized survivors and their features
     * ([[graft.ext.IngestIndex]]), so the append derives nothing again and
-    * the round adds no checkpoint of its own. With `runToken = None`
-    * every branch degenerates to the plain non-replayable round (gate
-    * over the full store, unconditional append) — the semantics of a run
-    * nobody named. */
-  private def replayableRound[I <: graft.ext.IngestIndex](df: DataFrame,
-      runToken: Option[String], existing: Option[I], reopen: () => I)(
+    * the round adds no checkpoint of its own. `exists` and `open` are the
+    * store's probe and its open, which checks the stored parameters
+    * against the declared ones. With `runToken = None` every branch
+    * degenerates to the plain non-replayable round (gate over the full
+    * store, unconditional append) — the semantics of a run nobody named. */
+  private def replayableRound[I <: IngestIndex](df: DataFrame,
+      runToken: Option[String], exists: SparkSession => Boolean,
+      open: SparkSession => I)(
       seed: (DataFrame, Option[String]) => Unit)(
-      gate: (I, DataFrame, Option[String]) => graft.ext.IngestIndex.Gated)
+      gate: (I, DataFrame, Option[String]) => IngestIndex.Gated)
       : DataFrame = {
+    val spark = df.sparkSession
     def gateRound(idx: I, input: DataFrame): DataFrame =
       if (runToken.exists(idx.seededBy)) input
       else {
@@ -1050,62 +924,115 @@ object CurationConfig {
         idx.append(gated, runToken)
         gated.kept
       }
-    existing match {
-      case None =>
-        val seeded = materialized(df)
-        try { seed(seeded, runToken); seeded }
-        catch {
-          case scala.util.control.NonFatal(e) =>
-            // The seed refused (or timed out on the writer lock) and a
-            // COMMITTED store is now visible at the path: this run LOST a
-            // concurrent create race (two pipeline runs bootstrapping the
-            // same store), so fall through to the gate round against the
-            // winner's store — the result lock-serialized runs would have
-            // produced. `reopen` re-validates the config's parameters; a
-            // seed failure with no committed store underneath (degenerate
-            // corpus, bad parameters, IO) propagates unchanged. If THIS
-            // run's own seed committed before failing (post-commit stats
-            // write), the token check recognizes it as the seed round.
-            scala.util.Try(reopen()).toOption match {
-              case Some(idx) => gateRound(idx, seeded)
-              case None => throw e
-            }
-        }
-      case Some(idx) => gateRound(idx, df)
+    if (exists(spark)) gateRound(open(spark), df)
+    else {
+      val seeded = materialized(df)
+      try { seed(seeded, runToken); seeded }
+      catch {
+        case scala.util.control.NonFatal(e) =>
+          // The seed refused (or timed out on the writer lock) and a
+          // COMMITTED store is now visible at the path: this run LOST a
+          // concurrent create race (two pipeline runs bootstrapping the
+          // same store), so fall through to the gate round against the
+          // winner's store — the result lock-serialized runs would have
+          // produced. `open` re-validates the config's parameters; a
+          // seed failure with no committed store underneath (degenerate
+          // corpus, bad parameters, IO) propagates unchanged. If THIS
+          // run's own seed committed before failing (post-commit stats
+          // write), the token check recognizes it as the seed round.
+          scala.util.Try(open(spark)).toOption match {
+            case Some(idx) => gateRound(idx, seeded)
+            case None => throw e
+          }
+      }
     }
   }
 
-  /** The config name of a stage — the string [[parse]] accepted for it
-    * (stable across refactors: it is the pipeline's own vocabulary, so
-    * audit rows and error messages speak the language of the config). */
-  private[graft] def stageName(st: Stage): String = st match {
-    case ExactDedup => "exact_dedup"
-    case _: QualityGate => "quality_gate"
-    case _: FluencyBand => "fluency_band"
-    case _: TokenBudget => "token_budget"
-    case _: TemperatureMix => "temperature_mix"
-    case _: MixGate => "mix_gate"
-    case _: LangGate => "lang_gate"
-    case _: MediaGate => "media_gate"
-    case _: MediaDedupStage => "media_dedup"
-    case _: MediaDigestGate => "media_digest_gate"
-    case _: MediaSigGate => "media_sig_gate"
-    case _: MediaCdcGate => "media_cdc_gate"
-    case _: MediaDecontamGate => "media_decontam_gate"
-    case _: RepeatEpochs => "repeat_epochs"
-    case _: RepeatEpochsByStrata => "repeat_epochs"
-    case _: WhereExpr => "where"
-    case _: SubstrGate => "substr_gate"
-    case _: DecontamGate => "decontam_gate"
-    case _: NearDupGate => "neardup_gate"
-    case _: SemanticGate => "semantic_gate"
-    case _: IvfMaintain => "ivf_maintain"
-    case _: StoreVacuum => "store_vacuum"
-    case _: LmGate => "lm_gate"
-    case _: ProbeGate => "probe_gate"
-    case _: BpeTokenize => "bpe_tokenize"
-    case _: ShardWrite => "shard_write"
+  /** Refuse, naming the stage, a store whose stored parameters differ
+    * from the declared ones: each `(name, stored, declared)` must agree. */
+  private def requireBuiltWith(stage: String, path: String,
+      params: (String, Any, Any)*): Unit = {
+    def show(pick: ((String, Any, Any)) => Any): String = {
+      val kv = params.map(p => s"${p._1}=${pick(p)}")
+      if (kv.size == 1) kv.head else kv.mkString("(", ", ", ")")
+    }
+    require(params.forall(p => p._2 == p._3),
+      s"$stage at $path was built with ${show(_._2)}; the config declares " +
+        show(_._3))
   }
+
+  /** The [[SubstrIndex]] at `path`, refused if built with another `k`. */
+  private def openSubstr(stage: String, path: String, k: Int)(
+      spark: SparkSession): SubstrIndex = {
+    val idx = SubstrIndex.open(spark, path)
+    requireBuiltWith(stage, path, ("k", idx.stats.k, k))
+    idx
+  }
+
+  /** The [[MediaSigIndex]] at `path`, refused if built with other
+    * blocked-signature parameters. */
+  private def openSig(stage: String, path: String, blocks: Int,
+      minMatch: Int, maxBucket: Int)(spark: SparkSession): MediaSigIndex = {
+    val idx = MediaSigIndex.open(spark, path)
+    val st = idx.stats
+    requireBuiltWith(stage, path, ("blocks", st.blocks, blocks),
+      ("minMatch", st.minMatch, minMatch),
+      ("maxBucket", st.maxBucket, maxBucket))
+    idx
+  }
+
+  /** The [[MediaCdcIndex]] at `path`, refused if built with other chunk
+    * parameters. */
+  private def openCdc(stage: String, path: String, window: Int,
+      minShared: Int, maxBucket: Int, zeros: Int)(
+      spark: SparkSession): MediaCdcIndex = {
+    val idx = MediaCdcIndex.open(spark, path)
+    val st = idx.stats
+    requireBuiltWith(stage, path, ("window", st.window, window),
+      ("minShared", st.minShared, minShared),
+      ("maxBucket", st.maxBucket, maxBucket), ("zeros", st.zeros, zeros))
+    idx
+  }
+
+  /** Build a gate-only stage's FROZEN reference store on first use, from
+    * the declared benchmark slice in the run's data directory (never from
+    * the batch). A concurrent run may win the first-use build race: the
+    * store is a deterministic function of the slice, so the winner's
+    * commit IS this run's store; a failure with no committed store
+    * underneath propagates. */
+  private def buildFrozenIfAbsent(spark: SparkSession, dir: String,
+      table: String, where: String, exists: SparkSession => Boolean)(
+      build: DataFrame => Any): Unit =
+    if (!exists(spark)) {
+      val bench = spark.read.parquet(s"$dir/$table.parquet").filter(expr(where))
+      try { build(bench); () }
+      catch {
+        case scala.util.control.NonFatal(e) => if (!exists(spark)) throw e
+      }
+    }
+
+  /** A persisted store kind [[StoreVacuum]] declares: its companion's
+    * probe and `open`. */
+  private final case class StoreKind(probe: StoreProbe,
+      open: (SparkSession, String) => LoggedStore)
+
+  /** Every store layout by its `store_vacuum` kind name. */
+  private val storeKinds: Map[String, StoreKind] = Map(
+    "substr" -> StoreKind(SubstrIndex, SubstrIndex.open),
+    "neardup" -> StoreKind(NearDupIndex, NearDupIndex.open),
+    "lm" -> StoreKind(NgramLmStore, NgramLmStore.open),
+    "bm25" -> StoreKind(graft.ext.Bm25Store, graft.ext.Bm25Store.open),
+    "bpe" -> StoreKind(BpeStore, BpeStore.open),
+    "ivf" -> StoreKind(IvfStore, IvfStore.open),
+    "probe" -> StoreKind(QualityProbeStore, QualityProbeStore.open),
+    "strata" -> StoreKind(StrataCountStore, StrataCountStore.open),
+    "mediadigest" -> StoreKind(MediaDigestIndex, MediaDigestIndex.open),
+    "mediasig" -> StoreKind(MediaSigIndex, MediaSigIndex.open),
+    "mediacdc" -> StoreKind(MediaCdcIndex, MediaCdcIndex.open))
+
+  /** The config name of a stage ([[Stage.name]]) — the `stage` column
+    * of [[PipelineDef.runAudited]]. */
+  private[graft] def stageName(st: Stage): String = st.name
 
   final case class PipelineDef(table: String, idCol: String, textCol: String,
       stages: List[Stage]) {
@@ -1214,531 +1141,333 @@ object CurationConfig {
       case JString(n) => n
       case _ => fail(s"every stage needs a 'stage' name: ${JsonMethods.compact(j)}")
     }
-    def long(field: String): Option[Long] = j \ field match {
-      case JInt(i) => Some(i.toLong)
-      case JLong(l) => Some(l)
-      case JNothing => None
-      case other => fail(s"stage '$name': '$field' must be an integer, got $other")
-    }
-    name match {
-      case "exact_dedup" => ExactDedup
-      case "quality_gate" =>
-        val min = long("minTokens").getOrElse(
-          fail(s"stage 'quality_gate' needs 'minTokens'"))
-        if (min < 0) fail(s"stage 'quality_gate': minTokens must be >= 0, got $min")
-        val max = long("maxTokens")
-        max.filter(_ < min).foreach(mx =>
-          fail(s"stage 'quality_gate': maxTokens ($mx) < minTokens ($min)"))
-        QualityGate(min, max)
-      case "fluency_band" =>
-        val lo = long("loMicro").getOrElse(fail("stage 'fluency_band' needs 'loMicro'"))
-        val hi = long("hiMicro").getOrElse(fail("stage 'fluency_band' needs 'hiMicro'"))
-        if (lo > hi) fail(s"stage 'fluency_band': loMicro ($lo) > hiMicro ($hi)")
-        FluencyBand(lo, hi)
-      case "token_budget" =>
-        val strata = j \ "strata" match {
-          case JString(s) => s
-          case _ => fail("stage 'token_budget' needs a 'strata' column name")
-        }
-        val budgets = j \ "budgets" match {
-          case JObject(fields) if fields.nonEmpty => fields.map {
-            case (k, JInt(v)) if v >= 0 => k -> v.toLong
-            case (k, JLong(v)) if v >= 0 => k -> v
-            case (k, other) => fail(s"stage 'token_budget': budget '$k' " +
-              s"must be a non-negative integer, got $other")
-          }.toMap
-          case _ => fail("stage 'token_budget' needs a non-empty 'budgets' object")
-        }
-        TokenBudget(strata, budgets)
-      case "lang_gate" =>
-        val keep = j \ "keep" match {
-          case JArray(vs) if vs.nonEmpty => vs.map {
-            case JString(c) if c.trim.nonEmpty => c
-            case other => fail("stage 'lang_gate': 'keep' entries must be " +
-              s"non-empty language codes, got $other")
-          }.toSet
-          case _ => fail("stage 'lang_gate' needs a non-empty 'keep' array " +
-            "of language codes")
-        }
-        LangGate(keep)
-      case "media_gate" =>
-        val kinds = Set("image", "audio", "video")
-        val kind = j \ "kind" match {
-          case JString(k) if kinds(k) => k
-          case JString(k) => fail(s"stage 'media_gate': unknown kind " +
-            s"'$k' (image | audio | video)")
-          case _ => fail("stage 'media_gate' needs a 'kind' string " +
-            "(image | audio | video)")
-        }
-        val binary = j \ "binary" match {
-          case JString(b) if b.trim.nonEmpty => b
-          case _ => fail("stage 'media_gate' needs a non-empty 'binary' " +
-            "column name (the payload bytes the header kernel parses)")
-        }
-        def band(loKey: String, hiKey: String): (Long, Long) = {
-          val lo = long(loKey).getOrElse(0L)
-          val hi = long(hiKey).getOrElse(Long.MaxValue)
-          if (lo < 0) fail(s"stage 'media_gate': $loKey must be >= 0, got $lo")
-          if (hi < lo) fail(s"stage 'media_gate': $hiKey ($hi) < $loKey ($lo)")
-          (lo, hi)
-        }
-        kind match {
-          case "image" =>
-            val (loW, hiW) = band("minWidth", "maxWidth")
-            val (loH, hiH) = band("minHeight", "maxHeight")
-            MediaGate("image", binary, loW, hiW, loH, hiH)
-          case "audio" =>
-            val (loR, hiR) = band("minRate", "maxRate")
-            MediaGate("audio", binary, loR, hiR, 0L, Long.MaxValue)
-          case _ =>
-            val (loS, hiS) = band("minSecMicro", "maxSecMicro")
-            MediaGate("video", binary, loS, hiS, 0L, Long.MaxValue)
-        }
-      case "media_dedup" =>
-        val binary = j \ "binary" match {
-          case JString(b) if b.trim.nonEmpty => b
-          case _ => fail("stage 'media_dedup' needs a non-empty 'binary' " +
-            "column name (the payload bytes the dedup keys on)")
-        }
-        val mode = j \ "mode" match {
-          case JString(m) if m == "exact" || m == "near" || m == "cdc" => m
-          case JString(m) => fail(s"stage 'media_dedup': unknown mode " +
-            s"'$m' (exact | near | cdc)")
-          case JNothing => "exact"
-          case _ => fail("stage 'media_dedup' 'mode' must be a string " +
-            "(exact | near | cdc)")
-        }
-        val blocks = long("blocks").getOrElse(8L)
-        if (blocks < 2 || blocks > 256)
-          fail(s"stage 'media_dedup': blocks must be in [2, 256], got $blocks")
-        val minMatch = long("minMatch").getOrElse(blocks * 3 / 4)
-        if (minMatch < 1 || minMatch > blocks)
-          fail(s"stage 'media_dedup': minMatch must be in [1, blocks=" +
-            s"$blocks], got $minMatch")
-        val maxBucket = long("maxBucket").getOrElse(100L)
-        if (maxBucket < 2)
-          fail(s"stage 'media_dedup': maxBucket must be >= 2, got $maxBucket")
-        val window = long("window").getOrElse(4L)
-        if (window < 1 || window > 64)
-          fail(s"stage 'media_dedup': window must be in [1, 64], " +
-            s"got $window")
-        val minShared = long("minShared").getOrElse(3L)
-        if (minShared < 1)
-          fail(s"stage 'media_dedup': minShared must be >= 1, " +
-            s"got $minShared")
-        val mzeros = long("zeros").getOrElse(1L)
-        if (mzeros < 1 || mzeros > 8)
-          fail(s"stage 'media_dedup': zeros must be in [1, 8], " +
-            s"got $mzeros")
-        MediaDedupStage(mode, binary, blocks.toInt, minMatch.toInt,
-          maxBucket.toInt, window.toInt, minShared.toInt, mzeros.toInt)
-      case "media_digest_gate" =>
-        val path = j \ "path" match {
-          case JString(p) if p.trim.nonEmpty => p
-          case _ => fail("stage 'media_digest_gate' needs a non-empty " +
-            "'path' string (the stored digest index location)")
-        }
-        val binary = j \ "binary" match {
-          case JString(b) if b.trim.nonEmpty => b
-          case _ => fail("stage 'media_digest_gate' needs a non-empty " +
-            "'binary' column name (the payload bytes the gate keys on)")
-        }
-        MediaDigestGate(path, binary)
-      case "media_sig_gate" =>
-        val path = j \ "path" match {
-          case JString(p) if p.trim.nonEmpty => p
-          case _ => fail("stage 'media_sig_gate' needs a non-empty " +
-            "'path' string (the stored signature index location)")
-        }
-        val binary = j \ "binary" match {
-          case JString(b) if b.trim.nonEmpty => b
-          case _ => fail("stage 'media_sig_gate' needs a non-empty " +
-            "'binary' column name (the payload bytes the gate keys on)")
-        }
-        val blocks = long("blocks").getOrElse(8L)
-        if (blocks < 2 || blocks > 256)
-          fail(s"stage 'media_sig_gate': blocks must be in [2, 256], " +
-            s"got $blocks")
-        val minMatch = long("minMatch").getOrElse(blocks * 3 / 4)
-        if (minMatch < 1 || minMatch > blocks)
-          fail(s"stage 'media_sig_gate': minMatch must be in [1, " +
-            s"blocks=$blocks], got $minMatch")
-        val maxBucket = long("maxBucket").getOrElse(100L)
-        if (maxBucket < 2)
-          fail(s"stage 'media_sig_gate': maxBucket must be >= 2, " +
-            s"got $maxBucket")
-        MediaSigGate(path, binary, blocks.toInt, minMatch.toInt,
-          maxBucket.toInt)
-      case "media_cdc_gate" =>
-        val path = j \ "path" match {
-          case JString(p) if p.trim.nonEmpty => p
-          case _ => fail("stage 'media_cdc_gate' needs a non-empty " +
-            "'path' string (the stored chunk index location)")
-        }
-        val binary = j \ "binary" match {
-          case JString(b) if b.trim.nonEmpty => b
-          case _ => fail("stage 'media_cdc_gate' needs a non-empty " +
-            "'binary' column name (the payload bytes the gate keys on)")
-        }
-        val window = long("window").getOrElse(4L)
-        if (window < 1 || window > 64)
-          fail(s"stage 'media_cdc_gate': window must be in [1, 64], " +
-            s"got $window")
-        val minShared = long("minShared").getOrElse(3L)
-        if (minShared < 1)
-          fail(s"stage 'media_cdc_gate': minShared must be >= 1, " +
-            s"got $minShared")
-        val maxBucket = long("maxBucket").getOrElse(100L)
-        if (maxBucket < 2)
-          fail(s"stage 'media_cdc_gate': maxBucket must be >= 2, " +
-            s"got $maxBucket")
-        val zeros = long("zeros").getOrElse(1L)
-        if (zeros < 1 || zeros > 8)
-          fail(s"stage 'media_cdc_gate': zeros must be in [1, 8], " +
-            s"got $zeros")
-        MediaCdcGate(path, binary, window.toInt, minShared.toInt,
-          maxBucket.toInt, zeros.toInt)
-      case "media_decontam_gate" =>
-        val path = j \ "path" match {
-          case JString(p) if p.trim.nonEmpty => p
-          case _ => fail("stage 'media_decontam_gate' needs a non-empty " +
-            "'path' string (the frozen benchmark store location)")
-        }
-        val mode = j \ "mode" match {
-          case JString("exact") => "exact"
-          case JString("near") => "near"
-          case JString("cdc") => "cdc"
-          case JNothing => "exact"
-          case JString(m) => fail("stage 'media_decontam_gate': unknown " +
-            s"mode '$m' (exact | near | cdc)")
-          case _ => fail("stage 'media_decontam_gate' 'mode' must be a " +
-            "string (exact | near | cdc)")
-        }
-        val binary = j \ "binary" match {
-          case JString(b) if b.trim.nonEmpty => b
-          case _ => fail("stage 'media_decontam_gate' needs a non-empty " +
-            "'binary' column name (the payload bytes the gate keys on)")
-        }
-        val bt = j \ "benchmarkTable" match {
-          case JString(t) if t.trim.nonEmpty => t
-          case _ => fail("stage 'media_decontam_gate' needs a non-empty " +
-            "'benchmarkTable' string (the evaluation corpus it guards " +
-            "against)")
-        }
-        val bw = j \ "benchmarkWhere" match {
-          case JString(w) if w.trim.nonEmpty => w
-          case JNothing => "TRUE"
-          case other => fail("stage 'media_decontam_gate': " +
-            s"'benchmarkWhere' must be a non-empty string, got $other")
-        }
-        val blocks = long("blocks").getOrElse(8L)
-        if (blocks < 2 || blocks > 256)
-          fail(s"stage 'media_decontam_gate': blocks must be in " +
-            s"[2, 256], got $blocks")
-        val minMatch = long("minMatch").getOrElse(blocks * 3 / 4)
-        if (minMatch < 1 || minMatch > blocks)
-          fail(s"stage 'media_decontam_gate': minMatch must be in [1, " +
-            s"blocks=$blocks], got $minMatch")
-        val maxBucket = long("maxBucket").getOrElse(100L)
-        if (maxBucket < 2)
-          fail(s"stage 'media_decontam_gate': maxBucket must be >= 2, " +
-            s"got $maxBucket")
-        val window = long("window").getOrElse(4L)
-        if (window < 1 || window > 64)
-          fail(s"stage 'media_decontam_gate': window must be in " +
-            s"[1, 64], got $window")
-        val minShared = long("minShared").getOrElse(3L)
-        if (minShared < 1)
-          fail(s"stage 'media_decontam_gate': minShared must be >= 1, " +
-            s"got $minShared")
-        val dzeros = long("zeros").getOrElse(1L)
-        if (dzeros < 1 || dzeros > 8)
-          fail(s"stage 'media_decontam_gate': zeros must be in [1, 8], " +
-            s"got $dzeros")
-        MediaDecontamGate(path, mode, binary, bt, bw, blocks.toInt,
-          minMatch.toInt, maxBucket.toInt, window.toInt, minShared.toInt,
-          dzeros.toInt)
-      case "temperature_mix" =>
-        val strata = j \ "strata" match {
-          case JString(s) => s
-          case _ => fail("stage 'temperature_mix' needs a 'strata' column name")
-        }
-        val target = long("targetDocs").getOrElse(
-          fail("stage 'temperature_mix' needs 'targetDocs'"))
-        if (target < 0)
-          fail(s"stage 'temperature_mix': targetDocs must be >= 0, got $target")
-        TemperatureMix(strata, target)
-      case "mix_gate" =>
-        val path = j \ "path" match {
-          case JString(p) if p.trim.nonEmpty => p
-          case _ => fail("stage 'mix_gate' needs a non-empty 'path' string")
-        }
-        val strata = j \ "strata" match {
-          case JString(s) => s
-          case _ => fail("stage 'mix_gate' needs a 'strata' column name")
-        }
-        val target = long("targetDocs").getOrElse(
-          fail("stage 'mix_gate' needs 'targetDocs'"))
-        if (target < 0)
-          fail(s"stage 'mix_gate': targetDocs must be >= 0, got $target")
-        MixGate(path, strata, target)
-      case "repeat_epochs" =>
-        def num(v: JValue): Option[Double] = v match {
-          case JDouble(d) => Some(d)
-          case JInt(i) => Some(i.toDouble)
-          case JLong(l) => Some(l.toDouble)
-          case JDecimal(d) => Some(d.toDouble)
-          case _ => None
-        }
-        (j \ "factors", j \ "strata") match {
-          case (JObject(fields), JString(strata)) if fields.nonEmpty =>
-            // the per-dataset epoch table form (LLaMA recipe)
-            val fs = fields.map { case (k, v) =>
-              val d = num(v).getOrElse(fail("stage 'repeat_epochs': factor " +
-                s"for '$k' must be numeric, got $v"))
-              if (d <= 0) fail("stage 'repeat_epochs': factor for " +
-                s"'$k' must be > 0, got $d")
-              k -> d
-            }.toMap
-            RepeatEpochsByStrata(strata, fs)
-          case (JObject(_), _) =>
-            fail("stage 'repeat_epochs': 'factors' needs a 'strata' column " +
-              "name (and a non-empty factors object)")
-          case (JNothing, _) =>
-            val f = num(j \ "factor").getOrElse(
-              fail("stage 'repeat_epochs' needs a numeric 'factor' (or a " +
-                "'strata' + 'factors' table)"))
-            if (f <= 0)
-              fail(s"stage 'repeat_epochs': factor must be > 0, got $f")
-            RepeatEpochs(f)
-          case (other, _) =>
-            fail(s"stage 'repeat_epochs': 'factors' must be an object, got $other")
-        }
-      case "where" =>
-        j \ "expr" match {
-          case JString(e) if e.trim.nonEmpty => WhereExpr(e)
-          case _ => fail("stage 'where' needs a non-empty 'expr' string")
-        }
-      case "substr_gate" =>
-        val path = j \ "path" match {
-          case JString(p) if p.trim.nonEmpty => p
-          case _ => fail("stage 'substr_gate' needs a non-empty 'path' string")
-        }
-        val k = long("k").getOrElse(fail("stage 'substr_gate' needs 'k'"))
-        if (k < 2) fail(s"stage 'substr_gate': k must be >= 2, got $k")
-        val maxDup = long("maxDupWindows").getOrElse(0L)
-        if (maxDup < 0)
-          fail(s"stage 'substr_gate': maxDupWindows must be >= 0, got $maxDup")
-        SubstrGate(path, k.toInt, maxDup)
-      case "decontam_gate" =>
-        val path = j \ "path" match {
-          case JString(p) if p.trim.nonEmpty => p
-          case _ => fail("stage 'decontam_gate' needs a non-empty 'path' string")
-        }
-        val k = long("k").getOrElse(fail("stage 'decontam_gate' needs 'k'"))
-        if (k < 2) fail(s"stage 'decontam_gate': k must be >= 2, got $k")
-        val bt = j \ "benchmarkTable" match {
-          case JString(t) if t.trim.nonEmpty => t
-          case _ =>
-            fail("stage 'decontam_gate' needs a non-empty 'benchmarkTable' " +
-              "string (the evaluation corpus it guards against)")
-        }
-        val bw = j \ "benchmarkWhere" match {
-          case JString(w) if w.trim.nonEmpty => w
-          case JNothing => "TRUE"
-          case other => fail("stage 'decontam_gate': 'benchmarkWhere' must " +
-            s"be a non-empty string, got $other")
-        }
-        val maxDup = long("maxDupWindows").getOrElse(0L)
-        if (maxDup < 0)
-          fail(s"stage 'decontam_gate': maxDupWindows must be >= 0, got $maxDup")
-        DecontamGate(path, k.toInt, bt, bw, maxDup)
-      case "neardup_gate" =>
-        val path = j \ "path" match {
-          case JString(p) if p.trim.nonEmpty => p
-          case _ => fail("stage 'neardup_gate' needs a non-empty 'path' string")
-        }
-        val numHashes = long("numHashes").getOrElse(16L).toInt
-        val bands = long("bands").getOrElse(4L).toInt
-        if (bands < 1 || numHashes < 1 || numHashes % bands != 0)
-          fail(s"stage 'neardup_gate': numHashes ($numHashes) must be a " +
-            s"positive multiple of bands ($bands)")
-        val maxBucket = long("maxBucket").getOrElse(100L).toInt
-        if (maxBucket < 1)
-          fail(s"stage 'neardup_gate': maxBucket must be >= 1, got $maxBucket")
-        val threshold = j \ "threshold" match {
-          case JDouble(d) => d
-          case JDecimal(d) => d.toDouble
-          case JNothing => 0.8
-          case other =>
-            fail(s"stage 'neardup_gate': 'threshold' must be a number, got $other")
-        }
-        if (threshold <= 0.0 || threshold >= 1.0)
-          fail(s"stage 'neardup_gate': threshold must be in (0, 1), got $threshold")
-        NearDupGate(path, numHashes, bands, maxBucket, threshold)
-      case "semantic_gate" =>
-        val path = j \ "path" match {
-          case JString(p) if p.trim.nonEmpty => p
-          case _ => fail("stage 'semantic_gate' needs a non-empty 'path' string")
-        }
-        val k = long("k").getOrElse(fail("stage 'semantic_gate' needs 'k'"))
-        if (k < 1) fail(s"stage 'semantic_gate': k must be >= 1, got $k")
-        val tau = j \ "tau" match {
-          case JDouble(d) => d
-          case JDecimal(d) => d.toDouble
-          case JNothing => 0.5
-          case other =>
-            fail(s"stage 'semantic_gate': 'tau' must be a number, got $other")
-        }
-        if (tau <= 0.0 || tau >= 1.0)
-          fail(s"stage 'semantic_gate': tau must be in (0, 1), got $tau")
-        val nprobe = long("nprobe").getOrElse(2L)
-        if (nprobe < 1)
-          fail(s"stage 'semantic_gate': nprobe must be >= 1, got $nprobe")
-        val tier = j \ "tier" match {
-          case JString(t) if t == "float" || t == "pq" => t
-          case JString(t) => fail(s"stage 'semantic_gate': unknown tier " +
-            s"'$t' (float | pq)")
-          case JNothing => "float"
-          case _ => fail("stage 'semantic_gate' 'tier' must be a string " +
-            "(float | pq)")
-        }
-        val pqM = long("pqM").getOrElse(16L)
-        if (pqM < 1) fail(s"stage 'semantic_gate': pqM must be >= 1, got $pqM")
-        val pqK = long("pqK").getOrElse(16L)
-        if (pqK < 1 || pqK > 128)
-          fail(s"stage 'semantic_gate': pqK must be in [1, 128], got $pqK")
-        val pqResidual = j \ "pqResidual" match {
-          case JBool(b) => b
-          case JNothing => true
-          case _ => fail("stage 'semantic_gate' 'pqResidual' must be a boolean")
-        }
-        val pqPermute = j \ "pqPermute" match {
-          case JBool(b) => b
-          case JNothing => false
-          case _ => fail("stage 'semantic_gate' 'pqPermute' must be a boolean")
-        }
-        val shortlist = long("shortlist").getOrElse(64L)
-        if (shortlist < 1)
-          fail(s"stage 'semantic_gate': shortlist must be >= 1, got $shortlist")
-        SemanticGate(path, k.toInt, tau, nprobe.toInt, tier, pqM.toInt,
-          pqK.toInt, pqResidual, pqPermute, shortlist.toInt)
-      case "store_vacuum" =>
-        val kinds =
-          Set("substr", "neardup", "lm", "bm25", "bpe", "ivf", "probe",
-            "strata", "mediadigest", "mediasig", "mediacdc")
-        val kind = j \ "kind" match {
-          case JString(k) if kinds(k) => k
-          case JString(k) => fail(s"stage 'store_vacuum': unknown kind " +
-            s"'$k' (${kinds.toSeq.sorted.mkString(" | ")})")
-          case _ => fail("stage 'store_vacuum' needs a 'kind' string " +
-            s"(${kinds.toSeq.sorted.mkString(" | ")})")
-        }
-        val path = j \ "path" match {
-          case JString(p) if p.trim.nonEmpty => p
-          case _ => fail("stage 'store_vacuum' needs a non-empty 'path' string")
-        }
-        StoreVacuum(kind, path)
-      case "ivf_maintain" =>
-        val path = j \ "path" match {
-          case JString(p) if p.trim.nonEmpty => p
-          case _ => fail("stage 'ivf_maintain' needs a non-empty 'path' string")
-        }
-        val k = long("k").getOrElse(fail("stage 'ivf_maintain' needs 'k' " +
-          "(the refit's training cell count)"))
-        if (k < 1) fail(s"stage 'ivf_maintain': k must be >= 1, got $k")
-        val thr = long("l1ThresholdPpm").getOrElse(500000L)
-        if (thr < 0)
-          fail(s"stage 'ivf_maintain': l1ThresholdPpm must be >= 0, got $thr")
-        val vac = j \ "vacuum" match {
-          case JBool(b) => b
-          case JNothing => true
-          case other =>
-            fail(s"stage 'ivf_maintain': 'vacuum' must be a boolean, got $other")
-        }
-        val perm = j \ "permute" match {
-          case JString("keep") => "keep"
-          case JString("auto") => "auto"
-          case JNothing => "keep"
-          case JString(m) => fail("stage 'ivf_maintain': unknown " +
-            s"permute mode '$m' (keep | auto)")
-          case other => fail("stage 'ivf_maintain': 'permute' must be " +
-            s"a string (keep | auto), got $other")
-        }
-        IvfMaintain(path, k.toInt, thr, vac, perm)
-      case "lm_gate" =>
-        val path = j \ "path" match {
-          case JString(p) if p.trim.nonEmpty => p
-          case _ => fail("stage 'lm_gate' needs a non-empty 'path' string")
-        }
-        val lo = long("loMicro").getOrElse(fail("stage 'lm_gate' needs 'loMicro'"))
-        if (lo < 0) fail(s"stage 'lm_gate': loMicro must be >= 0, got $lo")
-        val hi = long("hiMicro").getOrElse(Long.MaxValue)
-        if (hi < lo) fail(s"stage 'lm_gate': hiMicro ($hi) < loMicro ($lo)")
-        LmGate(path, lo, hi)
-      case "probe_gate" =>
-        val path = j \ "path" match {
-          case JString(p) if p.trim.nonEmpty => p
-          case _ => fail("stage 'probe_gate' needs a non-empty 'path' string")
-        }
-        ProbeGate(path)
-      case "bpe_tokenize" =>
-        val path = j \ "path" match {
-          case JString(p) if p.trim.nonEmpty => p
-          case _ => fail("stage 'bpe_tokenize' needs a non-empty 'path' string")
-        }
-        val n = long("numMerges")
-          .getOrElse(fail("stage 'bpe_tokenize' needs 'numMerges'"))
-        if (n < 1) fail(s"stage 'bpe_tokenize': numMerges must be >= 1, got $n")
-        BpeTokenize(path, n.toInt)
-      case "shard_write" =>
-        val path = j \ "path" match {
-          case JString(p) if p.trim.nonEmpty => p
-          case _ => fail("stage 'shard_write' needs a non-empty 'path' string")
-        }
-        val capacity = long("capacity")
-          .getOrElse(fail("stage 'shard_write' needs 'capacity'"))
-        if (capacity < 1)
-          fail(s"stage 'shard_write': capacity must be >= 1, got $capacity")
-        val units = j \ "units" match {
-          case JString(u)
-            if u == "chars" || u == "subtokens" || u == "bytes" => u
-          case JNothing => "chars"
-          case other => fail("stage 'shard_write': units must be 'chars', " +
-            s"'subtokens' or 'bytes', got $other")
-        }
-        val binary = j \ "binary" match {
-          case JString(b) if b.trim.nonEmpty => Some(b)
-          case JNothing => None
-          case other => fail("stage 'shard_write': 'binary' must be a " +
-            s"non-empty column name, got $other")
-        }
-        if (units == "bytes" && binary.isEmpty)
-          fail("stage 'shard_write': units 'bytes' needs 'binary' (the " +
-            "payload column octet_length measures)")
-        if (units != "bytes" && binary.nonEmpty)
-          fail("stage 'shard_write': 'binary' is only meaningful with " +
-            s"units 'bytes' (got units '$units')")
-        val epoch = long("epoch").getOrElse(1L)
-        if (epoch < 1 || epoch > Int.MaxValue)
-          fail(s"stage 'shard_write': epoch must be >= 1, got $epoch")
-        val streams = long("streams").getOrElse(16L)
-        if (streams != 1L && streams != 16L && streams != 256L)
-          fail("stage 'shard_write': streams must be 1, 16 or 256 " +
-            s"(hex-prefix parallelism), got $streams")
-        ShardWrite(path, capacity, units, epoch.toInt, streams.toInt,
-          binary)
-      case other =>
-        fail(s"unknown stage '$other' (exact_dedup | quality_gate | " +
-          "fluency_band | lang_gate | media_gate | media_dedup | " +
-          "media_digest_gate | media_sig_gate | media_cdc_gate | " +
-          "media_decontam_gate | token_budget | " +
-          "temperature_mix | mix_gate | repeat_epochs | where | " +
-          "substr_gate | decontam_gate | neardup_gate | semantic_gate | " +
-          "ivf_maintain | store_vacuum | lm_gate | probe_gate | " +
-          "bpe_tokenize | shard_write)")
-    }
+    val read = stageParsers.getOrElse(name, fail(s"unknown stage '$name' " +
+      stageParsers.keys.mkString("(", " | ", ")")))
+    read(new Fields(name, j))
   }
+
+  /** The typed readers over one stage's JSON object. Each reads and
+    * checks a field the same way for every stage, and every refusal names
+    * the stage and the field; an integer outside its range (one past
+    * `Long` included) is refused, never wrapped. */
+  private final class Fields(stage: String, j: JValue) {
+    def apply(field: String): JValue = j \ field
+
+    /** Refuse the stage's config. */
+    def fail(msg: String): Nothing =
+      CurationConfig.fail(s"stage '$stage': $msg")
+
+    /** Refuse the stage's config for a missing or ill-typed field. */
+    def needs(what: String): Nothing =
+      CurationConfig.fail(s"stage '$stage' needs $what")
+
+    /** A required non-empty string; `what` says what it names. */
+    def text(field: String, what: String = "string"): String = j \ field match {
+      case JString(s) if s.trim.nonEmpty => s
+      case _ => needs(s"a non-empty '$field' $what")
+    }
+
+    /** An optional non-empty string. */
+    def textOpt(field: String): Option[String] = j \ field match {
+      case JString(s) if s.trim.nonEmpty => Some(s)
+      case JNothing => None
+      case other => fail(s"'$field' must be a non-empty string, got $other")
+    }
+
+    /** The payload column of a binary-modality stage; `reader` says what
+      * reads it. */
+    def binary(reader: String = "the gate keys on"): String =
+      text("binary", s"column name (the payload bytes $reader)")
+
+    /** The strata column of a mixing or epoch stage (any string). */
+    def strata: String = j \ "strata" match {
+      case JString(s) => s
+      case _ => needs("a 'strata' column name")
+    }
+
+    /** The evaluation corpus a decontamination stage guards against. */
+    def benchmarkTable: String = text("benchmarkTable",
+      "string (the evaluation corpus it guards against)")
+
+    /** The benchmark slice's filter; all rows when absent. */
+    def benchmarkWhere: String = textOpt("benchmarkWhere").getOrElse("TRUE")
+
+    /** An optional integer in `[lo, hi]`. */
+    def longOpt(field: String, lo: Long = Long.MinValue,
+        hi: Long = Long.MaxValue): Option[Long] = {
+      val v = j \ field match {
+        case JInt(i) => Some(i)
+        case JLong(l) => Some(BigInt(l))
+        case JNothing => None
+        case other => fail(s"'$field' must be an integer, got $other")
+      }
+      v.foreach { i =>
+        if (i < lo) fail(s"$field must be >= $lo, got $i")
+        if (i > hi) fail(s"$field must be <= $hi, got $i")
+      }
+      v.map(_.toLong)
+    }
+
+    /** An integer in `[lo, hi]`; `default` when absent, required without
+      * one. */
+    def long(field: String, lo: Long = Long.MinValue,
+        hi: Long = Long.MaxValue, default: Option[Long] = None): Long =
+      longOpt(field, lo, hi).orElse(default).getOrElse(needs(s"'$field'"))
+
+    /** [[long]] for an `Int` parameter. */
+    def int(field: String, lo: Int = Int.MinValue, hi: Int = Int.MaxValue,
+        default: Option[Int] = None): Int =
+      long(field, lo.toLong, hi.toLong, default.map(_.toLong)).toInt
+
+    /** A number in the open interval `(lo, hi)`; `default` when absent,
+      * required without one. */
+    def number(field: String, lo: Double,
+        hi: Double = Double.PositiveInfinity,
+        default: Option[Double] = None): Double = {
+      def show(b: Double) = if (b == b.toLong) b.toLong.toString else s"$b"
+      val d = j \ field match {
+        case JNothing => default.getOrElse(needs(s"a numeric '$field'"))
+        case v => numeric(v).getOrElse(
+          fail(s"'$field' must be a number, got $v"))
+      }
+      if (d <= lo || (hi.isFinite && d >= hi))
+        fail(s"$field must be " + (if (hi.isFinite)
+          s"in (${show(lo)}, ${show(hi)})" else s"> ${show(lo)}") + s", got $d")
+      d
+    }
+
+    /** A boolean; `default` when absent. */
+    def bool(field: String, default: Boolean): Boolean = j \ field match {
+      case JBool(b) => b
+      case JNothing => default
+      case other => fail(s"'$field' must be a boolean, got $other")
+    }
+
+    /** One of `choices`; `default` when absent, required without one. */
+    def choice(field: String, choices: Seq[String],
+        default: Option[String] = None): String = {
+      val options = choices.mkString("(", " | ", ")")
+      j \ field match {
+        case JString(c) if choices.contains(c) => c
+        case JString(c) => fail(s"unknown $field '$c' $options")
+        case JNothing => default.getOrElse(needs(s"a '$field' string $options"))
+        case other => fail(s"'$field' must be a string $options, got $other")
+      }
+    }
+
+    /** Refuse a band whose upper end lies below its lower end. */
+    def ordered(loKey: String, lo: Long, hiKey: String, hi: Long): Unit =
+      if (hi < lo) fail(s"$hiKey ($hi) < $loKey ($lo)")
+  }
+
+  /** A JSON number as a double. */
+  private def numeric(v: JValue): Option[Double] = v match {
+    case JDouble(d) => Some(d)
+    case JInt(i) => Some(i.toDouble)
+    case JLong(l) => Some(l.toDouble)
+    case JDecimal(d) => Some(d.toDouble)
+    case _ => None
+  }
+
+  /** The blocked-signature parameters of the media stages:
+    * `(blocks, minMatch, maxBucket)`. */
+  private def sigParams(f: Fields): (Int, Int, Int) = {
+    val blocks = f.int("blocks", 2, 256, Some(8))
+    (blocks, f.int("minMatch", 1, blocks, Some(blocks * 3 / 4)),
+      f.int("maxBucket", 2, default = Some(100)))
+  }
+
+  /** The content-defined chunk parameters of the media stages:
+    * `(window, minShared, maxBucket, zeros)`. */
+  private def chunkParams(f: Fields): (Int, Int, Int, Int) =
+    (f.int("window", 1, 64, Some(4)), f.int("minShared", 1, default = Some(3)),
+      f.int("maxBucket", 2, default = Some(100)), f.int("zeros", 1, 8, Some(1)))
+
+  private val mediaModes = Seq("exact", "near", "cdc")
+
+  /** Every stage name [[parse]] accepts, in declaration order. */
+  private[graft] def stageNames: Seq[String] = stageParsers.keys.toSeq
+
+  private def stage(name: String)(
+      read: Fields => Stage): (String, Fields => Stage) = name -> read
+
+  /** Every stage [[parse]] accepts, by config name, with its reader. */
+  private val stageParsers: ListMap[String, Fields => Stage] = ListMap(
+    stage("exact_dedup")(_ => ExactDedup),
+    stage("quality_gate") { f =>
+      val min = f.long("minTokens", 0)
+      val max = f.longOpt("maxTokens")
+      max.foreach(f.ordered("minTokens", min, "maxTokens", _))
+      QualityGate(min, max)
+    },
+    stage("fluency_band") { f =>
+      val lo = f.long("loMicro")
+      val hi = f.long("hiMicro")
+      f.ordered("loMicro", lo, "hiMicro", hi)
+      FluencyBand(lo, hi)
+    },
+    stage("lang_gate") { f =>
+      LangGate(f("keep") match {
+        case JArray(vs) if vs.nonEmpty => vs.map {
+          case JString(c) if c.trim.nonEmpty => c
+          case other => f.fail("'keep' entries must be non-empty language " +
+            s"codes, got $other")
+        }.toSet
+        case _ => f.needs("a non-empty 'keep' array of language codes")
+      })
+    },
+    stage("media_gate") { f =>
+      val kind = f.choice("kind", Seq("image", "audio", "video"))
+      val binary = f.binary("the header kernel parses")
+      def band(loKey: String, hiKey: String): (Long, Long) = {
+        val lo = f.long(loKey, 0, Long.MaxValue, Some(0L))
+        val hi = f.long(hiKey, default = Some(Long.MaxValue))
+        f.ordered(loKey, lo, hiKey, hi)
+        (lo, hi)
+      }
+      kind match {
+        case "image" =>
+          val (loW, hiW) = band("minWidth", "maxWidth")
+          val (loH, hiH) = band("minHeight", "maxHeight")
+          MediaGate(kind, binary, loW, hiW, loH, hiH)
+        case "audio" =>
+          val (loR, hiR) = band("minRate", "maxRate")
+          MediaGate(kind, binary, loR, hiR, 0L, Long.MaxValue)
+        case _ =>
+          val (loS, hiS) = band("minSecMicro", "maxSecMicro")
+          MediaGate(kind, binary, loS, hiS, 0L, Long.MaxValue)
+      }
+    },
+    stage("media_dedup") { f =>
+      val binary = f.binary("the dedup keys on")
+      val mode = f.choice("mode", mediaModes, Some("exact"))
+      val (blocks, minMatch, maxBucket) = sigParams(f)
+      val (window, minShared, _, zeros) = chunkParams(f)
+      MediaDedupStage(mode, binary, blocks, minMatch, maxBucket, window,
+        minShared, zeros)
+    },
+    stage("media_digest_gate")(f => MediaDigestGate(
+      f.text("path", "string (the stored digest index location)"), f.binary())),
+    stage("media_sig_gate") { f =>
+      val path = f.text("path", "string (the stored signature index location)")
+      val binary = f.binary()
+      val (blocks, minMatch, maxBucket) = sigParams(f)
+      MediaSigGate(path, binary, blocks, minMatch, maxBucket)
+    },
+    stage("media_cdc_gate") { f =>
+      val path = f.text("path", "string (the stored chunk index location)")
+      val binary = f.binary()
+      val (window, minShared, maxBucket, zeros) = chunkParams(f)
+      MediaCdcGate(path, binary, window, minShared, maxBucket, zeros)
+    },
+    stage("media_decontam_gate") { f =>
+      val path = f.text("path", "string (the frozen benchmark store location)")
+      val mode = f.choice("mode", mediaModes, Some("exact"))
+      val binary = f.binary()
+      val (table, where) = (f.benchmarkTable, f.benchmarkWhere)
+      val (blocks, minMatch, maxBucket) = sigParams(f)
+      val (window, minShared, _, zeros) = chunkParams(f)
+      MediaDecontamGate(path, mode, binary, table, where, blocks, minMatch,
+        maxBucket, window, minShared, zeros)
+    },
+    stage("token_budget") { f =>
+      val strata = f.strata
+      TokenBudget(strata, f("budgets") match {
+        case JObject(fields) if fields.nonEmpty => fields.map {
+          case (k, JInt(v)) if v >= 0 && v.isValidLong => k -> v.toLong
+          case (k, JLong(v)) if v >= 0 => k -> v
+          case (k, other) => f.fail(s"budget '$k' must be a non-negative " +
+            s"64-bit integer, got $other")
+        }.toMap
+        case _ => f.needs("a non-empty 'budgets' object")
+      })
+    },
+    stage("temperature_mix")(f =>
+      TemperatureMix(f.strata, f.long("targetDocs", 0))),
+    stage("mix_gate")(f =>
+      MixGate(f.text("path"), f.strata, f.long("targetDocs", 0))),
+    stage("repeat_epochs") { f =>
+      (f("factors"), f("strata")) match {
+        case (JObject(fields), JString(strata)) if fields.nonEmpty =>
+          // the per-dataset epoch table form (LLaMA recipe)
+          RepeatEpochsByStrata(strata, fields.map { case (k, v) =>
+            val d = numeric(v).getOrElse(
+              f.fail(s"factor for '$k' must be numeric, got $v"))
+            if (d <= 0) f.fail(s"factor for '$k' must be > 0, got $d")
+            k -> d
+          }.toMap)
+        case (JObject(_), _) =>
+          f.fail("'factors' needs a 'strata' column name (and a non-empty " +
+            "factors object)")
+        case (JNothing, _) if f("factor") == JNothing =>
+          f.needs("a numeric 'factor' (or a 'strata' + 'factors' table)")
+        case (JNothing, _) => RepeatEpochs(f.number("factor", 0))
+        case (other, _) => f.fail(s"'factors' must be an object, got $other")
+      }
+    },
+    stage("where")(f => WhereExpr(f.text("expr"))),
+    stage("substr_gate")(f => SubstrGate(f.text("path"), f.int("k", 2),
+      f.long("maxDupWindows", 0, default = Some(0L)))),
+    stage("decontam_gate")(f => DecontamGate(f.text("path"), f.int("k", 2),
+      f.benchmarkTable, f.benchmarkWhere,
+      f.long("maxDupWindows", 0, default = Some(0L)))),
+    stage("neardup_gate") { f =>
+      val path = f.text("path")
+      val numHashes = f.int("numHashes", 1, default = Some(16))
+      val bands = f.int("bands", 1, default = Some(4))
+      if (numHashes % bands != 0)
+        f.fail(s"numHashes ($numHashes) must be a positive multiple of " +
+          s"bands ($bands)")
+      NearDupGate(path, numHashes, bands,
+        f.int("maxBucket", 1, default = Some(100)),
+        f.number("threshold", 0, 1, Some(0.8)))
+    },
+    stage("semantic_gate")(f => SemanticGate(f.text("path"), f.int("k", 1),
+      f.number("tau", 0, 1, Some(0.5)), f.int("nprobe", 1, default = Some(2)),
+      f.choice("tier", Seq("float", "pq"), Some("float")),
+      f.int("pqM", 1, default = Some(16)), f.int("pqK", 1, 128, Some(16)),
+      f.bool("pqResidual", default = true),
+      f.bool("pqPermute", default = false),
+      f.int("shortlist", 1, default = Some(64)))),
+    stage("ivf_maintain") { f =>
+      val path = f.text("path")
+      if (f("k") == JNothing) f.needs("'k' (the refit's training cell count)")
+      IvfMaintain(path, f.int("k", 1),
+        f.long("l1ThresholdPpm", 0, default = Some(500000L)),
+        f.bool("vacuum", default = true),
+        f.choice("permute", Seq("keep", "auto"), Some("keep")))
+    },
+    stage("store_vacuum")(f => StoreVacuum(
+      f.choice("kind", storeKinds.keys.toSeq.sorted), f.text("path"))),
+    stage("lm_gate") { f =>
+      val path = f.text("path")
+      val lo = f.long("loMicro", 0)
+      val hi = f.long("hiMicro", default = Some(Long.MaxValue))
+      f.ordered("loMicro", lo, "hiMicro", hi)
+      LmGate(path, lo, hi)
+    },
+    stage("probe_gate")(f => ProbeGate(f.text("path"))),
+    stage("bpe_tokenize")(f =>
+      BpeTokenize(f.text("path"), f.int("numMerges", 1))),
+    stage("shard_write") { f =>
+      val path = f.text("path")
+      val capacity = f.long("capacity", 1)
+      val units = f.choice("units", Seq("chars", "subtokens", "bytes"),
+        Some("chars"))
+      val binary = f.textOpt("binary")
+      if (units == "bytes" && binary.isEmpty)
+        f.fail("units 'bytes' needs 'binary' (the payload column " +
+          "octet_length measures)")
+      if (units != "bytes" && binary.nonEmpty)
+        f.fail("'binary' is only meaningful with units 'bytes' (got units " +
+          s"'$units')")
+      val epoch = f.int("epoch", 1, default = Some(1))
+      val streams = f.int("streams", default = Some(16))
+      if (!Seq(1, 16, 256).contains(streams))
+        f.fail("streams must be 1, 16 or 256 (hex-prefix parallelism), " +
+          s"got $streams")
+      ShardWrite(path, capacity, units, epoch, streams, binary)
+    })
 
   private def fail(msg: String): Nothing =
     throw new IllegalArgumentException(s"curation config: $msg")

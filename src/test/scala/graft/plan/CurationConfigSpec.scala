@@ -349,6 +349,35 @@ class CurationConfigSpec extends GraftSpec {
     bad("""{"table":"documents","id":"i","text":"t",
           | "stages":[{"stage":"bpe_tokenize","path":"/tmp/x",
           |   "numMerges":0}]}""".stripMargin, ">= 1")
+    // an integer that does not fit its parameter is refused by name,
+    // never wrapped (4294967298 = 2^32 + 2 would wrap to k = 2)
+    bad("""{"table":"documents","id":"i","text":"t",
+          | "stages":[{"stage":"substr_gate","path":"/x",
+          |   "k":4294967298}]}""".stripMargin, "k must be <= 2147483647")
+    bad("""{"table":"documents","id":"i","text":"t",
+          | "stages":[{"stage":"neardup_gate","path":"/x",
+          |   "numHashes":4294967312}]}""".stripMargin, "numHashes")
+    bad("""{"table":"documents","id":"i","text":"t",
+          | "stages":[{"stage":"neardup_gate","path":"/x",
+          |   "bands":4294967300}]}""".stripMargin, "bands")
+    bad("""{"table":"documents","id":"i","text":"t",
+          | "stages":[{"stage":"neardup_gate","path":"/x",
+          |   "maxBucket":4294967396}]}""".stripMargin, "maxBucket")
+    bad("""{"table":"embeddings","id":"i","text":"t",
+          | "stages":[{"stage":"semantic_gate","path":"/x",
+          |   "k":4294967300}]}""".stripMargin, "k must be <=")
+    bad("""{"table":"embeddings","id":"i","text":"t",
+          | "stages":[{"stage":"semantic_gate","path":"/x","k":4,
+          |   "nprobe":4294967298}]}""".stripMargin, "nprobe")
+    bad("""{"table":"embeddings","id":"i","text":"t",
+          | "stages":[{"stage":"semantic_gate","path":"/x","k":4,
+          |   "pqM":4294967312}]}""".stripMargin, "pqM")
+    bad("""{"table":"embeddings","id":"i","text":"t",
+          | "stages":[{"stage":"semantic_gate","path":"/x","k":4,
+          |   "shortlist":4294967360}]}""".stripMargin, "shortlist")
+    bad("""{"table":"documents","id":"i","text":"t",
+          | "stages":[{"stage":"bpe_tokenize","path":"/x",
+          |   "numMerges":4294967304}]}""".stripMargin, "numMerges")
   }
 
   it("bpe_tokenize: the first run seeds the stored vocabulary from the " +
@@ -547,6 +576,14 @@ class CurationConfigSpec extends GraftSpec {
     bad("""{"table":"d","id":"i","text":"t","stages":[
         |  {"stage":"media_decontam_gate","path":"/x","binary":"p",
         |   "benchmarkTable":"b","minMatch":9}]}""".stripMargin, "minMatch")
+    bad("""{"table":"d","id":"i","text":"t","stages":[
+        |  {"stage":"media_decontam_gate","path":"/x","binary":"p",
+        |   "benchmarkTable":"b","maxBucket":4294967396}]}""".stripMargin,
+      "maxBucket")
+    bad("""{"table":"d","id":"i","text":"t","stages":[
+        |  {"stage":"media_decontam_gate","path":"/x","binary":"p",
+        |   "benchmarkTable":"b","minShared":4294967299}]}""".stripMargin,
+      "minShared")
   }
 
   it("decontam_gate without a committed index refuses the dir-less apply " +
@@ -571,6 +608,10 @@ class CurationConfigSpec extends GraftSpec {
     bad("""{"table":"documents","id":"i","text":"t",
           | "stages":[{"stage":"decontam_gate","path":"/x","k":8}]}"""
       .stripMargin, "benchmarkTable")
+    bad("""{"table":"documents","id":"i","text":"t",
+          | "stages":[{"stage":"decontam_gate","path":"/x","k":4294967304,
+          |   "benchmarkTable":"documents"}]}""".stripMargin,
+      "k must be <= 2147483647")
   }
 
   it("runAudited attributes every input row's fate to the stage that " +
@@ -816,6 +857,64 @@ class CurationConfigSpec extends GraftSpec {
       "> 0")
     bad("""{"table":"documents","id":"i","text":"t",
           | "stages":[{"stage":"repeat_epochs"}]}""".stripMargin, "factor")
+    // a BigInt past Long is refused, not wrapped (2^64 + 1 would wrap to 1)
+    bad("""{"table":"documents","id":"i","text":"t",
+          | "stages":[{"stage":"quality_gate",
+          |   "minTokens":18446744073709551617}]}""".stripMargin,
+      "minTokens must be <= 9223372036854775807")
+    bad("""{"table":"documents","id":"i","text":"t",
+          | "stages":[{"stage":"token_budget","strata":"source",
+          |   "budgets":{"a":18446744073709551621}}]}""".stripMargin,
+      "non-negative")
+  }
+
+  it("parses one vocabulary: every stage name parse accepts comes back " +
+     "as its stage's stageName (the audit `stage` column)") {
+    val minimal: Map[String, Seq[String]] = Map(
+      "exact_dedup" -> Seq(""),
+      "quality_gate" -> Seq(""""minTokens":1"""),
+      "fluency_band" -> Seq(""""loMicro":1,"hiMicro":2"""),
+      "lang_gate" -> Seq(""""keep":["en"]"""),
+      "media_gate" -> Seq(""""kind":"image","binary":"b""""),
+      "media_dedup" -> Seq(""""binary":"b""""),
+      "media_digest_gate" -> Seq(""""path":"/p","binary":"b""""),
+      "media_sig_gate" -> Seq(""""path":"/p","binary":"b""""),
+      "media_cdc_gate" -> Seq(""""path":"/p","binary":"b""""),
+      "media_decontam_gate" ->
+        Seq(""""path":"/p","binary":"b","benchmarkTable":"t""""),
+      "token_budget" -> Seq(""""strata":"s","budgets":{"a":1}"""),
+      "temperature_mix" -> Seq(""""strata":"s","targetDocs":1"""),
+      "mix_gate" -> Seq(""""path":"/p","strata":"s","targetDocs":1"""),
+      "repeat_epochs" ->
+        Seq(""""factor":2""", """"strata":"s","factors":{"a":2}"""),
+      "where" -> Seq(""""expr":"TRUE""""),
+      "substr_gate" -> Seq(""""path":"/p","k":4"""),
+      "decontam_gate" -> Seq(""""path":"/p","k":4,"benchmarkTable":"t""""),
+      "neardup_gate" -> Seq(""""path":"/p""""),
+      "semantic_gate" -> Seq(""""path":"/p","k":2"""),
+      "ivf_maintain" -> Seq(""""path":"/p","k":2"""),
+      "store_vacuum" -> Seq(""""kind":"lm","path":"/p""""),
+      "lm_gate" -> Seq(""""path":"/p","loMicro":0"""),
+      "probe_gate" -> Seq(""""path":"/p""""),
+      "bpe_tokenize" -> Seq(""""path":"/p","numMerges":4"""),
+      "shard_write" -> Seq(""""path":"/p","capacity":10"""))
+    minimal.keySet shouldBe CurationConfig.stageNames.toSet
+    for ((name, forms) <- minimal; fields <- forms) {
+      val extra = if (fields.isEmpty) "" else "," + fields
+      val st = CurationConfig.parse(
+        s"""{"table":"t","id":"i","text":"x",
+          | "stages":[{"stage":"$name"$extra}]}""".stripMargin).stages.head
+      withClue(fields) { CurationConfig.stageName(st) shouldBe name }
+    }
+    // both repeat_epochs forms
+    CurationConfig.parse("""{"table":"t","id":"i","text":"x","stages":[
+      | {"stage":"repeat_epochs","strata":"s","factors":{"a":2}}]}"""
+      .stripMargin).stages.head shouldBe
+      CurationConfig.RepeatEpochsByStrata("s", Map("a" -> 2.0))
+    // the unknown-stage message lists the same vocabulary
+    val e = intercept[IllegalArgumentException](CurationConfig.parse(
+      """{"table":"t","id":"i","text":"x","stages":[{"stage":"nope"}]}"""))
+    CurationConfig.stageNames.foreach(n => e.getMessage should include(n))
   }
 
   it("ivf_maintain declares the index lifecycle: not advised → no-op; " +
@@ -888,6 +987,9 @@ class CurationConfigSpec extends GraftSpec {
     bad(s"""{"table":"e","id":"i","text":"t",
           | "stages":[{"stage":"ivf_maintain","path":"$path","k":2,
           |  "vacuum":"yes"}]}""".stripMargin, "boolean")
+    bad(s"""{"table":"e","id":"i","text":"t",
+          | "stages":[{"stage":"ivf_maintain","path":"$path",
+          |  "k":4294967298}]}""".stripMargin, "k must be <=")
   }
 
   it("store_vacuum declares the retention-guarded vacuum for the store " +
