@@ -643,7 +643,7 @@ object Bench {
                   .exists(_.toString.contains("/assigned")) =>
               f.metrics.get("numPartitions").map(_.value)
           }.flatten
-        val res = store.searchAll(Seq(1L), topK = 5, nprobe = 2)
+        val res = store.search(store.vectorsOf(Seq(1L)), topK = 5, nprobe = 2)
         res.collect()
         val searchScans = graft.plans.PlanWalk
           .collectAll(res.queryExecution.executedPlan) {
@@ -758,16 +758,15 @@ object Bench {
             occAfter.map(_.maxCellShareMicro).getOrElse(-1L)},""" +
           s""""dq142_recommended_nprobe_after":${
             occAfter.map(_.recommendedNprobe).getOrElse(-1)},""" +
-          // the advisory WIRED INTO SEARCH (r14 verdict #6): nprobe=None
+          // the advisory WIRED INTO SEARCH (r14 verdict #6): autoNprobe()
           // resolves this value and the auto-resolved answer matches the
           // literal form (1L = parity held, 0L = diverged)
           s""""dq142_auto_nprobe":${store.autoNprobe()},""" +
           s""""dq142_auto_search_parity":${
-            val auto = store.searchAll(Seq(1L, 2L), topK = 3,
-              nprobe = None, excludeToken = None)
+            val qs = store.vectorsOf(Seq(1L, 2L))
+            val auto = store.search(qs, topK = 3, nprobe = store.autoNprobe())
               .orderBy("qid", "vid").collect().toSeq
-            val lit = store.searchAll(Seq(1L, 2L), topK = 3,
-              nprobe = store.autoNprobe())
+            val lit = store.search(qs, topK = 3, nprobe = store.autoNprobe())
               .orderBy("qid", "vid").collect().toSeq
             if (auto == lit) 1L else 0L}""")
       } catch { case e: Throwable =>
@@ -985,7 +984,8 @@ object Bench {
           .toString + "/ivf"
         val store = graft.ext.IvfStore.create(emb, "vec_id", "embedding",
           base, k = 8, pqM = 16, pqK = 16)
-        val res = store.searchAllPq(Seq(1L, 2L, 3L), topK = 5, nprobe = 2)
+        val res = store.searchPq(store.vectorsOf(Seq(1L, 2L, 3L)), topK = 5,
+          nprobe = 2)
         res.collect()
         val scans = graft.plans.PlanWalk
           .collectAll(res.queryExecution.executedPlan) {
@@ -1023,7 +1023,8 @@ object Bench {
           .toString + "/ivf"
         val store = graft.ext.IvfStore.create(emb, "vec_id", "embedding",
           base, k = 8, pqM = 16, pqK = 16, pqResidual = true)
-        val res = store.searchAllPq(Seq(1L, 2L, 3L), topK = 5, nprobe = 2)
+        val res = store.searchPq(store.vectorsOf(Seq(1L, 2L, 3L)), topK = 5,
+          nprobe = 2)
         val resRows = res.collect()
         val codeParts = graft.plans.PlanWalk
           .collectAll(res.queryExecution.executedPlan) {
@@ -1039,10 +1040,10 @@ object Bench {
           "embedding",
           graft.io.TempReaper.tempDir("graft-bench-rawpq").toString + "/ivf",
           k = 8, pqM = 16, pqK = 16)
-        val rawRows = rawStore
-          .searchAllPq(Seq(1L, 2L, 3L), topK = 5, nprobe = 2).collect()
-        val exact = store.searchAll(Seq(1L, 2L, 3L), topK = 5, nprobe = 2)
-          .collect()
+        val rawRows = rawStore.searchPq(rawStore.vectorsOf(Seq(1L, 2L, 3L)),
+          topK = 5, nprobe = 2).collect()
+        val exact = store.search(store.vectorsOf(Seq(1L, 2L, 3L)), topK = 5,
+          nprobe = 2).collect()
         def byQ(rows: Array[org.apache.spark.sql.Row]) =
           rows.groupBy(_.getLong(0)).view
             .mapValues(_.map(_.getLong(1)).toSet).toMap
@@ -1077,22 +1078,21 @@ object Bench {
         def byQ(rows: Array[org.apache.spark.sql.Row]) =
           rows.groupBy(_.getLong(0)).view
             .mapValues(_.map(_.getLong(1)).toSet).toMap
-        val exact = byQ(
-          store.searchAll(qids, topK = 5, nprobe = 2).collect())
+        val qs = store.vectorsOf(qids)
+        val exact = byQ(store.search(qs, topK = 5, nprobe = 2).collect())
         def recall(rows: Array[org.apache.spark.sql.Row]): Double =
           exact.keys.toSeq.map(q =>
             (exact(q) intersect byQ(rows).getOrElse(q, Set.empty)).size)
             .sum / math.max(1.0, exact.values.map(_.size).sum)
-        val adc = recall(
-          store.searchAllPq(qids, topK = 5, nprobe = 2).collect())
-        val rr = recall(store.searchAllPqRerank(qids, topK = 5,
+        val adc = recall(store.searchPq(qs, topK = 5, nprobe = 2).collect())
+        val rr = recall(store.searchPqRerank(qs, topK = 5,
           nprobe = 2, shortlist = 20).collect())
-        // the advisory-resolved form (nprobe = None → occupancy
-        // recommendation, shortlist = None → 4·topK): the probe count a
+        // the advisory-resolved form (nprobe = autoNprobe() → occupancy
+        // recommendation, shortlist = 4·topK): the probe count a
         // production caller gets without choosing a literal
         val resolved = store.autoNprobe()
-        store.searchAllPqRerank(qids, topK = 5, nprobe = None,
-          shortlist = None, excludeToken = None).collect()
+        store.searchPqRerank(qs, topK = 5, nprobe = resolved,
+          shortlist = 4 * 5).collect()
         Some(f""""dq173_recall5_adc_only":$adc%.2f,""" +
           f""""dq173_recall5_reranked":$rr%.2f,""" +
           s""""dq173_nprobe_resolved":$resolved""")
@@ -1120,16 +1120,16 @@ object Bench {
         def byQ(rows: Array[org.apache.spark.sql.Row]) =
           rows.groupBy(_.getLong(0)).view
             .mapValues(_.map(_.getLong(1)).toSet).toMap
-        val exact = byQ(
-          pstore.searchAll(qids, topK = 5, nprobe = 2).collect())
+        val exact = byQ(pstore.search(pstore.vectorsOf(qids), topK = 5,
+          nprobe = 2).collect())
         def recall(rows: Array[org.apache.spark.sql.Row]): Double =
           exact.keys.toSeq.map(q =>
             (exact(q) intersect byQ(rows).getOrElse(q, Set.empty)).size)
             .sum / math.max(1.0, exact.values.map(_.size).sum)
-        val permuted = recall(
-          pstore.searchAllPq(qids, topK = 5, nprobe = 2).collect())
-        val residualOnly = recall(
-          rstore.searchAllPq(qids, topK = 5, nprobe = 2).collect())
+        val permuted = recall(pstore.searchPq(pstore.vectorsOf(qids),
+          topK = 5, nprobe = 2).collect())
+        val residualOnly = recall(rstore.searchPq(rstore.vectorsOf(qids),
+          topK = 5, nprobe = 2).collect())
         // the r16 #2 advisory: the sf corpus is near-isotropic, so the
         // store itself should now SAY the flag won't pay here
         val adv = rstore.permuteAdvisory()

@@ -152,7 +152,7 @@ object ScaleProbe {
     }
     // STORED-tier recall probe (round-10 verdict #6): IvfIndex.packed()
     // published recall@10 vs nprobe; the persisted IvfStore had none. Same
-    // clone corpus, same query battery: stored searchAll vs its own
+    // clone corpus, same query battery: stored search vs its own
     // exact ranking (nprobe=k probes every cell partition = exact cosine)
     // next to the session tier's curve — the two must match, since the
     // deterministic fit freezes identical centroids for both.
@@ -183,7 +183,8 @@ object ScaleProbe {
             else (byQ.getOrElse(q, Set.empty[Long]) intersect e).size.toDouble / e.size
           }.sum / qids.size
         }
-        val exactStored = store.searchAll(qids, topK = 10, nprobe = 32)
+        val qs = store.vectorsOf(qids)
+        val exactStored = store.search(qs, topK = 10, nprobe = 32)
           .select("qid", "vid").collect().groupBy(_.getLong(0))
           .map { case (q, rs) => (q, rs.map(_.getLong(1)).toSet) }
         val exactMem = index.queryAll(qids, topK = 10, nprobe = 32)
@@ -191,13 +192,13 @@ object ScaleProbe {
           .map { case (q, rs) => (q, rs.map(_.getLong(1)).toSet) }
         for (np <- Seq(1, 2, 4, 8)) {
           val ts0 = System.nanoTime()
-          val storedRows = store.searchAll(qids, topK = 10, nprobe = np)
+          val storedRows = store.search(qs, topK = 10, nprobe = np)
             .select("qid", "vid").collect()
           val ts1 = System.nanoTime()
           val memRows = index.queryAll(qids, topK = 10, nprobe = np)
             .select("qid", "vid").collect()
           val ts2 = System.nanoTime()
-          val packedRows = store.searchAllPacked(qids, topK = 10, nprobe = np)
+          val packedRows = store.searchPacked(qs, topK = 10, nprobe = np)
             .select("qid", "vid").collect()
           val ts3 = System.nanoTime()
           println(f"""{"probe":"ivfstore_recall","vecs":$n,"k":32,"topk":10,"nprobe":$np,"recall_stored":${recallVs(exactStored, storedRows)}%.3f,"recall_session":${recallVs(exactMem, memRows)}%.3f,"recall_stored_packed":${recallVs(exactStored, packedRows)}%.3f,"stored_sec":${(ts1 - ts0) / 1e9}%.2f,"session_sec":${(ts2 - ts1) / 1e9}%.2f,"stored_packed_sec":${(ts3 - ts2) / 1e9}%.2f,"create_sec":${(tc1 - tc0) / 1e9}%.1f}""")
@@ -387,7 +388,7 @@ object ScaleProbe {
         // (nprobe = k reads every cell: centroid-independent ground truth)
         val qids = (1L to 100L).map(i => i * (2L * m) + m)
         def topk(np: Int): Map[Long, Set[Long]] =
-          store.searchAll(qids, topK = 10, nprobe = np)
+          store.search(store.vectorsOf(qids), topK = 10, nprobe = np)
             .select("qid", "vid").collect().groupBy(_.getLong(0))
             .map { case (q, rs) => (q, rs.map(_.getLong(1)).toSet) }
         def recall(got: Map[Long, Set[Long]],
@@ -410,8 +411,8 @@ object ScaleProbe {
         val fut = Future { store.refit(k = 32, iters = 2) }
         Thread.sleep(500L)
         val td0 = System.nanoTime()
-        val duringRows = store.searchAll(qids.take(10), topK = 10,
-          nprobe = 2).count()
+        val duringRows = store.search(store.vectorsOf(qids.take(10)),
+          topK = 10, nprobe = 2).count()
         val td1 = System.nanoTime()
         Await.result(fut, scala.concurrent.duration.Duration.Inf)
         val tr1 = System.nanoTime()

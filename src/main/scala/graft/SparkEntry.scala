@@ -1980,7 +1980,7 @@ object SparkEntry {
       "vec_id", "embedding", path, k = 8, iters = 2)
     store.appendOnce(emb.filter(col("vec_id") % 5 === 0), "vec_id",
       "embedding", "dq118#b1")
-    store.searchAll(Seq(1L, 2L, 5L), topK = 5, nprobe = 2)
+    store.search(store.vectorsOf(Seq(1L, 2L, 5L)), topK = 5, nprobe = 2)
       .orderBy("qid", "vid")
   }
 
@@ -2223,7 +2223,7 @@ object SparkEntry {
   }
 
   /** DQ126 (EXT): the STORED SQ8 candidate tier of the persisted IVF
-    * index ([[graft.ext.IvfStore.searchAllPacked]]) — dq118's layout with
+    * index ([[graft.ext.IvfStore.searchPacked]]) — dq118's layout with
     * the search moved onto the `packed/` relation: every stored vector's
     * unit form is quantized to packed int8 at WRITE time (1 B/dim), the
     * probe is the same static partition filter, and scoring is the
@@ -2241,7 +2241,8 @@ object SparkEntry {
       "vec_id", "embedding", path, k = 8, iters = 2)
     store.appendOnce(emb.filter(col("vec_id") % 5 === 0), "vec_id",
       "embedding", "dq126#b1")
-    store.searchAllPacked(Seq(1L, 2L, 5L), topK = 5, nprobe = 2)
+    store.searchPacked(store.vectorsOf(Seq(1L, 2L, 5L)), topK = 5,
+        nprobe = 2)
       .orderBy("qid", "vid")
   }
 
@@ -2637,7 +2638,7 @@ object SparkEntry {
     store.appendOnce(emb.filter(col("vec_id") % 5 === 0), "vec_id",
       "embedding", "dq142#b1")
     store.refit(k = 8, iters = 2)
-    store.searchAll(Seq(1L, 2L, 5L), topK = 5, nprobe = 2)
+    store.search(store.vectorsOf(Seq(1L, 2L, 5L)), topK = 5, nprobe = 2)
       .orderBy("qid", "vid")
   }
 
@@ -3363,7 +3364,7 @@ object SparkEntry {
     * create trains the coarse centroids AND the 16 PQ codebooks on the
     * 80% split (FAISS `train`), the 20% append encodes against the
     * FROZEN books (`add` — map-only, never a retrain), and
-    * `searchAllPq` resolves stored query ids through the vidmap, probes
+    * `searchPq` over `vectorsOf` resolves stored ids through the vidmap, probes
     * 2 cells on the driver, scans ONLY probed `pqcodes/` cell
     * partitions (m codes/vector — measured 17× under the float relation
     * at rest, see the dq164 Bench evidence), and ADC-scores via [[graft.ext.PqAnn.adcTopKProbed]]. The
@@ -3380,7 +3381,7 @@ object SparkEntry {
       k = 8, pqM = 16, pqK = 16)
     store.appendOnce(emb.filter(col("vec_id") % 5 === 0),
       "vec_id", "embedding", "dq164:b1")
-    store.searchAllPq(Seq(1L, 2L, 5L), topK = 5, nprobe = 2)
+    store.searchPq(store.vectorsOf(Seq(1L, 2L, 5L)), topK = 5, nprobe = 2)
       .orderBy("qid", "vid")
   }
 
@@ -3447,8 +3448,8 @@ object SparkEntry {
       k = 8, pqM = 16, pqK = 16, pqResidual = true)
     store.appendOnce(emb.filter(col("vec_id") % 5 === 0),
       "vec_id", "embedding", "dq173:b1")
-    store.searchAllPqRerank(Seq(1L, 2L, 5L), topK = 5, nprobe = 2,
-        shortlist = 20)
+    store.searchPqRerank(store.vectorsOf(Seq(1L, 2L, 5L)), topK = 5,
+        nprobe = 2, shortlist = 20)
       .orderBy("qid", "vid")
   }
 
@@ -4308,7 +4309,7 @@ object SparkEntry {
     * frozen centroids before encoding against the FROZEN residual books
     * (the generation rule extended: residual books are tied to the
     * coarse generation whose centroids they subtract — a refit retrains
-    * BOTH against the new generation); `searchAllPq` detects the
+    * BOTH against the new generation); `searchPq` detects the
     * residual flag pinned in the book dir and scores
     * `q·centroid(cell) + table fold`. Pre-residual layouts read as raw
     * byte for byte (the flag column defaults absent→false). The oracle
@@ -4323,7 +4324,7 @@ object SparkEntry {
       k = 8, pqM = 16, pqK = 16, pqResidual = true)
     store.appendOnce(emb.filter(col("vec_id") % 5 === 0),
       "vec_id", "embedding", "dq170:b1")
-    store.searchAllPq(Seq(1L, 2L, 5L), topK = 5, nprobe = 2)
+    store.searchPq(store.vectorsOf(Seq(1L, 2L, 5L)), topK = 5, nprobe = 2)
       .orderBy("qid", "vid")
   }
 

@@ -14,12 +14,6 @@ import graft.functions.VectorFunctions
 final case class IvfStoreStats(cells: Int, dims: Int, vectors: Long,
     gateTau: Double, gateNprobe: Int, packedScale: Int)
 
-/** The pair of drift statistics [[IvfStore.driftAdvisory]] derives from
-  * the stored per-write cell histograms (both L1 distances between
-  * cell-share distributions, parts-per-million): `newestL1Ppm` is the
-  * newest write vs the prior corpus (fast trigger), `cumulativeL1Ppm` is
-  * all writes since the generation baseline, summed, vs that baseline
-  * (slow trigger — catches N small same-direction drifts). */
 /** [[IvfStore.occupancyAdvisory]]'s row: the per-generation occupancy
   * curve reduced to the numbers an operator acts on. */
 final case class OccupancyAdvisory(generation: Int, cells: Int,
@@ -27,6 +21,12 @@ final case class OccupancyAdvisory(generation: Int, cells: Int,
     recommendedNprobe: Int, targetMassMicro: Long,
     expectedMassMicroAtRecommended: Long)
 
+/** The pair of drift statistics [[IvfStore.driftAdvisory]] derives from
+  * the stored per-write cell histograms (both L1 distances between
+  * cell-share distributions, parts-per-million): `newestL1Ppm` is the
+  * newest write vs the prior corpus (fast trigger), `cumulativeL1Ppm` is
+  * all writes since the generation baseline, summed, vs that baseline
+  * (slow trigger — catches N small same-direction drifts). */
 final case class DriftAdvisory(newestL1Ppm: Long, cumulativeL1Ppm: Long,
     writesSinceBaseline: Int)
 
@@ -73,7 +73,7 @@ final case class PermuteAdvisory(generation: Int, subspaces: Int,
   *  - `packed/append=<id>/cell=<c>/` (vid, pemb: binary) — the STORED
   *    SQ8 candidate tier ([[IvfIndex.packed]]'s shape persisted): every
   *    vector's unit form quantized to packed int8 at write time, so
-  *    [[searchAllPacked]] scans 1 B/dim instead of 4 — a 4× cut of the
+  *    [[searchPacked]] scans 1 B/dim instead of 4 — a 4× cut of the
   *    candidate read on top of the nprobe/cells partition pruning;
   *  - `drift/append=<id>/`   (cell, n) — each write's cell histogram
   *    (≤ k tiny rows): [[refitAdvised]]'s input, the cheap statistic that
@@ -87,7 +87,7 @@ final case class PermuteAdvisory(generation: Int, subspaces: Int,
   * real queries are usually not already in the index): probe cells are
   * ranked on the driver against the k held centroids and the ONLY scan of
   * the stored relation is the nprobe-pruned candidate scan.
-  * [[searchAll]] is the stored-id convenience form; its lookup goes
+  * A stored-id query passes [[vectorsOf]]'s rows; that lookup goes
   * through `vidmap/` + a home-cell-pruned fetch, never a full pass.
   * Exactly-once appends via [[appendOnce]] tokens; a gate-style
   * `excludeToken` view gives replayed batches their original answer.
@@ -130,7 +130,7 @@ final class IvfStore private (private val spark: SparkSession,
     * to a decision). */
   @volatile var lastShortlistFetchPath: Option[(Long, String)] = None
 
-  // ---------------- centroid generations ----------------
+  // ---------------- generations ----------------
 
   /** The centroid GENERATION a manifest snapshot pins: 1 is the create's
     * training; each [[refit]] commits the next. Every query resolves its
@@ -141,90 +141,84 @@ final class IvfStore private (private val spark: SparkSession,
   private def genOf(ms: Seq[Manifest]): Int =
     ms.flatMap(_.generation).maxOption.getOrElse(1)
 
-  private def centroidDir(g: Int): String =
-    if (g == 1) s"$path/centroids" else s"$path/centroids_g$g"
+  /** Generation `g`'s dir of `name` (`centroids`, `pqbook`, `varspec`):
+    * the bare name for the create's generation, `<name>_g<g>` after. */
+  private def genDir(name: String, g: Int): String =
+    if (g == 1) s"$path/$name" else s"$path/${name}_g$g"
 
-  private val centroidCache =
-    scala.collection.concurrent.TrieMap.empty[Int, Seq[(Int, Array[Double])]]
+  private val generations =
+    scala.collection.concurrent.TrieMap.empty[Int, IvfStore.Generation]
 
-  private[ext] def centroidsFor(g: Int): Seq[(Int, Array[Double])] =
-    centroidCache.getOrElseUpdate(g, {
-      val cs = spark.read.parquet(centroidDir(g)).collect()
+  /** Generation `g` as stored, read at most once per store instance: its
+    * centroids (k driver-sized rows) now, its PQ tier on first use. Like
+    * the centroids, the books of superseded generations are kept on
+    * disk: an in-flight reader inside the retention window resolves its
+    * own snapshot's generation. */
+  private[ext] def generation(g: Int): IvfStore.Generation =
+    generations.getOrElseUpdate(g, {
+      val cs = spark.read.parquet(genDir("centroids", g)).collect()
         .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
         .sortBy(_._1).toSeq
       require(cs.nonEmpty, s"no generation-$g centroids under $path")
-      cs
+      new IvfStore.Generation(cs, tierOf(g))
     })
+
+  /** The generation's PQ tier from ONE pass over its book dir, None when
+    * the layout was created without the tier (`pqM = 0`): appends then
+    * skip the code sidecar and [[searchPq]] refuses with a named error.
+    * Every book row carries the tier's `k0`, residual flag and
+    * permutation ([[IvfStore.bookDf]]). */
+  private def tierOf(g: Int): Option[IvfStore.PqTier] = {
+    val dir = genDir("pqbook", g)
+    if (!log.manifests.fileSystem.exists(new org.apache.hadoop.fs.Path(dir)))
+      None
+    else {
+      val rows = spark.read.parquet(dir).collect()
+      val grouped = rows.groupBy(_.getAs[Int]("j"))
+      // a malformed book (a subspace with zero surviving rows, or a
+      // partial write) must be a named error, not silently re-indexed
+      // subspaces shifting positions under the positional sort
+      require(grouped.keySet == (0 until grouped.size).toSet,
+        s"PQ codebook at $dir is malformed: subspace ids " +
+          s"${grouped.keySet.toSeq.sorted.mkString(",")} are not " +
+          s"exactly 0 until ${grouped.size} — restore the book dir")
+      val sub = grouped.toSeq.sortBy(_._1)
+        .map { case (_, cs) =>
+          cs.map(r => (r.getAs[Int]("cell"), r.getAs[Seq[Double]]("c").toArray))
+            .sortBy(_._1).toSeq }
+        .toVector
+      val pinned = rows.head
+      val perm = pinned.fieldIndex("perm")
+      Some(IvfStore.PqTier(
+        PqAnn.Codebook(sub.head.head._2.length * sub.size, sub.size, sub),
+        pinned.getAs[Int]("k0"), pinned.getAs[Boolean]("residual"),
+        if (pinned.isNullAt(perm)) None
+        else Some(pinned.getSeq[Int](perm).toArray)))
+    }
+  }
+
+  /** The manifest snapshot a query reads and the generation it pins;
+    * `pqUse` names what a PQ-tier query needs the tier for, and such a
+    * query is refused by name on a layout without it. */
+  private def snapshot(excludeToken: Option[String],
+      pqUse: Option[String]): (Seq[Manifest], IvfStore.Generation) = {
+    val ms = log.visible(excludeToken)
+    val gen = generation(genOf(ms))
+    pqUse.foreach { use =>
+      if (gen.tier.isEmpty) throw new IllegalArgumentException(
+        s"no PQ tier under $path (layout created with pqM = 0; $use)")
+    }
+    (ms, gen)
+  }
 
   /** The CURRENT generation's centroids (k driver-sized rows). */
-  def centroids: Seq[(Int, Array[Double])] = centroidsFor(genOf(log.visible(None)))
-
-  // ---------------- PQ codebook generations (optional tier) ----------------
-
-  private def pqBookDir(g: Int): String =
-    if (g == 1) s"$path/pqbook" else s"$path/pqbook_g$g"
-
-  private val pqBookCache = scala.collection.concurrent.TrieMap
-    .empty[Int, Option[PqAnn.Codebook]]
-
-  /** The generation's PQ codebooks ([[PqAnn.Codebook]]), None when the
-    * layout was created without the tier (`pqM = 0`): appends then skip
-    * the code sidecar and [[searchPq]] refuses with a named error. Like
-    * centroids, the books of superseded generations are kept
-    * on disk: an in-flight reader inside the retention window resolves
-    * its own snapshot's book. */
-  private[ext] def pqBookFor(g: Int): Option[PqAnn.Codebook] =
-    pqBookCache.getOrElseUpdate(g, {
-      val dir = pqBookDir(g)
-      if (!log.manifests.fileSystem.exists(new org.apache.hadoop.fs.Path(dir))) None
-      else {
-        val rows = spark.read.parquet(dir).collect()
-          .map(r => (r.getAs[Int]("j"), r.getAs[Int]("cell"),
-            r.getAs[Seq[Double]]("c").toArray))
-        val grouped = rows.groupBy(_._1)
-        // a malformed book (a subspace with zero surviving rows, or a
-        // partial write) must be a named error, not silently re-indexed
-        // subspaces shifting positions under the positional sort
-        require(grouped.keySet == (0 until grouped.size).toSet,
-          s"PQ codebook at $dir is malformed: subspace ids " +
-            s"${grouped.keySet.toSeq.sorted.mkString(",")} are not " +
-            s"exactly 0 until ${grouped.size} — restore the book dir")
-        val sub = grouped.toSeq.sortBy(_._1)
-          .map { case (_, cs) =>
-            cs.sortBy(_._2).map(c => (c._2, c._3)).toSeq }
-          .toVector
-        Some(PqAnn.Codebook(sub.head.head._2.length * sub.size,
-          sub.size, sub))
-      }
-    })
-
-  /** The k the generation's books were TRAINED with (pinned in the book
-    * dir — surviving cells per subspace can be fewer, so it is not
-    * recoverable from the book itself); a [[refit]] retrains at the same
-    * k. */
-  private def pqTrainK(g: Int): Int =
-    spark.read.parquet(pqBookDir(g)).select("k0").head().getInt(0)
-
-  private val pqResidualCache = scala.collection.concurrent.TrieMap
-    .empty[Int, Boolean]
-
-  /** Whether the generation's books were trained on RESIDUALS
-    * `x − centroid(cell)` against the generation's coarse centroids
-    * (the FAISS IndexIVFPQ form, `create(..., pqResidual = true)`).
-    * Pinned in the book dir like `k0`. Memoized per generation like the
-    * book itself (a generation's flag is immutable), so searches don't
-    * pay a driver-side parquet read per call. */
-  private def pqResidualFor(g: Int): Boolean =
-    pqResidualCache.getOrElseUpdate(g,
-      spark.read.parquet(pqBookDir(g)).select("residual").head().getBoolean(0))
+  def centroids: Seq[(Int, Array[Double])] =
+    generation(genOf(log.visible(None))).centroids
 
   /** Whether the CURRENT generation carries the PQ tier — the
     * config-surface probe ([[graft.plan.CurationConfig.SemanticGate]]
     * validates a declared `tier: "pq"` at open, not at first query). */
-  def hasPqTier: Boolean = pqBookFor(genOf(log.visible(None))).nonEmpty
-
-  private[ext] def varspecDir(g: Int): String =
-    if (g == 1) s"$path/varspec" else s"$path/varspec_g$g"
+  def hasPqTier: Boolean = generation(genOf(log.visible(None))).tier.nonEmpty
 
   /** "Does `pqPermute` pay on THIS corpus?" from the generation's
     * STORED variance spectrum ([[PqAnn.varianceMicroSums]], persisted
@@ -245,10 +239,11 @@ final class IvfStore private (private val spark: SparkSession,
     require(thresholdMicro >= 1000000L,
       s"thresholdMicro must be >= 1000000 (1.0x), got $thresholdMicro")
     val g = genOf(log.visible(None))
-    val book = pqBookFor(g).getOrElse(throw new IllegalArgumentException(
+    val tier = generation(g).tier.getOrElse(throw new IllegalArgumentException(
       s"no PQ tier under $path (layout created with pqM = 0) — " +
         "permute advice is about the tier's subspace allocation"))
-    val dir = varspecDir(g)
+    val book = tier.book
+    val dir = genDir("varspec", g)
     val rows = spark.read.parquet(dir).collect()
       .map(r => (r.getAs[Int]("d"), r.getAs[Long]("sx"),
         r.getAs[Long]("sxx"), r.getAs[Long]("n")))
@@ -273,7 +268,7 @@ final class IvfStore private (private val spark: SparkSession,
       else (subVar.max * book.m * 1000000 / total).toLong
     PermuteAdvisory(g, book.m, skewMicro, thresholdMicro,
       advised = total > 0 && skewMicro >= thresholdMicro,
-      permuted = pqPermFor(g).nonEmpty)
+      permuted = tier.perm.nonEmpty)
   }
 
   /** [[permuteAdvisory]] reduced to the flag, at the configured
@@ -287,30 +282,15 @@ final class IvfStore private (private val spark: SparkSession,
     permuteAdvisory(t).advised
   }
 
-  private val pqPermCache = scala.collection.concurrent.TrieMap
-    .empty[Int, Option[Array[Int]]]
-
-  /** The generation's OPQ-lite coordinate permutation
-    * ([[PqAnn.balancedPermutation]], `create(..., pqPermute = true)`) —
-    * the books were trained on PERMUTED vectors (or permuted residuals),
-    * so encode and the query-side ADC tables must see the same
-    * permutation. Generation-keyed like `residual` (a refit recomputes
-    * it from the new training relation); a null `perm` is the identity
-    * (a book trained without `pqPermute`). */
-  private def pqPermFor(g: Int): Option[Array[Int]] =
-    pqPermCache.getOrElseUpdate(g, {
-      val r = spark.read.parquet(pqBookDir(g)).select("perm").head()
-      if (r.isNullAt(0)) None else Some(r.getSeq[Int](0).toArray)
-    })
-
   /** Active assigned dir ids: all published, minus any a later compaction
     * or refit superseded — the ids of every per-id tier too. */
   private def activeIds(ms: Seq[Manifest]): Seq[String] =
     log.activeIds(ms, "assigned")
 
-  /** A cell-partitioned relation (`assigned/` or its `packed/`/`pqcodes/`
-    * tier) over the active dir ids. basePath anchors partition discovery
-    * when several append roots are listed (each holding cell=<c> subdirs);
+  /** A relation (`assigned/`, its `packed/`/`pqcodes/` tier or its
+    * `vidmap/` sidecar) over the active dir ids. basePath anchors
+    * partition discovery when several append roots are listed (each
+    * holding cell=<c> subdirs);
     * only the manifest-listed dirs are read, so the replay view is
     * unaffected. */
   private def cellRelOf(ms: Seq[Manifest], rel: String): DataFrame = {
@@ -318,16 +298,6 @@ final class IvfStore private (private val spark: SparkSession,
     require(ids.nonEmpty, s"no committed $rel dirs under $path")
     spark.read.option("basePath", s"$path/$rel")
       .parquet(ids.map(log.dir(rel, _)): _*)
-  }
-
-  private def assignedRelOf(ms: Seq[Manifest]): DataFrame =
-    cellRelOf(ms, "assigned")
-
-  /** The vid→cell sidecar over the same active dir ids. */
-  private def vidmapRelOf(ms: Seq[Manifest]): DataFrame = {
-    val ids = activeIds(ms)
-    require(ids.nonEmpty, s"no committed vidmap dirs under $path")
-    spark.read.parquet(ids.map(log.dir("vidmap", _)): _*)
   }
 
   /** Nearest STORED cell for an embedding column — the frozen-centroid
@@ -364,18 +334,14 @@ final class IvfStore private (private val spark: SparkSession,
       // a store instance only exists for a committed layout (create
       // commits the first append before returning), so prev stats exist
       val prev = statsOf(log.statsIn(before))
-      val g = genOf(before)
-      val cs = centroidsFor(g) // the CURRENT generation's frozen matrix
+      // the CURRENT generation's frozen matrix and frozen codebooks —
+      // append never retrains (FAISS add)
+      val gen = generation(genOf(before))
       val added = writeAssigned(
         df.select(col(idCol).as("vid"), col(embCol).as("emb"),
           VectorFunctions.l2Norm(col(embCol)).as("nrm"),
-          cellOf(col(embCol), cs).as("cell")), id, prev.packedScale,
-        // frozen codebooks — append never retrains (FAISS add); a residual
-        // tier subtracts the SAME frozen generation's centroids, a
-        // permuted tier encodes under the SAME frozen permutation
-        pqBookFor(g),
-        if (pqBookFor(g).nonEmpty && pqResidualFor(g)) Some(cs) else None,
-        if (pqBookFor(g).nonEmpty) pqPermFor(g) else None)
+          cellOf(col(embCol), gen.centroids).as("cell")), id,
+        prev.packedScale, gen)
       StoreLog.kvOf(prev.copy(vectors = prev.vectors + added))
     }.stats)
 
@@ -384,12 +350,12 @@ final class IvfStore private (private val spark: SparkSession,
     * the SQ8 packed tier (both derived from a column-pruned read-back of
     * the written files — the assignment kernel runs once, not thrice).
     * The caller's commit start ([[StoreLog.begin]]) has cleared any
-    * same-named UNCOMMITTED dir a crashed predecessor left. Returns the
-    * row count, summed from parquet footers (no count job). */
+    * same-named UNCOMMITTED dir a crashed predecessor left. `gen` is the
+    * generation `rows` were assigned under; its PQ tier, if any, encodes
+    * the code sidecar. Returns the row count, summed from parquet footers
+    * (no count job). */
   private def writeAssigned(rows: DataFrame, id: String, scale: Int,
-      book: Option[PqAnn.Codebook],
-      resCents: Option[Seq[(Int, Array[Double])]] = None,
-      perm: Option[Array[Int]] = None): Long = {
+      gen: IvfStore.Generation): Long = {
     val aDir = log.dir("assigned", id)
     val vDir = log.dir("vidmap", id)
     val pDir = log.dir("packed", id)
@@ -422,7 +388,7 @@ final class IvfStore private (private val spark: SparkSession,
         org.apache.spark.sql.types.StructField("n",
           org.apache.spark.sql.types.LongType)), dDir)
       // the PQ code sidecar shares the packed tier's leaf-depth rule
-      book.foreach { _ =>
+      gen.tier.foreach { _ =>
         emptyOf(Seq(rows.schema("vid"),
           org.apache.spark.sql.types.StructField("codes",
             org.apache.spark.sql.types.ArrayType(
@@ -449,18 +415,17 @@ final class IvfStore private (private val spark: SparkSession,
       // a residual-tier book encodes x − centroid(cell) against the SAME
       // generation's frozen coarse centroids (still map-only — the
       // subtraction is a literal-map zip_with, no join)
-      book.foreach { b =>
-        val encBase = resCents match {
-          case Some(cs) => back.select(col("vid"),
-            PqAnn.residualCol(col("emb"), col("cell"), cs).as("emb"),
-            col("cell"))
-          case None => back.select("vid", "emb", "cell")
-        }
+      gen.tier.foreach { t =>
+        val encBase =
+          if (t.residual) back.select(col("vid"),
+            PqAnn.residualCol(col("emb"), col("cell"), gen.centroids)
+              .as("emb"), col("cell"))
+          else back.select("vid", "emb", "cell")
         // a permuted-tier book was trained on permuted (residual)
         // vectors: encode sees the same fixed coordinate order
-        val enc = perm.fold(encBase)(p => encBase.select(col("vid"),
+        val enc = t.perm.fold(encBase)(p => encBase.select(col("vid"),
           PqAnn.applyPerm(col("emb"), p).as("emb"), col("cell")))
-        PqAnn.encode(enc, "vid", "emb", b, keep = Seq("cell"))
+        PqAnn.encode(enc, "vid", "emb", t.book, keep = Seq("cell"))
           .sortWithinPartitions("cell", "vid")
           .write.partitionBy("cell").mode("errorifexists").parquet(qDir)
       }
@@ -473,7 +438,6 @@ final class IvfStore private (private val spark: SparkSession,
     * per-cell small files that per-append partitioning accumulates.
     * Row-identical: a straight union rewrite, no re-assignment. */
   private def compactInto(from: Seq[String], to: String): Unit = {
-    val g = genOf(log.visible(None))
     // cluster the fold by cell: appends stay map-only (latency), but
     // the compaction's whole purpose is merging the per-cell small
     // files they accumulate — an unclustered rewrite would re-emit
@@ -487,10 +451,7 @@ final class IvfStore private (private val spark: SparkSession,
       stats.packedScale,
       // re-encode: frozen book (+ frozen centroids when residual,
       // frozen permutation when permuted), bit-identical codes
-      pqBookFor(g),
-      if (pqBookFor(g).nonEmpty && pqResidualFor(g))
-        Some(centroidsFor(g)) else None,
-      if (pqBookFor(g).nonEmpty) pqPermFor(g) else None)
+      generation(genOf(log.visible(None))))
     ()
   }
 
@@ -524,8 +485,9 @@ final class IvfStore private (private val spark: SparkSession,
     * generation and its (retention-guarded) dirs and gets its original
     * answer — without the carry, the visible refit relation would contain
     * the replayed batch's own rows and a dedup gate would wrongly return
-    * empty. Self-propagating: a second refit carries the same token. */
-  /** `enablePermute` TURNS ON the OPQ-lite tier at this refit (the
+    * empty. Self-propagating: a second refit carries the same token.
+    *
+    * `enablePermute` TURNS ON the OPQ-lite tier at this refit (the
     * [[permuteAdvisory]] acted on — an already-permuted store keeps
     * its tier either way): the refit trains its books on the permuted
     * union relation exactly as a from-scratch `pqPermute = true`
@@ -534,7 +496,8 @@ final class IvfStore private (private val spark: SparkSession,
   def refit(k: Int, iters: Int = 2,
       enablePermute: Boolean = false): IvfStoreStats = log.locked {
     val (ms, seq, id) = log.begin('r')
-    require(!enablePermute || pqBookFor(genOf(ms)).nonEmpty,
+    val old = generation(genOf(ms)).tier
+    require(!enablePermute || old.nonEmpty,
       s"refit(enablePermute): no PQ tier under $path (pqM = 0) — the " +
         "permutation is a property of the tier's subspace allocation")
     val ids = activeIds(ms)
@@ -544,77 +507,86 @@ final class IvfStore private (private val spark: SparkSession,
       .lastOption
     val prev = statsOf(log.statsIn(ms))
     val g = genOf(ms) + 1
-    val rel = spark.read.option("basePath", s"$path/assigned")
-      .parquet(ids.map(id => s"$path/assigned/append=$id"): _*)
-      .select("vid", "emb", "nrm")
+    val rel = cellRelOf(ms, "assigned").select("vid", "emb", "nrm")
     val idx = IvfIndex.fit(rel, "vid", "emb", k, iters)
     try {
-      import spark.implicits._
-      // a crashed refit's uncommitted generation dir must not wedge the
-      // retry (same g — computed from COMMITTED generations only)
-      log.manifests.clearOrphan(centroidDir(g))
-      idx.centroids.map { case (cell, c) => (cell, c.toSeq) }
-        .toDF("cell", "c")
-        .coalesce(1).write.mode("errorifexists").parquet(centroidDir(g))
       // the PQ tier refits WITH the coarse index: same m, the create's
       // pinned k, trained on the same stored corpus — so refit-then-query
       // equals a from-scratch create on the union (the dq142 contract,
       // extended to the codebooks)
-      val wasResidual =
-        pqBookFor(genOf(ms)).nonEmpty && pqResidualFor(genOf(ms))
-      val wasPermuted =
-        pqBookFor(genOf(ms)).nonEmpty && pqPermFor(genOf(ms)).nonEmpty
-      var newPerm: Option[Array[Int]] = None
-      val newBook = pqBookFor(genOf(ms)).map { ob =>
-        val k0 = pqTrainK(genOf(ms))
-        // a residual tier retrains on residuals against the NEW coarse
-        // generation (books are tied to their generation's centroids —
-        // the subtraction moves with the refit, so refit-then-query
-        // still equals a from-scratch residual create on the union)
-        val trainRel =
-          if (wasResidual)
-            idx.assigned.select(col("vid"),
-              PqAnn.residualCol(col("emb"), col("cell"), idx.centroids)
-                .as("emb"))
-          else rel
-        // a permuted tier recomputes its balanced permutation from the
-        // NEW training relation (generation-keyed like the books), so
-        // refit-then-query equals a from-scratch permuted create; the
-        // refreshed variance spectrum is persisted for every PQ refit
-        // (permuteAdvisory reads the current generation's)
-        val sums = PqAnn.varianceMicroSums(trainRel, "emb")
-        log.manifests.clearOrphan(varspecDir(g))
-        IvfStore.varspecDf(spark, sums._1, sums._2, sums._3)
-          .write.mode("errorifexists").parquet(varspecDir(g))
-        newPerm =
-          if (wasPermuted || enablePermute)
-            Some(PqAnn.balancedPermutationFromSums(sums._1, sums._2,
-              sums._3, ob.dims, ob.m))
-          else None
-        val fitRel = newPerm.fold(trainRel)(p => trainRel.select(
-          col("vid"), PqAnn.applyPerm(col("emb"), p).as("emb")))
-        val b = PqAnn.fit(fitRel, "vid", "emb", ob.dims, ob.m, k0, iters)
-        log.manifests.clearOrphan(pqBookDir(g))
-        IvfStore.bookDf(spark, b, k0, wasResidual, newPerm)
-          .write.mode("errorifexists").parquet(pqBookDir(g))
-        pqBookCache.put(g, Some(b))
-        pqResidualCache.put(g, wasResidual)
-        pqPermCache.put(g, newPerm)
-        b
-      }
+      val gen = writeGeneration(g, idx, rel, old.fold(0)(_.book.m),
+        old.fold(0)(_.k0), old.exists(_.residual),
+        old.exists(_.perm.nonEmpty) || enablePermute, iters)
       val n = writeAssigned(
         idx.assigned.select("vid", "emb", "nrm", "cell")
-          .repartition(col("cell")), id, prev.packedScale, newBook,
-        if (wasResidual) Some(idx.centroids) else None, newPerm)
+          .repartition(col("cell")), id, prev.packedScale, gen)
       val st = IvfStoreStats(idx.centroids.size,
         idx.centroids.head._2.length, n, prev.gateTau, prev.gateNprobe,
         prev.packedScale)
       log.manifests.commit(Manifest(rels = Map("assigned" -> Seq(id)),
         supersedes = Map("assigned" -> ids), stats = StoreLog.kvOf(st),
         token = carried, generation = Some(g)), seq)
-      centroidCache.put(g, idx.centroids)
       st
     } finally idx.release()
+  }
+
+  /** Write generation `g` from `idx`'s fit — the one generation writer
+    * behind [[IvfStore.create]] and [[refit]] — and cache it. With a PQ
+    * tier (`pqM > 0`), `pqM` per-subspace codebooks of `pqK` cells are
+    * trained on the SAME corpus as the centroids (FAISS train, before any
+    * add), frozen for appends: on `raw` (vid, emb), or with `residual` on
+    * x − centroid(cell) against THIS generation's coarse centroids (the
+    * IndexIVFPQ form — see PqAnn.residualCol; books are tied to their
+    * generation's centroids, so the subtraction moves with a refit);
+    * `permute` first deals the TRAINING relation's coordinates into
+    * variance-balanced subspaces (OPQ-lite — the permutation is computed
+    * on what gets encoded: residuals when both flags are on). A crashed
+    * predecessor's uncommitted dirs of the same `g` (computed from
+    * COMMITTED generations only) are cleared so the retry can't wedge. */
+  private def writeGeneration(g: Int, idx: IvfIndex, raw: DataFrame,
+      pqM: Int, pqK: Int, residual: Boolean, permute: Boolean,
+      iters: Int): IvfStore.Generation = {
+    import spark.implicits._
+    val tier = if (pqM == 0) None else Some {
+      val trainRel =
+        if (residual)
+          idx.assigned.select(col("vid"),
+            PqAnn.residualCol(col("emb"), col("cell"), idx.centroids)
+              .as("emb"))
+        else raw
+      val dims = idx.centroids.head._2.length
+      // the tier's variance spectrum is persisted for EVERY PQ generation
+      // (permuted or not): permuteAdvisory answers "would the balanced
+      // permutation pay here?" from these dims tiny rows, and the
+      // permuted path derives its permutation from the SAME sums (one
+      // corpus aggregation either way)
+      val (sx, sxx, n) = PqAnn.varianceMicroSums(trainRel, "emb")
+      require(sx.length == dims,
+        s"embeddings have ${sx.length} dims, not $dims")
+      val perm =
+        if (permute)
+          Some(PqAnn.balancedPermutationFromSums(sx, sxx, n, dims, pqM))
+        else None
+      val book = PqAnn.fit(
+        perm.fold(trainRel)(p => trainRel.select(col("vid"),
+          PqAnn.applyPerm(col("emb"), p).as("emb"))),
+        "vid", "emb", dims, pqM, pqK, iters)
+      (IvfStore.PqTier(book, pqK, residual, perm),
+        IvfStore.varspecDf(spark, sx, sxx, n))
+    }
+    val centroidsDf = idx.centroids.map { case (cell, c) => (cell, c.toSeq) }
+      .toDF("cell", "c").coalesce(1)
+    val dirs = ("centroids" -> centroidsDf) +: tier.toSeq.flatMap {
+      case (t, spectrum) => Seq("varspec" -> spectrum,
+        "pqbook" -> IvfStore.bookDf(spark, t))
+    }
+    dirs.foreach { case (name, df) =>
+      log.manifests.clearOrphan(genDir(name, g))
+      df.write.mode("errorifexists").parquet(genDir(name, g))
+    }
+    val gen = new IvfStore.Generation(idx.centroids, tier.map(_._1))
+    generations.put(g, gen)
+    gen
   }
 
   /** The active dir ids — every write leaves `drift/append=<id>` — in
@@ -753,6 +725,64 @@ final class IvfStore private (private val spark: SparkSession,
 
   // ---------------- queries ----------------
 
+  /** One search's driver-side probe, built once and shared by the four
+    * search tiers: the manifest snapshot (it pins both the generation's
+    * centroids and the relation dirs — consistent across a concurrent
+    * refit cut-over), its generation, and per query `(qid, vector,
+    * norm, probed cells)`, the cells ranked by [[nearestCellsDriver]]. */
+  private final class Probe(val ms: Seq[Manifest],
+      val gen: IvfStore.Generation,
+      val queries: Seq[(Long, Array[Float], Double, Seq[Int])]) {
+    /** One `(qid, qemb, qnrm, probe)` row per probed cell of each query. */
+    val rows: Seq[(Long, Seq[Float], Double, Int)] =
+      queries.flatMap { case (qid, emb, nrm, cells) =>
+        cells.map(c => (qid, emb.toSeq, nrm, c)) }
+    /** The distinct probed cells — the candidate scan's literal filter on
+      * the PARTITION column (pruning at file listing). */
+    val cells: Seq[Int] = rows.map(_._4).distinct
+  }
+
+  private def probe(queries: Seq[(Long, Array[Float])], nprobe: Int,
+      excludeToken: Option[String], pqUse: Option[String] = None): Probe = {
+    val (ms, gen) = snapshot(excludeToken, pqUse)
+    new Probe(ms, gen, queries.map { case (qid, emb) =>
+      (qid, emb, IvfStore.l2NormDriver(emb),
+        nearestCellsDriver(emb.toSeq, nprobe, gen.centroids))
+    })
+  }
+
+  /** The exact cosine of a stored float row (`emb`, `nrm`) against the
+    * query columns — every exact tier and gate scores with this, so a
+    * re-ranked pair scores bit-identically to [[search]]. */
+  private def cosineTo(qemb: String, qnrm: String): Column =
+    (VectorFunctions.dot(col("emb"), col(qemb)) /
+      (col("nrm") * col(qnrm))).as("sim")
+
+  /** The candidate join of the float and SQ8 tiers: `rel`'s probed cell
+    * partitions against the probe rows (as `query` shapes them), a
+    * stored row never matching its own query id (the self-match rule of
+    * [[IvfIndex.queryAll]]).
+    *
+    * Hot-cell note: unlike the gate's relation-vs-relation join
+    * ([[saltedCandidates]]), this join BROADCASTS the driver-sized
+    * probe rows — there is no shuffle key to skew: the candidate scan
+    * stays partitioned by its parquet splits (`maxPartitionBytes`), so a
+    * hot cell's rows are already spread across scan tasks and each task
+    * joins its split against the broadcast map. No salt needed. */
+  private def probedJoin(p: Probe, rel: String,
+      query: DataFrame => DataFrame): DataFrame = {
+    import spark.implicits._
+    cellRelOf(p.ms, rel)
+      .where(col("cell").isin(p.cells: _*))
+      .join(broadcast(query(p.rows.toDF("qid", "qemb", "qnrm", "probe"))),
+        col("cell") === col("probe") && col("vid") =!= col("qid"))
+  }
+
+  private def noHits(score: String): DataFrame = {
+    import spark.implicits._
+    spark.emptyDataset[(Long, Long, Double)].toDF("qid", "vid", score)
+  }
+
   /** Top-k cosine neighbors for caller-supplied `(qid, vector)` queries —
     * the PRIMARY search API (round-10 verdict #2: real queries are
     * usually not already in the index). Probe cells are ranked on the
@@ -761,13 +791,16 @@ final class IvfStore private (private val spark: SparkSession,
     * (a literal predicate on the PARTITION column — pruning at file
     * listing, the dq59 class of evidence). Output: (qid, vid, sim),
     * top-k per qid; stored rows sharing a query's id are excluded (the
-    * self-match rule of [[IvfIndex.queryAll]]). */
+    * self-match rule of [[IvfIndex.queryAll]]). Stored ids search through
+    * [[vectorsOf]]. */
   def search(queries: Seq[(Long, Array[Float])], topK: Int, nprobe: Int,
-      excludeToken: Option[String] = None): DataFrame =
-    searchRows(
-      queries.map { case (qid, emb) =>
-        (qid, emb.toSeq, IvfStore.l2NormDriver(emb))
-      }, topK, nprobe, excludeToken)
+      excludeToken: Option[String] = None): DataFrame = {
+    val p = probe(queries, nprobe, excludeToken)
+    if (p.rows.isEmpty) return noHits("sim")
+    val scored = probedJoin(p, "assigned", identity)
+      .select(col("qid"), col("vid"), cosineTo("qemb", "qnrm"))
+    CandidateTopK.topPerQuery(scored, "sim", topK).select("qid", "vid", "sim")
+  }
 
   /** ADVISORY-DRIVEN nprobe (round-14 verdict #6): resolve the probe
     * count from the stored occupancy statistics instead of a caller
@@ -776,9 +809,8 @@ final class IvfStore private (private val spark: SparkSession,
     * default 500000 = "expect to scan half the corpus mass"). A skewed
     * store resolves FEWER probes (its hot cell already carries the
     * mass), a balanced one more — the operational knob the r13 "raise
-    * nprobe after refit" lesson asked to make store-readable, now wired
-    * through every search form: pass `nprobe = None` to any of
-    * [[search]]/[[searchAll]]/[[searchPq]]/[[searchAllPq]]. Reads only
+    * nprobe after refit" lesson asked to make store-readable: pass
+    * `autoNprobe()` as the `nprobe` of any search form. Reads only
     * the ≤ k·appends drift sidecar rows, never the vector relation. */
   def autoNprobe(): Int = {
     val target = IndexConf.strictLong(spark,
@@ -788,28 +820,16 @@ final class IvfStore private (private val spark: SparkSession,
     occupancyAdvisory(target).recommendedNprobe
   }
 
-  /** [[search]] with [[autoNprobe]] resolution: `nprobe = None` reads
-    * the recommendation from the stored occupancy advisory. */
-  def search(queries: Seq[(Long, Array[Float])], topK: Int,
-      nprobe: Option[Int], excludeToken: Option[String]): DataFrame =
-    search(queries, topK, nprobe.getOrElse(autoNprobe()), excludeToken)
-
-  /** Top-k cosine neighbors for every STORED query id — the convenience
-    * form of [[search]]: the query vectors are resolved through the
+  /** The STORED vectors of `queryIds` as `(vid, vector)` search input —
+    * the stored-id form of every search tier: resolved through the
     * `vidmap/` sidecar (home cells first, then a fetch pruned to those
     * cell partitions with `vid IN` pushed to parquet row groups), never a
-    * full pass over the vector relation. */
-  def searchAll(queryIds: Seq[Long], topK: Int, nprobe: Int,
-      excludeToken: Option[String] = None): DataFrame =
-    searchRows(
-      lookupPlan(queryIds, excludeToken).collect().toSeq.map { r =>
-        (r.getLong(0), r.getSeq[Float](1), r.getDouble(2))
-      }, topK, nprobe, excludeToken)
-
-  /** [[searchAll]] with [[autoNprobe]] resolution (`nprobe = None`). */
-  def searchAll(queryIds: Seq[Long], topK: Int, nprobe: Option[Int],
-      excludeToken: Option[String]): DataFrame =
-    searchAll(queryIds, topK, nprobe.getOrElse(autoNprobe()), excludeToken)
+    * full pass over the vector relation. Ids not stored are absent. */
+  def vectorsOf(queryIds: Seq[Long],
+      excludeToken: Option[String] = None): Seq[(Long, Array[Float])] =
+    lookupPlan(queryIds, excludeToken).collect().toSeq.map { r =>
+      (r.getLong(0), r.getSeq[Float](1).toArray)
+    }
 
   /** The stored-id lookup BEFORE its collect — plan-audit hook: the spec
     * asserts its vector-relation scan is pruned to the queries' home
@@ -818,47 +838,15 @@ final class IvfStore private (private val spark: SparkSession,
   private[graft] def lookupPlan(queryIds: Seq[Long],
       excludeToken: Option[String]): DataFrame = {
     val ms = log.visible(excludeToken)
-    val homeCells = vidmapRelOf(ms)
+    val homeCells = cellRelOf(ms, "vidmap")
       .filter(col("vid").isin(queryIds: _*))
       .select("cell").distinct()
       .collect().map(_.getInt(0)).toSeq // ≤ min(#queries, k) rows
     if (homeCells.isEmpty)
-      assignedRelOf(ms).select("vid", "emb", "nrm").limit(0)
-    else assignedRelOf(ms)
+      cellRelOf(ms, "assigned").select("vid", "emb", "nrm").limit(0)
+    else cellRelOf(ms, "assigned")
       .where(col("cell").isin(homeCells: _*) && col("vid").isin(queryIds: _*))
       .select("vid", "emb", "nrm")
-  }
-
-  /** The shared probe→prune→score→top-k tail of both search forms.
-    *
-    * Hot-cell note: unlike the gate's relation-vs-relation join
-    * ([[saltedCandidates]]), this join BROADCASTS the driver-sized probe
-    * rows — there is no shuffle key to skew: the candidate scan stays
-    * partitioned by its parquet splits (`maxPartitionBytes`), so a hot
-    * cell's rows are already spread across scan tasks and each task
-    * joins its split against the broadcast map. No salt needed. */
-  private def searchRows(qRows: Seq[(Long, Seq[Float], Double)], topK: Int,
-      nprobe: Int, excludeToken: Option[String]): DataFrame = {
-    import spark.implicits._
-    // ONE manifest snapshot pins both the generation's centroids and the
-    // relation dirs — consistent across a concurrent refit cut-over
-    val ms = log.visible(excludeToken)
-    val cs = centroidsFor(genOf(ms))
-    val probes = qRows.flatMap { case (qid, emb, nrm) =>
-      nearestCellsDriver(emb, nprobe, cs).map(c => (qid, emb, nrm, c))
-    }
-    if (probes.isEmpty)
-      return spark.emptyDataset[(Long, Long, Double)]
-        .toDF("qid", "vid", "sim")
-    val probeDf = probes.toDF("qid", "qemb", "qnrm", "probe")
-    val scored = assignedRelOf(ms)
-      .where(col("cell").isin(probes.map(_._4).distinct: _*))
-      .join(broadcast(probeDf),
-        col("cell") === col("probe") && col("vid") =!= col("qid"))
-      .select(col("qid"), col("vid"),
-        (VectorFunctions.dot(col("emb"), col("qemb")) /
-          (col("nrm") * col("qnrm"))).as("sim"))
-    CandidateTopK.topPerQuery(scored, "sim", topK).select("qid", "vid", "sim")
   }
 
   /** [[search]] on the STORED SQ8 tier: candidates come exclusively from
@@ -870,50 +858,27 @@ final class IvfStore private (private val spark: SparkSession,
     * [[IvfPackedIndex.queryAll]] on identical centroids. Output:
     * (qid, vid, score: long), top-k per qid. */
   def searchPacked(queries: Seq[(Long, Array[Float])], topK: Int,
-      nprobe: Int, excludeToken: Option[String] = None): DataFrame =
-    searchRowsPacked(
-      queries.map { case (qid, emb) =>
-        (qid, emb.toSeq, IvfStore.l2NormDriver(emb))
-      }, topK, nprobe, excludeToken)
-
-  /** [[searchAll]]'s stored-id convenience form on the SQ8 tier — the
-    * lookup rides the same vidmap-pruned path; only the candidate scan
-    * switches to `packed/`. */
-  def searchAllPacked(queryIds: Seq[Long], topK: Int, nprobe: Int,
-      excludeToken: Option[String] = None): DataFrame =
-    searchRowsPacked(
-      lookupPlan(queryIds, excludeToken).collect().toSeq.map { r =>
-        (r.getLong(0), r.getSeq[Float](1), r.getDouble(2))
-      }, topK, nprobe, excludeToken)
-
-  private def searchRowsPacked(qRows: Seq[(Long, Seq[Float], Double)],
-      topK: Int, nprobe: Int, excludeToken: Option[String]): DataFrame = {
+      nprobe: Int, excludeToken: Option[String] = None): DataFrame = {
     import spark.implicits._
     val scale = stats.packedScale
-    val ms = log.visible(excludeToken)
-    val cs = centroidsFor(genOf(ms))
-    val probes = qRows.flatMap { case (qid, emb, nrm) =>
-      nearestCellsDriver(emb, nprobe, cs).map(c => (qid, emb, nrm, c))
-    }
-    if (probes.isEmpty)
+    val p = probe(queries, nprobe, excludeToken)
+    if (p.rows.isEmpty)
       return spark.emptyDataset[(Long, Long, Long)]
         .toDF("qid", "vid", "score")
     // quantize the query rows with the WRITE path's expression (same
     // unit-vector + floor(x·s + 0.5) clamp), not a driver reimplementation
-    val probeDf = probes.toDF("qid", "qemb", "qnrm", "probe")
-      .select(col("qid"),
+    val scored = probedJoin(p, "packed", _.select(col("qid"),
         QuantizedAnn.quantizePacked(
           IvfIndex.unit(col("qemb"), col("qnrm")), scale).as("qpemb"),
-        col("probe"))
-    val scored = cellRelOf(ms, "packed")
-      .where(col("cell").isin(probes.map(_._4).distinct: _*))
-      .join(broadcast(probeDf),
-        col("cell") === col("probe") && col("vid") =!= col("qid"))
+        col("probe")))
       .select(col("qid"), col("vid"),
         graft.functions.ByteDot(col("qpemb"), col("pemb")).as("score"))
     CandidateTopK.topPerQuery(scored, "score", topK)
       .select("qid", "vid", "score")
   }
+
+  private val pqSearchUse =
+    Some("create(..., pqM = <subspaces>) stores the code relation")
 
   /** [[search]] on the STORED PQ tier — IVF-PQ from disk: probe cells
     * rank on the driver against the snapshot generation's centroids, the
@@ -927,45 +892,29 @@ final class IvfStore private (private val spark: SparkSession,
     * qid. Refuses a layout created without the tier (pqM = 0). */
   def searchPq(queries: Seq[(Long, Array[Float])], topK: Int,
       nprobe: Int, excludeToken: Option[String] = None): DataFrame =
-    searchPqMs(log.visible(excludeToken), queries, topK, nprobe)
+    pqScores(probe(queries, nprobe, excludeToken, pqSearchUse), topK)
 
-  /** [[searchPq]] against an ALREADY-RESOLVED manifest snapshot — the
-    * shared body, so [[searchPqRerank]]'s two stages read ONE snapshot
-    * (a commit landing between them can no longer rerank stage 1's
-    * shortlist against a different generation's centroids). */
-  private def searchPqMs(ms: Seq[Manifest],
-      queries: Seq[(Long, Array[Float])], topK: Int,
-      nprobe: Int): DataFrame = {
-    import spark.implicits._
-    val g = genOf(ms)
-    val book = pqBookFor(g).getOrElse(throw new IllegalArgumentException(
-      s"no PQ tier under $path (layout created with pqM = 0; " +
-        "create(..., pqM = <subspaces>) stores the code relation)"))
-    if (queries.isEmpty)
-      return spark.emptyDataset[(Long, Long, Double)]
-        .toDF("qid", "vid", "score")
-    val cs = centroidsFor(g)
-    val probes = queries.map { case (qid, emb) =>
-      qid -> nearestCellsDriver(emb.toSeq, nprobe, cs)
-    }.toMap
-    val rel = cellRelOf(ms, "pqcodes")
+  /** [[searchPq]] over an already-built probe — the shared body, so
+    * [[searchPqRerank]]'s two stages read ONE snapshot (a commit landing
+    * between them can no longer rerank stage 1's shortlist against a
+    * different generation's centroids). */
+  private def pqScores(p: Probe, topK: Int): DataFrame = {
+    if (p.queries.isEmpty) return noHits("score")
+    val t = p.gen.tier.get
+    val queries = p.queries.map(q => (q._1, q._2))
+    val probes = p.queries.map(q => q._1 -> q._4).toMap
+    val rel = cellRelOf(p.ms, "pqcodes")
       .where(col("cell").isin(probes.values.flatten.toSeq.distinct: _*))
     // a residual-tier generation scores q·centroid(cell) + the residual
     // table fold (the codes ARE residual codes — the add-back term is
     // driver-sized, the scan shape identical); a permuted-tier
     // generation builds its subspace tables from permuted queries (the
     // coarse add-back stays in original coordinates)
-    val perm = pqPermFor(g)
-    if (pqResidualFor(g))
-      PqAnn.adcTopKProbedResidual(rel, book, queries, probes, cs, topK,
-        perm)
-    else PqAnn.adcTopKProbed(rel, book, queries, probes, topK, perm)
+    if (t.residual)
+      PqAnn.adcTopKProbedResidual(rel, t.book, queries, probes,
+        p.gen.centroids, topK, t.perm)
+    else PqAnn.adcTopKProbed(rel, t.book, queries, probes, topK, t.perm)
   }
-
-  /** [[searchPq]] with [[autoNprobe]] resolution (`nprobe = None`). */
-  def searchPq(queries: Seq[(Long, Array[Float])], topK: Int,
-      nprobe: Option[Int], excludeToken: Option[String]): DataFrame =
-    searchPq(queries, topK, nprobe.getOrElse(autoNprobe()), excludeToken)
 
   /** TWO-STAGE IVF-PQ search — ADC shortlist, then EXACT re-rank: the
     * production recall-recovery pattern (FAISS's `search` + refine):
@@ -981,7 +930,8 @@ final class IvfStore private (private val spark: SparkSession,
     * recall: exact WITHIN the shortlist (quantization error can no
     * longer reorder the final top-k, only exclude a candidate from the
     * net — widen `shortlist` to close that gap, measured in the dq173
-    * Bench evidence). Output: (qid, vid, sim: cosine), top-k per qid.
+    * Bench evidence; 4·topK is FAISS's refine `k_factor` convention).
+    * Output: (qid, vid, sim: cosine), top-k per qid.
     * Works on both raw-vector and residual generations (stage 1
     * routes by the stored flag). BOTH stages read ONE manifest
     * snapshot, resolved here — a commit (append/compact/refit) landing
@@ -992,78 +942,25 @@ final class IvfStore private (private val spark: SparkSession,
     import spark.implicits._
     require(shortlist >= topK,
       s"searchPqRerank: shortlist ($shortlist) must be >= topK ($topK)")
-    val ms = log.visible(excludeToken)
-    val cs = centroidsFor(genOf(ms))
-    val short = searchPqMs(ms, queries, shortlist, nprobe)
+    val p = probe(queries, nprobe, excludeToken, pqSearchUse)
+    val short = pqScores(p, shortlist)
       .select("qid", "vid").as[(Long, Long)].collect()
-    if (short.isEmpty)
-      return spark.emptyDataset[(Long, Long, Double)]
-        .toDF("qid", "vid", "sim")
+    if (short.isEmpty) return noHits("sim")
     // Q·shortlist pairs — driver-sized by contract (queries are a
     // driver-side Seq, shortlist a small constant)
     val pairDf = short.toSeq.toDF("qid", "vid")
-    val qDf = queries.map { case (qid, emb) =>
-      (qid, emb.toSeq, IvfStore.l2NormDriver(emb))
+    val qDf = p.queries.map { case (qid, emb, nrm, _) =>
+      (qid, emb.toSeq, nrm)
     }.toDF("qid", "qemb", "qnrm")
-    val cells = queries
-      .flatMap { case (_, emb) => nearestCellsDriver(emb.toSeq, nprobe, cs) }
-      .distinct
-    val reranked = assignedRelOf(ms)
-      .where(col("cell").isin(cells: _*) &&
+    val reranked = cellRelOf(p.ms, "assigned")
+      .where(col("cell").isin(p.cells: _*) &&
         col("vid").isin(short.map(_._2).distinct.toSeq: _*))
       .join(broadcast(pairDf), Seq("vid"))
       .join(broadcast(qDf), Seq("qid"))
-      .select(col("qid"), col("vid"),
-        (VectorFunctions.dot(col("emb"), col("qemb")) /
-          (col("nrm") * col("qnrm"))).as("sim"))
+      .select(col("qid"), col("vid"), cosineTo("qemb", "qnrm"))
     CandidateTopK.topPerQuery(reranked, "sim", topK)
       .select("qid", "vid", "sim")
   }
-
-  /** [[searchPqRerank]] with ADVISORY resolution — the production entry
-    * point (rerank is the path a caller should prefer; it must not be
-    * the one form still demanding literals): `nprobe = None` resolves
-    * through [[autoNprobe]] exactly like every other search form, and
-    * `shortlist = None` defaults to 4·topK (FAISS's refine `k_factor`
-    * convention). */
-  def searchPqRerank(queries: Seq[(Long, Array[Float])], topK: Int,
-      nprobe: Option[Int], shortlist: Option[Int],
-      excludeToken: Option[String]): DataFrame =
-    searchPqRerank(queries, topK, nprobe.getOrElse(autoNprobe()),
-      shortlist.getOrElse(4 * topK), excludeToken)
-
-  /** [[searchPqRerank]]'s stored-id convenience form (the
-    * [[searchAllPq]] lookup shape). */
-  def searchAllPqRerank(queryIds: Seq[Long], topK: Int, nprobe: Int,
-      shortlist: Int, excludeToken: Option[String] = None): DataFrame =
-    searchPqRerank(
-      lookupPlan(queryIds, excludeToken).collect().toSeq.map { r =>
-        (r.getLong(0), r.getSeq[Float](1).toArray)
-      }, topK, nprobe, shortlist, excludeToken)
-
-  /** [[searchAllPqRerank]] with advisory resolution (`nprobe = None` →
-    * [[autoNprobe]], `shortlist = None` → 4·topK). */
-  def searchAllPqRerank(queryIds: Seq[Long], topK: Int,
-      nprobe: Option[Int], shortlist: Option[Int],
-      excludeToken: Option[String]): DataFrame =
-    searchAllPqRerank(queryIds, topK, nprobe.getOrElse(autoNprobe()),
-      shortlist.getOrElse(4 * topK), excludeToken)
-
-  /** [[searchAll]]'s stored-id convenience form on the PQ tier — the
-    * vidmap-pruned lookup resolves the query vectors, the candidate scan
-    * switches to `pqcodes/`. */
-  def searchAllPq(queryIds: Seq[Long], topK: Int, nprobe: Int,
-      excludeToken: Option[String] = None): DataFrame =
-    searchPq(
-      lookupPlan(queryIds, excludeToken).collect().toSeq.map { r =>
-        (r.getLong(0), r.getSeq[Float](1).toArray)
-      }, topK, nprobe, excludeToken)
-
-  /** [[searchAllPq]] with [[autoNprobe]] resolution (`nprobe = None`). */
-  def searchAllPq(queryIds: Seq[Long], topK: Int, nprobe: Option[Int],
-      excludeToken: Option[String]): DataFrame =
-    searchAllPq(queryIds, topK, nprobe.getOrElse(autoNprobe()),
-      excludeToken)
 
   /** The `nprobe` nearest stored cells for one query vector, computed on
     * the driver with EXACTLY the executor kernel's arithmetic (left-to-
@@ -1088,6 +985,65 @@ final class IvfStore private (private val spark: SparkSession,
 
   // ---------------- semantic ingest gate ----------------
 
+  /** One gate call's probe side, shared by [[semanticPairs]],
+    * [[semanticPairsPq]] and [[gateCandidateCounts]]: the snapshot, its
+    * generation, and the batch's map-only probe projection (frozen-
+    * centroid kernel) `(__qid, __qemb, __qnrm, __probe)`. */
+  private final class GateProbe(val ms: Seq[Manifest],
+      val gen: IvfStore.Generation, val probes: DataFrame) {
+    /** The batch's DISTINCT probed cells — ≤ k rows by construction. */
+    lazy val cells: Seq[Int] =
+      probes.select("__probe").distinct().collect().map(_.getInt(0)).toSeq
+    lazy val salt: Int = IndexConf.strictInt(spark,
+      "spark.graft.ivfstore.cellSalt", default = 8, min = 1)
+  }
+
+  /** `pairs` over the gate's probed cells; an empty batch (the streaming
+    * loop's schema probe) gets an empty result in the contract shape,
+    * id-typed from the batch itself. */
+  private def pairsOr(gp: GateProbe)(pairs: => DataFrame): DataFrame =
+    if (gp.cells.isEmpty)
+      gp.probes.select(col("__qid").as("qid"),
+        col("__qid").cast("long").as("vid"), lit(0.0).as("sim"))
+    else pairs
+
+  /** The gate's candidate space over `rel`'s probed cells under the
+    * HOT-CELL SKEW GUARD (round-11 verdict #1): the stored side is
+    * bucketed by `pmod(hash(vid), cellSalt)` and each probe row
+    * replicated once per salt bucket, so the in-cell join's shuffle key
+    * is (cell, salt) and a skewed cell — one dominant topic cluster, the
+    * common case in real embedding corpora — spreads across `cellSalt`
+    * tasks instead of funneling `|stored∩cell| × |probes∩cell|` work
+    * through one (the `hotDigestCap`/`maxBucket` treatment applied to the
+    * embedding modality). RESULT-IDENTICAL to the unsalted join by
+    * construction: every (stored, probe) pair matches exactly the one
+    * probe replica whose salt equals the stored row's.
+    * `spark.graft.ivfstore.cellSalt` defaults to 8; 1 restores the
+    * unsalted plan. The probe side (`probed`, the probe rows with any
+    * query-side columns added) is the replicated side — it is the daily
+    * batch (× nprobe × cellSalt rows), never the corpus. */
+  private def saltedCandidates(gp: GateProbe, rel: String,
+      probed: DataFrame): DataFrame =
+    cellRelOf(gp.ms, rel)
+      .where(col("cell").isin(gp.cells: _*))
+      .withColumn("__vsalt", pmod(hash(col("vid")), lit(gp.salt)))
+      .join(probed.withColumn("__qsalt",
+          explode(array((0 until gp.salt).map(i => lit(i)): _*))),
+        col("cell") === col("__probe") && col("__vsalt") === col("__qsalt"))
+
+  private def gateProbe(batch: DataFrame, idCol: String, embCol: String,
+      nprobe: Int, excludeToken: Option[String],
+      pqUse: Option[String] = None): GateProbe = {
+    val (ms, gen) = snapshot(excludeToken, pqUse)
+    new GateProbe(ms, gen,
+      batch.select(col(idCol).as("__qid"), col(embCol).as("__qemb"),
+          VectorFunctions.l2Norm(col(embCol)).as("__qnrm"),
+          IvfIndex.probeCells(col(embCol), gen.centroids, nprobe, spark)
+            .as("__probes"))
+        .select(col("__qid"), col("__qemb"), col("__qnrm"),
+          explode(col("__probes")).as("__probe")))
+  }
+
   /** `(qid, vid, sim)` for every incoming embedding whose cosine against
     * some STORED vector in its `nprobe` probed cells exceeds `tau` — the
     * semantic near-duplicate evidence the gate acts on. Map-only probe
@@ -1097,11 +1053,8 @@ final class IvfStore private (private val spark: SparkSession,
   def semanticPairs(batch: DataFrame, idCol: String, embCol: String,
       tau: Double, nprobe: Int,
       excludeToken: Option[String] = None): DataFrame = {
-    val ms = log.visible(excludeToken)
-    val probes = probeProjection(batch, idCol, embCol, nprobe,
-      centroidsFor(genOf(ms)))
-    CacheScope.withCached(probes)(
-      pairsPlan(probes, tau, ms))
+    val gp = gateProbe(batch, idCol, embCol, nprobe, excludeToken)
+    CacheScope.withCached(gp.probes)(pairsPlan(gp, tau))
   }
 
   /** The gate's UN-materialized plan — plan-audit hook (the
@@ -1109,64 +1062,14 @@ final class IvfStore private (private val spark: SparkSession,
     * collapses its result with a call-scoped checkpoint before a spec
     * could walk it for the probed-cells-only scan property. */
   private[graft] def gatePlanFor(batch: DataFrame, idCol: String,
-      embCol: String, tau: Double, nprobe: Int): DataFrame = {
-    val ms = log.visible(None)
-    pairsPlan(probeProjection(batch, idCol, embCol, nprobe,
-      centroidsFor(genOf(ms))), tau, ms)
-  }
+      embCol: String, tau: Double, nprobe: Int): DataFrame =
+    pairsPlan(gateProbe(batch, idCol, embCol, nprobe, None), tau)
 
-  private def probeProjection(batch: DataFrame, idCol: String,
-      embCol: String, nprobe: Int,
-      cs: Seq[(Int, Array[Double])]): DataFrame =
-    batch.select(col(idCol).as("__qid"), col(embCol).as("__qemb"),
-        VectorFunctions.l2Norm(col(embCol)).as("__qnrm"),
-        IvfIndex.probeCells(col(embCol), cs, nprobe, spark)
-          .as("__probes"))
-      .select(col("__qid"), col("__qemb"), col("__qnrm"),
-        explode(col("__probes")).as("__probe"))
-
-  /** The gate's candidate space under the HOT-CELL SKEW GUARD (round-11
-    * verdict #1): the stored side is bucketed by
-    * `pmod(hash(vid), cellSalt)` and each probe row replicated once per
-    * salt bucket, so the in-cell join's shuffle key is (cell, salt) and
-    * a skewed cell — one dominant topic cluster, the common case in real
-    * embedding corpora — spreads across `cellSalt` tasks instead of
-    * funneling `|stored∩cell| × |probes∩cell|` work through one (the
-    * `hotDigestCap`/`maxBucket` treatment applied to the embedding
-    * modality). RESULT-IDENTICAL to the unsalted join by construction:
-    * every (stored, probe) pair matches exactly the one probe replica
-    * whose salt equals the stored row's. `spark.graft.ivfstore.cellSalt`
-    * defaults to 8; 1 restores the unsalted plan. The probe side is the
-    * replicated side — it is the daily batch (× nprobe × cellSalt rows),
-    * never the corpus. */
-  private def saltedCandidates(probes: DataFrame, cells: Seq[Int],
-      ms: Seq[Manifest]): DataFrame = {
-    val s = IndexConf.strictInt(spark,
-      "spark.graft.ivfstore.cellSalt", default = 8, min = 1)
-    val stored = assignedRelOf(ms)
-      .where(col("cell").isin(cells: _*))
-      .withColumn("__vsalt", pmod(hash(col("vid")), lit(s)))
-    val probed = probes.withColumn("__qsalt",
-      explode(array((0 until s).map(i => lit(i)): _*)))
-    stored.join(probed,
-      col("cell") === col("__probe") && col("__vsalt") === col("__qsalt"))
-  }
-
-  private def pairsPlan(probes: DataFrame, tau: Double,
-      ms: Seq[Manifest]): DataFrame = {
-    val cells = probes.select("__probe").distinct()
-      .collect().map(_.getInt(0)).toSeq // ≤ k rows by construction
-    if (cells.isEmpty)
-      // empty batch (the streaming loop's schema probe): an empty result
-      // in the contract shape, id-typed from the batch itself
-      return probes.select(col("__qid").as("qid"),
-        col("__qid").cast("long").as("vid"), lit(0.0).as("sim"))
-    saltedCandidates(probes, cells, ms)
+  private def pairsPlan(gp: GateProbe, tau: Double): DataFrame =
+    pairsOr(gp)(saltedCandidates(gp, "assigned", gp.probes)
       .select(col("__qid").as("qid"), col("vid"),
-        (VectorFunctions.dot(col("emb"), col("__qemb")) /
-          (col("nrm") * col("__qnrm"))).as("sim"))
-      .filter(col("sim") > tau)
-  }
+        cosineTo("__qemb", "__qnrm"))
+      .filter(col("sim") > tau))
 
   /** Per-(cell, salt) candidate counts of the gate join — the skew-guard
     * evidence surface (the hot-cell spec and Bench's
@@ -1176,14 +1079,10 @@ final class IvfStore private (private val spark: SparkSession,
   def gateCandidateCounts(batch: DataFrame, idCol: String, embCol: String,
       nprobe: Int, excludeToken: Option[String] = None): DataFrame = {
     import spark.implicits._
-    val ms = log.visible(excludeToken)
-    val probes = probeProjection(batch, idCol, embCol, nprobe,
-      centroidsFor(genOf(ms)))
-    val cells = probes.select("__probe").distinct()
-      .collect().map(_.getInt(0)).toSeq
-    if (cells.isEmpty)
+    val gp = gateProbe(batch, idCol, embCol, nprobe, excludeToken)
+    if (gp.cells.isEmpty)
       spark.emptyDataset[(Int, Int, Long)].toDF("cell", "salt", "candidates")
-    else saltedCandidates(probes, cells, ms)
+    else saltedCandidates(gp, "assigned", gp.probes)
       .groupBy(col("cell"), col("__vsalt").as("salt"))
       .agg(count(lit(1)).as("candidates"))
   }
@@ -1217,123 +1116,98 @@ final class IvfStore private (private val spark: SparkSession,
       tau: Double, nprobe: Int, shortlist: Int,
       excludeToken: Option[String] = None): DataFrame = {
     require(shortlist >= 1, "shortlist must be >= 1")
-    val ms = log.visible(excludeToken)
-    val g = genOf(ms)
-    val book = pqBookFor(g).getOrElse(throw new IllegalArgumentException(
-      s"no PQ tier under $path (layout created with pqM = 0; " +
-        "the PQ-tier gate needs the code relation)"))
-    val cs = centroidsFor(g)
-    val probes = probeProjection(batch, idCol, embCol, nprobe, cs)
-    CacheScope.withCached(probes) {
-      val cells = probes.select("__probe").distinct()
-        .collect().map(_.getInt(0)).toSeq // ≤ k rows by construction
-      if (cells.isEmpty)
-        // empty batch (the streaming loop's schema probe): an empty
-        // result in the contract shape, id-typed from the batch itself
-        probes.select(col("__qid").as("qid"),
-          col("__qid").cast("long").as("vid"), lit(0.0).as("sim"))
-      else pairsPlanPqNonEmpty(probes, tau, shortlist, ms, g, book, cells)
-    }
+    val gp = gateProbe(batch, idCol, embCol, nprobe, excludeToken,
+      Some("the PQ-tier gate needs the code relation"))
+    CacheScope.withCached(gp.probes)(
+      pairsOr(gp)(pqPairs(gp, tau, shortlist)))
   }
 
-  private def pairsPlanPqNonEmpty(probes: DataFrame, tau: Double,
-      shortlist: Int, ms: Seq[Manifest], g: Int, book: PqAnn.Codebook,
-      cells: Seq[Int]): DataFrame = {
-    val cs = centroidsFor(g)
-    locally {
-      val s = IndexConf.strictInt(spark,
-        "spark.graft.ivfstore.cellSalt", default = 8, min = 1)
-      // stage 1: the m-byte wide net over probed code partitions
-      val codes = cellRelOf(ms, "pqcodes")
-        .where(col("cell").isin(cells: _*))
-        .withColumn("__vsalt", pmod(hash(col("vid")), lit(s)))
-      val qp = pqPermFor(g).fold(col("__qemb"))(p =>
-        PqAnn.applyPerm(col("__qemb"), p))
-      val probed = probes
-        .withColumn("__qp", qp)
-        .withColumn("__qsalt",
-          explode(array((0 until s).map(i => lit(i)): _*)))
-      val adc = PqAnn.adcDotCol(col("__qp"), col("codes"), book, spark)
-      val est =
-        if (pqResidualFor(g)) {
-          val cLit = typedlit(cs.map { case (id, c) => id -> c.toSeq }.toMap)
-          VectorFunctions.dot(col("__qemb"),
-            element_at(cLit, col("cell"))) + adc
-        } else adc
-      // NO self-id exclusion — the SEARCH path excludes qid==vid (a
-      // query shouldn't return itself), but the GATE's contract is the
-      // float gate's: a stored row with the batch row's own id IS
-      // duplicate evidence (that's how a replayed id drops through its
-      // own append)
-      val scored = codes
-        .join(probed,
-          col("cell") === col("__probe") && col("__vsalt") === col("__qsalt"))
-        .select(col("__qid").as("qid"), col("vid"), est.as("est"))
-      val short = graft.plans.GraftPlans.topKPerKey(scored,
-        Seq(col("qid")), Seq(col("est").desc, col("vid").asc), shortlist)
-        .select("qid", "vid").localCheckpoint(true)
-      // stage 2: exact cosine over ONLY the shortlisted float rows.
-      // The driver-size contract is ENFORCED, not just documented
-      // (r16 verdict #1): the inline `vid IN` pushdown collects
-      // batch·shortlist ids to the driver — fine for the micro-batch
-      // gate, a multi-million-literal plan for a corpus-sized batch —
-      // so over the cap the fetch degrades to a LEFT-SEMI join on vid
-      // (same probed-cell partition pruning, trades only the
-      // row-group pushdown; survivors are bit-identical, spec-gated).
-      val maxIds = IndexConf.strictLong(spark,
-        "spark.graft.ivfstore.maxShortlistIds", default = 1000000L,
-        min = 1L)
-      val distinctVids = short.select("vid").distinct()
-      val nIds = distinctVids.count()
-      val floatsBase = assignedRelOf(ms)
-        .where(col("cell").isin(cells: _*))
-      val floats = (if (nIds <= maxIds) {
-        lastShortlistFetchPath = Some((nIds, "inline"))
-        val shortIds = distinctVids.collect().map(_.getLong(0)).toSeq
-        floatsBase.where(col("vid").isin(shortIds: _*))
-      } else {
-        System.err.println(s"[graft] PQ-gate shortlist has $nIds " +
-          "distinct ids > spark.graft.ivfstore.maxShortlistIds=" +
-          s"$maxIds - degrading the exact-refine fetch to a vid " +
-          "semi-join (cell pruning kept, row-group pushdown traded)")
-        lastShortlistFetchPath = Some((nIds, "semi-join"))
-        floatsBase.join(distinctVids, Seq("vid"), "left_semi")
-      }).select(col("vid"), col("emb"), col("nrm"))
-      val qRows = probes
-        .select(col("__qid"), col("__qemb"), col("__qnrm"))
-        .dropDuplicates("__qid")
-      short.join(floats, Seq("vid"))
-        .join(qRows, col("qid") === col("__qid"))
-        .select(col("qid"), col("vid"),
-          (VectorFunctions.dot(col("emb"), col("__qemb")) /
-            (col("nrm") * col("__qnrm"))).as("sim"))
-        .filter(col("sim") > tau)
-    }
+  private def pqPairs(gp: GateProbe, tau: Double,
+      shortlist: Int): DataFrame = {
+    val t = gp.gen.tier.get
+    // stage 1: the m-byte wide net over probed code partitions
+    val qp = t.perm.fold(col("__qemb"))(p =>
+      PqAnn.applyPerm(col("__qemb"), p))
+    val adc = PqAnn.adcDotCol(col("__qp"), col("codes"), t.book, spark)
+    val est =
+      if (t.residual) {
+        val cLit = typedlit(
+          gp.gen.centroids.map { case (id, c) => id -> c.toSeq }.toMap)
+        VectorFunctions.dot(col("__qemb"),
+          element_at(cLit, col("cell"))) + adc
+      } else adc
+    // NO self-id exclusion — the SEARCH path excludes qid==vid (a
+    // query shouldn't return itself), but the GATE's contract is the
+    // float gate's: a stored row with the batch row's own id IS
+    // duplicate evidence (that's how a replayed id drops through its
+    // own append)
+    val scored = saltedCandidates(gp, "pqcodes",
+        gp.probes.withColumn("__qp", qp))
+      .select(col("__qid").as("qid"), col("vid"), est.as("est"))
+    val short = graft.plans.GraftPlans.topKPerKey(scored,
+      Seq(col("qid")), Seq(col("est").desc, col("vid").asc), shortlist)
+      .select("qid", "vid").localCheckpoint(true)
+    // stage 2: exact cosine over ONLY the shortlisted float rows.
+    // The driver-size contract is ENFORCED, not just documented
+    // (r16 verdict #1): the inline `vid IN` pushdown collects
+    // batch·shortlist ids to the driver — fine for the micro-batch
+    // gate, a multi-million-literal plan for a corpus-sized batch —
+    // so over the cap the fetch degrades to a LEFT-SEMI join on vid
+    // (same probed-cell partition pruning, trades only the
+    // row-group pushdown; survivors are bit-identical, spec-gated).
+    val maxIds = IndexConf.strictLong(spark,
+      "spark.graft.ivfstore.maxShortlistIds", default = 1000000L,
+      min = 1L)
+    val distinctVids = short.select("vid").distinct()
+    val nIds = distinctVids.count()
+    val floatsBase = cellRelOf(gp.ms, "assigned")
+      .where(col("cell").isin(gp.cells: _*))
+    val floats = (if (nIds <= maxIds) {
+      lastShortlistFetchPath = Some((nIds, "inline"))
+      val shortIds = distinctVids.collect().map(_.getLong(0)).toSeq
+      floatsBase.where(col("vid").isin(shortIds: _*))
+    } else {
+      System.err.println(s"[graft] PQ-gate shortlist has $nIds " +
+        "distinct ids > spark.graft.ivfstore.maxShortlistIds=" +
+        s"$maxIds - degrading the exact-refine fetch to a vid " +
+        "semi-join (cell pruning kept, row-group pushdown traded)")
+      lastShortlistFetchPath = Some((nIds, "semi-join"))
+      floatsBase.join(distinctVids, Seq("vid"), "left_semi")
+    }).select(col("vid"), col("emb"), col("nrm"))
+    val qRows = gp.probes
+      .select(col("__qid"), col("__qemb"), col("__qnrm"))
+      .dropDuplicates("__qid")
+    short.join(floats, Seq("vid"))
+      .join(qRows, col("qid") === col("__qid"))
+      .select(col("qid"), col("vid"), cosineTo("__qemb", "__qnrm"))
+      .filter(col("sim") > tau)
+  }
+
+  /** The gate's keep: the `batch` rows no `pairs` row names. The join
+    * key is a reserved name: the batch may itself carry a 'qid' column
+    * (the NearDupIndex.keepUnseen 'doc_inc' precedent). */
+  private def keepUnpaired(batch: DataFrame, idCol: String,
+      pairs: DataFrame): DataFrame = {
+    val dup = pairs.select(col("qid").as("__gate_qid")).distinct()
+    batch.join(dup, batch(idCol) === col("__gate_qid"), "left_anti")
   }
 
   /** [[semanticKeepUnseen]] with [[semanticPairsPq]]'s two-stage
     * evidence — the same keep rule over the cheaper net. */
   def semanticKeepUnseenPq(batch: DataFrame, idCol: String, embCol: String,
       tau: Double, nprobe: Int, shortlist: Int,
-      excludeToken: Option[String] = None): DataFrame = {
-    val dup = semanticPairsPq(batch, idCol, embCol, tau, nprobe,
-      shortlist, excludeToken)
-      .select(col("qid").as("__gate_qid")).distinct()
-    batch.join(dup, batch(idCol) === col("__gate_qid"), "left_anti")
-  }
+      excludeToken: Option[String] = None): DataFrame =
+    keepUnpaired(batch, idCol, semanticPairsPq(batch, idCol, embCol, tau,
+      nprobe, shortlist, excludeToken))
 
   /** Keep only incoming embeddings that semantically duplicate NO stored
     * vector (max probed-cell cosine ≤ `tau`) — the embedding-modality
     * ingest gate, SemDeDup's rule against a persisted corpus. */
   def semanticKeepUnseen(batch: DataFrame, idCol: String, embCol: String,
       tau: Double, nprobe: Int,
-      excludeToken: Option[String] = None): DataFrame = {
-    // reserved-name join key: the batch may itself carry a 'qid' column
-    // (the NearDupIndex.keepUnseen 'doc_inc' precedent)
-    val dup = semanticPairs(batch, idCol, embCol, tau, nprobe, excludeToken)
-      .select(col("qid").as("__gate_qid")).distinct()
-    batch.join(dup, batch(idCol) === col("__gate_qid"), "left_anti")
-  }
+      excludeToken: Option[String] = None): DataFrame =
+    keepUnpaired(batch, idCol,
+      semanticPairs(batch, idCol, embCol, tau, nprobe, excludeToken))
 
   // ---------------- IngestIndex ----------------
 
@@ -1360,11 +1234,38 @@ final class IvfStore private (private val spark: SparkSession,
 
 object IvfStore extends StoreProbe {
 
+  /** One generation's PQ tier, as its book dir stores it: the books
+    * ([[PqAnn.Codebook]]); `k0`, the k they were TRAINED with
+    * (surviving cells per subspace can be fewer, so it is not
+    * recoverable from the book itself — a [[IvfStore.refit]] retrains at
+    * the same k); `residual`, whether they were trained on RESIDUALS
+    * `x − centroid(cell)` against the generation's coarse centroids (the
+    * FAISS IndexIVFPQ form, `create(..., pqResidual = true)`); and
+    * `perm`, the OPQ-lite coordinate permutation
+    * ([[PqAnn.balancedPermutation]], `create(..., pqPermute = true)`) —
+    * the books were trained on PERMUTED vectors (or permuted residuals),
+    * so encode and the query-side ADC tables must see the same
+    * permutation; None is the identity. All four are generation-keyed (a
+    * refit recomputes them from the new training relation). */
+  private[ext] final case class PqTier(book: PqAnn.Codebook, k0: Int,
+      residual: Boolean, perm: Option[Array[Int]])
+
+  /** One centroid generation: its centroids and, read on first use, its
+    * optional PQ tier. Immutable once committed, so a store instance
+    * caches it per generation number. */
+  private[ext] final class Generation(
+      val centroids: Seq[(Int, Array[Double])],
+      tierOf: => Option[PqTier]) {
+    lazy val tier: Option[PqTier] = tierOf
+  }
+
   /** Train on `df` ([[IvfIndex.fit]] — oracle-exact Lloyd's), then write
     * the layout at `path` (must be fresh): centroids, the first assigned
     * append (+ vidmap sidecar), one commit carrying the stats.
     * `gateTau`/`gateNprobe` parameterize the [[IngestIndex]] semantic gate
-    * and are pinned in the commits' stats. */
+    * and are pinned in the commits' stats. `pqM > 0` adds the PQ tier
+    * (`pqK` cells per subspace; `pqResidual`, `pqPermute`: see
+    * [[PqTier]]). */
   def create(df: DataFrame, idCol: String, embCol: String, path: String,
       k: Int, iters: Int = 2, gateTau: Double = 0.5,
       gateNprobe: Int = 2, packedScale: Int = 127,
@@ -1382,73 +1283,19 @@ object IvfStore extends StoreProbe {
     val spark = df.sparkSession
     val idx = IvfIndex.fit(df, idCol, embCol, k, iters)
     try {
-      import spark.implicits._
-      // the optional PQ tier: per-subspace codebooks trained on the SAME
-      // create corpus (FAISS train, before any add), frozen for appends;
-      // pqResidual trains on x − centroid(cell) against THIS generation's
-      // coarse centroids (the IndexIVFPQ form — see PqAnn.residualCol);
-      // pqPermute first deals the TRAINING relation's coordinates into
-      // variance-balanced subspaces (OPQ-lite — the permutation is
-      // computed on what gets encoded: residuals when both flags are on)
-      val trainRel =
-        if (pqM == 0) null
-        else if (pqResidual)
-          idx.assigned.select(col("vid"),
-            PqAnn.residualCol(col("emb"), col("cell"), idx.centroids)
-              .as("emb"))
-        else df.select(col(idCol).as("vid"), col(embCol).as("emb"))
-      val dims = idx.centroids.head._2.length
-      // the tier's variance spectrum is persisted for EVERY PQ create
-      // (permuted or not): permuteAdvisory answers "would the balanced
-      // permutation pay here?" from these dims tiny rows, and the
-      // permuted path derives its permutation from the SAME sums (one
-      // corpus aggregation either way)
-      val varSums =
-        if (pqM == 0) None
-        else Some(PqAnn.varianceMicroSums(trainRel, "emb"))
-      varSums.foreach { case (sx, _, _) =>
-        require(sx.length == dims,
-          s"embeddings have ${sx.length} dims, not $dims")
-      }
-      val perm =
-        if (pqM > 0 && pqPermute)
-          varSums.map { case (sx, sxx, n) =>
-            PqAnn.balancedPermutationFromSums(sx, sxx, n, dims, pqM) }
-        else None
-      val book =
-        if (pqM == 0) None
-        else Some(PqAnn.fit(
-          perm.fold(trainRel)(p => trainRel.select(col("vid"),
-            PqAnn.applyPerm(col("emb"), p).as("emb"))),
-          "vid", "emb", dims, pqM, pqK, iters))
       val store = new IvfStore(spark, path)
-      store.centroidCache.put(1, idx.centroids)
       store.log.locked(store.log.append(seedToken, fresh = true) { (id, _) =>
-        // nothing is committed, so any centroids dir here is a crashed
-        // predecessor's orphan — clear it so the rerun can't wedge
-        store.log.manifests.clearOrphan(s"$path/centroids")
-        idx.centroids.map { case (cell, c) => (cell, c.toSeq) }
-          .toDF("cell", "c")
-          .coalesce(1).write.mode("errorifexists").parquet(s"$path/centroids")
-        book.foreach { b =>
-          store.log.manifests.clearOrphan(s"$path/pqbook")
-          bookDf(spark, b, pqK, pqResidual, perm)
-            .write.mode("errorifexists").parquet(s"$path/pqbook")
-          store.pqBookCache.put(1, Some(b))
-          store.pqResidualCache.put(1, pqResidual)
-          store.pqPermCache.put(1, perm)
-        }
-        varSums.foreach { case (sx, sxx, n) =>
-          store.log.manifests.clearOrphan(s"$path/varspec")
-          varspecDf(spark, sx, sxx, n)
-            .write.mode("errorifexists").parquet(s"$path/varspec")
-        }
+        // nothing is committed, so any generation dir here is a crashed
+        // predecessor's orphan — the writer clears it so the rerun can't
+        // wedge
+        val gen = store.writeGeneration(1, idx,
+          df.select(col(idCol).as("vid"), col(embCol).as("emb")),
+          pqM, pqK, pqResidual, pqPermute, iters)
         // the fit already computed the assignment; persist ITS rows rather
         // than re-assigning (bit-identical either way — same centroids)
         val n = store.writeAssigned(
           idx.assigned.select("vid", "emb", "nrm", "cell"), id,
-          packedScale, book,
-          if (pqResidual) Some(idx.centroids) else None, perm)
+          packedScale, gen)
         StoreLog.kvOf(IvfStoreStats(idx.centroids.size,
           idx.centroids.head._2.length, n, gateTau, gateNprobe, packedScale))
       })
@@ -1479,16 +1326,15 @@ object IvfStore extends StoreProbe {
     math.sqrt(s)
   }
 
-  /** The PQ codebooks as their stored relation: `(j, cell, c, k0)` —
-    * m·(surviving k) driver-sized rows, with the trained k pinned so a
-    * refit retrains at the create's parameter. */
-  private def bookDf(spark: SparkSession, b: PqAnn.Codebook,
-      k0: Int, residual: Boolean = false,
-      perm: Option[Array[Int]] = None): DataFrame = {
+  /** The PQ codebooks as their stored relation: `(j, cell, c, k0,
+    * residual, perm)` — m·(surviving k) driver-sized rows, with the
+    * trained k pinned so a refit retrains at the create's parameter, and
+    * the tier's residual flag and permutation on every row. */
+  private def bookDf(spark: SparkSession, t: PqTier): DataFrame = {
     import spark.implicits._
-    b.sub.zipWithIndex.flatMap { case (cs, j) =>
+    t.book.sub.zipWithIndex.flatMap { case (cs, j) =>
       cs.map { case (cell, c) =>
-        (j, cell, c.toSeq, k0, residual, perm.map(_.toSeq)) }
+        (j, cell, c.toSeq, t.k0, t.residual, t.perm.map(_.toSeq)) }
     }.toDF("j", "cell", "c", "k0", "residual", "perm").coalesce(1)
   }
 

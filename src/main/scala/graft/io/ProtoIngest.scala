@@ -504,29 +504,4 @@ object ProtoIngest {
     }
     org.apache.spark.sql.graft.Bridge.ofInternalRows(df.sparkSession, rows, structTypeOf(msg))
   }
-
-  /** The reference's S2 replay-cache format, byte-exact (Main.scala:67-120):
-    * a text file whose FIRST line is base64(query text) and every following
-    * line one base64-encoded serialized message. Returns the decoded rows;
-    * pass `expectedQuery` to reproduce the reference's cache-validity check
-    * (replay only when the cached query matches — IllegalStateException
-    * otherwise, mirroring its refetch-on-mismatch).
-    */
-  def readBase64Lines(spark: org.apache.spark.sql.SparkSession, path: String,
-      msg: PMessage, expectedQuery: Option[String] = None): DataFrame = {
-    import org.apache.spark.sql.functions.unbase64
-    val raw = spark.sparkContext.textFile(path)
-    expectedQuery.foreach { q =>
-      val cached = raw.take(1).headOption.map(h =>
-        new String(java.util.Base64.getDecoder.decode(h), "UTF-8"))
-      if (!cached.contains(q))
-        throw new IllegalStateException(
-          s"cache holds a different query (${cached.getOrElse("<empty>")}); refetch required")
-    }
-    // zipWithIndex preserves text-file line order → index 0 is the header
-    val body = raw.zipWithIndex().collect { case (line, i) if i > 0 => line }
-    import spark.implicits._
-    decode(body.toDF("value").select(unbase64(col("value")).as("payload")),
-      "payload", msg)
-  }
 }

@@ -31,9 +31,9 @@ import graft.io.ProtoIngest.PMessage
   *   .load("/cache/dir")
   * ```
   *
-  * Why a DSv2 source rather than `textFile → decode` (which also exists,
-  * `ProtoIngest.readBase64Lines`): the scan IS the integration point where
-  * Spark pushes work down, and this source accepts it —
+  * Why a DSv2 source rather than `textFile → decode`: the scan IS the
+  * integration point where Spark pushes work down, and this source
+  * accepts it —
   * **column pruning reaches the wire decoder**: `SupportsPushDownRequiredColumns`
   * prunes the message DESCRIPTOR to the requested fields, and the proto3
   * decoder then skips every other field by wire type without materializing

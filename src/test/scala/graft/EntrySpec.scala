@@ -68,7 +68,7 @@ class EntrySpec extends GraftSpec {
 
     it("runAndWrite fans the report out to declared avro + json sinks " +
        "(the reference runner's dual-sink shape)") {
-      val base = java.nio.file.Files.createTempDirectory("graft-report-sinks")
+      val base = graft.io.TempReaper.tempDir("graft-report-sinks")
       val report = ReportConfig.parse(
         s"""{
           |  "table": "region",

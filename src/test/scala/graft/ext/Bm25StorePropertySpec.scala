@@ -25,7 +25,7 @@ class Bm25StorePropertySpec extends GraftSpec {
     }
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft-bm25prop")
+    graft.io.TempReaper.tempDir("graft-bm25prop")
       .toString + "/idx"
 
   private val word =

@@ -14,7 +14,7 @@ class Bm25StoreSpec extends GraftSpec {
   import spark.implicits._
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft-bm25store-spec")
+    graft.io.TempReaper.tempDir("graft-bm25store-spec")
       .toString + "/idx"
 
   private val dir = "/root/testdata/sf0.001"

@@ -12,7 +12,7 @@ class BpeStoreSpec extends GraftSpec {
   import spark.implicits._
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft-bpestore-spec")
+    graft.io.TempReaper.tempDir("graft-bpestore-spec")
       .toString + "/idx"
 
   private val dir = "/root/testdata/sf0.001"

@@ -1,20 +1,24 @@
 package graft.ext
 
-import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+  LogicalRelation}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.GraftSpec
 
 /** The STORED PQ tier of [[IvfStore]] (dq164): session parity, the
   * frozen-codebook append contract, probe pruning on the code relation,
-  * compaction/refit behavior, the empty-append sidecar, and the pqM=0
-  * refusal.
+  * compaction/refit behavior, the empty-append sidecar, the pqM=0
+  * refusal, and the one-pass read of a generation's book dir.
   */
 class IvfPqStoreSpec extends GraftSpec {
   import spark.implicits._
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft-ivfpq-spec")
+    graft.io.TempReaper.tempDir("graft-ivfpq-spec")
       .toString + "/idx"
 
   private val dir = "/root/testdata/sf0.001"
@@ -45,7 +49,7 @@ class IvfPqStoreSpec extends GraftSpec {
       val stored = rows(store.searchPq(queries, topK = 5, nprobe = 2))
       stored shouldBe session
       stored shouldBe rows(
-        store.searchAllPq(Seq(1L, 2L, 3L), topK = 5, nprobe = 2))
+        store.searchPq(store.vectorsOf(Seq(1L, 2L, 3L)), topK = 5, nprobe = 2))
       stored.length shouldBe 15
     } finally ivf.release()
   }
@@ -80,12 +84,14 @@ class IvfPqStoreSpec extends GraftSpec {
       .collect().toSeq shouldBe bookBefore
     // vec_id 5 was appended; it resolves as a stored query and appears
     // as a candidate for others
-    val res = rows(store.searchAllPq(Seq(1L, 5L), topK = 5, nprobe = 2))
+    val res = rows(store.searchPq(store.vectorsOf(Seq(1L, 5L)), topK = 5,
+      nprobe = 2))
     res.map(_._1).distinct shouldBe Seq(1L, 5L)
     // exactly-once: the replay is a no-op (one manifest per token)
     store.appendOnce(emb.filter($"vec_id" % 5 === 0),
       "vec_id", "embedding", "b1")
-    rows(store.searchAllPq(Seq(1L, 5L), topK = 5, nprobe = 2)) shouldBe res
+    rows(store.searchPq(store.vectorsOf(Seq(1L, 5L)), topK = 5,
+      nprobe = 2)) shouldBe res
   }
 
   it("a PQ search scans ONLY the probed cell partitions of the code " +
@@ -120,8 +126,10 @@ class IvfPqStoreSpec extends GraftSpec {
     store.refit(k = 8)
     val fresh = IvfStore.create(emb, "vec_id", "embedding", tmp(),
       k = 8, pqM = 16, pqK = 16)
-    rows(store.searchAllPq(Seq(1L, 2L, 5L), topK = 5, nprobe = 2)) shouldBe
-      rows(fresh.searchAllPq(Seq(1L, 2L, 5L), topK = 5, nprobe = 2))
+    rows(store.searchPq(store.vectorsOf(Seq(1L, 2L, 5L)), topK = 5,
+      nprobe = 2)) shouldBe
+      rows(fresh.searchPq(fresh.vectorsOf(Seq(1L, 2L, 5L)), topK = 5,
+        nprobe = 2))
     // the new generation's book landed beside the old one (kept for
     // in-flight readers, like centroid generations)
     spark.read.parquet(s"$path/pqbook_g2").count() should be > 0L
@@ -148,14 +156,17 @@ class IvfPqStoreSpec extends GraftSpec {
       "vec_id", "embedding", tmp(), k = 4, pqM = 16, pqK = 16)
     twin.append(emb.filter($"vec_id" % 3 === 1), "vec_id", "embedding")
     twin.append(emb.filter($"vec_id" % 3 === 2), "vec_id", "embedding")
-    val expected = rows(twin.searchAllPq(Seq(3L, 7L), topK = 5, nprobe = 2))
-    rows(store.searchAllPq(Seq(3L, 7L), topK = 5, nprobe = 2)) shouldBe
+    val expected = rows(twin.searchPq(twin.vectorsOf(Seq(3L, 7L)), topK = 5,
+      nprobe = 2))
+    rows(store.searchPq(store.vectorsOf(Seq(3L, 7L)), topK = 5,
+      nprobe = 2)) shouldBe
       expected
     spark.conf.set("spark.graft.index.vacuumRetentionMs", "0")
     try store.vacuum() should be > 0
     finally spark.conf.unset("spark.graft.index.vacuumRetentionMs")
     // superseded pqcodes dirs are gone; the answer is unchanged
-    rows(store.searchAllPq(Seq(3L, 7L), topK = 5, nprobe = 2)) shouldBe
+    rows(store.searchPq(store.vectorsOf(Seq(3L, 7L)), topK = 5,
+      nprobe = 2)) shouldBe
       expected
   }
 
@@ -164,7 +175,7 @@ class IvfPqStoreSpec extends GraftSpec {
     val store = IvfStore.create(emb, "vec_id", "embedding", tmp(),
       k = 8, pqM = 16, pqK = 16)
     store.appendOnce(emb.filter(lit(false)), "vec_id", "embedding", "e1")
-    rows(store.searchAllPq(Seq(1L), topK = 5, nprobe = 2))
+    rows(store.searchPq(store.vectorsOf(Seq(1L)), topK = 5, nprobe = 2))
       .length shouldBe 5
   }
 
@@ -203,9 +214,9 @@ class IvfPqStoreSpec extends GraftSpec {
         probes, ivf.centroids, topK = 5))
       rows(store.searchPq(queries, topK = 5, nprobe = 2)) shouldBe session
       // a FRESH open re-reads the flag from the book dir (no cache)
-      rows(IvfStore.open(spark, path)
-        .searchAllPq(Seq(1L, 2L, 5L), topK = 5, nprobe = 2)) shouldBe
-        session
+      val reopened = IvfStore.open(spark, path)
+      rows(reopened.searchPq(reopened.vectorsOf(Seq(1L, 2L, 5L)), topK = 5,
+        nprobe = 2)) shouldBe session
     } finally ivf.release()
     // refit retrains coarse + residual books against the NEW generation:
     // post-refit search equals a from-scratch residual create on the
@@ -213,8 +224,10 @@ class IvfPqStoreSpec extends GraftSpec {
     store.refit(k = 8)
     val fresh = IvfStore.create(emb, "vec_id", "embedding", tmp(),
       k = 8, pqM = 16, pqK = 16, pqResidual = true)
-    rows(store.searchAllPq(Seq(1L, 2L, 5L), topK = 5, nprobe = 2)) shouldBe
-      rows(fresh.searchAllPq(Seq(1L, 2L, 5L), topK = 5, nprobe = 2))
+    rows(store.searchPq(store.vectorsOf(Seq(1L, 2L, 5L)), topK = 5,
+      nprobe = 2)) shouldBe
+      rows(fresh.searchPq(fresh.vectorsOf(Seq(1L, 2L, 5L)), topK = 5,
+        nprobe = 2))
     // the refit generation's book still carries the flag
     spark.read.parquet(s"$path/pqbook_g2")
       .select("residual").head().getBoolean(0) shouldBe true
@@ -232,11 +245,11 @@ class IvfPqStoreSpec extends GraftSpec {
       "vec_id", "embedding", "rr:b1")
     val qids = Seq(1L, 2L, 5L)
     // exact probed cosine — what stage 2 would compute over EVERYTHING
-    val exact = rows(store.searchAll(qids, topK = 5, nprobe = 2))
+    val exact = rows(store.search(store.vectorsOf(qids), topK = 5, nprobe = 2))
     // a shortlist wider than any probed cell mass nets every candidate:
     // rerank == the exact search, bit for bit (same snapshot, same
     // cosine arithmetic, same tie-break)
-    rows(store.searchAllPqRerank(qids, topK = 5, nprobe = 2,
+    rows(store.searchPqRerank(store.vectorsOf(qids), topK = 5, nprobe = 2,
       shortlist = 10000)) shouldBe exact
     // a production-width shortlist: exact WITHIN the net, so its top-5
     // overlap vs the exact ranking is >= the ADC-only tier's
@@ -246,12 +259,13 @@ class IvfPqStoreSpec extends GraftSpec {
       (e intersect g).size
     }.sum
     val adcOnly = rows(
-      store.searchAllPq(qids, topK = 5, nprobe = 2))
-    val reranked = rows(store.searchAllPqRerank(qids, topK = 5,
+      store.searchPq(store.vectorsOf(qids), topK = 5, nprobe = 2))
+    val reranked = rows(store.searchPqRerank(store.vectorsOf(qids), topK = 5,
       nprobe = 2, shortlist = 20))
     overlap(reranked) should be >= overlap(adcOnly)
     intercept[IllegalArgumentException] {
-      store.searchAllPqRerank(qids, topK = 5, nprobe = 2, shortlist = 3)
+      store.searchPqRerank(store.vectorsOf(qids), topK = 5, nprobe = 2,
+        shortlist = 3)
     }.getMessage should include("shortlist")
   }
 
@@ -263,22 +277,22 @@ class IvfPqStoreSpec extends GraftSpec {
     val store = IvfStore.create(emb.filter($"vec_id" % 5 =!= 0),
       "vec_id", "embedding", tmp(), k = 8, pqM = 16, pqK = 16)
     val qids = Seq(1L, 2L, 3L)
-    val before = rows(store.searchAllPqRerank(qids, topK = 5,
+    val before = rows(store.searchPqRerank(store.vectorsOf(qids), topK = 5,
       nprobe = 2, shortlist = 20))
     store.appendOnce(emb.filter($"vec_id" % 5 === 0),
       "vec_id", "embedding", "rk:t1")
     // a replayed micro-batch mid-append sees only committed-before-me
     // state: the shortlist, the rerank cosine, and the query lookup all
     // read the excluded snapshot
-    rows(store.searchAllPqRerank(qids, topK = 5, nprobe = 2,
-      shortlist = 20, excludeToken = Some("rk:t1"))) shouldBe before
+    rows(store.searchPqRerank(store.vectorsOf(qids, Some("rk:t1")), topK = 5,
+      nprobe = 2, shortlist = 20, excludeToken = Some("rk:t1"))) shouldBe before
     // the refit folds everything but CARRIES the newest token — the
     // excluded view then resolves the pre-append generation's dirs
     // through both stages (the r15 two-snapshot hazard, now impossible:
     // one manifest snapshot is threaded through stage 1 and stage 2)
     store.refit(k = 8)
-    rows(store.searchAllPqRerank(qids, topK = 5, nprobe = 2,
-      shortlist = 20, excludeToken = Some("rk:t1"))) shouldBe before
+    rows(store.searchPqRerank(store.vectorsOf(qids, Some("rk:t1")), topK = 5,
+      nprobe = 2, shortlist = 20, excludeToken = Some("rk:t1"))) shouldBe before
   }
 
   it("advisory-resolved rerank: nprobe = None resolves through the " +
@@ -303,9 +317,10 @@ class IvfPqStoreSpec extends GraftSpec {
       try {
         // nprobe = None → the advisory's recommendation; shortlist =
         // None → 4·topK: both resolved forms equal the literal calls
-        rows(store.searchAllPqRerank(qids, topK = 5, nprobe = None,
-          shortlist = None, excludeToken = None)) shouldBe
-          rows(store.searchAllPqRerank(qids, topK = 5, nprobe = n,
+        rows(store.searchPqRerank(store.vectorsOf(qids), topK = 5,
+          nprobe = store.autoNprobe(),
+          shortlist = 4 * 5)) shouldBe
+          rows(store.searchPqRerank(store.vectorsOf(qids), topK = 5, nprobe = n,
             shortlist = 20))
       } finally spark.conf.unset(conf)
     }
@@ -374,19 +389,52 @@ class IvfPqStoreSpec extends GraftSpec {
     val twin = IvfStore.create(emb, "vec_id", "embedding", tmp(),
       k = 8, pqM = 16, pqK = 16, pqResidual = true, pqPermute = true)
     val qids = Seq(1L, 2L, 3L)
-    val got = rows(store.searchAllPq(qids, topK = 5, nprobe = 2))
-    got shouldBe rows(twin.searchAllPq(qids, topK = 5, nprobe = 2))
+    val got = rows(store.searchPq(store.vectorsOf(qids), topK = 5, nprobe = 2))
+    got shouldBe rows(twin.searchPq(twin.vectorsOf(qids), topK = 5, nprobe = 2))
     got.length shouldBe 15
     // the rerank path rides the permuted stage 1 unchanged: full-width
     // shortlist == the exact probed cosine search
-    rows(store.searchAllPqRerank(qids, topK = 5, nprobe = 2,
+    rows(store.searchPqRerank(store.vectorsOf(qids), topK = 5, nprobe = 2,
       shortlist = 10000)) shouldBe
-      rows(store.searchAll(qids, topK = 5, nprobe = 2))
+      rows(store.search(store.vectorsOf(qids), topK = 5, nprobe = 2))
     // pqPermute without the tier is refused by name
     intercept[IllegalArgumentException] {
       IvfStore.create(emb, "vec_id", "embedding", tmp(), k = 8,
         pqPermute = true)
     }.getMessage should include("pqPermute")
+  }
+
+  it("a generation's PQ tier is read in ONE pass over its book dir: a " +
+     "fresh open's first searchPq on a residual, permuted store runs " +
+     "exactly one query over pqbook/ (books, k0, residual flag and " +
+     "permutation together)") {
+    val path = tmp()
+    IvfStore.create(emb, "vec_id", "embedding", path, k = 8, pqM = 16,
+      pqK = 16, pqResidual = true, pqPermute = true)
+    val store = IvfStore.open(spark, path)
+    val queries = emb.filter($"vec_id".isin(1L, 2L, 3L))
+      .select($"vec_id", $"embedding").collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toSeq
+    def readsBook(qe: QueryExecution): Boolean = qe.analyzed.exists {
+      case l: LogicalRelation => l.relation match {
+        case h: HadoopFsRelation =>
+          h.location.rootPaths.exists(_.getName == "pqbook")
+        case _ => false
+      }
+      case _ => false
+    }
+    val bookQueries = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (readsBook(qe)) { bookQueries.incrementAndGet(); () }
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      rows(store.searchPq(queries, topK = 5, nprobe = 2)).length shouldBe 15
+      Bridge.waitListeners(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    bookQueries.get() shouldBe 1
   }
 
   it("the PQ-TIER semantic gate (r15 #5): at a full-width shortlist the " +
@@ -492,8 +540,10 @@ class IvfPqStoreSpec extends GraftSpec {
       k = 4, pqM = 16, pqK = 16, pqPermute = true)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("qid", "vid").collect().toSeq
-    rows(sstore.searchAllPq(Seq(1L, 2L), topK = 3, nprobe = 2)) shouldBe
-      rows(scratch.searchAllPq(Seq(1L, 2L), topK = 3, nprobe = 2))
+    rows(sstore.searchPq(sstore.vectorsOf(Seq(1L, 2L)), topK = 3,
+      nprobe = 2)) shouldBe
+      rows(scratch.searchPq(scratch.vectorsOf(Seq(1L, 2L)), topK = 3,
+        nprobe = 2))
     maintain(istore.path, 8)
     istore.permuteAdvisory().permuted shouldBe false
     // enablePermute without the tier is refused by name
@@ -540,7 +590,7 @@ class IvfPqStoreSpec extends GraftSpec {
     val path = tmp()
     val store = IvfStore.create(emb, "vec_id", "embedding", path, k = 8)
     intercept[IllegalArgumentException] {
-      store.searchAllPq(Seq(1L), topK = 5, nprobe = 2)
+      store.searchPq(store.vectorsOf(Seq(1L)), topK = 5, nprobe = 2)
     }.getMessage should include("pqM")
     store.append(emb.limit(3).select($"vec_id" + 10000 as "vec_id",
       $"embedding"), "vec_id", "embedding")

@@ -19,7 +19,7 @@ class IvfRefitPropertySpec extends GraftSpec {
   import spark.implicits._
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft-ivf-refit")
+    graft.io.TempReaper.tempDir("graft-ivf-refit")
       .toString + "/idx"
 
   private def corpus(seed: Long, n: Int, dims: Int): DataFrame = {
@@ -30,7 +30,7 @@ class IvfRefitPropertySpec extends GraftSpec {
   }
 
   private def resOf(s: IvfStore, qids: Seq[Long]): Seq[(Long, Long, Double)] =
-    s.searchAll(qids, topK = 4, nprobe = 2)
+    s.search(s.vectorsOf(qids), topK = 4, nprobe = 2)
       .orderBy("qid", "vid").as[(Long, Long, Double)].collect().toSeq
 
   it("refit ≡ create-from-scratch on the union corpus for random corpora " +
@@ -83,10 +83,10 @@ class IvfRefitPropertySpec extends GraftSpec {
     store.appendOnce(docs.filter($"vec_id" > 40L), "vec_id", "embedding",
       "pin#1")
     val qids = Seq(1L, 2L, 3L)
-    // pin a reader NOW: searchRows resolved ONE manifest snapshot —
+    // pin a reader NOW: search resolved ONE manifest snapshot —
     // generation-1 centroids for the probe ranking AND the two
     // pre-refit relation dirs for the candidate scan
-    val pinned = store.searchAll(qids, topK = 4, nprobe = 2)
+    val pinned = store.search(store.vectorsOf(qids), topK = 4, nprobe = 2)
     val expect = pinned.orderBy("qid", "vid")
       .as[(Long, Long, Double)].collect().toSeq
     store.refit(k = 4)

@@ -18,7 +18,7 @@ class IvfStoreFormatSpec extends GraftSpec {
     spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft-ivf-format-spec")
+    graft.io.TempReaper.tempDir("graft-ivf-format-spec")
       .toString + "/idx"
 
   /** The invariants on the store's current snapshot; returns its active ids. */

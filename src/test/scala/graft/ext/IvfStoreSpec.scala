@@ -13,7 +13,7 @@ class IvfStoreSpec extends GraftSpec {
   import spark.implicits._
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft-ivfstore-spec").toString + "/idx"
+    graft.io.TempReaper.tempDir("graft-ivfstore-spec").toString + "/idx"
 
   private val dir = "/root/testdata/sf0.001"
   private lazy val emb = spark.read.parquet(s"$dir/embeddings.parquet")
@@ -22,7 +22,8 @@ class IvfStoreSpec extends GraftSpec {
     val store = IvfStore.create(emb, "vec_id", "embedding", tmp(), k = 8)
     val idx = IvfIndex.fit(emb, "vec_id", "embedding", k = 8)
     try {
-      val stored = store.searchAll(Seq(1L, 2L, 3L), topK = 5, nprobe = 2)
+      val stored = store.search(store.vectorsOf(Seq(1L, 2L, 3L)), topK = 5,
+        nprobe = 2)
         .orderBy("qid", "vid")
         .as[(Long, Long, Double)].collect().toSeq
       val mem = idx.queryAll(Seq(1L, 2L, 3L), topK = 5, nprobe = 2)
@@ -53,7 +54,7 @@ class IvfStoreSpec extends GraftSpec {
     } finally idx.release()
     // vec_id 5 was appended: it queries, and its neighbors include other
     // appended and original vectors
-    val res = store.searchAll(Seq(5L), topK = 5, nprobe = 2)
+    val res = store.search(store.vectorsOf(Seq(5L)), topK = 5, nprobe = 2)
     res.count() shouldBe 5
   }
 
@@ -61,21 +62,22 @@ class IvfStoreSpec extends GraftSpec {
      "replays the pre-append search") {
     val store = IvfStore.create(emb.filter($"vec_id" % 5 =!= 0),
       "vec_id", "embedding", tmp(), k = 8)
-    val before = store.searchAll(Seq(1L, 2L), topK = 5, nprobe = 2)
+    val before = store.search(store.vectorsOf(Seq(1L, 2L)), topK = 5,
+      nprobe = 2)
       .as[(Long, Long, Double)].collect().toSeq.sorted
     val batch = emb.filter($"vec_id" % 5 === 0)
     val token = "vecs,b#0"
     val st1 = store.appendOnce(batch, "vec_id", "embedding", token)
     store.appendOnce(batch, "vec_id", "embedding", token) shouldBe st1
-    store.searchAll(Seq(1L, 2L), topK = 5, nprobe = 2,
-        excludeToken = Some(token))
+    store.search(store.vectorsOf(Seq(1L, 2L), Some(token)), topK = 5,
+        nprobe = 2, excludeToken = Some(token))
       .as[(Long, Long, Double)].collect().toSeq.sorted shouldBe before
   }
 
   it("a search scans ONLY the probed cell partitions (static partition " +
      "pruning — the dq59 property applied to ANN)") {
     val store = IvfStore.create(emb, "vec_id", "embedding", tmp(), k = 8)
-    val res = store.searchAll(Seq(1L), topK = 5, nprobe = 2)
+    val res = store.search(store.vectorsOf(Seq(1L)), topK = 5, nprobe = 2)
     res.collect()
     val partitionsRead = graft.plans.PlanWalk
       .collectAll(res.queryExecution.executedPlan) {
@@ -100,7 +102,8 @@ class IvfStoreSpec extends GraftSpec {
       }
       new java.io.File(s"$path/assigned").listFiles()
         .map(_.getName).count(_.startsWith("append=c")) should be >= 1
-      val res = store.searchAll(Seq(1L, 2L, 3L), topK = 5, nprobe = 2)
+      val res = store.search(store.vectorsOf(Seq(1L, 2L, 3L)), topK = 5,
+        nprobe = 2)
         .orderBy("qid", "vid").as[(Long, Long, Double)].collect().toSeq
       res.length shouldBe 15
       val before = new java.io.File(s"$path/assigned").listFiles().length
@@ -115,7 +118,7 @@ class IvfStoreSpec extends GraftSpec {
       // the vidmap sidecar's superseded dirs unlink with their appends
       new java.io.File(s"$path/vidmap").listFiles().length shouldBe
         new java.io.File(s"$path/assigned").listFiles().length
-      store.searchAll(Seq(1L, 2L, 3L), topK = 5, nprobe = 2)
+      store.search(store.vectorsOf(Seq(1L, 2L, 3L)), topK = 5, nprobe = 2)
         .orderBy("qid", "vid").as[(Long, Long, Double)]
         .collect().toSeq shouldBe res
     } finally {
@@ -125,16 +128,21 @@ class IvfStoreSpec extends GraftSpec {
   }
 
   it("search with caller-supplied query vectors equals the stored-id " +
-     "searchAll bit for bit (driver norm = executor kernel norm)") {
+     "vectorsOf search bit for bit (driver norm = executor kernel norm)") {
     val store = IvfStore.create(emb, "vec_id", "embedding", tmp(), k = 8)
     val qs = emb.filter($"vec_id".isin(1L, 2L, 3L))
       .select("vec_id", "embedding").collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toSeq
     val supplied = store.search(qs, topK = 5, nprobe = 2)
       .orderBy("qid", "vid").as[(Long, Long, Double)].collect().toSeq
-    val storedIds = store.searchAll(Seq(1L, 2L, 3L), topK = 5, nprobe = 2)
+    val storedIds = store.search(store.vectorsOf(Seq(1L, 2L, 3L)), topK = 5,
+      nprobe = 2)
       .orderBy("qid", "vid").as[(Long, Long, Double)].collect().toSeq
     supplied shouldBe storedIds
+    // the driver-side query norm equals the stored executor-kernel norm
+    store.lookupPlan(Seq(1L, 2L, 3L), None).collect().foreach { r =>
+      IvfStore.l2NormDriver(r.getSeq[Float](1).toArray) shouldBe r.getDouble(2)
+    }
   }
 
   it("a caller-supplied query vector with mismatched dims is refused") {
@@ -240,7 +248,8 @@ class IvfStoreSpec extends GraftSpec {
     val st = store.append(batch, "vec_id", "embedding")
     st.vectors shouldBe histN + batch.count() // orphan replaced, not merged
     // the orphan's row is gone from the layout entirely
-    store.searchAll(Seq(999999L), topK = 3, nprobe = 2).count() shouldBe 0L
+    store.search(store.vectorsOf(Seq(999999L)), topK = 3,
+      nprobe = 2).count() shouldBe 0L
   }
 
   it("the generic ingest loop's micro-batch replay is exactly-once for " +
@@ -249,8 +258,7 @@ class IvfStoreSpec extends GraftSpec {
     val store = IvfStore.create(emb.filter($"vec_id" % 3 =!= 0),
       "vec_id", "embedding", path, k = 8)
     val batch = emb.filter($"vec_id" % 6 === 0).select("vec_id", "embedding")
-    val out = java.nio.file.Files
-      .createTempDirectory("graft-ivf-replay").toString
+    val out = graft.io.TempReaper.tempDir("graft-ivf-replay").toString
     graft.streaming.EventStream
       .indexedIngestBatch(store, "vec_id", "embedding", out, "t")(batch, 0L)
     val kept = spark.read.parquet(s"$out/batch=0")
@@ -270,7 +278,8 @@ class IvfStoreSpec extends GraftSpec {
     val idx = IvfIndex.fit(emb, "vec_id", "embedding", k = 8)
     val pidx = idx.packed()
     try {
-      val stored = store.searchAllPacked(Seq(1L, 2L, 3L), topK = 5, nprobe = 2)
+      val stored = store.searchPacked(store.vectorsOf(Seq(1L, 2L, 3L)),
+        topK = 5, nprobe = 2)
         .orderBy("qid", "vid").as[(Long, Long, Long)].collect().toSeq
       val mem = pidx.queryAll(Seq(1L, 2L, 3L), topK = 5, nprobe = 2)
         .orderBy("qid", "vid").as[(Long, Long, Long)].collect().toSeq
@@ -289,7 +298,7 @@ class IvfStoreSpec extends GraftSpec {
   it("a packed search scans ONLY the probed partitions of the packed " +
      "relation — no float-embedding scan anywhere in its plan") {
     val store = IvfStore.create(emb, "vec_id", "embedding", tmp(), k = 8)
-    val res = store.searchAllPacked(Seq(1L), topK = 5, nprobe = 2)
+    val res = store.searchPacked(store.vectorsOf(Seq(1L)), topK = 5, nprobe = 2)
     res.collect()
     val scans = graft.plans.PlanWalk
       .collectAll(res.queryExecution.executedPlan) {
@@ -313,7 +322,8 @@ class IvfStoreSpec extends GraftSpec {
       "empty#1")
     st.vectors shouldBe st0.vectors
     // the layout stays fully queryable across the empty append
-    store.searchAll(Seq(1L), topK = 3, nprobe = 2).count() shouldBe 3
+    store.search(store.vectorsOf(Seq(1L)), topK = 3,
+      nprobe = 2).count() shouldBe 3
     // and a following NON-empty gate/append round still works
     store.gate(emb.filter($"vec_id" === 1L)
       .select(($"vec_id" + 7777).as("vec_id"), $"embedding"),
@@ -321,7 +331,8 @@ class IvfStoreSpec extends GraftSpec {
     // the PACKED tier must survive the empty append too: its sidecar is
     // cell-partitioned, so the empty dir must keep the same leaf depth
     // (a flat file with cell as data column breaks partition discovery)
-    store.searchAllPacked(Seq(1L), topK = 3, nprobe = 2).count() shouldBe 3
+    store.searchPacked(store.vectorsOf(Seq(1L)), topK = 3,
+      nprobe = 2).count() shouldBe 3
   }
 
   it("hot-cell skew guard: a planted 90%-hot cell's gate candidates " +
@@ -390,11 +401,12 @@ class IvfStoreSpec extends GraftSpec {
     val st = store.refit(k = 8, iters = 2)
     st.vectors shouldBe emb.count()
     val fresh = IvfStore.create(emb, "vec_id", "embedding", tmp(), k = 8)
-    def res(s: IvfStore) = s.searchAll(Seq(1L, 2L, 5L), topK = 5, nprobe = 2)
+    def res(s: IvfStore) = s.search(s.vectorsOf(Seq(1L, 2L, 5L)), topK = 5,
+      nprobe = 2)
       .orderBy("qid", "vid").as[(Long, Long, Double)].collect().toSeq
     res(store) shouldBe res(fresh)
     def resPacked(s: IvfStore) = s
-      .searchAllPacked(Seq(1L, 2L, 5L), topK = 5, nprobe = 2)
+      .searchPacked(s.vectorsOf(Seq(1L, 2L, 5L)), topK = 5, nprobe = 2)
       .orderBy("qid", "vid").as[(Long, Long, Long)].collect().toSeq
     resPacked(store) shouldBe resPacked(fresh)
     // a REOPENED handle resolves the new generation too
@@ -407,7 +419,7 @@ class IvfStoreSpec extends GraftSpec {
     val extra = emb.filter($"vec_id" === 7L)
       .select(($"vec_id" + 9000).as("vec_id"), $"embedding")
     store.appendOnce(extra, "vec_id", "embedding", "rf#2")
-    store.searchAll(Seq(9007L), topK = 1, nprobe = 8)
+    store.search(store.vectorsOf(Seq(9007L)), topK = 1, nprobe = 8)
       .select("vid").as[Long].head() shouldBe 7L // its exact copy
   }
 
@@ -588,12 +600,12 @@ class IvfStoreSpec extends GraftSpec {
       bal.autoNprobe() shouldBe 2
       def res(df: org.apache.spark.sql.DataFrame) =
         df.orderBy("qid", "vid").collect().toSeq
-      res(hot.searchAll(Seq(0L), topK = 3, nprobe = None,
-        excludeToken = None)) shouldBe
-        res(hot.searchAll(Seq(0L), topK = 3, nprobe = 1))
-      res(bal.searchAll(Seq(0L), topK = 3, nprobe = None,
-        excludeToken = None)) shouldBe
-        res(bal.searchAll(Seq(0L), topK = 3, nprobe = 2))
+      res(hot.search(hot.vectorsOf(Seq(0L)), topK = 3,
+        nprobe = hot.autoNprobe())) shouldBe
+        res(hot.search(hot.vectorsOf(Seq(0L)), topK = 3, nprobe = 1))
+      res(bal.search(bal.vectorsOf(Seq(0L)), topK = 3,
+        nprobe = bal.autoNprobe())) shouldBe
+        res(bal.search(bal.vectorsOf(Seq(0L)), topK = 3, nprobe = 2))
     } finally spark.conf.unset("spark.graft.ivf.autoTargetMassMicro")
     // appends fold into the occupancy; a refit bumps the generation and
     // keeps full sidecar coverage (the refit writes its own histogram)
@@ -626,7 +638,8 @@ class IvfStoreSpec extends GraftSpec {
     reopened.centroids.zip(store.centroids).foreach { case ((_, a), (_, b)) =>
       a.toSeq shouldBe b.toSeq
     }
-    reopened.searchAll(Seq(1L), topK = 3, nprobe = 2).count() shouldBe 3
+    reopened.search(reopened.vectorsOf(Seq(1L)), topK = 3,
+      nprobe = 2).count() shouldBe 3
     an[Exception] should be thrownBy IvfStore.open(spark, tmp())
     an[Exception] should be thrownBy
       IvfStore.create(emb, "vec_id", "embedding", path, k = 8)

@@ -15,7 +15,7 @@ class MediaCdcIndexSpec extends GraftSpec {
   import spark.implicits._
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft-mcidx-spec")
+    graft.io.TempReaper.tempDir("graft-mcidx-spec")
       .toString + "/idx"
 
   /** High-entropy 256-char bodies — the CDC boundary condition is
@@ -164,8 +164,7 @@ class MediaCdcIndexSpec extends GraftSpec {
     // the frozen benchmark form: mode "cdc" builds a MediaCdcIndex on
     // first use and a LENGTH-PERTURBED copy of a benchmark payload
     // drops; gate-only, so a rerun keeps the same survivors
-    val d = java.nio.file.Files
-      .createTempDirectory("graft-mcidx-frozen").toString
+    val d = graft.io.TempReaper.tempDir("graft-mcidx-frozen").toString
     frame((900L, entropic(77)))
       .write.parquet(s"$d/media_bench.parquet")
     val fz = graft.plan.CurationConfig.parse(

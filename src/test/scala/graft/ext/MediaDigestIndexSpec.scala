@@ -14,7 +14,7 @@ class MediaDigestIndexSpec extends GraftSpec {
   import spark.implicits._
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft-mdidx-spec")
+    graft.io.TempReaper.tempDir("graft-mdidx-spec")
       .toString + "/idx"
 
   /** (id, payload derived from `key` — ids sharing a key are

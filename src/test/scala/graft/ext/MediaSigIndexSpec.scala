@@ -14,7 +14,7 @@ class MediaSigIndexSpec extends GraftSpec {
   import spark.implicits._
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft-msidx-spec")
+    graft.io.TempReaper.tempDir("graft-msidx-spec")
       .toString + "/idx"
 
   /** (id, payload of 8 32-byte blocks keyed on `key`, blocks in `diff`

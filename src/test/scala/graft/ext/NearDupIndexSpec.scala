@@ -15,7 +15,7 @@ class NearDupIndexSpec extends GraftSpec {
   import spark.implicits._
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft-ndidx-spec").toString + "/idx"
+    graft.io.TempReaper.tempDir("graft-ndidx-spec").toString + "/idx"
 
   private val dir = "/root/testdata/sf0.001"
   private lazy val docs = spark.read.parquet(s"$dir/documents.parquet")
@@ -204,7 +204,7 @@ class NearDupIndexSpec extends GraftSpec {
     val path = tmp()
     val idx = NearDupIndex.build(docs, "doc_id", "text", path)
     val batch = incomingOf(docs).localCheckpoint(true)
-    val out = java.nio.file.Files.createTempDirectory("graft-replay-out").toString
+    val out = graft.io.TempReaper.tempDir("graft-replay-out").toString
     // first delivery of micro-batch 0
     EventStream.indexedIngestBatch(idx, "doc_id", "text", out, "t")(batch, 0L)
     val kept1 = spark.read.parquet(s"$out/batch=0")

@@ -23,7 +23,7 @@ class NgramLmStorePropertySpec extends GraftSpec {
     }
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft-lmprop")
+    graft.io.TempReaper.tempDir("graft-lmprop")
       .toString + "/idx"
 
   private val word =

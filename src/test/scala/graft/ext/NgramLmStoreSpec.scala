@@ -14,7 +14,7 @@ class NgramLmStoreSpec extends GraftSpec {
   import spark.implicits._
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft-lmstore-spec")
+    graft.io.TempReaper.tempDir("graft-lmstore-spec")
       .toString + "/idx"
 
   private val dir = "/root/testdata/sf0.001"

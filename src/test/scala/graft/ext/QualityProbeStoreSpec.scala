@@ -12,7 +12,7 @@ class QualityProbeStoreSpec extends GraftSpec {
   import spark.implicits._
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft-qpstore-spec")
+    graft.io.TempReaper.tempDir("graft-qpstore-spec")
       .toString + "/idx"
 
   private val dir = "/root/testdata/sf0.001"

@@ -13,7 +13,7 @@ class ShardWriterSpec extends GraftSpec {
   import spark.implicits._
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft-shard-spec")
+    graft.io.TempReaper.tempDir("graft-shard-spec")
       .toString + "/st"
 
   private val dir = "/root/testdata/sf0.001"
@@ -318,8 +318,7 @@ class ShardWriterSpec extends GraftSpec {
      "rows pass through with the assignment appended, and the streamed " +
      "runner accepts the chain (per-micro-batch shard sets)") {
     val d = dir
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-shard-stage").toString
+    val base = graft.io.TempReaper.tempDir("graft-shard-stage").toString
     val cfg =
       s"""{"table": "documents", "id": "doc_id", "text": "text",
         | "stages": [

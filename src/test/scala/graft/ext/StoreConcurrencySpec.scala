@@ -15,7 +15,7 @@ class StoreConcurrencySpec extends GraftSpec {
   import spark.implicits._
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft-lock-spec")
+    graft.io.TempReaper.tempDir("graft-lock-spec")
       .toString + "/idx"
 
   private def df(rows: (Long, String)*) =

@@ -25,7 +25,7 @@ class StoreCrashPropertySpec extends GraftSpec {
   import spark.implicits._
 
   private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-crash-$tag")
+    graft.io.TempReaper.tempDir(s"graft-crash-$tag")
       .toString + "/idx"
 
   // ---------------- corpora ----------------
@@ -182,12 +182,12 @@ class StoreCrashPropertySpec extends GraftSpec {
       p => {
         val st = IvfStore.open(spark, p)
         manifestState(p) :+ st.stats.toString :+
-          st.searchAllPq(Seq(1L), topK = 3, nprobe = 2)
+          st.searchPq(st.vectorsOf(Seq(1L)), topK = 3, nprobe = 2)
             .orderBy("vid").collect().mkString(",") :+
           // the TWO-STAGE search converges too: a crash-replayed run's
           // rerank (ADC shortlist + exact refine over one snapshot)
           // answers identically to the clean run's
-          st.searchAllPqRerank(Seq(1L), topK = 3, nprobe = 2,
+          st.searchPqRerank(st.vectorsOf(Seq(1L)), topK = 3, nprobe = 2,
               shortlist = 6)
             .orderBy("vid").collect().mkString(",")
       }),

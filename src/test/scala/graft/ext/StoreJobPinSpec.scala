@@ -17,7 +17,7 @@ class StoreJobPinSpec extends GraftSpec {
   import spark.implicits._
 
   private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-jobpin-$tag")
+    graft.io.TempReaper.tempDir(s"graft-jobpin-$tag")
       .toString + "/idx"
 
   private val history = Seq(

@@ -22,7 +22,7 @@ class StoreRelationSchemaSpec extends GraftSpec {
   import spark.implicits._
 
   private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-relschema-$tag")
+    graft.io.TempReaper.tempDir(s"graft-relschema-$tag")
       .toString + "/idx"
 
   private val docs = Seq(

@@ -26,7 +26,7 @@ class SubstrIndexPropertySpec extends GraftSpec {
     }
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft-ssprop").toString + "/idx"
+    graft.io.TempReaper.tempDir("graft-ssprop").toString + "/idx"
 
   private val frag = Gen.oneOf(
     "alpha beta gamma delta", "one two three four",

@@ -17,7 +17,7 @@ class SubstrIndexSpec extends GraftSpec {
   private val k = 4
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft-ssidx-spec").toString + "/idx"
+    graft.io.TempReaper.tempDir("graft-ssidx-spec").toString + "/idx"
 
   private val history = Seq(
     (1L, "alpha beta gamma delta epsilon zeta"),
@@ -105,7 +105,7 @@ class SubstrIndexSpec extends GraftSpec {
     import graft.streaming.EventStream
     val path = tmp()
     val idx = SubstrIndex.build(history, "doc_id", "text", path, k)
-    val out = java.nio.file.Files.createTempDirectory("graft-ss-replay").toString
+    val out = graft.io.TempReaper.tempDir("graft-ss-replay").toString
     val b = batch.localCheckpoint(true)
     EventStream.indexedIngestBatch(idx, "doc_id", "text", out, "ss")(b, 0L)
     val kept1 = spark.read.parquet(s"$out/batch=0")

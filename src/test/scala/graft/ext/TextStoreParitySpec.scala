@@ -37,7 +37,7 @@ class TextStoreParitySpec extends GraftSpec {
   import spark.implicits._
 
   private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-parity-$tag")
+    graft.io.TempReaper.tempDir(s"graft-parity-$tag")
       .toString + "/idx"
 
   // seeded word soup: every document distinct, copies planted below

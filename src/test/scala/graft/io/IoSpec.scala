@@ -1,7 +1,5 @@
 package graft.io
 
-import java.nio.file.Files
-
 import org.apache.avro.Schema
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -14,7 +12,7 @@ import graft.GraftSpec
 class IoSpec extends GraftSpec {
   import spark.implicits._
 
-  private def tmp(prefix: String) = Files.createTempDirectory(prefix).toString
+  private def tmp(prefix: String) = graft.io.TempReaper.tempDir(prefix).toString
 
   describe("AvroSchemas (ProtoMessageToAvroMappings.scala:221-269)") {
     val st = StructType(Seq(
@@ -291,7 +289,7 @@ class IoSpec extends GraftSpec {
 
   describe("streaming parquet sink (exactly-once via checkpoint)") {
     it("writes once and a restart with the same checkpoint adds nothing") {
-      val base = java.nio.file.Files.createTempDirectory("graft-stream-pq").toString
+      val base = graft.io.TempReaper.tempDir("graft-stream-pq").toString
       def runOnce(): Unit = {
         val q = graft.streaming.EventStream.readEvents(spark, "/root/testdata/sf0.001")
           .select("event_id", "event_type")
@@ -313,7 +311,7 @@ class IoSpec extends GraftSpec {
 
   describe("streaming into the Avro sink (foreachBatch)") {
     it("streams events through foreachBatch into Avro container files") {
-      val dir = java.nio.file.Files.createTempDirectory("graft-stream-avro").toString
+      val dir = graft.io.TempReaper.tempDir("graft-stream-avro").toString
       val src = graft.streaming.EventStream.readEvents(spark, "/root/testdata/sf0.001")
         .select("event_id", "event_type")
       val q = src.writeStream

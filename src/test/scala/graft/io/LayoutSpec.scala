@@ -8,7 +8,7 @@ class LayoutSpec extends GraftSpec {
   import spark.implicits._
 
   it("sortedWrite produces files with non-overlapping key ranges") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-layout").toString
+    val dir = graft.io.TempReaper.tempDir("graft-layout").toString
     val li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
     Layout.sortedWrite(li, dir, numFiles = 4, "l_shipdate")
 
@@ -31,8 +31,8 @@ class LayoutSpec extends GraftSpec {
      "on the second key skips files that a linear sort cannot") {
     val li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
       .select("l_quantity", "l_extendedprice")
-    val zDir = java.nio.file.Files.createTempDirectory("graft-z").toString
-    val xDir = java.nio.file.Files.createTempDirectory("graft-x").toString
+    val zDir = graft.io.TempReaper.tempDir("graft-z").toString
+    val xDir = graft.io.TempReaper.tempDir("graft-x").toString
     Layout.zorderWrite(li, zDir, numFiles = 16, "l_quantity", "l_extendedprice")
     Layout.sortedWrite(li, xDir, numFiles = 16, "l_quantity")
 
@@ -63,8 +63,8 @@ class LayoutSpec extends GraftSpec {
 
   it("partitionedWriteCached rewrites once per input: same plan+data skips, " +
      "changed data re-lays-out") {
-    val src = java.nio.file.Files.createTempDirectory("graft-lc-src").toString
-    val out = java.nio.file.Files.createTempDirectory("graft-lc-out").toString + "/layout"
+    val src = graft.io.TempReaper.tempDir("graft-lc-src").toString
+    val out = graft.io.TempReaper.tempDir("graft-lc-out").toString + "/layout"
     def files(): Set[String] = spark.read.parquet(out)
       .select(input_file_name()).distinct().as[String].collect().toSet
 
@@ -102,8 +102,8 @@ class LayoutSpec extends GraftSpec {
   }
 
   it("compact collapses a small-file mess into byte-sized output files") {
-    val src = java.nio.file.Files.createTempDirectory("graft-cp-src").toString
-    val dst = java.nio.file.Files.createTempDirectory("graft-cp-dst").toString + "/out"
+    val src = graft.io.TempReaper.tempDir("graft-cp-src").toString
+    val dst = graft.io.TempReaper.tempDir("graft-cp-dst").toString + "/out"
     val li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
     li.repartition(64).write.mode("overwrite").parquet(src) // the mess
     def fileCount(dir: String): Int = spark.read.parquet(dir)
@@ -132,7 +132,7 @@ class LayoutSpec extends GraftSpec {
   }
 
   it("partitionedWrite prunes directories for an equality filter") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-layout-p").toString
+    val dir = graft.io.TempReaper.tempDir("graft-layout-p").toString
     val o = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
       .withColumn("yr", year($"o_orderdate"))
     Layout.partitionedWrite(o, dir, "yr")

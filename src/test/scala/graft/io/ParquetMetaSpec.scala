@@ -8,7 +8,7 @@ class ParquetMetaSpec extends GraftSpec {
 
   it("rowCount over a partitioned dir equals a Spark count, ignoring " +
      "_SUCCESS and .crc files") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-pqmeta")
+    val dir = graft.io.TempReaper.tempDir("graft-pqmeta")
       .toString + "/t"
     spark.range(0, 1000).repartition(3)
       .withColumn("cell", col("id") % 4)

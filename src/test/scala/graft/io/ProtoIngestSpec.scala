@@ -156,25 +156,6 @@ class ProtoIngestSpec extends GraftSpec {
     c3.schema.fieldNames.toSeq shouldBe Seq("v") // level 4 dropped, no error
   }
 
-  it("replays the reference's base64 line-file cache format (S2)") {
-    val b64 = java.util.Base64.getEncoder
-    val query = "SELECT campaign.id FROM campaign WHERE x"
-    val payloads = (1L to 5L).map(i =>
-      new W().nested(1, new W().tag(1, 0).varint(i)).tag(2, 0).varint(i * 10).bytes)
-    val file = java.nio.file.Files.createTempFile("graft-cache", ".txt")
-    java.nio.file.Files.write(file,
-      (b64.encodeToString(query.getBytes("UTF-8")) +:
-        payloads.map(b64.encodeToString)).mkString("\n").getBytes("UTF-8"))
-
-    val got = ProtoIngest.readBase64Lines(spark, file.toString, row, Some(query))
-    got.count() shouldBe 5
-    got.selectExpr("campaign.id").as[Long].collect().sorted shouldBe (1L to 5L)
-
-    // the reference refetches when the cached query differs (Main.scala:75-87)
-    an[IllegalStateException] should be thrownBy
-      ProtoIngest.readBase64Lines(spark, file.toString, row, Some("other query"))
-  }
-
   it("decodes a DataFrame of payloads and feeds the Translator pipeline") {
     val payloads = (1L to 50L).map { i =>
       val camp = new W().tag(1, 0).varint(i).str(2, s"campaign_$i")
@@ -214,7 +195,7 @@ class ProtoIngestSpec extends GraftSpec {
     shaped.schema("status").metadata.getString(AvroSchemas.EnumNameKey) shouldBe
       statusEnum.name
 
-    val dir = java.nio.file.Files.createTempDirectory("graft-e2e-avro").toString + "/out"
+    val dir = graft.io.TempReaper.tempDir("graft-e2e-avro").toString + "/out"
     AvroSink.write(shaped.coalesce(1), dir, "AdsRow")
 
     val fs = org.apache.hadoop.fs.FileSystem.get(

@@ -35,7 +35,7 @@ class ProtoSourceSpec extends GraftSpec {
   private val query = "SELECT ads_row FROM server WHERE x"
 
   private lazy val dir: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft-proto-src")
+    val d = graft.io.TempReaper.tempDir("graft-proto-src")
     val b64 = java.util.Base64.getEncoder
     // two cache files → two input partitions
     Seq(1L to 5L, 6L to 9L).zipWithIndex.foreach { case (ids, i) =>
@@ -97,7 +97,7 @@ class ProtoSourceSpec extends GraftSpec {
   }
 
   it("gates on int64 values beyond 2^53 without double-precision loss") {
-    val d = java.nio.file.Files.createTempDirectory("graft-proto-bigid")
+    val d = graft.io.TempReaper.tempDir("graft-proto-bigid")
     val b64 = java.util.Base64.getEncoder
     val big = (1L << 53) // 9007199254740992; +1 is not representable in double
     def encId(id: Long): Array[Byte] = {
@@ -151,8 +151,8 @@ class ProtoSourceSpec extends GraftSpec {
 
   it("streams the cache directory micro-batch: new files only, exactly " +
      "once across restarts from the checkpoint") {
-    val d = java.nio.file.Files.createTempDirectory("graft-proto-stream")
-    val out = java.nio.file.Files.createTempDirectory("graft-proto-stream-out")
+    val d = graft.io.TempReaper.tempDir("graft-proto-stream")
+    val out = graft.io.TempReaper.tempDir("graft-proto-stream-out")
     val b64 = java.util.Base64.getEncoder
     def writeCache(name: String, ids: Seq[Long]): Unit = {
       val lines = b64.encodeToString(query.getBytes("UTF-8")) +:
@@ -188,8 +188,8 @@ class ProtoSourceSpec extends GraftSpec {
 
   it("fails fast when a file appears BELOW the consumed offset (non-" +
      "monotonic naming breaks exactly-once, and must not be silent)") {
-    val d = java.nio.file.Files.createTempDirectory("graft-proto-nonmono")
-    val out = java.nio.file.Files.createTempDirectory("graft-proto-nonmono-out")
+    val d = graft.io.TempReaper.tempDir("graft-proto-nonmono")
+    val out = graft.io.TempReaper.tempDir("graft-proto-nonmono-out")
     val b64 = java.util.Base64.getEncoder
     def writeCache(name: String, ids: Seq[Long]): Unit = {
       val lines = b64.encodeToString(query.getBytes("UTF-8")) +:
@@ -221,8 +221,8 @@ class ProtoSourceSpec extends GraftSpec {
 
   it("fails fast when the newest consumed cache file DISAPPEARS (a " +
      "regressed listing must not silently rewind the checkpoint watermark)") {
-    val d = java.nio.file.Files.createTempDirectory("graft-proto-rewind")
-    val out = java.nio.file.Files.createTempDirectory("graft-proto-rewind-out")
+    val d = graft.io.TempReaper.tempDir("graft-proto-rewind")
+    val out = graft.io.TempReaper.tempDir("graft-proto-rewind-out")
     val b64 = java.util.Base64.getEncoder
     def writeCache(name: String, ids: Seq[Long]): Unit = {
       val lines = b64.encodeToString(query.getBytes("UTF-8")) +:
@@ -253,7 +253,9 @@ class ProtoSourceSpec extends GraftSpec {
   }
 
   it("enforces the S2 cache-validity rule: mismatched query → refetch error") {
-    read.option("expectedQuery", query).load(dir).count() shouldBe 9
+    read.option("expectedQuery", query).load(dir)
+      .select("id", "impressions").as[(Long, Long)].collect().sortBy(_._1)
+      .toSeq shouldBe (1L to 9L).map(id => (id, id * 100))
     val ex = intercept[Exception] {
       read.option("expectedQuery", "other query").load(dir).count()
     }
@@ -262,7 +264,7 @@ class ProtoSourceSpec extends GraftSpec {
 
   it("fails loudly, naming the file and line, on a truncated message — " +
      "with a pushed gate and without one") {
-    val d = java.nio.file.Files.createTempDirectory("graft-proto-truncated")
+    val d = graft.io.TempReaper.tempDir("graft-proto-truncated")
     val b64 = java.util.Base64.getEncoder
     // id and impressions intact, then a name announcing 50 bytes of which 3
     // are present: the full decode reads past the end, the gate and the
@@ -296,7 +298,7 @@ class ProtoSourceSpec extends GraftSpec {
      "cache once, even when its plan was built before persist()") {
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    val out = java.nio.file.Files.createTempDirectory("graft-proto-fanout")
+    val out = graft.io.TempReaper.tempDir("graft-proto-fanout")
     val df = read.load(dir).filter(col("impressions") > 500).select("id", "name", "status")
     df.queryExecution.executedPlan // planned before persist(), as a traced report op is
     val report = graft.plan.ReportConfig.parse(

@@ -42,8 +42,8 @@ class ProtoStreamPushdownSpec extends GraftSpec {
   it("a filtered, projected micro-batch stream delivers exactly the " +
      "batch-mode answer (the scan builder is shared; filters stay " +
      "residual, so pushdown can only skip work, never change rows)") {
-    val d = java.nio.file.Files.createTempDirectory("graft-proto-push")
-    val out = java.nio.file.Files.createTempDirectory("graft-proto-push-out")
+    val d = graft.io.TempReaper.tempDir("graft-proto-push")
+    val out = graft.io.TempReaper.tempDir("graft-proto-push-out")
     val b64 = java.util.Base64.getEncoder
     val lines = b64.encodeToString("q".getBytes("UTF-8")) +:
       (0L until 200L).map(id => b64.encodeToString(enc(id)))

@@ -300,7 +300,7 @@ class ProtoWirePropertySpec extends GraftSpec {
   }
 
   it("a ProtoSource scan agrees with the Row decoder, full and pruned + gated") {
-    val d = java.nio.file.Files.createTempDirectory("graft-proto-parity")
+    val d = graft.io.TempReaper.tempDir("graft-proto-parity")
     val b64 = java.util.Base64.getEncoder
     java.nio.file.Files.write(d.resolve("c0.txt"),
       (b64.encodeToString("q".getBytes("UTF-8")) +: richMessages.map(b64.encodeToString))

@@ -12,7 +12,7 @@ class CurationConfigSpec extends GraftSpec {
 
   private def dir: String = {
     // a tiny parquet table the pipeline can load like testdata
-    val d = java.nio.file.Files.createTempDirectory("graft-curation").toString
+    val d = graft.io.TempReaper.tempDir("graft-curation").toString
     Seq(
       (1L, "the quick brown fox jumps over the lazy dog again today"),
       (2L, "the quick brown fox jumps over the lazy dog again today"), // dup of 1
@@ -71,7 +71,7 @@ class CurationConfigSpec extends GraftSpec {
       .withColumn("source",
         org.apache.spark.sql.functions.when($"doc_id" <= 3, "srcA")
           .otherwise("srcB"))
-    val d2 = java.nio.file.Files.createTempDirectory("graft-curation2").toString
+    val d2 = graft.io.TempReaper.tempDir("graft-curation2").toString
     docs.write.parquet(s"$d2/documents.parquet")
     val out = CurationConfig.parse(cfg).run(spark, d2)
     out.columns should contain("epoch")
@@ -90,8 +90,8 @@ class CurationConfigSpec extends GraftSpec {
      "later pipeline runs gate their batches through it and append " +
      "survivors — the config-driven ingest loop") {
     val d = dir
-    val path = java.nio.file.Files
-      .createTempDirectory("graft-curation-ssg").toString + "/idx"
+    val path = graft.io.TempReaper
+      .tempDir("graft-curation-ssg").toString + "/idx"
     val r1 = CurationConfig.parse(gateCfg(path, "doc_id <= 2"))
       .run(spark, d).select("doc_id").as[Long].collect().sorted
     r1 shouldBe Array(1L, 2L) // bootstrap round: everything kept, index seeded
@@ -112,8 +112,8 @@ class CurationConfigSpec extends GraftSpec {
   it("neardup_gate: bootstrap, then replays drop through the stored " +
      "index across pipeline runs; dissimilar docs survive") {
     val d = dir
-    val path = java.nio.file.Files
-      .createTempDirectory("graft-curation-ndg").toString + "/idx"
+    val path = graft.io.TempReaper
+      .tempDir("graft-curation-ndg").toString + "/idx"
     def cfg(whereExpr: String): String =
       s"""{"table":"documents","id":"doc_id","text":"text",
         | "stages":[{"stage":"where","expr":"$whereExpr"},
@@ -131,8 +131,8 @@ class CurationConfigSpec extends GraftSpec {
      "same runId reproduces the run's survivors and commits nothing " +
      "twice — seed rounds and gate rounds both") {
     val d = dir
-    val path = java.nio.file.Files
-      .createTempDirectory("graft-curation-rrd").toString + "/idx"
+    val path = graft.io.TempReaper
+      .tempDir("graft-curation-rrd").toString + "/idx"
     def commits(): Int = new java.io.File(s"$path/_commits").listFiles()
       .count(f => f.isFile && !f.getName.startsWith("."))
     // seed round under runId run1
@@ -166,8 +166,8 @@ class CurationConfigSpec extends GraftSpec {
   it("a gate stage refuses a stored index whose parameters differ from " +
      "the config's (fail fast, naming both)") {
     val d = dir
-    val path = java.nio.file.Files
-      .createTempDirectory("graft-curation-kmm").toString + "/idx"
+    val path = graft.io.TempReaper
+      .tempDir("graft-curation-kmm").toString + "/idx"
     CurationConfig.parse(gateCfg(path, "doc_id <= 2", k = 4)).run(spark, d)
       .count()
     val e = intercept[IllegalArgumentException] {
@@ -180,13 +180,13 @@ class CurationConfigSpec extends GraftSpec {
   it("semantic_gate: bootstrap trains+seeds the store; replays of seeded " +
      "vectors drop by cosine; orthogonal vectors survive; mismatched " +
      "params are refused") {
-    val d = java.nio.file.Files.createTempDirectory("graft-curation-sem").toString
+    val d = graft.io.TempReaper.tempDir("graft-curation-sem").toString
     def oneHot(i: Int): Seq[Float] = Seq.tabulate(8)(j => if (j == i) 1f else 0f)
     Seq((1L, oneHot(0)), (2L, oneHot(1)), (3L, oneHot(2)), (4L, oneHot(3)),
         (5L, oneHot(0)), (11L, oneHot(0)), (12L, oneHot(5)))
       .toDF("vec_id", "embedding").write.parquet(s"$d/embeddings.parquet")
-    val path = java.nio.file.Files
-      .createTempDirectory("graft-curation-semg").toString + "/idx"
+    val path = graft.io.TempReaper
+      .tempDir("graft-curation-semg").toString + "/idx"
     def cfg(whereExpr: String, tau: Double = 0.5): String =
       s"""{"table":"embeddings","id":"vec_id","text":"embedding",
         | "stages":[{"stage":"where","expr":"$whereExpr"},
@@ -215,15 +215,14 @@ class CurationConfigSpec extends GraftSpec {
      "the m-byte net + exact refine, a full-width shortlist answers " +
      "exactly like the float gate, and tier mismatches are refused by " +
      "name at open") {
-    val d = java.nio.file.Files
-      .createTempDirectory("graft-curation-pqsem").toString
+    val d = graft.io.TempReaper.tempDir("graft-curation-pqsem").toString
     def oneHot(i: Int): Seq[Float] =
       Seq.tabulate(64)(j => if (j == i) 1f else 0f)
     Seq((1L, oneHot(0)), (2L, oneHot(1)), (3L, oneHot(2)), (4L, oneHot(3)),
         (5L, oneHot(0)), (11L, oneHot(0)), (12L, oneHot(5)))
       .toDF("vec_id", "embedding").write.parquet(s"$d/embeddings.parquet")
-    val path = java.nio.file.Files
-      .createTempDirectory("graft-curation-pqsemg").toString + "/idx"
+    val path = graft.io.TempReaper
+      .tempDir("graft-curation-pqsemg").toString + "/idx"
     def cfg(whereExpr: String, tier: String = "pq"): String =
       s"""{"table":"embeddings","id":"vec_id","text":"embedding",
         | "stages":[{"stage":"where","expr":"$whereExpr"},
@@ -245,8 +244,8 @@ class CurationConfigSpec extends GraftSpec {
       .count() shouldBe 0L
     // ...but a pq-declared round against a TIERLESS store is refused
     // at open with the config's vocabulary
-    val bare = java.nio.file.Files
-      .createTempDirectory("graft-curation-pqbare").toString + "/idx"
+    val bare = graft.io.TempReaper
+      .tempDir("graft-curation-pqbare").toString + "/idx"
     def bareCfg(tier: String): String =
       s"""{"table":"embeddings","id":"vec_id","text":"embedding",
         | "stages":[{"stage":"semantic_gate","path":"$bare","k":4,
@@ -267,8 +266,8 @@ class CurationConfigSpec extends GraftSpec {
   it("lm_gate: bootstrap seeds the stored model (all kept); later runs " +
      "band-gate against it; a drifted band is refused") {
     val d = dir
-    val path = java.nio.file.Files
-      .createTempDirectory("graft-curation-lmg").toString + "/idx"
+    val path = graft.io.TempReaper
+      .tempDir("graft-curation-lmg").toString + "/idx"
     def cfg(whereExpr: String, lo: Long = 20000L): String =
       s"""{"table":"documents","id":"doc_id","text":"text",
         | "stages":[{"stage":"where","expr":"$whereExpr"},
@@ -384,8 +383,8 @@ class CurationConfigSpec extends GraftSpec {
      "survivors and tokenizes them; later runs reuse the COMMITTED " +
      "vocabulary (no retraining); a drifted numMerges is refused") {
     val d = dir
-    val path = java.nio.file.Files
-      .createTempDirectory("graft-curation-bpe").toString + "/idx"
+    val path = graft.io.TempReaper
+      .tempDir("graft-curation-bpe").toString + "/idx"
     def cfg(whereExpr: String, n: Int = 4): String =
       s"""{"table":"documents","id":"doc_id","text":"text",
         | "stages":[{"stage":"where","expr":"$whereExpr"},
@@ -430,7 +429,7 @@ class CurationConfigSpec extends GraftSpec {
      "later runs mean-gate against them and fold survivors in") {
     // the probe regresses 4 features — the tiny 5-doc fixture's seed half
     // is a singular design matrix, so this stage gets a varied corpus
-    val d = java.nio.file.Files.createTempDirectory("graft-curation-pgd").toString
+    val d = graft.io.TempReaper.tempDir("graft-curation-pgd").toString
     val words = Seq("alpha", "beta", "gamma", "delta", "epsilon", "zeta",
       "eta", "theta", "the", "and", "of", "to", "in", "is")
     Seq.tabulate(12) { i =>
@@ -438,8 +437,8 @@ class CurationConfigSpec extends GraftSpec {
       val toks = Seq.tabulate(n)(k => words((i * 5 + k * (1 + i % 3)) % words.size))
       (i.toLong + 1L, toks.mkString(" "))
     }.toDF("doc_id", "text").write.parquet(s"$d/documents.parquet")
-    val path = java.nio.file.Files
-      .createTempDirectory("graft-curation-pg").toString + "/idx"
+    val path = graft.io.TempReaper
+      .tempDir("graft-curation-pg").toString + "/idx"
     def cfg(whereExpr: String): String =
       s"""{"table":"documents","id":"doc_id","text":"text",
         | "stages":[{"stage":"where","expr":"$whereExpr"},
@@ -464,8 +463,8 @@ class CurationConfigSpec extends GraftSpec {
      "and the stage is gate-only — reruns of the same batch keep the " +
      "same survivors because nothing is ever appended") {
     val d = dir
-    val path = java.nio.file.Files
-      .createTempDirectory("graft-curation-dcg").toString + "/idx"
+    val path = graft.io.TempReaper
+      .tempDir("graft-curation-dcg").toString + "/idx"
     def cfg(batchWhere: String): String =
       s"""{"table":"documents","id":"doc_id","text":"text",
         | "stages":[{"stage":"where","expr":"$batchWhere"},
@@ -497,8 +496,7 @@ class CurationConfigSpec extends GraftSpec {
      "declared benchmark table, byte-exact copies drop at the exact " +
      "stage, single-block variants at the near stage, far/fresh/null " +
      "payloads survive, and reruns keep identical survivors (gate-only)") {
-    val d = java.nio.file.Files
-      .createTempDirectory("graft-curation-mdg").toString
+    val d = graft.io.TempReaper.tempDir("graft-curation-mdg").toString
     def blocks(key: String, diff: Set[Int] = Set.empty,
         salt: String = "v"): String =
       (0 to 7).map(j =>
@@ -588,8 +586,8 @@ class CurationConfigSpec extends GraftSpec {
 
   it("decontam_gate without a committed index refuses the dir-less apply " +
      "form with a pointer to PipelineDef.run, and parses strictly") {
-    val missing = java.nio.file.Files
-      .createTempDirectory("graft-curation-dcg2").toString + "/nothing"
+    val missing = graft.io.TempReaper
+      .tempDir("graft-curation-dcg2").toString + "/nothing"
     val st = CurationConfig.DecontamGate(missing, 8, "documents", "TRUE", 0L)
     val e = intercept[IllegalArgumentException] {
       st(Seq((1L, "a b c")).toDF("doc_id", "text"), "doc_id", "text", None)
@@ -638,8 +636,8 @@ class CurationConfigSpec extends GraftSpec {
       (5L, 3L, "fluency_band"))  // the rare-transition doc
     // a persisted-gate stage attributes its drops the same way: seed
     // round keeps everything, the replay round names the gate
-    val path = java.nio.file.Files
-      .createTempDirectory("graft-curation-audit").toString + "/idx"
+    val path = graft.io.TempReaper
+      .tempDir("graft-curation-audit").toString + "/idx"
     CurationConfig.parse(gateCfg(path, "doc_id <= 2")).run(spark, d)
     val (_, audit2) = CurationConfig.parse(gateCfg(path, "doc_id <= 4"))
       .runAudited(spark, d)
@@ -657,8 +655,7 @@ class CurationConfigSpec extends GraftSpec {
     val docs = spark.read.parquet(s"$d/documents.parquet")
       .withColumn("source",
         when($"doc_id" <= 3, "srcA").otherwise("srcB"))
-    val d2 = java.nio.file.Files
-      .createTempDirectory("graft-curation-rebs").toString
+    val d2 = graft.io.TempReaper.tempDir("graft-curation-rebs").toString
     docs.write.parquet(s"$d2/documents.parquet")
     val cfg =
       """{"table": "documents", "id": "doc_id", "text": "text",
@@ -697,8 +694,7 @@ class CurationConfigSpec extends GraftSpec {
       (3L, "el perro y el gato no se ven en la casa"),
       (4L, "zzz qqq xxx www")) // no stopword hits -> 'und'
       .toDF("doc_id", "text")
-    val d2 = java.nio.file.Files
-      .createTempDirectory("graft-curation-lg").toString
+    val d2 = graft.io.TempReaper.tempDir("graft-curation-lg").toString
     docs.write.parquet(s"$d2/documents.parquet")
     def run(keep: String): Array[Long] = CurationConfig.parse(
       s"""{"table":"documents","id":"doc_id","text":"text",
@@ -731,8 +727,7 @@ class CurationConfigSpec extends GraftSpec {
     val docs = spark.read.parquet(s"$d/documents.parquet")
       .withColumn("source",
         when($"doc_id" <= 3, "srcA").otherwise("srcB"))
-    val d2 = java.nio.file.Files
-      .createTempDirectory("graft-curation-tm").toString
+    val d2 = graft.io.TempReaper.tempDir("graft-curation-tm").toString
     docs.write.parquet(s"$d2/documents.parquet")
     val cfg =
       """{"table": "documents", "id": "doc_id", "text": "text",
@@ -766,8 +761,8 @@ class CurationConfigSpec extends GraftSpec {
     import scala.concurrent.duration._
     implicit val ec: ExecutionContext = ExecutionContext.global
     val d = dir
-    val path = java.nio.file.Files
-      .createTempDirectory("graft-curation-race").toString + "/idx"
+    val path = graft.io.TempReaper
+      .tempDir("graft-curation-race").toString + "/idx"
     val start = new java.util.concurrent.CountDownLatch(2)
     def racer(runId: String): Future[Array[Long]] = Future {
       start.countDown(); start.await()
@@ -799,8 +794,8 @@ class CurationConfigSpec extends GraftSpec {
     import scala.concurrent.duration._
     implicit val ec: ExecutionContext = ExecutionContext.global
     val d = dir
-    val path = java.nio.file.Files
-      .createTempDirectory("graft-curation-dcgrace").toString + "/idx"
+    val path = graft.io.TempReaper
+      .tempDir("graft-curation-dcgrace").toString + "/idx"
     val cfg =
       s"""{"table":"documents","id":"doc_id","text":"text",
         | "stages":[{"stage":"decontam_gate","path":"$path","k":8,
@@ -921,15 +916,14 @@ class CurationConfigSpec extends GraftSpec {
      "drift past the threshold → refit (baseline resets) + vacuum of " +
      "superseded dirs; a rerun no-ops; rows pass through; parse is " +
      "strict") {
-    val d = java.nio.file.Files
-      .createTempDirectory("graft-curation-maint").toString
+    val d = graft.io.TempReaper.tempDir("graft-curation-maint").toString
     def axis(a: Int): Seq[Float] = Seq.tabulate(4)(j => if (j == a) 1f else 0f)
     val emb = ((0 until 20).map(i => (i.toLong, axis(0))) ++
       (20 until 40).map(i => (i.toLong, axis(1))))
       .toDF("vec_id", "embedding").localCheckpoint(true)
     emb.write.parquet(s"$d/embeddings.parquet")
-    val path = java.nio.file.Files
-      .createTempDirectory("graft-curation-maintidx").toString + "/idx"
+    val path = graft.io.TempReaper
+      .tempDir("graft-curation-maintidx").toString + "/idx"
     val store = graft.ext.IvfStore.create(emb, "vec_id", "embedding",
       path, k = 2)
     def commits(): Int = new java.io.File(s"$path/_commits").listFiles()
@@ -996,8 +990,8 @@ class CurationConfigSpec extends GraftSpec {
      "family: superseded dirs unlink once eligible, reruns no-op, rows " +
      "pass through; parse is strict about kinds") {
     val d = dir
-    val path = java.nio.file.Files
-      .createTempDirectory("graft-curation-vac").toString + "/idx"
+    val path = graft.io.TempReaper
+      .tempDir("graft-curation-vac").toString + "/idx"
     // force folds: threshold 1 means the third append compacts history
     spark.conf.set("spark.graft.index.compactThreshold", "1")
     spark.conf.set("spark.graft.index.vacuumRetentionMs", "0")
@@ -1032,8 +1026,8 @@ class CurationConfigSpec extends GraftSpec {
     // the probe store is part of the compacting family now: force a
     // fold, declare kind "probe", superseded moment dirs unlink and the
     // 14-row summed table still answers
-    val ppath = java.nio.file.Files
-      .createTempDirectory("graft-curation-vacp").toString + "/qp"
+    val ppath = graft.io.TempReaper
+      .tempDir("graft-curation-vacp").toString + "/qp"
     spark.conf.set("spark.graft.index.compactThreshold", "1")
     spark.conf.set("spark.graft.index.vacuumRetentionMs", "0")
     try {
@@ -1060,8 +1054,8 @@ class CurationConfigSpec extends GraftSpec {
     // compaction + vacuum existed in code but the declared stage could
     // not reach them): force a fold, declare kind "strata", superseded
     // count dirs unlink and the summed counts still answer
-    val spath = java.nio.file.Files
-      .createTempDirectory("graft-curation-vacs").toString + "/sc"
+    val spath = graft.io.TempReaper
+      .tempDir("graft-curation-vacs").toString + "/sc"
     spark.conf.set("spark.graft.index.compactThreshold", "1")
     spark.conf.set("spark.graft.index.vacuumRetentionMs", "0")
     try {
@@ -1106,7 +1100,7 @@ class CurationConfigSpec extends GraftSpec {
      "payload parses and whose headline dimension sits in the band, " +
      "appends the parsed media_* columns (outputSchema pinned), is " +
      "stream-legal, and the parse is strict") {
-    val d = java.nio.file.Files.createTempDirectory("graft-media").toString
+    val d = graft.io.TempReaper.tempDir("graft-media").toString
     // ids chosen so the WAV synthesis covers every (rate, reject) branch:
     // rate = 8000/16000/22050/44100 by id%4, id%7==0 is not audio
     spark.range(1, 41).select($"id".as("doc_id"),
@@ -1182,8 +1176,7 @@ class CurationConfigSpec extends GraftSpec {
      "micro-batch afterwards still reproduces its survivors (the refit " +
      "carries the token window forward)") {
     import graft.streaming.EventStream
-    val d = java.nio.file.Files
-      .createTempDirectory("graft-curation-maintstream").toString
+    val d = graft.io.TempReaper.tempDir("graft-curation-maintstream").toString
     def axis(a: Int): Seq[Float] = Seq.tabulate(8)(j => if (j == a) 1f else 0f)
     // table exists only for the config contract; batches drive the stream
     val b1 = ((0 until 20).map(i => (i.toLong, axis(0))) ++
@@ -1192,8 +1185,8 @@ class CurationConfigSpec extends GraftSpec {
     val b2 = (100 until 130).map(i => (i.toLong, axis(2)))
       .toDF("vec_id", "embedding").localCheckpoint(true)
     b1.unionByName(b2).write.parquet(s"$d/embeddings.parquet")
-    val path = java.nio.file.Files
-      .createTempDirectory("graft-curation-maintstream-idx").toString + "/idx"
+    val path = graft.io.TempReaper
+      .tempDir("graft-curation-maintstream-idx").toString + "/idx"
     val pipeline = CurationConfig.parse(
       s"""{"table":"embeddings","id":"vec_id","text":"embedding",
         | "stages":[
@@ -1240,8 +1233,8 @@ class CurationConfigSpec extends GraftSpec {
     // doc (5), kept
     val b1 = docs.filter($"doc_id" <= 2).localCheckpoint(true)
     val b2 = docs.filter($"doc_id" >= 2).localCheckpoint(true)
-    val streamBase = java.nio.file.Files
-      .createTempDirectory("graft-cfgstream-store").toString
+    val streamBase = graft.io.TempReaper
+      .tempDir("graft-cfgstream-store").toString
     val incoming = EventStream.twoFileBatchStream(b1, b2, "cfgstream")
     val res = EventStream
       .runConfigPipeline(incoming, cfgAt(streamBase), d, "cfgstream")
@@ -1249,8 +1242,7 @@ class CurationConfigSpec extends GraftSpec {
     res shouldBe Seq((1L, 1L), (2L, 3L), (2L, 5L))
     // stream/batch parity: the same two batches as NAMED batch runs over
     // a separate store produce the same per-round survivors
-    val batchBase = java.nio.file.Files
-      .createTempDirectory("graft-cfgbatch-store").toString
+    val batchBase = graft.io.TempReaper.tempDir("graft-cfgbatch-store").toString
     val p = cfgAt(batchBase)
     p.applyStages(b1, d, Some("r1")).select("doc_id")
       .as[Long].collect().sorted shouldBe Array(1L)
@@ -1283,8 +1275,7 @@ class CurationConfigSpec extends GraftSpec {
       Seq("temperature_mix", "token_budget", "fluency_band")
     // refusal is UP FRONT — before the stream starts, so the incoming
     // frame is never touched (an empty-dir file stream suffices)
-    val emptyIn = java.nio.file.Files
-      .createTempDirectory("graft-refuse-in").toString
+    val emptyIn = graft.io.TempReaper.tempDir("graft-refuse-in").toString
     def incoming = spark.readStream
       .schema(graft.streaming.EventStream.documentsSchema).parquet(emptyIn)
     val e = intercept[IllegalArgumentException] {
@@ -1312,8 +1303,8 @@ class CurationConfigSpec extends GraftSpec {
      "exactly that schema plus the batch column") {
     import graft.streaming.EventStream
     val d = dir
-    val bpePath = java.nio.file.Files
-      .createTempDirectory("graft-oschema-bpe").toString + "/bpe"
+    val bpePath = graft.io.TempReaper
+      .tempDir("graft-oschema-bpe").toString + "/bpe"
     val p = CurationConfig.parse(
       s"""{"table": "documents", "id": "doc_id", "text": "text",
         | "stages": [
@@ -1331,8 +1322,7 @@ class CurationConfigSpec extends GraftSpec {
     // derived statically, no store side effect (the store at bpePath is
     // NOT consulted; delete it to prove the derivation is static)
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(bpePath))
-    val emptyIn = java.nio.file.Files
-      .createTempDirectory("graft-zb-in").toString
+    val emptyIn = graft.io.TempReaper.tempDir("graft-zb-in").toString
     val incoming = spark.readStream
       .schema(EventStream.documentsSchema).parquet(emptyIn)
     val res = EventStream.runConfigPipeline(incoming, p, d, "zb")
@@ -1345,8 +1335,7 @@ class CurationConfigSpec extends GraftSpec {
   it("zero-batch AUDIT stream types the audit id column from the " +
      "pipeline's actual id type (string ids, not hardcoded long)") {
     import graft.streaming.EventStream
-    val d = java.nio.file.Files
-      .createTempDirectory("graft-zb-strid").toString
+    val d = graft.io.TempReaper.tempDir("graft-zb-strid").toString
     Seq(("a", "some text here"), ("b", "other text there"))
       .toDF("doc_key", "text").write.parquet(s"$d/documents.parquet")
     val p = CurationConfig.parse(
@@ -1357,8 +1346,7 @@ class CurationConfigSpec extends GraftSpec {
         org.apache.spark.sql.types.StringType),
       org.apache.spark.sql.types.StructField("text",
         org.apache.spark.sql.types.StringType)))
-    val emptyIn = java.nio.file.Files
-      .createTempDirectory("graft-zb-strid-in").toString
+    val emptyIn = graft.io.TempReaper.tempDir("graft-zb-strid-in").toString
     val incoming = spark.readStream.schema(schema).parquet(emptyIn)
     val (res, audit) =
       EventStream.runConfigPipelineAudited(incoming, p, d, "zbstr")
@@ -1383,7 +1371,7 @@ class CurationConfigSpec extends GraftSpec {
       .mapPartitions { it => evals.add(1L); it }
     val input = spark.createDataFrame(rows, StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType))))
-    val path = java.nio.file.Files.createTempDirectory("graft-cc-rdd")
+    val path = graft.io.TempReaper.tempDir("graft-cc-rdd")
       .toString + "/idx"
     val out = CurationConfig.NearDupGate(path, 16, 4, 100, 0.8)
       .apply(input, "doc_id", "text", None)

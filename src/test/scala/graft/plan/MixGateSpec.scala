@@ -21,8 +21,8 @@ class MixGateSpec extends GraftSpec {
   private lazy val b2 = docs
     .filter($"doc_id" % 4 === 2 || $"doc_id" % 4 === 3).localCheckpoint(true)
 
-  private def tmp(): String = java.nio.file.Files
-    .createTempDirectory("graft-mixgate").toString + "/sc"
+  private def tmp(): String = graft.io.TempReaper
+    .tempDir("graft-mixgate").toString + "/sc"
 
   private def cfgAt(path: String, target: Long): CurationConfig.PipelineDef =
     CurationConfig.parse(

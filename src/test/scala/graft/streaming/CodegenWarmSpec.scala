@@ -47,7 +47,7 @@ class CodegenWarmSpec extends GraftSpec {
   }
 
   it("a steady-state streamed pipeline call compiles no new classes") {
-    val root = Files.createTempDirectory("graft-codegenwarm")
+    val root = graft.io.TempReaper.tempDir("graft-codegenwarm")
     def store(n: String) = root.resolve(n).toString
     val pipeline = CurationConfig.parse(
       s"""{"table": "documents", "id": "doc_id", "text": "text",

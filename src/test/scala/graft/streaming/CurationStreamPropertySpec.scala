@@ -50,8 +50,7 @@ class CurationStreamPropertySpec extends GraftSpec {
         .localCheckpoint(true)
       val b1 = withPayload(d1)
       val b2 = withPayload(d2raw ++ replays)
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"graft-csps-dir$trial").toString
+      val dir = graft.io.TempReaper.tempDir(s"graft-csps-dir$trial").toString
       def cfgAt(base: String): CurationConfig.PipelineDef =
         CurationConfig.parse(
           s"""{"table": "documents", "id": "doc_id", "text": "text",
@@ -64,10 +63,8 @@ class CurationStreamPropertySpec extends GraftSpec {
             |    "maxDupWindows": 0},
             |   {"stage": "media_digest_gate", "path": "$base/md",
             |    "binary": "payload"}]}""".stripMargin)
-      val sBase = java.nio.file.Files
-        .createTempDirectory(s"graft-csps-s$trial").toString
-      val bBase = java.nio.file.Files
-        .createTempDirectory(s"graft-csps-b$trial").toString
+      val sBase = graft.io.TempReaper.tempDir(s"graft-csps-s$trial").toString
+      val bBase = graft.io.TempReaper.tempDir(s"graft-csps-b$trial").toString
       val streamed = EventStream.runConfigPipeline(
         EventStream.twoFileBatchStream(b1, b2, s"csps$trial"),
         cfgAt(sBase), dir, s"csps$trial")

@@ -62,7 +62,7 @@ class EventStreamSpec extends GraftSpec {
 
     it("flushes an idle key via the event-time timeout; open sessions are " +
        "not emitted") {
-      val base = java.nio.file.Files.createTempDirectory("graft-sess-cont").toString
+      val base = graft.io.TempReaper.tempDir("graft-sess-cont").toString
       // user 1 at t=1h,1h+30s; user 2 at t=1h+5000s drives the watermark to
       // 1h+5000s after the data batch. AvailableNow then runs the timeout
       // batch (stateful ops request it after a watermark advance): user 1's
@@ -82,7 +82,7 @@ class EventStreamSpec extends GraftSpec {
 
     it("a closed session flushes even while the key's tail is still open " +
        "(timer at the EARLIEST boundary, not the last event)") {
-      val base = java.nio.file.Files.createTempDirectory("graft-sess-early").toString
+      val base = graft.io.TempReaper.tempDir("graft-sess-early").toString
       // user 1: session A at t=3600, session B at t=8000 (> gap apart).
       // user 2 at t=8600 drives the watermark. A's boundary (3600+600)
       // passes the watermark; B's (8000+600 = 8600) does NOT — the old
@@ -99,7 +99,7 @@ class EventStreamSpec extends GraftSpec {
     }
 
     it("force-flushes a key that exceeds the per-key buffer cap") {
-      val base = java.nio.file.Files.createTempDirectory("graft-sess-cap").toString
+      val base = graft.io.TempReaper.tempDir("graft-sess-cap").toString
       // 3 events within the gap — buffer of 3 > cap of 2 → forced flush even
       // though the session is not watermark-closed
       writeBatch(s"$base/in", "f1",
@@ -152,7 +152,7 @@ class EventStreamSpec extends GraftSpec {
 
     it("matches sessionizeContinuous: idle key flushes via its timer, open " +
        "sessions stay in state") {
-      val base = java.nio.file.Files.createTempDirectory("graft-tws").toString
+      val base = graft.io.TempReaper.tempDir("graft-tws").toString
       writeBatch(s"$base/in",
         Seq((1L, 3600L, 1L), (2L, 3630L, 1L), (3L, 8600L, 2L)))
       runTws(s"$base/in", s"$base/out")
@@ -165,7 +165,7 @@ class EventStreamSpec extends GraftSpec {
 
     it("a closed session flushes even while the key's tail is still open " +
        "(same earliest-boundary timer as the continuous variant)") {
-      val base = java.nio.file.Files.createTempDirectory("graft-tws-early").toString
+      val base = graft.io.TempReaper.tempDir("graft-tws-early").toString
       writeBatch(s"$base/in",
         Seq((1L, 3600L, 1L), (2L, 8000L, 1L), (3L, 8600L, 2L)))
       runTws(s"$base/in", s"$base/out")
@@ -176,7 +176,7 @@ class EventStreamSpec extends GraftSpec {
     }
 
     it("force-flushes past the per-key cap") {
-      val base = java.nio.file.Files.createTempDirectory("graft-tws-cap").toString
+      val base = graft.io.TempReaper.tempDir("graft-tws-cap").toString
       writeBatch(s"$base/in",
         Seq((1L, 3600L, 1L), (2L, 3610L, 1L), (3L, 3620L, 1L)))
       runTws(s"$base/in", s"$base/out", cap = 2)
@@ -192,7 +192,7 @@ class EventStreamSpec extends GraftSpec {
 
     it("drops duplicates within the horizon, re-emits after eviction, " +
        "and keeps state bounded by the watermark") {
-      val base = java.nio.file.Files.createTempDirectory("graft-dedup-ww").toString
+      val base = graft.io.TempReaper.tempDir("graft-dedup-ww").toString
       def write(name: String, rows: Seq[(Long, Long, Long)]): Unit = {
         rows.map { case (id, t, u) => (id, t * us, u, "click", 1.0, "") }
           .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
@@ -253,7 +253,7 @@ class EventStreamSpec extends GraftSpec {
   describe("runIngestGate (foreachBatch batch-library reuse)") {
     it("runs the gate per micro-batch and unions the surviving rows with " +
         "no batch partition column") {
-      val base = java.nio.file.Files.createTempDirectory("graft-gate").toString
+      val base = graft.io.TempReaper.tempDir("graft-gate").toString
       def doc(id: Long, text: String) = (id, text, "en", "src0", text.length.toLong)
       // two files → two micro-batches
       Seq(doc(1L, "aa"), doc(2L, "bb")).toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -277,7 +277,7 @@ class EventStreamSpec extends GraftSpec {
 
     it("a zero-input stream returns an EMPTY frame in the gate's output " +
         "schema instead of throwing path-does-not-exist") {
-      val base = java.nio.file.Files.createTempDirectory("graft-gate-empty")
+      val base = graft.io.TempReaper.tempDir("graft-gate-empty")
       java.nio.file.Files.createDirectories(base.resolve("in"))
       val incoming = spark.readStream
         .schema(EventStream.documentsSchema)
@@ -293,7 +293,7 @@ class EventStreamSpec extends GraftSpec {
   describe("streaming observability (what a 100 TB pipeline alarms on)") {
     it("observe() metrics surface per-batch row counts and sums in progress") {
       import org.apache.spark.sql.streaming.Trigger
-      val base = java.nio.file.Files.createTempDirectory("graft-obs").toString
+      val base = graft.io.TempReaper.tempDir("graft-obs").toString
       events.drop("event_time").write.mode("overwrite")
         .parquet(s"$base/in/data.parquet")
       val stream = spark.readStream
@@ -320,7 +320,7 @@ class EventStreamSpec extends GraftSpec {
     it("watermark drops late arrivals and ACCOUNTS for them " +
        "(numRowsDroppedByWatermark)") {
       import org.apache.spark.sql.streaming.Trigger
-      val base = java.nio.file.Files.createTempDirectory("graft-late").toString
+      val base = graft.io.TempReaper.tempDir("graft-late").toString
       val in = s"$base/in"
       // batch 1: events at t=2h,3h → watermark advances to 3h - 1h = 2h
       Seq((1L, 7200L * us, 1L, "click", 1.0, ""),
@@ -414,8 +414,8 @@ class EventStreamSpec extends GraftSpec {
       val incoming = EventStream.twoFileBatchStream(
         docs.filter(col("doc_id") % 10 === 0),
         docs.filter(col("doc_id") % 10 === 5), "foldspec")
-      val path = java.nio.file.Files
-        .createTempDirectory("graft-foldspec-idx").toString + "/idx"
+      val path = graft.io.TempReaper
+        .tempDir("graft-foldspec-idx").toString + "/idx"
       val store = graft.ext.Bm25Store.build(
         docs.filter(col("doc_id") % 5 =!= 0), "doc_id", "text", path)
       var tokens = Vector.empty[String]
@@ -434,8 +434,7 @@ class EventStreamSpec extends GraftSpec {
       // same statistics, same search ranking (associativity — batch
       // boundaries are invisible)
       val full = graft.ext.Bm25Store.build(docs, "doc_id", "text",
-        java.nio.file.Files
-          .createTempDirectory("graft-foldspec-idx2").toString + "/idx")
+        graft.io.TempReaper.tempDir("graft-foldspec-idx2").toString + "/idx")
       st.docs shouldBe full.stats.docs
       st.dlSum shouldBe full.stats.dlSum
       val queries = docs.filter(col("doc_id") % 101 === 0)
@@ -457,8 +456,8 @@ class EventStreamSpec extends GraftSpec {
       val docs = spark.read
         .parquet("/root/testdata/sf0.001/documents.parquet")
       val bench = docs.filter(col("doc_id") % 10 === 0)
-      val path = java.nio.file.Files
-        .createTempDirectory("graft-frzgate-idx").toString + "/idx"
+      val path = graft.io.TempReaper
+        .tempDir("graft-frzgate-idx").toString + "/idx"
       val idx = graft.ext.SubstrIndex.build(bench, "doc_id", "text", path,
         k = 8)
       val before = idx.stats

@@ -28,7 +28,7 @@ class StreamRunnerSpec extends GraftSpec {
   }
 
   private def tempDir(name: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-$name").toString
+    graft.io.TempReaper.tempDir(s"graft-$name").toString
 
   /** A stream over a directory with no file in it: no batch fires. */
   private def emptyStream(name: String): DataFrame =
